@@ -208,20 +208,6 @@ object SparkEntry {
   private def docsSpread(s: SparkSession, dir: String): DataFrame =
     Tables.spreadTable(s, dir, "documents", Tables.documents(s, dir))
 
-  /** Both-directions multiset equality in ONE job — per-key signed
-    * counts sum to zero on every key ⟺ x ≡ y as multisets, the same
-    * verdict `x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty`
-    * computed with two shuffles and four actions (the r15
-    * streaming-IVF equality rewrite, shared with the batch gates
-    * since r16). */
-  private def multisetEq(x: DataFrame, y: DataFrame): Boolean = {
-    val keys = x.columns.map(col)
-    x.withColumn("_s", lit(1L)).unionByName(y.withColumn("_s", lit(-1L)))
-      .groupBy(keys: _*).agg(sum(col("_s")).as("_d"))
-      .filter(col("_d") =!= 0L)
-      .isEmpty
-  }
-
   private def phashFixtureHashes(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val recs = kernelIds(s, dir, 500)
@@ -785,7 +771,7 @@ object SparkEntry {
         .select(col("cid"), col("cent_id"))
       val lists = s.read.parquet(s"$path/lists")
         .select(col("cid"), col("cent_id"))
-      val eq = multisetEq(lists, direct)
+      val eq = Similarity.multisetEq(lists, direct)
       val census = Similarity.ivfIndexCensus(s, path).collect()(0)
       val countsOk = census.getAs[Long]("n_total") == e.count() &&
         census.getAs[Long]("n_appended") == b.count()
@@ -847,7 +833,8 @@ object SparkEntry {
           k = 16, iters = 3)
         Similarity.writeIvfIndex(a, "vec_id", "embedding", fcents, fresh)
         def setEq(x: org.apache.spark.sql.DataFrame,
-            y: org.apache.spark.sql.DataFrame): Boolean = multisetEq(x, y)
+            y: org.apache.spark.sql.DataFrame): Boolean =
+          Similarity.multisetEq(x, y)
         val listsEq = setEq(
           s.read.parquet(s"$p/lists").select(col("cid"), col("cent_id")),
           s.read.parquet(s"$fresh/lists").select(col("cid"), col("cent_id")))

@@ -48,8 +48,10 @@ object JdbcUpsert {
     * Derby. Per partition: one connection, one transaction, `batchSize`
     * rows per `executeBatch`; any failure rolls the whole partition back
     * (all-or-nothing per partition + an idempotent statement ⇒ retries
-    * are safe). The statement's `?` placeholders bind `df`'s columns in
-    * order. */
+    * are safe). The first failure is the one rethrown: a `rollback` or
+    * `close` that fails after it rides along as a suppressed exception
+    * instead of replacing it. The statement's `?` placeholders bind
+    * `df`'s columns in order. */
   def writeWith(df: DataFrame, sql: String,
       connect: () => Connection, batchSize: Int = 500): Unit = {
     require(batchSize > 0, s"batchSize must be positive, got $batchSize")
@@ -57,6 +59,7 @@ object JdbcUpsert {
     df.foreachPartition { (rows: Iterator[Row]) =>
       if (rows.nonEmpty) {
         val conn = connect()
+        var failure: Throwable = null
         try {
           conn.setAutoCommit(false)
           val st = conn.prepareStatement(sql)
@@ -70,8 +73,14 @@ object JdbcUpsert {
           if (n % batchSize != 0) st.executeBatch()
           conn.commit()
         } catch {
-          case e: Throwable => conn.rollback(); throw e
-        } finally conn.close()
+          case e: Throwable =>
+            failure = e
+            try conn.rollback() catch { case r: Throwable => e.addSuppressed(r) }
+            throw e
+        } finally {
+          try conn.close()
+          catch { case c: Throwable if failure != null => failure.addSuppressed(c) }
+        }
       }
     }
   }

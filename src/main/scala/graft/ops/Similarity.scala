@@ -138,9 +138,8 @@ object Similarity {
     *     data, so seeds can't collapse into one dense cluster the way
     *     a plain random draw can;
     *   - assignment = argmax cosine, ties to the smaller centroid id,
-    *     via one broadcast of the k centroids and a hash aggregate
-    *     (map-side combine folds the k candidate rows per vector before
-    *     the shuffle — no window sort anywhere);
+    *     evaluated per row against the k centroids held on the driver
+    *     ([[nearestCentroid]]) — no join, no shuffle, no window sort;
     *   - update = fixed-point component sums ([[labelCentroidSums]]'s
     *     contract: integer addition is associative, so means don't
     *     depend on partition order).
@@ -191,16 +190,14 @@ object Similarity {
     // built purely from the driver-side centroids, so no returned plan
     // depends on the cached blocks.
     if (iters > 1) base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def centsDf: DataFrame = cents.toDF("cent_id", "cent_vec")
+      .select(col("cent_id"), col("cent_vec").cast("array<float>").as("cent_vec"))
+      .withColumn("cent_n", normSq(col("cent_vec")))
     for (_ <- 0 until iters) {
-      val centsDf = broadcast(cents.toDF("cent_id", "cent_vec")
-        .select(col("cent_id"), col("cent_vec").cast("array<float>").as("cent_vec"))
-        .withColumn("cent_n", normSq(col("cent_vec"))))
+      val best = nearestCentroid(heldCentroids(centsDf)) { (cv, cn) =>
+        cosineWithNorms(dot(col("_v"), cv), col("_n"), cn) }
       val assigned = base.withColumn("_n", normSq(col("_v")))
-        .join(centsDf, expr("true"))
-        .withColumn("_sim", cosineWithNorms(dot(col("_v"), col("cent_vec")), col("_n"), col("cent_n")))
-        .groupBy(col("_id"))
-        .agg(max_by(col("cent_id"), struct(col("_sim"), -col("cent_id"))).as("cid"),
-          first(col("_v")).as("_v"))
+        .select(col("_v"), best.getField("cent_id").as("cid"))
       val sums = labelCentroidSums(assigned, "cid", "_v", scale)
         .collect()
         .groupBy(_.getLong(0))
@@ -215,9 +212,7 @@ object Similarity {
       cents = cents.map { case (cid, old) => (cid, sums.getOrElse(cid, old)) }
     }
     if (iters > 1) base.unpersist(blocking = false)
-    cents.toDF("cent_id", "cent_vec")
-      .select(col("cent_id"), col("cent_vec").cast("array<float>").as("cent_vec"))
-      .withColumn("cent_n", normSq(col("cent_vec")))
+    centsDf
   }
 
   /** X2 preprocessing — sparse random projection (Achlioptas'
@@ -399,6 +394,98 @@ object Similarity {
     // one inverted list, so (qid, cid) surfaces at most once
   }
 
+  /** Assign each corpus vector to its nearest centroid — argmax cosine
+    * per row against the k centroids held on the driver
+    * ([[nearestCentroid]]): a narrow projection, no join and no shuffle,
+    * so the corpus never moves (the trainKMeans assignment discipline).
+    * Ties to the SMALLER centroid id, same as ivfTopKWith. Returns
+    * (cid, _v, _n, cent_id, _sim_micro) — the winning cosine floored at
+    * 1e-6 into a long so per-list fit statistics sum EXACTLY (integer
+    * addition is associative; the census is engine-replayable).
+    * Zero-norm vectors (degenerate embeddings — an upstream-model-bug
+    * signature a 100 TB ingest WILL see) assign with fit 0 and tie to
+    * the smallest centroid id instead of dividing by zero; the census's
+    * fit trigger is what surfaces a batch full of them.
+    *
+    * `vec_id` contract: ids are indexed as given — one output row per
+    * input row. Duplicate ids are not collapsed (each copy is assigned
+    * and counted), so the caller owns id uniqueness. */
+  def assignToCentroids(corpus: DataFrame, id: String, vec: String,
+      centroids: DataFrame): DataFrame = {
+    val best = nearestCentroid(heldCentroids(centroids)) { (cv, cn) =>
+      when(col("_n") === 0.0 || cn === 0.0, lit(0.0))
+        .otherwise(cosineWithNorms(dot(col("_v"), cv), col("_n"), cn)) }
+    corpus.select(col(id).as("cid"), col(vec).as("_v"),
+        normSq(col(vec)).as("_n"))
+      .select(col("cid"), col("_v"), col("_n"), best.as("_best"))
+      .select(col("cid"), col("_v"), col("_n"),
+        col("_best.cent_id").as("cent_id"),
+        floor(col("_best._csim") * 1000000L).cast("long").as("_sim_micro"))
+  }
+
+  /** A centroid table's (cent_id, cent_vec, cent_n) rows on the driver:
+    * ≤ k·dim floats, the state every assignment reads. A table built
+    * from driver rows (trainKMeans' output) collects with no job. */
+  private def heldCentroids(
+      centroids: DataFrame): Array[(Long, Seq[Float], Double)] =
+    centroids.select(col("cent_id"), col("cent_vec"), col("cent_n"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Float](1), r.getDouble(2)))
+
+  /** The best centroid of each row as struct(_csim, _nid, cent_id):
+    * `sim(cent_vec, cent_n)` scores one centroid from literal operands,
+    * and the winner is the max of struct(sim, −cent_id) under Spark's
+    * ordering — the key a `max_by(…, struct(sim, −cent_id))` compares:
+    * NaN above every number, −0.0 equal to 0.0, ties to the smaller
+    * id. Evaluated per row, so no row is expanded k times. */
+  private def nearestCentroid(cents: Array[(Long, Seq[Float], Double)])(
+      sim: (Column, Column) => Column): Column = {
+    require(cents.nonEmpty, "nearestCentroid: the centroid table is empty")
+    array_max(array(cents.toIndexedSeq.map { case (id, v, n) =>
+      struct(sim(typedLit(v), lit(n)).as("_csim"), lit(-id).as("_nid"),
+        lit(id).as("cent_id"))
+    }: _*))
+  }
+
+  /** Both-directions multiset equality of two frames with the same
+    * columns, in ONE job: per-row signed counts (+1 from `x`, −1 from
+    * `y`) sum to zero on every distinct row ⟺ x ≡ y as multisets — the
+    * verdict `x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty`
+    * computes with two shuffles and four actions. The equality pin of
+    * the IVF gates and of [[graft.streaming.Streams.streamIvfIngest]].
+    * The helper columns are named apart from every input column, so an
+    * input may carry any column name. */
+  def multisetEq(x: DataFrame, y: DataFrame): Boolean = {
+    val taken = (x.columns ++ y.columns).map(_.toLowerCase).toSet
+    def fresh(base: String): String =
+      Iterator.iterate(base)("_" + _).find(n => !taken(n.toLowerCase)).get
+    val (s, d) = (fresh("_ms_sign"), fresh("_ms_diff"))
+    x.withColumn(s, lit(1L)).unionByName(y.withColumn(s, lit(-1L)))
+      .groupBy(x.columns.map(col).toIndexedSeq: _*).agg(sum(col(s)).as(d))
+      .filter(col(d) =!= 0L)
+      .isEmpty
+  }
+
+  /** Schema of `$path/centroids`, for reading an index back without a
+    * schema-inference job. */
+  private[graft] val centroidsSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("cent_id",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("cent_vec",
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)),
+    org.apache.spark.sql.types.StructField("cent_n",
+      org.apache.spark.sql.types.DoubleType)))
+
+  /** Schema of `$path/lists` (cent_id is the partition column). */
+  private[graft] val listsSchema = org.apache.spark.sql.types.StructType(Seq(
+    org.apache.spark.sql.types.StructField("cid",
+      org.apache.spark.sql.types.LongType),
+    org.apache.spark.sql.types.StructField("_v",
+      org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType)),
+    org.apache.spark.sql.types.StructField("_n",
+      org.apache.spark.sql.types.DoubleType),
+    org.apache.spark.sql.types.StructField("cent_id",
+      org.apache.spark.sql.types.LongType)))
+
   /** PERSISTED IVF index — the "build once, probe many" shape
     * [[ivfTopKWith]] recomputes per call: centroids land as one small
     * parquet and the corpus lands as inverted lists PARTITIONED BY
@@ -407,49 +494,43 @@ object Similarity {
     * from disk (pinned in PlanShapeSpec), which is the property that
     * makes a disk-resident 100 TB index probeable. Vector norms are
     * precomputed into the lists (probe pays one dot per candidate,
-    * nothing else). */
-  /** Assign each corpus vector to its nearest centroid — argmax cosine
-    * via hash agg (map-side combine folds the k candidate rows per
-    * vector before any shuffle — the trainKMeans assignment discipline;
-    * a per-cid window sort here would re-sort the whole corpus ×k).
-    * Ties to the SMALLER centroid id, same as ivfTopKWith. Returns
-    * (cid, _v, _n, cent_id, _sim_micro) — the winning cosine floored at
-    * 1e-6 into a long so per-list fit statistics sum EXACTLY (integer
-    * addition is associative; the census is engine-replayable).
-    * Zero-norm vectors (degenerate embeddings — an upstream-model-bug
-    * signature a 100 TB ingest WILL see) assign with fit 0 and tie to
-    * the smallest centroid id instead of dividing by zero; the census's
-    * fit trigger is what surfaces a batch full of them. */
-  def assignToCentroids(corpus: DataFrame, id: String, vec: String,
-      centroids: DataFrame): DataFrame =
-    corpus.select(col(id).as("cid"), col(vec).as("_v"),
-        normSq(col(vec)).as("_n"))
-      .join(broadcast(centroids), expr("true"))
-      .withColumn("_csim",
-        when(col("_n") === 0.0 || col("cent_n") === 0.0, lit(0.0))
-          .otherwise(
-            cosineWithNorms(dot(col("_v"), col("cent_vec")), col("_n"), col("cent_n"))))
-      .groupBy(col("cid"))
-      .agg(max_by(struct(col("_v"), col("_n"), col("cent_id"), col("_csim")),
-        struct(col("_csim"), (-col("cent_id")).as("_nid"))).as("_best"))
-      .select(col("cid"), col("_best._v").as("_v"),
-        col("_best._n").as("_n"), col("_best.cent_id").as("cent_id"),
-        floor(col("_best._csim") * 1000000L).cast("long").as("_sim_micro"))
-
+    * nothing else). Per-list fit statistics land in `stats/` with
+    * phase="build" — the baseline the staleness census
+    * ([[ivfIndexCensus]]) compares appended batches against. Returns
+    * the build's stat rows (cent_id, n, sum_sim_micro) — the same rows
+    * `stats/` holds — so a caller keeping the running census seeds it
+    * with [[initIvfCensusRunningRows]] instead of re-reading the
+    * index. */
   def writeIvfIndex(corpus: DataFrame, id: String, vec: String,
-      centroids: DataFrame, path: String): Unit = {
+      centroids: DataFrame, path: String): Array[org.apache.spark.sql.Row] = {
     centroids.coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
-    val assigned = assignToCentroids(corpus, id, vec, centroids)
+    writeAssigned(assignToCentroids(corpus, id, vec, centroids), path,
+      "overwrite", "build")
+  }
+
+  /** Write an assignment into `lists/` and its per-list stats into
+    * `stats/` (tagged `phase`), returning the stat rows. The assignment
+    * is consumed twice (lists write + stats agg); the eager pin
+    * evaluates the argmax ONCE and both consumers read
+    * executor-resident blocks, freed before return. The stat rows come
+    * back in one collect, and the stats table is written from that
+    * local relation. */
+  private def writeAssigned(assignment: DataFrame, path: String,
+      mode: String, phase: String): Array[org.apache.spark.sql.Row] = {
+    val spark = assignment.sparkSession
+    val assigned = assignment.localCheckpoint(true)
     assigned
       .select(col("cid"), col("_v"), col("_n"), col("cent_id"))
-      .write.mode("overwrite").partitionBy("cent_id")
+      .write.mode(mode).partitionBy("cent_id")
       .parquet(s"$path/lists")
-    // per-list fit statistics at BUILD time — the baseline the staleness
-    // census ([[ivfIndexCensus]]) compares appended batches against
-    assigned.groupBy(col("cent_id"))
+    val rows = assigned.groupBy(col("cent_id"))
       .agg(count(lit(1)).as("n"), sum(col("_sim_micro")).as("sum_sim_micro"))
-      .withColumn("phase", lit("build"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/stats")
+      .collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), batchStatsSchema)
+      .withColumn("phase", lit(phase))
+      .coalesce(1).write.mode(mode).parquet(s"$path/stats")
+    graft.ops.Dedup.freeLocalCheckpoint(assigned)
+    rows
   }
 
   /** INCREMENTAL index maintenance — the path that makes the persisted
@@ -479,7 +560,7 @@ object Similarity {
   def appendToIvfIndexWith(spark: org.apache.spark.sql.SparkSession,
       newVecs: DataFrame, id: String, vec: String, path: String,
       cents: DataFrame): DataFrame = {
-    val rows = appendToIvfIndexRows(spark, newVecs, id, vec, path, cents)
+    val rows = appendToIvfIndexRows(newVecs, id, vec, path, cents)
     spark.createDataFrame(
       java.util.Arrays.asList(rows: _*), batchStatsSchema)
   }
@@ -500,36 +581,10 @@ object Similarity {
     * r16 JobProf rollup). The stats-table append still writes from the
     * local relation (source of truth unchanged). */
   private[graft] def appendToIvfIndexRows(
-      spark: org.apache.spark.sql.SparkSession,
       newVecs: DataFrame, id: String, vec: String, path: String,
-      cents: DataFrame): Array[org.apache.spark.sql.Row] = {
-    // the assignment is consumed twice (lists write + stats agg); the
-    // eager pin evaluates the broadcast-join argmax ONCE per batch —
-    // both consumers then read executor-resident blocks (r16 JobProf:
-    // the double evaluation was rebuilding the centroid broadcast and
-    // re-running the argmax per consumer). Blocks freed before return.
-    val assigned = assignToCentroids(newVecs, id, vec, cents)
-      .localCheckpoint(true)
-    assigned
-      .select(col("cid"), col("_v"), col("_n"), col("cent_id"))
-      .write.mode("append").partitionBy("cent_id")
-      .parquet(s"$path/lists")
-    // the batch's per-list stats come back MATERIALIZED — O(touched
-    // lists) rows — so a caller maintaining the RUNNING census
-    // ([[updateIvfCensusRunning]]) can fold them in without re-deriving
-    // the assignment. Collect-first instead of the previous eager
-    // localCheckpoint: the rows come back in one job, the stats-table
-    // append then writes from a LOCAL relation (no recompute, no
-    // checkpoint block shuffle).
-    val rows = assigned.groupBy(col("cent_id"))
-      .agg(count(lit(1)).as("n"), sum(col("_sim_micro")).as("sum_sim_micro"))
-      .collect()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), batchStatsSchema)
-      .withColumn("phase", lit("append"))
-      .coalesce(1).write.mode("append").parquet(s"$path/stats")
-    graft.ops.Dedup.freeLocalCheckpoint(assigned)
-    rows
-  }
+      cents: DataFrame): Array[org.apache.spark.sql.Row] =
+    writeAssigned(assignToCentroids(newVecs, id, vec, cents), path,
+      "append", "append")
 
   /** STALENESS CENSUS over a persisted index's stats table — O(lists)
     * rows read, the corpus itself is never rescanned. Two re-train
@@ -645,13 +700,17 @@ object Similarity {
     * re-asserted per batch by IvfCensusProbe. The sidecar is a derived
     * cache: `stats/` remains the source of truth, and a crash between
     * the two file writes is recovered by re-running
-    * [[initIvfCensusRunning]]. */
+    * [[initIvfCensusRunning]].
+    *
+    * This full init reads `stats/` and counts `centroids/`: it is the
+    * recovery path, for callers that hold no rows. A loop that has just
+    * built (or retrained) the index seeds the sidecar from the build's
+    * own rows instead ([[initIvfCensusRunningRows]]). */
   def initIvfCensusRunning(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = {
     val stats = spark.read.parquet(s"$path/stats")
     val k = spark.read.parquet(s"$path/centroids").count()
-    // one bounded collect: k rows (same order as the broadcast
-    // centroid table), init/retrain-time only
+    // one bounded collect: k rows, init/recovery-time only
     val perList = stats.groupBy(col("cent_id")).agg(sum(col("n")).as("n"),
         sum(when(col("phase") === "append", col("n")).otherwise(0L))
           .as("an"),
@@ -662,13 +721,33 @@ object Similarity {
         sum(when(col("phase") === "append", col("sum_sim_micro"))
           .otherwise(0L)).as("as"))
       .collect()
+      .map(r => (r.getAs[Long]("cent_id"), r.getAs[Long]("n"),
+        r.getAs[Long]("an"), r.getAs[Long]("bs"), r.getAs[Long]("bn"),
+        r.getAs[Long]("as")))
+    writeCensusFromLists(path, k, perList)
+  }
+
+  /** [[initIvfCensusRunning]] from a build's own stat rows — the
+    * [[writeIvfIndex]]/[[retrainIvfIndex]] return (cent_id, n,
+    * sum_sim_micro), all phase="build" — and the index's centroid count
+    * `nLists`. No Spark job: the sidecar is byte-identical to the one
+    * the full init recomputes from `stats/` right after that build. */
+  def initIvfCensusRunningRows(path: String, nLists: Long,
+      build: Array[org.apache.spark.sql.Row]): Unit =
+    writeCensusFromLists(path, nLists, build.map { r =>
+      val (n, s) = (r.getAs[Long]("n"), r.getAs[Long]("sum_sim_micro"))
+      (r.getAs[Long]("cent_id"), n, 0L, s, n, 0L)
+    })
+
+  /** Sidecar from per-list totals (cent_id, n, appended n, build sim
+    * sum, build n, appended sim sum) over `k` lists. */
+  private def writeCensusFromLists(path: String, k: Long,
+      perList: Array[(Long, Long, Long, Long, Long, Long)]): Unit = {
     val counts = new Array[Long](k.toInt)
     var (nTotal, nApp, bsum, bn, asum) = (0L, 0L, 0L, 0L, 0L)
-    perList.foreach { r =>
-      counts(r.getAs[Long]("cent_id").toInt) = r.getAs[Long]("n")
-      nTotal += r.getAs[Long]("n"); nApp += r.getAs[Long]("an")
-      bsum += r.getAs[Long]("bs"); bn += r.getAs[Long]("bn")
-      asum += r.getAs[Long]("as")
+    perList.foreach { case (c, n, an, bs, b, as) =>
+      counts(c.toInt) = n
+      nTotal += n; nApp += an; bsum += bs; bn += b; asum += as
     }
     writeCensusSidecar(path, counts, Array(k, counts.count(_ == 0L),
       nTotal, nApp, if (counts.isEmpty) 0L else counts.max,
@@ -827,17 +906,22 @@ object Similarity {
     * and only then is `_old/` deleted — a crash before the swap leaves
     * the serving index untouched, and a crash mid-swap leaves every
     * part recoverable in either `_old/` or `_retrain/` (nothing is
-    * destroyed before its replacement is in place). */
+    * destroyed before its replacement is in place).
+    *
+    * Returns the rebuilt index's build stat rows, as [[writeIvfIndex]]
+    * does, so a caller keeping the running census re-seeds it with
+    * [[initIvfCensusRunningRows]]. */
   def retrainIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-      k: Int, iters: Int, seed: Long = 42L, sampleSize: Int = 1024): Unit = {
-    val held = spark.read.parquet(s"$path/lists")
+      k: Int, iters: Int, seed: Long = 42L,
+      sampleSize: Int = 1024): Array[org.apache.spark.sql.Row] = {
+    val held = spark.read.schema(listsSchema).parquet(s"$path/lists")
       .select(col("cid"), col("_v"))
     val corpus = held.filter(normSq(col("_v")) > 0.0)
     val quarantined = held.filter(normSq(col("_v")) === 0.0)
     val stage = s"$path/_retrain"
     quarantined.write.mode("overwrite").parquet(s"$stage/quarantine")
     val cents = trainKMeans(corpus, "cid", "_v", k, iters, seed, sampleSize)
-    writeIvfIndex(corpus, "cid", "_v", cents, stage)
+    val build = writeIvfIndex(corpus, "cid", "_v", cents, stage)
     import java.nio.file.{Files, Path, Paths, StandardCopyOption}
     def rmTree(p: Path): Unit = if (Files.exists(p)) {
       val walk = Files.walk(p)
@@ -862,6 +946,7 @@ object Similarity {
     }
     rmTree(old)
     rmTree(Paths.get(stage))
+    build
   }
 
   /** Per-JVM build-once registry for scratch persisted indexes: the

@@ -119,6 +119,25 @@ object Streams {
     java.nio.file.Files.delete(p)
   }
 
+  /** Logical batch of a row: `id div span`. */
+  private def logicalBatch(id: String, span: Long) =
+    call_function("div", col(id), lit(span))
+
+  /** Pin a trigger's rows once (eager local checkpoint) and return them
+    * with their logical-batch ids in ascending order. The ids are
+    * observed on the pin's own job (`collect_set` through
+    * `Dataset.observe`), so regrouping a trigger costs no job of its
+    * own. The caller frees the pin. */
+  private def pinTrigger(batch: DataFrame, id: String,
+      span: Long): (DataFrame, Seq[Long]) = {
+    val obs = org.apache.spark.sql.Observation()
+    val pinned = batch
+      .observe(obs, collect_set(logicalBatch(id, span)).as("bs"))
+      .localCheckpoint(true)
+    (pinned, obs.get("bs").asInstanceOf[scala.collection.Seq[Long]]
+      .toSeq.sorted)
+  }
+
   /** Stage logical stream batches as ONE Spark job (opt guide §2.4):
     * `withB` carries a `_b` batch column; hash-repartitioning by `_b`
     * puts each batch entirely in one task, so the partitionBy write
@@ -880,24 +899,29 @@ object Streams {
     * both tables are compacted into a fresh generation and the old one
     * dropped — the OPTIMIZE cadence a Delta/Iceberg-backed index would
     * run, without which an append-per-batch index decays into a
-    * small-file scan bottleneck. At 100 TB: the index tables live in a
-    * transactional table format, the per-batch candidate join is
-    * hash-keyed on the posting hash (shuffle ∝ batch postings + matched
-    * index postings, never the whole index), and per-batch cost tracks
-    * the ADMITTED corpus, not the arrival count. When approximate
-    * recall is acceptable, the banded-signature index of the static
-    * gate is the sub-linear alternative; it cannot be the admission
-    * authority for exactly the cascade reason above.
+    * small-file scan bottleneck. No compaction runs after the final
+    * logical batch: the index is deleted as soon as the drain returns.
+    * Both tables are read back with the schemas the loop wrote them
+    * with (no schema-inference job per read). At 100 TB: the index
+    * tables live in a transactional table format, the per-batch
+    * candidate join is hash-keyed on the posting hash (shuffle ∝ batch
+    * postings + matched index postings, never the whole index), and
+    * per-batch cost tracks the ADMITTED corpus, not the arrival count.
+    * When approximate recall is acceptable, the banded-signature index
+    * of the static gate is the sub-linear alternative; it cannot be the
+    * admission authority for exactly the cascade reason above.
     *
     * Micro-batch determinism: arrivals are staged as one file per
     * logical batch (`doc_id div span`), drained with
     * `maxFilesPerTrigger=1` in mtime order. Inside `foreachBatch` the
-    * rows are STILL regrouped by logical batch and processed in
-    * ascending order with an index append between groups, so the
-    * verdict sequence is identical even if the source coalesces files
-    * into one trigger. Admission is batch-granular: docs in the same
-    * logical batch never block each other (the index only grows
-    * between batches) — the contract the oracle replays.
+    * trigger's shingled rows are pinned ONCE (its logical-batch ids
+    * observed on the pin's own job, as in [[streamIvfIngest]]), then
+    * STILL regrouped by logical batch — narrow slices of the pin —
+    * and processed in ascending order with an index append between
+    * groups, so the verdict sequence is identical even if the source
+    * coalesces files into one trigger. Admission is batch-granular:
+    * docs in the same logical batch never block each other (the index
+    * only grows between batches) — the contract the oracle replays.
     *
     * Returns one row per streamed doc:
     * (doc_id, batch_id, admitted, n_blockers, first_blocker).
@@ -937,22 +961,27 @@ object Streams {
         explode(slice(array_sort(col("sh")), lit(1), col("_p"))).as("h"))
 
     // ---- seed: the pre-existing historical corpus, indexed in batch ----
-    val hist = shingled(graft.io.Tables.documents(ss, sfDir)
+    val docs = graft.io.Tables.documents(ss, sfDir)
+    val hist = shingled(docs
       .filter(col("doc_id") < maxId && col("doc_id") % 5 === 3))
     hist.write.mode("overwrite").parquet(docsDir(0))
     postings(hist).write.mode("overwrite").parquet(postDir(0))
+    // the index tables are read back with the schemas written above —
+    // an inferring read costs one schema-merge job per table per batch
+    def idxDocs(g: Int) = ss.read.schema(hist.schema).parquet(docsDir(g))
+    def idxPost(g: Int) =
+      ss.read.schema(postings(hist).schema).parquet(postDir(g))
 
     // ---- stage arrivals: one parquet file per logical batch, strictly
     // increasing mtime so the file source drains them in order ----
     val landing = root.resolve("landing")
     Files.createDirectories(landing)
-    val strm = graft.io.Tables.documents(ss, sfDir)
+    val strm = docs
       .filter(col("doc_id") < maxId && col("doc_id") % 5 =!= 3)
       .select(col("doc_id"), col("text"))
     // one staging job for all logical batches (see [[stageBatchFiles]];
     // the previous loop re-scanned the documents table once per batch)
-    stageBatchFiles(
-      strm.withColumn("_b", call_function("div", col("doc_id"), lit(span))),
+    stageBatchFiles(strm.withColumn("_b", logicalBatch("doc_id", span)),
       nBatches, root, landing)
 
     // ---- the drain: per logical batch, verdicts then index append ----
@@ -963,13 +992,12 @@ object Streams {
     // same collected rows instead of re-joining the verdict frame
     val verdictRows = new scala.collection.mutable.ArrayBuffer[
       org.apache.spark.sql.Row]()
-    def processLogicalBatch(batch: DataFrame, b: Long): Unit = {
-      val inc = shingled(batch).localCheckpoint(true)
-      val idxPost = ss.read.parquet(postDir(gen))
-      val idxDocs = ss.read.parquet(docsDir(gen))
+    // `inc` is one logical batch's shingled rows: a narrow slice of the
+    // trigger's pin
+    def processLogicalBatch(inc: DataFrame, b: Long): Unit = {
       val cand = postings(inc)
         .select(col("doc_id").as("new_id"), col("n").as("_na"), col("h"))
-        .join(idxPost.select(col("h"), col("doc_id").as("hist_id"),
+        .join(idxPost(gen).select(col("h"), col("doc_id").as("hist_id"),
           col("n").as("_nb")), Seq("h"))
         // size-ratio prune: J ≥ t ⟹ 100·min(|a|,|b|) ≥ t·max(|a|,|b|)
         .filter(least(col("_na"), col("_nb")) * 100 >=
@@ -978,7 +1006,7 @@ object Streams {
       val blockers = cand
         .join(inc.select(col("doc_id").as("new_id"), col("sh").as("_sa"),
           col("n").as("_na")), Seq("new_id"))
-        .join(idxDocs.select(col("doc_id").as("hist_id"), col("sh").as("_sb"),
+        .join(idxDocs(gen).select(col("doc_id").as("hist_id"), col("sh").as("_sb"),
           col("n").as("_nb")), Seq("hist_id"))
         .withColumn("_i", size(array_intersect(col("_sa"), col("_sb"))))
         .filter(col("_i") * 100 >= (col("_na") + col("_nb") - col("_i")) * thresholdPct)
@@ -999,14 +1027,13 @@ object Streams {
         else inc.filter(col("doc_id").isin(admittedIds: _*))
       admitted.write.mode("append").parquet(docsDir(gen))
       postings(admitted).write.mode("append").parquet(postDir(gen))
-      // free the batch pin's blocks now (no-op-unpersist rationale —
-      // see the ingest loop's trigger pin)
-      graft.ops.Dedup.freeLocalCheckpoint(inc)
-      if ((b + 1) % compactEvery == 0) {
-        // compaction: fold the accumulated appends into one generation
-        ss.read.parquet(docsDir(gen)).coalesce(1)
+      // compaction: fold the accumulated appends into one generation —
+      // except after the final logical batch, whose index is deleted as
+      // soon as the drain returns
+      if ((b + 1) % compactEvery == 0 && b < nBatches - 1) {
+        idxDocs(gen).coalesce(1)
           .write.mode("overwrite").parquet(docsDir(gen + 1))
-        ss.read.parquet(postDir(gen)).coalesce(1)
+        idxPost(gen).coalesce(1)
           .write.mode("overwrite").parquet(postDir(gen + 1))
         deleteRecursively(Paths.get(docsDir(gen)))
         deleteRecursively(Paths.get(postDir(gen)))
@@ -1021,14 +1048,16 @@ object Streams {
       .option("checkpointLocation", root.resolve("ckpt").toString)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // regroup by LOGICAL batch: verdicts stay deterministic even if
-        // the source packs several staged files into one trigger
-        val bs = batch.select(call_function("div", col("doc_id"), lit(span))
-          .as("_b")).distinct().orderBy("_b").collect().map(_.getLong(0))
+        // pin the trigger's shingled rows once, then regroup by LOGICAL
+        // batch: verdicts stay deterministic even if the source packs
+        // several staged files into one trigger
+        val (pinned, bs) = pinTrigger(shingled(batch), "doc_id", span)
         bs.foreach { b =>
           processLogicalBatch(
-            batch.filter(call_function("div", col("doc_id"), lit(span)) === b), b)
+            pinned.filter(logicalBatch("doc_id", span) === b), b)
         }
+        // free the pin's blocks now (unpersist is a no-op on checkpoints)
+        graft.ops.Dedup.freeLocalCheckpoint(pinned)
       }
       .start()
     q.awaitTermination()
@@ -1043,25 +1072,6 @@ object Streams {
     out
   }
 
-  /** STREAMING IVF INGEST — the persisted vector index's maintain loop
-    * driven from a STREAM (the stream-side twin of x2_ann_ivf_append /
-    * x2_ann_ivf_retrain): embedding vectors arrive in logical batches
-    * (vec_id div span, staged one file per batch with increasing mtime,
-    * drained AvailableNow with maxFilesPerTrigger=1); batch 0 TRAINS
-    * the centroids and builds the persisted index, every later batch is
-    * APPENDED via the same hash-agg argmax assignment (only its
-    * assigned cent_id partitions gain files), and the staleness census
-    * runs after every batch — continuous ingest with drift
-    * surveillance, the loop a 100 TB embedding pipeline actually runs.
-    * Inside foreachBatch, rows are regrouped by logical batch and
-    * applied in ascending order, so the result is deterministic even if
-    * the source coalesces staged files into one trigger (the
-    * streamMinhashIncr discipline).
-    *
-    * Returns one row per logical batch — (batch_id, n_vectors, census
-    * n_total / n_appended after the batch, no_retrain) — plus
-    * `matches_batch_build` on every row: the final incremental-ingest
-    * == one-shot-build assignment equality, checked both ways. */
   /** [[streamIvfIngest]] with the FULL maintain loop closed inside the
     * stream: `degenLastBatch` poisons the final logical batch into the
     * zero-vector regime (the upstream-model-bug signature) before
@@ -1085,7 +1095,37 @@ object Streams {
     streamIvfIngest(spark, sfDir, span, k, degenLastBatch = true,
       singleTrigger = singleTrigger, verifyCensus = verifyCensus)
 
-  /** `singleTrigger`: drain the whole landing dir in ONE AvailableNow
+  /** STREAMING IVF INGEST — the persisted vector index's maintain loop
+    * driven from a STREAM (the stream-side twin of x2_ann_ivf_append /
+    * x2_ann_ivf_retrain): embedding vectors arrive in logical batches
+    * (vec_id div span, staged one file per batch with increasing mtime,
+    * drained AvailableNow with maxFilesPerTrigger=1); batch 0 TRAINS
+    * the centroids and builds the persisted index, every later batch is
+    * APPENDED via the same per-row argmax assignment (only its
+    * assigned cent_id partitions gain files), and the staleness census
+    * runs after every batch — continuous ingest with drift
+    * surveillance, the loop a 100 TB embedding pipeline actually runs.
+    * Inside foreachBatch, rows are regrouped by logical batch and
+    * applied in ascending order, so the result is deterministic even if
+    * the source coalesces staged files into one trigger (the
+    * streamMinhashIncr discipline).
+    *
+    * Returns one row per logical batch — (batch_id, n_vectors, census
+    * n_total / n_appended after the batch, no_retrain) — plus
+    * `matches_batch_build` on every row: the final incremental-ingest
+    * == one-shot-build assignment equality, checked both ways.
+    *
+    * Each trigger's rows are pinned once (eager local checkpoint), and
+    * the trigger's logical-batch ids are observed on that pin's own job
+    * (`collect_set` through `Dataset.observe`, sorted on the driver) —
+    * no separate distinct/sort job per trigger.
+    *
+    * `vec_id` contract: ids are indexed as given. A duplicated id is
+    * assigned and listed once per row (within a batch as across
+    * batches), and `n_vectors` counts the rows streamed; uniqueness is
+    * the caller's to guarantee.
+    *
+    * `singleTrigger`: drain the whole landing dir in ONE AvailableNow
     * trigger instead of one file per trigger. Because foreachBatch
     * regroups rows by logical batch and applies them in ascending
     * order, the OUTPUT is identical either way (a StreamingSpec pins
@@ -1119,8 +1159,7 @@ object Streams {
     // dir with the same strictly-increasing mtimes as before. Staged
     // file CONTENT per batch is identical (same rows, same schema).
     stageBatchFiles(
-      { val withB = e.withColumn("_b",
-          call_function("div", col("vec_id"), lit(span)))
+      { val withB = e.withColumn("_b", logicalBatch("vec_id", span))
         val staged =
           if (degenLastBatch)
             withB.select(col("vec_id"),
@@ -1130,12 +1169,18 @@ object Streams {
           else withB.select(col("vec_id"), col("embedding"), col("_b"))
         staged },
       nBatches, root, landing)
-    // the trained/retrained centroid table, cached driver-side across
-    // batches: k rows the build itself produced — re-reading the
-    // centroids parquet on EVERY append was one read job per batch for
-    // data this loop already holds (opt guide §2.4). `null` forces a
-    // (one-time) read from the index, e.g. after a retrain.
-    var centsCache: DataFrame = null
+    // the live index's centroid table, held driver-side across batches
+    // as a local frame: k rows the build itself produced, or a retrain
+    // rewrote (read back once, with the schema the build wrote). Every
+    // assignment, the census seed and the final equality pin read it
+    // without a job (opt guide §2.4).
+    var cents: DataFrame = null
+    var nLists = 0L
+    def holdCentroids(df: DataFrame): Unit = {
+      val rows = df.collect()
+      cents = ss.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
+      nLists = rows.length.toLong
+    }
     // per-batch result rows, written ONCE after the drain instead of
     // one tiny parquet-append job per batch — same rows, same schema
     val resultRows = new scala.collection.mutable.ArrayBuffer[
@@ -1171,24 +1216,19 @@ object Streams {
       val c =
         if (b == 0L) {
           label("train")
-          val cents = graft.ops.Similarity.trainKMeans(
-            vecs, "vec_id", "embedding", k, iters = 3)
+          holdCentroids(graft.ops.Similarity.trainKMeans(
+            vecs, "vec_id", "embedding", k, iters = 3))
           label("build index")
-          graft.ops.Similarity.writeIvfIndex(
-            vecs, "vec_id", "embedding", cents, idxDir)
-          centsCache = cents
-          label("census init")
-          graft.ops.Similarity.initIvfCensusRunning(ss, idxDir)
+          // the census is seeded from the build's own stat rows and the
+          // held centroid count — no stats/centroids re-read, no count
+          graft.ops.Similarity.initIvfCensusRunningRows(idxDir, nLists,
+            graft.ops.Similarity.writeIvfIndex(
+              vecs, "vec_id", "embedding", cents, idxDir))
           val init =
             graft.ops.Similarity.readIvfCensusRunning(ss, idxDir).collect()(0)
           batchN = init.getAs[Long]("n_total")
           init
         } else {
-          if (centsCache == null) {
-            label("reload centroids")
-            centsCache = ss.read.parquet(s"$idxDir/centroids")
-              .localCheckpoint(true)
-          }
           label("append")
           // the append returns the batch's stat ROWS directly (r16:
           // wrapping them in a local relation only to collect them
@@ -1198,7 +1238,7 @@ object Streams {
           // is double division in Spark SQL, cast("long") truncates —
           // exactly what the Scala expression below computes.
           val rows = graft.ops.Similarity.appendToIvfIndexRows(
-            ss, vecs, "vec_id", "embedding", idxDir, centsCache)
+            vecs, "vec_id", "embedding", idxDir, cents)
           label("census fold")
           val dn = rows.map(_.getAs[Long]("n")).sum
           val dsim = rows.map(_.getAs[Long]("sum_sim_micro")).sum
@@ -1233,9 +1273,12 @@ object Streams {
       // index the next batch appends to is already healthy again
       val after =
         if (fired) {
-          graft.ops.Similarity.retrainIvfIndex(ss, idxDir, k, iters = 3)
-          centsCache = null // retrain rewrote the centroids on disk
-          graft.ops.Similarity.initIvfCensusRunning(ss, idxDir)
+          label("retrain")
+          val build = graft.ops.Similarity.retrainIvfIndex(ss, idxDir, k,
+            iters = 3)
+          holdCentroids(ss.read.schema(graft.ops.Similarity.centroidsSchema)
+            .parquet(s"$idxDir/centroids"))
+          graft.ops.Similarity.initIvfCensusRunningRows(idxDir, nLists, build)
           val post =
             graft.ops.Similarity.readIvfCensusRunning(ss, idxDir).collect()(0)
           if (verifyCensus) {
@@ -1263,16 +1306,13 @@ object Streams {
       .option("checkpointLocation", root.resolve("ckpt").toString)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // pin the TRIGGER's rows once (the regroup scan doubles as the
-        // materializing action's input), then slice logical batches
-        // with narrow filters over the local RDD
+        // pin the TRIGGER's rows once, then slice logical batches with
+        // narrow filters over the local RDD
         ss.sparkContext.setJobDescription("ivf-ingest: checkpoint trigger")
-        val pinned = batch.localCheckpoint(true)
-        val bs = pinned.select(call_function("div", col("vec_id"), lit(span))
-          .as("_b")).distinct().orderBy("_b").collect().map(_.getLong(0))
+        val (pinned, bs) = pinTrigger(batch, "vec_id", span)
         bs.foreach { b =>
           processLogicalBatch(
-            pinned.filter(call_function("div", col("vec_id"), lit(span)) === b), b)
+            pinned.filter(logicalBatch("vec_id", span) === b), b)
         }
         // free the trigger pin's blocks NOW (unpersist is a no-op on
         // checkpoints; waiting on driver GC + ContextCleaner lets pins
@@ -1285,28 +1325,17 @@ object Streams {
     // SCORABLE corpus under the index's CURRENT centroids (batch-0's
     // when no retrain ran; the retrained ones when it did — retrain is
     // a fresh build over the lists, so the equality holds either way),
-    // both directions
-    val cents = ss.read.parquet(s"$idxDir/centroids")
+    // both directions, as multisets in one job
     val scorable =
-      if (degenLastBatch)
-        e.filter(call_function("div", col("vec_id"), lit(span)) <
-          nBatches - 1)
+      if (degenLastBatch) e.filter(logicalBatch("vec_id", span) < nBatches - 1)
       else e
     val direct = graft.ops.Similarity.assignToCentroids(
         scorable, "vec_id", "embedding", cents)
       .select(col("cid"), col("cent_id"))
-    val lists = ss.read.parquet(s"$idxDir/lists")
+    val lists = ss.read.schema(graft.ops.Similarity.listsSchema)
+      .parquet(s"$idxDir/lists")
       .select(col("cid"), col("cent_id"))
-    // multiset equality in ONE job (previously two exceptAll plans, each
-    // its own shuffle + isEmpty action): per-(cid, cent_id) signed
-    // counts sum to zero on every key ⟺ lists ≡ direct as multisets —
-    // the same both-directions verdict exceptAll computed
-    val eq = lists.withColumn("_s", lit(1L))
-      .unionByName(direct.withColumn("_s", lit(-1L)))
-      .groupBy(col("cid"), col("cent_id"))
-      .agg(sum(col("_s")).as("_d"))
-      .filter(col("_d") =!= 0L)
-      .isEmpty
+    val eq = graft.ops.Similarity.multisetEq(lists, direct)
     import spark.implicits._
     val out = resultRows.toSeq
       .toDF("batch_id", "n_vectors", "n_total", "n_appended",

@@ -5,8 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Dev A/B: any boolean-ish session conf ON vs OFF inside ONE
   * JVM/session, alternating per rep so box drift (this host swings
   * 40-65% between sweeps — the bench control pair measures it) cancels
-  * out of the comparison. Generalizes [[SpreadAb]] to an arbitrary
-  * conf key and value pair.
+  * out of the comparison. [[SpreadAb]] is this with the scan-spread
+  * key.
   * Usage: ConfAb <sfDir> <q1,q2,...> <confKey> [offVal=false]
   *   [onVal=true] [pairs=3]; SPARK_GRAFT_CPUS sets the core count. */
 object ConfAb {

@@ -1,49 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev A/B: scan-spread ON vs OFF inside ONE JVM/session, alternating
-  * per rep so box drift (this host swings 40-65% between sweeps —
-  * the bench control pair measures it) cancels out of the comparison.
-  * Usage: SpreadAb <sfDir> <q1,q2,...> [pairs] */
+/** Dev A/B: scan-spread ON vs OFF — [[ConfAb]] with the key fixed to
+  * [[graft.io.Tables.ScanSpreadKey]] (off=false, on=true).
+  * Usage: SpreadAb <sfDir> <q1,q2,...> [pairs=3]; SPARK_GRAFT_CPUS sets
+  * the core count. */
 object SpreadAb {
-  def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val names = args.lift(1).map(_.split(",").toSeq).getOrElse(Seq("q1_pricing_summary"))
-    val pairs = args.lift(2).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    names.foreach { n =>
-      val fn = graft.SparkEntry.queries(n)
-      // warm both plan shapes untimed
-      Seq("false", "true").foreach { v =>
-        spark.conf.set(graft.io.Tables.ScanSpreadKey, v)
-        fn(spark, dir).count(): Unit
-        spark.catalog.clearCache()
-      }
-      System.gc()
-      val res = scala.collection.mutable.Map("true" -> List.empty[Double],
-        "false" -> List.empty[Double])
-      (1 to pairs).foreach { _ =>
-        Seq("false", "true").foreach { v =>
-          spark.conf.set(graft.io.Tables.ScanSpreadKey, v)
-          val t0 = System.nanoTime()
-          fn(spark, dir).count(): Unit
-          val el = (System.nanoTime() - t0) / 1e9
-          res(v) = res(v) :+ el
-          spark.catalog.clearCache()
-          System.gc()
-        }
-      }
-      def fmt(v: String) = res(v).map(x => f"$x%.2f").mkString("/")
-      def med(v: String) = res(v).sorted.apply(res(v).length / 2)
-      println(f"[spreadab] $n%-28s off=${fmt("false")}%-20s on=${fmt("true")}%-20s " +
-        f"med off=${med("false")}%.2f on=${med("true")}%.2f ratio=${med("true") / med("false")}%.2f")
-    }
-    spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    ConfAb.main(Array(
+      args.headOption.getOrElse("/root/testdata/sf0.1"),
+      args.lift(1).getOrElse("q1_pricing_summary"),
+      graft.io.Tables.ScanSpreadKey, "false", "true",
+      args.lift(2).getOrElse("3")))
 }

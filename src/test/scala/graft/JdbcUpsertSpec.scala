@@ -89,6 +89,29 @@ class JdbcUpsertSpec extends AnyFunSuite with SparkTestBase {
     c1.close()
   }
 
+  test("writeWith rethrows the statement's failure when rollback throws too") {
+    val db = "gw4"
+    val c0 = derbyConn(db)
+    c0.createStatement().execute(
+      "CREATE TABLE sink4 (id BIGINT PRIMARY KEY, name VARCHAR(32))")
+    c0.close()
+    // dup PK fails the second batch; the connection's rollback then
+    // throws as well — the original failure must be the one reported
+    val rows = (1 to 20).map(i => (if (i == 15) 1L else i.toLong, s"n$i"))
+    val df = rows.toDF("id", "name").coalesce(1)
+    val e = intercept[org.apache.spark.SparkException] {
+      JdbcUpsert.writeWith(df, "INSERT INTO sink4 VALUES (?, ?)",
+        DerbyHelper.connectFailingRollback(db), batchSize = 10)
+    }
+    val cause = e.getCause
+    assert(cause.isInstanceOf[java.sql.SQLException] &&
+      cause.getMessage != DerbyHelper.RollbackFailure,
+      s"the statement's failure must surface, got $cause")
+    assert(cause.getSuppressed.exists(_.getMessage == DerbyHelper.RollbackFailure),
+      s"the rollback failure must ride along as suppressed: " +
+        cause.getSuppressed.toSeq)
+  }
+
   test("write() generates the Postgres statement over writeWith (dialect seam intact)") {
     // write() itself must stay statement-compatible with the reference's
     // Postgres target; against Derby it should fail at PARSE time (no
@@ -126,5 +149,26 @@ object DerbyHelper {
   def connect(db: String): () => java.sql.Connection = {
     val url = s"jdbc:derby:memory:$db;create=true"
     () => java.sql.DriverManager.getConnection(url)
+  }
+
+  val RollbackFailure = "rollback failed (injected)"
+
+  /** [[connect]], but every `rollback` on the connection throws. */
+  def connectFailingRollback(db: String): () => java.sql.Connection = {
+    val open = connect(db)
+    () => {
+      val c = open()
+      java.lang.reflect.Proxy.newProxyInstance(
+        DerbyHelper.getClass.getClassLoader,
+        Array[Class[_]](classOf[java.sql.Connection]),
+        (_: AnyRef, m: java.lang.reflect.Method, args: Array[AnyRef]) =>
+          if (m.getName == "rollback")
+            throw new java.sql.SQLException(RollbackFailure)
+          else try m.invoke(c, Option(args).getOrElse(Array.empty[AnyRef]): _*)
+          catch {
+            case i: java.lang.reflect.InvocationTargetException => throw i.getCause
+          }
+      ).asInstanceOf[java.sql.Connection]
+    }
   }
 }

@@ -522,9 +522,9 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
         lww.linesIterator.take(25).mkString("\n"))
   }
 
-  test("persisted IVF append: the ingest batch's assignment plan reads " +
-      "centroids (broadcast) + the new vectors ONLY — the existing lists " +
-      "are never scanned") {
+  test("persisted IVF append: the ingest batch's assignment is narrow — " +
+      "it scans the new vectors ONLY (never the existing lists), with no " +
+      "Exchange and no nested-loop join") {
     import graft.ops.Similarity
     import org.apache.spark.sql.functions._
     val e = graft.io.Tables.embeddings(spark, sfDir)
@@ -533,17 +533,19 @@ class PlanShapeSpec extends AnyFunSuite with SparkTestBase {
     val cents = Similarity.trainKMeans(a, "vec_id", "embedding", k = 8, iters = 2)
     val path = java.nio.file.Files.createTempDirectory("ivfappplan").toString
     Similarity.writeIvfIndex(a, "vec_id", "embedding", cents, path)
-    val pl = Similarity.assignToCentroids(b, "vec_id", "embedding",
+    val assigned = Similarity.assignToCentroids(b, "vec_id", "embedding",
         spark.read.parquet(s"$path/centroids"))
-      .queryExecution.explainString(
+    assigned.collect() // the executed plan, AQE final
+    val pl = assigned.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     assert(!pl.contains("/lists"),
       "append must never rescan the corpus-sized lists")
-    assert(pl.contains("BroadcastNestedLoopJoin") || pl.contains("BroadcastExchange"),
-      "the centroid fan-out must ride a broadcast")
-    // exactly two scans: the new batch + the k-row centroid table
+    assert(!pl.contains("Exchange"), s"the assignment must not shuffle:\n$pl")
+    assert(!pl.contains("NestedLoopJoin") && !pl.contains("CartesianProduct"),
+      s"the assignment must not expand rows against the centroids:\n$pl")
+    // exactly one scan: the new batch (centroids are held on the driver)
     val scans = "\\(\\d+\\) Scan parquet".r.findAllIn(pl).size
-    assert(scans == 2, s"expected 2 scans (batch + centroids), saw $scans")
+    assert(scans == 1, s"expected 1 scan (the batch), saw $scans")
     java.nio.file.Files.walk(java.nio.file.Paths.get(path))
       .sorted(java.util.Comparator.reverseOrder())
       .forEach(p => java.nio.file.Files.delete(p))

@@ -317,6 +317,59 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     rmTree(path)
   }
 
+  test("multisetEq: helper columns never collide with an input column " +
+      "(inputs already carrying `_s`/`_d`)") {
+    val x = Seq((1L, 7L, 0L), (2L, 7L, 0L), (2L, 7L, 0L)).toDF("_s", "v", "_d")
+    assert(Similarity.multisetEq(x, x.orderBy(col("_s").desc)))
+    // same rows once the `_s` values are overwritten by a constant — a
+    // fixed `_s` sign column would see these as equal
+    val y = Seq((3L, 7L, 0L), (4L, 7L, 0L), (4L, 7L, 0L)).toDF("_s", "v", "_d")
+    assert(!Similarity.multisetEq(x, y))
+    // multiplicity counts: same distinct rows, different counts
+    val z = Seq((1L, 7L, 0L), (1L, 7L, 0L), (2L, 7L, 0L)).toDF("_s", "v", "_d")
+    assert(!Similarity.multisetEq(x, z))
+  }
+
+  test("IVF vec_id contract: a duplicated id is indexed once per row — " +
+      "lists == direct assignment as multisets, and the stat n counts " +
+      "both rows") {
+    val e = graft.io.Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select(col("vec_id"), col("embedding"))
+    val dup = e.filter(col("vec_id") === 7L)
+    val withDup = e.unionByName(dup)
+    val cents = Similarity.trainKMeans(e, "vec_id", "embedding", k = 8, iters = 2)
+    val p = java.nio.file.Files.createTempDirectory("ivfdup").toString
+    val build = Similarity.writeIvfIndex(withDup, "vec_id", "embedding", cents, p)
+    val direct = Similarity.assignToCentroids(withDup, "vec_id", "embedding",
+        cents).select(col("cid"), col("cent_id"))
+    val lists = spark.read.parquet(s"$p/lists").select(col("cid"), col("cent_id"))
+    assert(Similarity.multisetEq(lists, direct))
+    assert(lists.filter(col("cid") === 7L).count() == 2L)
+    val n = e.count()
+    assert(build.map(_.getAs[Long]("n")).sum == n + 1)
+    assert(spark.read.parquet(s"$p/stats").agg(sum(col("n")))
+      .head().getLong(0) == n + 1)
+    rmTree(p)
+  }
+
+  test("IVF census sidecar seeded from the build's own rows is " +
+      "byte-identical to the full init's recompute from stats/") {
+    import java.nio.file.{Files, Paths}
+    val e = graft.io.Tables.embeddings(spark, "/root/testdata/sf0.001")
+    val cents = Similarity.trainKMeans(e, "vec_id", "embedding", k = 16, iters = 2)
+    val p = Files.createTempDirectory("ivfseed").toString
+    val build = Similarity.writeIvfIndex(e, "vec_id", "embedding", cents, p)
+    def sidecar(): Seq[Seq[Byte]] = Seq("summary.json", "list_counts.bin")
+      .map(f => Files.readAllBytes(Paths.get(p, "census", f)).toSeq)
+    Similarity.initIvfCensusRunningRows(p, cents.collect().length.toLong, build)
+    val seeded = sidecar()
+    Similarity.initIvfCensusRunning(spark, p)
+    assert(seeded == sidecar())
+    assert(Similarity.readIvfCensusRunning(spark, p).collect()(0).toSeq ==
+      Similarity.ivfIndexCensus(spark, p).collect()(0).toSeq)
+    rmTree(p)
+  }
+
   test("IVF staleness census: same-distribution append stays quiet; a " +
       "concentrated batch fires the SKEW trigger; a degenerate (zero-" +
       "vector) batch fires the FIT trigger") {
