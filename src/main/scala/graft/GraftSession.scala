@@ -30,4 +30,27 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
   }
+
+  /** Core count of the [[harness]] session: `SPARK_GRAFT_CPUS`, default 4. */
+  def harnessCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The one session the harness mains run on (`Bench`, `Verify`, and
+    * the `tools` mains): `local[harnessCpus]`, shuffle partitions =
+    * cpus, UTC, UI off, and a 2000-entry codegen cache — 80+ queries ×
+    * several codegen units each overflow the default 100 entries, and
+    * the LRU thrash then recompiles big classes (64-slot aggs)
+    * mid-suite, showing up as wandering multi-second spikes on
+    * whichever query recompiles. AQE and scan sizing stay at Spark's
+    * defaults: the board and the bench are measured on this session,
+    * not on [[builder]]'s. */
+  def harness(): SparkSession = {
+    val cpus = harnessCpus.toString
+    SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .getOrCreate()
+  }
 }

@@ -185,12 +185,13 @@ object SparkEntry {
     * SERIALLY on one core while the rest of the session idled (opt
     * guide §2.5/§2.6). The exchange moves only the filtered ids — a
     * few hundred longs, effectively free — unlike spreading the full
-    * text table, which tools/SpreadAb measured a net loss for cheap
-    * map work (see Tables.spreadScan). Row-identical: the kernels are
-    * pure per-row functions of the id, and every gate orders its
-    * output. Honors the same `spark.graft.scan.spread` kill switch as
-    * Tables.spreadScan so one conf disables every spread behavior
-    * (the documented production escape hatch / SpreadAb toggle). */
+    * text table, which the SpreadAb A/B (retired; BENCH_NOTES.md
+    * "Retired dev mains") measured a net loss for cheap map work (see
+    * Tables.spreadScan). Row-identical: the kernels are pure per-row
+    * functions of the id, and every gate orders its output. Honors the
+    * same `spark.graft.scan.spread` kill switch as Tables.spreadScan
+    * so one conf disables every spread behavior (the documented
+    * production escape hatch / `Probe ab` toggle). */
   private def kernelIds(s: SparkSession, dir: String, below: Long)
       : org.apache.spark.sql.Dataset[Long] = {
     import s.implicits._
@@ -203,8 +204,8 @@ object SparkEntry {
   /** Documents with the single-split scan spread across cores — ONLY
     * for gates whose per-row text kernels (shingle/token hashing over
     * the full text) dominate the query; each use A/B-verified with
-    * tools/SpreadAb (blanket spreading measured a net loss — see
-    * Tables.spreadScan). */
+    * `Probe ab <dir> <query> spark.graft.scan.spread` (blanket
+    * spreading measured a net loss — see Tables.spreadScan). */
   private def docsSpread(s: SparkSession, dir: String): DataFrame =
     Tables.spreadTable(s, dir, "documents", Tables.documents(s, dir))
 
@@ -672,7 +673,8 @@ object SparkEntry {
     // index (a clustered corpus concentrates buckets); the floor pins
     // "the bucket path finds real neighbors at all" plus the exact
     // re-rank and rank-shape contracts, which are recall-independent.
-    // planes=4 after the round-9 recall sweep (tools/AnnRecallProbe):
+    // planes=4 after the round-9 recall sweep (AnnRecallProbe, retired;
+    // BENCH_NOTES.md "Retired dev mains"):
     // on the RANDOM fixture — the adversarial case, iid vectors have no
     // neighbor structure — planes=6 recall decays with corpus size
     // (36/12/2 % at sf0.001/0.01/0.1) and would cross the floor at
@@ -790,7 +792,8 @@ object SparkEntry {
     // X2 — IVF RETRAIN (the r10 verdict's #3 ask): the staleness
     // census's verdict CONSUMED, census-fires → retrain → census-clears
     // as one audited loop. Drift regime = the measured fit-firing one
-    // (IvfMaintProbe's degenerate zero-vector batch — the upstream
+    // (IvfMaintProbe's degenerate zero-vector batch; the probe is
+    // retired, BENCH_NOTES.md "Retired dev mains" — the upstream
     // embedding-model-bug signature): build on A (vec_id % 3 != 0),
     // append the zeroed B, certify ONCE per fixture (cert persisted
     // beside the index; cachedIvfIndex keeps the loop idempotent
@@ -884,8 +887,9 @@ object SparkEntry {
     // table, and exact-reranks the shortlist against the probed lists'
     // raw floats — sims exact, order approximate. Codes are RESIDUAL
     // (v − centroid, classical IVFADC) since r12; the AnnRecallProbe
-    // raw-vs-residual A/B measured them EQUAL within noise on this
-    // iid-random fixture (centroid/vector norm ratio 0.27-0.33 — the
+    // (BENCH_NOTES.md "Retired dev mains") raw-vs-residual A/B measured
+    // them EQUAL within noise on this iid-random fixture
+    // (centroid/vector norm ratio 0.27-0.33 — the
     // coarse quantizer explains almost nothing on iid data, so residual
     // ≈ raw; every clustered fixture saturates 100% under both). Floor
     // pinned from the r12 residual sweep (m=8, kCodes=16, nprobe=6,
@@ -1463,8 +1467,9 @@ object SparkEntry {
     "ml_ols_residuals" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
       // two full passes (fit agg + residual window) over the single-
-      // split fact scan ran SERIALLY on one core (r16 JobProf: two
-      // ~1-1.2 s single-task jobs of a 3 s query); spread the scan
+      // split fact scan ran SERIALLY on one core (r16 JobProf, now
+      // `Probe jobs`: two ~1-1.2 s single-task jobs of a 3 s query);
+      // spread the scan
       // (conf-gated, identity on multi-split inputs), project to the
       // three consumed columns (guide §2.3), and freeze so the second
       // pass reads executor-resident blocks instead of re-scanning.

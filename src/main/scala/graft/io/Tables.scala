@@ -28,7 +28,8 @@ object Tables {
     * IDENTITY, so nothing here tunes FOR local mode.
     *
     * Deliberately NOT applied inside the table loaders: a same-session
-    * alternating A/B (tools/SpreadAb, 3 pairs/query) measured the
+    * alternating A/B (SpreadAb, 3 pairs/query; now `Probe ab` on
+    * [[ScanSpreadKey]]; BENCH_NOTES.md "Retired dev mains") measured the
     * blanket form a large net LOSS — only queries whose per-row map
     * work is genuinely expensive win (codec kernels 0.68×, shingle
     * hashing 0.69×), while ordinary scan→agg/join queries pay the

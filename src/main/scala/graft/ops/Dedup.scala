@@ -554,6 +554,22 @@ object Dedup {
       call_function("div", col("n_inter") * 1000000L, col("n_union")).as("jaccard_micros"))
   }
 
+  /** Release the block-store blocks behind a `localCheckpoint`'d frame.
+    * `Dataset.unpersist()` only clears CacheManager entries (`.persist`),
+    * not the RDD a checkpoint pinned — without this, reclamation waits on
+    * driver GC + ContextCleaner and blocks accumulate across rounds. */
+  def freeLocalCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.analyzed.collectLeaves().foreach {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        lr.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
+
+  /** Rounds the most recent [[clusterPairs]] call took to converge —
+    * a probe/test hook for the O(log diameter) scale claim, not part
+    * of the data path (last invocation wins under concurrency). */
+  @volatile private[graft] var lastClusterRounds: Int = -1
+
   /** Near-dup pairs → connected components, via min-label propagation
     * with pointer jumping: every id starts as its own label; each round a
     * node (1) adopts the smallest label in its neighborhood, then (2)
@@ -572,22 +588,6 @@ object Dedup {
     * Input: (id_a, id_b) pairs. Output: (id, cluster) for every id that
     * appears in some pair (singletons never enter and survive dedup by
     * definition). `cluster` = min id of the component. */
-  /** Release the block-store blocks behind a `localCheckpoint`'d frame.
-    * `Dataset.unpersist()` only clears CacheManager entries (`.persist`),
-    * not the RDD a checkpoint pinned — without this, reclamation waits on
-    * driver GC + ContextCleaner and blocks accumulate across rounds. */
-  def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** Rounds the most recent [[clusterPairs]] call took to converge —
-    * a probe/test hook for the O(log diameter) scale claim, not part
-    * of the data path (last invocation wins under concurrency). */
-  @volatile private[graft] var lastClusterRounds: Int = -1
-
   def clusterPairs(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     val spark = pairs.sparkSession
@@ -669,7 +669,8 @@ object Dedup {
       round += 1
     }
     // probe/test observability: rounds-to-convergence is the O(log
-    // diameter) claim scale probes verify (GraphScaleProbe reads this;
+    // diameter) claim scale probes verify (GraphScaleProbe read this,
+    // BENCH_NOTES.md "Retired dev mains";
     // single-threaded probes only — last invocation wins)
     lastClusterRounds = round
     edges.unpersist()

@@ -66,30 +66,11 @@ object Graph {
     * returns the uniform init). Contract: ids non-negative longs,
     * |V| ≤ 1e10 (integer headroom, see object doc). */
   def pagerank(edges: DataFrame, srcCol: String, dstCol: String,
-      nodes: DataFrame, nodeCol: String, iters: Int): DataFrame = {
-    require(iters >= 0 && iters <= 1000, s"iters must be in [0,1000], got $iters")
-    val e = edges.select(
-      col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-    // persist the node universe too: every round's universe-restore
-    // join (and the rank init) re-evaluated the caller's node PLAN —
-    // one scan per round for a frame that never changes (opt guide
-    // §1.2). |V| rows, bounded; released after the last round (safe:
-    // each round's result is eagerly pinned, nothing lazy reads n).
-    val n = nodes.select(col(nodeCol).cast("long").as("node")).persist()
-
-    // Degree-join once; persist so every round reuses the hash(src)
-    // partitioning instead of re-shuffling the edge table.
-    val ed = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-      .persist()
-
-    var ranks = n.select(col("node"), lit(1000000L).as("r"))
-    for (_ <- 1 to iters) {
-      ranks = Packing.pinExchange(round(ed, ranks, n))
-    }
-    ed.unpersist()
-    if (iters > 0) n.unpersist()
-    ranks.select(col("node"), col("r").as("rank_micro"))
-  }
+      nodes: DataFrame, nodeCol: String, iters: Int): DataFrame =
+    pagerankKeyed(
+      edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst")), "src", "dst",
+      nodes.select(col(nodeCol).cast("long").as("node")), "node", iters)
 
   /** Exact per-node triangle counts via degree orientation — the
     * "forward" algorithm (Schank & Wagner 2005; the shape Cohen's
@@ -317,8 +298,18 @@ object Graph {
       nodes: DataFrame, nodeCol: String, iters: Int): DataFrame = {
     require(iters >= 0 && iters <= 1000, s"iters must be in [0,1000], got $iters")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    // node universe persisted across rounds — see [[pagerank]]
-    val n = nodes.select(col(nodeCol).as("node")).persist()
+    // persist the node universe when rounds will read it: every round's
+    // universe-restore join (and the rank init) re-evaluated the
+    // caller's node PLAN — one scan per round for a frame that never
+    // changes (opt guide §1.2). |V| rows, bounded; released after the
+    // last round (safe: each round's result is eagerly pinned, nothing
+    // lazy reads n). With no rounds the returned plan reads n itself,
+    // so it stays unpersisted — a cache entry nothing would free.
+    val universe = nodes.select(col(nodeCol).as("node"))
+    val n = if (iters > 0) universe.persist() else universe
+
+    // Degree-join once; persist so every round reuses the hash(src)
+    // partitioning instead of re-shuffling the edge table.
     val ed = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
       .persist()
     var ranks = n.select(col("node"), lit(1000000L).as("r"))

@@ -108,7 +108,7 @@ object Reagg {
         expr("(pair_n * _n * 1000000) div (_ca * _cb)").as("lift_micro"))
     // freeze the three consumers' shared input, then release the cache:
     // the returned plan must not depend on unpersisted blocks
-    val frozen = out.localCheckpoint(true)
+    val frozen = Packing.pinExchange(out)
     sets.unpersist(blocking = false)
     frozen
   }
@@ -196,11 +196,10 @@ object Reagg {
     // three saved corpus scans; blocks are reclaimed by the
     // ContextCleaner when the returned frame is dropped, the
     // pinExchange discipline)
-    val base = df.groupBy(col(key)).agg(
+    val base = Packing.pinExchange(df.groupBy(col(key)).agg(
       max(col(dateCol)).as("last_date"),
       count(lit(1)).as("frequency"),
-      sum(amountCents).as("monetary_cents"))
-      .localCheckpoint(true)
+      sum(amountCents).as("monetary_cents")))
     def score(order: Seq[Column], name: String) =
       Packing.ntileOrdered(base, order, k, numPartitions)
         .select(col(key), col("bucket").as(name))

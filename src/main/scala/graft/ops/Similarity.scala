@@ -547,22 +547,10 @@ object Similarity {
     * corpus. A 100 TB ingest loop is: append batches cheaply, run the
     * census, re-train + rebuild only when it says so. */
   def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      newVecs: DataFrame, id: String, vec: String, path: String): DataFrame =
-    appendToIvfIndexWith(spark, newVecs, id, vec, path,
+      newVecs: DataFrame, id: String, vec: String, path: String): DataFrame = {
+    val rows = appendToIvfIndexRows(newVecs, id, vec, path,
       spark.read.parquet(s"$path/centroids"))
-
-  /** [[appendToIvfIndex]] with the centroid table INJECTED — the form a
-    * maintain loop that already holds the centroids (it trained them, or
-    * read them once) uses, so each appended batch skips the per-batch
-    * centroids-parquet read job. The caller is responsible for passing
-    * centroids that match `$path/centroids` (the streaming loop
-    * invalidates its cached copy on retrain). */
-  def appendToIvfIndexWith(spark: org.apache.spark.sql.SparkSession,
-      newVecs: DataFrame, id: String, vec: String, path: String,
-      cents: DataFrame): DataFrame = {
-    val rows = appendToIvfIndexRows(newVecs, id, vec, path, cents)
-    spark.createDataFrame(
-      java.util.Arrays.asList(rows: _*), batchStatsSchema)
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), batchStatsSchema)
   }
 
   private val batchStatsSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -573,13 +561,19 @@ object Similarity {
     org.apache.spark.sql.types.StructField("sum_sim_micro",
       org.apache.spark.sql.types.LongType)))
 
-  /** [[appendToIvfIndexWith]] returning the batch's per-list stat rows
-    * DIRECTLY (cent_id, n, sum_sim_micro) — the streaming maintain
-    * loop's form: it feeds the rows to the admission-fit guard and the
-    * running-census fold without wrapping them in a local relation
-    * only to collect them straight back out (one job per batch in the
-    * r16 JobProf rollup). The stats-table append still writes from the
-    * local relation (source of truth unchanged). */
+  /** [[appendToIvfIndex]] with the centroid table INJECTED, returning
+    * the batch's per-list stat rows DIRECTLY (cent_id, n, sum_sim_micro)
+    * — the streaming maintain loop's form. The loop already holds the
+    * centroids (it trained them, or read them once), so each appended
+    * batch skips the per-batch centroids-parquet read job; the caller is
+    * responsible for passing centroids that match `$path/centroids` (the
+    * streaming loop invalidates its cached copy on retrain). It feeds
+    * the rows to the admission-fit guard and the running-census fold
+    * without wrapping them in a local relation only to collect them
+    * straight back out (one job per batch in the r16 JobProf rollup;
+    * JobProf is retired, see BENCH_NOTES.md "Retired dev mains"). The
+    * stats-table append still writes from the local relation (source
+    * of truth unchanged). */
   private[graft] def appendToIvfIndexRows(
       newVecs: DataFrame, id: String, vec: String, path: String,
       cents: DataFrame): Array[org.apache.spark.sql.Row] =
@@ -604,8 +598,9 @@ object Similarity {
     * is IN-SAMPLE (the centroids were trained on the build corpus), so
     * even an append drawn from the same distribution shows a positive
     * generalization gap — 0.05–0.14 cosine on the random fixtures
-    * (IvfMaintProbe, tri-scale). The 0.20 default sits above that gap
-    * (same-distribution appends never fire) while a genuinely misfit
+    * (IvfMaintProbe, tri-scale; BENCH_NOTES.md "Retired dev mains"). The
+    * 0.20 default sits above that gap (same-distribution appends never
+    * fire) while a genuinely misfit
     * batch (SimilaritySpec's negated-vector case: fit goes negative,
     * drop ≈ 0.6) fires unambiguously. Callers with real corpora should
     * re-calibrate from their own first same-distribution append. All
@@ -688,8 +683,8 @@ object Similarity {
     * stat rows, already materialized by [[appendToIvfIndex]]) instead
     * of a growing stats scan plus partitioned-table read/write jobs —
     * measured 3× cheaper per batch than even the small-fixture
-    * recompute (tools/IvfCensusProbe), and O(touched + k sidecar I/O)
-    * at any history length.
+    * recompute (IvfCensusProbe; BENCH_NOTES.md "Retired dev mains"), and
+    * O(touched + k sidecar I/O) at any history length.
     * Every summary field is additive under append except max_list_n
     * (monotone — appends only grow lists, so new max = max(old,
     * touched lists' new totals)) and n_empty_lists (decremented by the
@@ -879,8 +874,9 @@ object Similarity {
     *
     * ZERO-NORM QUARANTINE: vectors with ‖v‖ = 0 (the degenerate
     * upstream-model-bug batch the census's fit trigger exists to catch
-    * — IvfMaintProbe's `degen` regime) are EXPLICITLY moved to
-    * `quarantine/` instead of re-ingested: cosine similarity to a zero
+    * — IvfMaintProbe's `degen` regime, BENCH_NOTES.md "Retired dev mains")
+    * are EXPLICITLY moved to `quarantine/` instead of re-ingested:
+    * cosine similarity to a zero
     * vector is identically 0, so a cosine IVF can neither train on nor
     * meaningfully retrieve them — rebuilding them into a list would
     * bake the upstream bug into the index geometry (they all

@@ -1079,8 +1079,9 @@ object Streams {
     * foreachBatch — the cumulative census or the per-batch
     * admission-fit guard (r14: batch fit under half the build fit; a
     * single poisoned batch dilutes out of the cumulative averages as
-    * history grows, measured in CensusMarginProbe) — the ingest
-    * RETRAINS right there (zero-norm quarantine, stats reset) and
+    * history grows, measured in CensusMarginProbe,
+    * BENCH_NOTES.md "Retired dev mains") — the ingest RETRAINS right
+    * there (zero-norm quarantine, stats reset) and
     * re-censuses — the detect → retrain → verify loop running
     * unattended in the stream, which is how a 100 TB ingest actually
     * operates. Extra columns:
@@ -1187,7 +1188,7 @@ object Streams {
       (Long, Long, Long, Long, Boolean, Boolean, Boolean, Boolean)]()
     def processLogicalBatch(batch: DataFrame, b: Long): Unit = {
       // label the loop's jobs (opt guide §1.5) so per-phase cost is
-      // attributable in the UI / JobProf
+      // attributable in the UI / `Probe jobs`
       def label(l: String): Unit =
         ss.sparkContext.setJobDescription(s"ivf-ingest b=$b: $l")
       // per-batch eager checkpoint KEPT (A/B'd: dropping it and letting
@@ -1265,7 +1266,7 @@ object Streams {
       // fit on this corpus at every measured sf; a zero/garbage batch
       // sits at ~0 — two orders of magnitude of separation, vs the
       // 0.25% margin the diluted cumulative drop left at sf0.1, probed
-      // in tools/CensusMarginProbe)
+      // in CensusMarginProbe, BENCH_NOTES.md "Retired dev mains")
       val fired = c.getAs[Boolean]("needs_retrain") ||
         (b > 0L && batchFit * 2L < c.getAs[Long]("build_fit_micro"))
       // the self-healing step: when either signal fires, retrain RIGHT

@@ -73,6 +73,17 @@ class GraphSpec extends AnyFunSuite with SparkTestBase {
     assert(run(nodes, edges, 0).values.toSet == Set(1000000L))
   }
 
+  test("iters=0 leaves no cache entry behind, long and keyed forms") {
+    import spark.implicits._
+    spark.catalog.clearCache()
+    val cache = spark.sharedState.cacheManager
+    run(nodes, edges, 0)
+    assert(cache.isEmpty, "pagerank(iters = 0) leaked its node-universe cache entry")
+    graft.ops.Graph.pagerankKeyed(Seq(("a", "b")).toDF("s", "d"), "s", "d",
+      Seq("a", "b").toDF("v"), "v", 0).collect()
+    assert(cache.isEmpty, "pagerankKeyed(iters = 0) leaked its node-universe cache entry")
+  }
+
   /** Driver-side triangle reference: brute force over canonical node
     * triples of the simple undirected graph. */
   private def refTriangles(nodes: Seq[Long],

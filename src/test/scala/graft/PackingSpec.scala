@@ -85,8 +85,8 @@ class PackingSpec extends AnyFunSuite with SparkTestBase {
     val df2 = s2.createDataFrame(df.collect().toSeq.asInstanceOf[Seq[org.apache.spark.sql.Row]].asJava, df.schema)
     val adaptive = graft.ops.Packing.assignShards(df2, "k", "w", 100L)
     // tiny input + AQE coalescing ⇒ far fewer range partitions than the
-    // session's 32 (the r16 scale-adaptive width; ConfAb measured the
-    // fixed form 1.3-2× slower across the prefix-sum family)
+    // session's 32 (the r16 scale-adaptive width; ConfAb, now `Probe ab`,
+    // measured the fixed form 1.3-2× slower across the prefix-sum family)
     assert(adaptive.rdd.getNumPartitions < 32,
       s"adaptive width did not coalesce: ${adaptive.rdd.getNumPartitions} partitions")
     val got = adaptive.select("k", "cum_w", "shard").as[(Long, Long, Long)]

@@ -165,6 +165,39 @@ class ReaggSpec extends AnyFunSuite with SparkTestBase {
         (2L, 2L, 2L, 2L, 222L), (1L, 2L, 2L, 2L, 222L)))
     }
   }
+
+  test("basketLift / rfmSegments freezes honor the reliable-checkpoint conf") {
+    val key = graft.ops.Packing.ReliableCheckpointKey
+    def ts(d: Int) = java.sql.Timestamp.valueOf(f"2024-01-0$d 00:00:00")
+    val baskets = Seq((1L, "x"), (1L, "y"), (2L, "x"), (2L, "y"), (3L, "x"),
+      (3L, "z"), (4L, "y")).toDF("bk", "it")
+    val tx = Seq((1L, ts(1), 100L), (2L, ts(2), 300L), (2L, ts(3), 300L),
+      (3L, ts(5), 400L), (4L, ts(7), 900L)).toDF("k", "d", "cents")
+    def lift() = graft.ops.Reagg.basketLift(baskets, "bk", "it", minSupport = 2)
+    def rfm() = graft.ops.Reagg.rfmSegments(tx, "k", "d", col("cents"), k = 2)
+    // the checkpointed leaves of a plan: every freeze, local or reliable
+    def frozenLeaves(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.collectLeaves().collect {
+        case lr: org.apache.spark.sql.execution.LogicalRDD if lr.rdd.isCheckpointed => lr.rdd
+      }
+    spark.conf.set(key, "false")
+    val local = (lift().collect().toSet, rfm().collect().toSet)
+    if (spark.sparkContext.getCheckpointDir.isEmpty)
+      spark.sparkContext.setCheckpointDir(
+        java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+    spark.conf.set(key, "true")
+    try {
+      val (l, r) = (lift(), rfm())
+      for ((name, df) <- Seq("basketLift" -> l, "rfmSegments" -> r)) {
+        val frozen = frozenLeaves(df)
+        assert(frozen.nonEmpty, s"$name plan has no frozen leaf")
+        assert(frozen.forall(_.getCheckpointFile.isDefined),
+          s"$name froze a frame with localCheckpoint under $key=true")
+      }
+      assert((l.collect().toSet, r.collect().toSet) == local,
+        "reliable checkpoint changed basketLift / rfmSegments rows")
+    } finally spark.conf.set(key, "false")
+  }
   test("positionAttribution: U-shape conventions n=1/2/3/5, dust documented") {
     val ts0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
     def t(s: Int) = new java.sql.Timestamp(ts0.getTime + s * 1000L)

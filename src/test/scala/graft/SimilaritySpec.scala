@@ -378,7 +378,8 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val b = e.filter(col("vec_id") % 3 === 0)
     // k = 16, the gate's configuration: the skew ratio is k-sensitive
     // (max list / MEAN list, and the mean shrinks with k) — IvfMaintProbe
-    // measured the concentrated batch at ~6.0× under k=16 vs 3.3× at k=8
+    // (BENCH_NOTES.md "Retired dev mains") measured the concentrated batch
+    // at ~6.0× under k=16 vs 3.3× at k=8
     val cents = Similarity.trainKMeans(a, "vec_id", "embedding", k = 16, iters = 2)
     def censusOf(batch: org.apache.spark.sql.DataFrame) = {
       val p = java.nio.file.Files.createTempDirectory("ivfcen").toString

@@ -146,6 +146,8 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
   test("sessionizer state width is a pure performance knob: emissions are " +
       "row-identical across statePartitions in {auto, 4, 32} (the " +
       "SwWidthProbe claim, promoted to a spec per the r10 verdict)") {
+    // SwWidthProbe is retired; its finding is in
+    // BENCH_NOTES.md "Retired dev mains"
     val dir = "/root/testdata/sf0.001"
     def canon(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
       df.collect().map(_.toSeq).toSet
