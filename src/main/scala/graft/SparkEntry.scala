@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.io.Tables
+import graft.io.{LocalFs, Tables}
 import graft.ops.{Coerce, Dedup, Layout, Merge, Multimodal, Normalize, Reagg, Similarity, TextAnalysis}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -242,6 +242,57 @@ object SparkEntry {
           bit_count(col("_ha").bitwiseXOR(col("_hb"))))
           .cast("long").as("hamming"))
       .filter(col("hamming") <= 6)
+  }
+
+  /** The planted-spectra mono Layer III fixture of `x5_decode_mp3` and
+    * `x5_decode_mp3_reservoir`: 2-4 frames whose granules plant one
+    * +1 and one −1 count1 line in two subbands (plus a big-values line
+    * through Huffman table 1 on id%4==0 docs), per-granule
+    * global_gain, CRC-16 on id%3==0 docs. Returns (stream, bitrate,
+    * decoded sample count, spectrum_exact, tones_ok): spectrum_exact
+    * pins bit-exact recovery of every planted line, tones_ok that
+    * each steady frame's top-energy analysis band is a planted one. */
+  private def mp3PlantedMono(id: Long, reservoir: Boolean)
+      : (Array[Byte], Int, Long, Boolean, Boolean) = {
+    val mpa = graft.ops.MpegAudio
+    val nGr = 2 * (2 + id % 3).toInt
+    val bv = if (id % 4 == 0) 16 else 0
+    def bands(g: Int): Seq[Int] = {
+      val sb1 = 2 + ((id + g) % 20).toInt
+      val sb2 = 23 + ((3 * id + g) % 8).toInt
+      Seq(sb1, sb2) ++
+        (if (bv > 0) Seq(((id + 2 * g) % 32).toInt / 18) else Nil)
+    }
+    val granules = (0 until nGr).map { g =>
+      val spec = new Array[Int](576)
+      val sb1 = 2 + ((id + g) % 20).toInt
+      spec(18 * sb1 + 4 + ((id + g) % 9).toInt) = 1
+      val sb2 = 23 + ((3 * id + g) % 8).toInt
+      spec(18 * sb2 + 4 + (g % 9)) = -1
+      if (bv > 0)
+        spec(((id + 2 * g) % 32).toInt) = if ((id + g) % 2 == 0) 1 else -1
+      spec
+    }
+    val gains = (0 until nGr).map(g => 198 + ((id + g) % 24).toInt)
+    val kbps = Array(160, 192, 224, 256)((id % 4).toInt)
+    val enc = mpa.encodeMp3(granules.zip(gains).map { case (l, gg) =>
+      Seq(mpa.Mp3GranSpec(l, gg, bv)) }, kbps, reservoir = reservoir,
+      withCrc = id % 3 == 0)
+    val spectra = mpa.mp3StreamSpectra(id, enc)
+    val specOk = spectra.length == nGr &&
+      spectra.zipWithIndex.forall { case (xr, g) =>
+        val gain = math.pow(2.0, (gains(g) - 210) / 4.0)
+        (0 until 576).forall(i =>
+          math.abs(xr(i) - granules(g)(i) * gain) < 1e-9)
+      }
+    val pcm = mpa.decodeMpegAudio(id, enc)
+    // frame f of the delay-trimmed PCM mixes granules 2f−1..2f+2
+    val tonesOk = mpa.audioFingerprints(pcm).drop(1).forall { case (f, fp) =>
+      val planted = (math.max(0, 2 * f - 1) to
+        math.min(nGr - 1, 2 * f + 2)).flatMap(bands).toSet
+      planted(((fp >> 15) & 31).toInt)
+    }
+    (enc, kbps, pcm.length.toLong, specOk, tonesOk)
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
@@ -856,10 +907,7 @@ object SparkEntry {
           .toDF("census_fired", "census_cleared",
             "retrain_equals_fresh_build", "quarantine_matches")
           .coalesce(1).write.mode("overwrite").parquet(s"$p/cert")
-        val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(fresh))
-        try walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(q2 => java.nio.file.Files.delete(q2))
-        finally walk.close()
+        LocalFs.deleteTree(java.nio.file.Paths.get(fresh))
       }
       val cert = s.read.parquet(s"$path/cert").collect()(0)
       val q = annRoster(e).filter(col("vec_id") % 3 =!= 0)
@@ -1813,7 +1861,8 @@ object SparkEntry {
         .map { id =>
           val w = (24 + id % 21).toInt; val h = (16 + id % 9).toInt
           Multimodal.MediaRecord(id,
-            Multimodal.encodePng(w, h, i => ((i / 7 + id) % 256).toInt),
+            Multimodal.encodePng(w, h, 8, 0,
+              Multimodal.packedSample(0, i => ((i / 7 + id) % 256).toInt)),
             "image/png", "xx")
         }
       Multimodal.decodePngStats(recs).toDF()
@@ -1973,46 +2022,10 @@ object SparkEntry {
       import s.implicits._
       kernelIds(s, dir, 150)
         .map { id =>
-          val nFrames = (2 + id % 3).toInt
-          val nGr = 2 * nFrames
-          val bv = if (id % 4 == 0) 16 else 0
-          def bands(g: Int): Seq[Int] = {
-            val sb1 = 2 + ((id + g) % 20).toInt
-            val sb2 = 23 + ((3 * id + g) % 8).toInt
-            Seq(sb1, sb2) ++
-              (if (bv > 0) Seq(((id + 2 * g) % 32).toInt / 18) else Nil)
-          }
-          val granules = (0 until nGr).map { g =>
-            val spec = new Array[Int](576)
-            val sb1 = 2 + ((id + g) % 20).toInt
-            spec(18 * sb1 + 4 + ((id + g) % 9).toInt) = 1
-            val sb2 = 23 + ((3 * id + g) % 8).toInt
-            spec(18 * sb2 + 4 + (g % 9)) = -1
-            if (bv > 0)
-              spec(((id + 2 * g) % 32).toInt) = if ((id + g) % 2 == 0) 1 else -1
-            spec
-          }
-          val gains = (0 until nGr).map(g => 198 + ((id + g) % 24).toInt)
-          val kbps = Array(160, 192, 224, 256)((id % 4).toInt)
-          val enc = graft.ops.MpegAudio.encodeMp3(granules, gains, kbps,
-            bigValuesPairs = bv, withCrc = id % 3 == 0)
-          val frames = graft.ops.MpegAudio.walkFrames(id, enc)
-          val spectra = graft.ops.MpegAudio.mp3StreamSpectra(id, enc)
-          val specOk = spectra.length == nGr &&
-            spectra.zipWithIndex.forall { case (xr, g) =>
-              val gain = math.pow(2.0, (gains(g) - 210) / 4.0)
-              (0 until 576).forall(i =>
-                math.abs(xr(i) - granules(g)(i) * gain) < 1e-9)
-            }
-          val pcm = graft.ops.MpegAudio.decodeMpegAudio(id, enc)
-          // frame f of the delay-trimmed PCM mixes granules 2f−1..2f+2
-          val tonesOk = graft.ops.MpegAudio.audioFingerprints(pcm)
-            .drop(1).forall { case (f, fp) =>
-              val planted = (math.max(0, 2 * f - 1) to
-                math.min(nGr - 1, 2 * f + 2)).flatMap(bands).toSet
-              planted(((fp >> 15) & 31).toInt)
-            }
-          (id, frames.length, kbps, 48000, pcm.length.toLong, specOk, tonesOk)
+          val (enc, kbps, nSamples, specOk, tonesOk) =
+            mp3PlantedMono(id, reservoir = false)
+          (id, graft.ops.MpegAudio.walkFrames(id, enc).length, kbps, 48000,
+            nSamples, specOk, tonesOk)
         }
         .toDF("doc_id", "n_frames", "bitrate_kbps", "sample_rate",
           "n_samples", "spectrum_exact", "tones_ok")
@@ -2021,7 +2034,7 @@ object SparkEntry {
 
     // X5 — MPEG-1 Layer III BIT RESERVOIR (the r9 top missing item
     // closed): the same planted-spectra fixtures packed DENSELY across
-    // frame regions via encodeMp3Reservoir, so every tail frame's
+    // frame regions via encodeMp3(reservoir = true), so every tail frame's
     // main_data_begin back-pointer is nonzero (the census column the
     // oracle replays: n_reservoir_frames = n_frames − 1) — the regime
     // nearly all real-world MP3 encoders emit. The decoder tracks the
@@ -2034,46 +2047,10 @@ object SparkEntry {
       import s.implicits._
       kernelIds(s, dir, 150)
         .map { id =>
-          val nFrames = (2 + id % 3).toInt
-          val nGr = 2 * nFrames
-          val bv = if (id % 4 == 0) 16 else 0
-          def bands(g: Int): Seq[Int] = {
-            val sb1 = 2 + ((id + g) % 20).toInt
-            val sb2 = 23 + ((3 * id + g) % 8).toInt
-            Seq(sb1, sb2) ++
-              (if (bv > 0) Seq(((id + 2 * g) % 32).toInt / 18) else Nil)
-          }
-          val granules = (0 until nGr).map { g =>
-            val spec = new Array[Int](576)
-            val sb1 = 2 + ((id + g) % 20).toInt
-            spec(18 * sb1 + 4 + ((id + g) % 9).toInt) = 1
-            val sb2 = 23 + ((3 * id + g) % 8).toInt
-            spec(18 * sb2 + 4 + (g % 9)) = -1
-            if (bv > 0)
-              spec(((id + 2 * g) % 32).toInt) = if ((id + g) % 2 == 0) 1 else -1
-            spec
-          }
-          val gains = (0 until nGr).map(g => 198 + ((id + g) % 24).toInt)
-          val kbps = Array(160, 192, 224, 256)((id % 4).toInt)
-          val enc = graft.ops.MpegAudio.encodeMp3Reservoir(granules, gains,
-            kbps, bigValuesPairs = bv, withCrc = id % 3 == 0)
+          val (enc, kbps, nSamples, specOk, tonesOk) =
+            mp3PlantedMono(id, reservoir = true)
           val census = graft.ops.MpegAudio.mp3ReservoirCensus(id, enc)
-          val nRes = census.count(_._2 > 0)
-          val spectra = graft.ops.MpegAudio.mp3StreamSpectra(id, enc)
-          val specOk = spectra.length == nGr &&
-            spectra.zipWithIndex.forall { case (xr, g) =>
-              val gain = math.pow(2.0, (gains(g) - 210) / 4.0)
-              (0 until 576).forall(i =>
-                math.abs(xr(i) - granules(g)(i) * gain) < 1e-9)
-            }
-          val pcm = graft.ops.MpegAudio.decodeMpegAudio(id, enc)
-          val tonesOk = graft.ops.MpegAudio.audioFingerprints(pcm)
-            .drop(1).forall { case (f, fp) =>
-              val planted = (math.max(0, 2 * f - 1) to
-                math.min(nGr - 1, 2 * f + 2)).flatMap(bands).toSet
-              planted(((fp >> 15) & 31).toInt)
-            }
-          (id, census.length, nRes, kbps, 48000, pcm.length.toLong,
+          (id, census.length, census.count(_._2 > 0), kbps, 48000, nSamples,
             specOk, tonesOk)
         }
         .toDF("doc_id", "n_frames", "n_reservoir_frames", "bitrate_kbps",
@@ -2122,9 +2099,12 @@ object SparkEntry {
           val gains = (0 until nGr).map(g =>
             (198 + ((id + g) % 24).toInt, 196 + ((2 * id + g) % 20).toInt))
           val kbps = Array(192, 224, 256, 320)((id % 4).toInt)
-          val enc = graft.ops.MpegAudio.encodeMp3Stereo(granules, gains,
-            kbps, bigValuesPairs = bv, msStereo = ms, reservoir = resv,
-            withCrc = id % 3 == 1)
+          val enc = graft.ops.MpegAudio.encodeMp3(
+            granules.zip(gains).map { case ((c0, c1), (g0, g1)) =>
+              Seq(graft.ops.MpegAudio.Mp3GranSpec(c0, g0, bv),
+                graft.ops.MpegAudio.Mp3GranSpec(c1, g1, bv)) },
+            kbps, mode = if (ms) 1 else 0, modeExt = if (ms) 2 else 0,
+            reservoir = resv, withCrc = id % 3 == 1)
           val census = graft.ops.MpegAudio.mp3ChannelModeCensus(id, enc)
           val nMs = census.count(c => c._2 == 1 && (c._3 & 2) != 0)
           val nRes = census.count(_._4 > 0)
@@ -2223,7 +2203,7 @@ object SparkEntry {
             }
           }
           val kbps = Array(192, 224, 256, 320)((id % 4).toInt)
-          val enc = mpa.encodeMp3Advanced(specs, kbps, withCrc = id % 3 == 0)
+          val enc = mpa.encodeMp3(specs.map(Seq(_)), kbps, withCrc = id % 3 == 0)
           val spectra = mpa.mp3StreamSpectra(id, enc)
           val specOk = spectra.length == nGr &&
             spectra.zipWithIndex.forall { case (xr, g) =>
@@ -2291,8 +2271,9 @@ object SparkEntry {
           }
           val kbps = Array(224, 256, 320, 320)((id % 4).toInt)
           val alsoMs = id % 2 == 0
-          val enc = mpa.encodeMp3IntensityStereo(grans, kbps,
-            alsoMs = alsoMs, withCrc = id % 3 == 1)
+          val enc = mpa.encodeMp3(
+            grans.map { case (l, p) => mpa.mp3IntensityGranule(l, p) }, kbps,
+            mode = 1, modeExt = if (alsoMs) 3 else 1, withCrc = id % 3 == 1)
           val census = mpa.mp3ChannelModeCensus(id, enc)
           val nIntensity = census.count(c => c._2 == 1 && (c._3 & 1) != 0)
           val spectra = mpa.mp3StreamSpectraStereo(id, enc)
@@ -2369,8 +2350,8 @@ object SparkEntry {
                 blockType = 2, scalefacCompress = 13, sfShort = sfS))
           }
           val alsoMs = id % 2 == 0
-          val enc = mpa.encodeMp3StereoAdvanced(grans, 320,
-            modeExt = if (alsoMs) 3 else 1, withCrc = id % 3 == 1)
+          val enc = mpa.encodeMp3(grans.map { case (l, r) => Seq(l, r) }, 320,
+            mode = 1, modeExt = if (alsoMs) 3 else 1, withCrc = id % 3 == 1)
           val census = mpa.mp3ChannelModeCensus(id, enc)
           val nIntensity = census.count(c => c._2 == 1 && (c._3 & 1) != 0)
           val spectra = mpa.mp3StreamSpectraStereo(id, enc)
@@ -2432,7 +2413,8 @@ object SparkEntry {
             lines
           }
           val gains = (0 until 2 * nFrames).map(g => 204 + ((id + g) % 10).toInt)
-          val audio = mpa.encodeMp3(grans, gains, 160)
+          val audio = mpa.encodeMp3(grans.zip(gains).map { case (l, gg) =>
+            Seq(mpa.Mp3GranSpec(l, gg)) }, 160)
           // majors cycle 2/3/4/4(footer); v2.2 only lands on even ids
           // (no TALB there — its v2.2 id would be TAL). unsync on the
           // id%5==0 docs in each major's OWN scheme: tag-level
@@ -2528,9 +2510,8 @@ object SparkEntry {
                 lines((25 + (id + g) % 50).toInt) = 1
                 lines
               }
-              val audio = mpa.encodeMp3(grans,
-                (0 until 2 * nFrames).map(g => 206 + ((id + g) % 8).toInt),
-                160)
+              val audio = mpa.encodeMp3(grans.zipWithIndex.map { case (l, g) =>
+                Seq(mpa.Mp3GranSpec(l, 206 + ((id + g) % 8).toInt)) }, 160)
               val v2 = graft.ops.Id3.encodeId3v2(
                 Seq("TIT2" -> title, "TPE1" -> artist),
                 major = if ((id / 3) % 2 == 0) 3 else 4,
@@ -2724,11 +2705,11 @@ object SparkEntry {
           // the transparency path too.
           val lace = id % 2 == 1
           val trns = Array.tabulate(10)(c =>
-            ((c * 16 + id % 16) % 256).toInt)
+            ((c * 16 + id % 16) % 256).toByte)
           def enc(ct: Int, pix: Int => Int, p: Array[Int],
-              t: Array[Int]) =
-            if (lace) Multimodal.encodePngAdam7(w, h, ct, pix, p, t)
-            else Multimodal.encodePngColor(w, h, ct, pix, p, t)
+              t: Array[Byte]) =
+            Multimodal.encodePng(w, h, 8, ct, Multimodal.packedSample(ct, pix),
+              p, t, interlaced = lace)
           val png = m match {
             case 0 => enc(2,
               i => (r(i) << 16) | (g(i) << 8) | b(i), null, null)
@@ -2775,7 +2756,7 @@ object SparkEntry {
           def sample(i: Int, c: Int): Int =
             (i * (3 + 2 * c) + 7 * c + dep) % lim
           val lace = id % 2 == 1
-          val png = Multimodal.encodePngEx(w, h, dep, ct, sample, pal,
+          val png = Multimodal.encodePng(w, h, dep, ct, sample, pal,
             null, lace)
           val (dw, dh, px, _) = Multimodal.decodePngRgb(id, png)
           var rs = 0L; var gs = 0L; var bs = 0L; var as = 0L
@@ -2863,7 +2844,8 @@ object SparkEntry {
           def idx(i: Int) = ((i * 3 + id) % 16).toInt
           // odd docs ship the GIF interlaced (r14): the 4-pass decode
           // must land on the identical RGB/luma
-          val png = Multimodal.encodePngColor(w, h, 3, idx, palette = pal)
+          val png = Multimodal.encodePng(w, h, 8, 3,
+            Multimodal.packedSample(3, idx), pal)
           val gif = Multimodal.encodeGifPalette(w, h, 4, idx, pal,
             interlaced = id % 2 == 1)
           val (pw, ph, prgb, _) = Multimodal.decodePngRgb(id, png)
@@ -2955,7 +2937,8 @@ object SparkEntry {
                   attrForm = (id / 4) % 2 == 0))))
             case 2 =>
               Multimodal.insertPngText(
-                Multimodal.encodePng(w, h, i => ((i * 3 + id) % 256).toInt),
+                Multimodal.encodePng(w, h, 8, 0,
+                  Multimodal.packedSample(0, i => ((i * 3 + id) % 256).toInt)),
                 Seq("Title" -> title, "Author" -> author))
             case _ =>
               Multimodal.insertGifComment(
@@ -3099,7 +3082,7 @@ object SparkEntry {
           val (sw, sh, stored) =
             ex.applyOrientation(w, h, upright, ex.inverseOrientation(o))
           val png = Multimodal.insertPngExif(
-            Multimodal.encodePng(sw, sh, stored(_)),
+            Multimodal.encodePng(sw, sh, 8, 0, Multimodal.packedSample(0, stored(_))),
             ex.encodeExifTiff(ex.ExifMeta(bigEndian = id % 2 == 0,
               orientation = Some(o), model = Some(s"gc-${id % 3}"))))
           val meta = Multimodal.readPngExif(id, png).get
@@ -3152,7 +3135,7 @@ object SparkEntry {
               scalefacScale = (id + g) % 2 == 0)
           }
           val kbps = Array(192, 224, 256, 320)((id % 4).toInt)
-          val enc = mpa.encodeMp3Advanced(specs, kbps, withCrc = id % 3 == 2)
+          val enc = mpa.encodeMp3(specs.map(Seq(_)), kbps, withCrc = id % 3 == 2)
           val spectra = mpa.mp3StreamSpectra(id, enc)
           val specOk = spectra.length == nGr &&
             spectra.zipWithIndex.forall { case (xr, g) =>
@@ -3227,7 +3210,7 @@ object SparkEntry {
               preflag = (id + g) % 3 == 0)
           }
           val kbps = Array(192, 224, 256, 320)((id % 4).toInt)
-          val enc = mpa.encodeMp3Advanced(specs, kbps,
+          val enc = mpa.encodeMp3(specs.map(Seq(_)), kbps,
             withCrc = id % 2 == 1, scfsi = scfsi)
           val pretab = mpa.mp3PretabValues
           val spectra = mpa.mp3StreamSpectra(id, enc)
@@ -3269,27 +3252,26 @@ object SparkEntry {
           }
           val gains = (0 until nGr).map(g => 200 + ((id + g) % 20).toInt)
           val kbps = Array(160, 192, 224, 256)((id % 4).toInt)
+          val mpa = graft.ops.MpegAudio
+          val mono = (0 until nGr).map(g =>
+            Seq(mpa.Mp3GranSpec(granules(g), gains(g))))
           val enc = fam match {
-            case 0 =>
-              graft.ops.MpegAudio.encodeMp3(granules, gains, kbps)
+            case 0 => mpa.encodeMp3(mono, kbps)
             case 2 =>
               // SHORT-BLOCK mono (round 12): the transient regime most
               // real encoder output occupies — was outside the census
               // corpus while window switching was a named boundary
-              graft.ops.MpegAudio.encodeMp3Advanced(
-                (0 until nGr).map(g => graft.ops.MpegAudio.Mp3GranSpec(
+              mpa.encodeMp3(
+                (0 until nGr).map(g => Seq(mpa.Mp3GranSpec(
                   lines = granules(g), globalGain = gains(g),
                   blockType = 2,
-                  subblockGain = Array(g % 3, (g + 1) % 3, (g + 2) % 3))),
+                  subblockGain = Array(g % 3, (g + 1) % 3, (g + 2) % 3)))),
                 kbps)
-            case 1 | 3 =>
-              graft.ops.MpegAudio.encodeMp3Reservoir(granules, gains, kbps)
+            case 1 | 3 => mpa.encodeMp3(mono, kbps, reservoir = true)
             case _ =>
-              val st = graft.ops.MpegAudio.encodeMp3Stereo(
-                (0 until nGr).map(g =>
-                  (granules(g), granules((g + 1) % nGr))),
-                (0 until nGr).map(g => (gains(g), gains((g + 1) % nGr))),
-                kbps, msStereo = true, reservoir = true)
+              val st = mpa.encodeMp3(
+                (0 until nGr).map(g => mono(g) ++ mono((g + 1) % nGr)),
+                kbps, mode = 1, modeExt = 2, reservoir = true)
               // patch mode_extension 2 → 3 on every header: the
               // MS+intensity regime a crawl contains — refused by name
               // through round 11, DECODED since round 12
@@ -3817,7 +3799,7 @@ object SparkEntry {
             Multimodal.averageHashJpeg(4 * id + 1,
               Multimodal.encodeJpeg(w, h, pix)),
             Multimodal.averageHashPng(4 * id + 2,
-              Multimodal.encodePng(w, h, pix)),
+              Multimodal.encodePng(w, h, 8, 0, Multimodal.packedSample(0, pix))),
             Multimodal.averageHashGif(4 * id + 3,
               Multimodal.encodeGif(w, h, 8, pix)))
         }.toDF()
@@ -3905,7 +3887,7 @@ object SparkEntry {
             val bx = (i % w) / 8; val by = (i / w) / 8
             math.floorMod(mix(id * 64 + by * 8 + bx + 777), 256).toInt
           }
-          val png = Multimodal.encodePng(w, h, pix)
+          val png = Multimodal.encodePng(w, h, 8, 0, Multimodal.packedSample(0, pix))
           val jpg = Multimodal.encodeJpeg(w, h, pix,
             Multimodal.uniformQuantTable(24))
           val differ = !java.util.Arrays.equals(
@@ -4101,7 +4083,7 @@ object SparkEntry {
             ((id * 43 + bx * 19 + by * 77) % 256).toInt
           }
           val payload = (id % 10).toInt match {
-            case 0 => Multimodal.encodePng(w, h, pix)
+            case 0 => Multimodal.encodePng(w, h, 8, 0, Multimodal.packedSample(0, pix))
             case 1 => Multimodal.encodeGif(w, h, 8, pix)
             case 2 => Multimodal.encodeJpeg(w, h, pix)
             case 3 => Multimodal.encodePgm(w, h, 255, pix)
@@ -7757,12 +7739,8 @@ object SparkEntry {
       // sessions: drop the table AND its leftover location first
       Seq("graft_bkt_lineitem", "graft_bkt_orders").foreach { t =>
         s.sql(s"DROP TABLE IF EXISTS $t")
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) f.listFiles.foreach(rm)
-          f.delete(); ()
-        }
-        rm(new java.io.File(
-          s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:") + "/" + t))
+        LocalFs.deleteTree(java.nio.file.Paths.get(
+          s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t))
       }
       val l = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_extendedprice"))
       val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderstatus"))

@@ -6,7 +6,8 @@ import org.apache.spark.sql.SparkSession
   * file-landing pipeline needs (each streaming micro-batch / upsert merge
   * writes files; scans degrade as file count grows). Rewrites a parquet
   * dataset into ~`targetBytes` files via a round-robin repartition, with
-  * the same staging-rename pattern as [[JdbcUpsert.mergeIntoParquet]].
+  * the same staged swap as [[JdbcUpsert.mergeIntoParquet]]
+  * ([[LocalFs.swapIn]]).
   *
   * At cluster scale, prefer a table format (Iceberg/Delta) whose compaction
   * is transactional; this is the plain-parquet form for the harness. */
@@ -20,13 +21,7 @@ object Compact {
     val df = spark.read.parquet(path).repartition(nFiles)
     val staging = path + "_compact_staging"
     df.write.mode("overwrite").parquet(staging)
-    val old = new java.io.File(path + "_old")
-    dir.renameTo(old)
-    new java.io.File(staging).renameTo(new java.io.File(path))
-    def rm(f: java.io.File): Unit = {
-      val c = f.listFiles(); if (c != null) c.foreach(rm); f.delete(): Unit
-    }
-    rm(old)
+    LocalFs.swapIn(staging, path)
     nFiles.toLong
   }
 }

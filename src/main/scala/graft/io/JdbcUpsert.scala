@@ -85,12 +85,6 @@ object JdbcUpsert {
     }
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
   private def bindRow(st: PreparedStatement, r: Row, width: Int): Unit = {
     var i = 0
     while (i < width) {
@@ -103,26 +97,19 @@ object JdbcUpsert {
     * a keyed Parquet dataset in place — read-modify-overwrite with the
     * same idempotent semantics. The read and the overwrite cannot stream
     * through each other, so the merge materializes to a staging path
-    * first (atomic-rename semantics are the file system's problem; on
-    * object stores use a manifest/format layer instead). */
+    * first and is swapped in by [[LocalFs.swapIn]] (atomic-rename
+    * semantics are the file system's problem; on object stores use a
+    * manifest/format layer instead). */
   def mergeIntoParquet(spark: org.apache.spark.sql.SparkSession, path: String,
       incoming: DataFrame, keys: Seq[String], recency: Seq[String],
       tieBreak: Seq[String] = Nil): Unit = {
     import graft.ops.Merge
-    val exists = new java.io.File(path).exists()
-    val merged = if (exists) {
+    LocalFs.recoverSwap(path)
+    val merged = if (new java.io.File(path).exists()) {
       Merge.upsertLwwAgg(spark.read.parquet(path), incoming, keys, recency, tieBreak)
     } else incoming
     val staging = path + "_staging"
     merged.write.mode("overwrite").parquet(staging)
-    val target = new java.io.File(path)
-    if (exists) {
-      val old = new java.io.File(path + "_old")
-      target.renameTo(old)
-      new java.io.File(staging).renameTo(target)
-      deleteRecursively(old)
-    } else {
-      new java.io.File(staging).renameTo(target)
-    }
+    LocalFs.swapIn(staging, path)
   }
 }

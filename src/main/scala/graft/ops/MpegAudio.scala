@@ -979,16 +979,15 @@ object MpegAudio {
   // {−1,0,1}, amplitude via global_gain/scalefactors), not
   // rate-controlled production encoders — they exist so every decode
   // path above is exercised by formula-replayable streams and
-  // round-trips bit-exactly ([[encodeMp3]] packs main data frame-
-  // locally, main_data_begin = 0; [[encodeMp3Reservoir]] packs the
-  // main-data stream densely across frames so every tail frame
-  // carries a nonzero back-pointer, up to the 9-bit 511 cap with
-  // spec-legal stuffing past it; [[encodeMp3Advanced]] drives the
-  // round-12 grammar — block types, scalefactors, subblock gains,
-  // preflag, scalefac_scale; [[encodeMp3IntensityStereo]] plants
-  // per-band intensity positions; [[encodeMp3StereoAdvanced]] writes
-  // arbitrary granule PAIRS with an explicit mode_extension — the
-  // intensity-on-short fixture surface).
+  // round-trips bit-exactly. One writer, [[encodeMp3]], covers the
+  // whole surface: mono or stereo with any mode_extension, the
+  // round-12 grammar (block types, scalefactors, subblock gains,
+  // preflag, scalefac_scale, scfsi), frame-local main data
+  // (main_data_begin = 0) or the reservoir, which packs the main-data
+  // stream densely across frames so every tail frame carries a
+  // nonzero back-pointer, up to the 9-bit 511 cap with spec-legal
+  // stuffing past it; [[mp3IntensityGranule]] plants per-band
+  // intensity positions.
   // ------------------------------------------------------------------
 
   /** scalefac_compress → (slen1, slen2), ISO table. slen1 covers sfb
@@ -1747,26 +1746,6 @@ object MpegAudio {
       (fi.frame_id, br.read(9))
     }
 
-  /** Encode per-granule spectra (values in {−1, 0, 1}, 576 lines each,
-    * an even number of granules) as a reservoir-free mono MPEG-1
-    * Layer III stream at 48 kHz. The first `bigValuesPairs` pairs ride
-    * the big-values region through Huffman table 1; everything from
-    * line 2·bigValuesPairs to the last nonzero line rides the count1
-    * region through table B. Amplitude is per-granule `globalGains`
-    * (sample scale 2^((gg−210)/4)). */
-  private def mp3ValidateArgs(granules: Seq[Array[Int]],
-      globalGains: Seq[Int], bigValuesPairs: Int): Unit = {
-    require(granules.nonEmpty && granules.length % 2 == 0,
-      "mp3: an even number of granules (2 per frame)")
-    require(granules.length == globalGains.length, "mp3: one gain per granule")
-    require(bigValuesPairs >= 0 && bigValuesPairs * 2 <= 576, "mp3: bad big_values")
-    granules.foreach { g =>
-      require(g.length == 576 && g.forall(v => v >= -1 && v <= 1),
-        "mp3: granule must be 576 lines in {-1,0,1}")
-    }
-    globalGains.foreach(gg => require(gg >= 0 && gg < 256, "mp3: gain is 8 bits"))
-  }
-
   /** Per-granule Huffman cost in bits (big-values table 1 + count1 B). */
   private def mp3GranuleBits(g: Array[Int], bigValuesPairs: Int): Int = {
     var bits = 0
@@ -1787,8 +1766,6 @@ object MpegAudio {
     bits
   }
 
-  /** One channel-granule's 59-bit side-info block (encoder twin of
-    * [[readMp3GranuleInfo]]). */
   /** Full fixture-grammar channel-granule (round 12): spectrum lines
     * in {−1,0,1} (for short blocks, in the DECODED/Huffman order —
     * [[mp3ShortOrderMap]] gives the natural-order positions), plus
@@ -1855,7 +1832,7 @@ object MpegAudio {
 
   /** Scalefactor (part2) bit count for a granule spec; `scfsi` (second
     * granule only) zeroes the shared groups' bits. */
-  private def mp3Part2Bits(g: Mp3GranSpec, scfsi: Int = 0): Int = {
+  private def mp3Part2Bits(g: Mp3GranSpec, scfsi: Int): Int = {
     val (s1, s2) = Mp3Slen(g.scalefacCompress)
     if (g.blockType == 2 && g.mixedBlock) 17 * s1 + 18 * s2
     else if (g.blockType == 2) 18 * s1 + 18 * s2
@@ -1872,7 +1849,7 @@ object MpegAudio {
   }
 
   private def mp3WriteScalefacs(bw: BitWriter, g: Mp3GranSpec,
-      scfsi: Int = 0): Unit = {
+      scfsi: Int): Unit = {
     val (s1, s2) = Mp3Slen(g.scalefacCompress)
     if (g.blockType == 2 && g.mixedBlock) {
       var i = 0
@@ -1923,42 +1900,6 @@ object MpegAudio {
     bw.put(if (g.preflag) 1 else 0, 1)
     bw.put(if (g.scalefacScale) 1 else 0, 1)
     bw.put(1, 1) // count1table_select = B
-  }
-
-  private def mp3WriteGranuleSide(bw: BitWriter, p23: Int, gg: Int,
-      bigValuesPairs: Int): Unit = {
-    bw.put(p23, 12)         // part2_3_length
-    bw.put(bigValuesPairs, 9)
-    bw.put(gg, 8)           // global_gain
-    bw.put(0, 4)            // scalefac_compress
-    bw.put(0, 1)            // window_switching_flag
-    val tbl = if (bigValuesPairs > 0) 1 else 0
-    bw.put(tbl, 5); bw.put(tbl, 5); bw.put(tbl, 5) // table_select
-    bw.put(0, 4); bw.put(0, 3) // region0/region1 (tables equal)
-    bw.put(0, 1); bw.put(0, 1) // preflag, scalefac_scale
-    bw.put(1, 1)            // count1table_select = B
-  }
-
-  /** Side info (136 bits, mono): main_data_begin + the two granules'
-    * fixed-layout fields. */
-  private def mp3WriteSideInfo(bw: BitWriter, mainDataBegin: Int,
-      grs: Seq[(Int, Int)], bigValuesPairs: Int): Unit = {
-    bw.put(mainDataBegin, 9); bw.put(0, 5); bw.put(0, 4) // mdb/private/scfsi
-    grs.foreach { case (p23, gg) =>
-      mp3WriteGranuleSide(bw, p23, gg, bigValuesPairs)
-    }
-  }
-
-  /** Side info (256 bits, stereo §2.4.1.7): main_data_begin, 3 private
-    * bits, scfsi per channel, then [granule][channel] blocks. `grs` is
-    * [granule][channel] of (part2_3_length, global_gain). */
-  private def mp3WriteSideInfoStereo(bw: BitWriter, mainDataBegin: Int,
-      grs: Seq[Seq[(Int, Int)]], bigValuesPairs: Int): Unit = {
-    bw.put(mainDataBegin, 9); bw.put(0, 3) // mdb / private_bits
-    bw.put(0, 4); bw.put(0, 4)             // scfsi ch0 / ch1
-    grs.foreach(_.foreach { case (p23, gg) =>
-      mp3WriteGranuleSide(bw, p23, gg, bigValuesPairs)
-    })
   }
 
   /** Dense reservoir placement (§2.4.2.7): where frame n's main data
@@ -2037,315 +1978,116 @@ object MpegAudio {
     java.util.Arrays.copyOf(frame.toByteArray, frameBytes)
   }
 
-  def encodeMp3(granules: Seq[Array[Int]], globalGains: Seq[Int],
-      bitrateKbps: Int, bigValuesPairs: Int = 0,
-      withCrc: Boolean = false): Array[Byte] = {
-    mp3ValidateArgs(granules, globalGains, bigValuesPairs)
-    val fs = Mp2Rate
-    val frameBytes = 144 * bitrateKbps * 1000 / fs
-    val out = new java.io.ByteArrayOutputStream()
-    (granules.grouped(2).toSeq zip globalGains.grouped(2).toSeq).foreach {
-      case (Seq(g0, g1), Seq(gg0, gg1)) =>
-        val p23 = Array(mp3GranuleBits(g0, bigValuesPairs),
-          mp3GranuleBits(g1, bigValuesPairs))
-        require(p23.forall(_ < 4096), "mp3: part2_3_length overflows 12 bits")
-        val budget = (frameBytes - 4 - (if (withCrc) 2 else 0) - 17) * 8
-        require(p23.sum <= budget,
-          s"mp3: main data ${p23.sum} bits exceeds the $budget-bit frame budget " +
-            s"at $bitrateKbps kbps — raise the bitrate")
-        val sw = new BitWriter
-        mp3WriteSideInfo(sw, 0, Seq((p23(0), gg0), (p23(1), gg1)), bigValuesPairs)
-        val dw = new BitWriter
-        mp3WriteGranuleData(dw, g0, bigValuesPairs)
-        mp3WriteGranuleData(dw, g1, bigValuesPairs)
-        out.write(mp3AssembleFrame(bitrateKbps, withCrc, sw.toBytes,
-          dw.toBytes, frameBytes))
-      case other => throw new IllegalStateException(s"mp3: $other")
-    }
-    out.toByteArray
-  }
-
-  /** Encode per-granule spectra as a mono MPEG-1 Layer III stream that
-    * USES THE BIT RESERVOIR: the main-data stream is packed densely
-    * across frame regions (each frame's granule data starts right after
-    * the previous frame's, capped at the spec's 511-byte back-pointer
-    * with zero stuffing past the cap — §2.4.2.7's exact mechanism), so
-    * every frame after the first carries main_data_begin > 0 whenever
-    * its data is smaller than its region. Same spectral grammar as
-    * [[encodeMp3]]; decoding either stream yields identical granule
-    * spectra — the round-trip the reservoir gate pins. */
-  def encodeMp3Reservoir(granules: Seq[Array[Int]], globalGains: Seq[Int],
-      bitrateKbps: Int, bigValuesPairs: Int = 0,
-      withCrc: Boolean = false): Array[Byte] = {
-    mp3ValidateArgs(granules, globalGains, bigValuesPairs)
-    val fs = Mp2Rate
-    val frameBytes = 144 * bitrateKbps * 1000 / fs
-    val regionBytes = frameBytes - 4 - (if (withCrc) 2 else 0) - 17
-    require(regionBytes > 0, s"mp3: no main-data capacity at $bitrateKbps kbps")
-    val nFrames = granules.length / 2
-    // pass 1: per-frame granule data blocks + bit costs
-    val frames = (0 until nFrames).map { n =>
-      val (g0, g1) = (granules(2 * n), granules(2 * n + 1))
-      val p23 = Array(mp3GranuleBits(g0, bigValuesPairs),
-        mp3GranuleBits(g1, bigValuesPairs))
-      require(p23.forall(_ < 4096), "mp3: part2_3_length overflows 12 bits")
-      val dw = new BitWriter
-      mp3WriteGranuleData(dw, g0, bigValuesPairs)
-      mp3WriteGranuleData(dw, g1, bigValuesPairs)
-      (p23, dw.toBytes)
-    }
-    // pass 2: placement — see [[reservoirStarts]]
-    val starts = reservoirStarts(frames.map(_._2.length), regionBytes)
-    // pass 3: lay the main-data stream into one buffer (gaps created by
-    // the 511 cap stay zero — spec-legal stuffing the decoder never
-    // addresses), then slice per-frame regions
-    val stream = new Array[Byte](nFrames * regionBytes)
-    for (n <- 0 until nFrames)
-      System.arraycopy(frames(n)._2, 0, stream, starts(n).toInt,
-        frames(n)._2.length)
-    val out = new java.io.ByteArrayOutputStream()
-    for (n <- 0 until nFrames) {
-      val pN = n * regionBytes
-      val mdb = (pN - starts(n)).toInt
-      val sw = new BitWriter
-      mp3WriteSideInfo(sw, mdb,
-        Seq((frames(n)._1(0), globalGains(2 * n)),
-          (frames(n)._1(1), globalGains(2 * n + 1))), bigValuesPairs)
-      val region = java.util.Arrays.copyOfRange(stream, pN, pN + regionBytes)
-      out.write(mp3AssembleFrame(bitrateKbps, withCrc, sw.toBytes,
-        region, frameBytes))
-    }
-    out.toByteArray
-  }
-
-  /** Encode per-granule STEREO spectra as an MPEG-1 Layer III stream at
-    * 48 kHz — the fixture generator for the stereo decode paths, same
-    * spectral grammar as [[encodeMp3]]. Each granule carries two
-    * channel spectra (lines in {−1,0,1}) and two global gains; the
-    * channels are written in the ISO [granule][channel] order into one
-    * shared main-data stream. With `msStereo` the header says joint
-    * stereo + MS mode_extension and the written spectra ARE the M/S
-    * channels (the decoder reconstructs L=(M+S)/√2, R=(M−S)/√2);
-    * without it the header says plain stereo and the channels pass
-    * through as L/R. `reservoir` packs the main-data stream densely
-    * across frames (same placement as [[encodeMp3Reservoir]]) so tail
-    * frames carry nonzero back-pointers; flat packing otherwise. */
-  def encodeMp3Stereo(granules: Seq[(Array[Int], Array[Int])],
-      globalGains: Seq[(Int, Int)], bitrateKbps: Int,
-      bigValuesPairs: Int = 0, msStereo: Boolean = true,
-      reservoir: Boolean = false, withCrc: Boolean = false): Array[Byte] = {
-    mp3ValidateArgs(granules.flatMap(g => Seq(g._1, g._2)),
-      globalGains.flatMap(g => Seq(g._1, g._2)), bigValuesPairs)
-    // mp3ValidateArgs sees the FLATTENED per-channel list (2× length, so
-    // its own even-count check is vacuous here — advisor r11): the
-    // stereo frame invariant is 2 granule PAIRS per frame, checked on
-    // the unflattened input so an odd count fails loudly instead of
-    // being truncated by nFrames = length / 2.
-    require(granules.length % 2 == 0,
-      "mp3: an even number of granules (2 per frame)")
-    require(granules.length == globalGains.length, "mp3: one gain pair per granule")
-    val fs = Mp2Rate
-    val frameBytes = 144 * bitrateKbps * 1000 / fs
-    val regionBytes = frameBytes - 4 - (if (withCrc) 2 else 0) - 32
-    require(regionBytes > 0, s"mp3: no main-data capacity at $bitrateKbps kbps")
-    val nFrames = granules.length / 2
-    // pass 1: per-frame main-data blocks (gr0ch0, gr0ch1, gr1ch0,
-    // gr1ch1) + per-channel-granule bit costs
-    val frames = (0 until nFrames).map { n =>
-      val dw = new BitWriter
-      val p23 = Array.ofDim[Int](2, 2)
-      for (g <- 0 to 1; ch <- 0 to 1) {
-        val spec = if (ch == 0) granules(2 * n + g)._1 else granules(2 * n + g)._2
-        p23(g)(ch) = mp3GranuleBits(spec, bigValuesPairs)
-        require(p23(g)(ch) < 4096, "mp3: part2_3_length overflows 12 bits")
-        mp3WriteGranuleData(dw, spec, bigValuesPairs)
-      }
-      (p23, dw.toBytes)
-    }
-    frames.zipWithIndex.foreach { case ((_, data), n) =>
-      if (!reservoir) require(data.length <= regionBytes,
-        s"mp3: frame $n main data ${data.length} B exceeds the $regionBytes-B " +
-          s"region at $bitrateKbps kbps — raise the bitrate")
-    }
-    val starts =
-      if (reservoir) reservoirStarts(frames.map(_._2.length), regionBytes)
-      else Array.tabulate(nFrames)(n => n.toLong * regionBytes)
-    val stream = new Array[Byte](nFrames * regionBytes)
-    for (n <- 0 until nFrames)
-      System.arraycopy(frames(n)._2, 0, stream, starts(n).toInt,
-        frames(n)._2.length)
-    val (mode, modeExt) = if (msStereo) (1, 2) else (0, 0)
-    val out = new java.io.ByteArrayOutputStream()
-    for (n <- 0 until nFrames) {
-      val pN = n * regionBytes
-      val mdb = (pN - starts(n)).toInt
-      val sw = new BitWriter
-      mp3WriteSideInfoStereo(sw, mdb,
-        Seq(Seq((frames(n)._1(0)(0), globalGains(2 * n)._1),
-            (frames(n)._1(0)(1), globalGains(2 * n)._2)),
-          Seq((frames(n)._1(1)(0), globalGains(2 * n + 1)._1),
-            (frames(n)._1(1)(1), globalGains(2 * n + 1)._2))),
-        bigValuesPairs)
-      val region = java.util.Arrays.copyOfRange(stream, pN, pN + regionBytes)
-      out.write(mp3AssembleFrame(bitrateKbps, withCrc, sw.toBytes,
-        region, frameBytes, mode, modeExt))
-    }
-    out.toByteArray
-  }
-
-  /** Encode full-grammar granule specs ([[Mp3GranSpec]]) as a mono
-    * Layer III stream at 48 kHz, flat packing (main_data_begin = 0) —
-    * the round-12 fixture generator whose streams exercise every
-    * decode path the round lifted: short/start/stop block types with
-    * subblock gains, nonzero scalefactors under any scalefac_compress,
-    * preflag/pretab, and scalefac_scale. part2_3_length accounts for
-    * the scalefactor bits PLUS the Huffman bits, exactly as decoded. */
-  def encodeMp3Advanced(granules: Seq[Mp3GranSpec], bitrateKbps: Int,
+  /** Encode full-grammar granule specs ([[Mp3GranSpec]]) as an MPEG-1
+    * Layer III stream at 48 kHz — the one Layer III writer, and the
+    * fixture twin of every decode path. `granules` is
+    * [granule][channel]: an even number of granules (2 per frame), each
+    * with the same 1 or 2 channels. `mode` 3 is mono; stereo streams
+    * say 0 (L/R) or 1 (joint, `modeExt` bit 1 = MS — the written
+    * spectra ARE the M/S channels — and bit 0 = intensity, whose side
+    * channel [[mp3IntensityGranule]] builds). Per frame: side info
+    * (main_data_begin, private bits, scfsi, then one
+    * [[mp3WriteGranuleSideAdv]] block per [granule][channel]), and per
+    * [granule][channel] the scalefactors plus the Huffman data;
+    * part2_3_length counts both, exactly as decoded. Flat packing
+    * starts every frame's main data at its own region
+    * (main_data_begin 0); `reservoir` packs the main-data stream
+    * densely across frames ([[reservoirStarts]]), so tail frames carry
+    * nonzero back-pointers and decode to the same spectra. `scfsi`
+    * (mono only, long blocks) shares the flagged scalefactor groups of
+    * each frame's second granule with its first. */
+  def encodeMp3(granules: Seq[Seq[Mp3GranSpec]], bitrateKbps: Int,
+      mode: Int = 3, modeExt: Int = 0, reservoir: Boolean = false,
       withCrc: Boolean = false, scfsi: Int = 0): Array[Byte] = {
     require(granules.nonEmpty && granules.length % 2 == 0,
       "mp3: an even number of granules (2 per frame)")
-    granules.foreach(mp3ValidateGranSpec)
+    val nch = granules.head.length
+    require((nch == 1 || nch == 2) && granules.forall(_.length == nch),
+      "mp3: every granule carries the same 1 or 2 channels")
+    require(mode >= 0 && mode <= 3 && (mode == 3) == (nch == 1),
+      s"mp3: mode $mode does not fit $nch channel(s)")
+    require(modeExt >= 0 && modeExt <= 3 && (mode == 1 || modeExt == 0),
+      "mp3: mode_extension is 2 bits, joint stereo only")
+    granules.foreach(_.foreach(mp3ValidateGranSpec))
     require(scfsi >= 0 && scfsi < 16, "mp3: scfsi is 4 bits")
-    if (scfsi != 0) granules.grouped(2).foreach { case Seq(g0, g1) =>
+    require(scfsi == 0 || nch == 1, "mp3: scfsi is written on mono streams only")
+    if (scfsi != 0) granules.grouped(2).foreach { fr =>
+      val (g0, g1) = (fr(0)(0), fr(1)(0))
       require(g0.blockType != 2 && g1.blockType != 2,
         "mp3: scfsi is defined on the long scalefactor layout only")
       (0 until 21).foreach(b => require(!scfsiShared(scfsi, b) ||
         g0.sfLong(b) == g1.sfLong(b),
         s"mp3: scfsi-shared band $b differs between the granules"))
-      case other => throw new IllegalStateException(s"mp3: $other")
     }
-    val fs = Mp2Rate
-    val frameBytes = 144 * bitrateKbps * 1000 / fs
-    val out = new java.io.ByteArrayOutputStream()
-    granules.grouped(2).foreach { case Seq(g0, g1) =>
-      val p23 = Array(
-        mp3Part2Bits(g0) + mp3GranuleBits(g0.lines, g0.bigValuesPairs),
-        mp3Part2Bits(g1, scfsi) + mp3GranuleBits(g1.lines, g1.bigValuesPairs))
-      require(p23.forall(_ < 4096), "mp3: part2_3_length overflows 12 bits")
-      val budget = (frameBytes - 4 - (if (withCrc) 2 else 0) - 17) * 8
-      require(p23.sum <= budget,
-        s"mp3: main data ${p23.sum} bits exceeds the $budget-bit frame budget " +
-          s"at $bitrateKbps kbps — raise the bitrate")
-      val sw = new BitWriter
-      sw.put(0, 9); sw.put(0, 5); sw.put(scfsi, 4) // mdb/private/scfsi
-      mp3WriteGranuleSideAdv(sw, p23(0), g0)
-      mp3WriteGranuleSideAdv(sw, p23(1), g1)
+    val frameBytes = 144 * bitrateKbps * 1000 / Mp2Rate
+    val regionBytes =
+      frameBytes - 4 - (if (withCrc) 2 else 0) - (if (nch == 1) 17 else 32)
+    require(regionBytes > 0, s"mp3: no main-data capacity at $bitrateKbps kbps")
+    // pass 1: per frame, part2_3_length [granule][channel] and the
+    // main-data block
+    val frames = granules.grouped(2).toSeq.map { fr =>
       val dw = new BitWriter
-      mp3WriteScalefacs(dw, g0)
-      mp3WriteGranuleData(dw, g0.lines, g0.bigValuesPairs)
-      mp3WriteScalefacs(dw, g1, scfsi)
-      mp3WriteGranuleData(dw, g1.lines, g1.bigValuesPairs)
-      out.write(mp3AssembleFrame(bitrateKbps, withCrc, sw.toBytes,
-        dw.toBytes, frameBytes))
-      case other => throw new IllegalStateException(s"mp3: $other")
-    }
-    out.toByteArray
-  }
-
-  /** Encode an INTENSITY-STEREO Layer III stream at 48 kHz (round 12,
-    * the channel-mode matrix's last member): the left channel carries
-    * the spectra (full-grammar specs, long blocks), the right (side)
-    * channel carries NO spectral data — its part2_3_length covers only
-    * the scalefactor bits, which hold the per-band intensity POSITIONS
-    * (0–6; 7 = illegal/keep, decoded as pass-through). With
-    * `alsoMs = true` the header says mode_extension 3 and the decoder
-    * applies MS below the intensity region — which is EMPTY here
-    * (rzero = 0 puts every band in the intensity region), matching the
-    * pure-intensity reconstruction either way. Positions use
-    * scalefac_compress 13 (slen 3,3) so any value 0–7 fits. */
-  def encodeMp3IntensityStereo(granules: Seq[(Mp3GranSpec, Array[Int])],
-      bitrateKbps: Int, alsoMs: Boolean = false,
-      withCrc: Boolean = false): Array[Byte] = {
-    require(granules.nonEmpty && granules.length % 2 == 0,
-      "mp3: an even number of granules (2 per frame)")
-    granules.foreach { case (g, isPos) =>
-      mp3ValidateGranSpec(g)
-      require(g.blockType == 0,
-        "mp3: intensity fixtures are long-block (the decoder's named " +
-          "intensity+window-switching boundary)")
-      require(isPos.length == 21 && isPos.forall(v => v >= 0 && v <= 7),
-        "mp3: 21 intensity positions in 0-7")
-    }
-    val fs = Mp2Rate
-    val frameBytes = 144 * bitrateKbps * 1000 / fs
-    val out = new java.io.ByteArrayOutputStream()
-    granules.grouped(2).foreach { case Seq((l0, p0), (l1, p1)) =>
-      val sides = Seq(p0, p1).map(p => Mp3GranSpec(
-        lines = new Array[Int](576), globalGain = 210,
-        scalefacCompress = 13, sfLong = p))
-      val lp23 = Seq(l0, l1).map(g =>
-        mp3Part2Bits(g) + mp3GranuleBits(g.lines, g.bigValuesPairs))
-      val sp23 = sides.map(s => mp3Part2Bits(s)) // positions only, zero Huffman bits
-      require((lp23 ++ sp23).forall(_ < 4096),
-        "mp3: part2_3_length overflows 12 bits")
-      val budget = (frameBytes - 4 - (if (withCrc) 2 else 0) - 32) * 8
-      require(lp23.sum + sp23.sum <= budget,
-        s"mp3: main data exceeds the $budget-bit frame budget at " +
-          s"$bitrateKbps kbps — raise the bitrate")
-      val sw = new BitWriter
-      sw.put(0, 9); sw.put(0, 3)  // mdb / private_bits
-      sw.put(0, 4); sw.put(0, 4)  // scfsi ch0 / ch1
-      mp3WriteGranuleSideAdv(sw, lp23(0), l0)
-      mp3WriteGranuleSideAdv(sw, sp23(0), sides(0))
-      mp3WriteGranuleSideAdv(sw, lp23(1), l1)
-      mp3WriteGranuleSideAdv(sw, sp23(1), sides(1))
-      val dw = new BitWriter
-      Seq((l0, sides(0)), (l1, sides(1))).foreach { case (l, s) =>
-        mp3WriteScalefacs(dw, l)
-        mp3WriteGranuleData(dw, l.lines, l.bigValuesPairs)
-        mp3WriteScalefacs(dw, s) // side: positions, no spectral data
-      }
-      out.write(mp3AssembleFrame(bitrateKbps, withCrc, sw.toBytes,
-        dw.toBytes, frameBytes, mode = 1, modeExt = if (alsoMs) 3 else 1))
-      case other => throw new IllegalStateException(s"mp3: $other")
-    }
-    out.toByteArray
-  }
-
-  /** Encode a JOINT-STEREO Layer III stream from full-grammar granule
-    * PAIRS at 48 kHz with an explicit mode_extension (round 12,
-    * session 2) — the general fixture surface for the joint-stereo
-    * matrix over any block geometry the advanced grammar supports.
-    * With modeExt bit 0 set, the right granule is the intensity SIDE
-    * channel: its scalefactor slots at/above each window's (or the
-    * long spectrum's) zero bound carry intensity positions; slots
-    * below the bound are its real requant scalefactors for whatever
-    * spectral data it codes there. */
-  def encodeMp3StereoAdvanced(granules: Seq[(Mp3GranSpec, Mp3GranSpec)],
-      bitrateKbps: Int, modeExt: Int = 0,
-      withCrc: Boolean = false): Array[Byte] = {
-    require(granules.nonEmpty && granules.length % 2 == 0,
-      "mp3: an even number of granules (2 per frame)")
-    require(modeExt >= 0 && modeExt <= 3, "mp3: mode_extension is 2 bits")
-    granules.foreach { case (l, r) =>
-      mp3ValidateGranSpec(l); mp3ValidateGranSpec(r)
-    }
-    val fs = Mp2Rate
-    val frameBytes = 144 * bitrateKbps * 1000 / fs
-    val out = new java.io.ByteArrayOutputStream()
-    granules.grouped(2).foreach { case Seq((l0, r0), (l1, r1)) =>
-      val gs = Seq(l0, r0, l1, r1)
-      val p23 = gs.map(g =>
-        mp3Part2Bits(g) + mp3GranuleBits(g.lines, g.bigValuesPairs))
-      require(p23.forall(_ < 4096), "mp3: part2_3_length overflows 12 bits")
-      val budget = (frameBytes - 4 - (if (withCrc) 2 else 0) - 32) * 8
-      require(p23.sum <= budget,
-        s"mp3: main data exceeds the $budget-bit frame budget at " +
-          s"$bitrateKbps kbps — raise the bitrate")
-      val sw = new BitWriter
-      sw.put(0, 9); sw.put(0, 3)  // mdb / private_bits
-      sw.put(0, 4); sw.put(0, 4)  // scfsi ch0 / ch1
-      gs.zip(p23).foreach { case (g, p) => mp3WriteGranuleSideAdv(sw, p, g) }
-      val dw = new BitWriter
-      gs.foreach { g =>
-        mp3WriteScalefacs(dw, g)
+      val p23 = Seq(0, 1).map(gr => fr(gr).map { g =>
+        val sfsi = if (gr == 1) scfsi else 0
+        mp3WriteScalefacs(dw, g, sfsi)
         mp3WriteGranuleData(dw, g.lines, g.bigValuesPairs)
+        mp3Part2Bits(g, sfsi) + mp3GranuleBits(g.lines, g.bigValuesPairs)
+      })
+      require(p23.flatten.forall(_ < 4096),
+        "mp3: part2_3_length overflows 12 bits")
+      (p23, dw.toBytes)
+    }
+    // pass 2: placement, flat or through the reservoir
+    val starts =
+      if (reservoir) reservoirStarts(frames.map(_._2.length), regionBytes)
+      else Array.tabulate(frames.length) { n =>
+        val bits = frames(n)._1.flatten.sum
+        require(bits <= 8 * regionBytes,
+          s"mp3: frame $n main data $bits bits exceeds the " +
+            s"${8 * regionBytes}-bit region at $bitrateKbps kbps — raise the bitrate")
+        n.toLong * regionBytes
       }
+    // pass 3: lay the main-data stream into one buffer (gaps created by
+    // the 511 cap stay zero — spec-legal stuffing the decoder never
+    // addresses), then slice per-frame regions
+    val stream = new Array[Byte](frames.length * regionBytes)
+    frames.zip(starts).foreach { case ((_, data), at) =>
+      System.arraycopy(data, 0, stream, at.toInt, data.length)
+    }
+    val out = new java.io.ByteArrayOutputStream()
+    frames.zipWithIndex.foreach { case ((p23, _), n) =>
+      val pN = n * regionBytes
+      val sw = new BitWriter
+      sw.put((pN - starts(n)).toInt, 9) // main_data_begin
+      if (nch == 1) { sw.put(0, 5); sw.put(scfsi, 4) } // private / scfsi
+      else { sw.put(0, 3); sw.put(0, 4); sw.put(0, 4) }
+      for (gr <- 0 to 1; ch <- 0 until nch)
+        mp3WriteGranuleSideAdv(sw, p23(gr)(ch), granules(2 * n + gr)(ch))
       out.write(mp3AssembleFrame(bitrateKbps, withCrc, sw.toBytes,
-        dw.toBytes, frameBytes, mode = 1, modeExt = modeExt))
-      case other => throw new IllegalStateException(s"mp3: $other")
+        java.util.Arrays.copyOfRange(stream, pN, pN + regionBytes),
+        frameBytes, mode, modeExt))
     }
     out.toByteArray
+  }
+
+  /** One INTENSITY-STEREO granule for [[encodeMp3]] (mode 1, modeExt
+    * bit 0): the left channel carries the spectra (long blocks — the
+    * decoder's named intensity+window-switching boundary), the right
+    * (side) channel carries NO spectral data, only the 21 per-band
+    * intensity POSITIONS as its scalefactors (0–6; 7 = illegal/keep,
+    * decoded as pass-through), at scalefac_compress 13 (slen 3,3) so
+    * any value 0–7 fits. With modeExt 3 the decoder applies MS below
+    * the intensity region, which is EMPTY here (rzero = 0 puts every
+    * band in it), matching the pure-intensity reconstruction. */
+  def mp3IntensityGranule(left: Mp3GranSpec,
+      positions: Array[Int]): Seq[Mp3GranSpec] = {
+    require(left.blockType == 0,
+      "mp3: intensity fixtures are long-block (the decoder's named " +
+        "intensity+window-switching boundary)")
+    require(positions.length == 21 && positions.forall(v => v >= 0 && v <= 7),
+      "mp3: 21 intensity positions in 0-7")
+    Seq(left, Mp3GranSpec(lines = new Array[Int](576), globalGain = 210,
+      scalefacCompress = 13, sfLong = positions))
   }
 
   // ------------------------------------------------------------------

@@ -1019,9 +1019,9 @@ object Multimodal {
   // while everything PNG-specific — chunk walk with CRC verification,
   // IHDR parse, scanline filter reconstruction including the Paeth
   // predictor, sub-byte/16-bit sample packing — is implemented here
-  // byte-for-byte per RFC 2083. The encoder twins CYCLE the filter
-  // type per row (None/Sub/Up/Average/Paeth), so a round trip
-  // exercises every filter path on any image taller than four rows.
+  // byte-for-byte per RFC 2083. The one encoder, [[encodePng]], CYCLES
+  // the filter type per row (None/Sub/Up/Average/Paeth), so a round
+  // trip exercises every filter path on any image taller than four rows.
   // Coverage (r15): the FULL §4.1.1 depth×color-type matrix — gray at
   // 1/2/4/8/16, palette at 1/2/4/8, truecolor/gray+alpha/RGBA at 8/16
   // — sequential and Adam7, with tRNS where the spec allows. Illegal
@@ -1041,6 +1041,64 @@ object Multimodal {
     c.getValue.toInt
   }
 
+  private def pngBe32(b: Array[Byte], p: Int): Int = ((b(p) & 0xFF) << 24) |
+    ((b(p + 1) & 0xFF) << 16) | ((b(p + 2) & 0xFF) << 8) | (b(p + 3) & 0xFF)
+
+  /** Append one chunk (RFC 2083 §3.2): big-endian body length, type,
+    * body, CRC-32 over type + body. */
+  private def writePngChunk(out: java.io.ByteArrayOutputStream, typ: String,
+      body: Array[Byte]): Unit = {
+    def be32(v: Int): Unit = {
+      out.write(v >>> 24); out.write(v >>> 16); out.write(v >>> 8); out.write(v)
+    }
+    val td = typ.getBytes("US-ASCII") ++ body
+    be32(body.length)
+    out.write(td)
+    be32(pngCrc(td, 0, td.length))
+  }
+
+  /** The one chunk walk of every PNG reader: signature, then per chunk
+    * the overrun guard and the CRC check, handing (type, body offset,
+    * body length) to `visit` up to IEND. `where` suffixes the error
+    * texts (e.g. " (doc 7)"). */
+  private def walkPngChunks(payload: Array[Byte], where: String)(
+      visit: (String, Int, Int) => Unit): Unit = {
+    require(payload.length >= 8, s"png: truncated signature$where")
+    var i = 0
+    while (i < 8) {
+      require(payload(i) == PngSig(i), s"png: bad signature$where")
+      i += 1
+    }
+    var pos = 8
+    var done = false
+    while (!done) {
+      require(pos + 8 <= payload.length, s"png: truncated chunk header$where")
+      val len = pngBe32(payload, pos)
+      val typ = new String(payload, pos + 4, 4, "US-ASCII")
+      // compare in Long: len near Int.MaxValue wraps the Int sum
+      // negative and would slip past the guard into a raw AIOOBE
+      require(len >= 0 && pos.toLong + 8 + len + 4 <= payload.length.toLong,
+        s"png: truncated $typ chunk$where")
+      require(pngCrc(payload, pos + 4, len + 4) == pngBe32(payload, pos + 8 + len),
+        s"png: bad CRC in $typ$where")
+      if (typ == "IEND") done = true else visit(typ, pos + 8, len)
+      pos += 8 + len + 4
+    }
+  }
+
+  /** Insert chunks right after IHDR (the conventional position for
+    * metadata). */
+  private def insertAfterIhdr(png: Array[Byte],
+      chunks: Seq[(String, Array[Byte])]): Array[Byte] = {
+    require(png.length >= 33, "png: too short for IHDR")
+    val ihdrEnd = 8 + 8 + 13 + 4
+    val out = new java.io.ByteArrayOutputStream()
+    out.write(png, 0, ihdrEnd)
+    chunks.foreach { case (typ, body) => writePngChunk(out, typ, body) }
+    out.write(png, ihdrEnd, png.length - ihdrEnd)
+    out.toByteArray
+  }
+
   // -------------------------------------------------------------------
   // PNG tEXt + GIF comment metadata — the image siblings of WAV
   // LIST/INFO (r13 image-metadata capstone): crawl PNGs carry tEXt
@@ -1054,124 +1112,48 @@ object Multimodal {
   /** Insert tEXt chunks right after IHDR (the conventional position).
     * Keywords: 1-79 printable latin1, no NUL; text: latin1. */
   def insertPngText(png: Array[Byte],
-      tags: Seq[(String, String)]): Array[Byte] = {
-    require(png.length >= 33, "png: too short for IHDR")
-    val ihdrEnd = 8 + 8 + 13 + 4
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(png, 0, ihdrEnd)
-    tags.foreach { case (k, v) =>
+      tags: Seq[(String, String)]): Array[Byte] =
+    insertAfterIhdr(png, tags.map { case (k, v) =>
       require(k.nonEmpty && k.length <= 79 &&
         k.forall(c => c >= 0x20 && c <= 0xFF && c != 0x7F),
         s"png: bad tEXt keyword '$k'")
       require(v.forall(c => c <= 0xFF && c != 0), s"png: bad tEXt text")
-      val body = k.map(_.toByte).toArray ++ Array(0.toByte) ++
-        v.map(_.toByte).toArray
-      val chunk = "tEXt".getBytes("US-ASCII") ++ body
-      val len = body.length
-      out.write(len >>> 24); out.write((len >>> 16) & 0xFF)
-      out.write((len >>> 8) & 0xFF); out.write(len & 0xFF)
-      out.write(chunk)
-      val crc = pngCrc(chunk, 0, chunk.length)
-      out.write(crc >>> 24); out.write((crc >>> 16) & 0xFF)
-      out.write((crc >>> 8) & 0xFF); out.write(crc & 0xFF)
-    }
-    out.write(png, ihdrEnd, png.length - ihdrEnd)
-    out.toByteArray
-  }
+      ("tEXt", k.map(_.toByte).toArray ++ Array(0.toByte) ++
+        v.map(_.toByte).toArray)
+    })
 
   /** (keyword, text) pairs of every tEXt chunk, CRC-checked like the
     * raster decoder checks its chunks. */
   def readPngText(docId: Long,
       payload: Array[Byte]): Seq[(String, String)] = {
-    require(payload.length >= 8, s"png: truncated signature (doc $docId)")
-    var i = 0
-    while (i < 8) {
-      require(payload(i) == PngSig(i), s"png: bad signature (doc $docId)")
-      i += 1
-    }
-    def be32(p: Int): Int = ((payload(p) & 0xFF) << 24) |
-      ((payload(p + 1) & 0xFF) << 16) | ((payload(p + 2) & 0xFF) << 8) |
-      (payload(p + 3) & 0xFF)
     val tags = Seq.newBuilder[(String, String)]
-    var pos = 8
-    var done = false
-    while (!done) {
-      require(pos + 8 <= payload.length,
-        s"png: truncated chunk header (doc $docId)")
-      val len = be32(pos)
-      val typ = new String(payload, pos + 4, 4, "US-ASCII")
-      // compare in Long: len near Int.MaxValue wraps the Int sum
-      // negative and would slip past the guard into a raw AIOOBE
-      require(len >= 0 && pos.toLong + 8 + len + 4 <= payload.length.toLong,
-        s"png: truncated $typ chunk (doc $docId)")
-      require(pngCrc(payload, pos + 4, len + 4) == be32(pos + 8 + len),
-        s"png: bad CRC in $typ (doc $docId)")
+    walkPngChunks(payload, s" (doc $docId)") { (typ, body, len) =>
       if (typ == "tEXt") {
-        val body = pos + 8
         var nul = body
         while (nul < body + len && payload(nul) != 0) nul += 1
         require(nul > body && nul < body + len,
           s"png: tEXt chunk without keyword separator (doc $docId)")
         tags += ((new String(payload, body, nul - body, "ISO-8859-1"),
           new String(payload, nul + 1, body + len - nul - 1, "ISO-8859-1")))
-      } else if (typ == "IEND") done = true
-      pos += 8 + len + 4
+      }
     }
     tags.result()
   }
 
   /** Insert a PNG eXIf chunk (PNG 1.2 extension, standardized 2017:
     * body = the same TIFF block APP1 carries) right after IHDR. */
-  def insertPngExif(png: Array[Byte], tiffBlock: Array[Byte]): Array[Byte] = {
-    require(png.length >= 33, "png: too short for IHDR")
-    val ihdrEnd = 8 + 8 + 13 + 4
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(png, 0, ihdrEnd)
-    val chunk = "eXIf".getBytes("US-ASCII") ++ tiffBlock
-    val len = tiffBlock.length
-    out.write(len >>> 24); out.write((len >>> 16) & 0xFF)
-    out.write((len >>> 8) & 0xFF); out.write(len & 0xFF)
-    out.write(chunk)
-    val crc = pngCrc(chunk, 0, chunk.length)
-    out.write(crc >>> 24); out.write((crc >>> 16) & 0xFF)
-    out.write((crc >>> 8) & 0xFF); out.write(crc & 0xFF)
-    out.write(png, ihdrEnd, png.length - ihdrEnd)
-    out.toByteArray
-  }
+  def insertPngExif(png: Array[Byte], tiffBlock: Array[Byte]): Array[Byte] =
+    insertAfterIhdr(png, Seq(("eXIf", tiffBlock)))
 
   /** The eXIf chunk's parsed EXIF metadata, or None when absent.
     * CRC-checked like every other chunk walk here. */
   def readPngExif(docId: Long,
       payload: Array[Byte]): Option[Exif.ExifMeta] = {
-    require(payload.length >= 8, s"png: truncated signature (doc $docId)")
-    var i = 0
-    while (i < 8) {
-      require(payload(i) == PngSig(i), s"png: bad signature (doc $docId)")
-      i += 1
-    }
-    def be32(p: Int): Int = ((payload(p) & 0xFF) << 24) |
-      ((payload(p + 1) & 0xFF) << 16) | ((payload(p + 2) & 0xFF) << 8) |
-      (payload(p + 3) & 0xFF)
-    var pos = 8
     var res: Option[Exif.ExifMeta] = None
-    var done = false
-    while (!done) {
-      require(pos + 8 <= payload.length,
-        s"png: truncated chunk header (doc $docId)")
-      val len = be32(pos)
-      val typ = new String(payload, pos + 4, 4, "US-ASCII")
-      // compare in Long: len near Int.MaxValue wraps the Int sum
-      // negative and would slip past the guard into a raw AIOOBE
-      require(len >= 0 && pos.toLong + 8 + len + 4 <= payload.length.toLong,
-        s"png: truncated $typ chunk (doc $docId)")
-      require(pngCrc(payload, pos + 4, len + 4) == be32(pos + 8 + len),
-        s"png: bad CRC in $typ (doc $docId)")
+    walkPngChunks(payload, s" (doc $docId)") { (typ, body, len) =>
       if (typ == "eXIf")
         res = Some(Exif.parseExifTiff(
-          java.util.Arrays.copyOfRange(payload, pos + 8, pos + 8 + len),
-          docId))
-      else if (typ == "IEND") done = true
-      pos += 8 + len + 4
+          java.util.Arrays.copyOfRange(payload, body, body + len), docId))
     }
     res
   }
@@ -1264,167 +1246,6 @@ object Multimodal {
     if (pa <= pb && pa <= pc) a else if (pb <= pc) b else c
   }
 
-  /** Build an 8-bit grayscale non-interlaced PNG payload. Fixture-side
-    * twin of [[decodePng]] and the writer a real grayscale pipeline
-    * would use; per-row filters cycle `row % 5` (see object note). */
-  def encodePng(width: Int, height: Int, pixel: Int => Int): Array[Byte] = {
-    require(width > 0 && height > 0, s"png: bad dims ${width}x$height")
-    val raw = new Array[Byte]((width + 1) * height)
-    var r = 0
-    while (r < height) {
-      val f = r % 5
-      val base = r * (width + 1)
-      raw(base) = f.toByte
-      var x = 0
-      while (x < width) {
-        val cur = pixel(r * width + x) & 0xFF
-        val left = if (x > 0) pixel(r * width + x - 1) & 0xFF else 0
-        val above = if (r > 0) pixel((r - 1) * width + x) & 0xFF else 0
-        val ul = if (x > 0 && r > 0) pixel((r - 1) * width + x - 1) & 0xFF else 0
-        val filtered = f match {
-          case 0 => cur
-          case 1 => cur - left
-          case 2 => cur - above
-          case 3 => cur - ((left + above) >> 1) // floor((a+b)/2), non-negative
-          case _ => cur - paeth(left, above, ul)
-        }
-        raw(base + 1 + x) = (filtered & 0xFF).toByte
-        x += 1
-      }
-      r += 1
-    }
-    // zlib-wrapped DEFLATE of the filtered scanline stream
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(raw); defl.finish()
-    val zout = new java.io.ByteArrayOutputStream()
-    val tmp = new Array[Byte](4096)
-    while (!defl.finished()) { val n = defl.deflate(tmp); zout.write(tmp, 0, n) }
-    defl.end()
-
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(PngSig)
-    def be32(v: Int): Array[Byte] =
-      Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      out.write(be32(data.length))
-      val td = typ.getBytes("US-ASCII") ++ data
-      out.write(td)
-      out.write(be32(pngCrc(td, 0, td.length)))
-    }
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-      .putInt(width).putInt(height)
-      .put(8.toByte)  // bit depth
-      .put(0.toByte)  // color type: grayscale
-      .put(0.toByte).put(0.toByte).put(0.toByte) // compression/filter/interlace
-    chunk("IHDR", ihdr.array())
-    chunk("IDAT", zout.toByteArray)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
-  }
-
-  /** Build an 8-bit COLOR non-interlaced PNG (r14): color type 2
-    * (truecolor, `pixel` returns packed 0xRRGGBB), 6 (truecolor+alpha,
-    * packed 0xAARRGGBB), or 3 (palette — `pixel` returns an index into
-    * `palette`, written as the PLTE chunk). Per-row filters cycle
-    * `row % 5` on BYTES at the type's bpp, like the grayscale twin. */
-  def encodePngColor(width: Int, height: Int, colorType: Int,
-      pixel: Int => Int, palette: Array[Int] = null,
-      trnsAlphas: Array[Int] = null): Array[Byte] = {
-    require(trnsAlphas == null || colorType == 3,
-      "png: the per-index tRNS fixture form is color-type-3-only")
-    require(trnsAlphas == null || (palette != null &&
-      trnsAlphas.length <= palette.length &&
-      trnsAlphas.forall(a => a >= 0 && a <= 255)),
-      "png: tRNS alphas must be 0..255, at most one per PLTE entry")
-    require(width > 0 && height > 0, s"png: bad dims ${width}x$height")
-    require(colorType == 2 || colorType == 3 || colorType == 6,
-      s"png: encodePngColor writes color types 2/3/6, got $colorType")
-    if (colorType == 3) {
-      require(palette != null && palette.nonEmpty && palette.length <= 256,
-        "png: palette encode needs 1..256 PLTE entries")
-    } else require(palette == null, "png: PLTE is color-type-3-only")
-    val bpp = pngBpp(colorType)
-    val rowBytes = width * bpp
-    // expand to channel bytes once, then filter over bytes
-    val chan = new Array[Byte](rowBytes * height)
-    var i = 0
-    while (i < width * height) {
-      val v = pixel(i)
-      colorType match {
-        case 2 =>
-          chan(3 * i) = ((v >> 16) & 0xFF).toByte
-          chan(3 * i + 1) = ((v >> 8) & 0xFF).toByte
-          chan(3 * i + 2) = (v & 0xFF).toByte
-        case 3 =>
-          require(v >= 0 && v < palette.length,
-            s"png: palette index $v outside 0..${palette.length - 1}")
-          chan(i) = v.toByte
-        case _ =>
-          chan(4 * i) = ((v >> 16) & 0xFF).toByte
-          chan(4 * i + 1) = ((v >> 8) & 0xFF).toByte
-          chan(4 * i + 2) = (v & 0xFF).toByte
-          chan(4 * i + 3) = ((v >>> 24) & 0xFF).toByte
-      }
-      i += 1
-    }
-    val raw = new Array[Byte]((rowBytes + 1) * height)
-    var r = 0
-    while (r < height) {
-      val f = r % 5
-      val base = r * (rowBytes + 1)
-      raw(base) = f.toByte
-      var x = 0
-      while (x < rowBytes) {
-        val cur = chan(r * rowBytes + x) & 0xFF
-        val left = if (x >= bpp) chan(r * rowBytes + x - bpp) & 0xFF else 0
-        val above = if (r > 0) chan((r - 1) * rowBytes + x) & 0xFF else 0
-        val ul = if (x >= bpp && r > 0)
-          chan((r - 1) * rowBytes + x - bpp) & 0xFF else 0
-        val filtered = f match {
-          case 0 => cur
-          case 1 => cur - left
-          case 2 => cur - above
-          case 3 => cur - ((left + above) >> 1)
-          case _ => cur - paeth(left, above, ul)
-        }
-        raw(base + 1 + x) = (filtered & 0xFF).toByte
-        x += 1
-      }
-      r += 1
-    }
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(raw); defl.finish()
-    val zout = new java.io.ByteArrayOutputStream()
-    val tmp = new Array[Byte](4096)
-    while (!defl.finished()) { val n = defl.deflate(tmp); zout.write(tmp, 0, n) }
-    defl.end()
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(PngSig)
-    def be32(v: Int): Array[Byte] =
-      Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      out.write(be32(data.length))
-      val td = typ.getBytes("US-ASCII") ++ data
-      out.write(td)
-      out.write(be32(pngCrc(td, 0, td.length)))
-    }
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-      .putInt(width).putInt(height)
-      .put(8.toByte).put(colorType.toByte)
-      .put(0.toByte).put(0.toByte).put(0.toByte)
-    chunk("IHDR", ihdr.array())
-    if (colorType == 3) {
-      chunk("PLTE", palette.flatMap(c => Seq(
-        ((c >> 16) & 0xFF).toByte, ((c >> 8) & 0xFF).toByte,
-        (c & 0xFF).toByte)))
-      if (trnsAlphas != null)
-        chunk("tRNS", trnsAlphas.map(_.toByte))
-    }
-    chunk("IDAT", zout.toByteArray)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
-  }
-
   /** Channels per color type (RFC 2083 §4.1.1): 0 gray, 2 truecolor,
     * 3 palette index, 4 gray+alpha, 6 truecolor+alpha. The decoder
     * carries ALL FIVE types since r15. */
@@ -1452,22 +1273,6 @@ object Multimodal {
     }
     require(ok,
       s"png: depth $depth is not legal for color type $color (RFC 2083 §4.1.1)")
-  }
-
-  /** Bytes-per-pixel at depth 8 for the LEGACY fixture encoders
-    * ([[encodePngColor]]/[[encodePngAdam7]], whose channel writers are
-    * 8-bit): 0 gray, 2 truecolor, 3 palette, 6 truecolor+alpha.
-    * Gray+alpha and the non-8-bit depths encode through the
-    * generalized [[encodePngEx]]. */
-  private def pngBpp(color: Int): Int = color match {
-    case 0 => 1
-    case 2 => 3
-    case 3 => 1
-    case 6 => 4
-    case 4 => throw new IllegalArgumentException(
-      "png: gray+alpha encodes through encodePngEx, not the 8-bit fixture writers")
-    case c => throw new IllegalArgumentException(
-      s"png: color type $c is not defined by the spec")
   }
 
   /** Unpack `count` samples of `depth` bits from reconstructed
@@ -1510,31 +1315,18 @@ object Multimodal {
     * tRNS body or null, compressed IDAT length). */
   private def pngScanlines(payload: Array[Byte])
       : (Int, Int, Int, Int, Array[Int], Array[Int], Array[Byte], Int) = {
-    require(payload.length >= 8, "png: truncated signature")
-    var i = 0
-    while (i < 8) { require(payload(i) == PngSig(i), "png: bad signature"); i += 1 }
-    def be32(p: Int): Int = ((payload(p) & 0xFF) << 24) | ((payload(p + 1) & 0xFF) << 16) |
-      ((payload(p + 2) & 0xFF) << 8) | (payload(p + 3) & 0xFF)
-    var pos = 8
     var width = -1; var height = -1; var color = -1; var depth = -1
     var interlaced = 0
     var palette: Array[Int] = null
     var trns: Array[Byte] = null
     val idat = new java.io.ByteArrayOutputStream()
-    var done = false
-    while (!done) {
-      require(pos + 8 <= payload.length, "png: truncated chunk header")
-      val len = be32(pos)
-      val typ = new String(payload, pos + 4, 4, "US-ASCII")
-      require(len >= 0 && pos.toLong + 8 + len + 4 <= payload.length.toLong,
-        s"png: truncated $typ chunk")
-      require(pngCrc(payload, pos + 4, len + 4) == be32(pos + 8 + len), s"png: bad CRC in $typ")
+    walkPngChunks(payload, "") { (typ, body, len) =>
       typ match {
         case "IHDR" =>
-          width = be32(pos + 8); height = be32(pos + 12)
-          depth = payload(pos + 16) & 0xFF
-          color = payload(pos + 17) & 0xFF
-          val interlace = payload(pos + 20) & 0xFF
+          width = pngBe32(payload, body); height = pngBe32(payload, body + 4)
+          depth = payload(body + 8) & 0xFF
+          color = payload(body + 9) & 0xFF
+          val interlace = payload(body + 12) & 0xFF
           pngValidateDepth(color, depth) // whole matrix carried (r15)
           require(interlace == 0 || interlace == 1,
             s"png: interlace method $interlace is not defined")
@@ -1543,17 +1335,14 @@ object Multimodal {
           require(len > 0 && len % 3 == 0 && len <= 256 * 3,
             s"png: PLTE length $len is not a palette")
           palette = Array.tabulate(len / 3)(c =>
-            ((payload(pos + 8 + 3 * c) & 0xFF) << 16) |
-              ((payload(pos + 8 + 3 * c + 1) & 0xFF) << 8) |
-              (payload(pos + 8 + 3 * c + 2) & 0xFF))
+            ((payload(body + 3 * c) & 0xFF) << 16) |
+              ((payload(body + 3 * c + 1) & 0xFF) << 8) |
+              (payload(body + 3 * c + 2) & 0xFF))
         case "tRNS" =>
-          trns = java.util.Arrays.copyOfRange(payload, pos + 8,
-            pos + 8 + len)
-        case "IDAT" => idat.write(payload, pos + 8, len)
-        case "IEND" => done = true
+          trns = java.util.Arrays.copyOfRange(payload, body, body + len)
+        case "IDAT" => idat.write(payload, body, len)
         case _      => () // ancillary chunks (tEXt, pHYs, …) skipped
       }
-      pos += 8 + len + 4
     }
     require(width > 0 && height > 0, "png: missing or empty IHDR")
     if (color == 3) require(palette != null,
@@ -1629,123 +1418,6 @@ object Multimodal {
     (width, height, color, depth, samples, palette, trns, comp.length)
   }
 
-  /** Build an 8-bit ADAM7-INTERLACED PNG (r14) of any carried color
-    * type — the fixture twin of the interlaced decode path. `pixel`
-    * follows [[encodePng]]/[[encodePngColor]]'s contracts per type
-    * (gray value, packed RGB/ARGB, or palette index). Filters cycle
-    * `(pass + row) % 5` within each pass. */
-  def encodePngAdam7(width: Int, height: Int, colorType: Int,
-      pixel: Int => Int, palette: Array[Int] = null,
-      trnsAlphas: Array[Int] = null): Array[Byte] = {
-    // r15 advisor: the validations the non-interlaced twin enforces —
-    // out-of-range alphas must not silently truncate through .toByte,
-    // a stray palette on a non-palette type must not silently drop
-    require(trnsAlphas == null || colorType == 3,
-      "png: the per-index tRNS fixture form is color-type-3-only")
-    require(trnsAlphas == null || (palette != null &&
-      trnsAlphas.length <= palette.length &&
-      trnsAlphas.forall(a => a >= 0 && a <= 255)),
-      "png: tRNS alphas must be 0..255, at most one per PLTE entry")
-    require(colorType == 3 || palette == null,
-      "png: PLTE is color-type-3-only")
-    require(width > 0 && height > 0, s"png: bad dims ${width}x$height")
-    val bpp = pngBpp(colorType)
-    if (colorType == 3)
-      require(palette != null && palette.nonEmpty && palette.length <= 256,
-        "png: palette encode needs 1..256 PLTE entries")
-    def chanBytes(v: Int, dst: Array[Byte], at: Int): Unit =
-      colorType match {
-        case 0 => dst(at) = (v & 0xFF).toByte
-        case 2 =>
-          dst(at) = ((v >> 16) & 0xFF).toByte
-          dst(at + 1) = ((v >> 8) & 0xFF).toByte
-          dst(at + 2) = (v & 0xFF).toByte
-        case 3 =>
-          require(v >= 0 && v < palette.length,
-            s"png: palette index $v outside 0..${palette.length - 1}")
-          dst(at) = v.toByte
-        case _ =>
-          dst(at) = ((v >> 16) & 0xFF).toByte
-          dst(at + 1) = ((v >> 8) & 0xFF).toByte
-          dst(at + 2) = (v & 0xFF).toByte
-          dst(at + 3) = ((v >>> 24) & 0xFF).toByte
-      }
-    val raw = new java.io.ByteArrayOutputStream()
-    Adam7.zipWithIndex.foreach { case ((x0, y0, dx, dy), p) =>
-      val pw = math.max(0, (width - x0 + dx - 1) / dx)
-      val ph = math.max(0, (height - y0 + dy - 1) / dy)
-      if (pw > 0 && ph > 0) {
-        val passRow = pw * bpp
-        val chan = new Array[Byte](passRow * ph)
-        var j = 0
-        while (j < ph) {
-          var i = 0
-          while (i < pw) {
-            chanBytes(pixel((y0 + j * dy) * width + (x0 + i * dx)),
-              chan, (j * pw + i) * bpp)
-            i += 1
-          }
-          j += 1
-        }
-        var r = 0
-        while (r < ph) {
-          val f = (p + r) % 5
-          raw.write(f)
-          var x = 0
-          while (x < passRow) {
-            val at = r * passRow + x
-            val cur = chan(at) & 0xFF
-            val left = if (x >= bpp) chan(at - bpp) & 0xFF else 0
-            val above = if (r > 0) chan(at - passRow) & 0xFF else 0
-            val ul = if (x >= bpp && r > 0) chan(at - passRow - bpp) & 0xFF
-              else 0
-            val filtered = f match {
-              case 0 => cur
-              case 1 => cur - left
-              case 2 => cur - above
-              case 3 => cur - ((left + above) >> 1)
-              case _ => cur - paeth(left, above, ul)
-            }
-            raw.write(filtered & 0xFF)
-            x += 1
-          }
-          r += 1
-        }
-      }
-    }
-    val defl = new java.util.zip.Deflater()
-    defl.setInput(raw.toByteArray); defl.finish()
-    val zout = new java.io.ByteArrayOutputStream()
-    val tmp = new Array[Byte](4096)
-    while (!defl.finished()) { val n = defl.deflate(tmp); zout.write(tmp, 0, n) }
-    defl.end()
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(PngSig)
-    def be32(v: Int): Array[Byte] =
-      Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      out.write(be32(data.length))
-      val td = typ.getBytes("US-ASCII") ++ data
-      out.write(td)
-      out.write(be32(pngCrc(td, 0, td.length)))
-    }
-    val ihdr = java.nio.ByteBuffer.allocate(13)
-      .putInt(width).putInt(height)
-      .put(8.toByte).put(colorType.toByte)
-      .put(0.toByte).put(0.toByte).put(1.toByte) // interlace: Adam7
-    chunk("IHDR", ihdr.array())
-    if (colorType == 3) {
-      chunk("PLTE", palette.flatMap(c => Seq(
-        ((c >> 16) & 0xFF).toByte, ((c >> 8) & 0xFF).toByte,
-        (c & 0xFF).toByte)))
-      if (trnsAlphas != null)
-        chunk("tRNS", trnsAlphas.map(_.toByte))
-    }
-    chunk("IDAT", zout.toByteArray)
-    chunk("IEND", Array.emptyByteArray)
-    out.toByteArray
-  }
-
   /** Build a PNG at ANY legal depth×color-type cell of the RFC 2083
     * §4.1.1 matrix (r15), sequential or Adam7-interlaced — the fixture
     * twin of the generalized decode and the writer a real pipeline
@@ -1757,8 +1429,10 @@ object Multimodal {
     * big-endian. `trnsRaw` is the raw tRNS body in the §4.2.1 shape
     * for the type (per-index alphas at 3, 2-byte gray key at 0,
     * 6-byte RGB key at 2). Filters cycle (pass + row) % 5 at the
-    * §6.2 stride max(1, channels·depth/8). */
-  def encodePngEx(width: Int, height: Int, depth: Int, colorType: Int,
+    * §6.2 stride max(1, channels·depth/8), so a round trip exercises
+    * every filter path. Callers holding packed pixels pass
+    * [[packedSample]]. */
+  def encodePng(width: Int, height: Int, depth: Int, colorType: Int,
       sample: (Int, Int) => Int, palette: Array[Int] = null,
       trnsRaw: Array[Byte] = null,
       interlaced: Boolean = false): Array[Byte] = {
@@ -1869,29 +1543,33 @@ object Multimodal {
     defl.end()
     val out = new java.io.ByteArrayOutputStream()
     out.write(PngSig)
-    def be32(v: Int): Array[Byte] =
-      Array((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
-    def chunk(typ: String, data: Array[Byte]): Unit = {
-      out.write(be32(data.length))
-      val td = typ.getBytes("US-ASCII") ++ data
-      out.write(td)
-      out.write(be32(pngCrc(td, 0, td.length)))
-    }
     val ihdr = java.nio.ByteBuffer.allocate(13)
       .putInt(width).putInt(height)
       .put(depth.toByte).put(colorType.toByte)
       .put(0.toByte).put(0.toByte)
       .put((if (interlaced) 1 else 0).toByte)
-    chunk("IHDR", ihdr.array())
+    writePngChunk(out, "IHDR", ihdr.array())
     if (colorType == 3)
-      chunk("PLTE", palette.flatMap(c => Seq(
+      writePngChunk(out, "PLTE", palette.flatMap(c => Seq(
         ((c >> 16) & 0xFF).toByte, ((c >> 8) & 0xFF).toByte,
         (c & 0xFF).toByte)))
-    if (trnsRaw != null) chunk("tRNS", trnsRaw)
-    chunk("IDAT", zout.toByteArray)
-    chunk("IEND", Array.emptyByteArray)
+    if (trnsRaw != null) writePngChunk(out, "tRNS", trnsRaw)
+    writePngChunk(out, "IDAT", zout.toByteArray)
+    writePngChunk(out, "IEND", Array.emptyByteArray)
     out.toByteArray
   }
+
+  /** [[encodePng]]'s `sample` for callers holding PACKED 8-bit pixels:
+    * `pixel(i)` is a gray value (type 0, masked to its low byte), a
+    * palette index (3), 0xRRGGBB (2) or 0xAARRGGBB (6). */
+  def packedSample(colorType: Int, pixel: Int => Int): (Int, Int) => Int =
+    colorType match {
+      case 0 => (i, _) => pixel(i) & 0xFF
+      case 3 => (i, _) => pixel(i)
+      case 2 | 6 => (i, c) => (pixel(i) >>> (if (c == 3) 24 else 16 - 8 * c)) & 0xFF
+      case c => throw new IllegalArgumentException(
+        s"png: packed pixels are color types 0/2/3/6, got $c")
+    }
 
   /** GIF 4-pass interlace row order (GIF89a appendix E): the actual
     * raster row for each TRANSMITTED row — rows 0,8,16,… then 4,12,…

@@ -918,17 +918,12 @@ object Similarity {
     quarantined.write.mode("overwrite").parquet(s"$stage/quarantine")
     val cents = trainKMeans(corpus, "cid", "_v", k, iters, seed, sampleSize)
     val build = writeIvfIndex(corpus, "cid", "_v", cents, stage)
-    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-    def rmTree(p: Path): Unit = if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => Files.delete(q))
-      finally walk.close()
-    }
+    import java.nio.file.{Files, Paths, StandardCopyOption}
+    import graft.io.LocalFs.deleteTree
     // Crash-safe swap (advisor r11): rename live parts aside first —
     // renames only, nothing destroyed until every replacement is in.
     val old = Paths.get(path, "_old")
-    rmTree(old) // stale debris from a previous crashed swap
+    deleteTree(old) // stale debris from a previous crashed swap
     Files.createDirectories(old)
     val parts = Seq("centroids", "lists", "stats", "quarantine")
     parts.foreach { part =>
@@ -940,8 +935,8 @@ object Similarity {
       Files.move(Paths.get(stage, part), Paths.get(path, part),
         StandardCopyOption.ATOMIC_MOVE)
     }
-    rmTree(old)
-    rmTree(Paths.get(stage))
+    deleteTree(old)
+    deleteTree(Paths.get(stage))
     build
   }
 
@@ -960,13 +955,8 @@ object Similarity {
   private lazy val indexCleanupHook: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       indexRegistry.values.forEach { p =>
-        try {
-          val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(p))
-          try walk.sorted(java.util.Comparator.reverseOrder())
-            .forEach(q => { try java.nio.file.Files.delete(q)
-              catch { case _: Exception => () } })
-          finally walk.close()
-        } catch { case _: Exception => () }
+        try graft.io.LocalFs.deleteTree(java.nio.file.Paths.get(p))
+        catch { case _: Exception => () }
       }
     }))
   def cachedIvfIndex(key: String)(build: String => Unit): String = {

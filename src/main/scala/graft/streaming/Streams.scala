@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
+import graft.io.LocalFs
+
 /** Structured Streaming re-expression of the reference's incremental
   * trigger model (SURVEY §1.1, §2.3): the reference couples its two
   * stages with an S3 `ObjectCreated` event (README.md:89-91) — "run the
@@ -100,7 +102,7 @@ object Streams {
     // throw DirectoryNotEmptyException and wedge staging until a
     // manual clean — advisor-flagged)
     listDir(dst).filterNot(p => keep(p.getFileName.toString))
-      .foreach(deleteRecursive)
+      .foreach(LocalFs.deleteTree)
     dst.toString
   }
 
@@ -110,13 +112,6 @@ object Streams {
     import scala.jdk.CollectionConverters._
     val s = java.nio.file.Files.list(p)
     try s.iterator().asScala.toList finally s.close()
-  }
-
-  private def deleteRecursive(p: java.nio.file.Path): Unit = {
-    if (java.nio.file.Files.isDirectory(p,
-        java.nio.file.LinkOption.NOFOLLOW_LINKS))
-      listDir(p).foreach(deleteRecursive)
-    java.nio.file.Files.delete(p)
   }
 
   /** Logical batch of a row: `id div span`. */
@@ -171,7 +166,7 @@ object Streams {
           attribute.FileTime.fromMillis(1000000000000L + b * 60000L)): Unit
       }
     }
-    deleteRecursive(stage)
+    LocalFs.deleteTree(stage)
   }
 
   private def stageLandingDir(sfDir: String): String =
@@ -275,16 +270,8 @@ object Streams {
     q.awaitTermination()
     val drained = ss.table(name)
     val out = spark.createDataFrame(drained.rdd, drained.schema)
-    deleteRecursively(ckpt)
+    LocalFs.deleteTree(ckpt)
     out
-  }
-
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
-    import java.nio.file._
-    if (Files.exists(p)) {
-      Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-    }
   }
 
   /** Tumbling-window aggregation (1h) over the event stream, drained with
@@ -608,6 +595,27 @@ object Streams {
       .orderBy("user_id", "session_start")
   }
 
+  /** The click-view interval join shared by [[clickViewJoin]],
+    * [[clickViewLeftJoin]] and [[clickViewFullJoin]]: click and view
+    * events of users below `maxUser`, each side watermarked 1 h, joined
+    * with `joinType` on the same user and a view in the hour up to the
+    * click. Columns: click_id, _cu, click_ts, view_id, _vu, view_ts. */
+  private def clickViewStreamJoin(ss: SparkSession, sfDir: String,
+      maxUser: Long, joinType: String): DataFrame = {
+    val ev = eventsStream(ss, sfDir).filter(col("user_id") < maxUser)
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id").as("_cu"), col("ts").as("click_ts"))
+      .withWatermark("click_ts", "1 hour")
+    val views = ev.filter(col("event_type") === "view")
+      .select(col("event_id").as("view_id"), col("user_id").as("_vu"), col("ts").as("view_ts"))
+      .withWatermark("view_ts", "1 hour")
+    clicks.join(views,
+      col("_cu") === col("_vu") &&
+        col("view_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR") &&
+        col("view_ts") <= col("click_ts"),
+      joinType)
+  }
+
   /** Stream-stream interval join (SURVEY §2.3 streaming row): click
     * events joined to the same user's view events from the preceding
     * hour — the streaming form of as-of/range attribution. Both sides
@@ -619,18 +627,8 @@ object Streams {
     * itself is unbounded. */
   def clickViewJoin(spark: SparkSession, sfDir: String, maxUser: Long = 200L): DataFrame = {
     val ss = stateSession(spark, 4)
-    val ev = eventsStream(ss, sfDir).filter(col("user_id") < maxUser)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val views = ev.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("_vu"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", "1 hour")
-    val joined = clicks.join(views,
-      col("user_id") === col("_vu") &&
-        col("view_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR") &&
-        col("view_ts") <= col("click_ts"))
-      .select(col("click_id"), col("view_id"), col("user_id"))
+    val joined = clickViewStreamJoin(ss, sfDir, maxUser, "inner")
+      .select(col("click_id"), col("view_id"), col("_cu").as("user_id"))
     drainToTable(spark, ss, joined, "stream_join", "append")
       .orderBy("click_id", "view_id")
   }
@@ -646,19 +644,9 @@ object Streams {
     * alike are fully decided. The batch oracle applies the same cut. */
   def clickViewLeftJoin(spark: SparkSession, sfDir: String, maxUser: Long = 200L): DataFrame = {
     val ss = stateSession(spark, 4)
-    val ev = eventsStream(ss, sfDir).filter(col("user_id") < maxUser)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val views = ev.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("_vu"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", "1 hour")
-    val joined = clicks.join(views,
-      col("user_id") === col("_vu") &&
-        col("view_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR") &&
-        col("view_ts") <= col("click_ts"),
-      "left_outer")
-      .select(col("click_id"), col("user_id"), col("click_ts"), col("view_id"))
+    val joined = clickViewStreamJoin(ss, sfDir, maxUser, "left_outer")
+      .select(col("click_id"), col("_cu").as("user_id"), col("click_ts"),
+        col("view_id"))
     val drained = drainToTable(spark, ss, joined, "stream_ljoin", "append")
     // final global watermark = min over inputs of (max event ts − 1h);
     // keep only clicks a further minute older so boundary rows (whose
@@ -690,18 +678,7 @@ object Streams {
     * stream and the batch oracle. */
   def clickViewFullJoin(spark: SparkSession, sfDir: String, maxUser: Long = 200L): DataFrame = {
     val ss = stateSession(spark, 4)
-    val ev = eventsStream(ss, sfDir).filter(col("user_id") < maxUser)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id").as("_cu"), col("ts").as("click_ts"))
-      .withWatermark("click_ts", "1 hour")
-    val views = ev.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("user_id").as("_vu"), col("ts").as("view_ts"))
-      .withWatermark("view_ts", "1 hour")
-    val joined = clicks.join(views,
-      col("_cu") === col("_vu") &&
-        col("view_ts") >= col("click_ts") - expr("INTERVAL 1 HOUR") &&
-        col("view_ts") <= col("click_ts"),
-      "full_outer")
+    val joined = clickViewStreamJoin(ss, sfDir, maxUser, "full_outer")
       .select(col("click_id"), col("_cu"), col("click_ts"),
         col("view_id"), col("_vu"), col("view_ts"))
     val drained = drainToTable(spark, ss, joined, "stream_fjoin", "append")
@@ -1035,8 +1012,8 @@ object Streams {
           .write.mode("overwrite").parquet(docsDir(gen + 1))
         idxPost(gen).coalesce(1)
           .write.mode("overwrite").parquet(postDir(gen + 1))
-        deleteRecursively(Paths.get(docsDir(gen)))
-        deleteRecursively(Paths.get(postDir(gen)))
+        LocalFs.deleteTree(Paths.get(docsDir(gen)))
+        LocalFs.deleteTree(Paths.get(postDir(gen)))
         gen += 1
       }
     }
@@ -1068,7 +1045,7 @@ object Streams {
       StructField("first_blocker", LongType)))
     val out = spark.createDataFrame(
       java.util.Arrays.asList(verdictRows.toSeq: _*), outSchema)
-    deleteRecursively(root)
+    LocalFs.deleteTree(root)
     out
   }
 
@@ -1342,7 +1319,7 @@ object Streams {
       .toDF("batch_id", "n_vectors", "n_total", "n_appended",
         "no_retrain", "census_fired", "retrained", "post_retrain_clear")
       .withColumn("matches_batch_build", lit(eq))
-    deleteRecursively(root)
+    LocalFs.deleteTree(root)
     out
   }
 }

@@ -46,10 +46,7 @@ object GenSf1 {
       val tgt = Paths.get(dst, s"$name.parquet")
       Files.deleteIfExists(tgt): Unit
       Files.move(part, tgt, StandardCopyOption.REPLACE_EXISTING): Unit
-      val walk = Files.walk(stage)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .forEach(p => Files.delete(p))
-      finally walk.close()
+      graft.io.LocalFs.deleteTree(stage)
     }
     def inflate(name: String)(remap: DataFrame => DataFrame): Unit = {
       val base = spark.read.parquet(s"$src/$name.parquet")

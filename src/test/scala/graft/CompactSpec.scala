@@ -22,4 +22,21 @@ class CompactSpec extends AnyFunSuite with SparkTestBase {
     assert(after < before)
     assert(spark.read.parquet(path).collect().map(_.toSeq).toSet == expected)
   }
+
+  test("compact swaps in past a stale _old dir from a crashed run") {
+    val path = Files.createTempDirectory("graft_compact_debris").toString + "/t"
+    (1 to 1000).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+      .repartition(40).write.parquet(path)
+    val expected = spark.read.parquet(path).collect().map(_.toSeq).toSet
+    Files.createDirectories(java.nio.file.Paths.get(path + "_old"))
+    Files.write(java.nio.file.Paths.get(path + "_old", "part"),
+      "stale".getBytes("UTF-8"))
+
+    assert(graft.io.Compact.compact(spark, path) == 1L)
+
+    val after = new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet"))
+    assert(after == 1)
+    assert(spark.read.parquet(path).collect().map(_.toSeq).toSet == expected)
+    assert(!Files.exists(java.nio.file.Paths.get(path + "_old")))
+  }
 }

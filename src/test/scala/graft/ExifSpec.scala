@@ -133,7 +133,8 @@ class ExifSpec extends AnyFunSuite {
       val inv = Exif.inverseOrientation(o)
       val (sw, sh, stored) = Exif.applyOrientation(w, h, upright, inv)
       val png = Multimodal.insertPngExif(
-        Multimodal.encodePng(sw, sh, stored(_)),
+        Multimodal.encodePng(sw, sh, 8, 0,
+          Multimodal.packedSample(0, stored(_))),
         Exif.encodeExifTiff(ExifMeta(bigEndian = be,
           orientation = Some(o), make = Some("gc"))))
       val meta = Multimodal.readPngExif(10L, png).get
@@ -144,7 +145,8 @@ class ExifSpec extends AnyFunSuite {
         Exif.applyOrientation(dw, dh, raster, meta.orientation.get)
       assert(nw == w && nh == h && norm.sameElements(upright))
       assert(Multimodal.readPngExif(11L,
-        Multimodal.encodePng(sw, sh, stored(_))).isEmpty)
+        Multimodal.encodePng(sw, sh, 8, 0,
+          Multimodal.packedSample(0, stored(_)))).isEmpty)
     }
   }
 

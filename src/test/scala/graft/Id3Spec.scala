@@ -58,7 +58,8 @@ class Id3Spec extends AnyFunSuite {
     assert(MpegAudio.walkFrames(12L, xf).length == 1)
     // a real audio frame has no Xing magic
     val lines = new Array[Int](576); lines(40) = 1
-    val audio = MpegAudio.encodeMp3(Seq(lines, lines), Seq(210, 210), 128)
+    val audio = MpegAudio.encodeMp3(
+      Seq(210, 210).map(gg => Seq(MpegAudio.Mp3GranSpec(lines, gg))), 128)
     assert(MpegAudio.mp3XingInfo(13L, audio).isEmpty)
   }
 
@@ -66,8 +67,8 @@ class Id3Spec extends AnyFunSuite {
       "Xing + audio + ID3v1 — spans exact, counts exact, and the " +
       "stripped audio decodes identically to the untagged stream") {
     val lines = new Array[Int](576); lines(40) = 1
-    val audio = MpegAudio.encodeMp3(
-      Seq(lines, lines, lines, lines), Seq(210, 212, 214, 216), 128)
+    val audio = MpegAudio.encodeMp3(Seq(210, 212, 214, 216).map(gg =>
+      Seq(MpegAudio.Mp3GranSpec(lines, gg))), 128)
     val nAudioFrames = 2
     val v2 = Id3.encodeId3v2(Seq("TIT2" -> "T", "TPE1" -> "P"), major = 3)
     val xing = MpegAudio.makeMp3InfoFrame(128, mono = true,

@@ -141,6 +141,41 @@ class JdbcUpsertSpec extends AnyFunSuite with SparkTestBase {
     JdbcUpsert.mergeIntoParquet(spark, path, batch2, Seq("k"), Seq("ver"))
     assert(state() == Map(101L -> "new", 102L -> "b", 103L -> "c"))
   }
+
+  test("mergeIntoParquet: a stale _old dir from a crashed run does not " +
+      "swallow the merge") {
+    val path = Files.createTempDirectory("graft_merge_debris").toString +
+      "/table"
+    val batch1 = Seq((101L, "old", 1L), (102L, "b", 1L)).toDF("k", "v", "ver")
+    JdbcUpsert.mergeIntoParquet(spark, path, batch1, Seq("k"), Seq("ver"))
+    // debris of a run that died after moving the live table aside
+    Files.createDirectories(java.nio.file.Paths.get(path + "_old"))
+    Files.write(java.nio.file.Paths.get(path + "_old", "part"),
+      "stale".getBytes("UTF-8"))
+    val batch2 = Seq((101L, "new", 2L), (103L, "c", 2L)).toDF("k", "v", "ver")
+    JdbcUpsert.mergeIntoParquet(spark, path, batch2, Seq("k"), Seq("ver"))
+    val state = spark.read.parquet(path).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(state == Map(101L -> "new", 102L -> "b", 103L -> "c"))
+    assert(!Files.exists(java.nio.file.Paths.get(path + "_old")))
+    assert(!Files.exists(java.nio.file.Paths.get(path + "_staging")))
+  }
+
+  test("mergeIntoParquet: a run that died between its two moves (table " +
+      "only in _old) is recovered, not merged into an empty table") {
+    val path = Files.createTempDirectory("graft_merge_midswap").toString +
+      "/table"
+    val batch1 = Seq((101L, "old", 1L), (102L, "b", 1L)).toDF("k", "v", "ver")
+    JdbcUpsert.mergeIntoParquet(spark, path, batch1, Seq("k"), Seq("ver"))
+    Files.move(java.nio.file.Paths.get(path),
+      java.nio.file.Paths.get(path + "_old"))
+    val batch2 = Seq((101L, "new", 2L), (103L, "c", 2L)).toDF("k", "v", "ver")
+    JdbcUpsert.mergeIntoParquet(spark, path, batch2, Seq("k"), Seq("ver"))
+    val state = spark.read.parquet(path).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(state == Map(101L -> "new", 102L -> "b", 103L -> "c"))
+    assert(!Files.exists(java.nio.file.Paths.get(path + "_old")))
+  }
 }
 
 /** Serializable Derby connector factory: the returned lambda captures

@@ -7,6 +7,17 @@ import graft.ops.MpegAudio._
 
 class MpegAudioSpec extends AnyFunSuite {
 
+  /** [granule][channel] specs of plain spectra at one big_values. */
+  private def monoGrans(lines: Seq[Array[Int]], gains: Seq[Int],
+      bv: Int = 0): Seq[Seq[Mp3GranSpec]] =
+    lines.zip(gains).map { case (l, gg) => Seq(Mp3GranSpec(l, gg, bv)) }
+
+  private def stereoGrans(lines: Seq[(Array[Int], Array[Int])],
+      gains: Seq[(Int, Int)], bv: Int = 0): Seq[Seq[Mp3GranSpec]] =
+    lines.zip(gains).map { case ((a, b), (ga, gb)) =>
+      Seq(Mp3GranSpec(a, ga, bv), Mp3GranSpec(b, gb, bv))
+    }
+
   /** MSB-first packer for hand-built frames. */
   private final class Packer {
     private val out = new java.io.ByteArrayOutputStream()
@@ -244,8 +255,8 @@ class MpegAudioSpec extends AnyFunSuite {
     }
     val gains = Seq(200, 210, 190, 226)
     Seq(false, true).foreach { crc =>
-      val enc = MpegAudio.encodeMp3(granules, gains, 192,
-        bigValuesPairs = 16, withCrc = crc)
+      val enc = MpegAudio.encodeMp3(monoGrans(granules, gains, 16), 192,
+        withCrc = crc)
       val frames = MpegAudio.walkFrames(7L, enc)
       assert(frames.length == 2 && frames.forall(_.layer == 3))
       val spectra = MpegAudio.mp3StreamSpectra(7L, enc)
@@ -277,7 +288,7 @@ class MpegAudioSpec extends AnyFunSuite {
       spec(18 * sb + 8) = 1
       spec(18 * sb + 9) = -1
       val granules = Seq.fill(8)(spec)
-      val enc = MpegAudio.encodeMp3(granules, Seq.fill(8)(214), 192)
+      val enc = MpegAudio.encodeMp3(monoGrans(granules, Seq.fill(8)(214)), 192)
       val pcm = MpegAudio.decodeMpegAudio(8L, enc)
       val fps = MpegAudio.audioFingerprints(pcm)
       // skip frame 0 (filterbank + overlap warm-up); every later
@@ -303,8 +314,8 @@ class MpegAudioSpec extends AnyFunSuite {
     }
     val gains = (0 until 8).map(g => 200 + g)
     Seq(false, true).foreach { crc =>
-      val enc = MpegAudio.encodeMp3Reservoir(granules, gains, 224,
-        withCrc = crc)
+      val enc = MpegAudio.encodeMp3(monoGrans(granules, gains), 224,
+        reservoir = true, withCrc = crc)
       val census = MpegAudio.mp3ReservoirCensus(31L, enc)
       assert(census.length == 4)
       assert(census.head._2 == 0, "first frame has no history to point into")
@@ -323,7 +334,8 @@ class MpegAudioSpec extends AnyFunSuite {
       // the flat (main_data_begin = 0) layout of the SAME granules must
       // decode to identical spectra and identical PCM — the reservoir is
       // pure transport
-      val flat = MpegAudio.encodeMp3(granules, gains, 224, withCrc = crc)
+      val flat = MpegAudio.encodeMp3(monoGrans(granules, gains), 224,
+        withCrc = crc)
       assert(MpegAudio.mp3ReservoirCensus(31L, flat).forall(_._2 == 0))
       MpegAudio.mp3StreamSpectra(31L, flat).zip(spectra).foreach {
         case (a, b) => assert(a.sameElements(b))
@@ -335,16 +347,16 @@ class MpegAudioSpec extends AnyFunSuite {
       assert(pcm.sameElements(pcmFlat))
     }
     // big-values region through the reservoir too
-    val enc2 = MpegAudio.encodeMp3Reservoir(granules, gains, 224,
-      bigValuesPairs = 16)
+    val enc2 = MpegAudio.encodeMp3(monoGrans(granules, gains, 16), 224,
+      reservoir = true)
     val s2 = MpegAudio.mp3StreamSpectra(32L, enc2)
     assert(s2.length == 8)
     // a reservoir stream CUT mid-history fails loudly: drop frame 0 and
     // frame 1's back-pointer has nothing to point into
-    val frames = MpegAudio.walkFrames(31L,
-      MpegAudio.encodeMp3Reservoir(granules, gains, 224))
-    val cut = MpegAudio.encodeMp3Reservoir(granules, gains, 224)
-      .drop(frames(1).byte_off.toInt)
+    val resv = MpegAudio.encodeMp3(monoGrans(granules, gains), 224,
+      reservoir = true)
+    val frames = MpegAudio.walkFrames(31L, resv)
+    val cut = resv.drop(frames(1).byte_off.toInt)
     val e = intercept[IllegalArgumentException](
       MpegAudio.decodeMpegAudio(33L, cut))
     assert(e.getMessage.contains("reservoir underflow"))
@@ -365,8 +377,9 @@ class MpegAudioSpec extends AnyFunSuite {
     val gains = (0 until nGr).map(g => (200 + g, 206 - g))
     for (ms <- Seq(true, false); resv <- Seq(true, false);
         crc <- Seq(true, false)) {
-      val enc = MpegAudio.encodeMp3Stereo(granules, gains, 256,
-        bigValuesPairs = 16, msStereo = ms, reservoir = resv, withCrc = crc)
+      val enc = MpegAudio.encodeMp3(stereoGrans(granules, gains, 16), 256,
+        mode = if (ms) 1 else 0, modeExt = if (ms) 2 else 0,
+        reservoir = resv, withCrc = crc)
       val census = MpegAudio.mp3ChannelModeCensus(21L, enc)
       assert(census.length == 2)
       assert(census.forall { case (_, mode, ext, _) =>
@@ -399,13 +412,13 @@ class MpegAudioSpec extends AnyFunSuite {
     import graft.ops.MpegAudio
     val m = new Array[Int](576); m(18 * 7 + 8) = 1
     val z = new Array[Int](576)
-    val encM = MpegAudio.encodeMp3Stereo(Seq.fill(8)((m, z)),
-      Seq.fill(8)((214, 214)), 256)
+    val encM = MpegAudio.encodeMp3(stereoGrans(Seq.fill(8)((m, z)),
+      Seq.fill(8)((214, 214))), 256, mode = 1, modeExt = 2)
     val cM = MpegAudio.decodeMpegAudioChannels(22L, encM)
     cM(0).indices.foreach(i => assert(math.abs(cM(0)(i) - cM(1)(i)) < 1e-12))
     assert(cM(0).exists(math.abs(_) > 1e-6))
-    val encS = MpegAudio.encodeMp3Stereo(Seq.fill(8)((z, m)),
-      Seq.fill(8)((214, 214)), 256)
+    val encS = MpegAudio.encodeMp3(stereoGrans(Seq.fill(8)((z, m)),
+      Seq.fill(8)((214, 214))), 256, mode = 1, modeExt = 2)
     val cS = MpegAudio.decodeMpegAudioChannels(23L, encS)
     cS(0).indices.foreach(i => assert(math.abs(cS(0)(i) + cS(1)(i)) < 1e-12))
     assert(cS(0).exists(math.abs(_) > 1e-6))
@@ -417,8 +430,8 @@ class MpegAudioSpec extends AnyFunSuite {
       "fail loudly by name") {
     import graft.ops.MpegAudio
     val spec = new Array[Int](576); spec(40) = 1
-    val st = MpegAudio.encodeMp3Stereo(Seq((spec, spec), (spec, spec)),
-      Seq((210, 210), (210, 210)), 256)
+    val st = MpegAudio.encodeMp3(stereoGrans(Seq((spec, spec), (spec, spec)),
+      Seq((210, 210), (210, 210))), 256, mode = 1, modeExt = 2)
     // set mode_extension bit 0 (intensity) on every frame header
     val frames = MpegAudio.walkFrames(24L, st)
     val intens = st.clone()
@@ -445,7 +458,8 @@ class MpegAudioSpec extends AnyFunSuite {
       MpegAudio.decodeMpegAudioChannels(25L, mp2st))
     assert(e2.getMessage.contains("named boundary"))
     // mid-stream channel change: a mono stream concatenated with stereo
-    val mono = MpegAudio.encodeMp3(Seq(spec, spec), Seq(210, 210), 256)
+    val mono = MpegAudio.encodeMp3(monoGrans(Seq(spec, spec), Seq(210, 210)),
+      256)
     val e3 = intercept[IllegalArgumentException](
       MpegAudio.decodeMpegAudioChannels(26L, mono ++ st))
     assert(e3.getMessage.contains("channel-count change"))
@@ -458,7 +472,8 @@ class MpegAudioSpec extends AnyFunSuite {
   test("Layer III: out-of-regime streams fail loudly by name") {
     import graft.ops.MpegAudio
     val spec = new Array[Int](576); spec(100) = 1
-    val enc = MpegAudio.encodeMp3(Seq(spec, spec), Seq(210, 210), 192)
+    val enc = MpegAudio.encodeMp3(monoGrans(Seq(spec, spec), Seq(210, 210)),
+      192)
     // corrupting main_data_begin (first 9 bits after the 4-byte header)
     // must name the bit-reservoir boundary
     val res = enc.clone(); res(4) = 0x80.toByte
@@ -551,7 +566,7 @@ class MpegAudioSpec extends AnyFunSuite {
     val g = MpegAudio.Mp3GranSpec(lines = lines, globalGain = 205,
       blockType = 2, scalefacCompress = 9, sfShort = sfShort,
       subblockGain = sbg, scalefacScale = true)
-    val enc = MpegAudio.encodeMp3Advanced(Seq(g, g), 256)
+    val enc = MpegAudio.encodeMp3(Seq(Seq(g), Seq(g)), 256)
     val spectra = MpegAudio.mp3StreamSpectra(70L, enc)
     assert(spectra.length == 2)
     val expected = new Array[Double](576)
@@ -573,7 +588,7 @@ class MpegAudioSpec extends AnyFunSuite {
     omap.zipWithIndex.foreach { case (nat, dec) => inv(nat) = dec }
     (0 until 3).foreach(w => tone(inv(18 * sb + 6 * w + 2)) = 1)
     val g2 = MpegAudio.Mp3GranSpec(lines = tone, globalGain = 230, blockType = 2)
-    val enc2 = MpegAudio.encodeMp3Advanced(Seq(g2, g2, g2, g2), 256)
+    val enc2 = MpegAudio.encodeMp3(Seq.fill(4)(Seq(g2)), 256)
     val pcm = MpegAudio.decodeMpegAudio(71L, enc2)
     MpegAudio.audioFingerprints(pcm).drop(1).foreach { case (_, fp) =>
       assert(((fp >> 15) & 31).toInt == sb,
@@ -596,7 +611,7 @@ class MpegAudioSpec extends AnyFunSuite {
         val g = MpegAudio.Mp3GranSpec(lines = lines, globalGain = 210,
           scalefacCompress = 13, sfLong = sf, preflag = pre,
           scalefacScale = sfs)
-        val enc = MpegAudio.encodeMp3Advanced(Seq(g, g), 224)
+        val enc = MpegAudio.encodeMp3(Seq(Seq(g), Seq(g)), 224)
         val spectra = MpegAudio.mp3StreamSpectra(72L, enc)
         val mult = if (sfs) 1.0 else 0.5
         spectra.foreach { xr =>
@@ -621,8 +636,9 @@ class MpegAudioSpec extends AnyFunSuite {
     (0 until 21).foreach(b => lines(sfbL(b)) = 1)
     val isPos = Array.tabulate(21)(b => b % 8)
     val g = MpegAudio.Mp3GranSpec(lines = lines, globalGain = 210)
-    val enc = MpegAudio.encodeMp3IntensityStereo(
-      Seq((g, isPos), (g, isPos)), 320)
+    val enc = MpegAudio.encodeMp3(
+      Seq.fill(2)(MpegAudio.mp3IntensityGranule(g, isPos)), 320,
+      mode = 1, modeExt = 1)
     assert(MpegAudio.mp3ChannelModeCensus(73L, enc).forall(c =>
       c._2 == 1 && (c._3 & 1) == 1))
     val spectra = MpegAudio.mp3StreamSpectraStereo(73L, enc)
@@ -674,7 +690,7 @@ class MpegAudioSpec extends AnyFunSuite {
       blockType = 2, mixedBlock = true, scalefacCompress = 13,
       sfLong = sfLong, sfShort = sfShort, subblockGain = sbg,
       scalefacScale = true)
-    val enc = MpegAudio.encodeMp3Advanced(Seq(g, g), 256)
+    val enc = MpegAudio.encodeMp3(Seq(Seq(g), Seq(g)), 256)
     val spectra = MpegAudio.mp3StreamSpectra(95L, enc)
     assert(spectra.length == 2)
     val gain = math.pow(2.0, (208 - 210) / 4.0)
@@ -694,7 +710,7 @@ class MpegAudioSpec extends AnyFunSuite {
     val gL = MpegAudio.Mp3GranSpec(lines = toneL, globalGain = 230,
       blockType = 2, mixedBlock = true)
     val pcmL = MpegAudio.decodeMpegAudio(96L,
-      MpegAudio.encodeMp3Advanced(Seq(gL, gL, gL, gL), 256))
+      MpegAudio.encodeMp3(Seq.fill(4)(Seq(gL)), 256))
     MpegAudio.audioFingerprints(pcmL).drop(1).foreach { case (_, fp) =>
       assert(((fp >> 15) & 31).toInt == sbLong,
         s"mixed long-region energy in subband ${(fp >> 15) & 31}, not $sbLong")
@@ -706,17 +722,17 @@ class MpegAudioSpec extends AnyFunSuite {
     val gS = MpegAudio.Mp3GranSpec(lines = toneS, globalGain = 230,
       blockType = 2, mixedBlock = true)
     val pcmS = MpegAudio.decodeMpegAudio(97L,
-      MpegAudio.encodeMp3Advanced(Seq(gS, gS, gS, gS), 256))
+      MpegAudio.encodeMp3(Seq.fill(4)(Seq(gS)), 256))
     MpegAudio.audioFingerprints(pcmS).drop(1).foreach { case (_, fp) =>
       assert(((fp >> 15) & 31).toInt == sbShort,
         s"mixed short-region energy in subband ${(fp >> 15) & 31}, not $sbShort")
     }
     // mixed with a non-short block type fails loudly at encode
     val bad = intercept[IllegalArgumentException](
-      MpegAudio.encodeMp3Advanced(Seq(
-        MpegAudio.Mp3GranSpec(lines = new Array[Int](576), globalGain = 210,
-          blockType = 1, mixedBlock = true),
-        MpegAudio.Mp3GranSpec(lines = new Array[Int](576), globalGain = 210)),
+      MpegAudio.encodeMp3(Seq(
+        Seq(MpegAudio.Mp3GranSpec(lines = new Array[Int](576), globalGain = 210,
+          blockType = 1, mixedBlock = true)),
+        Seq(MpegAudio.Mp3GranSpec(lines = new Array[Int](576), globalGain = 210))),
         256))
     assert(bad.getMessage.contains("mixed_block_flag needs block_type 2"))
   }
@@ -738,7 +754,7 @@ class MpegAudioSpec extends AnyFunSuite {
       val g0 = MpegAudio.Mp3GranSpec(lines = lines, globalGain = 210,
         scalefacCompress = 13, sfLong = sf0)
       val g1 = g0.copy(sfLong = sf1)
-      val enc = MpegAudio.encodeMp3Advanced(Seq(g0, g1), 256, scfsi = scfsi)
+      val enc = MpegAudio.encodeMp3(Seq(Seq(g0), Seq(g1)), 256, scfsi = scfsi)
       val spectra = MpegAudio.mp3StreamSpectra(80L + scfsi, enc)
       assert(spectra.length == 2)
       Seq(sf0, sf1).zip(spectra).foreach { case (sf, xr) =>
@@ -755,16 +771,42 @@ class MpegAudioSpec extends AnyFunSuite {
       val g0 = MpegAudio.Mp3GranSpec(lines = lines, globalGain = 210,
         scalefacCompress = 13, sfLong = Array.fill(21)(2))
       val g1 = g0.copy(sfLong = Array.fill(21)(3))
-      MpegAudio.encodeMp3Advanced(Seq(g0, g1), 256, scfsi = 8)
+      MpegAudio.encodeMp3(Seq(Seq(g0), Seq(g1)), 256, scfsi = 8)
     }
     assert(bad.getMessage.contains("scfsi-shared band"))
     // scfsi with short blocks is malformed, both directions by name
     val badShort = intercept[IllegalArgumentException] {
       val g = MpegAudio.Mp3GranSpec(lines = new Array[Int](576),
         globalGain = 210, blockType = 2)
-      MpegAudio.encodeMp3Advanced(Seq(g, g), 256, scfsi = 1)
+      MpegAudio.encodeMp3(Seq(Seq(g), Seq(g)), 256, scfsi = 1)
     }
     assert(badShort.getMessage.contains("long scalefactor layout"))
+  }
+
+  test("encodeMp3 refuses malformed input by name: an odd granule " +
+      "count (mono and stereo), main data past the region (flat and " +
+      "reservoir), scfsi on stereo") {
+    val z = new Array[Int](576)
+    val eMono = intercept[IllegalArgumentException](
+      MpegAudio.encodeMp3(monoGrans(Seq.fill(3)(z), Seq.fill(3)(210)), 128))
+    assert(eMono.getMessage.contains("even number of granules"))
+    val eSt = intercept[IllegalArgumentException](MpegAudio.encodeMp3(
+      stereoGrans(Seq.fill(3)((z, z)), Seq.fill(3)((210, 210))), 256,
+      mode = 1, modeExt = 2))
+    assert(eSt.getMessage.contains("even number of granules"))
+    // every line nonzero in the big-values region: 1440 Huffman bits per
+    // granule against a 75-byte region at 32 kbps
+    val dense = Array.tabulate(576)(i => if (i % 3 == 0) -1 else 1)
+    Seq(false, true).foreach { resv =>
+      val e = intercept[IllegalArgumentException](MpegAudio.encodeMp3(
+        monoGrans(Seq.fill(4)(dense), Seq.fill(4)(210), 288), 32,
+        reservoir = resv))
+      assert(e.getMessage.contains("raise the bitrate"), e.getMessage)
+    }
+    val eScfsi = intercept[IllegalArgumentException](MpegAudio.encodeMp3(
+      stereoGrans(Seq.fill(2)((z, z)), Seq.fill(2)((210, 210))), 256,
+      mode = 0, scfsi = 8))
+    assert(eScfsi.getMessage.contains("mono streams only"), eScfsi.getMessage)
   }
 
   test("intensity on short blocks (round 12, session 2): each window's " +
@@ -795,8 +837,8 @@ class MpegAudioSpec extends AnyFunSuite {
     val gr = MpegAudio.Mp3GranSpec(lines = linesS, globalGain = 210,
       blockType = 2, scalefacCompress = 13, sfShort = sfS)
     Seq(1, 3).foreach { modeExt =>
-      val enc = MpegAudio.encodeMp3StereoAdvanced(
-        Seq((gl, gr), (gl, gr)), 320, modeExt = modeExt)
+      val enc = MpegAudio.encodeMp3(Seq.fill(2)(Seq(gl, gr)), 320,
+        mode = 1, modeExt = modeExt)
       val census = MpegAudio.mp3ChannelModeCensus(100L + modeExt, enc)
       assert(census.forall(c => c._2 == 1 && (c._3 & 1) == 1))
       val spectra = MpegAudio.mp3StreamSpectraStereo(100L + modeExt, enc)
@@ -840,8 +882,8 @@ class MpegAudioSpec extends AnyFunSuite {
     // intensity on MIXED blocks stays a named boundary
     val gm = MpegAudio.Mp3GranSpec(lines = new Array[Int](576),
       globalGain = 210, blockType = 2, mixedBlock = true)
-    val encBad = MpegAudio.encodeMp3StereoAdvanced(
-      Seq((gl, gm), (gl, gm)), 320, modeExt = 1)
+    val encBad = MpegAudio.encodeMp3(Seq.fill(2)(Seq(gl, gm)), 320,
+      mode = 1, modeExt = 1)
     val e = intercept[IllegalArgumentException](
       MpegAudio.mp3StreamSpectraStereo(105L, encBad))
     assert(e.getMessage.contains("mixed-block"), e.getMessage)
@@ -852,8 +894,8 @@ class MpegAudioSpec extends AnyFunSuite {
       "tiling, so the census falls back to the untrimmed walk; a " +
       "stream that fails both ways surfaces the original error") {
     val spec = new Array[Int](576); spec(40) = 1
-    val audio = MpegAudio.encodeMp3(Seq.fill(4)(spec), Seq.fill(4)(210),
-      160) // 2 frames x 480 B at 48 kHz
+    val audio = MpegAudio.encodeMp3(monoGrans(Seq.fill(4)(spec),
+      Seq.fill(4)(210)), 160) // 2 frames x 480 B at 48 kHz
     val off = audio.length - 128
     // the planted magic lands strictly inside frame 2's data bytes
     // (frame starts at 480; 832 - 480 = 352 >> header+side info)

@@ -147,7 +147,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     val pix = (i: Int) => (i * 11) % 256
     // PNG: odd+even text lengths, CRC-checked by the reader
     val tags = Seq("Title" -> "A Graft Image", "Author" -> "someone")
-    val png = encodePng(16, 8, pix)
+    val png = encodePng(16, 8, 8, 0, packedSample(0, pix))
     val tagged = insertPngText(png, tags)
     assert(readPngText(1L, tagged) == tags)
     assert(readPngText(2L, png).isEmpty)
@@ -265,7 +265,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     // exercises every filter; plus 1×1 and single-row edge shapes
     for ((w, h) <- Seq((23, 9), (64, 64), (1, 1), (7, 1), (1, 7))) {
       val px = Array.fill(w * h)(rng.nextInt(256))
-      val enc = encodePng(w, h, px(_))
+      val enc = encodePng(w, h, 8, 0, packedSample(0, px(_)))
       val (dw, dh, dec, _) = decodePngRaster(enc)
       assert(dw == w && dh == h && dec.toSeq == px.toSeq, s"round trip ${w}x$h")
       // independent reference decoder: javax.imageio must read our bytes
@@ -288,7 +288,8 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     assert(dw == w && dh == h && dec.toSeq == px.toSeq)
     // run-structured data must genuinely compress through DEFLATE
     val runs = Array.tabulate(100 * 100)(i => (i / 50) % 16)
-    assert(decodePng(1L, encodePng(100, 100, runs(_))).n_idat_bytes < 10000L / 3)
+    assert(decodePng(1L, encodePng(100, 100, 8, 0,
+      packedSample(0, runs(_)))).n_idat_bytes < 10000L / 3)
   }
 
   test("GZIP: round trip bit-exact, genuine compression, corrupt stream fails loudly") {
@@ -688,7 +689,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     }
     val hp = averageHashPgm(1L, encodePgm(w, h, 255, pix))
     assert(averageHashJpeg(1L, encodeJpeg(w, h, pix)) == hp)
-    assert(averageHashPng(1L, encodePng(w, h, pix)) == hp)
+    assert(averageHashPng(1L, encodePng(w, h, 8, 0, packedSample(0, pix))) == hp)
     // 8-bit GIF: the grayscale ramp palette is the identity map
     assert(averageHashGif(1L, encodeGif(w, h, 8, pix)) == hp)
     // sub-8-bit GIF still hashes (palette g = c·255/(n−1), achromatic)
@@ -847,7 +848,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     }
     def fp(hsh: ImageHash): Long =
       (hsh.hash_hi << 32) | (hsh.hash_lo & 0xFFFFFFFFL)
-    val hp = dctHashPng(1L, encodePng(w, h, pix))
+    val hp = dctHashPng(1L, encodePng(w, h, 8, 0, packedSample(0, pix)))
     assert(fp(dctHashPgm(2L, encodePgm(w, h, 255, pix))) == fp(hp))
     assert(fp(dctHashGif(3L, encodeGif(w, h, 8, pix))) == fp(hp))
     val hj = dctHashJpeg(4L, encodeJpeg(w, h, pix, uniformQuantTable(24)))
@@ -860,7 +861,8 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     import graft.ops.Multimodal._
     val (w, h) = (16, 16)
     def pix(i: Int): Int = (i * 7) % 256
-    assert(sniffMediaType(encodePng(w, h, pix)) == "image/png")
+    assert(sniffMediaType(encodePng(w, h, 8, 0, packedSample(0, pix))) ==
+      "image/png")
     assert(sniffMediaType(encodeGif(w, h, 8, pix)) == "image/gif")
     assert(sniffMediaType(encodeJpeg(w, h, pix)) == "image/jpeg")
     assert(sniffMediaType(encodePgm(w, h, 255, pix)) == "image/x-pgm")
@@ -887,8 +889,8 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     // refuse through the gray-only raster path
     locally {
       import spark.implicits._
-      val cpng = encodePngColor(w, h, 2,
-        i => (pix(i) << 16) | (pix(i + 1) << 8) | pix(i + 2))
+      val cpng = encodePng(w, h, 8, 2, packedSample(2,
+        i => (pix(i) << 16) | (pix(i + 1) << 8) | pix(i + 2)))
       val st = sniffStats(Seq(MediaRecord(78L, cpng, "png", "xx")).toDS())
         .collect()(0)
       assert(st.media_type == "image/png" && st.n_units == (w * h).toLong)
@@ -1068,20 +1070,20 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     def rgb(i: Int): Int = (((i * 37 + 11) % 256) << 16) |
       (((i * 91 + 5) % 256) << 8) | ((i * 53 + 2) % 256)
     // type 2 (truecolor): exact, alpha forced FF
-    val p2 = encodePngColor(w, h, 2, rgb)
+    val p2 = encodePng(w, h, 8, 2, packedSample(2, rgb))
     val (w2, h2, px2, _) = decodePngRgb(1L, p2)
     assert(w2 == w && h2 == h)
     assert((0 until n).forall(i => px2(i) == (0xFF000000 | rgb(i))),
       "truecolor must round-trip exactly")
     // type 6 (RGBA): alpha carried exactly
     def argb(i: Int): Int = (((i * 7 + 3) % 256) << 24) | rgb(i)
-    val p6 = encodePngColor(w, h, 6, argb)
+    val p6 = encodePng(w, h, 8, 6, packedSample(6, argb))
     val (_, _, px6, _) = decodePngRgb(2L, p6)
     assert((0 until n).forall(i => px6(i) == argb(i)),
       "RGBA must round-trip exactly, alpha included")
     // type 3 (palette): 16 colors, indices map through PLTE
     val pal = Array.tabulate(16)(c => (c * 17 << 16) | (255 - c * 13 << 8) | c * 5)
-    val p3 = encodePngColor(w, h, 3, i => (i * 3) % 16, palette = pal)
+    val p3 = encodePng(w, h, 8, 3, packedSample(3, i => (i * 3) % 16), pal)
     val (_, _, px3, _) = decodePngRgb(3L, p3)
     assert((0 until n).forall(i =>
       px3(i) == (0xFF000000 | pal((i * 3) % 16))))
@@ -1089,9 +1091,10 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     // grayscale codec (the fixed-point Y constants sum to 2^16, so
     // gray passes through EXACTLY)
     val gray = (i: Int) => (i * 11) % 256
-    val pg2 = encodePngColor(w, h, 2, i => gray(i) * 0x010101)
+    val pg2 = encodePng(w, h, 8, 2, packedSample(2, i => gray(i) * 0x010101))
     val (_, _, luma) = decodePngLuma(4L, pg2)
-    val (_, _, g0, _) = decodePngRaster(encodePng(w, h, gray))
+    val (_, _, g0, _) =
+      decodePngRaster(encodePng(w, h, 8, 0, packedSample(0, gray)))
     assert(luma.sameElements(g0), "gray-through-color luma must be exact")
     // the grayscale raster path refuses color images by name
     val eGray = intercept[IllegalArgumentException](decodePngRaster(p2))
@@ -1148,7 +1151,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     val pal = Array.tabulate(16)(c => (c * 15 << 16) | (200 - c * 9 << 8) | c * 11)
     val idx = (i: Int) => (i * 5 + 2) % 16
     val gif = encodeGifPalette(w, h, 4, idx, pal)
-    val png = encodePngColor(w, h, 3, idx, palette = pal)
+    val png = encodePng(w, h, 8, 3, packedSample(3, idx), pal)
     val (gw, gh, grgb) = gifRgbRaster(10L, gif)
     val (pw, ph, prgb, _) = decodePngRgb(11L, png)
     assert(gw == pw && gh == ph && grgb.sameElements(prgb),
@@ -1183,30 +1186,32 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     // once per cell), 13x7 and 20x11 (ragged everything)
     val sizes = Seq((1, 1), (3, 3), (8, 8), (13, 7), (20, 11))
     sizes.foreach { case (w, h) =>
+      def packed(ct: Int, px: Int => Int, lace: Boolean) =
+        encodePng(w, h, 8, ct, packedSample(ct, px), interlaced = lace)
       val gray = (i: Int) => (i * 29 + 7) % 256
-      val (sw, sh, sp, _) = decodePngRaster(encodePng(w, h, gray))
-      val (iw, ih, ip, _) = decodePngRaster(encodePngAdam7(w, h, 0, gray))
+      val (sw, sh, sp, _) = decodePngRaster(packed(0, gray, false))
+      val (iw, ih, ip, _) = decodePngRaster(packed(0, gray, true))
       assert(sw == iw && sh == ih && sp.sameElements(ip),
         s"gray ${w}x$h: interlaced != sequential")
       val rgb = (i: Int) => (((i * 37 + 11) % 256) << 16) |
         (((i * 91 + 5) % 256) << 8) | ((i * 53 + 2) % 256)
-      val (_, _, s2, _) = decodePngRgb(20L, encodePngColor(w, h, 2, rgb))
-      val (_, _, i2, _) = decodePngRgb(21L, encodePngAdam7(w, h, 2, rgb))
+      val (_, _, s2, _) = decodePngRgb(20L, packed(2, rgb, false))
+      val (_, _, i2, _) = decodePngRgb(21L, packed(2, rgb, true))
       assert(s2.sameElements(i2), s"rgb ${w}x$h: interlaced != sequential")
       val argb = (i: Int) => (((i * 7 + 3) % 256) << 24) | rgb(i)
-      val (_, _, s6, _) = decodePngRgb(22L, encodePngColor(w, h, 6, argb))
-      val (_, _, i6, _) = decodePngRgb(23L, encodePngAdam7(w, h, 6, argb))
+      val (_, _, s6, _) = decodePngRgb(22L, packed(6, argb, false))
+      val (_, _, i6, _) = decodePngRgb(23L, packed(6, argb, true))
       assert(s6.sameElements(i6), s"rgba ${w}x$h")
       val pal = Array.tabulate(16)(c => (c * 17 << 16) | (c * 3 << 8) | c)
       val idx = (i: Int) => (i * 3 + 1) % 16
       val (_, _, s3, _) = decodePngRgb(24L,
-        encodePngColor(w, h, 3, idx, palette = pal))
+        encodePng(w, h, 8, 3, packedSample(3, idx), pal))
       val (_, _, i3, _) = decodePngRgb(25L,
-        encodePngAdam7(w, h, 3, idx, palette = pal))
+        encodePng(w, h, 8, 3, packedSample(3, idx), pal, interlaced = true))
       assert(s3.sameElements(i3), s"palette ${w}x$h")
     }
     // undefined interlace method stays loud
-    val plain = encodePng(4, 4, _ => 7)
+    val plain = encodePng(4, 4, 8, 0, packedSample(0, _ => 7))
     val bad = plain.clone(); bad(28) = 2 // IHDR interlace byte
     val td = "IHDR".getBytes("US-ASCII") ++
       java.util.Arrays.copyOfRange(bad, 16, 29)
@@ -1263,8 +1268,8 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     val pal = Array.tabulate(8)(c => c * 0x030201)
     val alphas = Array(0, 64, 128, 192, 255)
     val idx = (i: Int) => i % 8
-    val p3 = encodePngColor(w, h, 3, idx, palette = pal,
-      trnsAlphas = alphas)
+    val p3 = encodePng(w, h, 8, 3, packedSample(3, idx), pal,
+      alphas.map(_.toByte))
     val (_, _, px3, _) = decodePngRgb(40L, p3)
     (0 until w * h).foreach { i =>
       val a = if (idx(i) < 5) alphas(idx(i)) else 255
@@ -1273,7 +1278,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     }
     // type 0: gray color key via a hand-built tRNS chunk (encoder is
     // type-3-only, so splice the chunk between IHDR and IDAT)
-    val gray = encodePng(w, h, i => i % 8)
+    val gray = encodePng(w, h, 8, 0, packedSample(0, i => i % 8))
     def chunkOf(typ: String, data: Array[Byte]): Array[Byte] = {
       val td = typ.getBytes("US-ASCII") ++ data
       val c = new java.util.zip.CRC32; c.update(td)
@@ -1293,7 +1298,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     }
     // type 2: RGB color key (6 bytes, 2 per channel)
     val rgb = (i: Int) => ((i % 3) << 16) | 0x0207
-    val p2 = encodePngColor(w, h, 2, rgb)
+    val p2 = encodePng(w, h, 8, 2, packedSample(2, rgb))
     val key2 = Array[Byte](0, 1, 0, 2, 0, 7) // keys out pixels with r=1
     val p2k = p2.take(ihdrEnd) ++ chunkOf("tRNS", key2) ++ p2.drop(ihdrEnd)
     val (_, _, px2, _) = decodePngRgb(42L, p2k)
@@ -1307,9 +1312,9 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
       chunkOf("tRNS", Array[Byte](5)) ++ gray.drop(ihdrEnd)
     val e1 = intercept[IllegalArgumentException](decodePngRgb(43L, badLen))
     assert(e1.getMessage.contains("must be 2 bytes"))
-    intercept[IllegalArgumentException](encodePngColor(w, h, 3, idx,
-      palette = pal, trnsAlphas = Array.fill(9)(1)))
-    val p6 = encodePngColor(w, h, 6, i => 0x11000000 | rgb(i))
+    intercept[IllegalArgumentException](encodePng(w, h, 8, 3,
+      packedSample(3, idx), pal, Array.fill(9)(1.toByte)))
+    val p6 = encodePng(w, h, 8, 6, packedSample(6, i => 0x11000000 | rgb(i)))
     val p6t = p6.take(ihdrEnd) ++ chunkOf("tRNS", Array[Byte](0, 1)) ++
       p6.drop(ihdrEnd)
     val e2 = intercept[IllegalArgumentException](decodePngRgb(44L, p6t))
@@ -1338,7 +1343,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
       else null
       val lim = if (ct == 3) pal.length else maxV + 1
       def sample(i: Int, c: Int): Int = (i * (3 + 2 * c) + 7 * c + depth) % lim
-      val png = encodePngEx(w, h, depth, ct, sample, pal,
+      val png = encodePng(w, h, depth, ct, sample, pal,
         interlaced = lace)
       if (ct == 0) {
         // native-sample contract + stats carry the real depth
@@ -1377,11 +1382,11 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     // illegal cells refuse at encode AND decode (decode side pinned in
     // the handmade-vector test); out-of-range samples refuse at encode
     intercept[IllegalArgumentException](
-      encodePngEx(2, 2, 16, 3, (_, _) => 0, Array(1)))
+      encodePng(2, 2, 16, 3, (_, _) => 0, Array(1)))
     intercept[IllegalArgumentException](
-      encodePngEx(2, 2, 4, 2, (_, _) => 0))
+      encodePng(2, 2, 4, 2, (_, _) => 0))
     val eRange = intercept[IllegalArgumentException](
-      encodePngEx(2, 2, 4, 0, (_, _) => 16))
+      encodePng(2, 2, 4, 0, (_, _) => 16))
     assert(eRange.getMessage.contains("outside 0..15"))
   }
 
@@ -1440,7 +1445,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     // 16-bit gray: our encoder → ImageIO reader, native samples
     val (w, h) = (11, 6)
     val g16 = Array.fill(w * h)(rng.nextInt(65536))
-    val enc16 = encodePngEx(w, h, 16, 0, (i, _) => g16(i))
+    val enc16 = encodePng(w, h, 16, 0, (i, _) => g16(i))
     val img16 = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(enc16))
     assert(img16.getWidth == w && img16.getHeight == h)
@@ -1458,7 +1463,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     assert(dw == w && dh == h && dec.toSeq == g16.toSeq)
     // 16-bit truecolor: our encoder → ImageIO, per-band native samples
     val rgb16 = Array.fill(w * h * 3)(rng.nextInt(65536))
-    val encC = encodePngEx(w, h, 16, 2, (i, c) => rgb16(3 * i + c))
+    val encC = encodePng(w, h, 16, 2, (i, c) => rgb16(3 * i + c))
     val imgC = javax.imageio.ImageIO.read(
       new java.io.ByteArrayInputStream(encC))
     for (y <- 0 until h; x <- 0 until w; c <- 0 until 3)
@@ -1466,7 +1471,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     // sub-byte gray (1/2/4): ImageIO's raster carries the native bits
     for (d <- Seq(1, 2, 4)) {
       val px = Array.fill(w * h)(rng.nextInt(1 << d))
-      val encD = encodePngEx(w, h, d, 0, (i, _) => px(i))
+      val encD = encodePng(w, h, d, 0, (i, _) => px(i))
       val imgD = javax.imageio.ImageIO.read(
         new java.io.ByteArrayInputStream(encD))
       for (y <- 0 until h; x <- 0 until w)
@@ -1481,7 +1486,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     val w = 8; val h = 3
     // 16-bit gray key 0x1234: only exact native matches go transparent
     val gv = Array.tabulate(w * h)(i => if (i % 5 == 0) 0x1234 else 0x1233 + i)
-    val gKey = encodePngEx(w, h, 16, 0, (i, _) => gv(i),
+    val gKey = encodePng(w, h, 16, 0, (i, _) => gv(i),
       trnsRaw = Array[Byte](0x12, 0x34))
     val (_, _, pxg, _) = decodePngRgb(60L, gKey)
     (0 until w * h).foreach { i =>
@@ -1493,7 +1498,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     def rv(i: Int) = if (i % 4 == 0) kr else i
     def gv2(i: Int) = if (i % 4 == 0) kg else 2 * i + 1
     def bv(i: Int) = if (i % 2 == 0) kb else i + 3 // matches b alone on 2-mod
-    val cKey = encodePngEx(w, h, 16, 2,
+    val cKey = encodePng(w, h, 16, 2,
       (i, c) => c match { case 0 => rv(i); case 1 => gv2(i); case _ => bv(i) },
       trnsRaw = Array[Byte](0x01, 0x02, 0xFF.toByte, 0xFE.toByte,
         0x80.toByte, 0x00))
@@ -1504,7 +1509,7 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
     }
     // depth-2 palette with per-index alphas for entries 0..1
     val pal = Array(0x111111, 0x222222, 0x333333, 0x444444)
-    val p2t = encodePngEx(w, h, 2, 3, (i, _) => i % 4, pal,
+    val p2t = encodePng(w, h, 2, 3, (i, _) => i % 4, pal,
       trnsRaw = Array[Byte](10, 200.toByte))
     val (_, _, pxp, _) = decodePngRgb(62L, p2t)
     (0 until w * h).foreach { i =>
@@ -1512,10 +1517,28 @@ class MultimodalSpec extends AnyFunSuite with SparkTestBase {
       assert(pxp(i) == ((a << 24) | pal(i % 4)), s"pal2 i=$i")
     }
     // alpha-channel types refuse tRNS at encode, matching the decoder
-    intercept[IllegalArgumentException](encodePngEx(2, 2, 16, 4,
+    intercept[IllegalArgumentException](encodePng(2, 2, 16, 4,
       (_, _) => 0, trnsRaw = Array[Byte](0, 0)))
-    intercept[IllegalArgumentException](encodePngEx(2, 2, 8, 6,
+    intercept[IllegalArgumentException](encodePng(2, 2, 8, 6,
       (_, _) => 0, trnsRaw = Array[Byte](0, 0)))
+  }
+
+  test("encodePng refuses malformed packed input by name, sequential " +
+      "and Adam7: a palette index outside PLTE, PLTE on a non-palette " +
+      "type") {
+    val pal = Array(0x102030, 0x405060, 0x708090)
+    Seq(false, true).foreach { lace =>
+      val e1 = intercept[IllegalArgumentException](encodePng(4, 2, 8, 3,
+        packedSample(3, i => i % 4), pal, interlaced = lace))
+      assert(e1.getMessage.contains("palette index 3 outside 0..2"),
+        e1.getMessage)
+      Seq(0, 2, 6).foreach { ct =>
+        val e2 = intercept[IllegalArgumentException](encodePng(4, 2, 8, ct,
+          packedSample(ct, _ => 7), pal, interlaced = lace))
+        assert(e2.getMessage.contains("PLTE is color-type-3-only"),
+          e2.getMessage)
+      }
+    }
   }
 
   test("GIF raster indices outside the color table fail loudly by name " +

@@ -172,7 +172,7 @@ class TiffSpec extends AnyFunSuite {
     val viaTiff = decodeTiff(30L, encodeTiff(w, h, 2, rgb, 3,
       bigEndian = true)).rgb
     val (_, _, viaPng, _) = Multimodal.decodePngRgb(31L,
-      Multimodal.encodePngColor(w, h, 2, rgb))
+      Multimodal.encodePng(w, h, 8, 2, Multimodal.packedSample(2, rgb)))
     assert(viaTiff.sameElements(viaPng))
   }
 }
