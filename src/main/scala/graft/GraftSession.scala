@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.io.{NioLocalFileSystem, NioLocalFs}
+
 /** Recommended session configuration for the engine — one place encoding
   * the scale decisions instead of scattering conf strings:
   *
@@ -14,8 +16,18 @@ import org.apache.spark.sql.SparkSession
   *    large scans)
   *  - UTC session timezone (oracle parity + the reference's tz_localize)
   *  - nanos-as-long parquet reads (the events fixture; harmless elsewhere)
+  *  - the `file://` file systems of [[localFsConf]]
   */
 object GraftSession {
+  /** The Hadoop `file://` implementations every graft session runs on,
+    * [[builder]] and [[harness]] alike: the stock local file systems
+    * without their `chmod`/`readlink` child processes
+    * ([[graft.io.NioRawLocalFileSystem]]). A fixed default, not an
+    * option. */
+  val localFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+
   def builder(master: String = "local[*]", shufflePartitions: Option[Int] = None): SparkSession.Builder = {
     val parts = shufflePartitions.getOrElse(Runtime.getRuntime.availableProcessors())
     SparkSession.builder()
@@ -29,6 +41,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config(localFsConf)
   }
 
   /** Core count of the [[harness]] session: `SPARK_GRAFT_CPUS`, default 4. */
@@ -36,11 +49,11 @@ object GraftSession {
 
   /** The one session the harness mains run on (`Bench`, `Verify`, and
     * the `tools` mains): `local[harnessCpus]`, shuffle partitions =
-    * cpus, UTC, UI off, and a 2000-entry codegen cache — 80+ queries ×
-    * several codegen units each overflow the default 100 entries, and
-    * the LRU thrash then recompiles big classes (64-slot aggs)
-    * mid-suite, showing up as wandering multi-second spikes on
-    * whichever query recompiles. AQE and scan sizing stay at Spark's
+    * cpus, UTC, UI off, [[localFsConf]], and a 2000-entry codegen cache
+    * — 80+ queries × several codegen units each overflow the default
+    * 100 entries, and the LRU thrash then recompiles big classes
+    * (64-slot aggs) mid-suite, showing up as wandering multi-second
+    * spikes on whichever query recompiles. AQE and scan sizing stay at Spark's
     * defaults: the board and the bench are measured on this session,
     * not on [[builder]]'s. */
   def harness(): SparkSession = {
@@ -51,6 +64,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      .config(localFsConf)
       .getOrCreate()
   }
 }

@@ -379,14 +379,19 @@ object MpegAudio {
     out.toByteArray
   }
 
+  /** The one frame-header writer. A bitrate outside the layer's table
+    * (or 0, free format, which this codec never writes) is refused by
+    * name: its `indexOf` of -1 would otherwise land as index 15. */
   private def writeHeader(bw: BitWriter, layer: Int, bitrateKbps: Int,
       crcProtected: Boolean = false, srIdx: Int = 1,
       padding: Boolean = false, mode: Int = 3, modeExt: Int = 0): Unit = {
+    val bitrateIdx = BitrateKbps(layer).indexOf(bitrateKbps)
+    require(bitrateIdx >= 1, s"mpeg: bad layer-$layer bitrate $bitrateKbps")
     bw.put(0xFFF, 12) // sync
     bw.put(1, 1) // ID: MPEG-1
     bw.put(4 - layer, 2) // layer bits: I→11, II→10, III→01
     bw.put(if (crcProtected) 0 else 1, 1) // protection (0 = CRC present)
-    bw.put(BitrateKbps(layer).indexOf(bitrateKbps), 4)
+    bw.put(bitrateIdx, 4)
     bw.put(srIdx, 2) // sample rate index (1 = 48 kHz, the codec rate)
     bw.put(if (padding) 1 else 0, 1) // padding slot
     bw.put(0, 1) // private
@@ -854,8 +859,6 @@ object MpegAudio {
   def syntheticStream(layer: Int, bitrateKbps: Int, nFrames: Int,
       sampleRate: Int = Mp2Rate): Array[Byte] = {
     require(nFrames > 0, "mpeg: need at least one frame")
-    val idx = BitrateKbps(layer).indexOf(bitrateKbps)
-    require(idx >= 1, s"mpeg: bad layer-$layer bitrate $bitrateKbps")
     val srIdx = SampleRates.indexOf(sampleRate)
     require(srIdx >= 0, s"mpeg: bad sample rate $sampleRate")
     // CBR slot arithmetic with the standard fractional-remainder

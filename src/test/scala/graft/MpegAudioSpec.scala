@@ -493,6 +493,25 @@ class MpegAudioSpec extends AnyFunSuite {
     assert(e2.getMessage.contains("block_type 0 is reserved"))
   }
 
+  test("every header writer refuses a bitrate outside its layer's table " +
+    "by name instead of writing index 15") {
+    val spec = new Array[Int](576); spec(100) = 1
+    val writers: Seq[(String, () => Array[Byte])] = Seq(
+      "layer-3 bitrate 100" -> (() =>
+        MpegAudio.encodeMp3(monoGrans(Seq(spec, spec), Seq(210, 210)), 100)),
+      "layer-3 bitrate 100" -> (() =>
+        MpegAudio.makeMp3InfoFrame(100, mono = true, 1, 0, vbr = false)),
+      "layer-2 bitrate 40" -> (() => MpegAudio.syntheticStream(2, 40, 1)),
+      "layer-1 bitrate 0" -> (() => MpegAudio.syntheticStream(1, 0, 1)))
+    writers.foreach { case (name, write) =>
+      val e = intercept[IllegalArgumentException](write())
+      assert(e.getMessage.contains(s"bad $name"), e.getMessage)
+    }
+    // the table's own top entry still writes a header the walker accepts
+    val ok = MpegAudio.encodeMp3(monoGrans(Seq(spec, spec), Seq(210, 210)), 320)
+    assert(MpegAudio.walkFrames(1L, ok).length == 1)
+  }
+
   test("window switching satisfies TDAC perfect reconstruction (round " +
       "12): a forward-MDCT'd signal through the long→start→short→stop→" +
       "long window chain overlap-adds back to a constant multiple of " +

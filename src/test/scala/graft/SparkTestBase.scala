@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (UTC, ANSI default-on as in
-  * production — the coercion ops must pass under ANSI). */
+  * production — the coercion ops must pass under ANSI — and the
+  * product's `file://` file systems, [[GraftSession.localFsConf]]). */
 object SparkTestBase {
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
@@ -12,6 +13,7 @@ object SparkTestBase {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFsConf)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
