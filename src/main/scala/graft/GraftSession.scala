@@ -16,17 +16,33 @@ import graft.io.{NioLocalFileSystem, NioLocalFs}
   *    large scans)
   *  - UTC session timezone (oracle parity + the reference's tz_localize)
   *  - nanos-as-long parquet reads (the events fixture; harmless elsewhere)
-  *  - the `file://` file systems of [[localFsConf]]
+  *  - the fixed settings of [[sessionConf]]
   */
 object GraftSession {
-  /** The Hadoop `file://` implementations every graft session runs on,
-    * [[builder]] and [[harness]] alike: the stock local file systems
-    * without their `chmod`/`readlink` child processes
-    * ([[graft.io.NioRawLocalFileSystem]]). A fixed default, not an
-    * option. */
-  val localFsConf: Map[String, String] = Map(
+  /** The fixed settings every graft session runs on, [[builder]],
+    * [[harness]] and the specs' session alike. A fixed default, not an
+    * option.
+    *
+    *  - The Hadoop `file://` implementations: the stock local file
+    *    systems without their `chmod`/`readlink` child processes
+    *    ([[graft.io.NioRawLocalFileSystem]]).
+    *  - Artifact isolation off. Spark keys its codegen cache on
+    *    (context class loader, source), and isolation gives every
+    *    session UUID its own executor class loader. Each streaming call
+    *    makes a child session and each query start clones it again, so
+    *    with isolation on every call recompiles every generated class in
+    *    its tasks. Isolation only serves Spark Connect clients that add
+    *    their own jars or classes; nothing here adds artifacts.
+    *  - A 2000-entry codegen cache. Each source is cached under both
+    *    the driver's and the executors' class loader, so the ~90 sources
+    *    of one streaming pass, or the 80+ queries of the board with
+    *    several units each, overflow the default 100 entries, and the
+    *    LRU thrash then recompiles big classes (64-slot aggs) mid-run. */
+  val sessionConf: Map[String, String] = Map(
     "spark.hadoop.fs.file.impl" -> classOf[NioLocalFileSystem].getName,
-    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName)
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[NioLocalFs].getName,
+    "spark.sql.artifact.isolation.enabled" -> "false",
+    "spark.sql.codegen.cache.maxEntries" -> "2000")
 
   def builder(master: String = "local[*]", shufflePartitions: Option[Int] = None): SparkSession.Builder = {
     val parts = shufflePartitions.getOrElse(Runtime.getRuntime.availableProcessors())
@@ -41,7 +57,7 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config(localFsConf)
+      .config(sessionConf)
   }
 
   /** Core count of the [[harness]] session: `SPARK_GRAFT_CPUS`, default 4. */
@@ -49,13 +65,9 @@ object GraftSession {
 
   /** The one session the harness mains run on (`Bench`, `Verify`, and
     * the `tools` mains): `local[harnessCpus]`, shuffle partitions =
-    * cpus, UTC, UI off, [[localFsConf]], and a 2000-entry codegen cache
-    * — 80+ queries × several codegen units each overflow the default
-    * 100 entries, and the LRU thrash then recompiles big classes
-    * (64-slot aggs) mid-suite, showing up as wandering multi-second
-    * spikes on whichever query recompiles. AQE and scan sizing stay at Spark's
-    * defaults: the board and the bench are measured on this session,
-    * not on [[builder]]'s. */
+    * cpus, UTC, UI off and [[sessionConf]]. AQE and scan sizing stay at
+    * Spark's defaults: the board and the bench are measured on this
+    * session, not on [[builder]]'s. */
   def harness(): SparkSession = {
     val cpus = harnessCpus.toString
     SparkSession.builder()
@@ -63,8 +75,7 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .config(localFsConf)
+      .config(sessionConf)
       .getOrCreate()
   }
 }

@@ -17,7 +17,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.{NioLocalFileSystem, NioLocalFs}
 
-/** The session's `file://` file systems (`GraftSession.localFsConf`):
+/** The session's `file://` file systems (from `GraftSession.sessionConf`):
   * no child processes, and the stock modes and link statuses. */
 class LocalFsSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
