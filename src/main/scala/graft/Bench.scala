@@ -13,7 +13,7 @@ object Bench {
       io.Tables.lineitem, io.Tables.orders, io.Tables.customer,
       io.Tables.events, io.Tables.documents, io.Tables.embeddings)
       .foreach(load => load(spark, sfDir).count())
-    // Warm the prefix-sum machinery too (localCheckpoint, Encoders.row
+    // Warm the prefix-sum machinery too (the frozen exchange, Encoders.row
     // mapPartitions, the offsets collect): it's code shared by 6+
     // queries but absent from the table-load warm-up, so its one-time
     // JIT/codegen (~4 s) was billed to whichever family member sorts
@@ -35,7 +35,7 @@ object Bench {
     // wall-time; SPARK_GRAFT_WARM=0 skips for quick local iteration.
     if (sys.env.getOrElse("SPARK_GRAFT_WARM", "1") != "0") {
       SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (_, fn) =>
-        try fn(spark, sfDir).count() catch { case _: Throwable => () }
+        try ops.Pins.scoped(fn(spark, sfDir).count()) catch { case _: Throwable => () }
         spark.catalog.clearCache()
       }
       System.gc()
@@ -54,22 +54,25 @@ object Bench {
     }
     val ctrlStart = control()
     // Deterministic order (Map iteration order is hash-driven), and a
-    // cache clear per query: several operators persist intermediates
-    // (signatures, cluster edges); across 70+ queries those pile up and
-    // the resulting GC churn shows up as multi-second noise attributed
-    // to whichever query runs late. The clear itself runs OUTSIDE the
-    // timed window so its teardown cost isn't billed to the query.
+    // teardown per query: several operators persist intermediates
+    // (signatures, cluster edges) or freeze them; across 70+ queries
+    // those pile up and the resulting GC churn shows up as multi-second
+    // noise attributed to whichever query runs late. The scope closes
+    // and the cache clears OUTSIDE the timed window, so teardown cost
+    // isn't billed to the query.
     val failed = scala.collection.mutable.ListBuffer.empty[String]
     val results = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch {
-        case e: Throwable =>
-          // a query that THROWS at bench scale must be visible, not a
-          // suspiciously fast "success"
-          failed += name
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+      val elapsed = ops.Pins.scoped {
+        val t0 = System.nanoTime()
+        try { fn(spark, sfDir).count() } catch {
+          case e: Throwable =>
+            // a query that THROWS at bench scale must be visible, not a
+            // suspiciously fast "success"
+            failed += name
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        }
+        (System.nanoTime() - t0) / 1e9
       }
-      val elapsed = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
       // Collect the previous query's garbage OUTSIDE the timed window:
       // with per-query cache teardown across 80+ queries, old-gen pauses

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.io.{LocalFs, Tables}
-import graft.ops.{Coerce, Dedup, Layout, Merge, Multimodal, Normalize, Reagg, Similarity, TextAnalysis}
+import graft.ops.{Coerce, Dedup, Layout, Merge, Multimodal, Normalize, Pins, Reagg, Similarity, TextAnalysis}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -222,7 +222,7 @@ object SparkEntry {
       }
     // frozen: phashFixturePairs self-joins this frame, so the PGM
     // encode+decode+hash kernel ran twice per consumer (r16)
-    Multimodal.averageHashes(recs).toDF().localCheckpoint(true)
+    Multimodal.averageHashes(recs).toDF().transform(Pins.freeze)
   }
 
   /** Banded Hamming near-dup pairs over [[phashFixtureHashes]]:
@@ -1019,7 +1019,7 @@ object SparkEntry {
         Dedup.wordShingles(lower(col("text")), 3).as("_s"))
         // frozen: the truth table's exploded self-join plus the size
         // joins evaluated the shingle kernel several times (r16)
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       val sz = sh.select(col("doc_id"), size(col("_s")).as("_n"))
       val ex = sh.select(col("doc_id"), explode(col("_s")).as("_sh"))
       val truth = ex.as("a").join(ex.as("b"),
@@ -1241,7 +1241,7 @@ object SparkEntry {
       val vocab = toks.select("doc_id", "w").distinct()
         .groupBy("w").agg(count(lit(1)).as("_df"))
         .filter(col("_df") >= 5).select("w")
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       // adjacent-in-filtered-sequence pairs via lead() over the SAME
       // doc-keyed window the old row_number used — one window pass
       // instead of window + (doc_id, rn) self-join (two shuffles and a
@@ -1253,7 +1253,7 @@ object SparkEntry {
           .over(Window.partitionBy("doc_id").orderBy("pos")))
         .filter(col("w2").isNotNull)
         .select(col("w").as("src"), col("w2").as("dst"))
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       val edges = pairs.unionByName(
         pairs.select(col("dst").as("src"), col("src").as("dst")))
       graft.ops.Graph.pagerankKeyed(edges, "src", "dst", vocab, "w",
@@ -1523,7 +1523,7 @@ object SparkEntry {
       // pass reads executor-resident blocks instead of re-scanning.
       val li = Tables.spreadTable(s, dir, "lineitem", Tables.lineitem(s, dir))
         .select(col("l_returnflag"), col("l_extendedprice"), col("l_quantity"))
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       val coef = graft.ops.Regress.olsFit1Grouped(li, "l_returnflag",
         round(col("l_extendedprice") * 100), col("l_quantity"))
       val base = li.select(col("l_returnflag"),
@@ -3767,7 +3767,7 @@ object SparkEntry {
         }.toDF()
         // kernel frame frozen: the self-join evaluated the encode+decode
         // kernels twice (r16; opt guide §1.2)
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       val pairs = hashes.as("a").join(hashes.as("b"),
           col("a.hash_lo") === col("b.hash_lo") &&
           col("a.hash_hi") === col("b.hash_hi") &&
@@ -3805,7 +3805,7 @@ object SparkEntry {
         }.toDF()
         // kernel frame frozen: the self-join evaluated the encode+decode
         // kernels twice (r16; opt guide §1.2)
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       val pairs = hashes.as("a").join(hashes.as("b"),
           col("a.hash_lo") === col("b.hash_lo") &&
           col("a.hash_hi") === col("b.hash_hi") &&
@@ -3855,7 +3855,7 @@ object SparkEntry {
         }.toDF("doc_id", "fp", "rasters_differ")
         // frozen: hammingPairs self-joins and the differ-flag join-back
         // re-evaluated the JPEG encode/decode kernel three times (r16)
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       Dedup.clusterWithSizes(
           Dedup.hammingPairs(hashes, "doc_id", "fp", maxHamming = 8))
         .join(hashes.select(col("doc_id").as("id"),
@@ -3905,7 +3905,7 @@ object SparkEntry {
               Multimodal.encodeGif(w, h, 8, pix))))
         }.toDF("doc_id", "fp", "jpeg_differs")
         // frozen: three downstream evaluations of the codec kernel (r16)
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       Dedup.clusterWithSizes(
           Dedup.hammingPairs(hashes, "doc_id", "fp", maxHamming = 8))
         .join(hashes.select(col("doc_id").as("id"), col("jpeg_differs")),
@@ -3952,7 +3952,7 @@ object SparkEntry {
         }.toDF("vid", "frame_id", "fp")
         // frozen: hammingPairs' banded self-join evaluated the AVI mux +
         // JPEG decode + DCT hash kernel twice (r16)
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       val videoPairs = Dedup.hammingPairs(frames, "vid", "fp",
           maxHamming = 8, matchCols = Seq("frame_id"))
         .groupBy(col("id_a"), col("id_b"))
@@ -4005,7 +4005,7 @@ object SparkEntry {
         }.toDF("aid", "frame_id", "fp")
         // frozen: the frame-aligned self-join evaluated the MP2
         // encode+decode+filterbank kernel twice (r16)
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       val framePairs = fps.as("a").join(fps.as("b"),
           col("a.frame_id") === col("b.frame_id") &&
           col("a.fp") === col("b.fp") &&
@@ -6224,7 +6224,7 @@ object SparkEntry {
       // (real words + OOV row), each re-running the reference-corpus
       // census (r16; opt guide §1.2)
       val lm = TextAnalysis.unigramLm(docs.filter(col("lang") === "en"), "text")
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       TextAnalysis.unigramNll(docs, "doc_id", "text", lm).orderBy("doc_id")
     }),
 
@@ -6242,7 +6242,7 @@ object SparkEntry {
       // pipeline over the training corpus (r16; opt guide §1.2)
       val model = graft.ops.NaiveBayes.train(
         docs.filter(col("doc_id") % 2 === 0), "lang", "text")
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       graft.ops.NaiveBayes.score(
           docs.filter(col("doc_id") % 2 === 1 && col("doc_id") < 400),
           "doc_id", "text", model)
@@ -6261,10 +6261,10 @@ object SparkEntry {
       // self-join evaluated the corpus-scoring pipeline twice (r16)
       val model = graft.ops.NaiveBayes.train(
         docs.filter(col("doc_id") % 2 === 0), "lang", "text")
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       val scored = graft.ops.NaiveBayes.score(
         docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", model)
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       graft.ops.NaiveBayes.classify(scored, "doc_id")
         .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
         .groupBy(col("lang").as("true_lang"), col("pred_label"))
@@ -7540,7 +7540,7 @@ object SparkEntry {
         Dedup.wordShingles(lower(col("text")), 3).as("_s"))
         // frozen: the truth table's exploded self-join plus the size
         // joins evaluated the shingle kernel several times (r16)
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       val sz = sh.select(col("doc_id"), size(col("_s")).as("_n"))
       val ex = sh.select(col("doc_id"), explode(col("_s")).as("_sh"))
       val truth = ex.as("a").join(ex.as("b"),
@@ -7984,7 +7984,7 @@ object SparkEntry {
       val docs = Tables.documents(s, dir)
       // LM frozen — see x4_lm_quality (two broadcast slices per score)
       val lm = TextAnalysis.unigramLm(docs.filter(col("lang") === "en"), "text")
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       val scored = TextAnalysis.unigramNll(docs, "doc_id", "text", lm)
         .join(docs.select("doc_id", "lang"), "doc_id")
         .withColumn("mpt", expr("nll_micro div n_tokens"))
@@ -8007,9 +8007,9 @@ object SparkEntry {
       val docs = Tables.documents(s, dir)
       // both LMs frozen — two broadcast slices per unigramNll call (r16)
       val tgt = TextAnalysis.unigramLm(docs.filter(col("lang") === "en"), "text")
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       val bg = TextAnalysis.unigramLm(docs, "text")
-        .localCheckpoint(true)
+        .transform(Pins.freeze)
       val nt = TextAnalysis.unigramNll(docs, "doc_id", "text", tgt)
         .select(col("doc_id"), col("nll_micro").as("nll_tgt"))
       val nb = TextAnalysis.unigramNll(docs, "doc_id", "text", bg)

@@ -12,14 +12,22 @@ object Verify {
     // comma-separated subset of queries instead of the full map.
     val only: Set[String] =
       if (args.length > 2) args(2).split(",").toSet else Set.empty
+    // Each gate runs in a scope and the cache is cleared after its
+    // write, so no gate's frozen or persisted frames outlive it; a gate
+    // that still leaves a pinned RDD behind is named.
+    def pinned = spark.sparkContext.getPersistentRDDs.keySet
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      val before = pinned
+      try ops.Pins.scoped(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      spark.catalog.clearCache()
+      val left = (pinned -- before).size
+      if (left > 0) System.err.println(s"[verify] $name left $left pinned RDDs")
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -491,11 +491,11 @@ object Dedup {
     * pair with Jaccard ≥ thresholdPct/100 — integer cells only
     * (floor-micros via integral div), engine-portable.
     *
-    * Resource note: the result plan pins two doc-cardinality frames
-    * via eager `localCheckpoint` (see below). In a long-lived session
-    * that invokes this repeatedly, call `freeLocalCheckpoint(result)`
-    * once the result is consumed, or the pinned blocks accumulate in
-    * the block store until session teardown.
+    * Resource note: the result plan reads two doc-cardinality frames
+    * frozen by [[Pins.freeze]] (see below). In a long-lived session
+    * that invokes this repeatedly, consume the result inside a
+    * [[Pins.scoped]] block, which frees them on exit; otherwise they
+    * wait for the ContextCleaner.
     */
   def prefixFilterJoin(df: DataFrame, id: String, text: String, k: Int,
       thresholdPct: Int): DataFrame = {
@@ -504,8 +504,7 @@ object Dedup {
     // sides + both verify sides) and the prefix table two — without a
     // pin, Spark recomputes the census/order/regroup chain per
     // consumer (measured 20 s → 6 s at sf0.1 from this pin alone).
-    // Eager localCheckpoint: doc-cardinality rows, blocks freed by the
-    // session's per-query teardown or [[freeLocalCheckpoint]].
+    // Frozen: doc-cardinality rows, freed by the caller's scope.
     // Shingles are HASHED to 8-byte longs by the codegen'd kernel
     // (same trick as [[minHashNearDups]]): the census, window, and
     // candidate joins shuffle longs instead of k-word strings, and the
@@ -517,7 +516,7 @@ object Dedup {
     // certifies.
     val sets = df.select(col(id).as("_id"),
         graft.expr.WordShingleHashes(col(text), k, distinct = true).as("_sh"))
-      .localCheckpoint(true)
+      .transform(Pins.freeze)
     val toks = sets.select(col("_id"), explode(col("_sh")).as("_t"))
     val dfreq = toks.groupBy(col("_t")).agg(count(lit(1)).as("_df"))
     // per-doc shingle rank under the global (df asc, shingle asc)
@@ -534,7 +533,7 @@ object Dedup {
     val prefixes = ranked
       .filter(col("_rn") <= col("_n") - need + 1)
       .select(col("_id"), col("_n"), col("_t"))
-      .localCheckpoint(true)
+      .transform(Pins.freeze)
     val cand = prefixes.as("a").join(prefixes.as("b"),
         col("a._t") === col("b._t") && col("a._id") < col("b._id") &&
           greatest(col("a._n"), col("b._n")) * thresholdPct <=
@@ -553,17 +552,6 @@ object Dedup {
     verified.select(col("id_a"), col("id_b"), col("n_inter"), col("n_union"),
       call_function("div", col("n_inter") * 1000000L, col("n_union")).as("jaccard_micros"))
   }
-
-  /** Release the block-store blocks behind a `localCheckpoint`'d frame.
-    * `Dataset.unpersist()` only clears CacheManager entries (`.persist`),
-    * not the RDD a checkpoint pinned — without this, reclamation waits on
-    * driver GC + ContextCleaner and blocks accumulate across rounds. */
-  def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectLeaves().foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
 
   /** Rounds the most recent [[clusterPairs]] call took to converge —
     * a probe/test hook for the O(log diameter) scale claim, not part
@@ -623,7 +611,7 @@ object Dedup {
     def labelSum(df: DataFrame): java.math.BigDecimal =
       Option(df.agg(sum(col("cluster").cast("decimal(38,0)"))).head().getDecimal(0))
         .getOrElse(java.math.BigDecimal.ZERO)
-    // localCheckpoint (not persist) for the evolving labels frame:
+    // Pins.freeze (not persist) for the evolving labels frame:
     // it truncates lineage so round N's plan doesn't nest all N-1
     // previous plans - with plain persist, Catalyst re-analyzes a
     // tree that grows per round and the loop goes superlinear. Each
@@ -633,7 +621,7 @@ object Dedup {
     var labels = edges.select(col("src").as("id"))
       .repartition(loopWidth, col("id")).distinct()
       .withColumn("cluster", col("id"))
-      .localCheckpoint(eager = true)
+      .transform(Pins.freeze)
     var prevSum = labelSum(labels)
     var converged = false
     var round = 0
@@ -659,10 +647,10 @@ object Dedup {
           col("a.cluster") === col("_pid"), "left")
         .select(col("a.id").as("id"),
           least(col("a.cluster"), coalesce(col("_pc"), col("a.cluster"))).as("cluster"))
-        .localCheckpoint(eager = true)
+        .transform(Pins.freeze)
       val newSum = labelSum(next)
       hop.unpersist()
-      freeLocalCheckpoint(labels) // free the previous round's checkpoint blocks
+      Pins.free(labels) // free the previous round's checkpoint blocks
       labels = next
       converged = newSum.compareTo(prevSum) == 0
       prevSum = newSum
@@ -905,12 +893,12 @@ object Dedup {
     * id set as a one-column frame. */
   def survivorsAfterNearDedup(df: DataFrame, id: String, pairs: DataFrame): DataFrame = {
     val clustered = clusterPairs(pairs)
-    // localCheckpoint severs the iterative lineage and lets the loop's
-    // cached frames free (clusterPairs' returned cache would otherwise
-    // pin per invocation).
-    val drop = clustered.filter(col("id") =!= col("cluster")).select(col("id").as(id))
-      .localCheckpoint(eager = true)
-    freeLocalCheckpoint(clustered)
+    // the freeze severs the iterative lineage and lets the loop's
+    // frozen labels free (clusterPairs' returned pin would otherwise
+    // stay per invocation).
+    val drop = Pins.freeze(
+      clustered.filter(col("id") =!= col("cluster")).select(col("id").as(id)))
+    Pins.free(clustered)
     // No broadcast hint: the non-survivor list is bounded by candidate-
     // pair count, which at 100 TB with tens-of-percent dup rates is
     // billions of ids — an explicit hint would bypass

@@ -25,11 +25,14 @@ import org.apache.spark.sql.functions._
   *      before the wire, which is what makes a 100 TB edge list
   *      tractable: the shuffle carries node-cardinality partials, not
   *      edge-cardinality messages.
-  * The rank frame is re-pinned each round via the prefix-sum family's
-  * [[Packing.pinExchange]] (same `spark.graft.prefixSum.reliableCheckpoint`
-  * escape hatch), so lineage stays O(1) across rounds instead of
-  * growing a 2-wide-ops-per-iteration plan tree, and a mid-schedule
-  * re-evaluation can never observe a different shuffle. Driver state:
+  * The rank frame is re-frozen each round ([[Pins.freeze]], local or
+  * reliable per [[Pins.ReliableCheckpointKey]]) and the round it
+  * supersedes is freed, so lineage stays O(1) across rounds instead of
+  * growing a 2-wide-ops-per-iteration plan tree, a mid-schedule
+  * re-evaluation can never observe a different shuffle, and only the
+  * last round stays pinned. Every iterative loop below follows the same
+  * discipline, and frees its loop-invariant pins once the loop ends
+  * unless the result reads them. Driver state:
   * nothing — no collect anywhere; convergence is fixed-round by
   * contract (callers wanting a delta-based stop should census
   * `abs(r-r_prev)` themselves, one extra keyed join).
@@ -97,10 +100,10 @@ object Graph {
     * degree frame, the wedge self-join on the shared origin, and the
     * closing semi-join on the (v,w) pair — every shuffle keyed, no
     * cartesian, no window, no driver state. The oriented edge table is
-    * pinned once ([[Packing.pinExchange]]) because three operators scan
-    * it; callers running this in a long-lived session should
-    * `freeLocalCheckpoint` the RESULT plan when done (same lifetime
-    * contract as `Dedup.prefixFilterJoin`).
+    * frozen once ([[Pins.freeze]]) because three operators scan it; the
+    * result reads it, so it stays pinned until the caller's
+    * [[Pins.scoped]] block ends (same lifetime contract as
+    * `Dedup.prefixFilterJoin`).
     *
     * Returns `(node, n_triangles)` — one row per node in `nodes`
     * (isolated and triangle-free nodes report 0), each triangle
@@ -119,7 +122,7 @@ object Graph {
     // Orient a→b iff (deg(a), a) < (deg(b), b); carry the destination's
     // order key so the wedge join below can order neighbor pairs
     // without another degree join.
-    val oriented = Packing.pinExchange(canon
+    val oriented = Pins.freeze(canon
       .join(deg.select(col("node").as("a"), col("deg").as("_da")), "a")
       .join(deg.select(col("node").as("b"), col("deg").as("_db")), "b")
       .select(
@@ -246,15 +249,14 @@ object Graph {
     * cardinality) and two anti-joins of the edge table against the
     * just-peeled node set (NOT the full removed set — only this
     * round's delta, so the anti-join's small side stays the frontier);
-    * the shrinking edge table is re-pinned per round
-    * ([[Packing.pinExchange]]) to keep lineage O(1), same discipline
-    * as [[pagerank]]. Driver state: nothing. */
+    * the shrinking edge table is re-frozen per round to keep lineage
+    * O(1), same discipline as [[pagerank]]. Driver state: nothing. */
   def kCorePeel(edges: DataFrame, srcCol: String, dstCol: String,
       nodes: DataFrame, nodeCol: String, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1 && rounds <= 100, s"rounds must be in [1,100], got $rounds")
     val n = nodes.select(col(nodeCol).cast("long").as("node"))
-    var live = Packing.pinExchange(edges.select(
+    var live = Pins.freeze(edges.select(
         least(col(srcCol).cast("long"), col(dstCol).cast("long")).as("a"),
         greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
       .filter(col("a") =!= col("b"))
@@ -273,12 +275,15 @@ object Graph {
         .join(removed.select(col("node")), Seq("node"), "left_anti")
         .join(deg.filter(col("deg") >= k).select(col("node")),
           Seq("node"), "left_anti")
-      val f = Packing.pinExchange(frontier.select(col("node")))
-      removed = Packing.pinExchange(
+      val f = Pins.freeze(frontier.select(col("node")))
+      val nextRemoved = Pins.freeze(
         removed.unionByName(f.select(col("node"), lit(r.toLong).as("round_removed"))))
-      live = Packing.pinExchange(live
+      val nextLive = Pins.freeze(live
         .join(f.select(col("node").as("a")), Seq("a"), "left_anti")
         .join(f.select(col("node").as("b")), Seq("b"), "left_anti"))
+      Seq(f, removed, live).foreach(Pins.free)
+      removed = nextRemoved
+      live = nextLive
     }
     val finalDeg = live.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("final_deg"))
@@ -302,7 +307,7 @@ object Graph {
     // universe-restore join (and the rank init) re-evaluated the
     // caller's node PLAN — one scan per round for a frame that never
     // changes (opt guide §1.2). |V| rows, bounded; released after the
-    // last round (safe: each round's result is eagerly pinned, nothing
+    // last round (safe: each round's result is eagerly frozen, nothing
     // lazy reads n). With no rounds the returned plan reads n itself,
     // so it stays unpersisted — a cache entry nothing would free.
     val universe = nodes.select(col(nodeCol).as("node"))
@@ -314,7 +319,9 @@ object Graph {
       .persist()
     var ranks = n.select(col("node"), lit(1000000L).as("r"))
     for (_ <- 1 to iters) {
-      ranks = Packing.pinExchange(round(ed, ranks, n))
+      val next = Pins.freeze(round(ed, ranks, n))
+      Pins.free(ranks)
+      ranks = next
     }
     ed.unpersist()
     if (iters > 0) n.unpersist()
@@ -338,9 +345,9 @@ object Graph {
     * graph's expansion makes it, so no broadcast hint: AQE may pick one
     * when a round's frontier is genuinely small), one `distinct` at
     * candidate cardinality, and one anti-join against the visited set.
-    * Visited and frontier are re-pinned per round
-    * ([[Packing.pinExchange]]) so lineage stays O(1) across rounds —
-    * the [[pagerank]] discipline. Driver state: nothing. Total work is
+    * Visited and frontier are re-frozen per round so lineage stays O(1)
+    * across rounds — the [[pagerank]] discipline. Driver state:
+    * nothing. Total work is
     * O(Σ_r |frontier_r ⋈ adj|) = O(m) over all rounds on a connected
     * sweep — each undirected edge is crossed at most twice. */
   def bfsLayers(edges: DataFrame, srcCol: String, dstCol: String,
@@ -355,22 +362,26 @@ object Graph {
       .filter(col("a") =!= col("b"))
       .distinct()
     // adjacency, both directions — BFS walks the undirected graph
-    val adj = Packing.pinExchange(
+    val adj = Pins.freeze(
       canon.select(col("a").as("u"), col("b").as("v"))
         .unionByName(canon.select(col("b").as("u"), col("a").as("v"))))
-    var frontier = Packing.pinExchange(
+    var frontier = Pins.freeze(
       n.join(seeds.select(col(seedCol).cast("long").as("node")).distinct(),
         Seq("node"), "left_semi"))
-    var visited = Packing.pinExchange(
+    var visited = Pins.freeze(
       frontier.select(col("node"), lit(0L).as("dist")))
     for (r <- 1 to maxRounds) {
-      val next = adj.join(frontier.select(col("node").as("u")), Seq("u"))
-        .select(col("v").as("node")).distinct()
-        .join(visited.select(col("node")), Seq("node"), "left_anti")
-      frontier = Packing.pinExchange(next)
-      visited = Packing.pinExchange(visited.unionByName(
-        frontier.select(col("node"), lit(r.toLong).as("dist"))))
+      val next = Pins.freeze(
+        adj.join(frontier.select(col("node").as("u")), Seq("u"))
+          .select(col("v").as("node")).distinct()
+          .join(visited.select(col("node")), Seq("node"), "left_anti"))
+      val nextVisited = Pins.freeze(visited.unionByName(
+        next.select(col("node"), lit(r.toLong).as("dist"))))
+      Seq(frontier, visited).foreach(Pins.free)
+      frontier = next
+      visited = nextVisited
     }
+    Seq(adj, frontier).foreach(Pins.free)
     n.join(visited, Seq("node"), "left")
       .select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
   }
@@ -410,10 +421,10 @@ object Graph {
         greatest(col(srcCol).cast("long"), col(dstCol).cast("long")).as("b"))
       .filter(col("a") =!= col("b"))
       .distinct()
-    val adj = Packing.pinExchange(
+    val adj = Pins.freeze(
       canon.select(col("a").as("u"), col("b").as("v"))
         .unionByName(canon.select(col("b").as("u"), col("a").as("v"))))
-    var labels = Packing.pinExchange(n.select(col("node"), col("node").as("label")))
+    var labels = Pins.freeze(n.select(col("node"), col("node").as("label")))
     for (_ <- 1 to rounds) {
       val votes = adj
         .join(labels.select(col("node").as("u"), col("label")), Seq("u"))
@@ -422,10 +433,13 @@ object Graph {
         .groupBy(col("v"))
         .agg(max_by(col("label"), struct(col("_n"), (lit(0L) - col("label"))))
           .as("_new"))
-      labels = Packing.pinExchange(labels
+      val next = Pins.freeze(labels
         .join(votes, col("node") === col("v"), "left")
         .select(col("node"), coalesce(col("_new"), col("label")).as("label")))
+      Pins.free(labels)
+      labels = next
     }
+    Pins.free(adj)
     labels
   }
 
@@ -457,19 +471,22 @@ object Graph {
     require(rounds >= 0 && rounds <= 1000,
       s"rounds must be in [0,1000], got $rounds")
     val n = nodes.select(col(nodeCol).cast("long").as("node"))
-    val e = Packing.pinExchange(edges.select(
+    val e = Pins.freeze(edges.select(
       col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
       col(weightCol).cast("long").as("w")))
-    var dist = Packing.pinExchange(
+    var dist = Pins.freeze(
       n.join(seeds.select(col(seedCol).cast("long").as("node")).distinct(),
           Seq("node"), "left_semi")
         .select(col("node"), lit(0L).as("d")))
     for (_ <- 1 to rounds) {
       val msgs = e.join(dist.select(col("node").as("u"), col("d")), Seq("u"))
         .select(col("v").as("node"), (col("d") + col("w")).as("d"))
-      dist = Packing.pinExchange(
+      val next = Pins.freeze(
         dist.unionByName(msgs).groupBy("node").agg(min(col("d")).as("d")))
+      Pins.free(dist)
+      dist = next
     }
+    Pins.free(e)
     n.join(dist, Seq("node"), "left")
       .select(col("node"), coalesce(col("d"), lit(-1L)).as("dist"))
   }
@@ -498,10 +515,10 @@ object Graph {
     require(rounds >= 0 && rounds <= 1000,
       s"rounds must be in [0,1000], got $rounds")
     val n = nodes.select(col(nodeCol).cast("long").as("node"))
-    val e = Packing.pinExchange(edges.select(
+    val e = Pins.freeze(edges.select(
       col(srcCol).cast("long").as("u"), col(dstCol).cast("long").as("v"),
       col(tsCol).cast("long").as("t")))
-    var arr = Packing.pinExchange(
+    var arr = Pins.freeze(
       seeds.select(col(seedCol).cast("long").as("node"),
           col(startCol).cast("long").as("a"))
         .groupBy("node").agg(min(col("a")).as("a"))
@@ -510,9 +527,12 @@ object Graph {
       val msgs = e.join(arr.select(col("node").as("u"), col("a")), Seq("u"))
         .filter(col("t") >= col("a"))
         .select(col("v").as("node"), col("t").as("a"))
-      arr = Packing.pinExchange(
+      val next = Pins.freeze(
         arr.unionByName(msgs).groupBy("node").agg(min(col("a")).as("a")))
+      Pins.free(arr)
+      arr = next
     }
+    Pins.free(e)
     n.join(arr, Seq("node"), "left")
       .select(col("node"), coalesce(col("a"), lit(-1L)).as("earliest_arrival"))
   }

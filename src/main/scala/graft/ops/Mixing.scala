@@ -32,10 +32,10 @@ object Mixing {
       numPartitions: Int = 0): DataFrame = {
     require(order.nonEmpty, "need at least one ordering column")
     val spark = df.sparkSession
-    // eager checkpoint: phases 2 and 3 must see the SAME sampled range
+    // frozen exchange: phases 2 and 3 must see the SAME sampled range
     // boundaries (see Packing.assignShards for the full rationale;
-    // local vs reliable per Packing.ReliableCheckpointKey, width per
-    // Packing.AdaptiveWidthKey — AQE-coalesced unless the caller pins)
+    // local vs reliable per Pins.ReliableCheckpointKey — AQE-coalesced
+    // width unless the caller pins numPartitions)
     val ranged = Packing.rangedBy(df, order, numPartitions)
     val counts = ranged
       .select(spark_partition_id().as("_pid"), col(group))

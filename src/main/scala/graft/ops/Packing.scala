@@ -34,41 +34,23 @@ import org.apache.spark.sql.types.LongType
   */
 object Packing {
 
-  /** Conf key for the prefix-sum family's exchange pinning.
-    * `false` (default): `localCheckpoint` — blocks live on executors;
-    * fastest, but a lost executor kills the lineage mid-schedule (fine
-    * single-JVM, acceptable for restartable batch).
-    * `true`: reliable `checkpoint` to `sparkContext.setCheckpointDir`
-    * (HDFS/object store on a real cluster — REQUIRED when enabling) —
-    * the 2–3-job schedule survives executor loss at the price of one
-    * write+read of the ranged corpus. Same results either way
-    * (`PackingSpec` proves identity); the phases still see one frozen
-    * range partitioning, which is the correctness requirement. */
-  val ReliableCheckpointKey = "spark.graft.prefixSum.reliableCheckpoint"
-
-  /** Conf key (default TRUE) for the prefix-sum family's exchange
-    * width: when the caller does not pin `numPartitions`, the range
-    * exchange is planned WITHOUT an explicit partition count so AQE's
-    * partition coalescing sizes it from the actual shuffled bytes
-    * (opt guide §2: scale-adaptive partitioning, never a constant) —
-    * a key-grain frame of a few thousand rows collapses to one or two
-    * tasks per phase instead of `spark.sql.shuffle.partitions` tiny
-    * ones, while a corpus-sized input keeps the full width. Results
-    * are identical either way: prefix sums are independent of where
-    * partition boundaries fall (AQE merges CONTIGUOUS range
-    * partitions, so partition-index order still ascends with the
-    * range order, which is all phases 2/3 need). `false` restores the
-    * fixed shuffle-partitions width (the A/B instrument). */
-  val AdaptiveWidthKey = "spark.graft.prefixSum.adaptiveWidth"
-
-  /** The pinned-or-adaptive range exchange shared by the prefix-sum
-    * family: explicit width when `numPartitions` > 0 or the adaptive
-    * form is disabled, otherwise AQE-coalescible. */
+  /** The range exchange shared by the prefix-sum family, frozen
+    * ([[Pins.freeze]]) so later jobs see the SAME physical partitioning
+    * (boundaries come from sampling — re-evaluating could draw different
+    * ones). Explicit width when `numPartitions` > 0; otherwise the
+    * exchange is planned WITHOUT a partition count, so AQE's coalescing
+    * sizes it from the actual shuffled bytes (opt guide §2:
+    * scale-adaptive partitioning, never a constant) — a key-grain frame
+    * of a few thousand rows collapses to one or two tasks per phase,
+    * while a corpus-sized input keeps the full width. Results are the
+    * same either way: prefix sums are independent of where partition
+    * boundaries fall (AQE merges CONTIGUOUS range partitions, so
+    * partition-index order still ascends with the range order, which
+    * is all phases 2/3 need). */
   private[ops] def rangedBy(df: DataFrame, order: Seq[Column],
       numPartitions: Int): DataFrame = {
     val spark = df.sparkSession
     val adaptive = numPartitions <= 0 &&
-      spark.conf.getOption(AdaptiveWidthKey).forall(_.toBoolean) &&
       spark.conf.get("spark.sql.adaptive.enabled", "true").toBoolean &&
       spark.conf.get(
         "spark.sql.adaptive.coalescePartitions.enabled", "true").toBoolean
@@ -77,22 +59,7 @@ object Packing {
     val shuffled =
       if (adaptive) df.repartitionByRange(order: _*)
       else df.repartitionByRange(parts, order: _*)
-    pinExchange(shuffled.sortWithinPartitions(order: _*))
-  }
-
-  /** Pin a range exchange so later jobs see the SAME physical
-    * partitioning (boundaries come from sampling — re-evaluating could
-    * draw different ones). Shared by the whole prefix-sum family
-    * ([[assignShardsOrdered]], [[Mixing.groupwiseRank]]). */
-  private[ops] def pinExchange(df: DataFrame): DataFrame = {
-    val reliable = df.sparkSession.conf
-      .getOption(ReliableCheckpointKey).exists(_.toBoolean)
-    if (reliable) {
-      require(df.sparkSession.sparkContext.getCheckpointDir.isDefined,
-        s"$ReliableCheckpointKey=true needs sparkContext.setCheckpointDir " +
-        "(a fault-tolerant path: HDFS/S3/ABFS on a cluster)")
-      df.checkpoint(true)
-    } else df.localCheckpoint(true)
+    Pins.freeze(shuffled.sortWithinPartitions(order: _*))
   }
 
   /** Adds `cum_w` (inclusive running sum of `weight` in `key` order) and
@@ -127,16 +94,14 @@ object Packing {
     // positional getLong cannot tolerate nulls, and silently dropping
     // the rows would change the output contract (one row per input row)
     val normalized = df.withColumn(weight, coalesce(col(weight).cast("long"), lit(0L)))
-    // Eager checkpoint, not persist: phases 1 and 3 are separate jobs
-    // and both must see the SAME physical partitioning (range boundaries
-    // come from sampling — re-evaluating the exchange per job could draw
+    // Freeze, not persist: phases 1 and 3 are separate jobs and both
+    // must see the SAME physical partitioning (range boundaries come
+    // from sampling — re-evaluating the exchange per job could draw
     // different boundaries AND double the shuffle). A persist() would
     // pin the corpus-sized cache in the CacheManager until someone calls
     // unpersist, which this API cannot do for the caller (the returned
-    // plan still reads the cache); checkpoint blocks are instead
-    // reclaimed by the ContextCleaner once the returned frame is
-    // dropped. Local vs reliable is the caller's durability choice —
-    // see [[ReliableCheckpointKey]]; width per [[AdaptiveWidthKey]].
+    // plan still reads the cache); a freeze is instead freed by the
+    // caller's [[Pins.scoped]] block or the ContextCleaner.
     val ranged = rangedBy(normalized, order, numPartitions)
     // Phase 1+2: per-partition totals -> driver prefix sum. Range
     // partition indices ascend with the key range, so offset order is

@@ -108,7 +108,7 @@ object Reagg {
         expr("(pair_n * _n * 1000000) div (_ca * _cb)").as("lift_micro"))
     // freeze the three consumers' shared input, then release the cache:
     // the returned plan must not depend on unpersisted blocks
-    val frozen = Packing.pinExchange(out)
+    val frozen = Pins.freeze(out)
     sets.unpersist(blocking = false)
     frozen
   }
@@ -193,10 +193,9 @@ object Reagg {
     // the key-grain base is consumed FOUR times (three ntile passes +
     // the final join): freeze it once so the fact-table groupBy runs a
     // single pass instead of four (opt guide §1.2 — at 100 TB that is
-    // three saved corpus scans; blocks are reclaimed by the
-    // ContextCleaner when the returned frame is dropped, the
-    // pinExchange discipline)
-    val base = Packing.pinExchange(df.groupBy(col(key)).agg(
+    // three saved corpus scans; blocks are freed by the caller's
+    // Pins.scoped block or the ContextCleaner)
+    val base = Pins.freeze(df.groupBy(col(key)).agg(
       max(col(dateCol)).as("last_date"),
       count(lit(1)).as("frequency"),
       sum(amountCents).as("monetary_cents")))

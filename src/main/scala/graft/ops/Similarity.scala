@@ -518,7 +518,7 @@ object Similarity {
   private def writeAssigned(assignment: DataFrame, path: String,
       mode: String, phase: String): Array[org.apache.spark.sql.Row] = {
     val spark = assignment.sparkSession
-    val assigned = assignment.localCheckpoint(true)
+    val assigned = Pins.freeze(assignment)
     assigned
       .select(col("cid"), col("_v"), col("_n"), col("cent_id"))
       .write.mode(mode).partitionBy("cent_id")
@@ -529,7 +529,7 @@ object Similarity {
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), batchStatsSchema)
       .withColumn("phase", lit(phase))
       .coalesce(1).write.mode(mode).parquet(s"$path/stats")
-    graft.ops.Dedup.freeLocalCheckpoint(assigned)
+    Pins.free(assigned)
     rows
   }
 

@@ -563,7 +563,7 @@ object TextAnalysis {
 
   /** The trainer loop over any prepared (word, cnt) vocabulary.
     *
-    * Lineage is TRUNCATED per round (eager localCheckpoint, the
+    * Lineage is TRUNCATED per round ([[Pins.freeze]], the
     * [[graft.ops.Dedup.clusterPairs]] discipline), not merely cached:
     * with persist(), round r's logical plan still chained r nested
     * [[mergeOncePass]] folds, so Catalyst re-analyzed — and codegen
@@ -574,12 +574,12 @@ object TextAnalysis {
     * a LogicalRDD — constant size, constant codegen. One materializing
     * job per round replaces the census's cache-fill; the previous
     * round's blocks are freed as soon as the next round materializes
-    * (freeLocalCheckpoint — unpersist() is a no-op on checkpoints). */
+    * ([[Pins.free]] — unpersist() is a no-op on checkpoints). */
   def trainBpeMergesOn(wordCensus: org.apache.spark.sql.DataFrame,
       nMerges: Int): Seq[(Int, String, String, Long)] = {
     var vocab = wordCensus
       .select(split(col("word"), "").as("sym"), col("cnt"))
-      .localCheckpoint(true)
+      .transform(Pins.freeze)
     val merges = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long)]
     var r = 0
     var done = false
@@ -591,13 +591,13 @@ object TextAnalysis {
       else {
         val (a, b, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((r + 1, a, b, n))
-        val next = bpeMergePair(vocab, a, b).localCheckpoint(true)
-        graft.ops.Dedup.freeLocalCheckpoint(vocab)
+        val next = Pins.freeze(bpeMergePair(vocab, a, b))
+        Pins.free(vocab)
         vocab = next
         r += 1
       }
     }
-    graft.ops.Dedup.freeLocalCheckpoint(vocab)
+    Pins.free(vocab)
     merges.toList
   }
 

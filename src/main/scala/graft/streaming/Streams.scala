@@ -118,7 +118,7 @@ object Streams {
   private def logicalBatch(id: String, span: Long) =
     call_function("div", col(id), lit(span))
 
-  /** Pin a trigger's rows once (eager local checkpoint) and return them
+  /** Pin a trigger's rows once ([[graft.ops.Pins.freeze]]) and return them
     * with their logical-batch ids in ascending order. The ids are
     * observed on the pin's own job (`collect_set` through
     * `Dataset.observe`), so regrouping a trigger costs no job of its
@@ -126,9 +126,8 @@ object Streams {
   private def pinTrigger(batch: DataFrame, id: String,
       span: Long): (DataFrame, Seq[Long]) = {
     val obs = org.apache.spark.sql.Observation()
-    val pinned = batch
-      .observe(obs, collect_set(logicalBatch(id, span)).as("bs"))
-      .localCheckpoint(true)
+    val pinned = graft.ops.Pins.freeze(
+      batch.observe(obs, collect_set(logicalBatch(id, span)).as("bs")))
     (pinned, obs.get("bs").asInstanceOf[scala.collection.Seq[Long]]
       .toSeq.sorted)
   }
@@ -237,10 +236,14 @@ object Streams {
     * count per micro-batch. Session isolation (not set-and-restore on
     * the caller's session) so a concurrent batch query on the shared
     * session never observes the narrowed width — the conf-mutation race
-    * a framework-level op must not create. */
+    * a framework-level op must not create. The caller's freeze policy
+    * ([[graft.ops.Pins.ReliableCheckpointKey]]) carries over, since a
+    * new session starts from the context's conf, not the caller's. */
   private def stateSession(spark: SparkSession, n: Int): SparkSession = {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", n.toString)
+    val key = graft.ops.Pins.ReliableCheckpointKey
+    spark.conf.getOption(key).foreach(ss.conf.set(key, _))
     ss
   }
 
@@ -1034,7 +1037,7 @@ object Streams {
             pinned.filter(logicalBatch("doc_id", span) === b), b)
         }
         // free the pin's blocks now (unpersist is a no-op on checkpoints)
-        graft.ops.Dedup.freeLocalCheckpoint(pinned)
+        graft.ops.Pins.free(pinned)
       }
       .start()
     q.awaitTermination()
@@ -1295,7 +1298,7 @@ object Streams {
         // free the trigger pin's blocks NOW (unpersist is a no-op on
         // checkpoints; waiting on driver GC + ContextCleaner lets pins
         // pile up across triggers and queries)
-        graft.ops.Dedup.freeLocalCheckpoint(pinned)
+        graft.ops.Pins.free(pinned)
       }
       .start()
     q.awaitTermination()

@@ -47,7 +47,7 @@ object Probe {
         case "jobs" => names.foreach(jobs(spark, dir, _))
         case "plans" => names.foreach { n =>
           println(s"\n========== $n ==========")
-          graft.SparkEntry.queries(n)(spark, dir).explain("formatted")
+          graft.ops.Pins.scoped(graft.SparkEntry.queries(n)(spark, dir).explain("formatted"))
         }
       }
     } finally spark.stop()
@@ -65,8 +65,9 @@ object Probe {
         .sortBy(-_._2).take(arg.stripPrefix("top:").toInt).map(_._1)
     } else arg.split(",").toSeq
 
+  /** One run of a gate, inside its own [[graft.ops.Pins.scoped]] block. */
   private def rows(spark: SparkSession, dir: String, name: String): Long =
-    graft.SparkEntry.queries(name)(spark, dir).count()
+    graft.ops.Pins.scoped(graft.SparkEntry.queries(name)(spark, dir).count())
 
   /** Drop the query's cached frames and garbage outside the timed window. */
   private def settle(spark: SparkSession): Unit = {

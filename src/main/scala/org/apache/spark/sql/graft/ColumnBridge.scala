@@ -24,3 +24,12 @@ object ColumnBridge {
 object TypeBridge {
   type AbstractType = org.apache.spark.sql.types.AbstractDataType
 }
+
+/** `SparkContext.unpersistRDD` is `private[spark]`: the release the
+  * `ContextCleaner` performs, without the warning `RDD.unpersist` logs
+  * for a locally checkpointed RDD (that it cannot be recomputed —
+  * which is the point when [[graft.ops.Pins]] frees a freeze). */
+object RddBridge {
+  def release(rdd: org.apache.spark.rdd.RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
+}

@@ -32,7 +32,7 @@ class PackingSpec extends AnyFunSuite with SparkTestBase {
     // MUST run before the identity test below, which sets the shared
     // SparkContext's checkpoint dir for the rest of the suite.
     val s2 = spark.newSession()
-    s2.conf.set(graft.ops.Packing.ReliableCheckpointKey, "true")
+    s2.conf.set(graft.ops.Pins.ReliableCheckpointKey, "true")
     val df = { import s2.implicits._
       (1 to 10).map(i => (i.toLong, 1L)).toDF("k", "w") }
     if (spark.sparkContext.getCheckpointDir.isEmpty) {
@@ -41,7 +41,7 @@ class PackingSpec extends AnyFunSuite with SparkTestBase {
       }
       assert(e.getMessage.contains("setCheckpointDir"))
     }
-    s2.conf.set(graft.ops.Packing.ReliableCheckpointKey, "false")
+    s2.conf.set(graft.ops.Pins.ReliableCheckpointKey, "false")
   }
 
   test("reliable-checkpoint flag: identical results, blocks land in the checkpoint dir") {
@@ -52,7 +52,7 @@ class PackingSpec extends AnyFunSuite with SparkTestBase {
       .select("k", "cum_w", "shard").as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
     val ckptDir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.sparkContext.setCheckpointDir(ckptDir)
-    spark.conf.set(graft.ops.Packing.ReliableCheckpointKey, "true")
+    spark.conf.set(graft.ops.Pins.ReliableCheckpointKey, "true")
     try {
       val reliable = graft.ops.Packing.assignShards(df, "k", "w", 100L, numPartitions = 4)
         .select("k", "cum_w", "shard").as[(Long, Long, Long)].collect().sortBy(_._1).toSeq
@@ -65,16 +65,16 @@ class PackingSpec extends AnyFunSuite with SparkTestBase {
       val g = (1 to 300).map(i => (i.toLong, s"s${i % 3}")).toDF("id", "src")
       val ranks = graft.ops.Mixing.groupwiseRank(g, "src", Seq(col("id")), numPartitions = 4)
         .select("id", "grp_rank").as[(Long, Long)].collect().sortBy(_._1).toSeq
-      spark.conf.set(graft.ops.Packing.ReliableCheckpointKey, "false")
+      spark.conf.set(graft.ops.Pins.ReliableCheckpointKey, "false")
       val ranksLocal = graft.ops.Mixing.groupwiseRank(g, "src", Seq(col("id")), numPartitions = 4)
         .select("id", "grp_rank").as[(Long, Long)].collect().sortBy(_._1).toSeq
       assert(ranks == ranksLocal, "reliable checkpoint changed groupwise ranks")
     } finally {
-      spark.conf.set(graft.ops.Packing.ReliableCheckpointKey, "false")
+      spark.conf.set(graft.ops.Pins.ReliableCheckpointKey, "false")
     }
   }
 
-  test("adaptive width (r16): AQE-coalesced exchange, identical results, kill switch restores fixed width") {
+  test("adaptive width: AQE-coalesced exchange, same rows as 32-wide") {
     import spark.implicits._
     import scala.jdk.CollectionConverters._
     val rng = new scala.util.Random(23)
@@ -91,15 +91,11 @@ class PackingSpec extends AnyFunSuite with SparkTestBase {
       s"adaptive width did not coalesce: ${adaptive.rdd.getNumPartitions} partitions")
     val got = adaptive.select("k", "cum_w", "shard").as[(Long, Long, Long)]
       .collect().sortBy(_._1).toSeq
-    s2.conf.set(graft.ops.Packing.AdaptiveWidthKey, "false")
-    val fixed = graft.ops.Packing.assignShards(df2, "k", "w", 100L)
-    assert(fixed.rdd.getNumPartitions == 32,
-      s"kill switch must restore the fixed 32-wide exchange, got ${fixed.rdd.getNumPartitions}")
+    val fixed = graft.ops.Packing.assignShards(df2, "k", "w", 100L, numPartitions = 32)
     val exp = fixed.select("k", "cum_w", "shard").as[(Long, Long, Long)]
       .collect().sortBy(_._1).toSeq
     assert(got == exp, "adaptive width changed prefix-sum results")
     // groupwiseRank rides the same exchange helper
-    s2.conf.unset(graft.ops.Packing.AdaptiveWidthKey)
     val g = (1 to 300).map(i => (i.toLong, s"s${i % 3}")).toDF("id", "src")
     val g2 = s2.createDataFrame(g.collect().toSeq.asInstanceOf[Seq[org.apache.spark.sql.Row]].asJava, g.schema)
     val ranked = graft.ops.Mixing.groupwiseRank(g2, "src", Seq(col("id")))

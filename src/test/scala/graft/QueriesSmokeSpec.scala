@@ -41,8 +41,21 @@ class QueriesSmokeSpec extends AnyFunSuite with SparkTestBase {
     assert(oDups.isEmpty, s"duplicate oracle registrations: $oDups")
   }
 
+  /** Ids of the checkpointed RDDs still pinned in the block store. */
+  private def frozen: Set[Int] = spark.sparkContext.getPersistentRDDs
+    .collect { case (id, rdd) if rdd.isCheckpointed => id }.toSet
+
+  /** Run a gate in its own `Pins.scoped` block, as Verify, Bench and
+    * Probe run it: it must leave none of its freezes pinned. */
+  private def noPinsLeft(name: String)(gate: => Unit): Unit = {
+    val before = frozen
+    ops.Pins.scoped(gate)
+    val left = frozen -- before
+    assert(left.isEmpty, s"$name left checkpointed RDDs ${left.mkString(",")} pinned")
+  }
+
   for ((name, fn) <- SparkEntry.queries.toSeq.sortBy(_._1)) {
-    test(s"query $name runs and returns rows on sf0.001") {
+    test(s"query $name runs and returns rows on sf0.001") { noPinsLeft(name) {
       val df = fn(spark, sfDir)
       // Portability contract: no DECIMAL-typed output columns, ever. The
       // driver's hash normalization disagrees with DuckDB's on DECIMAL
@@ -57,7 +70,7 @@ class QueriesSmokeSpec extends AnyFunSuite with SparkTestBase {
         s"$name emits DECIMAL columns ${decimalCols.mkString(",")} — " +
           "emit BIGINT micros instead (see driver-hash-decimal-outputs)")
       assert(df.count() > 0, s"$name returned 0 rows")
-    }
+    }}
   }
 
   test("flagship entry returns rows (driver t1 smoke)") {

@@ -167,7 +167,7 @@ class ReaggSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("basketLift / rfmSegments freezes honor the reliable-checkpoint conf") {
-    val key = graft.ops.Packing.ReliableCheckpointKey
+    val key = graft.ops.Pins.ReliableCheckpointKey
     def ts(d: Int) = java.sql.Timestamp.valueOf(f"2024-01-0$d 00:00:00")
     val baskets = Seq((1L, "x"), (1L, "y"), (2L, "x"), (2L, "y"), (3L, "x"),
       (3L, "z"), (4L, "y")).toDF("bk", "it")
