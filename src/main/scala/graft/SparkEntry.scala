@@ -1,14 +1,14 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.io.{LocalFs, Tables}
-import graft.ops.{Coerce, Dedup, Layout, Merge, Multimodal, Normalize, Pins, Reagg, Similarity, TextAnalysis}
+import graft.gates._
+import graft.io.Tables
+import graft.ops.{Coerce, Merge, Normalize}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * Naming scheme ties each query to SURVEY §2's operator inventory:
   * `pN_*` = reference projection/transform ops, `w4/s8` = upsert-merge,
@@ -24,136 +24,21 @@ import graft.ops.{Coerce, Dedup, Layout, Merge, Multimodal, Normalize, Pins, Rea
   */
 object SparkEntry {
 
-  /** Money-safe decimal cast: exact arithmetic, same rule in the oracle. */
-  private def dec(c: Column): Column = c.cast("decimal(18,2)")
+  /** Every gate, one [[Gate]] record each, family by family. */
+  lazy val gates: Seq[Gate] = Seq(RelationalGates.all, EtlGates.all,
+    DedupGates.all, AnnGates.all, TextGates.all, AnalyticsGates.all,
+    MediaGates.all, GraphGates.all, StreamGates.all).flatten
 
-  /** Scale-adaptive deterministic subset for the pair-quadratic gates
-    * (r14 judge ask #1b): at the driver scales (table ≤ `maxRows`) the
-    * gate runs the FULL input, bit-identical to every prior round; past
-    * the threshold (sf1.0's 10× tables, where the DuckDB ORACLE — not
-    * the engine — is pair-quadratic and cannot complete) both sides
-    * drop to the same 1/16 id-hash sample so the compare stays exact
-    * and tractable at any sf. The hash is the DuckDB-replayable
-    * multiplicative family every seeded gate already pins (DuckDB has
-    * no xxhash64). */
-  private def scaleSubset(df: DataFrame, key: Column,
-      maxRows: Long): DataFrame =
-    // the count() below is a GATE-HARNESS-ONLY threshold probe on
-    // dimension-sized inputs (one extra scan per gate invocation, never
-    // on the hot path); the production form of this decision reads the
-    // planner's column stats (CBO rowCount / ANALYZE TABLE) for free
-    // instead of scanning (r15, judge ask #7)
-    if (df.count() <= maxRows) df
-    else df.filter((key % 1000003L + 7L) * 2654435761L %
-      2147483647L % 1000000L < 62500L)
+  private lazy val byName: Map[String, Gate] = Gate.index(gates)
 
-  /** Scale-adaptive ANN query roster (r15 — the sf10 probe's finding):
-    * the x2 verdicts brute-force EXACT top-k over the corpus, so a
-    * roster that is a constant FRACTION of the corpus (vec_id % 100)
-    * makes the VERDICT quadratic — invisible through sf1.0 (20k
-    * vectors / 200 queries / 4M pairs) and 827 s at sf10 (200k
-    * vectors / 2k queries / 400M pairs). Past 30k corpus vectors the
-    * roster thins by the same DuckDB-replayable multiplicative hash
-    * family to ~300 queries, so verdict work grows LINEARLY with the
-    * corpus from there; at or below 30k (every driver scale AND
-    * sf1.0) the threshold keeps the full % 100 roster bit-identical
-    * to every prior round. The count() is a gate-harness probe (see
-    * [[scaleSubset]]); the production analog is planner column stats. */
-  private def annRoster(e: DataFrame): DataFrame = {
-    val lim = 30000000000L / math.max(e.count(), 30000L)
-    e.filter(col("vec_id") % 100 === 0 &&
-      (col("vec_id") % 1000003L + 7L) * 2654435761L %
-        2147483647L % 1000000L < lim)
-  }
+  /** One entry per implemented operator from SURVEY.md §2. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    byName.map { case (n, g) => n -> g.query }
 
-  /** Shared S10-family round-trip gate: write events (optionally sliced)
-    * through a format boundary, read back, infer-then-coerce when the
-    * format doesn't carry its schema (CSV/JSONL/XML; ORC does), then
-    * aggregate. Equality with the direct-aggregation oracle proves no
-    * value is lost or re-typed through serialization. */
-  private def eventsRoundTrip(s: SparkSession, dir: String, tag: String,
-      write: (DataFrame, String) => Unit, read: String => DataFrame,
-      coerce: Boolean, slice: Option[Column] = None): DataFrame = {
-    import org.apache.spark.sql.types._
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
-    val base = Tables.events(s, dir)
-    val src = slice.fold(base)(c => base.filter(c))
-      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-    write(src, s"$tmp/events_$tag")
-    val back = read(s"$tmp/events_$tag")
-    val target = StructType(Seq(
-      StructField("event_id", LongType), StructField("user_id", LongType),
-      StructField("event_type", StringType), StructField("value", DoubleType)))
-    (if (coerce) Coerce.toSchema(back, target) else back)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(dec(col("value"))).cast("double").as("sum_v"),
-        min(col("event_id")).cast("long").as("min_id"),
-        max(col("event_id")).cast("long").as("max_id"))
-      .orderBy("event_type")
-  }
-
-  private val propsSchema = StructType(Seq(StructField("k", LongType)))
-
-  /** Fixture identity for per-JVM build-once caches (persisted IVF):
-    * path + total size + max mtime, so a driver-regenerated fixture is
-    * a cache MISS — the same probe-stays-an-input discipline as the
-    * streaming footer-probe cache. Handles both single-file and
-    * directory parquet layouts. */
-  private def fixtureKey(dir: String, table: String): String = {
-    import java.nio.file._
-    val p = Paths.get(dir, table)
-    if (Files.isDirectory(p)) {
-      var size = 0L; var mtime = 0L
-      // close the java.nio stream (it holds a directory handle open)
-      val walk = Files.walk(p)
-      try walk.forEach { q =>
-        if (Files.isRegularFile(q)) {
-          size += Files.size(q)
-          mtime = math.max(mtime, Files.getLastModifiedTime(q).toMillis)
-        }
-      } finally walk.close()
-      s"$p|$size|$mtime"
-    } else s"$p|${Files.size(p)}|${Files.getLastModifiedTime(p).toMillis}"
-  }
-
-  /** Shared fixture for the `link_*` gates: customers (custkey < 2000)
-    * against a deterministic dirty twin, nation-blocked, F-S scored.
-    * Dirt formula (replayed verbatim by the oracles): name typo'd at
-    * custkey % 4 == 0 ('Custmer' + tail, lev 1), suffixed ' J' at % 4
-    * == 2 (lev 2), replaced wholesale at % 4 == 3; balance shifted by
-    * custkey % 300 − 150 cents (crosses the ±100 band both ways);
-    * segment wiped to UNKNOWN at % 7 == 0. */
-  private def linkageScored(s: SparkSession, dir: String): DataFrame = {
-    val c = Tables.customer(s, dir).filter(col("c_custkey") < 2000)
-    val cents = expr("CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)")
-    val left = c.select(col("c_custkey").as("l_id"), col("c_name").as("l_name"),
-      col("c_nationkey").as("block_nation"), cents.as("l_cents"),
-      col("c_mktsegment").as("l_seg"))
-    val dirty = c.select(col("c_custkey").as("r_id"),
-      when(col("c_custkey") % 4 === 0,
-          concat(lit("Custmer"), substring(col("c_name"), 9, 1000)))
-        .when(col("c_custkey") % 4 === 2, concat(col("c_name"), lit(" J")))
-        .when(col("c_custkey") % 4 === 3,
-          concat(lit("Client-"), col("c_custkey").cast("string")))
-        .otherwise(col("c_name")).as("r_name"),
-      col("c_nationkey").as("block_nation"),
-      (cents + col("c_custkey") % 300 - 150).as("r_cents"),
-      when(col("c_custkey") % 7 === 0, lit("UNKNOWN"))
-        .otherwise(col("c_mktsegment")).as("r_seg"))
-    val pairs = graft.ops.Linkage.blockedPairs(left, dirty,
-      Seq("block_nation"), maxBlock = 1000)
-    val nameW = when(col("l_name") === col("r_name"), 4000000L)
-      .when(levenshtein(col("l_name"), col("r_name")) <= 2, 2500000L)
-      .otherwise(-1000000L)
-    val segW = when(col("l_seg") === col("r_seg"), 500000L).otherwise(-500000L)
-    val balW = when(abs(col("l_cents") - col("r_cents")) <= 100, 1500000L)
-      .otherwise(-1500000L)
-    graft.ops.Linkage.scoreAndClassify(pairs, Seq(nameW, segW, balW),
-        linkAt = 4000000L, possibleAt = 1000000L)
-      .withColumn("name_w", nameW).withColumn("seg_w", segW)
-      .withColumn("bal_w", balW)
-  }
+  /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] =
+    byName.map { case (n, g) => n -> g.oracle }
 
   /** Flagship: the reference's full W1+W2 chain re-expressed on `events`
     * (SURVEY §7.2.1) — JSON parse (X6) → flatten (P2) → rename (P3) →
@@ -162,7 +47,7 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
     val ev = Tables.events(spark, dir)
-    val parsed = ev.withColumn("p", from_json(col("props"), propsSchema)).drop("props")
+    val parsed = ev.withColumn("p", from_json(col("props"), Fixtures.propsSchema)).drop("props")
     val flat = Normalize.flatten(parsed)
     val renamed = Normalize.renameColumns(flat, Map("p.k" -> "k"))
     val target = StructType(Seq(
@@ -172,14101 +57,4 @@ object SparkEntry {
     val coerced = Coerce.toSchema(renamed, target)
     Merge.latestByKey(coerced, Seq("user_id", "event_type"), Seq("ts"), Seq("event_id"))
   }
-
-  /** Shared fixture for the x5 perceptual-hash gates: 8×8 PGMs in
-    * near-dup groups of 4 (base raster per doc_id div 4; one +40 and
-    * one −40 pixel per id, both in the first 8 pixels and sum-balanced
-    * so the mean — hence every unperturbed bit — is identical across a
-    * group). Hash frame: (doc_id, hash_lo, hash_hi, n_ones). */
-  /** Doc-id roster feeding a per-row codec/synthesis kernel, spread
-    * across the session's cores: the documents fixture is a single-
-    * split parquet (one scan task), so without the repartition every
-    * encode/decode kernel below a `.map`/`.flatMap` over these ids ran
-    * SERIALLY on one core while the rest of the session idled (opt
-    * guide §2.5/§2.6). The exchange moves only the filtered ids — a
-    * few hundred longs, effectively free — unlike spreading the full
-    * text table, which the SpreadAb A/B (retired; BENCH_NOTES.md
-    * "Retired dev mains") measured a net loss for cheap map work (see
-    * Tables.spreadScan). Row-identical: the kernels are pure per-row
-    * functions of the id, and every gate orders its output. Honors the
-    * same `spark.graft.scan.spread` kill switch as Tables.spreadScan
-    * so one conf disables every spread behavior (the documented
-    * production escape hatch / `Probe ab` toggle). */
-  private def kernelIds(s: SparkSession, dir: String, below: Long)
-      : org.apache.spark.sql.Dataset[Long] = {
-    import s.implicits._
-    val ids = Tables.documents(s, dir).filter(col("doc_id") < below)
-      .select(col("doc_id")).as[Long]
-    if (!s.conf.getOption(Tables.ScanSpreadKey).forall(_.toBoolean)) ids
-    else ids.repartition(s.sparkContext.defaultParallelism)
-  }
-
-  /** Documents with the single-split scan spread across cores — ONLY
-    * for gates whose per-row text kernels (shingle/token hashing over
-    * the full text) dominate the query; each use A/B-verified with
-    * `Probe ab <dir> <query> spark.graft.scan.spread` (blanket
-    * spreading measured a net loss — see Tables.spreadScan). */
-  private def docsSpread(s: SparkSession, dir: String): DataFrame =
-    Tables.spreadTable(s, dir, "documents", Tables.documents(s, dir))
-
-  private def phashFixtureHashes(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val recs = kernelIds(s, dir, 500)
-      .map { id =>
-        val g = id / 4
-        Multimodal.MediaRecord(id, Multimodal.encodePgm(8, 8, 255, { k =>
-          val b = 60 + ((g * 31 + k * 7) % 136).toInt
-          b + (if (k == (id % 4)) 40 else 0) -
-            (if (k == 4 + (id % 4)) 40 else 0)
-        }), "image/x-pgm", "xx")
-      }
-    // frozen: phashFixturePairs self-joins this frame, so the PGM
-    // encode+decode+hash kernel ran twice per consumer (r16)
-    Multimodal.averageHashes(recs).toDF().transform(Pins.freeze)
-  }
-
-  /** Banded Hamming near-dup pairs over [[phashFixtureHashes]]:
-    * candidates agree exactly on bits 16..63 (hash-join band keys),
-    * Hamming over the low half ≤ 6 decides. */
-  private def phashFixturePairs(s: SparkSession, dir: String): DataFrame = {
-    val hashes = phashFixtureHashes(s, dir)
-    val a = hashes.select(col("doc_id").as("id_a"),
-      col("hash_lo").as("_la"), col("hash_hi").as("_ha"))
-    val b = hashes.select(col("doc_id").as("id_b"),
-      col("hash_lo").as("_lb"), col("hash_hi").as("_hb"))
-    a.join(b, col("id_a") < col("id_b") && col("_ha") === col("_hb") &&
-        shiftrightunsigned(col("_la"), 16) ===
-          shiftrightunsigned(col("_lb"), 16))
-      .select(col("id_a"), col("id_b"),
-        (bit_count(col("_la").bitwiseXOR(col("_lb"))) +
-          bit_count(col("_ha").bitwiseXOR(col("_hb"))))
-          .cast("long").as("hamming"))
-      .filter(col("hamming") <= 6)
-  }
-
-  /** The planted-spectra mono Layer III fixture of `x5_decode_mp3` and
-    * `x5_decode_mp3_reservoir`: 2-4 frames whose granules plant one
-    * +1 and one −1 count1 line in two subbands (plus a big-values line
-    * through Huffman table 1 on id%4==0 docs), per-granule
-    * global_gain, CRC-16 on id%3==0 docs. Returns (stream, bitrate,
-    * decoded sample count, spectrum_exact, tones_ok): spectrum_exact
-    * pins bit-exact recovery of every planted line, tones_ok that
-    * each steady frame's top-energy analysis band is a planted one. */
-  private def mp3PlantedMono(id: Long, reservoir: Boolean)
-      : (Array[Byte], Int, Long, Boolean, Boolean) = {
-    val mpa = graft.ops.MpegAudio
-    val nGr = 2 * (2 + id % 3).toInt
-    val bv = if (id % 4 == 0) 16 else 0
-    def bands(g: Int): Seq[Int] = {
-      val sb1 = 2 + ((id + g) % 20).toInt
-      val sb2 = 23 + ((3 * id + g) % 8).toInt
-      Seq(sb1, sb2) ++
-        (if (bv > 0) Seq(((id + 2 * g) % 32).toInt / 18) else Nil)
-    }
-    val granules = (0 until nGr).map { g =>
-      val spec = new Array[Int](576)
-      val sb1 = 2 + ((id + g) % 20).toInt
-      spec(18 * sb1 + 4 + ((id + g) % 9).toInt) = 1
-      val sb2 = 23 + ((3 * id + g) % 8).toInt
-      spec(18 * sb2 + 4 + (g % 9)) = -1
-      if (bv > 0)
-        spec(((id + 2 * g) % 32).toInt) = if ((id + g) % 2 == 0) 1 else -1
-      spec
-    }
-    val gains = (0 until nGr).map(g => 198 + ((id + g) % 24).toInt)
-    val kbps = Array(160, 192, 224, 256)((id % 4).toInt)
-    val enc = mpa.encodeMp3(granules.zip(gains).map { case (l, gg) =>
-      Seq(mpa.Mp3GranSpec(l, gg, bv)) }, kbps, reservoir = reservoir,
-      withCrc = id % 3 == 0)
-    val spectra = mpa.mp3StreamSpectra(id, enc)
-    val specOk = spectra.length == nGr &&
-      spectra.zipWithIndex.forall { case (xr, g) =>
-        val gain = math.pow(2.0, (gains(g) - 210) / 4.0)
-        (0 until 576).forall(i =>
-          math.abs(xr(i) - granules(g)(i) * gain) < 1e-9)
-      }
-    val pcm = mpa.decodeMpegAudio(id, enc)
-    // frame f of the delay-trimmed PCM mixes granules 2f−1..2f+2
-    val tonesOk = mpa.audioFingerprints(pcm).drop(1).forall { case (f, fp) =>
-      val planted = (math.max(0, 2 * f - 1) to
-        math.min(nGr - 1, 2 * f + 2)).flatMap(bands).toSet
-      planted(((fp >> 15) & 31).toInt)
-    }
-    (enc, kbps, pcm.length.toLong, specOk, tonesOk)
-  }
-
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // ----------------------------------------------------------------
-    // Relational / aggregation coverage (SURVEY §2.3 — absent in the
-    // reference, required for a complete engine; also the bench workload)
-    // ----------------------------------------------------------------
-
-    // TPC-H Q1-style pricing summary: single scan, hash agg with map-side
-    // partial aggregation; decimal sums for cross-engine exactness.
-    "q1_pricing_summary" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") <= to_timestamp(lit("1998-12-01")))
-        .groupBy(col("l_returnflag"), col("l_linestatus"))
-        .agg(
-          sum(dec(col("l_quantity"))).cast("double").as("sum_qty"),
-          sum(dec(col("l_extendedprice"))).cast("double").as("sum_base_price"),
-          sum(dec(col("l_extendedprice")) * (dec(lit(1)) - dec(col("l_discount"))))
-            .cast("double").as("sum_disc_price"),
-          count(lit(1)).as("count_order"))
-        .orderBy("l_returnflag", "l_linestatus")
-    }),
-
-    // TPC-H Q3-style: selective dim filter → join fact → agg → top-k.
-    // customer is small → Catalyst broadcasts it; lineitem never shuffles
-    // for the join, only for the final agg.
-    "q3_top_revenue_orders" -> ((s, dir) => {
-      val c = Tables.customer(s, dir).filter(col("c_mktsegment") === "BUILDING")
-      val o = Tables.orders(s, dir).filter(col("o_orderdate") < to_timestamp(lit("1997-01-01")))
-      val l = Tables.lineitem(s, dir).filter(col("l_shipdate") > to_timestamp(lit("1997-01-01")))
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .groupBy(col("o_orderkey"), col("o_orderdate"))
-        .agg(sum(dec(col("l_extendedprice")) * (dec(lit(1)) - dec(col("l_discount"))))
-          .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("o_orderkey").asc)
-        .limit(10)
-    }),
-
-    // Semi join (EXISTS): orders having any high-quantity line.
-    "join_semi_highqty" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val l = Tables.lineitem(s, dir).filter(col("l_quantity") > 45)
-      o.join(l, o("o_orderkey") === l("l_orderkey"), "left_semi")
-        .select(col("o_orderkey"), col("o_totalprice"))
-        .orderBy("o_orderkey")
-    }),
-
-    // Anti join (NOT EXISTS): orders with no lineitems at all.
-    "join_anti_no_lines" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val l = Tables.lineitem(s, dir)
-      o.join(l, o("o_orderkey") === l("l_orderkey"), "left_anti")
-        .select(col("o_orderkey"), col("o_orderstatus"))
-        .orderBy("o_orderkey")
-    }),
-
-    // Window top-k: 3 biggest orders per customer, rank exposed.
-    "window_topk_orders" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      Tables.orders(s, dir)
-        .withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 3)
-        .select(col("o_custkey"), col("o_orderkey"), col("rk"))
-        .orderBy("o_custkey", "rk")
-    }),
-
-    // Rollup over the region→nation hierarchy (grouping-sets machinery).
-    "agg_rollup_region" -> ((s, dir) => {
-      val c = Tables.customer(s, dir)
-      val n = Tables.nation(s, dir)
-      val r = Tables.region(s, dir)
-      c.join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-        .rollup(col("r_name"), col("n_name"))
-        .agg(count(lit(1)).as("n_cust"),
-          sum(dec(col("c_acctbal"))).cast("double").as("sum_bal"))
-        .orderBy(col("r_name").asc_nulls_first, col("n_name").asc_nulls_first)
-    }),
-
-    // Distinct aggregation per segment.
-    "agg_distinct_segments" -> ((s, dir) => {
-      Tables.customer(s, dir)
-        .groupBy(col("c_mktsegment"))
-        .agg(count(lit(1)).as("n_cust"),
-          countDistinct(col("c_nationkey")).as("n_nations"),
-          sum(dec(col("c_acctbal"))).cast("double").as("sum_bal"))
-        .orderBy("c_mktsegment")
-    }),
-
-    // Set op: customers ordering in 1995 but never in 2000+ (EXCEPT).
-    "set_except_customers" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val a = o.filter(year(col("o_orderdate")) === 1995).select(col("o_custkey").as("custkey"))
-      val b = o.filter(year(col("o_orderdate")) >= 2000).select(col("o_custkey").as("custkey"))
-      a.except(b).orderBy("custkey")
-    }),
-
-    // Bag (multiset) set ops — EXCEPT ALL keeps max(0, cA−cB) copies per
-    // key, INTERSECT ALL min(cA, cB): the variants the distinct forms
-    // above can't express (e.g. "how many MORE orders in 1997 than
-    // 1998 per customer"). Compacted by a GROUP BY so the gate compares
-    // multiplicities, not an unordered bag.
-    "set_bag_ops_customers" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val a = o.filter(year(col("o_orderdate")) === 1997).select(col("o_custkey"))
-      val b = o.filter(year(col("o_orderdate")) === 1998).select(col("o_custkey"))
-      val ex = a.exceptAll(b).groupBy("o_custkey").agg(count(lit(1)).as("n"))
-        .withColumn("op", lit("except"))
-      val in = a.intersectAll(b).groupBy("o_custkey").agg(count(lit(1)).as("n"))
-        .withColumn("op", lit("intersect"))
-      ex.unionByName(in).select(col("op"), col("o_custkey"), col("n"))
-        .orderBy("op", "o_custkey")
-    }),
-
-    // ----------------------------------------------------------------
-    // Reference parity ops (SURVEY §2.2) demonstrated on harness tables
-    // ----------------------------------------------------------------
-
-    // P2/X6 — typed JSON parse + recursive struct flatten (json_normalize).
-    "p2_flatten_json" -> ((s, dir) => {
-      val parsed = Tables.events(s, dir)
-        .withColumn("p", from_json(col("props"), propsSchema))
-      Normalize.flatten(parsed.select(col("event_id"), col("p")))
-        .withColumnRenamed("p.k", "k")
-        .orderBy("event_id")
-    }),
-
-    // P3 — bulk rename with pass-through semantics (pandas rename).
-    "p3_rename_bulk" -> ((s, dir) => {
-      Normalize.renameColumns(Tables.customer(s, dir), Map(
-        "c_custkey" -> "customer_id", "c_name" -> "full_name",
-        "c_acctbal" -> "account_balance", "c_mktsegment" -> "market_segment",
-        "notAColumn" -> "ignored"))
-        .select(col("customer_id"), col("full_name"), col("account_balance"),
-          col("market_segment"), col("c_nationkey"))
-        .orderBy("customer_id")
-    }),
-
-    // P4 — consolidate sparse columns into one null-dropping JSON column.
-    "p4_consolidate_json" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .withColumn("et", when(col("event_type") === "view", lit(null)).otherwise(col("event_type")))
-        .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
-        .select(col("event_id"), to_json(struct(col("et"), col("k"))).as("custom_fields"))
-        .orderBy("event_id")
-    }),
-
-    // P5 — CSV float-artifact scrub ("17.0" → "17"), native expression.
-    "p5_float_scrub" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          Coerce.scrubFloatArtifact(col("l_quantity")).as("qty_str"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // P6 — numeric coercion with errors='coerce' semantics (garbage→NULL).
-    "p6_coerce_long" -> ((s, dir) => {
-      val dirty = when(col("event_type") === "error", lit("N/A"))
-        .otherwise(get_json_object(col("props"), "$.k"))
-      Tables.events(s, dir)
-        .select(col("event_id"), Coerce.toLongCoerce(dirty).as("k_long"))
-        .orderBy("event_id")
-    }),
-
-    // P7 — string coercion with the reference's ' ' sentinel for missing.
-    "p7_string_sentinel" -> ((s, dir) => {
-      val maybeNull = when(col("event_type") === "view", lit(null)).otherwise(col("event_type"))
-      Tables.events(s, dir)
-        .select(col("event_id"), Coerce.toSentinelString(maybeNull).as("etype"))
-        .orderBy("event_id")
-    }),
-
-    // P9/P11 — dual-format timestamp parse, unparseable → NULL.
-    "p9_ts_parse" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .withColumn("ts_str",
-          when(col("event_id") % 10 === 0, lit("not-a-date"))
-            .otherwise(date_format(col("ts"), Coerce.referenceTsFormat)))
-      ev.select(col("event_id"), col("ts_str"),
-          Coerce.toTimestampUtc(col("ts_str")).as("ts_parsed"))
-        .orderBy("event_id")
-    }),
-
-    // W4 — LWW latest state per (user, event_type) over the event log
-    // (max_by hash-agg form: map-side combine, no per-partition sort).
-    "w4_lww_latest" -> ((s, dir) => {
-      // project before the merge: max_by(struct(*)) defeats Catalyst's
-      // column pruning, so unused columns (props) must not enter the agg
-      Merge.latestByKeyAgg(
-          Tables.events(s, dir).select("user_id", "event_type", "event_id", "value", "ts"),
-          Seq("user_id", "event_type"), Seq("ts"), Seq("event_id"))
-        .select(col("user_id"), col("event_type"), col("event_id"), col("value"))
-        .orderBy("user_id", "event_type")
-    }),
-
-    // S8 — upsert: per-user snapshot before the split merged with incoming
-    // events after it; incoming wins per key (ON CONFLICT DO UPDATE).
-    "s8_merge_upsert" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select("user_id", "event_id", "value", "ts")
-      val split = to_timestamp(lit("2024-02-15"))
-      val existing = Merge.latestByKeyAgg(ev.filter(col("ts") < split),
-        Seq("user_id"), Seq("ts"), Seq("event_id"))
-      val incoming = Merge.latestByKeyAgg(ev.filter(col("ts") >= split),
-        Seq("user_id"), Seq("ts"), Seq("event_id"))
-      Merge.upsertLwwAgg(existing, incoming, Seq("user_id"), Seq("ts"), Seq("event_id"))
-        .select(col("user_id"), col("event_id"), col("value"))
-        .orderBy("user_id")
-    }),
-
-    // ----------------------------------------------------------------
-    // EXT — LLM-pipeline ops (SURVEY §2.5)
-    // ----------------------------------------------------------------
-
-    // X1 — exact dedup via content digest (group on sha2, min id kept).
-    "x1_dedup_exact" -> ((s, dir) => {
-      Dedup.exactByContent(Tables.documents(s, dir), "text", "doc_id")
-        .orderBy("content_hash")
-    }),
-
-    // X1 — incremental ingestion dedup: batch N (doc_id >= 250)
-    // compacts to one row per digest, then anti-joins the digest store
-    // accumulated from prior batches (doc_id < 250) — what an append-
-    // only corpus runs on every new crawl drop.
-    "x1_dedup_incremental" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      val seen = docs.filter(col("doc_id") < 250)
-        .select(Dedup.contentHash(col("text")).as("content_hash")).distinct()
-      Dedup.dedupAgainstSeen(docs.filter(col("doc_id") >= 250), seen, "text", "doc_id")
-        .orderBy("content_hash")
-    }),
-
-    // X1 — deterministic dropDuplicates: first doc per (lang, source).
-    "x1_dedup_first_per_key" -> ((s, dir) => {
-      Dedup.firstPerKey(Tables.documents(s, dir), Seq("lang", "source"), Seq("doc_id"))
-        .select(col("lang"), col("source"), col("doc_id"))
-        .orderBy("lang", "source")
-    }),
-
-    // X6 — JSON prop extraction, filter pushdown, exact integer agg.
-    "x6_json_filter_agg" -> ((s, dir) => {
-      val k = get_json_object(col("props"), "$.k").cast("long")
-      Tables.events(s, dir)
-        .withColumn("k", k)
-        .filter(col("k") >= 50)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).cast("long").as("sum_k"))
-        .orderBy("event_type")
-    }),
-
-    // Nested data round-trip: order lines collected into a real
-    // array<struct> column (sort_array makes the nesting order
-    // canonical), then consumed by higher-order functions — filter on
-    // a struct field, aggregate over the survivors — and reduced back
-    // to scalars. The shape document stores use for line items /
-    // spans / token ranges; the oracle is the flat relational form.
-    "nested_lines_hof" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .filter(col("l_orderkey") % 100 === 0)
-        .groupBy(col("l_orderkey"))
-        .agg(sort_array(collect_list(
-          struct(col("l_linenumber"), col("l_quantity"), col("l_extendedprice"))))
-          .as("lines"))
-        .select(col("l_orderkey"),
-          size(col("lines")).as("n_lines"),
-          size(filter(col("lines"), x => x("l_quantity") > 30))
-            .as("n_heavy"),
-          // money summed as integer cents inside the HOF: double
-          // addition is order-sensitive and the oracle sums in its own
-          // order — integer cents are exact under any order
-          aggregate(filter(col("lines"), x => x("l_quantity") > 30),
-            lit(0L), (acc, x) => acc + round(x("l_extendedprice") * 100).cast("long"))
-            .as("heavy_cents"))
-        .orderBy("l_orderkey")
-    }),
-
-    // X6v — Spark 4 VARIANT path: parse_json to a real VariantType
-    // column, typed extraction via variant_get (vs the string-walking
-    // get_json_object twin above) — the open-schema column type a
-    // semi-structured 100 TB corpus stores once and shreds on read.
-    "x6_variant_typed" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .withColumn("k", variant_get(parse_json(col("props")), "$.k", "long"))
-        .filter(col("k") % 7 === 0)
-        .groupBy((col("k") % 10).as("k_mod"))
-        .agg(count(lit(1)).as("n"), sum(col("k")).cast("long").as("sum_k"))
-        .orderBy("k_mod")
-    }),
-
-    // Map-typed columns end-to-end: per-user event-type counts built
-    // into a real MapType (map_from_entries), reduced with a map-HOF
-    // (aggregate over map_values), pruned with map_filter, fanned back
-    // out with explode(map). The oracle is the equivalent relational
-    // form — proving the map algebra preserves relational semantics.
-    "map_hof_type_mix" -> ((s, dir) => {
-      val counts = Tables.events(s, dir)
-        .filter(col("user_id") < 100)
-        .groupBy(col("user_id"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      counts.groupBy(col("user_id"))
-        .agg(map_from_entries(
-          array_sort(collect_list(struct(col("event_type"), col("n")))))
-          .as("type_counts"))
-        .withColumn("total_n",
-          aggregate(map_values(col("type_counts")), lit(0L), (a, v) => a + v))
-        .withColumn("frequent",
-          map_filter(col("type_counts"), (_, v) => v >= lit(5L)))
-        .select(col("user_id"), col("total_n"),
-          explode(col("frequent")).as(Seq("event_type", "n")))
-        .withColumn("share_pct",
-          round(col("n").cast("double") * lit(100) / col("total_n").cast("double"), 6))
-        .orderBy("user_id", "event_type")
-    }),
-
-    // TPC-H Q5-style 6-table join: dims broadcast, fact joins stay
-    // shuffle-free until the final agg on nation.
-    "q5_local_volume" -> ((s, dir) => {
-      val r = Tables.region(s, dir).filter(col("r_name") === "ASIA")
-      val n = Tables.nation(s, dir).join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
-      val c = Tables.customer(s, dir).join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-      val o = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= to_timestamp(lit("1996-01-01")) &&
-          col("o_orderdate") < to_timestamp(lit("1998-01-01")))
-      val l = Tables.lineitem(s, dir)
-      l.join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(Tables.supplier(s, dir)),
-          col("l_suppkey") === col("s_suppkey") && col("c_nationkey") === col("s_nationkey"))
-        .groupBy(col("n_name"))
-        .agg(sum(dec(col("l_extendedprice")) * (dec(lit(1)) - dec(col("l_discount"))))
-          .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("n_name").asc)
-    }),
-
-    // X2 — exact brute-force top-k cosine (float-mul/double-sum contract).
-    "x2_topk_cosine" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val q = annRoster(e)
-      Similarity.topKBruteForce(q, e, "vec_id", "embedding", 5)
-        .orderBy("qid", "rk")
-    }),
-
-    // X2 composed — k-NN classification (label transfer): held-out
-    // queries (vec_id % 29 == 0) labeled by majority vote of their 5
-    // nearest train vectors; the cosine exists only to ORDER (rank
-    // agreement already certified by x2_topk_cosine on this data) and
-    // every emitted column is an integer. Vote tie-break: most votes,
-    // then smallest label — total and replayed identically.
-    "x2_knn_classify" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val q = e.filter(col("vec_id") % 29 === 0)
-      val c = e.filter(col("vec_id") % 29 =!= 0)
-      Similarity.knnClassify(q, c, "vec_id", "embedding", "label", k = 5)
-        .join(q.select(col("vec_id").as("qid"),
-          col("label").cast("long").as("true_label")), "qid")
-        .select(col("qid"), col("true_label"), col("pred_label"),
-          col("n_votes"),
-          (col("pred_label") === col("true_label")).as("is_correct"))
-        .orderBy("qid")
-    }),
-
-    // X2 — int8 embedding quantization (the 4× ANN memory/IO reduction).
-    // Gate: per-vector scale + quantized-value checksums + max
-    // reconstruction error, all from floor-based arithmetic that is
-    // bit-identical across engines (see Similarity.quantizeInt8).
-    "x2_quantize_int8" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      Similarity.quantizeInt8(e, "vec_id", "embedding")
-        .join(e, Seq("vec_id"))
-        .select(col("vec_id"), col("scale"),
-          posexplode(arrays_zip(col("q"), col("embedding"))).as(Seq("_i", "_z")))
-        .select(col("vec_id"), col("scale"),
-          col("_z.q").cast("long").as("qv"),
-          col("_z.embedding").cast("double").as("vd"))
-        .groupBy(col("vec_id"))
-        .agg(round(max(col("scale")), 9).as("scale"),
-          sum(col("qv")).as("q_sum"),
-          min(col("qv")).as("q_min"),
-          max(col("qv")).as("q_max"),
-          round(max(abs(col("qv") * col("scale") - col("vd"))), 9).as("max_err"))
-        .orderBy("vec_id")
-    }),
-
-    // X2 scale path — int8-scored ANN with float rerank. Hash-gated
-    // against the EXACT top-k oracle: the k·rerank proxy shortlist keeps
-    // the true top-k whenever the int8 score error (≤ scale/2 per
-    // component) is smaller than the k-th/shortlist-edge gap — which the
-    // fixture satisfies at every SF (verified bit-equal to
-    // x2_topk_cosine at .001/.01/.1), so the full pipeline equals brute
-    // force and inherits its SQL twin. A margin collapse would flip the
-    // gate red — that is the gate working.
-    "x2_ann_quantized" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val q = annRoster(e)
-      Similarity.quantizedTopK(q, e, "vec_id", "embedding", 5)
-        .orderBy("qid", "rk")
-    }),
-
-    // X2 scale path — product quantization (64 floats → 4 byte codes,
-    // 64× memory): codebooks L2-Lloyd-trained on a deterministic
-    // hash-drawn sample DRIVER-SIDE (the FAISS training contract —
-    // O(sample·k·subdim), zero distributed passes), corpus encoded in
-    // one pass, ADC scan as a broadcast lookup join with map-side
-    // partial sums, exact-cosine rerank of the shortlist. Verdict
-    // rows: emitted sims recomputed from raw floats by the oracle;
-    // recall floor 10% pinned under measured 60/56/20% at
-    // sf0.001/0.01/0.1 (honest — low on this adversarial iid fixture,
-    // like the LSH/IVF gates; rerank=8 chosen after rerank=4 measured
-    // 11% at sf0.1, one point above the floor).
-    "x2_ann_pq" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val q = annRoster(e)
-      val ann = Similarity.pqTopK(q, e, "vec_id", "embedding", 5,
-        m = 4, kCodes = 16, trainIters = 5, rerank = 8)
-      Similarity.annVerdict(q, e, "vec_id", "embedding", 5, ann,
-          minOverlapPct = 10)
-        .orderBy("qid")
-    }),
-
-    // X2 scale path — LSH-bucketed ANN, hash-gated through the verdict
-    // table (Similarity.annVerdict): the neighbor list itself has no SQL
-    // twin, but its correctness properties do. Recall floor is 1% of the
-    // exact pairs: the fixture's embeddings are RANDOM vectors, so a
-    // 6-plane bucket holds a true neighbor only at the ~k/64 collision
-    // rate — low recall here is the geometry of the fixture, not the
-    // index (a clustered corpus concentrates buckets); the floor pins
-    // "the bucket path finds real neighbors at all" plus the exact
-    // re-rank and rank-shape contracts, which are recall-independent.
-    // planes=4 after the round-9 recall sweep (AnnRecallProbe, retired;
-    // BENCH_NOTES.md "Retired dev mains"):
-    // on the RANDOM fixture — the adversarial case, iid vectors have no
-    // neighbor structure — planes=6 recall decays with corpus size
-    // (36/12/2 % at sf0.001/0.01/0.1) and would cross the floor at
-    // sf0.1; planes=4 measures 36/16/11 %, ≥2× the 5% floor at every
-    // SF. (Fewer planes = bigger buckets = more verify compute — the
-    // documented recall/cost dial; at 100 TB you'd multi-probe instead.)
-    // The realistic-geometry case is gated separately below
-    // (x2_ann_lsh_clustered) with a 60% floor.
-    "x2_ann_lsh" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val q = annRoster(e)
-      val ann = Similarity.lshBucketTopK(q, e, "vec_id", "embedding", 5, planes = 4)
-      Similarity.annVerdict(q, e, "vec_id", "embedding", 5, ann,
-          minOverlapPct = 5)
-        .orderBy("qid")
-    }),
-
-    // X2 — ANN on the CLUSTERED fixture (Similarity.clusteredVariant:
-    // every vector pulled 95% toward its id-block's center), the
-    // geometry real corpora have and the one ANN recall claims are
-    // meaningful on. Probe-measured tri-scale: LSH planes=6 → 84/92/80%
-    // (floor 60), IVF k-means nprobe=2 → 100/100/100% (floor 90),
-    // JL-projected slf=8 → 100/100/100% (floor 90).
-    "x2_ann_lsh_clustered" -> ((s, dir) => {
-      val e = Similarity.clusteredVariant(
-        Tables.embeddings(s, dir), "vec_id", "embedding", 25)
-      val q = annRoster(e)
-      val ann = Similarity.lshBucketTopK(q, e, "vec_id", "embedding", 5, planes = 6)
-      Similarity.annVerdict(q, e, "vec_id", "embedding", 5, ann,
-          minOverlapPct = 60)
-        .orderBy("qid")
-    }),
-
-    "x2_ann_ivf_clustered" -> ((s, dir) => {
-      val e = Similarity.clusteredVariant(
-        Tables.embeddings(s, dir), "vec_id", "embedding", 25)
-      val q = annRoster(e)
-      val cents = Similarity.trainKMeans(e, "vec_id", "embedding", k = 16, iters = 3)
-      val ann = Similarity.ivfTopKWith(q, e, "vec_id", "embedding", 5, cents, nprobe = 2)
-      Similarity.annVerdict(q, e, "vec_id", "embedding", 5, ann,
-          minOverlapPct = 90)
-        .orderBy("qid")
-    }),
-
-    // X2 — PERSISTED IVF: the index built once (k-means centroids +
-    // corpus as cent_id-PARTITIONED parquet lists), then probed from
-    // disk with partition pruning — only the nprobe probed lists are
-    // read (PlanShapeSpec pins the PartitionFilters). Same scoring
-    // algebra as the in-memory path, so the same floor holds; the
-    // persisted == in-memory equality is pinned in SimilaritySpec.
-    "x2_ann_ivf_persisted" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val q = annRoster(e)
-      // build-once per JVM (keyed by fixture identity, deleted at exit):
-      // the index is the artifact, not the query — rebuilding it per
-      // invocation both misstates the probe-path cost and leaked a
-      // corpus-sized temp copy per bench/verify run
-      val path = Similarity.cachedIvfIndex(
-          "persisted|" + fixtureKey(dir, "embeddings.parquet")) { p =>
-        val cents = Similarity.trainKMeans(e, "vec_id", "embedding", k = 16, iters = 3)
-        Similarity.writeIvfIndex(e, "vec_id", "embedding", cents, p)
-      }
-      val ann = Similarity.ivfTopKPersisted(s, path, q, "vec_id", "embedding",
-        5, nprobe = 6)
-      Similarity.annVerdict(q, e, "vec_id", "embedding", 5, ann,
-          minOverlapPct = 50)
-        .orderBy("qid")
-    }),
-
-    // X2 — PERSISTED IVF MAINTENANCE: the index as a pipeline component.
-    // Build on corpus A (vec_id % 3 != 0), then APPEND batch B (% 3 == 0)
-    // via the same hash-agg argmax assignment under A's centroids —
-    // append writes files only under the cent_id= partitions B maps to
-    // (pinned in SimilaritySpec). Verdicts carried per query row:
-    //   append_equals_rebuild — lists(build A + append B) set-equals the
-    //     direct assignment of A∪B under A's centroids (the judge's
-    //     equality pin, checked both directions);
-    //   census_counts_match — the staleness census's totals reconcile
-    //     with the corpus (n_total == |A∪B|, n_appended == |B|) without
-    //     rescanning it;
-    //   no_retrain_needed — B is drawn from A's distribution, so neither
-    //     re-train trigger (list skew, assignment-fit drift) may fire.
-    // Plus the standard ANN probe verdicts against the appended index.
-    "x2_ann_ivf_append" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val a = e.filter(col("vec_id") % 3 =!= 0)
-      val b = e.filter(col("vec_id") % 3 === 0)
-      val path = Similarity.cachedIvfIndex(
-          "append|" + fixtureKey(dir, "embeddings.parquet")) { p =>
-        val cents = Similarity.trainKMeans(a, "vec_id", "embedding", k = 16, iters = 3)
-        Similarity.writeIvfIndex(a, "vec_id", "embedding", cents, p)
-        Similarity.appendToIvfIndex(s, b, "vec_id", "embedding", p)
-      }
-      val cents = s.read.parquet(s"$path/centroids")
-      val direct = Similarity.assignToCentroids(e, "vec_id", "embedding", cents)
-        .select(col("cid"), col("cent_id"))
-      val lists = s.read.parquet(s"$path/lists")
-        .select(col("cid"), col("cent_id"))
-      val eq = Similarity.multisetEq(lists, direct)
-      val census = Similarity.ivfIndexCensus(s, path).collect()(0)
-      val countsOk = census.getAs[Long]("n_total") == e.count() &&
-        census.getAs[Long]("n_appended") == b.count()
-      val noRetrain = !census.getAs[Boolean]("needs_retrain")
-      val q = annRoster(e)
-      val ann = Similarity.ivfTopKPersisted(s, path, q, "vec_id", "embedding",
-        5, nprobe = 6)
-      Similarity.annVerdict(q, e, "vec_id", "embedding", 5, ann,
-          minOverlapPct = 50)
-        .withColumn("append_equals_rebuild", lit(eq))
-        .withColumn("census_counts_match", lit(countsOk))
-        .withColumn("no_retrain_needed", lit(noRetrain))
-        .orderBy("qid")
-    }),
-
-    // X2 — IVF RETRAIN (the r10 verdict's #3 ask): the staleness
-    // census's verdict CONSUMED, census-fires → retrain → census-clears
-    // as one audited loop. Drift regime = the measured fit-firing one
-    // (IvfMaintProbe's degenerate zero-vector batch; the probe is
-    // retired, BENCH_NOTES.md "Retired dev mains" — the upstream
-    // embedding-model-bug signature): build on A (vec_id % 3 != 0),
-    // append the zeroed B, certify ONCE per fixture (cert persisted
-    // beside the index; cachedIvfIndex keeps the loop idempotent
-    // across bench warm+timed passes):
-    //   census_fired — the degen append collapses append-fit to 0, fit
-    //     drop = the whole build fit (measured 0.28–0.37 across SFs,
-    //     IvfMaintProbe) > the calibrated 0.20 threshold;
-    //   census_cleared — post-retrain needs_retrain=false: stats reset
-    //     to the retrained baseline, skew back in the balanced
-    //     1.1–1.3× band (zero-norm vectors QUARANTINED, not re-ingested
-    //     — cosine can neither train on nor retrieve them; see the
-    //     retrainIvfIndex scaladoc, incl. what retrain honestly does
-    //     NOT clear: genuinely concentrated distributions);
-    //   retrain_equals_fresh_build — retrained centroids AND lists
-    //     both-ways-exceptAll-equal a from-scratch writeIvfIndex over
-    //     the scorable corpus (trainKMeans samples by id hash, so
-    //     lists-as-corpus reproduces the fresh build bit-for-bit);
-    //   quarantine_matches — all |B| zero-norm rows are in quarantine/
-    //     (nothing silently dropped) and the retrained census totals
-    //     hold n_total = |A|, n_appended = 0.
-    // Plus the live ANN probe verdicts through the retrained index.
-    "x2_ann_ivf_retrain" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val a = e.filter(col("vec_id") % 3 =!= 0)
-      val degen = e.filter(col("vec_id") % 3 === 0)
-        .select(col("vec_id"),
-          transform(col("embedding"), _ => lit(0.0f)).as("embedding"))
-      val path = Similarity.cachedIvfIndex(
-          "retrain|" + fixtureKey(dir, "embeddings.parquet")) { p =>
-        import s.implicits._
-        val cents = Similarity.trainKMeans(a, "vec_id", "embedding",
-          k = 16, iters = 3)
-        Similarity.writeIvfIndex(a, "vec_id", "embedding", cents, p)
-        Similarity.appendToIvfIndex(s, degen, "vec_id", "embedding", p)
-        val before = Similarity.ivfIndexCensus(s, p).collect()(0)
-        Similarity.retrainIvfIndex(s, p, k = 16, iters = 3)
-        val after = Similarity.ivfIndexCensus(s, p).collect()(0)
-        val fresh = p + "/_freshcheck"
-        val fcents = Similarity.trainKMeans(a, "vec_id", "embedding",
-          k = 16, iters = 3)
-        Similarity.writeIvfIndex(a, "vec_id", "embedding", fcents, fresh)
-        def setEq(x: org.apache.spark.sql.DataFrame,
-            y: org.apache.spark.sql.DataFrame): Boolean =
-          Similarity.multisetEq(x, y)
-        val listsEq = setEq(
-          s.read.parquet(s"$p/lists").select(col("cid"), col("cent_id")),
-          s.read.parquet(s"$fresh/lists").select(col("cid"), col("cent_id")))
-        val centsEq = setEq(
-          s.read.parquet(s"$p/centroids")
-            .select(col("cent_id"), col("cent_vec")),
-          s.read.parquet(s"$fresh/centroids")
-            .select(col("cent_id"), col("cent_vec")))
-        val nQuar = s.read.parquet(s"$p/quarantine").count()
-        Seq((before.getAs[Boolean]("needs_retrain"),
-            !after.getAs[Boolean]("needs_retrain"),
-            listsEq && centsEq,
-            nQuar == degen.count() &&
-              after.getAs[Long]("n_total") == a.count() &&
-              after.getAs[Long]("n_appended") == 0L))
-          .toDF("census_fired", "census_cleared",
-            "retrain_equals_fresh_build", "quarantine_matches")
-          .coalesce(1).write.mode("overwrite").parquet(s"$p/cert")
-        LocalFs.deleteTree(java.nio.file.Paths.get(fresh))
-      }
-      val cert = s.read.parquet(s"$path/cert").collect()(0)
-      val q = annRoster(e).filter(col("vec_id") % 3 =!= 0)
-      val ann = Similarity.ivfTopKPersisted(s, path, q, "vec_id", "embedding",
-        5, nprobe = 6)
-      Similarity.annVerdict(q, a, "vec_id", "embedding", 5, ann,
-          minOverlapPct = 50)
-        .withColumn("census_fired",
-          lit(cert.getAs[Boolean]("census_fired")))
-        .withColumn("census_cleared",
-          lit(cert.getAs[Boolean]("census_cleared")))
-        .withColumn("retrain_equals_fresh_build",
-          lit(cert.getAs[Boolean]("retrain_equals_fresh_build")))
-        .withColumn("quarantine_matches",
-          lit(cert.getAs[Boolean]("quarantine_matches")))
-        .orderBy("qid")
-    }),
-
-    // X2 — IVF-PQ (the FAISS IVFADC composite): partition pruning AND
-    // byte-code compression in one probe. The persisted index gains
-    // codebooks + a cent_id-partitioned CODES table (m bytes/vector —
-    // the 64× memory win); a probe ranks centroids, reads only the
-    // nprobe probed code partitions (PlanShapeSpec pins the
-    // PartitionFilters), ADC-scores via the query's broadcast lookup
-    // table, and exact-reranks the shortlist against the probed lists'
-    // raw floats — sims exact, order approximate. Codes are RESIDUAL
-    // (v − centroid, classical IVFADC) since r12; the AnnRecallProbe
-    // (BENCH_NOTES.md "Retired dev mains") raw-vs-residual A/B measured
-    // them EQUAL within noise on this iid-random fixture
-    // (centroid/vector norm ratio 0.27-0.33 — the
-    // coarse quantizer explains almost nothing on iid data, so residual
-    // ≈ raw; every clustered fixture saturates 100% under both). Floor
-    // pinned from the r12 residual sweep (m=8, kCodes=16, nprobe=6,
-    // rerank=16, RANDOM fixture): 76/60/58% across sf0.001/0.01/0.1 —
-    // 40 sits under the worst measurement; the clustered sibling below
-    // measures 100% at every SF.
-    "x2_ann_ivfpq" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val q = annRoster(e)
-      val path = Similarity.cachedIvfIndex(
-          "ivfpq|" + fixtureKey(dir, "embeddings.parquet")) { p =>
-        val cents = Similarity.trainKMeans(e, "vec_id", "embedding",
-          k = 16, iters = 3)
-        Similarity.writeIvfIndex(e, "vec_id", "embedding", cents, p)
-        Similarity.writeIvfPqCodes(s, p, m = 8, kCodes = 16)
-      }
-      val ann = Similarity.ivfPqTopKPersisted(s, path, q, "vec_id",
-        "embedding", 5, nprobe = 6, rerank = 16)
-      Similarity.annVerdict(q, e, "vec_id", "embedding", 5, ann,
-          minOverlapPct = 40)
-        .orderBy("qid")
-    }),
-
-    // Realistic-geometry sibling (clusteredVariant corpus): measured
-    // 100% recall at every SF (AnnRecallProbe), floored at 90 like the
-    // rest of the clustered family.
-    "x2_ann_ivfpq_clustered" -> ((s, dir) => {
-      val e = Similarity.clusteredVariant(
-        Tables.embeddings(s, dir), "vec_id", "embedding", 25)
-      val q = annRoster(e)
-      val path = Similarity.cachedIvfIndex(
-          "ivfpqc|" + fixtureKey(dir, "embeddings.parquet")) { p =>
-        val cents = Similarity.trainKMeans(e, "vec_id", "embedding",
-          k = 16, iters = 3)
-        Similarity.writeIvfIndex(e, "vec_id", "embedding", cents, p)
-        Similarity.writeIvfPqCodes(s, p, m = 8, kCodes = 16)
-      }
-      val ann = Similarity.ivfPqTopKPersisted(s, path, q, "vec_id",
-        "embedding", 5, nprobe = 6, rerank = 16)
-      Similarity.annVerdict(q, e, "vec_id", "embedding", 5, ann,
-          minOverlapPct = 90)
-        .orderBy("qid")
-    }),
-
-    "x2_ann_projected_clustered" -> ((s, dir) => {
-      val e = Similarity.clusteredVariant(
-        Tables.embeddings(s, dir), "vec_id", "embedding", 25)
-      val q = annRoster(e)
-      val ann = Similarity.projectedTopK(q, e, "vec_id", "embedding", 5,
-        outDim = 8, shortlistFactor = 8)
-      Similarity.annVerdict(q, e, "vec_id", "embedding", 5, ann,
-          minOverlapPct = 90)
-        .orderBy("qid")
-    }),
-
-    // X3 — MinHash+LSH near-dup, hash-gated through a verdict row: the
-    // banding candidate set has no SQL twin, but against the in-query
-    // EXACT truth (bounded subset, string-shingle Jaccard — a different
-    // dataflow than the op's hashed-shingle kernel) precision and recall
-    // are checkable facts. The truth is the inverted-index exact form —
-    // explode shingles, self-join on the shingle, count common per pair,
-    // Jaccard from |A|+|B|−|A∩B| — identical values to all-pairs
-    // array_intersect (arrays are distinct; zero-overlap pairs can't
-    // reach j≥0.3) at a fraction of its cost, and the shape that
-    // generalizes: cost is Σ_shingle(df choose 2), not n². n_true_pairs
-    // is real data the oracle recomputes (all-pairs SQL — DuckDB's
-    // list_intersect is cheap at 400 docs); emitted_all_true pins the
-    // op's verify promise (precision 1 by construction); the 70% recall
-    // floor holds with room — the fixture's true pairs are high-Jaccard
-    // near-dups, where the b=8/r=4 S-curve is ≈1 (measured 18/18,
-    // 15/15, 0/0 across SFs; a borderline j≈0.3 pair would legitimately
-    // band-miss, which is the documented LSH trade).
-    "x3_minhash_neardup" -> ((s, dir) => {
-      val d = docsSpread(s, dir).filter(col("doc_id") < 400)
-      val emitted = Dedup.minHashNearDups(d, "doc_id", "text",
-          shingleK = 3, bands = 8, rows = 4, minJaccard = 0.3)
-        .select(col("id_a"), col("id_b"), lit(1).as("_e"))
-      val sh = d.select(col("doc_id"),
-        Dedup.wordShingles(lower(col("text")), 3).as("_s"))
-        // frozen: the truth table's exploded self-join plus the size
-        // joins evaluated the shingle kernel several times (r16)
-        .transform(Pins.freeze)
-      val sz = sh.select(col("doc_id"), size(col("_s")).as("_n"))
-      val ex = sh.select(col("doc_id"), explode(col("_s")).as("_sh"))
-      val truth = ex.as("a").join(ex.as("b"),
-          col("a._sh") === col("b._sh") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-        .agg(count(lit(1)).as("_inter"))
-        .join(sz.select(col("doc_id").as("id_a"), col("_n").as("_na")), Seq("id_a"))
-        .join(sz.select(col("doc_id").as("id_b"), col("_n").as("_nb")), Seq("id_b"))
-        .filter(col("_inter").cast("double") /
-          (col("_na") + col("_nb") - col("_inter")).cast("double") >= 0.3)
-        .select(col("id_a"), col("id_b"), lit(1).as("_t"))
-      val stats = truth.join(emitted, Seq("id_a", "id_b"), "full_outer")
-        .agg(count(col("_t")).as("n_true_pairs"),
-          sum(when(col("_t").isNotNull && col("_e").isNotNull, 1L).otherwise(0L)).as("_hit"),
-          sum(when(col("_e").isNotNull && col("_t").isNull, 1L).otherwise(0L)).as("_fp"))
-      d.agg(count(lit(1)).as("n_docs")).crossJoin(stats)
-        .select(col("n_docs"), col("n_true_pairs"),
-          (coalesce(col("_fp"), lit(0L)) === 0L).as("emitted_all_true"),
-          (coalesce(col("_hit"), lit(0L)) * 10 >= col("n_true_pairs") * 7)
-            .as("recall_floor_met"))
-    }),
-
-    // X3 variant — SimHash Hamming-ball near-dup, hash-gated through a
-    // verdict row. SimHash's ground truth IS the fingerprint metric, so
-    // unlike minhash there is no engine-neutral truth table to count;
-    // the gate instead re-derives every emitted pair's fingerprints
-    // through the interpreted HOF path (simHashFromHashes — a different
-    // dataflow than the op's codegen kernel) and pins: the recomputed
-    // Hamming distance matches and clears maxHamming for EVERY pair,
-    // pair shape is canonical (id_a < id_b, no dupes), and the emitted
-    // count clears a floor (measured 384 at sf0.01 full corpus).
-    "x3_simhash_neardup" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val emitted = Dedup.simHashNearDups(d, "doc_id", "text", maxHamming = 8)
-      val fp = d
-        .select(col("doc_id"), Dedup.tokenHashes(col("text")).as("_th"))
-        .select(col("doc_id"),
-          Dedup.simHashFromHashes(col("_th"), size(col("_th"))).as("_fp"))
-      val checked = emitted
-        .join(fp.select(col("doc_id").as("id_a"), col("_fp").as("_fa")), Seq("id_a"))
-        .join(fp.select(col("doc_id").as("id_b"), col("_fp").as("_fb")), Seq("id_b"))
-        .agg(count(lit(1)).as("_n"),
-          count_distinct(struct(col("id_a"), col("id_b"))).as("_nd"),
-          bool_and(col("id_a") < col("id_b")).as("_canon"),
-          bool_and(col("hamming") ===
-            bit_count(col("_fa").bitwiseXOR(col("_fb"))).cast("long") &&
-            col("hamming") <= 8).as("_ham_ok"))
-      d.agg(count(lit(1)).as("n_docs")).crossJoin(checked)
-        .select(col("n_docs"),
-          (coalesce(col("_canon"), lit(true)) && col("_nd") === col("_n"))
-            .as("pairs_wellformed"),
-          coalesce(col("_ham_ok"), lit(true)).as("hamming_verified"),
-          (col("_n") >= 50L).as("pair_floor_met"))
-    }),
-
-    // X3 verify kernel — exact word-3-shingle Jaccard on adjacent-id pairs.
-    // Containment (overlap coefficient) — the ASYMMETRIC near-dup
-    // signal Jaccard structurally misses: a doc fully embedded in a
-    // larger one scores containment 1.0 but Jaccard near zero.
-    // Exact integer micros (sizes + one trunc-div — no float surface
-    // at all). Two pair kinds: natural adjacent docs (low scores) and
-    // each doc vs its own 60%-word prefix, whose shingles are a
-    // strict subset of the full doc's — containment EXACTLY 10⁶ by
-    // construction, the branch a symmetric measure cannot reach.
-    "x3_containment" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val w = split(lower(col("text")), "\\s+")
-      val base = d.select(col("doc_id"), col("text"),
-        array_join(slice(w, lit(1),
-          greatest(lit(3), expr("(size(split(lower(text), '\\\\s+')) * 3) div 5")
-            .cast("int"))), " ").as("prefix_text"))
-      val full = base.select(col("doc_id"),
-        Dedup.wordShingles(lower(col("text")), 3).as("_sf"),
-        Dedup.wordShingles(lower(col("prefix_text")), 3).as("_sp"))
-      val adjacent = full.select(col("doc_id").as("id_a"), col("_sf").as("_sa"))
-        .join(full.select(col("doc_id").as("id_b"), col("_sf").as("_sb")),
-          col("id_a") + 1 === col("id_b"))
-        .select(lit("adjacent").as("kind"), col("id_a"), col("id_b"),
-          Dedup.containmentMicro(col("_sa"), col("_sb")).as("containment_micro"))
-      val prefix = full.select(lit("self_prefix").as("kind"),
-        col("doc_id").as("id_a"), col("doc_id").as("id_b"),
-        Dedup.containmentMicro(col("_sp"), col("_sf")).as("containment_micro"))
-      adjacent.unionByName(prefix).orderBy("kind", "id_a")
-    }),
-
-    // X3 — b-bit minwise signatures (one LONG per doc, 64× smaller
-    // than the full 64-slot signature): population-mean estimates of
-    // Jaccard from the packed bits vs the full signature vs exact
-    // shingle Jaccard, over a planted NEAR population (every doc vs
-    // its one-token-appended twin) and a FAR population (doc i vs
-    // i+150). Means ride exact integer micros (hash-replayable); the
-    // two estimator verdicts pin measured bands (BENCH_NOTES round 9).
-    "x3_bbit_minhash" -> ((s, dir) => {
-      val base = Tables.documents(s, dir).filter(col("doc_id") < 300)
-        .select(col("doc_id"), col("text"))
-      val twins = base.select((col("doc_id") + 100000L).as("doc_id"),
-        concat(col("text"), lit(" trailing twin marker token")).as("text"))
-      val corpus = base.unionByName(twins)
-      val near = base.select(col("doc_id").as("id_a"),
-        (col("doc_id") + 100000L).as("id_b"))
-      val far = base.filter(col("doc_id") < 150)
-        .select(col("doc_id").as("id_a"), (col("doc_id") + 150L).as("id_b"))
-      val est = Dedup.bbitMinhashEstimate(corpus, "doc_id", "text",
-        near.unionByName(far))
-      est.withColumn("kind",
-          when(col("id_b") >= 100000L, "near").otherwise("far"))
-        .groupBy("kind")
-        .agg(count(lit(1)).as("n_pairs"),
-          call_function("div", sum(col("jaccard_exact_micro")),
-            count(lit(1))).as("mean_exact_micro"),
-          call_function("div", sum(col("est_full_micro")),
-            count(lit(1))).as("_mf"),
-          call_function("div", sum(col("est_bbit_micro")),
-            count(lit(1))).as("_mb"))
-        .select(col("kind"), col("n_pairs"), col("mean_exact_micro"),
-          (abs(col("_mf") - col("mean_exact_micro")) <= 60000L).as("full_close"),
-          (abs(col("_mb") - col("mean_exact_micro")) <= 120000L).as("bbit_close"))
-        .orderBy("kind")
-    }),
-
-    "x3_ngram_jaccard" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val a = d.select(col("doc_id").as("id_a"), Dedup.wordShingles(lower(col("text")), 3).as("_sa"))
-      val b = d.select(col("doc_id").as("id_b"), Dedup.wordShingles(lower(col("text")), 3).as("_sb"))
-      a.join(b, col("id_a") + 1 === col("id_b"))
-        .select(col("id_a"), col("id_b"), Dedup.jaccard(col("_sa"), col("_sb")).as("jaccard"))
-        .orderBy("id_a")
-    }),
-
-    // X4 — BENCHMARK DECONTAMINATION (the GPT-3 appendix-C / PaLM
-    // n-gram-overlap scrub): docs with doc_id % 50 == 0 stand in for
-    // the eval suite; the training side is flagged against them by
-    // exact word-n-gram collision. n = 3 so the synthetic fixture
-    // genuinely collides (the published n is 13 — a parameter of the
-    // operator, not the algorithm). Posting-list join on the string
-    // form — fully SQL-replayable: per contaminated train doc, bench
-    // docs hit, total and max distinct shared n-grams, worst-offending
-    // bench doc (ties to the lower id). DedupSpec pins the scrub
-    // complement (survivors = train minus flagged).
-    "x4_decontaminate" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val bench = d.filter(col("doc_id") % 50 === 0)
-      val train = d.filter(col("doc_id") % 50 =!= 0 && col("doc_id") < 600)
-      Dedup.decontaminate(train, bench, "doc_id", "text", n = 3)
-        .orderBy("train_id")
-    }),
-
-    // X3 scale path — EXACT threshold-Jaccard self-join via AllPairs
-    // prefix filtering (lossless, unlike LSH): candidates only from
-    // shared PREFIX shingles under the global df-ascending order, then
-    // one exact intersection per candidate. The oracle is the plain
-    // inverted-index exact join — prefix filtering must return exactly
-    // the same pairs, so any lost pair (a broken prefix bound) or
-    // phantom pair flips the hash. Shingle width 5 (the web-dedup
-    // convention): this fixture's tiny vocabulary gives 3-shingles an
-    // avg df of ~10 (Σdf² 2.8M at sf0.1 — 310k candidates), while
-    // 5-shingles are near-unique (avg df 1.05, Σdf² 278k) — the same
-    // 25 planted pairs qualify either way, 10× cheaper. Width is THE
-    // selectivity knob for set-similarity joins; probed, not assumed.
-    "x3_prefix_filter_join" -> ((s, dir) => {
-      Dedup.prefixFilterJoin(Tables.documents(s, dir), "doc_id", "text",
-          k = 5, thresholdPct = 50)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // X3 — full near-dup dedup: pairs → connected components → one
-    // survivor per component. Pairs restricted to adjacent ids so the
-    // oracle can express components (runs) without recursion; the Spark
-    // side runs the general label-propagation clustering.
-    "x3_cluster_survivors" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      // Hashed shingle sets (codegen'd kernel) — jaccard over array<long>
-      // instead of array<string>: same value modulo 64-bit collisions
-      // (~n²/2⁶⁴, negligible), ~10× cheaper than building shingle strings
-      // through interpreted HOF lambdas.
-      val a = d.select(col("doc_id").as("id_a"),
-        graft.expr.WordShingleHashes(col("text"), 3, distinct = true).as("_sa"))
-      val b = d.select(col("doc_id").as("id_b"),
-        graft.expr.WordShingleHashes(col("text"), 3, distinct = true).as("_sb"))
-      val pairs = a.join(b, col("id_a") + 1 === col("id_b"))
-        .filter(Dedup.jaccard(col("_sa"), col("_sb")) >= 0.01)
-        .select(col("id_a"), col("id_b"))
-      Dedup.survivorsAfterNearDedup(d, "doc_id", pairs)
-        .orderBy("doc_id")
-    }),
-
-    // X4 — corpus token/char statistics per language.
-    "x4_text_stats" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      d.select(col("lang"),
-          TextAnalysis.tokenCount(col("text")).as("nt"),
-          length(col("text")).cast("long").as("nc"),
-          TextAnalysis.subwordCountEstimate(col("text")).as("nsw"))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("nt")).cast("long").as("sum_tokens"),
-          sum(col("nc")).cast("long").as("sum_chars"),
-          sum(col("nsw")).cast("long").as("sum_subwords"))
-        .orderBy("lang")
-    }),
-
-    // X4 × graph — TextRank keyword ranking: PageRank over the word
-    // co-occurrence graph (adjacent candidate words after the standard
-    // TextRank filter — len ≥ 4, df ≥ 5 — with parallel edges kept, so
-    // co-occurrence FREQUENCY weights the walk exactly as the paper's
-    // weighted variant intends). Runs the keyed PageRank in exact
-    // BIGINT micros over STRING nodes; the oracle replays tokenize →
-    // filter → re-rank → adjacency → five full rank rounds.
-    "x4_textrank_terms" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val toks = Tables.documents(s, dir).filter(col("lang") === "en")
-        .select(col("doc_id"),
-          posexplode(split(lower(col("text")), "\\s+")).as(Seq("pos", "w")))
-        .filter(length(col("w")) >= 4)
-      // vocab is consumed by the sequence join, the node universe, and
-      // (pre-r16) every pagerank round's universe restore: freeze it so
-      // the tokenize+distinct+df-census pipeline runs ONCE (opt guide
-      // §1.2 — it re-ran ~8× inside the old plan tree)
-      val vocab = toks.select("doc_id", "w").distinct()
-        .groupBy("w").agg(count(lit(1)).as("_df"))
-        .filter(col("_df") >= 5).select("w")
-        .transform(Pins.freeze)
-      // adjacent-in-filtered-sequence pairs via lead() over the SAME
-      // doc-keyed window the old row_number used — one window pass
-      // instead of window + (doc_id, rn) self-join (two shuffles and a
-      // second evaluation of the tokenize subtree, opt guide §2.4);
-      // the pair multiset is identical (pos is unique per doc). Frozen
-      // because the union reads it twice.
-      val pairs = toks.join(vocab, "w")
-        .withColumn("w2", lead(col("w"), 1)
-          .over(Window.partitionBy("doc_id").orderBy("pos")))
-        .filter(col("w2").isNotNull)
-        .select(col("w").as("src"), col("w2").as("dst"))
-        .transform(Pins.freeze)
-      val edges = pairs.unionByName(
-        pairs.select(col("dst").as("src"), col("src").as("dst")))
-      graft.ops.Graph.pagerankKeyed(edges, "src", "dst", vocab, "w",
-          iters = 5)
-        .orderBy("node")
-    }),
-
-    // X4 — novelty score: what fraction of a doc's distinct vocabulary
-    // appears in NO other document (global hapax words)? High novelty
-    // = unique content or gibberish; near-zero = boilerplate. Two
-    // vocabulary-grain censuses (distinct doc-word, then doc-frequency)
-    // + one join back — corpus-linear, no windows.
-    "x4_novelty_score" -> ((s, dir) => {
-      val words = Tables.documents(s, dir).select(col("doc_id"),
-        explode(array_distinct(split(lower(col("text")), "\\s+"))).as("w"))
-      val docFreq = words.groupBy("w").agg(count(lit(1)).as("_df"))
-      words.join(docFreq, "w")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_distinct_words"),
-          sum(when(col("_df") === 1L, 1L).otherwise(0L)).as("n_hapax"))
-        .withColumn("novelty_micro",
-          expr("(n_hapax * 1000000) div n_distinct_words"))
-        .orderBy("doc_id")
-    }),
-
-    // X4 — Flesch reading ease in exact trunc-micros: vowel-group
-    // syllables, terminator-run sentences, whitespace words; the
-    // 206.835/1.015/84.6 constants as integer ratios with BIGINT
-    // trunc-div on both engines. Negative scores on dense text are the
-    // scale working.
-    "x4_readability" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val w = TextAnalysis.tokenCount(col("text"))
-      val se = TextAnalysis.sentenceCount(col("text"))
-      val sy = TextAnalysis.syllableCount(col("text"))
-      d.select(col("doc_id"), w.as("n_words"), se.as("n_sentences"),
-          sy.as("n_syllables"),
-          TextAnalysis.fleschMicro(w, se, sy).as("flesch_micro"))
-        .orderBy("doc_id")
-    }),
-
-    // X4 — Gopher quality rules (Rae et al. 2021, table A1): the
-    // published repetition/format heuristic battery production corpus
-    // filters descend from — duplicate-line, bullet-line, ellipsis-line
-    // fractions, symbol-to-word ratio, alphabetic-word fraction, the
-    // 8-word English-indicator hit count, mean word length — as exact
-    // integer ppm/micros with the PAPER'S thresholds in the composite
-    // verdict. Every column replays bit-for-bit in SQL.
-    "x4_gopher_rules" -> ((s, dir) => {
-      TextAnalysis.gopherSignals(Tables.documents(s, dir), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // X4 — per-document quality scoring (integer-exact heuristics).
-    "x4_quality_score" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val nt = TextAnalysis.tokenCount(col("text"))
-      val nc = length(col("text")).cast("long")
-      val stops = TextAnalysis.wordOccurrences(lower(col("text")), TextAnalysis.englishStopwords)
-      d.select(col("doc_id"), nt.as("n_tokens"), nc.as("n_chars"),
-          TextAnalysis.punctCount(col("text")).as("n_punct"),
-          stops.as("n_stopwords"),
-          TextAnalysis.qualityGate(nt, nc, stops).as("is_quality"))
-        .orderBy("doc_id")
-    }),
-
-    // Eval — exact ROC-AUC of the stopword count as a predictor of the
-    // composite quality gate (Mann–Whitney rank-sum over the score-
-    // frequency table; no corpus-cardinality ordered pass — see
-    // ops/Eval.scala). Label and score are deliberately related-but-
-    // not-identical (the gate ANDs two more conditions), so the AUC
-    // lands in the informative middle — the fixture's lang/source
-    // labels are independent of the text, which would pin any
-    // text-feature AUC at a meaningless 0.5.
-    "x4_eval_auc" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val nt = TextAnalysis.tokenCount(col("text"))
-      val nc = length(col("text")).cast("long")
-      val stops = TextAnalysis.wordOccurrences(lower(col("text")), TextAnalysis.englishStopwords)
-      graft.ops.Eval.rocAuc(d, TextAnalysis.qualityGate(nt, nc, stops), stops)
-    }),
-
-    // Eval — exact precision/recall sweep over every threshold the
-    // stopword score can express (one row per distinct score).
-    "x4_eval_pr_curve" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val nt = TextAnalysis.tokenCount(col("text"))
-      val nc = length(col("text")).cast("long")
-      val stops = TextAnalysis.wordOccurrences(lower(col("text")), TextAnalysis.englishStopwords)
-      graft.ops.Eval.prCurve(d, TextAnalysis.qualityGate(nt, nc, stops), stops)
-        .orderBy("score")
-    }),
-
-    // Eval — calibration (reliability) bins for the same score/label.
-    "x4_eval_calibration" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val nt = TextAnalysis.tokenCount(col("text"))
-      val nc = length(col("text")).cast("long")
-      val stops = TextAnalysis.wordOccurrences(lower(col("text")), TextAnalysis.englishStopwords)
-      graft.ops.Eval.calibrationBins(d, TextAnalysis.qualityGate(nt, nc, stops), stops,
-        binWidth = 2L, nBins = 12)
-        .orderBy("bin")
-    }),
-
-    // Exact Pearson correlation census: r² in trunc-micros + covariance
-    // sign for four lineitem measure pairs (three natural near-zero
-    // ones plus a planted 3q+d linear combination that pins the high
-    // branch at r² ≈ 0.9955), from one-pass integer
-    // sufficient statistics in DECIMAL(38,0) / HUGEINT — no sqrt or
-    // double anywhere (r itself needs √; r² + sign carries the same
-    // decision information exactly). Quantities floor to integers,
-    // price to whole dollars, discount to basis points; the two-step
-    // trunc-div (÷larger variance first) is shape-shared with the
-    // oracle so the truncation composition cannot diverge.
-    "ml_pearson_r2" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir).select(
-        expr("CAST(floor(l_quantity) AS BIGINT)").as("q"),
-        expr("CAST(floor(CAST(l_extendedprice AS DECIMAL(18,2))) AS BIGINT)")
-          .as("p"),
-        expr("CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT)")
-          .as("d"))
-        .withColumn("pl", expr("3 * q + d"))
-      def pair(tag: String, x: String, y: String) =
-        graft.ops.Regress.pearsonR2(li, col(x), col(y)).withColumn("pair", lit(tag))
-      pair("qty_price", "q", "p")
-        .unionByName(pair("qty_disc", "q", "d"))
-        .unionByName(pair("price_disc", "p", "d"))
-        .unionByName(pair("planted_linear", "q", "pl"))
-        .select("pair", "n", "r_sign", "r2_micro")
-        .orderBy("pair")
-    }),
-
-    // A/B significance: pooled two-proportion z-test decided by EXACT
-    // cross-multiplied integer inequality (DECIMAL(38,0) internal,
-    // HUGEINT oracle-side — `significant` is a REAL data column both
-    // engines derive from the same integers, not a pinned verdict).
-    // Two planted experiments per event_type: cohort = user parity;
-    // 'planted_bias' success (user_id%4==0) is cohort-determined
-    // (A≈50%, B=0% → reject), 'value_neutral' success (value>50) is
-    // cohort-independent (null at α=0.05) — both decision branches
-    // populated at every SF.
-    "ab_test_proportions" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_type"), col("user_id"), col("value"))
-      def run(tag: String, success: org.apache.spark.sql.Column) =
-        graft.ops.Eval.twoProportionTest(
-          ev.withColumn("experiment", lit(tag)),
-          Seq("experiment", "event_type"),
-          pmod(col("user_id"), lit(2)) === 0, success)
-      run("planted_bias", pmod(col("user_id"), lit(4)) === 0)
-        .unionByName(run("value_neutral", col("value") > 50.0))
-        .orderBy("experiment", "event_type")
-    }),
-
-    // Layout — 2-D Hilbert index over bucketed (user, value): the
-    // Morton curve's better-locality sibling (consecutive codes are
-    // grid-adjacent — LayoutSpec proves it and shows Z-order jumping).
-    // The oracle replays the 8-level reflect-and-swap bit walk as a
-    // recursive CTE, so any drift in the rotation logic flips rows.
-    "layout_hilbert_values" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      graft.ops.Layout.hilbertIndexed2(
-          ev.select(col("event_id"),
-            (col("user_id") % 256).as("hx"),
-            (floor(col("value")).cast("long") % 256).as("hy")),
-          col("hx"), col("hy"), "h", bits = 8)
-        .orderBy("event_id")
-    }),
-
-    // Eval — chi-square feature selection: which length≥4 terms
-    // separate quality docs from the rest (presence-based 2×2
-    // contingency per term, exact rational χ² as trunc-micros).
-    "x4_eval_chi2_terms" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val nt = TextAnalysis.tokenCount(col("text"))
-      val nc = length(col("text")).cast("long")
-      val stops = TextAnalysis.wordOccurrences(lower(col("text")), TextAnalysis.englishStopwords)
-      graft.ops.Eval.chiSquareTerms(d,
-          TextAnalysis.qualityGate(nt, nc, stops),
-          filter(TextAnalysis.tokens(lower(col("text"))), t => length(t) >= 4),
-          minDf = 20L)
-        .orderBy("term")
-    }),
-
-    // X4 — filter-cascade attrition census: the quality gate DECOMPOSED
-    // into ordered rules, each stage charged with the docs it killed
-    // among earlier survivors (the per-rule report a curation pipeline
-    // publishes; last stage's n_out = survivors).
-    "x4_filter_attrition" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val nt = TextAnalysis.tokenCount(col("text"))
-      val nc = length(col("text")).cast("long")
-      val stops = TextAnalysis.wordOccurrences(lower(col("text")), TextAnalysis.englishStopwords)
-      graft.ops.TextAnalysis.filterAttrition(d, Seq(
-          "min_tokens" -> (nt >= 5),
-          "max_tokens" -> (nt <= 100000),
-          "chars_per_token" -> (nc / greatest(nt, lit(1L))).between(1, 15),
-          "stopword_ratio" -> (stops * 50 >= nt),
-          "lang_known" -> (TextAnalysis.languageId(col("text")) =!= "unknown")))
-        .orderBy("stage")
-    }),
-
-    // X4 — PMI collocation mining: adjacent-word pairs that co-occur
-    // beyond chance, ranked by the exact association ratio (the inside
-    // of the PMI log — monotone, so rankings agree without computing a
-    // cross-engine transcendental).
-    "x4_pmi_bigrams" -> ((s, dir) => {
-      graft.ops.TextAnalysis.pmiBigrams(Tables.documents(s, dir), "text",
-          minCount = 10L)
-        .orderBy("w1", "w2")
-    }),
-
-    // ML — one-pass OLS TRAINING via exact integer sufficient
-    // statistics + in-query Cramer solve (ops/Regress.scala): fit
-    // extendedprice-cents ~ quantity + discount-bps on one corpus
-    // scan. b1 recovers ~unit-price·100, b2 hovers near 0 (the fixture
-    // prices don't depend on discount) — and may land NEGATIVE, which
-    // is exactly the floor-vs-truncate division edge the floorMicros
-    // helper exists for.
-    "ml_ols_fit" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      graft.ops.Regress.olsFit2(li,
-        round(col("l_extendedprice") * 100),
-        col("l_quantity"),
-        round(col("l_discount") * 100))
-    }),
-
-    // ML — the one-regressor form (2×2 normal equations).
-    "ml_ols_simple" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      graft.ops.Regress.olsFit1(li,
-        round(col("l_extendedprice") * 100),
-        col("l_quantity"))
-    }),
-
-    // ML — Spearman rank correlation (Regress.spearman) between a
-    // user's event count and spend, exact half-rank integers (average
-    // tie ranks as rank2 = 2b+c+1) through value-grain prefix sums —
-    // the row-level rank window never exists. num/d1/d2 and the
-    // Σrank2 = n(n+1) invariants are exact BIGINTs the oracle
-    // recomputes; r_micro is the one shared-shape double chain.
-    "ml_spearman_rank" -> ((s, dir) => {
-      val u = Tables.events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("x"),
-          sum(expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-            .as("y"))
-      graft.ops.Regress.spearman(u, "x", "y")
-    }),
-
-    // ML — per-group fits: one hash agg at group cardinality, one scan
-    // for every segment's own trend line.
-    // Model-debug drill-down under the grouped OLS: the 3 worst
-    // residuals per group, computed from the SAME truncated
-    // coefficients both engines emit (so the residual is exactly
-    // y·10⁶ − (b0 + b1·x) in micros — no independent fit, no float).
-    // A keyed window with a total tie order; emitted-column ties are
-    // interchangeable rows.
-    "ml_ols_residuals" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      // two full passes (fit agg + residual window) over the single-
-      // split fact scan ran SERIALLY on one core (r16 JobProf, now
-      // `Probe jobs`: two ~1-1.2 s single-task jobs of a 3 s query);
-      // spread the scan
-      // (conf-gated, identity on multi-split inputs), project to the
-      // three consumed columns (guide §2.3), and freeze so the second
-      // pass reads executor-resident blocks instead of re-scanning.
-      val li = Tables.spreadTable(s, dir, "lineitem", Tables.lineitem(s, dir))
-        .select(col("l_returnflag"), col("l_extendedprice"), col("l_quantity"))
-        .transform(Pins.freeze)
-      val coef = graft.ops.Regress.olsFit1Grouped(li, "l_returnflag",
-        round(col("l_extendedprice") * 100), col("l_quantity"))
-      val base = li.select(col("l_returnflag"),
-        round(col("l_extendedprice") * 100).cast("long").as("y_cents"),
-        col("l_quantity").cast("long").as("x_qty"))
-      val r = base.join(broadcast(coef), "l_returnflag")
-        .withColumn("resid_micro", col("y_cents") * 1000000L -
-          (col("b0_micros") + col("b1_micros") * col("x_qty")))
-      // Examined for the 3-partition-window hazard and deliberately
-      // KEPT as a single window (r15 optimization round): Spark's
-      // rank-limit pushdown (WindowGroupLimit) already bounds each
-      // partition to the top 3 map-side before the exchange and sort,
-      // so a two-level salted top-k rewrite only added an exchange —
-      // measured 1.22× WORSE in an interleaved before/after A/B.
-      val w = Window.partitionBy(col("l_returnflag"))
-        .orderBy(abs(col("resid_micro")).desc, col("resid_micro").asc,
-          col("y_cents").asc, col("x_qty").asc)
-      r.withColumn("rk", row_number().over(w).cast("long"))
-        .filter(col("rk") <= 3)
-        .select("l_returnflag", "rk", "y_cents", "x_qty", "resid_micro")
-        .orderBy("l_returnflag", "rk")
-    }),
-
-    // Per-key join-amplification census — the exact drill-down under
-    // the Count-Min join-size ESTIMATE: which keys contribute the
-    // most |A ⋈ B| rows (n_left·n_right), top 10 by contribution.
-    // Two key-grain aggs + TakeOrderedAndProject — never a global
-    // sort.
-    "join_amplification_census" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val a = li.groupBy("l_partkey").agg(count(lit(1)).as("n_left"))
-      val b = li.filter(col("l_returnflag") === "R")
-        .groupBy("l_partkey").agg(count(lit(1)).as("n_right"))
-      a.join(b, "l_partkey")
-        .withColumn("contrib", col("n_left") * col("n_right"))
-        .orderBy(col("contrib").desc, col("l_partkey").asc)
-        .limit(10)
-    }),
-
-    "ml_ols_by_group" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      graft.ops.Regress.olsFit1Grouped(li, "l_returnflag",
-          round(col("l_extendedprice") * 100),
-          col("l_quantity"))
-        .orderBy("l_returnflag")
-    }),
-
-    // Time series — OHLC downsample per (user, hour): open/close via
-    // min_by/max_by over (ts, event_id) — deterministic under ties, no
-    // window sort; high/low are raw values so doubles pass bit-exact.
-    "ts_ohlc_hourly" -> ((s, dir) => {
-      graft.ops.TimeSeries.ohlcResample(Tables.events(s, dir),
-          "user_id", "ts", "value", "event_id", "hour")
-        .orderBy("user_id", "bucket")
-    }),
-
-    // DQ — Benford first-digit audit over order totals in cents: the
-    // classic anomaly screen; digit from the integer's string head
-    // (exact, no float log), expectations pinned as integer ppm.
-    "dq_benford_totals" -> ((s, dir) => {
-      graft.ops.DataQuality.benfordAudit(Tables.orders(s, dir),
-          round(col("o_totalprice") * 100))
-        .orderBy("digit")
-    }),
-
-    // DQ — portable bucketed table checksum (integer-arithmetic
-    // fingerprints, no engine hash): the sink-verification primitive —
-    // both ends of a replication/upsert compute B small rows and diff.
-    "dq_checksum_orders" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      graft.ops.DataQuality.checksumBuckets(o,
-          Seq(col("o_orderkey"), col("o_custkey"), round(col("o_totalprice") * 100)),
-          buckets = 16)
-        .orderBy("bucket")
-    }),
-
-    // DQ — the checksum primitive IN ACTION: diff the orders table
-    // against a deterministically tampered copy (order 7's total bumped
-    // one cent). The corrupted row's bucket(s) must flag — one or two
-    // red (the new fingerprint may land in a different bucket, moving a
-    // count), the rest green, at every SF. This is the replication-
-    // verification round trip: both sides' checksums meet on the bucket
-    // key and compare (n, s1, s2).
-    "dq_checksum_diff" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      // unresolved Columns — they bind against whichever frame applies them
-      val cols = Seq(col("o_orderkey"), col("o_custkey"),
-        round(col("o_totalprice") * 100))
-      val tampered = o.withColumn("o_totalprice",
-        when(col("o_orderkey") === 7, col("o_totalprice") + 0.01)
-          .otherwise(col("o_totalprice")))
-      val a = graft.ops.DataQuality.checksumBuckets(o, cols, buckets = 16)
-        .select(col("bucket"), col("n").as("n_src"), col("s1").as("s1_src"),
-          col("s2").as("s2_src"))
-      val b = graft.ops.DataQuality.checksumBuckets(tampered, cols, buckets = 16)
-        .select(col("bucket"), col("n").as("n_dst"), col("s1").as("s1_dst"),
-          col("s2").as("s2_dst"))
-      a.join(b, Seq("bucket"), "full_outer")
-        .select(col("bucket"),
-          coalesce(col("n_src"), lit(0L)).as("n_src"),
-          coalesce(col("n_dst"), lit(0L)).as("n_dst"),
-          (coalesce(col("n_src"), lit(-1L)) === coalesce(col("n_dst"), lit(-2L)) &&
-            coalesce(col("s1_src"), lit(-1L)) === coalesce(col("s1_dst"), lit(-2L)) &&
-            coalesce(col("s2_src"), lit(-1L)) === coalesce(col("s2_dst"), lit(-2L)))
-            .as("bucket_matches"))
-        .orderBy("bucket")
-    }),
-
-    // X4 — context-window chunking: 64-token windows, 16-token overlap
-    // (training-sequence prep; narrow explode, no shuffle).
-    "x4_chunk_tokens" -> ((s, dir) => {
-      graft.ops.TextAnalysis.chunkByTokens(Tables.documents(s, dir), "doc_id", "text",
-          chunkSize = 64, overlap = 16)
-        .orderBy("doc_id", "chunk_id")
-    }),
-
-    // X4 — heuristic language identification vs the labeled lang column.
-    "x4_langid" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"),
-          TextAnalysis.languageId(col("text")).as("lang_pred"))
-        .orderBy("doc_id")
-    }),
-
-    // X4 — normalized content fingerprint (formatting-invariant dedup key).
-    "x4_fingerprint" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .select(col("doc_id"), TextAnalysis.fingerprint(col("text")).as("fp"))
-        .orderBy("doc_id")
-    }),
-
-    // X5 — multimodal binary payload + typed metadata plumbing.
-    // X5 frame sampling: payload cut into 64-byte frames, every 3rd
-    // kept (the video-frame-sampling plumbing, no decode). The oracle
-    // gates the sampled-frame count and byte totals via pure arithmetic
-    // on n_bytes — deterministic without comparing blob lists.
-    "x5_frame_sample" -> ((s, dir) => {
-      val packed = Multimodal.packBinary(
-        Tables.documents(s, dir), "doc_id", "text", "lang", "text/plain")
-      packed
-        .select(col("doc_id"), length(col("payload")).cast("long").as("n_bytes"),
-          Multimodal.sampleFrames(col("payload"), 64, 3).as("_frames"))
-        .select(col("doc_id"), col("n_bytes"),
-          size(col("_frames")).cast("long").as("n_sampled"),
-          aggregate(transform(col("_frames"), f => length(f).cast("long")),
-            lit(0L), (a, v) => a + v).as("sampled_bytes"),
-          length(element_at(col("_frames"), 1)).cast("long").as("first_frame_bytes"))
-        .orderBy("doc_id")
-    }),
-
-    "x5_binary_meta" -> ((s, dir) => {
-      Multimodal.packBinary(Tables.documents(s, dir), "doc_id", "text", "lang", "text/plain")
-        .select(col("doc_id"), length(col("payload")).cast("long").as("n_bytes"),
-          col("fmt"), col("lang"))
-        .orderBy("doc_id")
-    }),
-
-    // X5 — resize stub (every-4th-byte downsample): the resized LENGTH
-    // is deterministic (ceil(n/4)), so the plumbing is oracle-gated even
-    // though the kernel is a stand-in.
-    "x5_resize" -> ((s, dir) => {
-      import s.implicits._
-      val recs = Multimodal.packBinary(
-          Tables.documents(s, dir), "doc_id", "text", "lang", "text/plain")
-        .as[Multimodal.MediaRecord]
-      Multimodal.resizePayloads(recs, 4).toDF()
-        .select(col("doc_id"), length(col("payload")).cast("long").as("resized_bytes"))
-        .orderBy("doc_id")
-    }),
-
-    // X5 — batched per-partition feature extraction through the STUB
-    // decode kernel (mapPartitions plumbing). The float32 feature values
-    // are engine-specific (unit-tested in MultimodalSpec); the oracle
-    // gates the plumbing columns. Raw arrays stay out of the output —
-    // the driver's pandas sort can't order ndarray cells.
-    "x5_features_stub" -> ((s, dir) => {
-      import s.implicits._
-      val packed = Multimodal.packBinary(Tables.documents(s, dir),
-        "doc_id", "text", "lang", "text/plain").as[Multimodal.MediaRecord]
-      Multimodal.extractFeatures(packed).toDF()
-        .select(col("doc_id"), col("n_bytes"), col("fmt"),
-          size(col("feature")).cast("long").as("feat_dim"))
-        .orderBy("doc_id")
-    }),
-
-    // X5 — REAL image decode: formula-generated P5 PGM payloads (pixel
-    // (i) = (id·31 + i·7) mod 256, dims from id) decoded by the
-    // library-free byte parser. The oracle recomputes every statistic
-    // from the generating formula, so the gate proves the full round
-    // trip — header walk, dimension parse, raster scan — not just
-    // plumbing. Planted data, same pattern as the json_salvage gate.
-    // Image perceptual hashing — the LAION-style image-dedup key:
-    // 8×8 average hash of formula-generated PGMs. The fixture plants
-    // near-dup groups of 4 (shared base raster per doc_id div 4, one
-    // +40 and one −40 pixel perturbation per id, BOTH in the first 8
-    // pixels and sum-balanced so the mean — and therefore every
-    // unperturbed bit — is IDENTICAL across the group: differences
-    // are confined to bits 0..7 by construction). The oracle
-    // recomputes all 64 bits from the formula.
-    "x5_image_phash" -> ((s, dir) => {
-      phashFixtureHashes(s, dir)
-        .select("doc_id", "hash_lo", "hash_hi", "n_ones")
-        .orderBy("doc_id")
-    }),
-
-    // Banded Hamming near-dup over the hashes above: candidates must
-    // agree EXACTLY on bits 16..63 (a hash join on the band keys — the
-    // SimHash band trick; never all-pairs), then Hamming over the low
-    // half decides. The fixture's groups agree on the bands by
-    // construction, so every in-group pair is recovered.
-    "x5_phash_neardup" -> ((s, dir) => {
-      phashFixturePairs(s, dir).orderBy("id_a", "id_b")
-    }),
-
-    // Image dedup END TO END: the phash near-dup pairs feed the
-    // pointer-jumping connected-components clusterer — hash → banded
-    // Hamming pairs → clusters with sizes, the full LAION-style image
-    // dedup chain in one lazy plan. Cluster id = min member id (the
-    // canonical survivor); only pair members appear.
-    "x5_phash_clusters" -> ((s, dir) => {
-      val cc = Dedup.clusterPairs(
-        phashFixturePairs(s, dir).select(col("id_a"), col("id_b")))
-      val sizes = cc.groupBy(col("cluster"))
-        .agg(count(lit(1)).as("cluster_size"))
-      cc.join(sizes, Seq("cluster"))
-        .select(col("id"), col("cluster"), col("cluster_size"))
-        .orderBy("id")
-    }),
-
-    // Audio frame analysis — per-frame mean-square energy + silence
-    // flag over formula-generated 16-bit WAV clips whose gain gates
-    // every third 100-sample frame down 50× (planted silence); the
-    // oracle replays samples, frames, trunc-div energy, and the
-    // strict-< silence decision from the formula.
-    "x5_audio_energy" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 300)
-        .map { id =>
-          val n = (1000 + (id % 5) * 100).toInt
-          Multimodal.MediaRecord(id, Multimodal.encodeWav(8000, { i =>
-            val base = ((id * 7 + i * 17) % 2001 - 1000).toInt
-            val gain = if ((i / 100) % 3 == 0) 1 else 50
-            base * gain / 50
-          }, n), "audio/wav", "xx")
-        }
-      Multimodal.frameEnergies(recs, frameSize = 100, silenceThreshold = 10000L)
-        .toDF().orderBy("doc_id", "frame_id")
-    }),
-
-    "x5_decode_pgm" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 500)
-        .map { id =>
-          val w = (4 + id % 13).toInt; val h = (3 + id % 7).toInt
-          Multimodal.MediaRecord(id,
-            Multimodal.encodePgm(w, h, 255, i => ((id * 31 + i * 7) % 256).toInt),
-            "image/x-pgm", "xx")
-        }
-      Multimodal.decodePgmStats(recs).toDF().orderBy("doc_id")
-    }),
-
-    // X5 — REAL audio decode: RIFF/WAVE 16-bit PCM payloads (sample(i)
-    // = ((id·13 + i·5) mod 65536) − 32768) through the chunk-walking
-    // parser; duration/Σ|s|/peak all exact integers.
-    "x5_decode_wav" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 500)
-        .map { id =>
-          val n = (50 + id % 100).toInt
-          Multimodal.MediaRecord(id,
-            Multimodal.encodeWav((8000 * (1 + id % 3)).toInt,
-              i => (((id * 13 + i * 5) % 65536) - 32768).toInt, n),
-            "audio/wav", "xx")
-        }
-      Multimodal.decodeWavStats(recs).toDF().orderBy("doc_id")
-    }),
-
-    // X5 — REAL nearest-neighbor resize: the same generated PGMs
-    // resized to (1 + w/2, 1 + h/2), then DECODED AGAIN (the resize
-    // output is itself a valid PGM) — the oracle recomputes the NN
-    // source-index mapping (y·h0/h1, x·w0/w1 integer div) from the
-    // formula, so a half-pixel offset bug or a transposed axis flips
-    // the hash.
-    "x5_resize_pgm" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 500)
-        .map { id =>
-          val w = (4 + id % 13).toInt; val h = (3 + id % 7).toInt
-          val src = Multimodal.encodePgm(w, h, 255,
-            i => ((id * 31 + i * 7) % 256).toInt)
-          Multimodal.MediaRecord(id,
-            Multimodal.resizePgm(src, 1 + w / 2, 1 + h / 2), "image/x-pgm", "xx")
-        }
-      Multimodal.decodePgmStats(recs).toDF().orderBy("doc_id")
-    }),
-
-    // X5 — REAL COMPRESSED-codec decode: GIF89a with genuine LZW
-    // entropy coding (variable-width codes packed LSB-first across
-    // 255-byte sub-blocks, dictionary growth, late-change width bumps).
-    // Raster formula (i/7 + id) mod 16 gives run-length structure, so
-    // the gate also asserts the code stream is genuinely SMALLER than
-    // the raster (lzw_saves_bytes, pinned TRUE in the oracle) — proof
-    // the compression path ran, not a passthrough. The oracle recomputes
-    // every pixel statistic from the generating formula: a one-bit slip
-    // anywhere in the encoder or decoder scrambles the raster and flips
-    // the hash.
-    "x5_decode_gif" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 500)
-        .map { id =>
-          val w = (10 + id % 20).toInt; val h = (8 + id % 9).toInt
-          Multimodal.MediaRecord(id,
-            Multimodal.encodeGif(w, h, 4, i => ((i / 7 + id) % 16).toInt),
-            "image/gif", "xx")
-        }
-      Multimodal.decodeGifStats(recs).toDF()
-        .select(col("doc_id"), col("width"), col("height"), col("n_colors"),
-          col("n_pixels"), col("idx_sum"), col("idx_min"), col("idx_max"),
-          (col("n_code_bytes") < col("n_pixels")).as("lzw_saves_bytes"))
-        .orderBy("doc_id")
-    }),
-
-    // X5 — second COMPRESSED codec, this one DEFLATE-based: PNG, with
-    // the chunk walk + CRC verification and all five scanline filters
-    // (None/Sub/Up/Average/Paeth) implemented in ops/Multimodal and the
-    // entropy coding through the JDK's zlib. The encoder cycles the
-    // filter type per row, so every filter path is load-bearing in this
-    // gate; the 8-bit formula raster has run structure, and
-    // deflate_saves_bytes (pinned TRUE) proves compression genuinely
-    // ran. One wrong predictor anywhere scrambles every later row's
-    // reconstruction and flips the hash.
-    "x5_decode_png" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 500)
-        .map { id =>
-          val w = (24 + id % 21).toInt; val h = (16 + id % 9).toInt
-          Multimodal.MediaRecord(id,
-            Multimodal.encodePng(w, h, 8, 0,
-              Multimodal.packedSample(0, i => ((i / 7 + id) % 256).toInt)),
-            "image/png", "xx")
-        }
-      Multimodal.decodePngStats(recs).toDF()
-        .select(col("doc_id"), col("width"), col("height"), col("bit_depth"),
-          col("n_pixels"), col("px_sum"), col("px_min"), col("px_max"),
-          (col("n_idat_bytes") < col("n_pixels")).as("deflate_saves_bytes"))
-        .orderBy("doc_id")
-    }),
-
-    // X5 — TRANSFORM-coded codec: baseline JPEG (T.81) with real FDCT
-    // + Annex-K Huffman entropy coding both directions. Fixture rasters
-    // are constant per 8×8 block, so the DC-only spectrum with Q[0]=8
-    // reconstructs BIT-EXACTLY through the lossy pipeline (see
-    // ops/Multimodal section note) and the oracle replays every pixel
-    // statistic from the block formula; the DC diff chain crosses all
-    // blocks (a one-bit Huffman slip scrambles every later block), and
-    // every 5th doc adds restart markers so the RST path is gated too.
-    // dct_saves_bytes (pinned TRUE) proves entropy coding genuinely ran.
-    "x5_decode_jpeg" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 400)
-        .map { id =>
-          val w = (8 * (2 + id % 3)).toInt; val h = (8 * (1 + id % 4)).toInt
-          Multimodal.MediaRecord(id,
-            Multimodal.encodeJpeg(w, h, { i =>
-              val bx = (i % w) / 8; val by = (i / w) / 8
-              ((id * 31 + bx * 7 + by * 13) % 256).toInt
-            }, Multimodal.uniformQuantTable(),
-              restartInterval = if (id % 5 == 0) 2 else 0),
-            "image/jpeg", "xx")
-        }
-      Multimodal.decodeJpegStats(recs).toDF()
-        .select(col("doc_id"), col("width"), col("height"), col("n_pixels"),
-          col("px_sum"), col("px_min"), col("px_max"),
-          (col("n_entropy_bytes") < col("n_pixels")).as("dct_saves_bytes"))
-        .orderBy("doc_id")
-    }),
-
-    // X5 — exact spectral anchors: the two DFT bins an integer engine
-    // CAN certify bit-for-bit (DC = Σs, Nyquist = alternating Σ) plus
-    // total power (Parseval's left side) — anchoring a spectral
-    // pipeline without the irrational twiddles a hash oracle cannot
-    // replay. Even sample counts by construction so the Nyquist bin is
-    // well-defined.
-    "x5_audio_spectral" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 400)
-        .map { id =>
-          val n = (64 + (id % 5) * 16).toInt
-          Multimodal.MediaRecord(id, Multimodal.encodeWav(8000,
-            i => (((id * 13 + i * 5) % 4001) - 2000).toInt, n),
-            "audio/wav", "xx")
-        }
-      Multimodal.audioSpectrals(recs).toDF().orderBy("doc_id")
-    }),
-
-    // X5 — REAL sample-rate reduction (decimation ÷2, the 16→8 kHz
-    // speech step): the resampled payload is itself a valid WAV and is
-    // DECODED AGAIN by the gate (the resizePgm discipline) — the
-    // oracle recomputes every statistic from the stride-2 sample
-    // formula, so an off-by-one in the stride or a mis-sized header
-    // flips the hash.
-    "x5_wav_resample" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 400)
-        .map { id =>
-          val n = (50 + id % 100).toInt
-          val src = Multimodal.encodeWav((8000 * (1 + id % 3)).toInt,
-            i => (((id * 13 + i * 5) % 65536) - 32768).toInt, n)
-          Multimodal.MediaRecord(id,
-            Multimodal.resampleWavDecimate(id, src, 2), "audio/wav", "xx")
-        }
-      Multimodal.decodeWavStats(recs).toDF().orderBy("doc_id")
-    }),
-
-    // X5 — MPEG-1 AUDIO HEADER CENSUS: the walk a corpus-intake
-    // duration/bitrate scan runs over .mp1/.mp2/.mp3 payloads — real
-    // 32-bit headers (sync/ID/layer/bitrate-index/sample-rate), the
-    // slot-formula frame lengths, back-to-back tiling validated.
-    // Fixture streams carry valid headers with zero bodies (a
-    // well-formed SILENT frame for Layers I/II; a header-only shell
-    // for Layer III, whose sample decode is the named stub the census
-    // never touches). Every header field and offset replays in SQL.
-    "x5_mpeg_frames" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 300)
-        .map { id =>
-          val layer = (1 + id % 3).toInt
-          val kbps = layer match {
-            case 1 => Array(32, 64, 96, 128, 160, 192, 224, 256)((id % 8).toInt)
-            case 2 => Array(48, 56, 64, 80, 96, 112, 128, 160)((id % 8).toInt)
-            case _ => Array(40, 48, 56, 64, 80, 96, 112, 128)((id % 8).toInt)
-          }
-          // a third of the docs are 44.1 kHz, where the slot count
-          // does not divide and the walker's PADDING path runs for
-          // real (48/32 kHz divide evenly — padding never fires)
-          val fs = Array(48000, 44100, 32000)((id / 3 % 3).toInt)
-          Multimodal.MediaRecord(id,
-            graft.ops.MpegAudio.syntheticStream(layer, kbps,
-              (1 + id % 4).toInt, fs), "audio/mpeg", "xx")
-        }
-      graft.ops.MpegAudio.mpegFrameCensus(recs)
-        .toDF("doc_id", "frame_id", "layer", "bitrate_kbps",
-          "sample_rate", "n_samples", "frame_bytes", "byte_off")
-        .orderBy("doc_id", "frame_id")
-    }),
-
-    // X5 — MPEG-1 LAYER I/II ROUND TRIP: two-tone PCM through the real
-    // subband codec both directions — ISO bitstream layout (Layer I
-    // uniform allocations; Layer II table-B.2a menus, scfsi, 3/5/9
-    // grouping), greedy amplitude-driven rate control, the 32-band
-    // polyphase filterbank (computed RRC prototype — see MpegAudio's
-    // module doc for the honest Table-C.3 boundary), 481-sample
-    // cascade delay trimmed. Frame/rate/sample census replays in SQL;
-    // reconstruction quality is verdict-gated (tonal fixtures measure
-    // 35-42 dB, gate floor 25 dB) — the same measured-then-pinned
-    // pattern as the ANN recall and sketch-error gates.
-    "x5_decode_mp2" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 200)
-        .map { id =>
-          val layer = if (id % 5 == 0) 1 else 2
-          val kbps = if (layer == 1) Array(128, 192, 256, 384)((id % 4).toInt)
-            else Array(96, 128, 160, 192)((id % 4).toInt)
-          val n = 1152 * (2 + id % 3).toInt
-          val f1 = 200.0 + (id % 37) * 113.0
-          val f2 = 3000.0 + (id % 23) * 301.0
-          val pcm = Array.tabulate(n) { i =>
-            val v = 0.55 * math.sin(2 * math.Pi * f1 * i / 48000) +
-              0.3 * math.sin(2 * math.Pi * f2 * i / 48000)
-            math.round(v * 32767).toShort
-          }
-          // every third doc rides CRC-16 frame protection (the
-          // protection bit), validated in-decode against the side info
-          graft.ops.MpegAudio.roundTripStats(id, pcm, layer, kbps, 25,
-            withCrc = id % 3 == 0)
-        }.toDF()
-        .select(col("doc_id"), col("layer"), col("n_frames"),
-          col("bitrate_kbps"), col("sample_rate"), col("n_samples"),
-          col("snr_ok"))
-        .orderBy("doc_id")
-    }),
-
-    // X5 — MPEG-1 Layer III decode in the reservoir-free regime (the
-    // last common-format stub closed; scope + honesty boundary in the
-    // MpegAudio Layer III section note). Streams are formula-planted
-    // spectra (lines in the big-values region through Huffman table 1
-    // for id%4==0 docs, count1 table B for the rest; per-granule
-    // global_gain; CRC-16 on id%3==0 docs). Two verdicts: the DIGITAL
-    // half (side info, CRC, scalefactor bits, Huffman, requantization)
-    // must recover every planted line BIT-EXACTLY (spectrum_exact);
-    // the SYNTHESIS half (alias butterflies, 36-pt IMDCT, overlap-add,
-    // frequency inversion, polyphase) must put each steady frame's
-    // top-energy analysis band on a planted subband (tones_ok) — the
-    // same measured-then-pinned pattern as the L1/L2 SNR gate.
-    "x5_decode_mp3" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val (enc, kbps, nSamples, specOk, tonesOk) =
-            mp3PlantedMono(id, reservoir = false)
-          (id, graft.ops.MpegAudio.walkFrames(id, enc).length, kbps, 48000,
-            nSamples, specOk, tonesOk)
-        }
-        .toDF("doc_id", "n_frames", "bitrate_kbps", "sample_rate",
-          "n_samples", "spectrum_exact", "tones_ok")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — MPEG-1 Layer III BIT RESERVOIR (the r9 top missing item
-    // closed): the same planted-spectra fixtures packed DENSELY across
-    // frame regions via encodeMp3(reservoir = true), so every tail frame's
-    // main_data_begin back-pointer is nonzero (the census column the
-    // oracle replays: n_reservoir_frames = n_frames − 1) — the regime
-    // nearly all real-world MP3 encoders emit. The decoder tracks the
-    // reservoir FIFO exactly like a production decoder; spectrum_exact
-    // pins bit-exact recovery of every planted line THROUGH the
-    // reservoir, tones_ok pins the synthesis chain — and MpegAudioSpec
-    // additionally pins reservoir-vs-flat PCM equality (the reservoir
-    // is pure transport).
-    "x5_decode_mp3_reservoir" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val (enc, kbps, nSamples, specOk, tonesOk) =
-            mp3PlantedMono(id, reservoir = true)
-          val census = graft.ops.MpegAudio.mp3ReservoirCensus(id, enc)
-          (id, census.length, census.count(_._2 > 0), kbps, 48000, nSamples,
-            specOk, tonesOk)
-        }
-        .toDF("doc_id", "n_frames", "n_reservoir_frames", "bitrate_kbps",
-          "sample_rate", "n_samples", "spectrum_exact", "tones_ok")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — MPEG-1 Layer III JOINT STEREO (the r10 verdict's #2 ask —
-    // real-world MP3s are overwhelmingly joint stereo): the 32-byte
-    // 2-channel side-info layout, both channels' granule data read
-    // jointly from the ONE shared main-data/reservoir stream, and the
-    // MS matrix L=(M+S)/√2, R=(M−S)/√2 applied to the requantized
-    // spectra (§2.4.3.4.9.2). The corpus mixes MS joint stereo (even
-    // docs) with plain L/R stereo (odd docs) AND flat with reservoir
-    // transport (id%3==0) — the channel-mode census replays both mixes
-    // closed-form. spectrum_exact pins BIT-EXACT recovery of every
-    // planted line on BOTH channels AFTER the stereo matrix; tones_ok
-    // pins each channel's full synthesis chain on its planted band
-    // set. Intensity stereo stays a named boundary: the census SEES it
-    // (x5_mp3_reservoir_mix), the decoder refuses it by name
-    // (MpegAudioSpec).
-    "x5_decode_mp3_stereo" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val nFrames = (2 + id % 3).toInt
-          val nGr = 2 * nFrames
-          val ms = id % 2 == 0
-          val resv = id % 3 == 0
-          val bv = if (id % 4 == 0) 16 else 0
-          def sbA(g: Int) = 2 + ((id + g) % 10).toInt
-          def sbB(g: Int) = 13 + ((3 * id + g) % 10).toInt
-          def bvBands(g: Int): Seq[Int] =
-            if (bv > 0) Seq(((id + 2 * g) % 32).toInt / 18,
-              ((id + 2 * g + 7) % 32).toInt / 18) else Nil
-          val granules = (0 until nGr).map { g =>
-            val c0 = new Array[Int](576); val c1 = new Array[Int](576)
-            c0(18 * sbA(g) + 4 + ((id + g) % 9).toInt) = 1
-            c1(18 * sbB(g) + 4 + (g % 9)) = -1
-            if (bv > 0) {
-              c0(((id + 2 * g) % 32).toInt) = if ((id + g) % 2 == 0) 1 else -1
-              c1(((id + 2 * g + 7) % 32).toInt) = 1
-            }
-            (c0, c1)
-          }
-          val gains = (0 until nGr).map(g =>
-            (198 + ((id + g) % 24).toInt, 196 + ((2 * id + g) % 20).toInt))
-          val kbps = Array(192, 224, 256, 320)((id % 4).toInt)
-          val enc = graft.ops.MpegAudio.encodeMp3(
-            granules.zip(gains).map { case ((c0, c1), (g0, g1)) =>
-              Seq(graft.ops.MpegAudio.Mp3GranSpec(c0, g0, bv),
-                graft.ops.MpegAudio.Mp3GranSpec(c1, g1, bv)) },
-            kbps, mode = if (ms) 1 else 0, modeExt = if (ms) 2 else 0,
-            reservoir = resv, withCrc = id % 3 == 1)
-          val census = graft.ops.MpegAudio.mp3ChannelModeCensus(id, enc)
-          val nMs = census.count(c => c._2 == 1 && (c._3 & 2) != 0)
-          val nRes = census.count(_._4 > 0)
-          val inv = 1.0 / math.sqrt(2.0)
-          val spectra = graft.ops.MpegAudio.mp3StreamSpectraStereo(id, enc)
-          val specOk = spectra.length == nGr &&
-            spectra.zipWithIndex.forall { case (xrs, g) =>
-              val g0 = math.pow(2.0, (gains(g)._1 - 210) / 4.0)
-              val g1 = math.pow(2.0, (gains(g)._2 - 210) / 4.0)
-              (0 until 576).forall { i =>
-                val m = granules(g)._1(i) * g0
-                val sv = granules(g)._2(i) * g1
-                val (wl, wr) =
-                  if (ms) ((m + sv) * inv, (m - sv) * inv) else (m, sv)
-                math.abs(xrs(0)(i) - wl) < 1e-9 &&
-                  math.abs(xrs(1)(i) - wr) < 1e-9
-              }
-            }
-          val chans = graft.ops.MpegAudio.decodeMpegAudioChannels(id, enc)
-          def bandsCh(chIdx: Int)(g: Int): Seq[Int] =
-            (if (ms) Seq(sbA(g), sbB(g))
-             else if (chIdx == 0) Seq(sbA(g)) else Seq(sbB(g))) ++ bvBands(g)
-          val tonesOk = (0 until 2).forall { chIdx =>
-            graft.ops.MpegAudio.audioFingerprints(chans(chIdx))
-              .drop(1).forall { case (f, fp) =>
-                val planted = (math.max(0, 2 * f - 1) to
-                  math.min(nGr - 1, 2 * f + 2)).flatMap(bandsCh(chIdx)).toSet
-                planted(((fp >> 15) & 31).toInt)
-              }
-          }
-          (id, nFrames, nMs, nRes, kbps, chans(0).length.toLong,
-            specOk, tonesOk)
-        }
-        .toDF("doc_id", "n_frames", "n_ms_frames", "n_reservoir_frames",
-          "bitrate_kbps", "n_samples", "spectrum_exact", "tones_ok")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — reservoir census over a REAL-SHAPED corpus (the r10
-    // verdict's #8 ask): one corpus mixing flat mono (families 0/2),
-    // reservoir mono (1/3), and intensity-patched joint-stereo
-    // reservoir streams (4) — the "what fraction of a crawl can we
-    // decode" number the boundary carries. The header+9-bit census
-    // walks EVERY stream (including the intensity ones the decoder
-    // refuses — intake scans must see what they cannot decode);
-    // reservoir_ppm is exact integer micros of the per-doc reservoir
-    // fraction; `decodable` is the measured decode verdict, false
-    // exactly where the named intensity boundary fires.
-    // X5 — MP3 SHORT BLOCKS / WINDOW SWITCHING (round 12, the r11
-    // verdict's top ask): granules cycle through all four block types
-    // (long, start, SHORT with per-window subblock gains and short-
-    // layout scalefactors, stop), with nonzero long scalefactors +
-    // preflag + scalefac_scale on the long types — every mechanism the
-    // round lifted, pinned by bit-exact planted-spectrum recovery
-    // against the closed-form requant formulas (gain · 2^(−2·sbg) ·
-    // 2^(−mult·sf) per band/window, short lines through the reorder
-    // map). The window chain itself is validated by the TDAC
-    // perfect-reconstruction test in MpegAudioSpec.
-    "x5_decode_mp3_short" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val mpa = graft.ops.MpegAudio
-          val nFrames = (2 + id % 3).toInt
-          val nGr = 2 * nFrames
-          val (sfbL, sfbS) = mpa.mp3SfbTables(48000)
-          val pretab = mpa.mp3PretabValues
-          val omap = mpa.mp3ShortOrderMap(48000)
-          val inv = new Array[Int](576)
-          omap.zipWithIndex.foreach { case (nat, dec) => inv(nat) = dec }
-          val specs = (0 until nGr).map { g =>
-            val bt = Array(0, 2, 1, 2, 3, 2)(((id + g) % 6).toInt)
-            val gg = 200 + ((id + g) % 20).toInt
-            if (bt == 2) {
-              val lines = new Array[Int](576)
-              val b1 = 2 + ((id + g) % 9).toInt
-              val w1 = (g % 3 + 3) % 3
-              lines(3 * sfbS(b1) + w1 * (sfbS(b1 + 1) - sfbS(b1))) = 1
-              val b2 = 6 + ((3 * id + g) % 6).toInt
-              val w2 = ((id + 2 * g) % 3).toInt
-              lines(3 * sfbS(b2) + w2 * (sfbS(b2 + 1) - sfbS(b2)) + 1) = -1
-              mpa.Mp3GranSpec(lines = lines, globalGain = gg, blockType = 2,
-                scalefacCompress = 9,
-                sfShort = Array.tabulate(12, 3)((b, w) => (b + w + g) % 4),
-                subblockGain = Array(g % 3, (g + 1) % 3, (g + 2) % 3))
-            } else {
-              val lines = new Array[Int](576)
-              val b1 = 2 + ((id + g) % 12).toInt
-              val b2 = 15 + ((3 * id + g) % 6).toInt
-              lines(sfbL(b1)) = 1
-              lines(sfbL(b2) + 1) = -1
-              mpa.Mp3GranSpec(lines = lines, globalGain = gg, blockType = bt,
-                scalefacCompress = 13,
-                sfLong = Array.tabulate(21)(b => (b + g) % 8),
-                preflag = (id + g) % 2 == 0, scalefacScale = g % 2 == 1)
-            }
-          }
-          val kbps = Array(192, 224, 256, 320)((id % 4).toInt)
-          val enc = mpa.encodeMp3(specs.map(Seq(_)), kbps, withCrc = id % 3 == 0)
-          val spectra = mpa.mp3StreamSpectra(id, enc)
-          val specOk = spectra.length == nGr &&
-            spectra.zipWithIndex.forall { case (xr, g) =>
-              val sp = specs(g)
-              val gain = math.pow(2.0, (sp.globalGain - 210) / 4.0)
-              val mult = if (sp.scalefacScale) 1.0 else 0.5
-              val expected = new Array[Double](576)
-              if (sp.blockType == 2) {
-                var pos = 0
-                for (b <- 0 until 13; w <- 0 until 3;
-                     _ <- sfbS(b) until sfbS(b + 1)) {
-                  if (sp.lines(pos) != 0) {
-                    val sf = if (b < 12) sp.sfShort(b)(w) else 0
-                    expected(omap(pos)) = sp.lines(pos) * gain *
-                      math.pow(2.0, -2.0 * sp.subblockGain(w) - mult * sf)
-                  }
-                  pos += 1
-                }
-              } else {
-                for (b <- 0 until 22; i <- sfbL(b) until sfbL(b + 1)) {
-                  if (sp.lines(i) != 0) {
-                    val sf = (if (b < 21) sp.sfLong(b) else 0) +
-                      (if (sp.preflag) pretab(b) else 0)
-                    expected(i) = sp.lines(i) * gain * math.pow(2.0, -mult * sf)
-                  }
-                }
-              }
-              (0 until 576).forall(i => math.abs(xr(i) - expected(i)) < 1e-12)
-            }
-          val pcm = mpa.decodeMpegAudio(id, enc)
-          val clean = pcm.length == 1152L * nFrames &&
-            pcm.forall(v => !v.isNaN && !v.isInfinite)
-          val nShort = specs.count(_.blockType == 2).toLong
-          val nSwitched = specs.count(_.blockType != 0).toLong
-          (id, nFrames, nShort, nSwitched, specOk, clean)
-        }
-        .toDF("doc_id", "n_frames", "n_short_granules", "n_switched_granules",
-          "spectrum_exact", "decode_clean")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — MP3 INTENSITY STEREO (round 12, r11 ask #8 — the channel-
-    // mode matrix's last member): the side channel carries per-band
-    // POSITIONS instead of spectra; reconstruction L = xr·tan(p·π/12)/
-    // (1+tan), R = xr/(1+tan), p=6 all-left exactly, p=7 illegal →
-    // pass-through — pinned bit-exactly per band. Half the corpus also
-    // sets the MS bit (mode_extension 3): with rzero = 0 every band is
-    // intensity, so the reconstruction must be identical either way.
-    "x5_decode_mp3_intensity" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val mpa = graft.ops.MpegAudio
-          val nFrames = (2 + id % 3).toInt
-          val nGr = 2 * nFrames
-          val (sfbL, _) = mpa.mp3SfbTables(48000)
-          val grans = (0 until nGr).map { g =>
-            val lines = new Array[Int](576)
-            (0 until 21).foreach(b =>
-              lines(sfbL(b) + ((id + g + b) % 4).toInt) =
-                if ((g + b) % 2 == 0) 1 else -1)
-            val gg = 202 + ((id + g) % 16).toInt
-            val isPos = Array.tabulate(21)(b => ((id + g + b) % 8).toInt)
-            (mpa.Mp3GranSpec(lines = lines, globalGain = gg), isPos)
-          }
-          val kbps = Array(224, 256, 320, 320)((id % 4).toInt)
-          val alsoMs = id % 2 == 0
-          val enc = mpa.encodeMp3(
-            grans.map { case (l, p) => mpa.mp3IntensityGranule(l, p) }, kbps,
-            mode = 1, modeExt = if (alsoMs) 3 else 1, withCrc = id % 3 == 1)
-          val census = mpa.mp3ChannelModeCensus(id, enc)
-          val nIntensity = census.count(c => c._2 == 1 && (c._3 & 1) != 0)
-          val spectra = mpa.mp3StreamSpectraStereo(id, enc)
-          val specOk = spectra.length == nGr &&
-            spectra.zipWithIndex.forall { case (xrs, g) =>
-              val (sp, isPos) = grans(g)
-              val gain = math.pow(2.0, (sp.globalGain - 210) / 4.0)
-              (0 until 22).forall { b =>
-                val p = if (b < 21) isPos(b) else isPos(20)
-                val (fl, fr) =
-                  if (p == 7) (1.0, 0.0)
-                  else if (p == 6) (1.0, 0.0)
-                  else {
-                    val r = math.tan(p * math.Pi / 12.0)
-                    (r / (1 + r), 1.0 / (1 + r))
-                  }
-                (sfbL(b) until sfbL(b + 1)).forall { i =>
-                  val m = sp.lines(i) * gain
-                  math.abs(xrs(0)(i) - m * fl) < 1e-12 &&
-                    math.abs(xrs(1)(i) - m * fr) < 1e-12
-                }
-              }
-            }
-          val chans = mpa.decodeMpegAudioChannels(id, enc)
-          val clean = chans.length == 2 &&
-            chans.forall(c => c.length == 1152L * nFrames &&
-              c.forall(v => !v.isNaN && !v.isInfinite))
-          (id, nFrames, nIntensity, alsoMs, specOk, clean)
-        }
-        .toDF("doc_id", "n_frames", "n_intensity_frames", "also_ms",
-          "spectrum_exact", "decode_clean")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — MP3 INTENSITY ON SHORT BLOCKS (round 12, session 2): the
-    // last structural member of the stereo matrix — each short
-    // window's zero bound is determined SEPARATELY (§2.4.3.4.9.3),
-    // positions come from the side channel's short scalefactor slots
-    // at/above that window's bound, and MS (when also set) applies to
-    // each window's bands below its bound. The side channel carries
-    // real spectral data in the below-bound bands, so the per-window
-    // bound derivation is exercised nontrivially; bit-exact expected
-    // spectra replay every position/window/bound combination.
-    "x5_decode_mp3_intensity_short" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val mpa = graft.ops.MpegAudio
-          val nFrames = (2 + id % 3).toInt
-          val nGr = 2 * nFrames
-          val (_, sfbS) = mpa.mp3SfbTables(48000)
-          def width(b: Int) = sfbS(b + 1) - sfbS(b)
-          def decPos(b: Int, w: Int): Int =
-            (0 until b).map(bb => 3 * width(bb)).sum + w * width(b)
-          def natLine(b: Int, w: Int): Int = {
-            val f = sfbS(b)
-            18 * (f / 6) + 6 * w + (f % 6)
-          }
-          val grans = (0 until nGr).map { g =>
-            def bound(w: Int) = ((id + g + w) % 3).toInt
-            def pos(b: Int, w: Int) = ((id + g + b + 2 * w) % 8).toInt
-            def lSign(b: Int, w: Int) = if ((g + b + w) % 2 == 0) 1 else -1
-            val linesL = new Array[Int](576)
-            (0 until 12).foreach(b => (0 until 3).foreach(w =>
-              linesL(decPos(b, w)) = lSign(b, w)))
-            val linesS = new Array[Int](576)
-            (0 until 3).foreach(w => (0 until bound(w)).foreach(b =>
-              linesS(decPos(b, w)) = if ((b + w + g) % 2 == 0) 1 else -1))
-            val sfS = Array.tabulate(12, 3)((b, w) =>
-              if (b >= bound(w)) pos(b, w) else 0)
-            (mpa.Mp3GranSpec(lines = linesL, globalGain = 210,
-              blockType = 2),
-              mpa.Mp3GranSpec(lines = linesS, globalGain = 210,
-                blockType = 2, scalefacCompress = 13, sfShort = sfS))
-          }
-          val alsoMs = id % 2 == 0
-          val enc = mpa.encodeMp3(grans.map { case (l, r) => Seq(l, r) }, 320,
-            mode = 1, modeExt = if (alsoMs) 3 else 1, withCrc = id % 3 == 1)
-          val census = mpa.mp3ChannelModeCensus(id, enc)
-          val nIntensity = census.count(c => c._2 == 1 && (c._3 & 1) != 0)
-          val spectra = mpa.mp3StreamSpectraStereo(id, enc)
-          val inv = 1.0 / math.sqrt(2.0)
-          val specOk = spectra.length == nGr &&
-            spectra.zipWithIndex.forall { case (xrs, g) =>
-              def bound(w: Int) = ((id + g + w) % 3).toInt
-              def pos(b: Int, w: Int) = ((id + g + b + 2 * w) % 8).toInt
-              (0 until 12).forall { b =>
-                (0 until 3).forall { w =>
-                  val i = natLine(b, w)
-                  val lv = (if ((g + b + w) % 2 == 0) 1 else -1).toDouble
-                  val sv = if (b < bound(w))
-                    (if ((b + w + g) % 2 == 0) 1.0 else -1.0) else 0.0
-                  val (el, er) =
-                    if (b >= bound(w)) {
-                      val p = pos(b, w)
-                      if (p >= 6) (lv, 0.0)
-                      else {
-                        val r = math.tan(p * math.Pi / 12.0)
-                        (lv * r / (1 + r), lv / (1 + r))
-                      }
-                    } else if (alsoMs) ((lv + sv) * inv, (lv - sv) * inv)
-                    else (lv, sv)
-                  math.abs(xrs(0)(i) - el) < 1e-12 &&
-                    math.abs(xrs(1)(i) - er) < 1e-12
-                }
-              }
-            }
-          val chans = mpa.decodeMpegAudioChannels(id, enc)
-          val clean = chans.length == 2 &&
-            chans.forall(c => c.length == 1152L * nFrames &&
-              c.forall(v => !v.isNaN && !v.isInfinite))
-          (id, nFrames, nIntensity, alsoMs, specOk, clean)
-        }
-        .toDF("doc_id", "n_frames", "n_intensity_frames", "also_ms",
-          "spectrum_exact", "decode_clean")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — MP3 TAGGED-CRAWL INTAKE (round 12, session 2): real crawl
-    // MP3s are wrapped — ID3v2 prefix (v2.3 plain / v2.4 syncsafe
-    // frame sizes, latin1 and UTF-16 text, padding, footer, binary
-    // frames to skip), a Xing/Info VBR first frame (the LAME
-    // convention: zero side info + magic + frame/byte counts), and an
-    // ID3v1 128-byte trailer. mp3IntakeCensus strips the tags, parses
-    // the metadata, detects the info frame, and walks the audio — the
-    // scan a corpus intake runs on every crawl MP3. The census fields
-    // replay closed-form; the stripped audio must decode clean.
-    "x5_mp3_id3_intake" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val mpa = graft.ops.MpegAudio
-          val nFrames = (2 + id % 3).toInt
-          val grans = (0 until 2 * nFrames).map { g =>
-            val lines = new Array[Int](576)
-            lines((30 + (id + g) % 40).toInt) = 1
-            lines
-          }
-          val gains = (0 until 2 * nFrames).map(g => 204 + ((id + g) % 10).toInt)
-          val audio = mpa.encodeMp3(grans.zip(gains).map { case (l, gg) =>
-            Seq(mpa.Mp3GranSpec(l, gg)) }, 160)
-          // majors cycle 2/3/4/4(footer); v2.2 only lands on even ids
-          // (no TALB there — its v2.2 id would be TAL). unsync on the
-          // id%5==0 docs in each major's OWN scheme: tag-level
-          // whole-body on v2.2/v2.3, per-frame flags with stored sizes
-          // on v2.4 (§6.1) — the even ones of those also carrying the
-          // §4.1.2 data length indicator the parser verifies
-          val major = (id % 4).toInt match {
-            case 0 => 2; case 1 => 3; case _ => 4
-          }
-          val titleId = if (major == 2) "TT2" else "TIT2"
-          val artistId = if (major == 2) "TP1" else "TPE1"
-          val texts = Seq(titleId -> s"title-$id",
-            artistId -> s"artist-${id % 7}") ++
-            (if (id % 2 == 1) Seq("TALB" -> s"album-${id % 5}") else Nil)
-          val bins = if (id % 5 == 2)
-            Seq((if (major == 2) "PIC" else "APIC") ->
-              Array.tabulate(((id % 5) * 3 + 4).toInt)(i =>
-                (i + id).toByte)) else Nil
-          val footer = major == 4 && id % 4 == 3
-          val unsyncTag = id % 5 == 0
-          // r14 widens the cycle further: extended headers (both
-          // layouts, CRCs verified at parse) on the id%7==0 docs, and
-          // the v2.4 BOM-less UTF-16BE encoding (2) on the id%6==0
-          // v2.4 docs (same text values — the encoding is invisible to
-          // the oracle columns, the ext header is pinned via v2_ext)
-          val extH = id % 7 == 0 && major >= 3
-          val be2 = major == 4 && id % 6 == 0
-          val v2 = graft.ops.Id3.encodeId3v2(texts, major = major,
-            utf16 = id % 3 == 0 && !be2, utf16be = be2,
-            padding = if (footer) 0 else ((id % 4) * 7).toInt,
-            withFooter = footer, binaryFrames = bins, unsync = unsyncTag,
-            withDli = unsyncTag && major == 4 && id % 2 == 0,
-            withExtHeader = extH)
-          val hasXing = id % 3 != 1
-          val xing = if (hasXing)
-            mpa.makeMp3InfoFrame(160, mono = true, nFrames = nFrames,
-              nBytes = audio.length, vbr = id % 2 == 0)
-          else Array.empty[Byte]
-          val hasV1 = id % 2 == 0
-          val v1 = if (hasV1)
-            graft.ops.Id3.encodeId3v1(s"t-$id", s"p-${id % 3}", "alb",
-              "2004", "c", (id % 9).toInt + 1, (id % 80).toInt)
-          else Array.empty[Byte]
-          val payload = v2 ++ xing ++ audio ++ v1
-          val c = mpa.mp3IntakeCensus(id, payload)
-          val pcm = mpa.decodeMpegAudio(id, java.util.Arrays.copyOfRange(
-            payload, c.audioStart + xing.length, c.audioEnd))
-          val clean = pcm.length == 1152 * nFrames &&
-            pcm.forall(v => !v.isNaN && !v.isInfinite)
-          val tmap = c.id3v2.get.textFrames.toMap
-          val v1Ok = if (hasV1)
-            c.id3v1.exists(t => t.title == s"t-$id" &&
-              t.artist == s"p-${id % 3}" && t.track == (id % 9).toInt + 1)
-          else c.id3v1.isEmpty
-          val xingOk = if (hasXing)
-            c.xing.exists(x => x.vbr == (id % 2 == 0) &&
-              x.nFrames == c.nAudioFrames && x.nBytes == audio.length)
-          else c.xing.isEmpty
-          (id, c.id3v2.get.major, c.id3v2.get.unsync,
-            c.id3v2.get.hasExtHeader, c.id3v2.get.textFrames.size,
-            tmap.getOrElse(titleId, ""), tmap.getOrElse(artistId, ""),
-            c.id3v2.get.nSkippedFrames, v1Ok, c.xing.isDefined, xingOk,
-            c.nAudioFrames, c.nSamples, clean)
-        }
-        .toDF("doc_id", "v2_major", "v2_unsync", "v2_ext",
-          "n_text_frames", "title",
-          "artist", "n_skipped_frames", "v1_ok", "has_xing", "xing_ok",
-          "n_audio_frames", "n_samples", "decode_clean")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — HETEROGENEOUS AUDIO METADATA EXTRACTION (round 12, session
-    // 2 capstone): one query over a MIXED corpus spanning all three
-    // audio tag systems — ID3v2-tagged MP3s (with and without Xing
-    // first frames), Vorbis-tagged FLACs, and LIST/INFO-tagged WAVs —
-    // sniff-dispatched to the right parser and reduced to ONE uniform
-    // metadata schema (type, title, artist, duration samples, rate):
-    // the scan a training-data pipeline runs to build its audio
-    // metadata table. The sniffer recognizes the ID3 prefix (crawl
-    // MP3s rarely start with a bare syncword).
-    "x5_audio_metadata_corpus" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 201)
-        .map { id =>
-          val mpa = graft.ops.MpegAudio
-          val m = ((id / 3) % 3).toInt // per-format size knob
-          val title = s"title-$id"; val artist = s"artist-${id % 7}"
-          val payload: Array[Byte] = (id % 3).toInt match {
-            case 0 =>
-              val nFrames = 2 + m
-              val grans = (0 until 2 * nFrames).map { g =>
-                val lines = new Array[Int](576)
-                lines((25 + (id + g) % 50).toInt) = 1
-                lines
-              }
-              val audio = mpa.encodeMp3(grans.zipWithIndex.map { case (l, g) =>
-                Seq(mpa.Mp3GranSpec(l, 206 + ((id + g) % 8).toInt)) }, 160)
-              val v2 = graft.ops.Id3.encodeId3v2(
-                Seq("TIT2" -> title, "TPE1" -> artist),
-                major = if ((id / 3) % 2 == 0) 3 else 4,
-                utf16 = (id / 3) % 4 == 1)
-              val xing = if ((id / 3) % 2 == 0)
-                mpa.makeMp3InfoFrame(160, mono = true, nFrames,
-                  audio.length, vbr = true)
-              else Array.empty[Byte]
-              v2 ++ xing ++ audio
-            case 1 =>
-              val n = 1024 * (2 + m)
-              val tone = 220.0 + (id % 18) * 40.0
-              val x = Array.tabulate(n) { i =>
-                val t = 8000.0 * math.sin(2 * math.Pi * tone * i / 48000.0)
-                val h = (i.toLong * 2654435761L + id) % 2147483647L
-                math.max(-32768, math.min(32767, (t + h % 1200L - 600L).toInt))
-              }
-              graft.ops.Flac.encodeFlac(Array(x), 48000,
-                tags = Seq("TITLE" -> title, "ARTIST" -> artist),
-                withSeekTable = (id / 3) % 2 == 0)
-            case _ =>
-              val n = 1000 * (2 + m)
-              Multimodal.encodeWav(44100,
-                i => ((i.toLong * 2654435761L + id) % 2001L - 1000L).toInt,
-                n, tags = Seq("INAM" -> title, "IART" -> artist,
-                  "ICRD" -> "2005"))
-          }
-          val t = Multimodal.sniffMediaType(payload)
-          val (ti, ar, samples, rate) = t match {
-            case "audio/mpeg" =>
-              val c = mpa.mp3IntakeCensus(id, payload)
-              val tm = c.id3v2.map(_.textFrames.toMap).getOrElse(Map.empty)
-              (tm.getOrElse("TIT2", ""), tm.getOrElse("TPE1", ""),
-                c.nSamples, 48000)
-            case "audio/flac" =>
-              val meta = graft.ops.Flac.readFlacMeta(payload, id)
-              val si = graft.ops.Flac.readStreamInfo(payload, id)
-              val tm = meta.tags.toMap
-              (tm.getOrElse("TITLE", ""), tm.getOrElse("ARTIST", ""),
-                si.totalSamples, si.sampleRate)
-            case "audio/wav" =>
-              val st = Multimodal.decodeWav(id, payload)
-              val tm = Multimodal.readWavInfo(id, payload).toMap
-              (tm.getOrElse("INAM", ""), tm.getOrElse("IART", ""),
-                st.n_samples, st.sample_rate)
-            case _ => ("", "", 0L, 0)
-          }
-          (id, t, ti, ar, samples, rate)
-        }
-        .toDF("doc_id", "media_type", "title", "artist", "n_samples",
-          "sample_rate")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — JPEG TAGGED-CRAWL INTAKE (round 13, judge ask #4): real
-    // crawl JPEGs carry JFIF APP0 and EXIF APP1 (a TIFF 6.0 IFD block,
-    // either endianness) the way crawl MP3s carry ID3 — plus COM
-    // segments and vendor APPn blobs the intake must SKIP and count.
-    // readJpegMeta walks SOI→SOS, parses the common EXIF 2.3 tag set
-    // (orientation/make/model/timestamps/dims/exposure), counts
-    // MakerNote-style unknown tags by type size, and the de-tagged
-    // stream (stripJpegMeta) must equal the bare bytes and decode to
-    // the identical raster. Every census field replays closed-form.
-    "x5_jpeg_exif_intake" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val ex = graft.ops.Exif
-          val base = Multimodal.encodeJpeg(16, 8,
-            i => ((i * 7 + id) % 256).toInt)
-          val hasJfif = id % 3 != 1
-          val hasDt = id % 4 != 2
-          val meta = ex.ExifMeta(bigEndian = id % 2 == 0,
-            make = Some(s"cam-${id % 5}"), model = Some(s"m-${id % 3}"),
-            orientation = Some(1 + (id % 8).toInt),
-            dateTime = if (hasDt)
-              Some(f"2013:05:${(id % 28) + 1}%02d 10:00:00") else None,
-            exposureTime = Some((1L, 60L + id % 200)),
-            iso = Some((100 * (1 + id % 4)).toInt),
-            pixelX = Some(16L), pixelY = Some(8L),
-            makerNote = if (id % 4 == 3)
-              Some(Array.tabulate(((id % 5) * 7 + 3).toInt)(i =>
-                (i + id).toByte)) else None)
-          val segs =
-            (if (hasJfif) Seq(ex.encodeJfifApp0(
-              72 + (id % 5).toInt, 72 + (id % 7).toInt)) else Nil) ++
-            Seq(ex.encodeExifApp1(meta)) ++
-            (if (id % 5 == 2)
-              Seq(ex.encodeAppSegment(5, Array.tabulate(9)(i =>
-                (i * 3 + id).toByte))) else Nil) ++
-            (if (id % 2 == 1)
-              Seq(ex.encodeJpegComment(s"crawl-note-$id")) else Nil)
-          val tagged = ex.insertJpegSegments(base, segs)
-          val c = ex.readJpegMeta(id, tagged)
-          val e = c.exif.get
-          val stripped = ex.stripJpegMeta(id, tagged)
-          val (w1, h1, r1, _) = Multimodal.decodeJpegRaster(tagged)
-          val (w2, h2, r2, _) = Multimodal.decodeJpegRaster(stripped)
-          val clean = stripped.sameElements(base) &&
-            w1 == w2 && h1 == h2 && r1.sameElements(r2) &&
-            ex.readJpegMeta(id, stripped).metaBytes == 0
-          (id, c.jfif.isDefined,
-            c.jfif.map(_.xDensity).getOrElse(0),
-            c.jfif.map(_.yDensity).getOrElse(0),
-            e.bigEndian, e.orientation.get, e.make.getOrElse(""),
-            e.model.getOrElse(""), e.dateTime.getOrElse(""),
-            e.iso.get, e.exposureTime.get._2, e.nUnknownTags,
-            c.nUnknownApps, c.nComments, e.pixelX.get, e.pixelY.get,
-            clean)
-        }
-        .toDF("doc_id", "has_jfif", "x_density", "y_density",
-          "big_endian", "orientation", "make", "model", "date_time",
-          "iso", "exposure_den", "n_unknown_tags", "n_unknown_apps",
-          "n_comments", "pixel_x", "pixel_y", "decode_clean")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — JPEG XMP INTAKE (round 14, judge ask #2): the THIRD JPEG
-    // metadata system — the APP1 XMP packet (namespace header + RDF/XML
-    // per ISO 16684-1). The fixture cycles BOTH conformant
-    // serializations (element form / attribute form on the
-    // Description), multi-valued rdf:Seq creators, and plants extra
-    // xmp-schema properties on id%4==3 docs to exercise the
-    // count-never-parse-through census; an EXIF APP1 rides along on
-    // id%3==0 docs to pin that the two APP1 systems coexist and are
-    // dispatched by header, not marker. decode_clean pins strip==bare.
-    "x5_jpeg_xmp_intake" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val ex = graft.ops.Exif
-          val xm = graft.ops.Xmp
-          val base = Multimodal.encodeJpeg(16, 8,
-            i => ((i * 7 + id) % 256).toInt)
-          val nCre = (1 + id % 3).toInt
-          val pkt = xm.encodeXmpPacket(
-            title = Some(s"xmp-title-$id"),
-            creators = (0 until nCre).map(j => s"author-${(id + j) % 7}"),
-            createDate =
-              Some(f"2013-05-${(id % 28) + 1}%02dT10:00:00Z"),
-            attrForm = id % 2 == 1,
-            other = if (id % 4 == 3)
-              Seq("CreatorTool" -> s"tool-${id % 5}",
-                "Rating" -> s"${id % 6}") else Nil)
-          val segs = xm.encodeXmpApp1(pkt) +: (if (id % 3 == 0)
-            Seq(ex.encodeExifApp1(ex.ExifMeta(bigEndian = id % 2 == 0,
-              make = Some(s"cam-${id % 5}")))) else Nil)
-          val tagged = ex.insertJpegSegments(base, segs)
-          val c = ex.readJpegMeta(id, tagged)
-          val x = c.xmp.get
-          val stripped = ex.stripJpegMeta(id, tagged)
-          val clean = stripped.sameElements(base) &&
-            ex.readJpegMeta(id, stripped).metaBytes == 0
-          (id, id % 2 == 1, x.title.getOrElse(""), x.creators.length,
-            x.creators.headOption.getOrElse(""),
-            x.createDate.getOrElse(""), x.nOtherProps,
-            c.exif.exists(_.make.contains(s"cam-${id % 5}")),
-            c.nUnknownApps, clean)
-        }
-        .toDF("doc_id", "attr_form", "title", "n_creators",
-          "first_creator", "create_date", "n_other_props", "has_exif",
-          "n_unknown_apps", "decode_clean")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — COLOR PNG DECODE (round 14): the crawl's PNGs are mostly
-    // truecolor/palette/RGBA, not grayscale — the decoder now carries
-    // color types 2/3/6 at 8-bit depth (byte-at-bpp filters, PLTE
-    // lookup with bounds checks, alpha carried exactly). This gate is
-    // VALUE-level: every decoded channel sum is recomputed by the
-    // oracle from the planted per-pixel formulas over generate_series
-    // — not a boolean self-grade.
-    "x5_png_color_decode" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val w = 16 + 8 * ((id / 3) % 2).toInt; val h = 8
-          val m = (id % 3).toInt // 0 -> type 2, 1 -> type 3, 2 -> type 6
-          def r(i: Int) = ((i * 37 + id) % 256).toInt
-          def g(i: Int) = ((i * 91 + 5 + id) % 256).toInt
-          def b(i: Int) = ((i * 53 + 2 * id) % 256).toInt
-          def a(i: Int) = ((i * 7 + 3 + id) % 256).toInt
-          val pal = Array.tabulate(16)(c =>
-            (((c * 17 + id) % 256).toInt << 16) |
-              (((c * 29 + 3 * id) % 256).toInt << 8) |
-              ((c * 5 + 7 * id) % 256).toInt)
-          // odd docs ship ADAM7-interlaced (r14): the seven-pass
-          // decode must land on the identical channel sums. Palette
-          // docs also carry a tRNS chunk covering the first 10 PLTE
-          // entries (the rest opaque per spec) so a_sum value-gates
-          // the transparency path too.
-          val lace = id % 2 == 1
-          val trns = Array.tabulate(10)(c =>
-            ((c * 16 + id % 16) % 256).toByte)
-          def enc(ct: Int, pix: Int => Int, p: Array[Int],
-              t: Array[Byte]) =
-            Multimodal.encodePng(w, h, 8, ct, Multimodal.packedSample(ct, pix),
-              p, t, interlaced = lace)
-          val png = m match {
-            case 0 => enc(2,
-              i => (r(i) << 16) | (g(i) << 8) | b(i), null, null)
-            case 1 => enc(3, i => ((i * 3 + id) % 16).toInt, pal, trns)
-            case _ => enc(6,
-              i => (a(i) << 24) | (r(i) << 16) | (g(i) << 8) | b(i),
-              null, null)
-          }
-          val (dw, dh, px, _) = Multimodal.decodePngRgb(id, png)
-          var rs = 0L; var gs = 0L; var bs = 0L; var as = 0L
-          px.foreach { p =>
-            rs += (p >> 16) & 0xFF; gs += (p >> 8) & 0xFF
-            bs += p & 0xFF; as += (p >>> 24) & 0xFF
-          }
-          val ct = m match { case 0 => 2; case 1 => 3; case _ => 6 }
-          (id, ct, lace, dw, dh, rs, gs, bs, as)
-        }
-        .toDF("doc_id", "color_type", "interlaced", "width", "height",
-          "r_sum", "g_sum", "b_sum", "a_sum")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — PNG DEPTH MATRIX (round 15, judge ask #1): the decoder now
-    // carries ALL 15 legal depth×color-type cells of RFC 2083 §4.1.1 —
-    // gray 1/2/4/8/16, palette 1/2/4/8, truecolor/gray+alpha/RGBA
-    // 8/16 — sequential and Adam7 (odd docs). VALUE-level: every
-    // scaled channel sum is recomputed by the oracle from the planted
-    // per-pixel formulas, including the documented integer scale-to-8
-    // arithmetic (exact ×255/max below 8 bits, round-nearest at 16);
-    // gray cells additionally carry the NATIVE-depth sample sum from
-    // the stats decoder.
-    "x5_png_depth_matrix" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val cts  = Array(0, 0, 0, 0, 0, 2, 2, 3, 3, 3, 3, 4, 4, 6, 6)
-          val deps = Array(1, 2, 4, 8, 16, 8, 16, 1, 2, 4, 8, 8, 16, 8, 16)
-          val m = (id % 15).toInt
-          val ct = cts(m); val dep = deps(m)
-          val w = 13 + 8 * ((id / 15) % 2).toInt; val h = 7
-          val lim = if (ct == 3) math.min(1 << dep, 16) else 1 << dep
-          val pal = if (ct == 3)
-            Array.tabulate(lim)(c => c * 0x050301 + 7) else null
-          def sample(i: Int, c: Int): Int =
-            (i * (3 + 2 * c) + 7 * c + dep) % lim
-          val lace = id % 2 == 1
-          val png = Multimodal.encodePng(w, h, dep, ct, sample, pal,
-            null, lace)
-          val (dw, dh, px, _) = Multimodal.decodePngRgb(id, png)
-          var rs = 0L; var gs = 0L; var bs = 0L; var as = 0L
-          px.foreach { p =>
-            rs += (p >> 16) & 0xFF; gs += (p >> 8) & 0xFF
-            bs += p & 0xFF; as += (p >>> 24) & 0xFF
-          }
-          val gns = if (ct == 0) Multimodal.decodePng(id, png).px_sum
-            else -1L
-          (id, ct, dep, lace, dw, dh, rs, gs, bs, as, gns)
-        }
-        .toDF("doc_id", "color_type", "bit_depth", "interlaced",
-          "width", "height", "r_sum", "g_sum", "b_sum", "a_sum",
-          "gray_native_sum")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — STANDALONE TIFF INTAKE (round 15, judge ask #3): the
-    // crawl's .tif files, previously refusing at the Exif layer's
-    // metadata-only honesty note. Baseline TIFF 6.0: gray (incl. the
-    // WhiteIsZero inversion), RGB, palette+ColorMap, both
-    // endiannesses, MULTI-STRIP assembly (rows-per-strip cycles 1-4 →
-    // 9/5/3/3 strips), metadata through the shared EXIF IFD walk, and
-    // the sniff front door. VALUE-level: every channel sum, dim,
-    // strip count, tag census and the Make string recomputed by the
-    // oracle from the planted formulas.
-    "x5_tiff_intake" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val m = (id % 3).toInt
-          val be = id % 2 == 1
-          val w = 12 + 4 * ((id / 3) % 3).toInt; val h = 9
-          val rps = 1 + (id % 4).toInt
-          val mk = Some(s"scanner-${id % 5}")
-          def g(i: Int) = ((i * 7 + id) % 256).toInt
-          def r(i: Int) = ((i * 37 + id) % 256).toInt
-          def gg(i: Int) = ((i * 91 + 5 + id) % 256).toInt
-          def b(i: Int) = ((i * 53 + 2 * id) % 256).toInt
-          val pal = Array.tabulate(256)(c =>
-            (((5 * c + id) % 256).toInt << 16) |
-              (((3 * c + 2 * id) % 256).toInt << 8) |
-              ((c + 7 * id) % 256).toInt)
-          def idx(i: Int) = ((i * 3 + id) % 256).toInt
-          val tif = m match {
-            case 0 => graft.ops.Tiff.encodeTiff(w, h, 0, g, rps, be,
-              make = mk)
-            case 1 => graft.ops.Tiff.encodeTiff(w, h, 2,
-              i => (r(i) << 16) | (gg(i) << 8) | b(i), rps, be, make = mk)
-            case _ => graft.ops.Tiff.encodeTiff(w, h, 3, idx, rps, be,
-              palette = pal, make = mk)
-          }
-          val t = graft.ops.Tiff.decodeTiff(id, tif)
-          var rs = 0L; var gs = 0L; var bs = 0L
-          t.rgb.foreach { p =>
-            rs += (p >> 16) & 0xFF; gs += (p >> 8) & 0xFF; bs += p & 0xFF
-          }
-          (id, t.photometric, t.bigEndian, t.width, t.height, t.nStrips,
-            t.samplesPerPixel, rs, gs, bs, t.meta.make.getOrElse(""),
-            t.meta.nUnknownTags, Multimodal.sniffMediaType(tif))
-        }
-        .toDF("doc_id", "photometric", "big_endian", "width", "height",
-          "n_strips", "samples_per_pixel", "r_sum", "g_sum", "b_sum",
-          "make", "n_unknown_tags", "sniffed")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — CROSS-FORMAT COLOR LUMA (round 14): one palette image saved
-    // as color PNG (type 3) and color GIF must decode to the SAME
-    // packed RGB and the SAME fixed-point luma (both lossless, one
-    // ×2¹⁶ constant set across JPEG/PNG/GIF) — the invariant that lets
-    // color crawl images join the luma hash/dedup path regardless of
-    // container. The luma sum is VALUE-gated: DuckDB recomputes it
-    // from the planted palette formulas, including the >>16 fixed-
-    // point arithmetic.
-    "x5_color_luma_crossformat" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val w = 16 + 8 * ((id / 3) % 2).toInt; val h = 8
-          val pal = Array.tabulate(16)(c =>
-            (((c * 17 + id) % 256).toInt << 16) |
-              (((c * 29 + 3 * id) % 256).toInt << 8) |
-              ((c * 5 + 7 * id) % 256).toInt)
-          def idx(i: Int) = ((i * 3 + id) % 16).toInt
-          // odd docs ship the GIF interlaced (r14): the 4-pass decode
-          // must land on the identical RGB/luma
-          val png = Multimodal.encodePng(w, h, 8, 3,
-            Multimodal.packedSample(3, idx), pal)
-          val gif = Multimodal.encodeGifPalette(w, h, 4, idx, pal,
-            interlaced = id % 2 == 1)
-          val (pw, ph, prgb, _) = Multimodal.decodePngRgb(id, png)
-          val (gw, gh, grgb) = Multimodal.gifRgbRaster(id, gif)
-          val (_, _, pl) = Multimodal.decodePngLuma(id, png)
-          val (_, _, gl) = Multimodal.gifLumaRaster(id, gif)
-          (id, pw, ph, id % 2 == 1,
-            pw == gw && ph == gh && prgb.sameElements(grgb),
-            pl.sameElements(gl), pl.map(_.toLong).sum)
-        }
-        .toDF("doc_id", "width", "height", "gif_interlaced",
-          "rgb_equal", "luma_equal", "luma_sum")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — EXTENDED XMP (round 14): XMP serializations too large for
-    // one APP1 segment ship as GUID-framed continuation chunks (XMP
-    // Part 3 §1.1.3.1) — the main packet names the uppercase-MD5 GUID
-    // in xmpNote:HasExtendedXMP, readers reassemble (gap/overlap/MD5/
-    // GUID-agreement verified) and merge with main-packet-wins
-    // semantics. Odd docs stage the chunks in reverse segment order to
-    // pin that reassembly keys on offsets, not wire order.
-    "x5_jpeg_xmp_extended" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val ex = graft.ops.Exif
-          val xm = graft.ops.Xmp
-          val tl = 20000 + (id % 5).toInt * 4000
-          val bigTitle = new String(Array.tabulate(tl)(i =>
-            ('a' + ((i + id) % 26)).toChar))
-          val full = xm.encodeXmpPacket(title = Some(bigTitle),
-            creators = Seq(s"author-${id % 7}"))
-          val (guid, segs) = xm.encodeExtendedXmp(full, chunkSize = 8000)
-          val main = xm.encodeXmpApp1(xm.encodeXmpPacket(
-            createDate = Some(f"2019-06-${(id % 28) + 1}%02d"),
-            hasExtendedXmp = Some(guid)))
-          val ordered = if (id % 2 == 1) segs.reverse else segs
-          val base = Multimodal.encodeJpeg(16, 8,
-            i => ((i * 5 + id) % 256).toInt)
-          val tagged = ex.insertJpegSegments(base, main +: ordered)
-          val x = ex.readJpegMeta(id, tagged).xmp.get
-          val clean = ex.stripJpegMeta(id, tagged).sameElements(base)
-          (id, tl, x.title.contains(bigTitle),
-            x.creators.headOption.getOrElse(""),
-            x.createDate.getOrElse(""), segs.length >= 3,
-            x.hasExtendedXmp.contains(guid), clean)
-        }
-        .toDF("doc_id", "title_len", "title_exact", "first_creator",
-          "create_date", "multi_chunk", "guid_ok", "strip_clean")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — HETEROGENEOUS IMAGE METADATA EXTRACTION (round 13 capstone,
-    // the image twin of x5_audio_metadata_corpus; r14 widens it to the
-    // FOUR image tag systems): one query over a MIXED corpus spanning
-    // EXIF-tagged JPEGs (ImageDescription/Artist in the TIFF block,
-    // endianness cycling), XMP-tagged JPEGs (dc:title/dc:creator in
-    // the APP1 RDF packet — same marker as EXIF, dispatched by
-    // header), tEXt-tagged PNGs (Title/Author keywords per RFC 2083),
-    // and comment-tagged GIF89a — sniff-dispatched to the right parser
-    // and reduced to ONE uniform metadata schema (type, tag system,
-    // title, author, width, height): the scan a training-data pipeline
-    // runs to build its image metadata table.
-    "x5_image_metadata_corpus" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 201)
-        .map { id =>
-          val ex = graft.ops.Exif
-          val m = ((id / 4) % 3).toInt // per-format size knob
-          val w = 16 + 8 * m; val h = 8 + 4 * m
-          val title = s"title-$id"; val author = s"author-${id % 7}"
-          val payload: Array[Byte] = (id % 4).toInt match {
-            case 0 =>
-              val base = Multimodal.encodeJpeg(w, h,
-                i => ((i * 5 + id) % 256).toInt)
-              ex.insertJpegSegments(base, Seq(
-                ex.encodeJfifApp0(72, 72),
-                ex.encodeExifApp1(ex.ExifMeta(
-                  bigEndian = (id / 4) % 2 == 0,
-                  description = Some(title), artist = Some(author),
-                  pixelX = Some(w.toLong), pixelY = Some(h.toLong)))))
-            case 1 =>
-              val base = Multimodal.encodeJpeg(w, h,
-                i => ((i * 5 + id) % 256).toInt)
-              ex.insertJpegSegments(base, Seq(
-                graft.ops.Xmp.encodeXmpApp1(graft.ops.Xmp.encodeXmpPacket(
-                  title = Some(title), creators = Seq(author),
-                  attrForm = (id / 4) % 2 == 0))))
-            case 2 =>
-              Multimodal.insertPngText(
-                Multimodal.encodePng(w, h, 8, 0,
-                  Multimodal.packedSample(0, i => ((i * 3 + id) % 256).toInt)),
-                Seq("Title" -> title, "Author" -> author))
-            case _ =>
-              Multimodal.insertGifComment(
-                Multimodal.encodeGif(w, h, 4, i => ((i + id) % 16).toInt),
-                s"$title;$author")
-          }
-          val t = Multimodal.sniffMediaType(payload)
-          val (sys, ti, au, ww, hh) = t match {
-            case "image/jpeg" =>
-              val c = ex.readJpegMeta(id, payload)
-              c.xmp match {
-                case Some(x) =>
-                  val (jw, jh, _, _) = Multimodal.decodeJpegRaster(payload)
-                  ("xmp", x.title.getOrElse(""),
-                    x.creators.headOption.getOrElse(""), jw, jh)
-                case None =>
-                  val e = c.exif.get
-                  ("exif", e.description.getOrElse(""),
-                    e.artist.getOrElse(""),
-                    e.pixelX.get.toInt, e.pixelY.get.toInt)
-              }
-            case "image/png" =>
-              val tm = Multimodal.readPngText(id, payload).toMap
-              val (pw, ph, _, _) = Multimodal.decodePngRaster(payload)
-              ("text", tm.getOrElse("Title", ""),
-                tm.getOrElse("Author", ""), pw, ph)
-            case "image/gif" =>
-              val parts = Multimodal.readGifComments(id, payload)
-                .headOption.getOrElse(";").split(";", 2)
-              val f = Multimodal.decodeGifFrame(id, payload)
-              ("comment", parts(0), parts(1), f.width, f.height)
-            case _ => ("", "", "", 0, 0)
-          }
-          (id, t, sys, ti, au, ww, hh)
-        }
-        .toDF("doc_id", "media_type", "tag_system", "title", "author",
-          "width", "height")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — EXIF GPS INTAKE (round 13, post-cert extra): geo-tagged
-    // crawl JPEGs carry the GPS sub-IFD (EXIF 2.3 §4.6.6) — hemisphere
-    // refs + deg/min/sec RATIONAL triplets. The intake keeps the
-    // rationals exact; the gate reduces them to signed deci-arcseconds
-    // (deg·36000 + min·600 + tenths-of-arcsec, sign from the ref) with
-    // integer arithmetic only, replayed closed-form. A MakerNote rides
-    // along on id%4==3 docs to pin that unknown-tag skips and the GPS
-    // walk compose.
-    // X5 — EXIF THUMBNAIL + INTEROPERABILITY INTAKE (round 14): IFD1,
-    // the thumbnail IFD behind IFD0's next-IFD pointer, walked for
-    // real — Compression 6 validated, JPEGInterchangeFormat/Length
-    // bounds-checked, the embedded JPEG extracted BYTE-EXACTLY and
-    // decoded; plus the Interoperability sub-IFD's index (R98/THM/R03,
-    // the DCF set). A MakerNote rides on id%4==3 docs to pin that
-    // unknown-tag skips compose with the two extra IFD walks.
-    "x5_jpeg_thumbnail_intake" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val ex = graft.ops.Exif
-          val (tw, th) = if (id % 2 == 0) (8, 8) else (16, 8)
-          val thumb = Multimodal.encodeJpeg(tw, th,
-            i => ((i * 11 + id) % 256).toInt)
-          val ix = (id % 3).toInt match {
-            case 0 => "R98"; case 1 => "THM"; case _ => "R03"
-          }
-          val meta = ex.ExifMeta(bigEndian = id % 2 == 0,
-            make = Some(s"cam-${id % 5}"), interopIndex = Some(ix),
-            thumbnail = Some(thumb),
-            makerNote = if (id % 4 == 3)
-              Some(Array.tabulate(7)(i => (i + id).toByte)) else None)
-          val tagged = ex.insertJpegSegments(
-            Multimodal.encodeJpeg(16, 8, i => ((i + id) % 256).toInt),
-            Seq(ex.encodeExifApp1(meta)))
-          val e = ex.readJpegMeta(id, tagged).exif.get
-          val t = e.thumbnail.get
-          val (dw, dh, _, _) = Multimodal.decodeJpegRaster(t)
-          (id, e.bigEndian, e.interopIndex.getOrElse(""),
-            dw, dh, t.sameElements(thumb), e.nUnknownTags)
-        }
-        .toDF("doc_id", "big_endian", "interop_index", "thumb_w",
-          "thumb_h", "thumb_exact", "n_unknown_tags")
-        .orderBy("doc_id")
-    }),
-
-    "x5_jpeg_gps_intake" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val ex = graft.ops.Exif
-          val latRef = if (id % 2 == 0) 'N' else 'S'
-          val lonRef = if (id % 3 == 0) 'E' else 'W'
-          val g = ex.Gps(latRef,
-            Seq((10L + id % 80, 1L), (id % 60, 1L), (id % 600, 10L)),
-            lonRef,
-            Seq((20L + id % 160, 1L), ((id * 7) % 60, 1L),
-              ((id * 13) % 600, 10L)))
-          val meta = ex.ExifMeta(bigEndian = id % 2 == 0,
-            make = Some(s"cam-${id % 5}"), gps = Some(g),
-            makerNote = if (id % 4 == 3)
-              Some(Array.tabulate(7)(i => (i + id).toByte)) else None)
-          val tagged = ex.insertJpegSegments(
-            Multimodal.encodeJpeg(8, 8, i => ((i + id) % 256).toInt),
-            Seq(ex.encodeExifApp1(meta)))
-          val e = ex.readJpegMeta(id, tagged).exif.get
-          val p = e.gps.get
-          def deciArcsec(t: Seq[(Long, Long)], neg: Boolean): Long = {
-            // fixture grain: deg/1, min/1, tenths-of-arcsec/10 — exact
-            val v = t(0)._1 / t(0)._2 * 36000L +
-              t(1)._1 / t(1)._2 * 600L + t(2)._1 * 10L / t(2)._2
-            if (neg) -v else v
-          }
-          (id, e.bigEndian, p.latRef.toString, p.lonRef.toString,
-            deciArcsec(p.lat, p.latRef == 'S'),
-            deciArcsec(p.lon, p.lonRef == 'W'),
-            e.nUnknownTags, p == g)
-        }
-        .toDF("doc_id", "big_endian", "lat_ref", "lon_ref",
-          "lat_deciarcsec", "lon_deciarcsec", "n_unknown_tags", "gps_ok")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — EXIF ORIENTATION NORMALIZATION (round 13): the transform a
-    // crawl pipeline applies BEFORE perceptual hashing — a camera-
-    // rotated duplicate must hash identically to its upright twin, and
-    // pHash is not rotation-invariant. Fixture: the upright scene is
-    // transformed by the INVERSE of each doc's orientation (what a
-    // camera writing that tag produces), carried losslessly in a PNG
-    // eXIf chunk (the standardized TIFF-block chunk; lossless codec ->
-    // the normalization verdict is bit-exact, which JPEG's quantizer
-    // could not pin). Intake: read the tag, normalize, compare to the
-    // upright raster.
-    "x5_exif_orient_normalize" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val ex = graft.ops.Exif
-          val (w, h) = (16, 8)
-          val upright = Array.tabulate(w * h)(i => ((i * 7 + id) % 256).toInt)
-          val o = 1 + (id % 8).toInt
-          val (sw, sh, stored) =
-            ex.applyOrientation(w, h, upright, ex.inverseOrientation(o))
-          val png = Multimodal.insertPngExif(
-            Multimodal.encodePng(sw, sh, 8, 0, Multimodal.packedSample(0, stored(_))),
-            ex.encodeExifTiff(ex.ExifMeta(bigEndian = id % 2 == 0,
-              orientation = Some(o), model = Some(s"gc-${id % 3}"))))
-          val meta = Multimodal.readPngExif(id, png).get
-          val (dw, dh, raster, _) = Multimodal.decodePngRaster(png)
-          val (nw, nh, norm) =
-            ex.applyOrientation(dw, dh, raster, meta.orientation.get)
-          (id, meta.bigEndian, meta.orientation.get, dw, dh, nw, nh,
-            norm.sameElements(upright))
-        }
-        .toDF("doc_id", "big_endian", "orientation", "stored_w",
-          "stored_h", "norm_w", "norm_h", "normalized_equal")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — MP3 MIXED BLOCKS (round 12, the last window-switching
-    // form): block_type 2 with mixed_block_flag — the two lowest
-    // subbands stay long-windowed (long sfb 0-7 scalefactors, no
-    // subblock gain, the single sb0/sb1 alias boundary) while
-    // everything above runs short windows (bands 3-11, per-window
-    // gains). Each doc plants lines in BOTH regions; bit-exact
-    // spectrum recovery through the mixed order map + clean PCM pin
-    // the hybrid requant/reorder/synthesis paths.
-    "x5_decode_mp3_mixed" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val mpa = graft.ops.MpegAudio
-          val nFrames = (2 + id % 3).toInt
-          val nGr = 2 * nFrames
-          val (sfbL, sfbS) = mpa.mp3SfbTables(48000)
-          val omap = mpa.mp3ShortOrderMap(48000, mixed = true)
-          def decPos(b: Int, w: Int): Int =
-            36 + (3 until b).map(bb => 3 * (sfbS(bb + 1) - sfbS(bb))).sum +
-              w * (sfbS(b + 1) - sfbS(b))
-          val specs = (0 until nGr).map { g =>
-            val lines = new Array[Int](576)
-            val longLine = ((id + g) % 36).toInt
-            lines(longLine) = 1
-            val b = 3 + ((id + 2 * g) % 9).toInt
-            val w = ((id + g) % 3).toInt
-            lines(decPos(b, w)) = -1
-            mpa.Mp3GranSpec(lines = lines,
-              globalGain = 203 + ((id + g) % 14).toInt,
-              blockType = 2, mixedBlock = true, scalefacCompress = 13,
-              sfLong = Array.tabulate(21)(bb =>
-                if (bb < 8) ((id + g + bb) % 8).toInt else 0),
-              sfShort = Array.tabulate(12, 3)((bb, ww) =>
-                if (bb >= 3) ((id + g + bb + ww) % 8).toInt else 0),
-              subblockGain = Array(g % 3, (g + 1) % 3, (g + 2) % 3),
-              scalefacScale = (id + g) % 2 == 0)
-          }
-          val kbps = Array(192, 224, 256, 320)((id % 4).toInt)
-          val enc = mpa.encodeMp3(specs.map(Seq(_)), kbps, withCrc = id % 3 == 2)
-          val spectra = mpa.mp3StreamSpectra(id, enc)
-          val specOk = spectra.length == nGr &&
-            spectra.zipWithIndex.forall { case (xr, g) =>
-              val sp = specs(g)
-              val gain = math.pow(2.0, (sp.globalGain - 210) / 4.0)
-              val mult = if (sp.scalefacScale) 1.0 else 0.5
-              val expected = new Array[Double](576)
-              // long region: lines 0-35 identity through long sfb 0-7
-              var b = 0
-              for (i <- 0 until 36 if sp.lines(i) != 0) {
-                while (sfbL(b + 1) <= i) b += 1
-                expected(i) = sp.lines(i) * gain *
-                  math.pow(2.0, -mult * sp.sfLong(b))
-              }
-              // short region: decoded order from band 3
-              var pos = 36
-              for (bb <- 3 until 13; ww <- 0 until 3;
-                   _ <- sfbS(bb) until sfbS(bb + 1)) {
-                if (sp.lines(pos) != 0) {
-                  val sf = if (bb < 12) sp.sfShort(bb)(ww) else 0
-                  expected(omap(pos)) = sp.lines(pos) * gain *
-                    math.pow(2.0, -2.0 * sp.subblockGain(ww) - mult * sf)
-                }
-                pos += 1
-              }
-              (0 until 576).forall(i => math.abs(xr(i) - expected(i)) < 1e-12)
-            }
-          val pcm = mpa.decodeMpegAudio(id, enc)
-          val clean = pcm.length == 1152L * nFrames &&
-            pcm.forall(v => !v.isNaN && !v.isInfinite)
-          (id, nFrames, nGr.toLong, specOk, clean)
-        }
-        .toDF("doc_id", "n_frames", "n_mixed_granules", "spectrum_exact",
-          "decode_clean")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — MP3 SCFSI granule-sharing (round 12): the side-info bits
-    // that let a frame's SECOND granule reuse the first's scalefactors
-    // per band group (sfb 0-5 / 6-10 / 11-15 / 16-20) and transmit no
-    // bits for them — LAME emits this routinely, so real-crawl decode
-    // needs it. Every 4-bit pattern appears in the corpus (scfsi =
-    // 1 + doc_id % 15, never zero); granule 2's scalefactors differ
-    // from granule 1's exactly in the NON-shared groups, so a decoder
-    // that misreads the sharing map gets the wrong per-band gains and
-    // the bit-exact spectrum check reds.
-    "x5_decode_mp3_scfsi" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val mpa = graft.ops.MpegAudio
-          val nFrames = (2 + id % 3).toInt
-          val (sfbL, _) = mpa.mp3SfbTables(48000)
-          val scfsi = (1 + id % 15).toInt
-          def shared(b: Int): Boolean = {
-            val grp = if (b < 6) 0 else if (b < 11) 1 else if (b < 16) 2 else 3
-            ((scfsi >> (3 - grp)) & 1) == 1
-          }
-          val specs = (0 until 2 * nFrames).map { g =>
-            val lines = new Array[Int](576)
-            (0 until 21).foreach(b =>
-              lines(sfbL(b) + ((id + g + b) % 4).toInt) =
-                if ((g + b) % 2 == 0) 1 else -1)
-            val frame = g / 2
-            val sf0 = Array.tabulate(21)(b => ((id + frame + b) % 8).toInt)
-            val sf = if (g % 2 == 0) sf0
-              else Array.tabulate(21)(b =>
-                if (shared(b)) sf0(b) else ((id + frame + 3 * b + 1) % 8).toInt)
-            mpa.Mp3GranSpec(lines = lines,
-              globalGain = 204 + ((id + g) % 12).toInt,
-              scalefacCompress = 13, sfLong = sf,
-              preflag = (id + g) % 3 == 0)
-          }
-          val kbps = Array(192, 224, 256, 320)((id % 4).toInt)
-          val enc = mpa.encodeMp3(specs.map(Seq(_)), kbps,
-            withCrc = id % 2 == 1, scfsi = scfsi)
-          val pretab = mpa.mp3PretabValues
-          val spectra = mpa.mp3StreamSpectra(id, enc)
-          val specOk = spectra.length == specs.length &&
-            spectra.zipWithIndex.forall { case (xr, g) =>
-              val sp = specs(g)
-              val gain = math.pow(2.0, (sp.globalGain - 210) / 4.0)
-              val expected = new Array[Double](576)
-              for (b <- 0 until 22; i <- sfbL(b) until sfbL(b + 1))
-                if (sp.lines(i) != 0) {
-                  val sf = (if (b < 21) sp.sfLong(b) else 0) +
-                    (if (sp.preflag) pretab(b) else 0)
-                  expected(i) = sp.lines(i) * gain * math.pow(2.0, -0.5 * sf)
-                }
-              (0 until 576).forall(i => math.abs(xr(i) - expected(i)) < 1e-12)
-            }
-          val pcm = mpa.decodeMpegAudio(id, enc)
-          val clean = pcm.length == 1152L * nFrames &&
-            pcm.forall(v => !v.isNaN && !v.isInfinite)
-          (id, nFrames, scfsi, specOk, clean)
-        }
-        .toDF("doc_id", "n_frames", "scfsi_pattern", "spectrum_exact",
-          "decode_clean")
-        .orderBy("doc_id")
-    }),
-
-    "x5_mp3_reservoir_mix" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 200)
-        .map { id =>
-          val fam = (id % 5).toInt
-          val nFrames = (2 + id % 4).toInt
-          val nGr = 2 * nFrames
-          val granules = (0 until nGr).map { g =>
-            val spec = new Array[Int](576)
-            spec(18 * (2 + ((id + g) % 20).toInt) + 3 + (g % 9)) = 1
-            spec(18 * (23 + ((id + 2 * g) % 8).toInt) + 4 + (g % 9)) = -1
-            spec
-          }
-          val gains = (0 until nGr).map(g => 200 + ((id + g) % 20).toInt)
-          val kbps = Array(160, 192, 224, 256)((id % 4).toInt)
-          val mpa = graft.ops.MpegAudio
-          val mono = (0 until nGr).map(g =>
-            Seq(mpa.Mp3GranSpec(granules(g), gains(g))))
-          val enc = fam match {
-            case 0 => mpa.encodeMp3(mono, kbps)
-            case 2 =>
-              // SHORT-BLOCK mono (round 12): the transient regime most
-              // real encoder output occupies — was outside the census
-              // corpus while window switching was a named boundary
-              mpa.encodeMp3(
-                (0 until nGr).map(g => Seq(mpa.Mp3GranSpec(
-                  lines = granules(g), globalGain = gains(g),
-                  blockType = 2,
-                  subblockGain = Array(g % 3, (g + 1) % 3, (g + 2) % 3)))),
-                kbps)
-            case 1 | 3 => mpa.encodeMp3(mono, kbps, reservoir = true)
-            case _ =>
-              val st = mpa.encodeMp3(
-                (0 until nGr).map(g => mono(g) ++ mono((g + 1) % nGr)),
-                kbps, mode = 1, modeExt = 2, reservoir = true)
-              // patch mode_extension 2 → 3 on every header: the
-              // MS+intensity regime a crawl contains — refused by name
-              // through round 11, DECODED since round 12
-              val patched = st.clone()
-              graft.ops.MpegAudio.walkFrames(id, st).foreach(f =>
-                patched(f.byte_off.toInt + 3) =
-                  (patched(f.byte_off.toInt + 3) | 0x10).toByte)
-              patched
-          }
-          val census = graft.ops.MpegAudio.mp3ChannelModeCensus(id, enc)
-          val nRes = census.count(_._4 > 0)
-          val nIntensity = census.count(c => (c._3 & 1) != 0)
-          // the measured decode verdict: through round 11 the intensity
-          // family was refused by name (decodable fraction 0.8 of this
-          // corpus); round 12's intensity + short-block decode lifts
-          // the whole corpus to 1.0 — the census instrument records it
-          val decodable = try {
-            val chans = graft.ops.MpegAudio.decodeMpegAudioChannels(id, enc)
-            chans.forall(_.forall(v => !v.isNaN && !v.isInfinite))
-          } catch {
-            case e: IllegalArgumentException
-                if e.getMessage.contains("intensity") ||
-                  e.getMessage.contains("boundary") => false
-          }
-          (id, nFrames, nRes, 1000000L * nRes / nFrames, nIntensity,
-            decodable)
-        }
-        .toDF("doc_id", "n_frames", "n_reservoir_frames", "reservoir_ppm",
-          "n_intensity_frames", "decodable")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — FLAC (fixed-predictor subset, public xiph/RFC 9639 format):
-    // the LOSSLESS member of the audio-codec family, which makes its
-    // gate the strongest codec oracle on the board — decode(encode(pcm))
-    // must equal the input BIT-FOR-BIT (no SNR floor), with CRC-8
-    // frame-header + CRC-16 frame + STREAMINFO-MD5 integrity all
-    // verified inside the decoder (decode THROWS on any violation, so
-    // `lossless` carries the whole contract). Corpus mixes mono with
-    // correlated stereo (side = L−R collapses to a CONSTANT subframe →
-    // a decorrelated mode must win) and independent stereo; census
-    // fields (channels, frames incl. the partial tail block, samples)
-    // replay closed-form. compressed_smaller pins that rice-coded
-    // fixed-predictor residuals beat raw PCM on every doc.
-    "x5_flac_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val n = 1024 * (2 + id % 3).toInt + (id % 5).toInt * 100
-          def wave(seed: Long, tone: Double): Array[Int] =
-            Array.tabulate(n) { i =>
-              val t = 8000.0 * math.sin(2 * math.Pi * tone * i / 48000.0)
-              val h = (i.toLong * 2654435761L + seed) % 2147483647L
-              math.max(-32768, math.min(32767, (t + h % 1200L - 600L).toInt))
-            }
-          val tone = 200.0 + (id % 20) * 50.0
-          val mono = id % 3 == 0
-          val correlated = !mono && id % 2 == 0
-          val chans: Array[Array[Int]] =
-            if (mono) Array(wave(id, tone))
-            else if (correlated) {
-              val l = wave(id, tone)
-              Array(l, l.map(v => math.max(-32768, math.min(32767, v + 3))))
-            } else Array(wave(id, tone), wave(id + 7, tone * 1.5))
-          val enc = graft.ops.Flac.encodeFlac(chans, 48000, blockSize = 1024)
-          val (frames, dec) = graft.ops.Flac.decodeFlac(id, enc)
-          val lossless = dec.length == chans.length &&
-            dec.zip(chans).forall { case (a, b) => a.sameElements(b) }
-          val modes = frames.map(_.channel_mode).toSet
-          val modesOk =
-            if (mono) modes == Set(0)
-            else if (correlated) modes.subsetOf(Set(8, 9, 10))
-            else modes.subsetOf(Set(1, 8, 9, 10))
-          val smaller = enc.length < 2 * chans.length * n
-          (id, chans.length, frames.length, n.toLong, lossless, modesOk,
-            smaller)
-        }
-        .toDF("doc_id", "n_channels", "n_frames", "n_samples", "lossless",
-          "modes_ok", "compressed_smaller")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — FLAC foreign-file features (round 12): the three subframe
-    // mechanisms every reference-encoder FLAC uses that were named
-    // boundaries until now — WASTED BITS (shared trailing zeros hoisted
-    // to the subframe header), NONZERO RICE PARTITION ORDERS
-    // (per-partition parameters over variance-switching content), and
-    // the RICE ESCAPE CODE (raw signed residuals where unary quotients
-    // explode). Each doc packs one engineered frame per mechanism into
-    // a single stream (3 × 1024-sample frames), round-trips it
-    // LOSSLESSLY (bit-for-bit — the FLAC oracle), and reports which
-    // mechanisms the decoder observed; all three must fire on every
-    // doc by construction.
-    "x5_flac_foreign" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val tone = 200.0 + (id % 20) * 40.0
-          // frame 0: 13-bit tone shifted <<3 — every sample shares 3
-          // trailing zero bits
-          val a = Array.tabulate(1024)(i => math.max(-4096, math.min(4095,
-            (400 * math.sin(2 * math.Pi * tone * i / 48000.0)).toInt +
-              (((i.toLong * 2654435761L + id) % 401L) - 200L).toInt)) << 3)
-          // frame 1: 3/4 quiet tone + 1/4 mid-scale noise — partitions
-          // separate the regimes, po > 0 wins
-          val b = Array.tabulate(1024) { i =>
-            if ((i / 256) % 4 < 3)
-              (400 * math.sin(2 * math.Pi * tone * i / 48000.0)).toInt
-            else (((i.toLong * 2654435761L + id + 5L) % 40000L) - 20000L).toInt
-          }
-          // frame 2: quiet half + full-scale noise half — the loud
-          // partition's residuals span ~17 bits, raw beats rice
-          val c = Array.tabulate(1024) { i =>
-            if (i < 512)
-              (300 * math.sin(2 * math.Pi * tone * i / 48000.0)).toInt
-            else (((i.toLong * 2654435761L + id + 11L) % 65000L) - 32500L).toInt
-          }
-          val x = a ++ b ++ c
-          val enc = graft.ops.Flac.encodeFlac(Array(x), 48000, blockSize = 1024)
-          val (frames, dec) = graft.ops.Flac.decodeFlac(id, enc)
-          // r15: a FOURTH foreign mechanism — a pre-RFC LPC frame
-          // whose 5-bit shift field codes NEGATIVE two's complement
-          // (predict = sum << −shift). Samples are closed-form so the
-          // decoded sum is an oracle-RECOMPUTED value column, not a
-          // self-grade.
-          val ns = Array.tabulate(1024)(i =>
-            (((i.toLong * 2654435761L + id) % 4001L) - 2000L).toInt)
-          val foreign = graft.ops.Flac.encodeFlacForeignLpc(ns, 48000,
-            bps = 16, q = Array(1), shift = -2)
-          val (_, nsDec) = graft.ops.Flac.decodeFlac(id, foreign)
-          (id, frames.length.toLong,
-            dec(0).sameElements(x),
-            frames.exists(_.wasted_bits.exists(_ >= 3)),
-            frames.exists(_.partition_orders.exists(_ > 0)),
-            frames.exists(_.rice_escaped.contains(true)),
-            nsDec(0).map(_.toLong).sum,
-            nsDec(0).sameElements(ns))
-        }
-        .toDF("doc_id", "n_frames", "lossless", "used_wasted_bits",
-          "used_partition_orders", "used_rice_escape",
-          "neg_shift_sum", "neg_shift_lossless")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — FLAC BIT DEPTHS (round 12, session 2): 8-bit and 24-bit
-    // streams end-to-end — 24-bit is the hi-res standard, the most
-    // common foreign regime after CD 16-bit. Even docs carry 24-bit
-    // heavy-tailed noise whose optimal rice parameter exceeds 14, so
-    // the RICE2 method (0b01, 5-bit parameters) MUST fire — the form
-    // reference encoders emit for >16-bit depths; odd docs carry 8-bit
-    // tonal content where the exact-cost planner must discover that
-    // plain 4-bit rice still wins. Both round-trip bit-for-bit (the
-    // lossless oracle) with byte-per-depth little-endian MD5 verified.
-    "x5_flac_depth" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          // r14 widened the cycle to the non-byte-aligned pair
-          // (24/8/12/20 by id%4); r15 adds 32-bit — the regime whose
-          // 33-bit side channel and wide residuals need the codec's
-          // Long arithmetic. The hi-res depths carry wide noise whose
-          // optimal rice parameter exceeds 14, so the exact-cost
-          // planner must pick RICE2 there and plain rice on the small
-          // depths.
-          val bps = (id % 5).toInt match {
-            case 0 => 24; case 1 => 8; case 2 => 12; case 3 => 20
-            case _ => 32
-          }
-          val n = 1024 * (2 + id % 3).toInt
-          def wave(seed: Long): Array[Int] =
-            if (bps == 32) {
-              // the 24-bit wide-noise shape scaled ×512 into the
-              // 32-bit regime (optimal rice parameter ≈ 26 → RICE2
-              // must fire, and rice still beats VERBATIM), plus BOTH
-              // Int extremes planted so the order-k residuals and the
-              // stereo side channel genuinely exceed 32-bit math —
-              // the exact overflow the old named boundary cited
-              Array.tabulate(n) { i =>
-                if (i == 7) Int.MinValue
-                else if (i == 11) Int.MaxValue - 64
-                else {
-                  val h = (i.toLong * 2654435761L + seed) % 2147483647L
-                  val base = (h % 120000L - 60000L) * 512L
-                  val spike = if (i % 37 == 0)
-                    ((h >> 17) % 600000L - 300000L) * 512L else 0L
-                  (base + spike).toInt
-                }
-              }
-            } else if (bps >= 20) {
-              val lim = (1 << (bps - 1)) - 1
-              Array.tabulate(n) { i =>
-                val h = (i.toLong * 2654435761L + seed) % 2147483647L
-                val base = (h % 120000L - 60000L).toInt
-                val spike = if (i % 37 == 0)
-                  (((h >> 17) % 600000L) - 300000L).toInt else 0
-                math.max(-lim - 1, math.min(lim, base + spike))
-              }
-            } else {
-              val lim = (1 << (bps - 1)) - 1
-              val amp = if (bps == 12) 1400.0 else 90.0
-              val nz = if (bps == 12) 600L else 40L
-              Array.tabulate(n) { i =>
-                val t = amp * math.sin(
-                  2 * math.Pi * (200.0 + (id % 20) * 30.0) * i / 48000.0)
-                val h = (i.toLong * 2654435761L + seed) % 2147483647L
-                math.max(-lim - 1,
-                  math.min(lim, (t + h % nz - nz / 2).toInt))
-              }
-            }
-          val mono = id % 3 == 0
-          val chans: Array[Array[Int]] =
-            if (mono) Array(wave(id)) else Array(wave(id), wave(id + 7))
-          val enc = graft.ops.Flac.encodeFlac(chans,
-            if (bps >= 20) 96000 else 48000, blockSize = 1024, bps = bps)
-          val si = graft.ops.Flac.readStreamInfo(enc, id)
-          val (frames, dec) = graft.ops.Flac.decodeFlac(id, enc)
-          val lossless = dec.length == chans.length &&
-            dec.zip(chans).forall { case (a, b) => a.sameElements(b) }
-          (id, si.bitsPerSample, chans.length, frames.length, n.toLong,
-            lossless, frames.exists(_.rice_methods.contains(1)))
-        }
-        .toDF("doc_id", "bits_per_sample", "n_channels", "n_frames",
-          "n_samples", "lossless", "used_rice2")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — FLAC MULTICHANNEL (round 12, session 2): 3-8 channels
-    // (surround layouts) coded independently under channel-assignment
-    // code nch−1 — the only multichannel form the format defines —
-    // at 16-bit and 24-bit depths, round-tripped bit-for-bit with the
-    // per-frame census pinning the assignment code on every frame.
-    "x5_flac_multichannel" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val nch = 3 + (id % 6).toInt
-          val bps = if (id % 4 == 0) 24 else 16
-          val amp = if (bps == 24) 2000000.0 else 8000.0
-          val nmod = if (bps == 24) 130000L else 1200L
-          val n = 2048
-          val chans = Array.tabulate(nch) { ch =>
-            Array.tabulate(n) { i =>
-              val t = amp * math.sin(
-                2 * math.Pi * (180.0 + 70.0 * ch + (id % 10) * 11.0) * i / 48000.0)
-              val h = (i.toLong * 2654435761L + id + ch * 131L) % 2147483647L
-              (t + h % nmod - nmod / 2).toInt
-            }
-          }
-          val enc = graft.ops.Flac.encodeFlac(chans, 48000,
-            blockSize = 1024, bps = bps)
-          val si = graft.ops.Flac.readStreamInfo(enc, id)
-          val (frames, dec) = graft.ops.Flac.decodeFlac(id, enc)
-          val lossless = dec.length == nch &&
-            dec.zip(chans).forall { case (a, b) => a.sameElements(b) }
-          val modeOk = frames.forall(f => f.channel_mode == nch - 1 &&
-            f.subframe_types.length == nch)
-          (id, si.channels, si.bitsPerSample, frames.length, lossless, modeOk)
-        }
-        .toDF("doc_id", "n_channels", "bits_per_sample", "n_frames",
-          "lossless", "mode_ok")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — FLAC VARIABLE BLOCKSIZE (round 12, session 2): blocking
-    // strategy 1 — frame headers code the frame's first SAMPLE number
-    // (extended UTF-8 forms), STREAMINFO carries min≠max, and the
-    // encoder's alternating schedule makes every stream exercise both
-    // sizes. The census replays the exact per-id frame count and the
-    // min/max block fields; losslessness rides the MD5/CRC oracle.
-    "x5_flac_varblock" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val n = 2048 + (id % 3).toInt * 512
-          val tone = 240.0 + (id % 15) * 35.0
-          def wave(seed: Long): Array[Int] = Array.tabulate(n) { i =>
-            val t = 8000.0 * math.sin(2 * math.Pi * tone * i / 48000.0)
-            val h = (i.toLong * 2654435761L + seed) % 2147483647L
-            math.max(-32768, math.min(32767, (t + h % 1200L - 600L).toInt))
-          }
-          val chans: Array[Array[Int]] =
-            if (id % 2 == 0) Array(wave(id))
-            else {
-              val l = wave(id)
-              Array(l, l.map(v => math.max(-32768, math.min(32767, v + 4))))
-            }
-          val enc = graft.ops.Flac.encodeFlac(chans, 48000,
-            blockSize = 1024, variableBlocks = true)
-          val si = graft.ops.Flac.readStreamInfo(enc, id)
-          val (frames, dec) = graft.ops.Flac.decodeFlac(id, enc)
-          val lossless = dec.length == chans.length &&
-            dec.zip(chans).forall { case (a, b) => a.sameElements(b) }
-          (id, frames.length, si.minBlock, si.blockSize, n.toLong, lossless)
-        }
-        .toDF("doc_id", "n_frames", "min_block", "max_block", "n_samples",
-          "lossless")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — FLAC METADATA BLOCKS (round 12, session 2): what real crawl
-    // FLACs carry around the audio — VORBIS_COMMENT tags (the format's
-    // one little-endian corner, per the Vorbis spec), a SEEKTABLE with
-    // real per-frame seekpoints, and PADDING. The seekpoints are
-    // verified against the decode census: every point must land
-    // EXACTLY on a frame boundary with the right first-sample number —
-    // a wrong offset or a misread length desyncs a specific row.
-    "x5_flac_metadata" -> ((s, dir) => {
-      import s.implicits._
-      kernelIds(s, dir, 150)
-        .map { id =>
-          val n = 1024 * (2 + id % 3).toInt
-          val tone = 200.0 + (id % 20) * 45.0
-          def wave(seed: Long): Array[Int] = Array.tabulate(n) { i =>
-            val t = 8000.0 * math.sin(2 * math.Pi * tone * i / 48000.0)
-            val h = (i.toLong * 2654435761L + seed) % 2147483647L
-            math.max(-32768, math.min(32767, (t + h % 1200L - 600L).toInt))
-          }
-          val chans: Array[Array[Int]] =
-            if (id % 3 == 0) Array(wave(id)) else Array(wave(id), wave(id + 9))
-          val tags = Seq("TITLE" -> s"title-$id",
-            "ARTIST" -> s"artist-${id % 7}") ++
-            (if (id % 2 == 1) Seq("ALBUM" -> s"album-${id % 5}") else Nil)
-          val pad = ((id % 4) * 16).toInt
-          val enc = graft.ops.Flac.encodeFlac(chans, 48000,
-            blockSize = 1024, tags = tags, vendor = "graft flac 1.0",
-            withSeekTable = true, metaPadding = pad)
-          val meta = graft.ops.Flac.readFlacMeta(enc, id)
-          val si = graft.ops.Flac.readStreamInfo(enc, id)
-          val (frames, dec) = graft.ops.Flac.decodeFlac(id, enc)
-          val lossless = dec.length == chans.length &&
-            dec.zip(chans).forall { case (a, b) => a.sameElements(b) }
-          val tmap = meta.tags.toMap
-          val starts = frames.map(_.n_samples.toLong).scanLeft(0L)(_ + _).init
-          val seekOk = meta.seekPoints.length == frames.length &&
-            meta.seekPoints.zip(frames).zip(starts).forall {
-              case ((sp, f), s0) =>
-                si.firstFrameOff + sp.offset == f.byte_off &&
-                  sp.nSamples == f.n_samples && sp.sample == s0
-            }
-          (id, meta.tags.length, tmap.getOrElse("TITLE", ""),
-            tmap.getOrElse("ARTIST", ""), meta.vendor == "graft flac 1.0",
-            meta.seekPoints.length, seekOk, meta.paddingBytes, lossless)
-        }
-        .toDF("doc_id", "n_tags", "title", "artist", "vendor_ok",
-          "n_seekpoints", "seek_ok", "padding_bytes", "lossless")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — ANIMATED GIF: the real "video" container of the family —
-    // every frame decoded through its own LZW code stream, with
-    // Graphic Control Extension timing (delay centiseconds) and
-    // sub-rectangle placement walked for real. The oracle replays
-    // every frame's geometry, delay, and per-frame pixel census from
-    // the generating formula — a mis-walked extension block or a
-    // frame-boundary LZW slip scrambles a specific frame's row.
-    "x5_gif_frames" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 300)
-        .map { id =>
-          val nf = (2 + id % 4).toInt
-          val frames = (0 until nf).map { j =>
-            val (x0, y0, w, h) =
-              if (j == 0) (0, 0, 24, 16)
-              else ((j % 3) * 4, (j % 2) * 4, 8 + 4 * (j % 2), 8)
-            (x0, y0, w, h, 10 + 5 * j,
-              (i: Int) => ((id + j * 7 + i) % 16).toInt)
-          }
-          Multimodal.MediaRecord(id,
-            Multimodal.encodeGifAnimated(24, 16, 4, frames),
-            "image/gif", "xx")
-        }
-      Multimodal.gifFrameStats(recs).toDF().orderBy("doc_id", "frame_id")
-    }),
-
-    // X5 — REAL VIDEO FRAME EXTRACTION: an MJPEG AVI per doc — RIFF
-    // chunk tree (hdrl/avih/strl/strh/strf, a JUNK chunk every muxer
-    // emits, movi with even-padded 00dc chunks, idx1) walked for real,
-    // every frame a standalone baseline JPEG through the in-house
-    // decoder, geometry/frame-count cross-validated against the
-    // headers. Fixture frames are 8×8-block-constant, so each decodes
-    // bit-exactly and the oracle replays every frame's pixel census
-    // from the generating formula — a mis-walked chunk boundary or a
-    // frame-order slip scrambles a specific frame's row.
-    "x5_avi_frames" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 300)
-        .map { id =>
-          val nf = (2 + id % 3).toInt
-          val w = (8 * (2 + id % 2)).toInt
-          val h = 16
-          val frames = (0 until nf).map { j =>
-            Multimodal.encodeJpeg(w, h, { i =>
-              val bx = (i % w) / 8; val by = (i / w) / 8
-              ((id * 31 + j * 17 + bx * 13 + by * 7) % 256).toInt
-            })
-          }
-          Multimodal.MediaRecord(id,
-            Multimodal.encodeAvi(w, h, (33333 + (id % 5) * 1000).toInt,
-              frames), "video/avi", "xx")
-        }
-      Multimodal.aviFrameStats(recs).toDF().orderBy("doc_id", "frame_id")
-    }),
-
-    // X5 — PROGRESSIVE JPEG (SOF2): the decoder's multi-scan path —
-    // DC successive approximation (first scan ships dc>>1, a
-    // refinement scan ships the held-back bit) plus the spectral AC
-    // band — driver-gated on the same block-constant bit-exact
-    // fixtures as the baseline gate (the web's progressive JPEGs are
-    // what a real crawl corpus actually contains; the ImageIO
-    // cross-check in MultimodalSpec covers foreign scan scripts with
-    // AC refinement + EOB runs). Every 6th doc adds restart markers
-    // inside all three scans.
-    "x5_decode_jpeg_progressive" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 400)
-        .map { id =>
-          val w = (8 * (2 + id % 3)).toInt; val h = (8 * (1 + id % 4)).toInt
-          Multimodal.MediaRecord(id,
-            Multimodal.encodeJpegProgressive(w, h, { i =>
-              val bx = (i % w) / 8; val by = (i / w) / 8
-              ((id * 47 + bx * 11 + by * 23) % 256).toInt
-            }, restartInterval = if (id % 6 == 0) 3 else 0),
-            "image/jpeg", "xx")
-        }
-      Multimodal.decodeJpegStats(recs).toDF()
-        .select(col("doc_id"), col("width"), col("height"), col("n_pixels"),
-          col("px_sum"), col("px_min"), col("px_max"),
-          (col("n_entropy_bytes") < col("n_pixels")).as("dct_saves_bytes"))
-        .orderBy("doc_id")
-    }),
-
-    // X5 — COLOR JPEG: 3-component YCbCr baseline with 4:2:0 chroma
-    // subsampling, interleaved MCUs, and the Annex-K luma/chroma table
-    // pairs — the full color pipeline (RGB→YCbCr fixed point →
-    // subsample → FDCT/Huffman → decode → upsample → YCbCr→RGB fixed
-    // point) replayed EXACTLY by the oracle: fixtures are constant per
-    // 16×16 MCU, so every plane is DC-only and reconstructs
-    // bit-exactly, leaving only the documented ×2¹⁶ integer color
-    // transforms — which the SQL replays with the same floor rounding
-    // (offset trick: DuckDB // truncates, so (t + 2²⁴) // 2¹⁶ − 2⁸
-    // = arithmetic-shift floor). Every 7th doc adds restart markers;
-    // the id%5==1 stragglers ship as 4:4:4 with THREE single-component
-    // sequential scans — the legal non-interleaved baseline layout —
-    // decoding to the same values (blocks stay DC-constant), so the
-    // oracle is layout-blind while the walk is exercised for real.
-    "x5_decode_jpeg_color" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 300)
-        .map { id =>
-          val w = (16 * (1 + id % 2)).toInt; val h = (16 * (1 + id % 3)).toInt
-          val nonInt = id % 5 == 1 && id % 7 != 0
-          Multimodal.MediaRecord(id,
-            Multimodal.encodeJpegColor(w, h, { i =>
-              val mx = (i % w) / 16; val my = (i / w) / 16
-              val r = ((id * 19 + mx * 7 + my * 3) % 256).toInt
-              val g = ((id * 29 + mx * 13 + my * 5) % 256).toInt
-              val b = ((id * 41 + mx * 3 + my * 11) % 256).toInt
-              (r << 16) | (g << 8) | b
-            }, subsample = if (nonInt) 1 else 2,
-            restartInterval = if (id % 7 == 0) 2 else 0,
-            interleave = !nonInt),
-            "image/jpeg", "xx")
-        }
-      Multimodal.decodeJpegColorStats(recs).toDF()
-        .select(col("doc_id"), col("width"), col("height"), col("n_pixels"),
-          col("r_sum"), col("g_sum"), col("b_sum"),
-          (col("n_entropy_bytes") < col("n_pixels")).as("dct_saves_bytes"))
-        .orderBy("doc_id")
-    }),
-
-    // X5 — re-encoded-copy image dedup ACROSS formats: the same
-    // block-constant raster shipped as a PGM (doc 2·id) and as a JPEG
-    // (doc 2·id+1), hashed through the SHARED averageHash raster
-    // kernel, paired on exact 64-bit hash equality (a hash join on the
-    // hash key — the scale path; never all-pairs), and clustered by
-    // the pointer-jumping connected-components op. Every twin pair
-    // must land in one cluster — the bit-exact JPEG decode is what
-    // makes a lossy-format copy FINDABLE by exact hash.
-    "x5_phash_jpeg" -> ((s, dir) => {
-      import s.implicits._
-      val hashes = kernelIds(s, dir, 200)
-        .flatMap { id =>
-          val (w, h) = (16, 16)
-          def pix(i: Int): Int = {
-            val bx = (i % w) / 8; val by = (i / w) / 8
-            ((id * 37 + bx * 101 + by * 53) % 256).toInt
-          }
-          Seq(
-            Multimodal.averageHashPgm(2 * id,
-              Multimodal.encodePgm(w, h, 255, pix)),
-            Multimodal.averageHashJpeg(2 * id + 1,
-              Multimodal.encodeJpeg(w, h, pix)))
-        }.toDF()
-        // kernel frame frozen: the self-join evaluated the encode+decode
-        // kernels twice (r16; opt guide §1.2)
-        .transform(Pins.freeze)
-      val pairs = hashes.as("a").join(hashes.as("b"),
-          col("a.hash_lo") === col("b.hash_lo") &&
-          col("a.hash_hi") === col("b.hash_hi") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      Dedup.clusterWithSizes(pairs).orderBy("id")
-    }),
-
-    // X5 — image dedup across ALL FOUR decoded formats: one raster
-    // shipped as PGM (4·id), JPEG (4·id+1), PNG (4·id+2), and GIF
-    // (4·id+3, 8-bit grayscale ramp palette = identity map), each
-    // decoded by its own real codec, all hashed through the shared
-    // averageHash raster kernel — every quadruple must collapse to one
-    // cluster of 4. This is the re-encoded-copy scenario (the same
-    // image saved under different formats) that defeats byte-level
-    // dedup and is exactly what raster-level hashing exists for.
-    "x5_phash_formats" -> ((s, dir) => {
-      import s.implicits._
-      val hashes = kernelIds(s, dir, 100)
-        .flatMap { id =>
-          val (w, h) = (16, 16)
-          def pix(i: Int): Int = {
-            val bx = (i % w) / 8; val by = (i / w) / 8
-            ((id * 59 + bx * 67 + by * 29) % 256).toInt
-          }
-          Seq(
-            Multimodal.averageHashPgm(4 * id,
-              Multimodal.encodePgm(w, h, 255, pix)),
-            Multimodal.averageHashJpeg(4 * id + 1,
-              Multimodal.encodeJpeg(w, h, pix)),
-            Multimodal.averageHashPng(4 * id + 2,
-              Multimodal.encodePng(w, h, 8, 0, Multimodal.packedSample(0, pix))),
-            Multimodal.averageHashGif(4 * id + 3,
-              Multimodal.encodeGif(w, h, 8, pix)))
-        }.toDF()
-        // kernel frame frozen: the self-join evaluated the encode+decode
-        // kernels twice (r16; opt guide §1.2)
-        .transform(Pins.freeze)
-      val pairs = hashes.as("a").join(hashes.as("b"),
-          col("a.hash_lo") === col("b.hash_lo") &&
-          col("a.hash_hi") === col("b.hash_hi") &&
-          col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      Dedup.clusterWithSizes(pairs).orderBy("id")
-    }),
-
-    // X5 — LOSSY-TOLERANT image dedup: the same 64×64 raster encoded
-    // as JPEG at quant step 4 (visually lossless) and step 24 (visibly
-    // lossy), so the two decoded rasters DIFFER bitwise — the case
-    // exact-hash dedup (x5_phash_jpeg's averageHash equality) is blind
-    // to, certified per-pair by rasters_differ. The DCT pHash (resize
-    // to 32×32 → 2-D DCT-II → median-threshold the top-left 8×8 ACs)
-    // reads only low-frequency mass, which requantization barely moves:
-    // probed geometry is twin Hamming ≤ 2 vs cross-image ≥ 18, so the
-    // SimHash-style 4×16-bit band join (exact block match = candidate,
-    // never all-pairs) recovers every re-encoded twin and the Hamming ≤
-    // 8 verify rejects every cross pair, with ≥ 8 bits of margin on
-    // BOTH sides. Clusters via the pointer-jumping CC op: every twin
-    // pair must land in one cluster of exactly 2.
-    "x5_phash_requant" -> ((s, dir) => {
-      import s.implicits._
-      val hashes = kernelIds(s, dir, 150)
-        .flatMap { id =>
-          val (w, h) = (64, 64)
-          def mix(a: Long): Long = {
-            var x = a * 0x9E3779B97F4A7C15L
-            x ^= x >>> 32; x *= 0xBF58476D1CE4E5B9L; x ^= x >>> 29; x
-          }
-          def pix(i: Int): Int = {
-            val bx = (i % w) / 8; val by = (i / w) / 8
-            math.floorMod(mix(id * 64 + by * 8 + bx), 256).toInt
-          }
-          val hq = Multimodal.encodeJpeg(w, h, pix,
-            Multimodal.uniformQuantTable(4))
-          val lq = Multimodal.encodeJpeg(w, h, pix,
-            Multimodal.uniformQuantTable(24))
-          val (_, _, ra, _) = Multimodal.decodeJpegRaster(hq)
-          val (_, _, rb, _) = Multimodal.decodeJpegRaster(lq)
-          val differ = !java.util.Arrays.equals(ra, rb)
-          def fp(p: Array[Byte], d: Long): (Long, Long, Boolean) = {
-            val hsh = Multimodal.dctHashJpeg(d, p)
-            (d, (hsh.hash_hi << 32) | (hsh.hash_lo & 0xFFFFFFFFL), differ)
-          }
-          Seq(fp(hq, 2 * id), fp(lq, 2 * id + 1))
-        }.toDF("doc_id", "fp", "rasters_differ")
-        // frozen: hammingPairs self-joins and the differ-flag join-back
-        // re-evaluated the JPEG encode/decode kernel three times (r16)
-        .transform(Pins.freeze)
-      Dedup.clusterWithSizes(
-          Dedup.hammingPairs(hashes, "doc_id", "fp", maxHamming = 8))
-        .join(hashes.select(col("doc_id").as("id"),
-          col("rasters_differ")), Seq("id"))
-        .select(col("id"), col("cluster"), col("cluster_size"),
-          col("rasters_differ"))
-        .orderBy("id")
-    }),
-
-    // X5 — cross-format LOSSY dedup: the same raster shipped as PNG
-    // (4·id, lossless), JPEG at quant 24 (4·id+1 — decoded raster
-    // certified DIFFERENT from the PNG's), PGM (4·id+2) and GIF
-    // (4·id+3), all through the DCT pHash. The three lossless decodes
-    // are bit-identical → identical hashes; the lossy JPEG lands
-    // within the Hamming-8 verify of them — so the quad collapses to
-    // ONE cluster of 4. This is the real crawl scenario (one image
-    // saved as PNG on one site and recompressed as JPEG on another)
-    // that x5_phash_formats' exact-hash equality cannot cover.
-    "x5_phash_lossy_formats" -> ((s, dir) => {
-      import s.implicits._
-      val hashes = kernelIds(s, dir, 100)
-        .flatMap { id =>
-          val (w, h) = (64, 64)
-          def mix(a: Long): Long = {
-            var x = a * 0x9E3779B97F4A7C15L
-            x ^= x >>> 32; x *= 0xBF58476D1CE4E5B9L; x ^= x >>> 29; x
-          }
-          def pix(i: Int): Int = {
-            val bx = (i % w) / 8; val by = (i / w) / 8
-            math.floorMod(mix(id * 64 + by * 8 + bx + 777), 256).toInt
-          }
-          val png = Multimodal.encodePng(w, h, 8, 0, Multimodal.packedSample(0, pix))
-          val jpg = Multimodal.encodeJpeg(w, h, pix,
-            Multimodal.uniformQuantTable(24))
-          val differ = !java.util.Arrays.equals(
-            Multimodal.decodePngRaster(png)._3,
-            Multimodal.decodeJpegRaster(jpg)._3)
-          def fp(hsh: Multimodal.ImageHash): (Long, Long, Boolean) =
-            (hsh.doc_id, (hsh.hash_hi << 32) | (hsh.hash_lo & 0xFFFFFFFFL),
-              differ)
-          Seq(
-            fp(Multimodal.dctHashPng(4 * id, png)),
-            fp(Multimodal.dctHashJpeg(4 * id + 1, jpg)),
-            fp(Multimodal.dctHashPgm(4 * id + 2,
-              Multimodal.encodePgm(w, h, 255, pix))),
-            fp(Multimodal.dctHashGif(4 * id + 3,
-              Multimodal.encodeGif(w, h, 8, pix))))
-        }.toDF("doc_id", "fp", "jpeg_differs")
-        // frozen: three downstream evaluations of the codec kernel (r16)
-        .transform(Pins.freeze)
-      Dedup.clusterWithSizes(
-          Dedup.hammingPairs(hashes, "doc_id", "fp", maxHamming = 8))
-        .join(hashes.select(col("doc_id").as("id"), col("jpeg_differs")),
-          Seq("id"))
-        .select(col("id"), col("cluster"), col("cluster_size"),
-          col("jpeg_differs"))
-        .orderBy("id")
-    }),
-
-    // X5 — cross-quality VIDEO near-dup: the composite the codec layer
-    // exists for — the same 3-frame clip muxed as two MJPEG AVIs at
-    // JPEG quant 4 and quant 24 (every decoded frame differs bitwise
-    // between the twins), matched the way real video dedup works:
-    // per-FRAME DCT pHashes, frame-aligned band join (band keys are
-    // (frame_id, block, value) — never all-pairs, and frame k only
-    // meets frame k), Hamming-8 verify, then a video-level AND — a
-    // pair only forms when EVERY frame matches — before clustering.
-    "x5_video_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val nf = 3
-      val frames = kernelIds(s, dir, 120)
-        .flatMap { id =>
-          val (w, h) = (64, 64)
-          def mix(a: Long): Long = {
-            var x = a * 0x9E3779B97F4A7C15L
-            x ^= x >>> 32; x *= 0xBF58476D1CE4E5B9L; x ^= x >>> 29; x
-          }
-          def pix(j: Int)(i: Int): Int = {
-            val bx = (i % w) / 8; val by = (i / w) / 8
-            math.floorMod(mix(id * 512 + j * 64 + by * 8 + bx), 256).toInt
-          }
-          def avi(step: Int): Array[Byte] = Multimodal.encodeAvi(w, h, 40000,
-            (0 until nf).map(j => Multimodal.encodeJpeg(w, h, pix(j),
-              Multimodal.uniformQuantTable(step))))
-          Seq((2 * id, avi(4)), (2 * id + 1, avi(24))).flatMap {
-            case (vid, payload) =>
-              Multimodal.decodeAviFrames(vid, payload).map { f =>
-                val hsh = Multimodal.dctHashRaster(vid, f.width, f.height,
-                  f.raster)
-                (vid, f.frame_id,
-                  (hsh.hash_hi << 32) | (hsh.hash_lo & 0xFFFFFFFFL))
-              }
-          }
-        }.toDF("vid", "frame_id", "fp")
-        // frozen: hammingPairs' banded self-join evaluated the AVI mux +
-        // JPEG decode + DCT hash kernel twice (r16)
-        .transform(Pins.freeze)
-      val videoPairs = Dedup.hammingPairs(frames, "vid", "fp",
-          maxHamming = 8, matchCols = Seq("frame_id"))
-        .groupBy(col("id_a"), col("id_b"))
-        .agg(countDistinct(col("frame_id")).as("_nm"))
-        .filter(col("_nm") === nf) // EVERY frame must match
-        .select(col("id_a"), col("id_b"))
-      Dedup.clusterWithSizes(videoPairs).orderBy("id")
-    }),
-
-    // X5 — cross-BITRATE audio dedup: the audio sibling of the image
-    // requant gate, completing lossy-tolerant near-dup across every
-    // modality. The same 4-tone clip encoded as Layer II at 96 and at
-    // 192 kbps (different bitstreams, different decoded samples),
-    // reduced per frame to the top-4 subband-energy band indices
-    // through the SAME polyphase filterbank the codec runs — band
-    // energies are what lossy audio coding preserves by design, and
-    // the fixture's 2:1 amplitude ladder keeps the top-4 ORDER stable
-    // under codec noise, so twins fingerprint IDENTICALLY per frame
-    // while different tone sets light different bands. Pairing is an
-    // exact join on (frame_id, fingerprint) — never all-pairs — with
-    // a clip-level every-frame-must-match AND before clustering.
-    // (All four tone bands sit BELOW table B.2a's sblimit of 27:
-    // Layer II never codes subbands 27-31, so a tone there is
-    // legitimately DROPPED by the codec and its rank slot collapses
-    // to noise — a first fixture draft learned this the hard way.)
-    "x5_audio_neardup" -> ((s, dir) => {
-      import s.implicits._
-      val nf = 2
-      val fps = kernelIds(s, dir, 100)
-        .flatMap { id =>
-          val bands = Array((1 + id % 7).toInt, (9 + id % 5).toInt,
-            (16 + id / 5 % 5).toInt, (23 + id / 25 % 4).toInt)
-          val amps = Array(0.5, 0.25, 0.12, 0.06)
-          val pcm = Array.tabulate(1152 * nf) { i =>
-            var v = 0.0
-            var b = 0
-            while (b < 4) {
-              v += amps(b) * math.sin(
-                2 * math.Pi * (bands(b) + 0.5) * 750.0 * i / 48000.0)
-              b += 1
-            }
-            math.round(v * 32767).toShort
-          }
-          Seq((2 * id, 96), (2 * id + 1, 192)).flatMap { case (aid, kbps) =>
-            val dec = graft.ops.MpegAudio.decodeMpegAudio(aid,
-              graft.ops.MpegAudio.encodeMp2(pcm, kbps))
-            graft.ops.MpegAudio.audioFingerprints(dec)
-              .map { case (f, fp) => (aid, f, fp) }
-          }
-        }.toDF("aid", "frame_id", "fp")
-        // frozen: the frame-aligned self-join evaluated the MP2
-        // encode+decode+filterbank kernel twice (r16)
-        .transform(Pins.freeze)
-      val framePairs = fps.as("a").join(fps.as("b"),
-          col("a.frame_id") === col("b.frame_id") &&
-          col("a.fp") === col("b.fp") &&
-          col("a.aid") < col("b.aid"))
-        .select(col("a.aid").as("id_a"), col("b.aid").as("id_b"),
-          col("a.frame_id").as("frame_id"))
-      val clipPairs = framePairs.groupBy(col("id_a"), col("id_b"))
-        .agg(countDistinct(col("frame_id")).as("_nm"))
-        .filter(col("_nm") === nf)
-        .select(col("id_a"), col("id_b"))
-      Dedup.clusterWithSizes(clipPairs).orderBy("id")
-    }),
-
-    // X5 — CROSS-CODEC audio dedup incl. the LOSSLESS member: the same
-    // PCM shipped as FLAC (bit-exact round trip) and as MPEG-1 Layer II
-    // at 192 kbps must fingerprint identically — FLAC vs source is a
-    // MUST (losslessness makes it exact), MP2 vs FLAC is the measured
-    // lossy↔lossless dedup claim (band energies are what the lossy
-    // codec preserves; same family evidence as the 96-vs-192 gate).
-    // flac_compressed pins rice-coded fixed-predictor residuals beating
-    // raw PCM on the tonal fixture.
-    "x5_audio_crosscodec" -> ((s, dir) => {
-      import s.implicits._
-      val nf = 2
-      kernelIds(s, dir, 100)
-        .map { id =>
-          val bands = Array((1 + id % 7).toInt, (9 + id % 5).toInt,
-            (16 + id / 5 % 5).toInt, (23 + id / 25 % 4).toInt)
-          val amps = Array(0.5, 0.25, 0.12, 0.06)
-          val pcm = Array.tabulate(1152 * nf) { i =>
-            var v = 0.0
-            var b = 0
-            while (b < 4) {
-              v += amps(b) * math.sin(
-                2 * math.Pi * (bands(b) + 0.5) * 750.0 * i / 48000.0)
-              b += 1
-            }
-            math.round(v * 32767).toShort
-          }
-          val srcFp = graft.ops.MpegAudio.audioFingerprints(
-            pcm.map(_ / 32768.0))
-          val flacEnc = graft.ops.Flac.encodeFlac(
-            Array(pcm.map(_.toInt)), 48000, blockSize = 1152)
-          val (_, fchans) = graft.ops.Flac.decodeFlac(id, flacEnc)
-          val flacFp = graft.ops.MpegAudio.audioFingerprints(
-            fchans(0).map(_ / 32768.0))
-          val mp2Fp = graft.ops.MpegAudio.audioFingerprints(
-            graft.ops.MpegAudio.decodeMpegAudio(id,
-              graft.ops.MpegAudio.encodeMp2(pcm, 192)))
-          (id, nf, flacFp == srcFp,
-            mp2Fp.zip(flacFp).forall { case ((_, a), (_, b)) => a == b },
-            flacEnc.length < 2 * pcm.length)
-        }
-        .toDF("doc_id", "n_frames", "flac_matches_source",
-          "mp2_matches_flac", "flac_compressed")
-        .orderBy("doc_id")
-    }),
-
-    // X5 — MEDIA SNIFF + DISPATCH: the intake FRONT DOOR — a blob
-    // column with untrusted content types, classified by magic bytes
-    // (RIFF sub-typed by form fourcc; MPEG requires a full valid
-    // header so 0xFF runs don't misclassify) and routed through the
-    // matching real decoder into one unified census row. Unknown junk
-    // is COUNTED (units 0), not thrown — at intake the junk rate is a
-    // metric. Each doc cycles through all eight decodable types plus
-    // a garbage payload; every classification and unit count replays
-    // from the id scheme.
-    "x5_media_sniff" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 360)
-        .map { id =>
-          val (w, h) = (16, 16)
-          def pix(i: Int): Int = {
-            val bx = (i % w) / 8; val by = (i / w) / 8
-            ((id * 43 + bx * 19 + by * 77) % 256).toInt
-          }
-          val payload = (id % 10).toInt match {
-            case 0 => Multimodal.encodePng(w, h, 8, 0, Multimodal.packedSample(0, pix))
-            case 1 => Multimodal.encodeGif(w, h, 8, pix)
-            case 2 => Multimodal.encodeJpeg(w, h, pix)
-            case 3 => Multimodal.encodePgm(w, h, 255, pix)
-            case 4 => Multimodal.gzipCompress(
-              Array.fill[Byte]((100 + id % 50).toInt)('x'.toByte))
-            case 5 => Multimodal.encodeWav(8000,
-              i => ((id * 13 + i * 5) % 65536 - 32768).toInt,
-              (50 + id % 100).toInt)
-            case 6 => Multimodal.encodeAvi(w, h, 40000,
-              (0 until 2).map(j => Multimodal.encodeJpeg(w, h,
-                i => (pix(i) + j) % 256)))
-            case 7 => graft.ops.MpegAudio.syntheticStream(2, 96, 2)
-            case 8 => Multimodal.encodeZip(Seq(
-              (s"a$id.bin", Array.tabulate[Byte]((70 + id % 40).toInt)(
-                i => ((id + i) % 251).toByte), true),
-              (s"b$id.txt", Array.fill[Byte]((30 + id % 20).toInt)(
-                'y'.toByte), false)))
-            case _ => Array[Byte](0x00, 0x42, 0x13, 0x37, 0x00, 0x7F)
-          }
-          Multimodal.MediaRecord(id, payload, "application/octet-stream",
-            "xx")
-        }
-      Multimodal.sniffStats(recs).toDF()
-        .select(col("doc_id"), col("media_type"), col("n_units"))
-        .orderBy("doc_id")
-    }),
-
-    // X5 — ZIP ARCHIVE INGEST: the container wrapper multimodal dumps
-    // actually ship in, walked for real — EOCD scan, central
-    // directory, local-header cross-validation, stored AND deflated
-    // members, CRC-32 verified per member (loud on corruption, never
-    // silent garbage). Each doc's archive mixes stored/deflate
-    // members; the oracle independently rebuilds every member's text
-    // from the id formula and md5-matches the extracted bytes — the
-    // same content-digest discipline as the gunzip gate.
-    "x5_zip_entries" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 250)
-        .map { id =>
-          val nm = (1 + id % 3).toInt
-          val members = (0 until nm).map { j =>
-            val len = (40 + (id + j * 11) % 60).toInt
-            val content = Array.tabulate[Byte](len)(i =>
-              (97 + (id + j * 5 + i * 7) % 26).toByte)
-            (s"m${j}_$id.txt", content, (id + j) % 2 == 0)
-          }
-          Multimodal.MediaRecord(id, Multimodal.encodeZip(members),
-            "application/zip", "xx")
-        }
-      Multimodal.zipStats(recs).toDF().orderBy("doc_id", "entry_id")
-    }),
-
-    // X5 — .TAR.GZ ARCHIVE INGEST: the composed path a corpus.tar.gz
-    // actually takes — gunzip, then a real POSIX-ustar walk (per-
-    // header checksum verified with the field counted as spaces,
-    // octal size parse, 512-block padding, terminating zero blocks
-    // required; links/devices fail loudly by typeflag). Same member
-    // digest discipline as the ZIP gate.
-    "x5_targz_entries" -> ((s, dir) => {
-      import s.implicits._
-      val recs = kernelIds(s, dir, 250)
-        .map { id =>
-          val nm = (1 + id % 3).toInt
-          val members = (0 until nm).map { j =>
-            val len = (30 + (id + j * 13) % 50).toInt
-            (s"d$id/f$j.txt", Array.tabulate[Byte](len)(i =>
-              (97 + (id + j * 3 + i * 5) % 26).toByte))
-          }
-          Multimodal.MediaRecord(id,
-            Multimodal.gzipCompress(Multimodal.encodeTar(members)),
-            "application/gzip", "xx")
-        }
-      Multimodal.tarGzStats(recs).toDF().orderBy("doc_id", "entry_id")
-    }),
-
-    // X5 — GZIP ingest round trip (RFC 1952, the wrapper 100 TB text
-    // corpora actually arrive in): compress each doc's bytes, run the
-    // batched gunzip boundary, and certify the round trip against the
-    // UNCOMPRESSED truth the oracle computes directly (octet length +
-    // md5 of the original text). compresses_or_short pins that every
-    // doc ≥ 200 bytes genuinely shrinks — the fixture's shortest docs
-    // (~50 B) sit under gzip's ~20 B header+trailer floor, so a blanket
-    // "always smaller" pin would be dishonest, and was red until scoped.
-    "x5_gunzip_roundtrip" -> ((s, dir) => {
-      import s.implicits._
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, text) =>
-          val raw = text.getBytes("UTF-8")
-          val gz = Multimodal.gzipCompress(raw)
-          val back = Multimodal.gunzip(gz)
-          (id, back, gz.length < back.length || back.length < 200)
-        }.toDF("doc_id", "raw", "compresses_or_short")
-        .select(col("doc_id"), length(col("raw")).cast("long").as("n_bytes"),
-          md5(col("raw")).as("content_md5"), col("compresses_or_short"))
-        .orderBy("doc_id")
-    }),
-
-    // Running totals + lag over an ordered per-customer window.
-    "window_running_total" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_orderdate").asc, col("o_orderkey").asc)
-      Tables.orders(s, dir)
-        .withColumn("run_total",
-          sum(dec(col("o_totalprice"))).over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .cast("double"))
-        .withColumn("prev_price", lag(dec(col("o_totalprice")), 1).over(w).cast("double"))
-        .select(col("o_custkey"), col("o_orderkey"), col("run_total"), col("prev_price"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-
-    // Cube over status × priority (full grouping-set lattice).
-    "agg_cube_orders" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .cube(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .orderBy(col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first)
-    }),
-
-    // TPC-H Q17-style correlated aggregate, rearranged to exact scaled-
-    // long arithmetic (qty·100 as bigint; qty·2·cnt < sum): decimal in
-    // the per-row filter costs ~4s at sf0.1 (BigDecimal per row), longs
-    // are exact AND codegen-cheap; both engines compute identically.
-    "q17_small_quantity" -> ((s, dir) => {
-      val l = Tables.lineitem(s, dir)
-      val qs = round(col("l_quantity") * 100).cast("long")
-      val perPart = l.groupBy(col("l_partkey").as("pk"))
-        .agg(sum(qs).cast("long").as("sum_qs"), count(lit(1)).as("cnt"))
-      l.join(broadcast(perPart), col("l_partkey") === col("pk"))
-        .filter(qs * 2 * col("cnt") < col("sum_qs"))
-        .agg(sum(dec(col("l_extendedprice"))).cast("double").as("total_price"),
-          count(lit(1)).as("n_lines"))
-    }),
-
-    // TPC-H Q6 shape: pure scan-filter-agg — every predicate reaches the
-    // parquet reader (PushedFilters), no join, no shuffle beyond the
-    // one-row final agg. The "how fast can you not read data" query.
-    "q6_forecast_revenue" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= to_timestamp(lit("1996-01-01")) &&
-          col("l_shipdate") < to_timestamp(lit("1997-01-01")) &&
-          col("l_discount") >= 0.05 && col("l_discount") <= 0.07 &&
-          col("l_quantity") < 24)
-        .agg(sum(dec(col("l_extendedprice")) * dec(col("l_discount")))
-          .cast("double").as("revenue"))
-    }),
-
-    // TPC-H Q8 shape: market share of one supplier nation inside one
-    // customer region, per order year. Small dims (filtered part,
-    // supplier×nation, region×nation key list) broadcast; the
-    // orders/customer joins carry NO hint — at warehouse scale those
-    // sides exceed broadcast range, so they plan as shuffle joins on
-    // the key and AQE converts to broadcast when runtime sizes allow.
-    // Numerator and denominator are exact decimal sums; the share
-    // divides as double (identical IEEE inputs ⇒ identical quotient)
-    // and rounds for the gate.
-    "q8_market_share" -> ((s, dir) => {
-      val n1 = Tables.nation(s, dir)
-        .join(broadcast(Tables.region(s, dir).filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("n_nationkey").as("_cnk"))
-      val n2 = Tables.nation(s, dir)
-        .select(col("n_nationkey").as("_snk"), col("n_name").as("supp_nation"))
-      val c = Tables.customer(s, dir)
-        .join(broadcast(n1), col("c_nationkey") === col("_cnk"))
-        .select(col("c_custkey"))
-      val o = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= to_timestamp(lit("1995-01-01")) &&
-          col("o_orderdate") < to_timestamp(lit("1997-01-01")))
-      val p = Tables.part(s, dir).filter(col("p_type") === "PROMO")
-        .select(col("p_partkey"))
-      val sup = Tables.supplier(s, dir)
-        .join(broadcast(n2), col("s_nationkey") === col("_snk"))
-        .select(col("s_suppkey"), col("supp_nation"))
-      val vol = dec(col("l_extendedprice")) * (dec(lit(1)) - dec(col("l_discount")))
-      Tables.lineitem(s, dir)
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(c, col("o_custkey") === col("c_custkey"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(year(col("o_orderdate")).cast("long").as("o_year"))
-        .agg(round(
-          sum(when(col("supp_nation") === "NATION_5", vol).otherwise(dec(lit(0))))
-            .cast("double") /
-          sum(vol).cast("double"), 9).as("mkt_share"))
-        .orderBy("o_year")
-    }),
-
-    // TPC-H Q9 shape: profit by supplier nation × order year for a
-    // part-name LIKE family. The fixtures have no partsupp, so supply
-    // cost is a deterministic stand-in (5% of retail price per unit).
-    // Both terms stay two-factor decimal products (a third factor would
-    // exceed DuckDB's 38-digit multiply width); the 5% scales the exact
-    // cost sum AFTER aggregation, in double, identically in both engines.
-    "q9_product_profit" -> ((s, dir) => {
-      val p = Tables.part(s, dir).filter(col("p_name").like("%red%"))
-        .select(col("p_partkey"), col("p_retailprice"))
-      val sup = Tables.supplier(s, dir)
-        .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"), col("n_name").as("nation"))
-      val o = Tables.orders(s, dir)
-        .select(col("o_orderkey"), year(col("o_orderdate")).cast("long").as("o_year"))
-      Tables.lineitem(s, dir)
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("nation"), col("o_year"))
-        .agg(round(
-          sum(dec(col("l_extendedprice")) * (dec(lit(1)) - dec(col("l_discount"))))
-            .cast("double") -
-          lit(0.05) * sum(dec(col("p_retailprice")) * dec(col("l_quantity"))).cast("double"),
-          4).as("profit"))
-        .orderBy(col("nation"), col("o_year").desc)
-    }),
-
-    // TPC-H Q10 shape: top-20 customers by revenue lost to returns in a
-    // quarter — filtered fact joins broadcast dims, aggregates on the
-    // customer grain, TakeOrderedAndProject caps the result.
-    "q10_returned_customers" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-        .filter(col("o_orderdate") >= to_timestamp(lit("1996-07-01")) &&
-          col("o_orderdate") < to_timestamp(lit("1996-10-01")))
-        .select(col("o_orderkey"), col("o_custkey"))
-      val n = Tables.nation(s, dir).select(col("n_nationkey"), col("n_name"))
-      Tables.lineitem(s, dir).filter(col("l_returnflag") === "R")
-        .join(o, col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .groupBy(col("c_custkey"), col("c_name"), col("c_acctbal"), col("n_name"))
-        .agg(sum(dec(col("l_extendedprice")) * (dec(lit(1)) - dec(col("l_discount"))))
-          .cast("double").as("revenue"))
-        .orderBy(col("revenue").desc, col("c_custkey").asc)
-        .limit(20)
-    }),
-
-    // TPC-H Q13 shape: order-count distribution over ALL customers —
-    // the left join keeps zero-order customers (c_count=0), the filter
-    // lives in the join condition (a WHERE would silently drop them),
-    // then a second agg histograms the counts.
-    "q13_order_distribution" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-        .filter(col("o_orderpriority") =!= "1-URGENT")
-        .select(col("o_orderkey"), col("o_custkey"))
-      Tables.customer(s, dir)
-        .join(o, col("c_custkey") === col("o_custkey"), "left")
-        .groupBy(col("c_custkey"))
-        .agg(count(col("o_orderkey")).as("c_count"))
-        .groupBy(col("c_count"))
-        .agg(count(lit(1)).as("custdist"))
-        .orderBy(col("custdist").desc, col("c_count").desc)
-    }),
-
-    // TPC-H Q14 shape: promo revenue share in a month — conditional
-    // aggregation producing a ratio; exact decimal sums divide as double.
-    "q14_promo_revenue" -> ((s, dir) => {
-      val vol = dec(col("l_extendedprice")) * (dec(lit(1)) - dec(col("l_discount")))
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= to_timestamp(lit("1996-03-01")) &&
-          col("l_shipdate") < to_timestamp(lit("1996-04-01")))
-        .join(broadcast(Tables.part(s, dir).select(col("p_partkey"), col("p_type"))),
-          col("l_partkey") === col("p_partkey"))
-        .agg(round(lit(100.0) *
-          sum(when(col("p_type") === "PROMO", vol).otherwise(dec(lit(0)))).cast("double") /
-          sum(vol).cast("double"), 9).as("promo_revenue"))
-    }),
-
-    // TPC-H Q15 shape: supplier(s) hitting the quarter's max revenue —
-    // the revenue CTE aggregates once, its one-row max broadcasts back,
-    // and the equality compares EXACT decimals (a double total here
-    // could miss the max on a ULP and return zero rows).
-    "q15_top_supplier" -> ((s, dir) => {
-      val rev = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= to_timestamp(lit("1996-01-01")) &&
-          col("l_shipdate") < to_timestamp(lit("1996-04-01")))
-        .groupBy(col("l_suppkey").as("supplier_no"))
-        .agg(sum(dec(col("l_extendedprice")) * (dec(lit(1)) - dec(col("l_discount"))))
-          .as("_total_rev"))
-      val mx = rev.agg(max(col("_total_rev")).as("_mx"))
-      Tables.supplier(s, dir)
-        .join(rev, col("s_suppkey") === col("supplier_no"))
-        .join(broadcast(mx), col("_total_rev") === col("_mx"))
-        .select(col("s_suppkey"), col("s_name"),
-          col("_total_rev").cast("double").as("total_revenue"))
-        .orderBy("s_suppkey")
-    }),
-
-    // TPC-H Q2 shape: min-cost supplier per part. The testdata carries
-    // no partsupp table, so lineitem is the part↔supplier bridge and
-    // min(l_extendedprice) stands in for min(ps_supplycost). Q2's
-    // correlated-min subquery is expressed as a keyed window min +
-    // filter instead of the textbook aggregate-and-join-back: same
-    // rows (min of doubles is a selection, not a sum — the equality
-    // is cross-engine exact), but ONE fact scan and one shuffle on
-    // p_partkey, where the join-back form scans the fact twice (Spark
-    // has no cross-branch CSE) and sort-merge-joins the copies.
-    // Filtered dims broadcast; global top-k is TakeOrderedAndProject.
-    "sql_q2_min_cost_supplier" -> ((s, dir) => {
-      val sup = Tables.supplier(s, dir)
-        .join(broadcast(Tables.nation(s, dir)), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(Tables.region(s, dir).filter(col("r_name") === "ASIA")),
-          col("n_regionkey") === col("r_regionkey"))
-        .select(col("s_suppkey"), col("s_name"), col("s_acctbal"), col("n_name"))
-      val p = Tables.part(s, dir)
-        .filter(col("p_size") <= 15 && col("p_type") === "PROMO")
-        .select(col("p_partkey"), col("p_name"))
-      val offers = Tables.lineitem(s, dir)
-        .select(col("l_partkey"), col("l_suppkey"), col("l_extendedprice"))
-        .join(broadcast(p), col("l_partkey") === col("p_partkey"))
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-      val perPart = Window.partitionBy(col("p_partkey"))
-      offers
-        .withColumn("_min_cost", min(col("l_extendedprice")).over(perPart))
-        .filter(col("l_extendedprice") === col("_min_cost"))
-        .select(col("s_acctbal"), col("s_name"), col("n_name"),
-          col("p_partkey"), col("p_name"))
-        .distinct()
-        .orderBy(col("s_acctbal").desc, col("n_name"), col("s_name"), col("p_partkey"))
-        .limit(100)
-    }),
-
-    // TPC-H Q11 shape: parts whose inventory value from one nation's
-    // suppliers clears a threshold derived from the whole group set —
-    // group-by + HAVING against a scalar subquery. The threshold is
-    // relative to the MAX part value (within 4× of the best) rather
-    // than Q11's fixed fraction of the total: a fixed fraction of a
-    // total spread over ever-more parts empties out as the corpus
-    // grows, while a max-relative cut stays selective AND non-empty at
-    // every scale. The comparison cross-multiplies EXACT decimals — no
-    // decimal division whose scale rules differ between engines. The
-    // scalar is a one-row broadcast; its branch re-scans the fact
-    // (Spark has no cross-branch CSE) — two parallel pruned scans, the
-    // deliberate trade over a single-reducer global window at scale.
-    "sql_q11_important_parts" -> ((s, dir) => {
-      val sup = Tables.supplier(s, dir)
-        .join(broadcast(Tables.nation(s, dir).filter(col("n_name") === "NATION_3")),
-          col("s_nationkey") === col("n_nationkey"))
-        .select(col("s_suppkey"))
-      val byPart = Tables.lineitem(s, dir)
-        .join(broadcast(sup), col("l_suppkey") === col("s_suppkey"))
-        .groupBy(col("l_partkey").as("p_partkey"))
-        .agg(sum(dec(col("l_extendedprice"))).as("_value"))
-      val top = byPart.agg(max(col("_value")).as("_max_value"))
-      byPart.crossJoin(broadcast(top))
-        .filter(col("_value") * lit(4) > col("_max_value"))
-        .select(col("p_partkey"), col("_value").cast("double").as("part_value"))
-        .orderBy(col("part_value").desc, col("p_partkey"))
-    }),
-
-    // TPC-H Q12 shape: late-shipment priority matrix. No l_shipmode /
-    // commitdate in the testdata, so linestatus plays the mode and
-    // "late" = shipped >60 days after the order date; the shape is
-    // intact — join + date-window filter + CASE'd conditional counts.
-    "sql_q12_late_priority" -> ((s, dir) => {
-      val high = col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-      Tables.lineitem(s, dir)
-        .filter(col("l_shipdate") >= to_timestamp(lit("1997-01-01")) &&
-          col("l_shipdate") < to_timestamp(lit("1998-01-01")))
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .filter(col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 60 DAYS"))
-        .groupBy(col("l_linestatus"))
-        .agg(sum(when(high, 1L).otherwise(0L)).as("high_line_count"),
-          sum(when(high, 0L).otherwise(1L)).as("low_line_count"))
-        .orderBy("l_linestatus")
-    }),
-
-    // As-of join: for each purchase, the user's latest preceding click.
-    "asof_click_attribution" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select("event_id", "user_id", "event_type", "ts")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"), col("ts"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id"), col("user_id"), col("ts"))
-      graft.ops.AsOf.joinAsOf(purchases, clicks, "user_id", "ts", "ts",
-          leftId = "purchase_id", rightTieBreak = Seq("event_id"))
-        .select(col("purchase_id"), col("user_id"), col("asof_event_id").as("click_id"))
-        .orderBy("purchase_id")
-    }),
-
-    // Range join: activity burst — events within 7 days after each signup.
-    "range_events_after_signup" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select("event_id", "user_id", "event_type", "ts")
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("event_id").as("signup_id"), col("user_id"), col("ts"))
-      graft.ops.AsOf.rangeJoin(signups, ev, "user_id", "ts", "ts",
-          expr("INTERVAL 7 DAYS"))
-        .filter(col("r_event_id") =!= col("signup_id"))
-        .groupBy(col("signup_id"))
-        .agg(count(lit(1)).as("n_following"))
-        .orderBy("signup_id")
-    }),
-
-    // Set op: customers active in both years (INTERSECT).
-    "set_intersect_customers" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val a = o.filter(year(col("o_orderdate")) === 1995).select(col("o_custkey").as("custkey"))
-      val b = o.filter(year(col("o_orderdate")) === 1996).select(col("o_custkey").as("custkey"))
-      a.intersect(b).orderBy("custkey")
-    }),
-
-    // X4 — top-5 words (>3 chars) per language by occurrence.
-    "x4_top_words" -> ((s, dir) => {
-      val words = Tables.documents(s, dir)
-        .select(col("lang"), explode(split(lower(col("text")), "\\s+")).as("w"))
-        .filter(length(col("w")) > 3)
-        .groupBy(col("lang"), col("w"))
-        .agg(count(lit(1)).as("n"))
-      val rw = Window.partitionBy(col("lang")).orderBy(col("n").desc, col("w").asc)
-      words.withColumn("rk", row_number().over(rw).cast("long"))
-        .filter(col("rk") <= 5)
-        .select(col("lang"), col("w"), col("n"), col("rk"))
-        .orderBy("lang", "rk")
-    }),
-
-    // X4 — document length histogram (100-char buckets).
-    "x4_len_histogram" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .groupBy((floor(col("n_chars") / 100) * 100).cast("long").as("bucket"))
-        .agg(count(lit(1)).as("n_docs"),
-          min(col("n_chars")).cast("long").as("min_chars"),
-          max(col("n_chars")).cast("long").as("max_chars"))
-        .orderBy("bucket")
-    }),
-
-    // X1 embedding-cosine near-dup, hash-gated through a verdict row
-    // (threshold 0.3 ≈ p99.9 of the random-embedding fixture's pairwise
-    // cosine; a real corpus would use ~0.9). n_true_pairs comes from the
-    // in-query exact all-pairs sweep on a bounded subset — the oracle
-    // computes the same count in SQL — and the booleans pin precision 1
-    // (bucketing prunes, the exact cosine filter decides) and a 5%
-    // recall floor (sign-LSH with 4 planes on RANDOM vectors collides a
-    // true pair at ~1/16; measured 12-15% across SFs — the geometry of
-    // the fixture, not the index).
-    "x1_embedding_neardup" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir).filter(col("vec_id") < 1000)
-      val emitted = graft.ops.Similarity.embeddingNearDups(e,
-          "vec_id", "embedding", minCosine = 0.3, planes = 4)
-        .select(col("id_a"), col("id_b"), lit(1).as("_e"))
-      val truth = graft.ops.Similarity.exactNearDupPairs(e,
-          "vec_id", "embedding", minCosine = 0.3)
-        .select(col("id_a"), col("id_b"), lit(1).as("_t"))
-      val stats = truth.join(emitted, Seq("id_a", "id_b"), "full_outer")
-        .agg(count(col("_t")).as("n_true_pairs"),
-          sum(when(col("_t").isNotNull && col("_e").isNotNull, 1L).otherwise(0L)).as("_hit"),
-          sum(when(col("_e").isNotNull && col("_t").isNull, 1L).otherwise(0L)).as("_fp"))
-      e.agg(count(lit(1)).as("n_vecs")).crossJoin(stats)
-        .select(col("n_vecs"), col("n_true_pairs"),
-          (coalesce(col("_fp"), lit(0L)) === 0L).as("emitted_all_true"),
-          (coalesce(col("_hit"), lit(0L)) * 100 >= col("n_true_pairs") * 5)
-            .as("recall_floor_met"))
-    }),
-
-    // S5+S6+W2 composed: events → CSV → single-pass explicit-schema
-    // read-back → schema coercion → aggregate. The CSV hop is the
-    // reference's stage boundary; the oracle reads the original parquet,
-    // proving the round-trip is lossless under the coercion pipeline.
-    // readCsvAs (not inferSchema) keeps the load single-scan with native
-    // typed parsing: the coerce step is the schema authority, so the
-    // infer pass was a pure second read of the file (A/B: schema 0.5 s <
-    // infer 0.75 s < raw-strings 0.84 s warm; one fewer job cold).
-    "csv_roundtrip_load" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val sch = StructType(Seq(
-        StructField("event_id", LongType), StructField("user_id", LongType),
-        StructField("event_type", StringType), StructField("value", DoubleType)))
-      eventsRoundTrip(s, dir, "csv", Tables.writeCsv,
-        p => Tables.readCsvAs(s, p, sch), coerce = true)
-    }),
-
-    // Schema evolution at the storage layer: two parquet batches with
-    // different schemas (v2 adds event_type) union under a mergeSchema
-    // read — v1 rows surface NULL in the added column, no rewrite of
-    // old data. The everyday reality of a long-lived 100 TB corpus:
-    // columns arrive mid-life and historical files stay immutable. The
-    // oracle recomputes the same rollup from the unsplit source table.
-    "schema_evolution_merge" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_evo").toString
-      val ev = Tables.events(s, dir)
-      ev.filter(col("event_id") % 2 === 0)
-        .select(col("event_id"), col("user_id"), col("value"))
-        .write.mode("overwrite").parquet(s"$tmp/v1")
-      ev.filter(col("event_id") % 2 === 1)
-        .select(col("event_id"), col("user_id"), col("value"), col("event_type"))
-        .write.mode("overwrite").parquet(s"$tmp/v2")
-      s.read.option("mergeSchema", "true").parquet(s"$tmp/v1", s"$tmp/v2")
-        .groupBy(coalesce(col("event_type"), lit("_pre_schema_")).as("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec(col("value"))).cast("double").as("sum_v"))
-        .orderBy("event_type")
-    }),
-
-    // TPC-H Q7-style volume shipping: two nation roles, year breakdown.
-    "q7_volume_shipping" -> ((s, dir) => {
-      val n1 = Tables.nation(s, dir).select(col("n_nationkey").as("supp_nk"), col("n_name").as("supp_nation"))
-      val n2 = Tables.nation(s, dir).select(col("n_nationkey").as("cust_nk"), col("n_name").as("cust_nation"))
-      val l = Tables.lineitem(s, dir)
-        .filter(col("l_shipdate").between(to_timestamp(lit("1995-01-01")), to_timestamp(lit("1996-12-31"))))
-      l.join(Tables.supplier(s, dir), col("l_suppkey") === col("s_suppkey"))
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n1), col("s_nationkey") === col("supp_nk"))
-        .join(broadcast(n2), col("c_nationkey") === col("cust_nk"))
-        .filter(col("supp_nation") =!= col("cust_nation"))
-        .filter(col("supp_nk") < 3 || col("cust_nk") < 3)
-        .groupBy(col("supp_nation"), col("cust_nation"), year(col("l_shipdate")).cast("long").as("l_year"))
-        .agg(sum(dec(col("l_extendedprice")) * (dec(lit(1)) - dec(col("l_discount"))))
-          .cast("double").as("revenue"))
-        .orderBy("supp_nation", "cust_nation", "l_year")
-    }),
-
-    // Data profiling: per-column stats in one pass (null/distinct/range).
-    "profile_events" -> ((s, dir) => {
-      graft.ops.Profiling.summarize(Tables.events(s, dir),
-          Seq("event_id", "event_type", "value", "ts"))
-        .orderBy("col_name")
-    }),
-
-    // MCV histogram (Profiling.mostCommonValues) — the selectivity half
-    // of ANALYZE-style optimizer stats: per-column top-k value
-    // frequencies via value-grain hash agg + O(k) bounded top-k (no
-    // per-column sort; each branch scans only its own column). Nulls
-    // planted by formula (event_type='error' → NULL) prove the
-    // histogram excludes them; uniform user_id counts force deep
-    // count-ties resolved by the pinned string-asc tie-break.
-    "profile_mcv" -> ((s, dir) => {
-      val src = Tables.events(s, dir).select(
-        when(col("event_type") === "error", lit(null).cast("string"))
-          .otherwise(col("event_type")).as("etype"),
-        col("user_id"))
-      graft.ops.Profiling.mostCommonValues(src, Seq("etype", "user_id"), k = 4)
-        .orderBy("col_name", "rank")
-    }),
-
-    // SQL surface: TPC-H Q4-shape EXISTS subquery through spark.sql —
-    // the engine's second entry path next to the DataFrame API.
-    "sql_q4_priority" -> ((s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("orders_v")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_v")
-      s.sql(
-        """SELECT o_orderpriority, count(*) AS order_count
-          |FROM orders_v
-          |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-          |  AND o_orderdate < TIMESTAMP '1996-07-01'
-          |  AND EXISTS (SELECT 1 FROM lineitem_v
-          |              WHERE l_orderkey = o_orderkey AND l_quantity > 30)
-          |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin)
-    }),
-
-    // SQL surface: NOT IN three-valued logic. A NULL in the subquery
-    // list makes NOT IN unknowable for every non-matching row — the
-    // poisoned count MUST be 0, while the null-filtered form is the
-    // real anti-join. The classic silent-wrong-answer trap an engine
-    // must reproduce exactly, not "fix".
-    "sql_notin_3vl" -> ((s, dir) => {
-      Tables.customer(s, dir).createOrReplaceTempView("customer_v")
-      Tables.orders(s, dir).createOrReplaceTempView("orders_v")
-      s.sql(
-        """SELECT
-          | (SELECT count(*) FROM customer_v
-          |  WHERE c_custkey NOT IN (SELECT nullif(o_custkey, 7) FROM orders_v))
-          |   AS cnt_null_poisoned,
-          | (SELECT count(*) FROM customer_v
-          |  WHERE c_custkey NOT IN (SELECT o_custkey FROM orders_v WHERE o_custkey <> 7))
-          |   AS cnt_clean""".stripMargin)
-    }),
-
-    // Pivot: per-user-bucket event-type count matrix.
-    "pivot_event_counts" -> ((s, dir) => {
-      val types = Seq("click", "error", "purchase", "signup", "view")
-      Tables.events(s, dir)
-        .groupBy((col("user_id") % 10).as("user_bucket"))
-        .pivot("event_type", types)
-        .agg(count(lit(1)))
-        .select(col("user_bucket") +:
-          types.map(t => coalesce(col(t), lit(0L)).cast("long").as(t)): _*)
-        .orderBy("user_bucket")
-    }),
-
-    // Array aggregation: sorted distinct event types per user, as a
-    // string (arrays hash differently across readers; string is stable).
-    "array_event_types" -> ((s, dir) => {
-      Tables.events(s, dir)
-        .groupBy(col("user_id"))
-        .agg(concat_ws(",", sort_array(collect_set(col("event_type")))).as("types"),
-          countDistinct(col("event_type")).as("n_types"))
-        .orderBy("user_id")
-    }),
-
-    // Table generator: posexplode of tokens with positions.
-    "posexplode_tokens" -> ((s, dir) => {
-      Tables.documents(s, dir)
-        .filter(col("doc_id") < 20)
-        .select(col("doc_id"), posexplode(split(col("text"), " ")))
-        .select(col("doc_id"), col("pos").cast("long").as("pos"), col("col").as("tok"))
-        .orderBy("doc_id", "pos")
-    }),
-
-    // Exact median (interpolating percentile) per order status.
-    "agg_median_price" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .groupBy(col("o_orderstatus"))
-        .agg(round(expr("percentile(o_totalprice, 0.5)"), 2).as("median_price"),
-          count(lit(1)).as("n"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // Interpolated quartiles + IQR per group (percentile with linear
-    // interpolation — the percentile_cont semantics; exact, not the GK
-    // sketch, which sketch_approx_events covers).
-    "agg_quartiles_price" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .groupBy(col("o_orderpriority"))
-        .agg(round(expr("percentile(o_totalprice, 0.25)"), 3).as("q1"),
-          round(expr("percentile(o_totalprice, 0.75)"), 3).as("q3"),
-          round(expr("percentile(o_totalprice, 0.75) - percentile(o_totalprice, 0.25)"), 3).as("iqr"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // X2 scale path — IVF ANN, hash-gated through the verdict table.
-    // 3-of-16 probes on random vectors lands a steady ~44% of the exact
-    // pairs at every SF (measured .001/.01/.1); floor 30% leaves noise
-    // margin while still catching a probe-path or list-assignment break.
-    "x2_ann_ivf" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val q = annRoster(e)
-      val ann = graft.ops.Similarity.ivfTopK(q, e, "vec_id", "embedding", 5,
-        nCentroids = 16, nprobe = 3)
-      Similarity.annVerdict(q, e, "vec_id", "embedding", 5, ann,
-          minOverlapPct = 30)
-        .orderBy("qid")
-    }),
-
-    // IVF with TRAINED centroids (distributed deterministic k-means)
-    // instead of the stub quantizer — the production IVF pipeline:
-    // train on the corpus, assign lists, probe.
-    "x2_ann_ivf_kmeans" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val q = annRoster(e)
-      val cents = graft.ops.Similarity.trainKMeans(e, "vec_id", "embedding",
-        k = 16, iters = 3)
-      val ann = graft.ops.Similarity.ivfTopKWith(q, e, "vec_id", "embedding", 5,
-        cents, nprobe = 6)
-      // nprobe 3 → 6 after the round-9 recall sweep: on the adversarial
-      // random fixture the measured band rose 48/40/48 → 76/64/73 %
-      // across SFs for 2× probe compute (6 of 16 lists), so the floor
-      // is pinned at 50%. The clustered fixture gates 90%+ separately.
-      Similarity.annVerdict(q, e, "vec_id", "embedding", 5, ann,
-          minOverlapPct = 50)
-        .orderBy("qid")
-    }),
-
-    // Grouping sets: explicit lattice (status totals, priority totals,
-    // grand total) — the generalized machinery behind rollup/cube.
-    "agg_grouping_sets" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .groupingSets(
-          Seq(Seq(col("o_orderstatus")), Seq(col("o_orderpriority")), Seq()),
-          col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec(col("o_totalprice"))).cast("double").as("sum_price"))
-        .orderBy(col("o_orderstatus").asc_nulls_first, col("o_orderpriority").asc_nulls_first)
-    }),
-
-    // Conditional aggregation (FILTER-clause shape): several sliced
-    // aggregates from one scan — no self-joins, no second pass.
-    "agg_filtered_counts" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .groupBy(year(col("o_orderdate")).cast("long").as("y"))
-        .agg(count(lit(1)).as("n"),
-          count(when(col("o_orderstatus") === "F", 1)).as("n_finished"),
-          count(when(col("o_orderpriority").startsWith("1"), 1)).as("n_urgent"),
-          sum(when(col("o_orderstatus") === "O", dec(col("o_totalprice"))))
-            .cast("double").as("open_price"))
-        .orderBy("y")
-    }),
-
-    // Full outer join: per-user activity snapshots for two half-months
-    // merged with COALESCE (rows missing on either side survive).
-    "join_full_outer_activity" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val split = to_timestamp(lit("2024-01-15"))
-      val a = ev.filter(col("ts") < split)
-        .groupBy(col("user_id").as("ua")).agg(count(lit(1)).as("n_early"))
-      val b = ev.filter(col("ts") >= split)
-        .groupBy(col("user_id").as("ub")).agg(count(lit(1)).as("n_late"))
-      a.join(b, col("ua") === col("ub"), "full_outer")
-        .select(coalesce(col("ua"), col("ub")).as("user_id"),
-          coalesce(col("n_early"), lit(0L)).as("n_early"),
-          coalesce(col("n_late"), lit(0L)).as("n_late"))
-        .orderBy("user_id")
-    }),
-
-    // Right outer join: every order keeps a row even with zero matching
-    // high-value lines (completes the join-type matrix alongside
-    // left/full/semi/anti/cross).
-    "join_right_outer" -> ((s, dir) => {
-      val l = Tables.lineitem(s, dir).filter(col("l_quantity") > 45)
-        .select(col("l_orderkey"), col("l_extendedprice"))
-      l.join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"), "right")
-        .groupBy(col("o_orderkey"))
-        .agg(count(col("l_orderkey")).as("n_big_lines"),
-          sum(dec(col("l_extendedprice"))).cast("double").as("big_value"))
-        .orderBy("o_orderkey")
-    }),
-
-    // Window value functions: ntile / percent_rank / cume_dist /
-    // first / last over an unbounded frame (total order ⇒ deterministic).
-    "window_value_functions" -> ((s, dir) => {
-      val w = Window.partitionBy(col("o_custkey"))
-        .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      val wFull = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-      Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"),
-          ntile(4).over(w).cast("long").as("quartile"),
-          round(percent_rank().over(w), 6).as("pct_rank"),
-          round(cume_dist().over(w), 6).as("cdist"),
-          first(col("o_orderkey")).over(w).as("biggest_order"),
-          last(col("o_orderkey")).over(wFull).as("smallest_order"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-
-    // TPC-H Q18: large-volume orders — HAVING-filtered agg joined back.
-    // The agg shrinks to a handful of keys after the filter → broadcast
-    // it into orders; at 100 TB the big side never shuffles for the join.
-    "q18_large_orders" -> ((s, dir) => {
-      val big = Tables.lineitem(s, dir)
-        .groupBy(col("l_orderkey"))
-        .agg(sum(dec(col("l_quantity"))).as("tq"))
-        .filter(col("tq") > 300)
-        .withColumn("total_qty", col("tq").cast("double")).drop("tq")
-      Tables.orders(s, dir).join(broadcast(big), col("o_orderkey") === col("l_orderkey"))
-        .join(Tables.customer(s, dir), col("o_custkey") === col("c_custkey"))
-        .select(col("c_custkey"), col("c_name"), col("o_orderkey"),
-          col("o_totalprice"), col("total_qty"))
-        .orderBy(col("total_qty").desc, col("o_orderkey").asc)
-    }),
-
-    // TPC-H Q19 shape: OR-of-ANDs join predicate — Catalyst extracts the
-    // common l_partkey=p_partkey equi-condition and pushes the per-branch
-    // part filters below the broadcast join.
-    "q19_disjunctive_filter" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .join(broadcast(Tables.part(s, dir)), col("l_partkey") === col("p_partkey"))
-        .filter(
-          (col("p_brand") === "Brand#12" && col("p_size").between(1, 15) &&
-            col("l_quantity").between(1, 11)) ||
-          (col("p_brand") === "Brand#23" && col("p_size").between(1, 25) &&
-            col("l_quantity").between(10, 20)) ||
-          (col("p_brand") === "Brand#3" && col("p_size").between(1, 35) &&
-            col("l_quantity").between(20, 30)))
-        .agg(sum(dec(col("l_extendedprice")) * (dec(lit(1)) - dec(col("l_discount"))))
-          .cast("double").as("revenue"), count(lit(1)).as("n_lines"))
-    }),
-
-    // Correlated scalar subqueries through the SQL surface (Catalyst
-    // decorrelates to aggregates+joins); predicate rearranged to exact
-    // arithmetic: price·cnt > 2·sum instead of price > 2·avg.
-    "sql_correlated_scalar" -> ((s, dir) => {
-      Tables.orders(s, dir).createOrReplaceTempView("orders_cs")
-      s.sql(
-        """SELECT o_orderkey, o_custkey, o_totalprice
-          |FROM orders_cs o
-          |WHERE CAST(o_totalprice AS DECIMAL(18,2)) *
-          |      (SELECT count(*) FROM orders_cs o2 WHERE o2.o_custkey = o.o_custkey)
-          |    > 2 * (SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(38,2))
-          |           FROM orders_cs o3 WHERE o3.o_custkey = o.o_custkey)
-          |ORDER BY o_orderkey""".stripMargin)
-    }),
-
-    // TPC-H q21 shape: correlated EXISTS + NOT EXISTS on the same fact
-    // table — "the supplier solely to blame on shared orders". Catalyst
-    // decorrelates both into left-semi and left-anti joins on
-    // l_orderkey; neither subquery ever executes per-row.
-    "sql_q21_sole_blame" -> ((s, dir) => {
-      Tables.supplier(s, dir).createOrReplaceTempView("supplier_b")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_b")
-      Tables.orders(s, dir).createOrReplaceTempView("orders_b")
-      s.sql(
-        """SELECT s_name, count(*) AS numwait
-          |FROM supplier_b, lineitem_b l1, orders_b
-          |WHERE s_suppkey = l1.l_suppkey
-          |  AND o_orderkey = l1.l_orderkey
-          |  AND o_orderstatus = 'F'
-          |  AND l1.l_returnflag = 'R'
-          |  AND EXISTS (SELECT 1 FROM lineitem_b l2
-          |              WHERE l2.l_orderkey = l1.l_orderkey
-          |                AND l2.l_suppkey <> l1.l_suppkey)
-          |  AND NOT EXISTS (SELECT 1 FROM lineitem_b l3
-          |                  WHERE l3.l_orderkey = l1.l_orderkey
-          |                    AND l3.l_suppkey <> l1.l_suppkey
-          |                    AND l3.l_returnflag = 'R')
-          |GROUP BY s_name
-          |ORDER BY numwait DESC, s_name
-          |LIMIT 20""".stripMargin)
-    }),
-
-    // TPC-H q22 shape: uncorrelated scalar subquery (global threshold)
-    // + correlated NOT EXISTS — "well-funded customers with no recent
-    // orders". DECIMAL threshold on both sides so the boundary
-    // comparison is exact in both engines.
-    "sql_q22_idle_balance" -> ((s, dir) => {
-      Tables.customer(s, dir).createOrReplaceTempView("customer_i")
-      Tables.orders(s, dir).createOrReplaceTempView("orders_i")
-      s.sql(
-        """SELECT c_mktsegment AS segment, count(*) AS numcust,
-          |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-          |FROM customer_i
-          |WHERE CAST(c_acctbal AS DECIMAL(18,2)) >
-          |      (SELECT CAST(avg(CAST(c_acctbal AS DECIMAL(18,2))) AS DECIMAL(18,6))
-          |       FROM customer_i WHERE c_acctbal > 0)
-          |  AND NOT EXISTS (SELECT 1 FROM orders_i WHERE o_custkey = c_custkey
-          |                  AND o_orderdate >= TIMESTAMP '2000-01-01')
-          |GROUP BY c_mktsegment
-          |ORDER BY segment""".stripMargin)
-    }),
-
-    // TPC-H q16 shape: NOT IN subquery (null-safe anti join) + count
-    // DISTINCT per group — supplier diversity per (brand, size) after
-    // excluding suppliers in arrears.
-    "sql_q16_supplier_cnt" -> ((s, dir) => {
-      Tables.part(s, dir).createOrReplaceTempView("part_sc")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_sc")
-      Tables.supplier(s, dir).createOrReplaceTempView("supplier_sc")
-      s.sql(
-        """SELECT p_brand, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-          |FROM lineitem_sc JOIN part_sc ON p_partkey = l_partkey
-          |WHERE p_brand <> 'Brand#13'
-          |  AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
-          |  AND l_suppkey NOT IN
-          |      (SELECT s_suppkey FROM supplier_sc WHERE s_acctbal < 0)
-          |GROUP BY p_brand, p_size
-          |ORDER BY supplier_cnt DESC, p_brand, p_size""".stripMargin)
-    }),
-
-    // TPC-H q20 shape: nested IN subqueries with a grouped HAVING
-    // threshold inside — "suppliers who moved real volume of the
-    // selected parts from a region". Exercises IN→semi-join
-    // decorrelation at two nesting levels.
-    "sql_q20_volume_suppliers" -> ((s, dir) => {
-      Tables.supplier(s, dir).createOrReplaceTempView("supplier_vs")
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_vs")
-      Tables.part(s, dir).createOrReplaceTempView("part_vs")
-      Tables.nation(s, dir).createOrReplaceTempView("nation_vs")
-      Tables.region(s, dir).createOrReplaceTempView("region_vs")
-      s.sql(
-        """SELECT s_name, CAST(round(s_acctbal * 100) AS BIGINT) AS acctbal_cents
-          |FROM supplier_vs
-          |WHERE s_suppkey IN (
-          |    SELECT l_suppkey FROM lineitem_vs
-          |    WHERE l_partkey IN
-          |        (SELECT p_partkey FROM part_vs WHERE p_name LIKE 'red%')
-          |      AND l_shipdate >= TIMESTAMP '1996-01-01'
-          |      AND l_shipdate < TIMESTAMP '1998-01-01'
-          |    GROUP BY l_suppkey
-          |    HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 50)
-          |  AND s_nationkey IN (
-          |    SELECT n_nationkey FROM nation_vs
-          |    WHERE n_regionkey IN
-          |        (SELECT r_regionkey FROM region_vs WHERE r_name = 'ASIA'))
-          |ORDER BY s_name""".stripMargin)
-    }),
-
-    // Recursive CTE (Spark 4 WITH RECURSIVE): ancestry over a synthetic
-    // tree on dense customer keys (parent = k div 10, roots = keys 0-9)
-    // — every customer reached top-down, per-depth census with id/root
-    // sums as the membership checksum. Spark executes the recursion as
-    // iterated distributed joins against the previous step's frontier
-    // (depth ≤ log10(keyspace), each step one equi-join); only UNION ALL
-    // recursion is supported on this runtime, so the recursive member
-    // must be acyclic BY CONSTRUCTION: key 0 is its own div-10 parent,
-    // and without the `>= 10` guard both engines re-derive it forever
-    // (Spark stops at RECURSION_LEVEL_LIMIT; DuckDB just spins).
-    // Integer-division SIGN semantics pinned as data: Spark's DIV and
-    // DuckDB's // both truncate toward zero, and % follows the
-    // dividend's sign — the convention every exact-integer op in this
-    // repo leans on (Holt's negative trends found it the hard way);
-    // pmod's always-non-negative form is the floor-mod twin. A future
-    // engine/version flipping any of these breaks this gate first.
-    "sql_intdiv_semantics" -> ((s, dir) => {
-      Tables.lineitem(s, dir).createOrReplaceTempView("lineitem_idv")
-      s.sql(
-        """SELECT l_orderkey, l_linenumber,
-          |  CAST(l_quantity AS BIGINT) - 25 AS x,
-          |  (CAST(l_quantity AS BIGINT) - 25) DIV 7 AS x_div,
-          |  (CAST(l_quantity AS BIGINT) - 25) % 7 AS x_mod,
-          |  pmod(CAST(l_quantity AS BIGINT) - 25, 7) AS x_pmod
-          |FROM lineitem_idv WHERE l_orderkey <= 200
-          |ORDER BY l_orderkey, l_linenumber""".stripMargin)
-    }),
-
-    // Fixed-width text interchange — the mainframe/enterprise flat-file
-    // format beside CSV/JSONL/XML: write events as zero-padded
-    // fixed-offset lines (money as integer cents — fixed width and
-    // float formatting don't mix), read back by column offsets, and
-    // prove nothing was lost against the oracle's DIRECT aggregation
-    // of the source table.
-    "fixedwidth_roundtrip_load" -> ((s, dir) => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_fw").toString
-      val ev = Tables.events(s, dir)
-      val line = concat(
-        lpad(col("event_id").cast("string"), 12, "0"),
-        lpad(col("user_id").cast("string"), 10, "0"),
-        rpad(col("event_type"), 10, " "),
-        lpad(expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-          .cast("string"), 12, "0"))
-      ev.select(line.as("value")).write.mode("overwrite").text(tmp)
-      s.read.text(tmp).select(
-          expr("CAST(substring(value, 1, 12) AS BIGINT)").as("event_id"),
-          expr("CAST(substring(value, 13, 10) AS BIGINT)").as("user_id"),
-          expr("rtrim(substring(value, 23, 10))").as("event_type"),
-          expr("CAST(substring(value, 33, 12) AS BIGINT)").as("value_cents"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum(col("value_cents")).as("cents"),
-          countDistinct(col("user_id")).as("users"))
-        .orderBy("event_type")
-    }),
-
-    // ANSI LATERAL correlated subquery — the "top-N per outer row"
-    // form; Catalyst decorrelates the ranked correlated subquery into
-    // a keyed window + join instead of rescanning orders per customer.
-    // Raw doubles ride through untouched (no aggregation), so the hash
-    // is engine-stable without a DECIMAL cast. (The nation-grain
-    // sibling under the name sql_lateral_topn silently SHADOWED this
-    // map entry for a round — same Map key twice, last one wins; the
-    // QueriesSmokeSpec duplicate-key guard now pins the whole class.)
-    "sql_lateral_topn_orders" -> ((s, dir) => {
-      Tables.customer(s, dir).createOrReplaceTempView("customer_lj")
-      Tables.orders(s, dir).createOrReplaceTempView("orders_lj")
-      s.sql(
-        """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-          |FROM customer_lj c,
-          |LATERAL (
-          |  SELECT o_orderkey, o_totalprice
-          |  FROM orders_lj o WHERE o.o_custkey = c.c_custkey
-          |  ORDER BY o_totalprice DESC, o_orderkey ASC LIMIT 2) t
-          |WHERE c.c_custkey <= 200
-          |ORDER BY c.c_custkey, t.o_totalprice DESC, t.o_orderkey""".stripMargin)
-    }),
-
-    "sql_recursive_tree" -> ((s, dir) => {
-      Tables.customer(s, dir).createOrReplaceTempView("customer_rt")
-      s.sql(
-        """WITH RECURSIVE chain AS (
-          |  SELECT c_custkey AS k, c_custkey AS root, 0 AS depth
-          |  FROM customer_rt WHERE c_custkey <= 9
-          |  UNION ALL
-          |  SELECT c.c_custkey, chain.root, chain.depth + 1
-          |  FROM customer_rt c JOIN chain ON c.c_custkey DIV 10 = chain.k
-          |  WHERE c.c_custkey >= 10
-          |)
-          |SELECT depth, count(*) AS n, CAST(sum(k) AS BIGINT) AS sum_k,
-          |  CAST(sum(root) AS BIGINT) AS sum_root
-          |FROM chain GROUP BY depth ORDER BY depth""".stripMargin)
-    }),
-
-    // listagg WITHIN GROUP (Spark 4 / ANSI 2023 ordered string agg):
-    // deterministic because the per-group order is total.
-    "sql_listagg_nations" -> ((s, dir) => {
-      Tables.nation(s, dir).createOrReplaceTempView("nation_la")
-      Tables.region(s, dir).createOrReplaceTempView("region_la")
-      s.sql(
-        """SELECT r_name, listagg(n_name, ',') WITHIN GROUP (ORDER BY n_name) AS nations
-          |FROM nation_la JOIN region_la ON n_regionkey = r_regionkey
-          |GROUP BY r_name ORDER BY r_name""".stripMargin)
-    }),
-
-    // Correlated LATERAL subquery with ORDER BY + LIMIT — per-nation
-    // top-2 customers. The lateral decorrelates to a window-style
-    // group-limit, not per-row subquery execution.
-    "sql_lateral_topn" -> ((s, dir) => {
-      Tables.nation(s, dir).createOrReplaceTempView("nation_lt")
-      Tables.customer(s, dir).createOrReplaceTempView("customer_lt")
-      s.sql(
-        """SELECT n_name, c.c_custkey,
-          |  CAST(round(c.c_acctbal * 100) AS BIGINT) AS acctbal_cents
-          |FROM nation_lt, LATERAL (
-          |  SELECT c_custkey, c_acctbal
-          |  FROM customer_lt
-          |  WHERE c_nationkey = n_nationkey
-          |  ORDER BY c_acctbal DESC, c_custkey
-          |  LIMIT 2) c
-          |ORDER BY n_name, c_acctbal DESC, c_custkey""".stripMargin)
-    }),
-
-    // Partial-aggregate maintenance (ops.Reagg): daily partials per
-    // event type folded into MONTHLY aggregates without re-touching raw
-    // facts. The oracle aggregates raw events directly at month grain —
-    // equality proves the partials are correctly reaggregable (and that
-    // avg is derived from merged sum÷count, never avg-of-avgs).
-    // Market-basket pair lift at brand grain (which brands co-occur in
-    // an order beyond what popularity predicts) — exact integer lift
-    // micros, Apriori minSupport floor, hub-style basket cap. Brand
-    // grain keeps supports meaningful at every SF where raw-part pairs
-    // would be near-singletons.
-    "agg_basket_lift" -> ((s, dir) => {
-      val baskets = Tables.lineitem(s, dir)
-        .join(Tables.part(s, dir), col("l_partkey") === col("p_partkey"))
-        .select(col("l_orderkey").as("bk"), col("p_brand").as("it"))
-      graft.ops.Reagg.basketLift(baskets, "bk", "it", minSupport = 5)
-        .orderBy("a", "b")
-    }),
-
-    // Rolling 7-day distinct users (the WAU curve) — the one rolling
-    // metric a window frame cannot express (distinct doesn't decompose
-    // over frames): daily-grain dedup, ×7 narrow window-end expansion,
-    // one keyed distinct count. Ramp-out tail windows included by
-    // documented contract.
-    "events_rolling_wau" -> ((s, dir) => {
-      graft.ops.Reagg.rollingDistinct(Tables.events(s, dir), "ts", "user_id",
-          days = 7)
-        .orderBy("window_end")
-    }),
-
-    // ABC / Pareto classification of customers by revenue: cumulative
-    // share through the distributed prefix-sum (range exchange + O(P)
-    // driver rows — never a single-reducer window), class verdicts as
-    // exact integer cross-multiplications on cents; the oracle's
-    // window-form replay certifies the cut boundaries inclusively.
-    "agg_abc_customers" -> ((s, dir) => {
-      graft.ops.Reagg.abcClasses(Tables.orders(s, dir), "o_custkey",
-          expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-        .orderBy("o_custkey")
-    }),
-
-    // RFM segmentation (Reagg.rfmSegments) — recency/frequency/monetary
-    // quintile scores per customer, each from the distributed-ntile
-    // prefix-sum family (three range exchanges at CUSTOMER grain; the
-    // fact table aggregates once; no global Window). All three measures
-    // are exact integers (timestamp, count, cents), orders are total
-    // with the custkey tie-break, so the ANSI-NTILE window replay
-    // matches cell-for-cell including the segment code.
-    "agg_rfm_segments" -> ((s, dir) => {
-      graft.ops.Reagg.rfmSegments(
-          Tables.orders(s, dir).select(col("o_custkey"), col("o_orderdate"),
-            expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-              .as("cents")),
-          "o_custkey", "o_orderdate", col("cents"))
-        .orderBy("o_custkey")
-    }),
-
-    "agg_reaggregate_monthly" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val daily = Reagg.partials(ev, Seq("event_type"), to_date(col("ts")), col("value"))
-      Reagg.mergeToCoarser(daily, Seq("event_type"), date_trunc("month", col("bucket")))
-        .select(col("bucket").as("month_start"), col("event_type"),
-          col("n"), col("total").cast("double").as("total"),
-          col("mn"), col("mx"),
-          round(col("total").cast("double") / col("n"), 6).as("avg_v"))
-        .orderBy("month_start", "event_type")
-    }),
-
-    // Forward as-of join: each signup matched to the user's NEXT
-    // purchase at-or-after it (conversion latency) — the mirror of
-    // asof_click_attribution's backward direction. Equi-join + min_by
-    // hash agg; no window sort.
-    "asof_forward_conversion" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("event_id").as("signup_id"), col("user_id"), col("ts").as("signup_ts"))
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"), col("event_id").as("p_id"))
-      graft.ops.AsOf.joinAsOfForward(signups, purchases, "user_id",
-          "signup_ts", "p_ts", "signup_id", Seq("p_id"))
-        .select(col("signup_id"), col("user_id"), col("signup_ts"),
-          col("asof_p_ts").as("next_purchase_ts"),
-          col("asof_p_id").as("next_purchase_id"))
-        .orderBy("signup_id")
-    }),
-
-    // Batch sessionization (gaps-and-islands op) — the at-rest twin of
-    // the streaming session window, for backfills over stored corpora.
-    // Keyed windows only: each task sorts one user's events, never the
-    // corpus. Same oracle semantics as stream_sessionize.
-    "batch_sessionize" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("user_id"), col("ts"), col("value"), col("event_id"))
-      graft.ops.TimeSeries.sessionize(ev, "user_id", "ts", 1800L, Seq("event_id"))
-        .groupBy(col("user_id"), col("session_id"))
-        .agg(min(col("ts")).as("session_start"),
-          (max(col("ts")) + expr("INTERVAL 30 MINUTE")).as("session_end"),
-          count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_v"))
-        .drop("session_id")
-        .orderBy("user_id", "session_start")
-    }),
-
-    // Engine-NATIVE sessionization (session_window in batch GROUP BY)
-    // — shares batch_sessionize's gaps-and-islands twin. The two forms
-    // differ ONLY at an exact diff == gap boundary (native merges,
-    // islands splits — measured, pinned in TimeSeriesSpec); the
-    // fixture's microsecond timestamps never land there, so the shared
-    // hash certifies agreement on every boundary this data has.
-    "batch_session_window" -> ((s, dir) => {
-      graft.ops.TimeSeries.sessionWindowAgg(
-          Tables.events(s, dir), "user_id", "ts", "value", gapMinutes = 30)
-        .orderBy("user_id", "session_start")
-    }),
-
-    // Capstone composition — the corpus-to-training-shards pipeline in
-    // one dataflow: quality gate → exact content dedup keeping the
-    // surviving row (hash-agg min_by — no join-back, so the corpus and
-    // its per-row analysis are computed in ONE scan) → token-budget
-    // shard assignment (distributed prefix sum) → shard summary. Every
-    // stage is an op gated elsewhere; this gates their COMPOSITION
-    // against one SQL oracle.
-    "pipeline_corpus_to_shards" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val nt = TextAnalysis.tokenCount(col("text"))
-      val nc = length(col("text")).cast("long")
-      val stops = TextAnalysis.wordOccurrences(lower(col("text")), TextAnalysis.englishStopwords)
-      val weighted = Dedup.survivorsByContent(
-        d.filter(TextAnalysis.qualityGate(nt, nc, stops))
-          .select(col("doc_id"), col("text"), nt.as("w")),
-        "text", "doc_id", Seq("w"))
-      graft.ops.Packing.assignShards(weighted, "doc_id", "w", 2000L)
-        .groupBy(col("shard"))
-        .agg(count(lit(1)).as("n_docs"), sum(col("w")).as("total_tokens"))
-        .orderBy("shard")
-    }),
-
-    // Share-of-total (ratio_to_report) WITHOUT a global window: a
-    // one-partition `sum() OVER ()` is the classic scale trap; the
-    // scale-safe form is two hash aggs + a one-row broadcast.
-    "agg_share_of_total" -> ((s, dir) => {
-      val rev = Tables.orders(s, dir)
-        .groupBy(col("o_orderpriority"))
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("rev"))
-      val total = rev.agg(sum(col("rev")).as("_tot"))
-      rev.crossJoin(broadcast(total))
-        .select(col("o_orderpriority"),
-          col("rev").cast("double").as("revenue"),
-          round(col("rev").cast("double") / col("_tot").cast("double"), 6).as("share"))
-        .orderBy("o_orderpriority")
-    }),
-
-    // Bounded top-k per group via the typed Aggregator (ops.TopK) —
-    // the O(k)-buffer, map-side-combining alternative to window+rank:
-    // the shuffle carries at most k rows per group per map partition
-    // instead of every row. Oracle is the window row_number form —
-    // equality proves the ordering contract (score desc, id asc).
-    "window_topk_typed" -> ((s, dir) => {
-      Tables.orders(s, dir)
-        .groupBy(col("o_custkey"))
-        .agg(graft.ops.TopK.topK(3)(col("o_totalprice"), col("o_orderkey")).as("_t"))
-        .select(col("o_custkey"), posexplode(col("_t")).as(Seq("_rk0", "_e")))
-        .select(col("o_custkey"), (col("_rk0") + 1).cast("long").as("rk"),
-          col("_e._2").as("o_orderkey"), col("_e._1").as("price"))
-        .orderBy("o_custkey", "rk")
-    }),
-
-    // Semantic (embedding-space) benchmark decontamination — the
-    // cosine twin of x3_decontaminate's n-gram overlap: corpus vectors
-    // whose max cosine against the broadcast eval set crosses the
-    // contamination threshold. The codegen'd wide-mul kernel
-    // (dot_product_fw: double-cast before multiply, sequential double
-    // sum) is bit-identical to DuckDB's list_transform/list_sum form;
-    // the corpus is scanned once and never shuffled — eval rides as a
-    // broadcast.
-    "x3_decontaminate_embed" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      // Norms are per ROW, so compute them once on each side BEFORE the
-      // pair join — the naive per-pair form repeats each side's O(dim)
-      // norm |otherSide| times. dot_product_fw widens each float to
-      // double BEFORE the multiply, the exact arithmetic of both the HOF
-      // form and DuckDB's list_transform CAST·* — and self-application
-      // is the squared L2 norm under the same contract, so the whole
-      // cosine is one codegen'd kernel per pair plus a multiply.
-      val norm = sqrt(graft.expr.DotProductFloatWide(col("embedding"), col("embedding")))
-      val evalSet = e.filter(col("vec_id") % 40 === 0)
-        .select(col("embedding").as("_ev"), norm.as("_ne"))
-      val corpus = e.filter(col("vec_id") % 40 =!= 0)
-        .select(col("vec_id"), col("embedding"), norm.as("_nc"))
-      val dot = graft.expr.DotProductFloatWide(col("embedding"), col("_ev"))
-      corpus.crossJoin(broadcast(evalSet))
-        .withColumn("_c", dot / (col("_nc") * col("_ne")))
-        .groupBy(col("vec_id")).agg(max(col("_c")).as("max_cos"))
-        .filter(col("max_cos") >= 0.35)
-        .select(col("vec_id"), round(col("max_cos"), 5).as("max_cos"))
-        .orderBy("vec_id")
-    }),
-
-    // Bloom-filter semi-join: lineitems of suppliers in arrears. The
-    // filter side folds to a 128 KiB bit array (distributed bit_or,
-    // collected at O(bits)); fact rows are pruned scan-side by pure
-    // codegen'd probe expressions BEFORE the exact semi-join removes
-    // the false positives — result equals the plain semi-join oracle
-    // row-for-row.
-    "join_bloom_semi" -> ((s, dir) => {
-      val arrears = Tables.supplier(s, dir)
-        .filter(col("s_acctbal") < 1000).select(col("s_suppkey"))
-      graft.ops.Bloom.bloomSemiJoin(
-          Tables.lineitem(s, dir), arrears, "l_suppkey", "s_suppkey")
-        .select(col("l_orderkey"), col("l_linenumber"), col("l_suppkey"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // Second-order statistics (stddev, Pearson corr of value vs epoch
-    // day) computed FROM EXACT MOMENTS — decimal/integer sums first,
-    // doubles only in the final closed-form combination. Spark's
-    // native corr()/stddev() accumulate doubles in partition order and
-    // flap in the last ulps across runs; exact moments are the
-    // deterministic (and mergeable, Reagg-style) form at any scale.
-    "agg_stats_moments" -> ((s, dir) => {
-      val x = expr("unix_micros(ts) div 86400000000").cast("long")
-      val y = col("value").cast("decimal(18,2)")
-      val m = Tables.events(s, dir)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(y).as("sy"), sum(y * y).as("syy"),
-          sum(x).as("sx"), sum(x * x).as("sxx"),
-          sum(y * x).as("sxy"))
-      val nD = col("n").cast("double")
-      val (syD, syyD, sxD, sxxD, sxyD) =
-        (col("sy").cast("double"), col("syy").cast("double"),
-          col("sx").cast("double"), col("sxx").cast("double"),
-          col("sxy").cast("double"))
-      m.select(col("event_type"), col("n"),
-        round(syD / nD, 6).as("mean_v"),
-        round(sqrt((nD * syyD - syD * syD) / (nD * (nD - 1))), 6).as("sd_v"),
-        round((nD * sxyD - sxD * syD) /
-          sqrt((nD * sxxD - sxD * sxD) * (nD * syyD - syD * syD)), 6).as("corr_day"))
-        .orderBy("event_type")
-    }),
-
-    // Distribution drift (PSI) of the language mix between the full
-    // corpus and a length-filtered snapshot — the monitoring gate that
-    // catches a silently shifted source mix. Exact counts; the only
-    // float op is the final ln, rounded at 6 dp on both engines.
-    "dq_drift_lang" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      graft.ops.DataQuality.categoricalDrift(
-          docs, docs.filter(col("n_chars") >= 300), "lang")
-        .orderBy("lang")
-    }),
-
-    // DQ — differentially-private count release (Laplace mechanism,
-    // epsilon = 0.5): the publish step for per-language corpus stats.
-    // Noise is a seeded inverse-CDF draw from the engine-portable
-    // multiplicative hash family (the sampling ops' pinned formula),
-    // so the oracle replays the identical mechanism — calibration,
-    // sign, and rounding all hash-gated.
-    "dq_dp_counts" -> ((s, dir) => {
-      graft.ops.DataQuality.dpNoisedCounts(Tables.documents(s, dir), "lang",
-          ascii(substring(col("lang"), 1, 1)) * 100 +
-            ascii(substring(col("lang"), 2, 1)),
-          epsilonMicro = 500000L)
-        .orderBy("lang")
-    }),
-
-    // Interval-overlap join (two-sided): per-user click windows vs view
-    // windows (each event ±30 min wide... here [ts, ts+30m]) that
-    // overlap. Bucketized equi-join — NOT a theta join: candidates come
-    // from shared 10-min time buckets, each pair emitted from the
-    // overlap's first bucket only (duplicate-free without distinct).
-    // The oracle runs the plain theta join; equality proves the
-    // bucketization is exact.
-    "interval_overlap_clicks" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          unix_micros(col("ts")).as("t0"))
-        .withColumn("t1", col("t0") + lit(1800000000L))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("event_id").as("click_id"), col("user_id"), col("t0"), col("t1"))
-      val views = ev.filter(col("event_type") === "view")
-        .select(col("event_id").as("view_id"), col("user_id"), col("t0"), col("t1"))
-      graft.ops.AsOf.intervalOverlapJoin(clicks, views, "user_id",
-          "t0", "t1", "t0", "t1", bucketWidth = 600000000L)
-        .select(col("click_id"), col("r_view_id").as("view_id"))
-        .orderBy("click_id", "view_id")
-    }),
-
-    // Funnel analysis over the event stream: first view → first click
-    // AFTER that view → first purchase AFTER that click, per user;
-    // stage counts are the funnel. Funnel in ONE pass: per-user events (3 relevant types only)
-    // collected time-sorted, then a native `aggregate` fold walks the
-    // history carrying (t_view, t_click, t_purchase) — first view,
-    // first click strictly after it, first purchase strictly after
-    // that. One scan + one shuffle on user_id; per-user state bounded
-    // by that user's own event count (the sessionize bound). The
-    // join-per-stage form this replaced broadcast a USER-CARDINALITY
-    // frontier per stage — unboundable at corpus scale — and scanned
-    // the fact once per stage besides.
-    // Time-CONSTRAINED funnel: each stage must land within 1 DAY of
-    // the previous one — the form real conversion funnels use (an
-    // unconstrained funnel credits a purchase three weeks after the
-    // click; a 1-hour window on this sparse fixture converted nobody,
-    // measured). Same one-pass sorted fold as the unconstrained gate;
-    // greedy-first semantics make the min-based SQL replay exact
-    // (first qualifying event in time order IS the min qualifying
-    // timestamp).
-    "events_funnel_windowed" -> ((s, dir) => {
-      val stages = Seq("view", "click", "purchase")
-      val nullTs = lit(null).cast("timestamp")
-      val hour = expr("INTERVAL 1 DAY")
-      val folded = Tables.events(s, dir)
-        .filter(col("event_type").isin(stages: _*))
-        .select(col("user_id"), col("event_type"), col("ts"))
-        .groupBy(col("user_id"))
-        .agg(array_sort(collect_list(struct(col("ts"), col("event_type")))).as("_evs"))
-        .select(col("user_id"), aggregate(col("_evs"),
-          struct(nullTs.as("tv"), nullTs.as("tc"), nullTs.as("tp")),
-          (acc, e) => struct(
-            when(acc("tv").isNull && e("event_type") === "view", e("ts"))
-              .otherwise(acc("tv")).as("tv"),
-            when(acc("tc").isNull && acc("tv").isNotNull &&
-              e("event_type") === "click" && e("ts") > acc("tv") &&
-              e("ts") <= acc("tv") + hour, e("ts"))
-              .otherwise(acc("tc")).as("tc"),
-            when(acc("tp").isNull && acc("tc").isNotNull &&
-              e("event_type") === "purchase" && e("ts") > acc("tc") &&
-              e("ts") <= acc("tc") + hour, e("ts"))
-              .otherwise(acc("tp")).as("tp"))).as("s"))
-      folded.agg(
-          count(col("s.tv")).as("n_view"),
-          count(col("s.tc")).as("n_click"),
-          count(col("s.tp")).as("n_purchase"))
-        .select(explode(map(
-          lit("step1_view"), col("n_view"),
-          lit("step2_click"), col("n_click"),
-          lit("step3_purchase"), col("n_purchase"))).as(Seq("stage", "n")))
-        .orderBy("stage")
-    }),
-
-    // Survival/hazard census over PURCHASE tenure (purchase spans
-    // spread 0–30 days on this fixture where all-event spans collapse
-    // to the full month): per tenure-span day,
-    // users still at risk (observed that long) vs users whose LAST
-    // activity fell on that day, hazard = churn·1e6 div at_risk —
-    // the discrete-time table under every retention curve. Censoring
-    // simplification documented: last observed event = churn (all
-    // users share the observation window). Span grain is calendar-
-    // bounded (~31 rows), so the one cumulative window runs on the
-    // collapsed frame.
-    "events_survival_hazard" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val spans = Tables.events(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"),
-          expr("CAST(datediff(to_date(ts), DATE'1970-01-01') AS BIGINT)")
-            .as("day"))
-        .groupBy("user_id")
-        .agg((max(col("day")) - min(col("day"))).as("span"))
-        .groupBy("span").agg(count(lit(1)).as("n_churned"))
-      val w = Window.orderBy(col("span").desc)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      spans.withColumn("n_at_risk", sum(col("n_churned")).over(w))
-        .withColumn("hazard_micro",
-          expr("(n_churned * 1000000) div n_at_risk"))
-        .select("span", "n_at_risk", "n_churned", "hazard_micro")
-        .orderBy("span")
-    }),
-
-    // The funnel's SCALE form: relational min-chain (one filtered min
-    // agg + user-keyed join per stage — all codegen'd, no per-event
-    // struct allocation). Hash-matched to the identical oracle as the
-    // HOF-fold twin above; the round-9 TS probe measured 0.44 s warm at
-    // 5M events vs the fold's 1.63 s (and the fold's per-event garbage
-    // was the source of the probe's pre-GC-isolation 23 s outlier).
-    "events_funnel_relational" -> ((s, dir) => {
-      graft.ops.Reagg.funnelMinChain(Tables.events(s, dir), "user_id",
-          "event_type", "ts", Seq("view", "click", "purchase"),
-          expr("INTERVAL 1 DAY"))
-        .orderBy("stage")
-    }),
-
-    "events_funnel_stages" -> ((s, dir) => {
-      val stages = Seq("view", "click", "purchase")
-      val nullTs = lit(null).cast("timestamp")
-      val folded = Tables.events(s, dir)
-        .filter(col("event_type").isin(stages: _*))
-        .select(col("user_id"), col("event_type"), col("ts"))
-        .groupBy(col("user_id"))
-        .agg(array_sort(collect_list(struct(col("ts"), col("event_type")))).as("_evs"))
-        .select(col("user_id"), aggregate(col("_evs"),
-          struct(nullTs.as("tv"), nullTs.as("tc"), nullTs.as("tp")),
-          (acc, e) => struct(
-            when(acc("tv").isNull && e("event_type") === "view", e("ts"))
-              .otherwise(acc("tv")).as("tv"),
-            when(acc("tc").isNull && acc("tv").isNotNull &&
-              e("event_type") === "click" && e("ts") > acc("tv"), e("ts"))
-              .otherwise(acc("tc")).as("tc"),
-            when(acc("tp").isNull && acc("tc").isNotNull &&
-              e("event_type") === "purchase" && e("ts") > acc("tc"), e("ts"))
-              .otherwise(acc("tp")).as("tp"))).as("s"))
-      folded.agg(
-          count(col("s.tv")).as("n_view"),
-          count(col("s.tc")).as("n_click"),
-          count(col("s.tp")).as("n_purchase"))
-        .select(explode(map(
-          lit("step1_view"), col("n_view"),
-          lit("step2_click"), col("n_click"),
-          lit("step3_purchase"), col("n_purchase"))).as(Seq("stage", "n")))
-        .orderBy("stage")
-    }),
-
-    // Connected components as a first-class graph op — the pointer-
-    // jumping min-label propagation (Dedup.clusterPairs: O(log L)
-    // rounds even on chain graphs, edges cached pre-partitioned on the
-    // join key, convergence witnessed by a one-row label-sum aggregate)
-    // run on a planted chain+bridge graph: decade chains (k→k+1 except
-    // at k%10==9) merged sparsely by +100 bridges at k%97==0. The
-    // oracle computes components INDEPENDENTLY via a recursive-CTE
-    // reachability closure and min(root) — a different algorithm
-    // entirely, so agreement certifies the fixpoint, not the
-    // implementation.
-    "graph_connected_components" -> ((s, dir) => {
-      val nodes = Tables.customer(s, dir).select(col("c_custkey").as("k"))
-        .filter(col("k") < 3000)
-      val e1 = nodes.filter(col("k") % 10 =!= 9)
-        .select(col("k").as("id_a"), (col("k") + 1).as("id_b"))
-      val e2 = nodes.filter(col("k") % 97 === 0)
-        .select(col("k").as("id_a"), (col("k") + 100).as("id_b"))
-      val edges = e1.unionByName(e2)
-        .join(nodes.withColumnRenamed("k", "id_b"), Seq("id_b"), "left_semi")
-      val cc = graft.ops.Dedup.clusterPairs(edges)
-      val sizes = cc.groupBy(col("cluster")).agg(count(lit(1)).as("cluster_size"))
-      cc.join(sizes, Seq("cluster"))
-        .select(col("id"), col("cluster"), col("cluster_size"))
-        .orderBy("id")
-    }),
-
-    // Sequential-pattern analysis (ops.SeqPattern) — each user's full
-    // history folded to a time-ordered symbol string (one char per
-    // event, total order via the (ts, event_id) tie-break), then
-    // pattern questions asked as exact string arithmetic: adjacent-
-    // motif counts by literal replace-length (no regex dialect surface
-    // at all), ordered-subsequence reachability (s.*c.*p — the funnel
-    // generalized to any motif), first-occurrence positions. One
-    // shuffle on user_id; every per-user cell hash-matches the
-    // oracle's string_agg replay.
-    "events_seq_patterns" -> ((s, dir) => {
-      val seqs = graft.ops.SeqPattern.sequenceStrings(
-        Tables.events(s, dir).select(col("user_id"), col("ts"),
-          col("event_id"), substring(col("event_type"), 1, 1).as("sym")),
-        "user_id", Seq(col("ts"), col("event_id")), col("sym"))
-      seqs.select(col("user_id"),
-          length(col("seq")).cast("long").as("seq_len"),
-          graft.ops.SeqPattern.motifCount(col("seq"), "cp").as("n_cp_adjacent"),
-          graft.ops.SeqPattern.motifCount(col("seq"), "vv").as("n_vv_runs"),
-          graft.ops.SeqPattern.containsSubsequence(col("seq"), "scp")
-            .as("has_s_c_p"),
-          instr(col("seq"), "p").cast("long").as("first_p_pos"))
-        .orderBy("user_id")
-    }),
-
-    // First-order Markov transition matrix over per-user event streams:
-    // adjacent (from, to) state pairs in (ts, event_id) total order,
-    // counts + row-conditional P(to|from) as exact trunc-micros. The
-    // lead window is USER-keyed (never an unpartitioned sort); the
-    // matrix is |states|² at most. Oracle replays the same lead window
-    // in DuckDB — a cross-user bleed (one user's last event pairing
-    // with the next user's first) would flip counts immediately.
-    "events_markov_transitions" -> ((s, dir) => {
-      graft.ops.SeqPattern.markovTransitions(
-          Tables.events(s, dir).select(col("user_id"), col("ts"),
-            col("event_id"), col("event_type")),
-          "user_id", Seq(col("ts"), col("event_id")), col("event_type"))
-        .orderBy("from_state", "to_state")
-    }),
-
-    // Cohort retention: users grouped by first-activity week; for each
-    // (cohort week, week offset) the count of distinct active users.
-    // Week arithmetic stays in epoch seconds of week-truncated
-    // timestamps, so offsets are exact integers in both engines.
-    "events_cohort_retention" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("user_id"), col("ts"))
-      val cohort = ev.groupBy(col("user_id"))
-        .agg(date_trunc("week", min(col("ts"))).as("cohort_week"))
-      val active = ev.select(col("user_id"), date_trunc("week", col("ts")).as("wk")).distinct()
-      // NO broadcast hint: cohort is one row per USER — row-scale, not a
-      // dimension. Both sides key on user_id and shuffle once; AQE still
-      // picks broadcast when the actual size is small.
-      active.join(cohort, Seq("user_id"))
-        .withColumn("week_offset",
-          ((unix_timestamp(col("wk")) - unix_timestamp(col("cohort_week"))) / 604800L).cast("long"))
-        .groupBy(col("cohort_week"), col("week_offset"))
-        .agg(count(lit(1)).as("n_users"))
-        .orderBy("cohort_week", "week_offset")
-    }),
-
-    // Higher-order array functions (transform/aggregate) over the
-    // embedding column — the declarative form of the similarity math.
-    // Hot paths use the codegen kernels (expr.DotProductFloat et al.,
-    // HOF lambdas are CodegenFallback); this query keeps the HOF
-    // surface itself covered. Double-cast before any arithmetic and
-    // sequential folds on both engines keep the sums bit-stable.
-    "array_hof_norms" -> ((s, dir) => {
-      val sq = transform(col("embedding"),
-        v => v.cast("double") * v.cast("double"))
-      Tables.embeddings(s, dir).select(
-        col("vec_id"),
-        size(col("embedding")).cast("long").as("dim"),
-        round(sqrt(aggregate(sq, lit(0.0), (acc, v) => acc + v)), 5).as("l2_norm"),
-        round(aggregate(col("embedding"), lit(0.0),
-          (acc, v) => acc + v.cast("double")), 5).as("sum_v"))
-        .orderBy("vec_id")
-    }),
-
-    // Fractional-epoch mixture replication: each source gets 0.4 / 1.5
-    // / 2.3 epochs; the fractional copy is decided by an exact
-    // integer-basis draw (doc_id mod 100), so the expansion is
-    // deterministic across engines and partitionings.
-    "mix_epoch_replicate" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("source"))
-      val srcNum = substring(col("source"), 4, 10).cast("int")
-      val fBasis = when(srcNum % 3 === 0, 230)
-        .when(srcNum % 3 === 1, 40).otherwise(150)
-      graft.ops.Sampling.replicateEpochs(d, fBasis, pmod(col("doc_id"), lit(100)), 100)
-        .orderBy("doc_id", "copy_idx")
-    }),
-
-    // Z-order (Morton) interleave of two key dimensions — the z-value
-    // that ops.Layout.zOrder2 range-partitions and sorts by. Gated
-    // bit-for-bit against the oracle's unrolled shift/mask cascade; the
-    // layout/pruning behavior itself is asserted in LayoutSpec.
-    "layout_zorder_values" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .select(col("l_orderkey"), col("l_linenumber"),
-          Layout.zValue2(col("l_partkey"), col("l_suppkey")).as("zval"))
-        .orderBy("l_orderkey", "l_linenumber")
-    }),
-
-    // Zone-map data skipping — the min/max footer-stats + prune
-    // decision every lakehouse reader runs, certified END TO END on
-    // two layouts of the SAME rows: insertion order (files by
-    // o_orderkey block — each file spans the whole date range, nothing
-    // prunes) vs date-clustered (files by 30-day bucket — a 6-month
-    // range predicate prunes ~93% of files). The contrast IS the
-    // lesson: skipping effectiveness is a property of layout, not of
-    // stats (the z-order/Hilbert ops exist to manufacture it). Stats
-    // are one hash agg at file grain — O(files) metadata, the frame a
-    // planner broadcasts to prune a 100 TB scan.
-    "storage_zonemap_pruning" -> ((s, dir) => {
-      val o = Tables.orders(s, dir).select(col("o_orderkey"),
-        expr("datediff(to_date(o_orderdate), DATE'1970-01-01')")
-          .cast("long").as("day"))
-      def layoutStats(tag: String, fid: org.apache.spark.sql.Column) =
-        Layout.pruneRange(Layout.zoneMap(o, fid, col("day")),
-            expr("datediff(DATE'1998-01-01', DATE'1970-01-01')"),
-            expr("datediff(DATE'1998-06-30', DATE'1970-01-01')"))
-          .withColumn("layout", lit(tag))
-      layoutStats("insertion", expr("o_orderkey div 100"))
-        .unionByName(layoutStats("date_clustered", expr("day div 30")))
-        .select("layout", "file_id", "f_min", "f_max", "n_rows",
-          "n_nulls", "pruned")
-        .orderBy("layout", "file_id")
-    }),
-
-    // Deterministic negative sampling — contrastive-pair prep: for
-    // every customer, 3 parts they never bought, drawn from a
-    // quadratic-mix stream over (key, j) with overgeneration +
-    // anti-join (a draw colliding with a positive or repeating
-    // consumes overgen budget, not k). Reproducible on any
-    // cluster/engine — which is why it can be oracled at all;
-    // RNG-based negative samplers can't. (The customer×part matrix is
-    // sparse at every SF — a supplier-keyed first draft covered almost
-    // the whole catalog at sf0.001 and yielded 4 negatives total.)
-    "x1_negative_sample" -> ((s, dir) => {
-      val itemCount = Tables.part(s, dir).count()
-      val pos = Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir),
-          col("l_orderkey") === col("o_orderkey"))
-        .select(col("o_custkey"), col("l_partkey"))
-      graft.ops.Sampling.negativeSample(pos, "o_custkey", "l_partkey",
-          itemCount, k = 3, itemBase = 1L)
-        .orderBy("o_custkey", "draw_rank")
-    }),
-
-    // Column-grain snapshot diff — the drill-down under the row-grain
-    // w7 diff: WHICH columns moved between snapshots. The twin is
-    // formula-mutated (name suffix at %4==1, balance shift at %3==0,
-    // segment WIPED TO NULL at %7==0 — the null-safe comparison must
-    // count value→NULL as change), so the oracle certifies the diff
-    // by recomputing expected counts from the mutation formula, never
-    // re-running a comparison.
-    "w7_column_diff" -> ((s, dir) => {
-      val cur = Tables.customer(s, dir)
-      val mutated = cur.select(col("c_custkey"),
-        when(col("c_custkey") % 4 === 1, concat(col("c_name"), lit("_X")))
-          .otherwise(col("c_name")).as("c_name"),
-        col("c_nationkey"),
-        when(col("c_custkey") % 3 === 0, col("c_acctbal") + 10.0)
-          .otherwise(col("c_acctbal")).as("c_acctbal"),
-        when(col("c_custkey") % 7 === 0, lit(null: String))
-          .otherwise(col("c_mktsegment")).as("c_mktsegment"))
-      Merge.columnDiff(cur, mutated, Seq("c_custkey"))
-        .orderBy("column_name")
-    }),
-
-    // k-anonymity / l-diversity release census over QI (nation,
-    // balance-bucket) with segment as the sensitive attribute: rows in
-    // sub-k groups are re-identifiable; sub-l groups leak by
-    // homogeneity even when large. Two grain-collapsing aggs, one
-    // census row.
-    "dq_k_anonymity" -> ((s, dir) => {
-      val c = Tables.customer(s, dir).withColumn("bal_bucket",
-        expr("CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) div 200000"))
-      graft.ops.DataQuality.kAnonymityCensus(c,
-        Seq("c_nationkey", "bal_bucket"), "c_mktsegment", k = 5, l = 3)
-    }),
-
-    // CDC net-effect compaction: a batch of I/U/D churn collapses to
-    // the minimal equivalent batch in ONE min_by/max_by hash agg —
-    // born-and-died keys vanish entirely (emitting their tombstones
-    // would undo the point). Ops derived from event types (signup=I,
-    // error=D, else U) over the (ts, event_id) total order.
-    "w6_cdc_compact" -> ((s, dir) => {
-      val cdc = Tables.events(s, dir).select(col("user_id"),
-        when(col("event_type") === "signup", "I")
-          .when(col("event_type") === "error", "D")
-          .otherwise("U").as("op"),
-        col("ts"), col("event_id"), col("event_type").as("payload"))
-      Merge.cdcCompact(cdc, "user_id", "op", "ts", "payload",
-          tieBreak = Seq("event_id"))
-        .orderBy("user_id")
-    }),
-
-    // Missing-id detection WITHOUT a global sort: residues {0,1,2} mod
-    // 97 are filtered out of the orderkey sequence, so a 3-wide gap
-    // recurs every 97 keys; bucketSize=100 makes gaps cross bucket
-    // boundaries regularly, exercising BOTH the intra-bucket lead path
-    // and the bucket-stats boundary path. The oracle finds the same
-    // gaps by the naive global lead (fine at oracle scale — the whole
-    // point is that the engine side never does that).
-    "dq_sequence_gaps" -> ((s, dir) => {
-      graft.ops.DataQuality.sequenceGaps(
-          Tables.orders(s, dir).filter(col("o_orderkey") % 97 >= 3),
-          "o_orderkey", bucketSize = 100L)
-        .orderBy("gap_start")
-    }),
-
-    // Position-based (U-shaped) multi-touch attribution over per-user
-    // click journeys: 40/20/40 in exact trunc-micros, with the n=1
-    // (full credit) and n=2 (500k/500k — a U with no middle must not
-    // leak 200k) conventions pinned; middle truncation dust ≤ n−3
-    // micros documented. One user-keyed window pass.
-    "events_attribution_ushape" -> ((s, dir) => {
-      graft.ops.Reagg.positionAttribution(
-          Tables.events(s, dir).filter(col("event_type") === "click")
-            .select(col("user_id"), col("ts"), col("event_id")),
-          "user_id", Seq(col("ts").asc, col("event_id").asc))
-        .select("user_id", "event_id", "position", "n_touches", "credit_micro")
-        .orderBy("user_id", "position")
-    }),
-
-    // Functional-dependency discovery census: does lhs → rhs hold, how
-    // many keys violate, worst image count — key detection and the
-    // cheapest denormalized-feed tripwire. Three planted dependencies:
-    // the true key FD holds, the two coarse ones fail with measured
-    // violation mass.
-    "dq_fd_census" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      def fd(tag: String, df: org.apache.spark.sql.DataFrame,
-          l: String, r: String) =
-        graft.ops.Profiling.fdCensus(df, l, r).withColumn("fd", lit(tag))
-      fd("orderkey_to_custkey", o, "o_orderkey", "o_custkey")
-        .unionByName(fd("custkey_to_priority", o, "o_custkey",
-          "o_orderpriority"))
-        .unionByName(fd("nation_to_segment", Tables.customer(s, dir),
-          "c_nationkey", "c_mktsegment"))
-        .select("fd", "n_keys", "n_violating_keys", "max_images", "fd_holds")
-        .orderBy("fd")
-    }),
-
-    // Column-encoding advisor — the compression half of ANALYZE: per
-    // synthetic file, PLAIN vs DICTIONARY vs RLE by exact integer cost
-    // model (bits = len(bin(distinct−1)), runs counted in the DECLARED
-    // physical order — encoding wins are a property of order, which is
-    // why the layout family exists). Two columns with opposite
-    // outcomes: 3-distinct l_returnflag dictionary-encodes ~8×
-    // smaller; high-cardinality l_suppkey stays plain/dict marginal.
-    "storage_encoding_advisor" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      def adv(tag: String, v: org.apache.spark.sql.Column, bytes: Int) =
-        Layout.encodingAdvisor(li, expr("l_orderkey div 1000"), v,
-            // (okey, lineno) is NOT unique in this fixture — appending
-            // the value itself makes run counts order-deterministic
-            // (rows tied on the full key are interchangeable)
-            Seq(col("l_orderkey"), col("l_linenumber"), v), bytes)
-          .withColumn("column_name", lit(tag))
-      adv("l_returnflag", col("l_returnflag"), 1)
-        .unionByName(adv("l_suppkey", col("l_suppkey"), 8))
-        .select("column_name", "file_id", "n_values", "n_distinct",
-          "n_runs", "est_plain", "est_dict", "est_rle", "best_encoding")
-        .orderBy("column_name", "file_id")
-    }),
-
-    // Spatial radius self-join via grid bucketing: all customer pairs
-    // within 20 000 fixed-point units on a formula-planted 1e6×1e6
-    // plane — 3×3 cell replication + hash join on cell id, candidate
-    // work density-bounded (never n²), positional de-dup (a pair
-    // survives only from the replica-a/home-b match with a<b). Exact
-    // squared-integer distance; the oracle replays as a band-predicate
-    // inequality join over the same planted coordinates.
-    "geo_radius_join" -> ((s, dir) => {
-      // full table at driver scales; deterministic 1/16 id-hash sample
-      // past 50k customers (sf1.0) where the ORACLE's band IEJoin is
-      // quadratic — the engine's grid join itself stays density-bounded
-      val pts = scaleSubset(Tables.customer(s, dir), col("c_custkey"),
-          50000L)
-        .select(col("c_custkey"),
-          expr("(c_custkey * c_custkey * 7919 + c_custkey * 104729) % 1000000").as("px"),
-          expr("(c_custkey * c_custkey * 104729 + c_custkey * 7919) % 1000000").as("py"))
-      graft.ops.Geo.radiusJoin(pts, "c_custkey", col("px"), col("py"),
-          radius = 20000L)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Grid occupancy census over the same planted plane (100k cells →
-    // a 10×10 grid): the histogram that sizes the radius join's
-    // per-cell fan-out and drives hot-cell pre-split decisions.
-    "geo_cell_census" -> ((s, dir) => {
-      val pts = Tables.customer(s, dir).select(
-        expr("(c_custkey * c_custkey * 7919 + c_custkey * 104729) % 1000000").as("px"),
-        expr("(c_custkey * c_custkey * 104729 + c_custkey * 7919) % 1000000").as("py"))
-      graft.ops.Geo.cellCensus(pts, col("px"), col("py"), cellSize = 100000L)
-        .orderBy("cell_x", "cell_y")
-    }),
-
-    // Cartesian product (tiny×tiny only — a guarded operator, never the
-    // scale path): unordered region pairs.
-    "cross_join_region_pairs" -> ((s, dir) => {
-      val a = Tables.region(s, dir).select(col("r_regionkey").as("ka"), col("r_name").as("r1"))
-      val b = Tables.region(s, dir).select(col("r_regionkey").as("kb"), col("r_name").as("r2"))
-      a.crossJoin(b).filter(col("ka") < col("kb"))
-        .select(col("r1"), col("r2")).orderBy("r1", "r2")
-    }),
-
-    // Physical join-strategy control: force shuffle-hash (vs default
-    // sort-merge) for the large-large join — no per-partition sort, the
-    // right choice when neither side fits a broadcast but one hashes.
-    "join_hint_shuffle_hash" -> ((s, dir) => {
-      val o = Tables.orders(s, dir).hint("shuffle_hash")
-      Tables.lineitem(s, dir).join(o, col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_lines"),
-          sum(dec(col("l_extendedprice"))).cast("double").as("sum_price"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // Mixture weights — temperature-scaled source rebalancing (τ=2
-    // flattens the natural mix toward uniform).
-    "mix_temperature_weights" -> ((s, dir) => {
-      graft.ops.Sampling.temperatureWeights(Tables.documents(s, dir), "source", 2.0)
-        .orderBy("source")
-    }),
-
-    // Shard packing — fixed-token-budget shard assignment via the
-    // distributed two-phase prefix sum (the oracle's global window is
-    // the semantics; the Spark plan never forms a global window).
-    "pack_shards" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), TextAnalysis.tokenCount(col("text")).as("n_tokens"))
-      graft.ops.Packing.assignShards(d, "doc_id", "n_tokens", 5000L)
-        .select(col("doc_id"), col("n_tokens"), col("cum_w"), col("shard"))
-        .orderBy("doc_id")
-    }),
-
-    // Deterministic weighted source interleaving (training-order
-    // mixing): stride scheduling on exact decimal ranks — a source with
-    // inv_w 0.5 appears twice as often as one with 1.0. Per-source rank
-    // comes from the distributed groupwise prefix rank, never a
-    // per-source single-reducer window. First 100 mixed positions gated.
-    "mix_interleave" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("source"))
-      val inv = d.select(col("source")).distinct()
-        .withColumn("inv_w", expr(
-          """CAST(CASE CAST(substring(source, 4) AS INT) % 3
-            |  WHEN 0 THEN 1.0 WHEN 1 THEN 0.5 ELSE 0.25 END AS DECIMAL(7,6))""".stripMargin))
-      graft.ops.Mixing.interleaveBySource(d, "source", Seq(col("doc_id")), inv)
-        .orderBy(col("mix_pos_micro"), col("source"), col("grp_rank"))
-        .limit(100)
-        .select(col("doc_id"), col("source"), col("grp_rank"), col("mix_pos_micro"))
-    }),
-
-    // Greedy token-budget selection: fill a 10k-token training budget
-    // with the highest-stopword-density (quality proxy) docs first —
-    // hard ceiling, the first budget-crossing doc is cut. The order is
-    // total (score desc, doc_id); the Spark plan is the two-phase
-    // prefix sum over that order, never a single-partition window.
-    "pack_budget_select" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val scored = d.select(col("doc_id"),
-          TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-          TextAnalysis.wordOccurrences(lower(col("text")),
-            TextAnalysis.englishStopwords).as("stop_cnt"))
-        .withColumn("score", expr("(stop_cnt * 1000) div greatest(n_tokens, 1)"))
-      graft.ops.Packing.selectByTokenBudget(scored,
-          Seq(col("score").desc, col("doc_id").asc), "n_tokens", 10000L)
-        .select(col("doc_id"), col("n_tokens"), col("score"), col("cum_w"))
-        .orderBy("doc_id")
-    }),
-
-    // X4m — linear model scoring (fasttext-style classifier APPLY): the
-    // model is a (term, weight) table — here derived deterministically
-    // from corpus term ranks so the gate is engine-exact (integer-valued
-    // decimals; a real model's floats would load the same way) — and the
-    // op is the distributed apply: explode → broadcast join → one hash
-    // agg to doc grain. Weights are quantized to BIGINT micros by
-    // contract: double sums would flap with partial-agg merge order at
-    // scale, and DECIMAL outputs hash engine-dependently in parquet.
-    "x4_model_score" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val d = Tables.documents(s, dir)
-      val freq = d.select(explode(TextAnalysis.tokens(lower(col("text")))).as("term"))
-        .filter(length(col("term")) >= 4)
-        .groupBy("term").agg(count(lit(1)).as("cnt"))
-      // vocabulary-sized global rank (terms, not corpus rows)
-      val model = freq
-        .withColumn("rk", row_number().over(Window.orderBy(col("cnt").desc, col("term").asc)))
-        .filter(col("rk") <= 40)
-        .select(col("term"),
-          ((lit(1000L) - col("rk")).cast("decimal(18,6)")
-            * lit(new java.math.BigDecimal("0.001"))).cast("decimal(18,6)").as("weight"))
-      TextAnalysis.linearScore(d, "doc_id", "text", model)
-        .orderBy("doc_id")
-    }),
-
-    // Sequence packing (concat-and-chunk): the corpus token stream laid
-    // end-to-end in doc_id order and cut into 256-token training
-    // sequences, docs crossing boundaries — one row per doc×sequence
-    // slice. Same one-corpus-shuffle prefix sum as pack_shards; the
-    // slice fan-out is narrow. The oracle runs the global-window form.
-    "pack_sequences" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-        .select(col("doc_id"), TextAnalysis.tokenCount(col("text")).as("n_tokens"))
-      graft.ops.Packing.packSequences(d, "doc_id", "n_tokens", 256L)
-        .select(col("doc_id"), col("n_tokens"), col("seq_id"),
-          col("tok_start"), col("tok_len"), col("seq_off"))
-        .orderBy("doc_id", "seq_id")
-    }),
-
-    // X3 — benchmark decontamination: corpus docs sharing ≥1 distinct
-    // 5-shingle with the probe set (every 20th doc stands in for an eval
-    // set). Probe is broadcast; the corpus never shuffles.
-    "x3_decontaminate" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      Dedup.decontaminationOverlap(d, "doc_id", "text",
-          d.filter(col("doc_id") % 20 === 0), "text", k = 5)
-        .orderBy("doc_id")
-    }),
-
-    // X3d, broadcast-free form: HALF the corpus as the probe — a probe
-    // side no one should force-broadcast. Same overlap semantics, join
-    // strategy left to the optimizer (shuffle semi-join at scale).
-    "x3_decontaminate_join" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      Dedup.decontaminationOverlapJoin(d, "doc_id", "text",
-          d.filter(col("doc_id") % 2 === 0), "text", k = 5)
-        .orderBy("doc_id")
-    }),
-
-    // X3x — cross-document duplicated spans (exact-substring dedup
-    // census): every 5-token span shared by ≥2 distinct docs, reported
-    // per doc as duplicated-span count + covered-token union. Runs the
-    // production hash-keyed path (8-byte shuffle keys); the oracle
-    // groups exact strings, so equality also witnesses collision-free
-    // hashing on the fixture.
-    "x3_span_dedup" -> ((s, dir) => {
-      Dedup.duplicatedSpans(Tables.documents(s, dir), "doc_id", "text", n = 5)
-        .orderBy("doc_id")
-    }),
-
-    // X3x mutation form — the cleaned corpus itself: cross-doc
-    // duplicated 5-token spans removed, canonical (min-doc) copy kept.
-    // The scrub must see the WHOLE corpus; the gate stays bounded by
-    // reporting md5(clean_text) instead of the text — md5 equality IS
-    // exact text equality, so fidelity is not weakened.
-    "x3_span_scrub" -> ((s, dir) => {
-      Dedup.scrubDuplicatedSpans(Tables.documents(s, dir), "doc_id", "text", n = 5)
-        .select(col("doc_id"), col("n_tokens"), col("n_removed"),
-          md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // X3x — line-level boilerplate removal (the CCNet/RefinedWeb
-    // pre-dedup pass): lines recurring across ≥5 distinct docs of the
-    // same SOURCE are dropped from every doc, no canonical copy. The
-    // fixture corpus has no newlines, so the lined text is constructed
-    // by formula in BOTH engines — a per-source header in every doc, a
-    // promo line in every third, two body substrings, and a footer
-    // keyed doc_id%7 whose per-source recurrence crosses the threshold
-    // only at sf0.1 (~36 docs/source) and stays below it at the small
-    // SFs (~3.5) — the oracle replays the census, so the gate
-    // exercises the threshold from BOTH sides across SFs.
-    "x3_boilerplate_scrub" -> ((s, dir) => {
-      val lined = Tables.documents(s, dir).select(col("doc_id"), col("source"),
-        concat_ws("\n",
-          concat(lit("hdr "), col("source")),
-          substring(col("text"), 1, 60),
-          when(col("doc_id") % 3 === 0, concat(lit("promo "), col("source"))),
-          substring(col("text"), 61, 60),
-          concat(lit("foot "), (col("doc_id") % 7).cast("string"))).as("text"))
-      Dedup.boilerplateScrub(lined, "doc_id", "text", "source", minDocs = 5)
-        .select(col("doc_id"), col("source"), col("n_lines"), col("n_removed"),
-          md5(col("clean_text")).as("clean_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // The COMPOSED curation pipeline — what an actual corpus build
-    // runs, end to end in one lazy plan: lined construction →
-    // boilerplate scrub (per-source line census) → quality floor
-    // (≥20 tokens of CLEAN text) → global exact content dedup (min
-    // doc id survives, its source credited) → per-source attrition
-    // census with surviving token mass. Every stage is an op gated
-    // individually elsewhere; this gate certifies their COMPOSITION —
-    // stage boundaries (empty scrubbed docs, quality on post-scrub
-    // text, dedup after quality) are where pipelines really break.
-    "pipeline_curation_census" -> ((s, dir) => {
-      // every 25th doc gets a CONSTANT body, so the dedup stage has
-      // real work: after the scrub removes the per-doc promo/foot
-      // lines (or where their digits collide below the threshold),
-      // those docs' clean texts coincide and all but the min id drop
-      val dupBody = "alpha beta gamma delta epsilon zeta eta theta iota " +
-        "kappa lambda mu nu xi omicron pi rho sigma tau upsilon phi chi"
-      val body = when(col("doc_id") % 25 === 0, lit(dupBody))
-        .otherwise(col("text"))
-      val lined = Tables.documents(s, dir).select(col("doc_id"), col("source"),
-        concat_ws("\n",
-          concat(lit("hdr "), col("source")),
-          substring(body, 1, 60),
-          when(col("doc_id") % 3 === 0, concat(lit("promo "), col("source"))),
-          substring(body, 61, 60),
-          concat(lit("foot "), (col("doc_id") % 7).cast("string"))).as("text"))
-      val clean = Dedup.boilerplateScrub(lined, "doc_id", "text", "source",
-        minDocs = 5)
-      val scored = clean.select(col("doc_id"), col("source"), col("clean_text"),
-        size(filter(split(col("clean_text"), "\\s+"), t => t =!= lit("")))
-          .cast("long").as("n_tok"))
-      val quality = scored.filter(col("n_tok") >= 20)
-      val unique = quality.groupBy(col("clean_text"))
-        .agg(min(struct(col("doc_id"), col("source"), col("n_tok"))).as("k"))
-        .select(col("k.source").as("source"), col("k.n_tok").as("n_tok"))
-      val raw = lined.groupBy("source").agg(count(lit(1)).as("n_raw"))
-      val q = quality.groupBy("source").agg(count(lit(1)).as("n_quality"))
-      val u = unique.groupBy("source").agg(count(lit(1)).as("n_unique"),
-        sum(col("n_tok")).as("tokens_unique"))
-      raw.join(q, Seq("source"), "left").join(u, Seq("source"), "left")
-        .select(col("source"), col("n_raw"),
-          coalesce(col("n_quality"), lit(0L)).as("n_quality"),
-          coalesce(col("n_unique"), lit(0L)).as("n_unique"),
-          coalesce(col("tokens_unique"), lit(0L)).as("tokens_unique"))
-        .orderBy("source")
-    }),
-
-    // X4 — Gopher-style repetition stats (integer ingredients of the
-    // top-word-fraction / duplicate-bigram-fraction quality rules).
-    "x4_repetition_stats" -> ((s, dir) => {
-      TextAnalysis.repetitionStats(
-          Tables.documents(s, dir).filter(col("doc_id") < 200), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-
-    // X4 — PII redaction over text with planted email/phone/id (the
-    // fixture corpus is clean, so the PII is appended deterministically
-    // in both engines).
-    "x4_pii_redact" -> ((s, dir) => {
-      Tables.documents(s, dir).filter(col("doc_id") < 100)
-        .select(col("doc_id"), TextAnalysis.redactPii(
-          concat(substring(col("text"), 1, 40),
-            lit(" reach bob.smith+x@mail.example.org or +1 (415) 555-0199 pin 123456 end")))
-          .as("clean_text"))
-        .orderBy("doc_id")
-    }),
-
-    // X4 — per-document top-3 tf·idf terms (rank over the rounded score:
-    // integer tf/df/N until the single ln, so engines can't disagree).
-    "x4_tfidf_top_terms" -> ((s, dir) => {
-      TextAnalysis.tfidfTopTerms(
-          Tables.documents(s, dir).filter(col("doc_id") < 50), "doc_id", "text", 3)
-        .orderBy("doc_id", "rk")
-    }),
-
-    // Equi-depth histogram without a global sort: decile boundaries of
-    // order totals from the distributed ntile (prefix-sum rank), then a
-    // per-bucket census — the profiling shape for partition/range design
-    // at scale. Cents keep the gate integer-exact.
-    "agg_equidepth_hist" -> ((s, dir) => {
-      val o = Tables.orders(s, dir).select(col("o_orderkey"),
-        expr("CAST(round(o_totalprice * 100) AS BIGINT)").as("cents"))
-      graft.ops.Packing.ntileOrdered(o,
-          Seq(col("cents").asc, col("o_orderkey").asc), 10)
-        .groupBy("bucket").agg(count(lit(1)).as("n"),
-          min("cents").as("lo"), max("cents").as("hi"))
-        .orderBy("bucket")
-    }),
-
-    // Deterministic MODE per group: most frequent order priority per
-    // status, ties broken toward the smallest value — min_by over the
-    // (-count, value) struct, one extra hash agg over the count table
-    // (never a sort). Spark's own mode() is tie-nondeterministic; this
-    // is the engine-portable form.
-    "agg_mode_priority" -> ((s, dir) => {
-      val counts = Tables.orders(s, dir)
-        .groupBy(col("o_orderstatus"), col("o_orderpriority"))
-        .agg(count(lit(1)).as("cnt"))
-      counts.groupBy(col("o_orderstatus"))
-        .agg(min_by(col("o_orderpriority"),
-            struct((-col("cnt")).as("a"), col("o_orderpriority").as("b")))
-          .as("mode_priority"),
-          max(col("cnt")).as("mode_n"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // X6 — malformed-record salvage (PERMISSIVE ingestion): from_json
-    // with a corrupt-record column — bad records land whole in the
-    // channel with all data fields NULL, good records parse, and the
-    // batch never fails (the production alternative to FAILFAST's
-    // all-or-nothing and DROPMALFORMED's silent loss). Every 7th row's
-    // JSON is deliberately truncated; both engines build the identical
-    // strings so corruption is data, not chance.
-    "x6_json_salvage" -> ((s, dir) => {
-      import org.apache.spark.sql.types._
-      val d = Tables.documents(s, dir)
-      val good = concat(lit("{\"id\": "), col("doc_id"),
-        lit(", \"lang\": \""), col("lang"), lit("\"}"))
-      val bad = concat(lit("{\"id\": "), col("doc_id"),
-        lit(", \"lang\": \""), col("lang")) // unterminated — malformed
-      val schema = StructType(Seq(StructField("id", LongType),
-        StructField("lang", StringType), StructField("_bad", StringType)))
-      d.select(col("doc_id"),
-          when(col("doc_id") % 7 === 0, bad).otherwise(good).as("raw"))
-        .withColumn("p", from_json(col("raw"), schema,
-          Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_bad")))
-        .select(col("doc_id"), col("p.id").as("parsed_id"),
-          col("p.lang").as("parsed_lang"), col("p._bad").isNotNull.as("is_corrupt"))
-        .orderBy("doc_id")
-    }),
-
-    // X4 — regex pretokenization census (the BPE-ish tokenizer's first
-    // stage): per-doc pretoken count + per-class (letters/digits/punct)
-    // counts; the pattern subset behaves identically under Java regex
-    // and RE2 so the gate is engine-exact.
-    "x4_pretokenize" -> ((s, dir) => {
-      val t = lower(col("text"))
-      Tables.documents(s, dir).select(col("doc_id"),
-          size(TextAnalysis.pretokenize(col("text"))).cast("long").as("n_pretokens"),
-          size(regexp_extract_all(t, lit("[a-z]+"), lit(0))).cast("long").as("n_alpha"),
-          size(regexp_extract_all(t, lit("[0-9]+"), lit(0))).cast("long").as("n_num"),
-          size(regexp_extract_all(t, lit("[^a-z0-9 ]+"), lit(0))).cast("long").as("n_other"))
-        .orderBy("doc_id")
-    }),
-
-    // X4v — BPE tokenizer training, distributed shape. The census query
-    // is the fully-oracled round-1 step: adjacent char-pair counts
-    // weighted by word frequency over the word census (the ONE
-    // corpus-scale op — every later training round runs at vocabulary
-    // scale). Top 20 by (count desc, pair asc).
-    "x4_bpe_pair_census" -> ((s, dir) => {
-      val vocab = TextAnalysis.wordVocab(Tables.documents(s, dir), "text")
-        .select(split(col("word"), "").as("sym"), col("cnt"))
-      TextAnalysis.bpePairCensus(vocab)
-        .orderBy(col("n").desc, col("a").asc, col("b").asc)
-        .limit(20)
-    }),
-
-    // X4v — the iterative trainer: 5 merge rounds on sf docs, fully
-    // hash-gated. The SQL twin encodes each word's symbol sequence as a
-    // DOUBLE-space-joined string with single-space ends (' a  b  c '):
-    // every symbol owns its flanking delimiters, so a plain replace()
-    // of ' a  b ' → ' ab ' IS the leftmost-greedy non-overlapping merge
-    // — including self-overlap runs ('aaa' under (a,a) → [aa, a]) that
-    // a single-space join gets wrong because adjacent matches would
-    // share one space. That closes the former rows-only exemption: all
-    // 5 rounds (census → argmax → apply) oracle exactly.
-    "x4_bpe_merges" -> ((s, dir) => {
-      val m = TextAnalysis.trainBpeMerges(
-        Tables.documents(s, dir).filter(col("doc_id") < 200), "text", 5)
-      import s.implicits._
-      m.toDF("merge_rank", "a", "b", "n")
-    }),
-
-    // X4v adversarial — the LOOP-CHAINING case the natural fixture never
-    // hits (its 5 argmaxes are all single-char pairs, so rounds are
-    // independent): a constructed corpus where round 3 merges round 1's
-    // OUTPUT ((xy, z) — a multi-char symbol on the left), round 4 merges
-    // TWO round-2 outputs ((aa, aa)), and round 2 itself is the
-    // self-overlap run ('aaaa' under (a,a) → [aa, aa] — leftmost-greedy
-    // non-overlap drops the middle adjacency). Counts are engineered so
-    // the argmax order forces the chain: (x,y)=160, (a,a)=90, (xy,z)=60,
-    // (aa,aa)=30, (p,q)=20. The oracle replays the same 5 rounds in SQL
-    // over the same constructed vocabulary — certifying the trainer's
-    // round-over-round state, not five independent censuses.
-    "x4_bpe_merges_chained" -> ((s, dir) => {
-      val corpus = Tables.documents(s, dir).filter(col("doc_id") < 210)
-        .select(when(col("doc_id") < 100, lit("xy"))
-          .when(col("doc_id") < 160, lit("xyz"))
-          .when(col("doc_id") < 190, lit("aaaa"))
-          .otherwise(lit("pq")).as("text"))
-      val m = TextAnalysis.trainBpeMerges(corpus, "text", 5)
-      import s.implicits._
-      m.toDF("merge_rank", "a", "b", "n")
-    }),
-
-    // X4v composed — the census the GPT-2 pipeline actually trains on:
-    // pretokenize (letter/digit/punct runs) feeds the vocabulary, so
-    // punctuation stops gluing to words before BPE ever sees a pair.
-    "x4_bpe_pretoken_census" -> ((s, dir) => {
-      val vocab = TextAnalysis.pretokenVocab(Tables.documents(s, dir), "text")
-        .select(split(col("word"), "").as("sym"), col("cnt"))
-      TextAnalysis.bpePairCensus(vocab)
-        .orderBy(col("n").desc, col("a").asc, col("b").asc)
-        .limit(20)
-    }),
-
-    // X4v composed — full 5-round training over the PRETOKEN vocabulary
-    // (trainBpeMergesPretokenized): the real tokenizer-training shape,
-    // merges can never cross a pretoken boundary. Same 5-round SQL twin,
-    // different vocabulary CTE.
-    "x4_bpe_merges_pretoken" -> ((s, dir) => {
-      val m = TextAnalysis.trainBpeMergesPretokenized(
-        Tables.documents(s, dir).filter(col("doc_id") < 200), "text", 5)
-      import s.implicits._
-      m.toDF("merge_rank", "a", "b", "n")
-    }),
-
-    // X4v apply — ENCODE with the trained tokenizer: per-doc token
-    // counts under the 5 merges just trained on the same subset. The
-    // oracle re-trains the merges in SQL (same 5-round replace() chain
-    // as x4_bpe_merges), applies them to every distinct word, and joins
-    // back to doc grain — so a drift in EITHER the trainer or the
-    // encoder flips the hash.
-    "x4_bpe_encode" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).filter(col("doc_id") < 200)
-      val m = TextAnalysis.trainBpeMerges(d, "text", 5).map(t => (t._2, t._3))
-      TextAnalysis.bpeEncodeCounts(d, "doc_id", "text", m).orderBy("doc_id")
-    }),
-
-    // X4 — CCNet-style LM quality signal: per-doc negative log-
-    // likelihood under a unigram LM trained on the English slice (the
-    // "does this look like the reference corpus" filter). Fixed-point
-    // micros: one ln per DISTINCT vocab word, floor(x·1e6+0.5) (half-up
-    // on negatives is engine-defined; floor is not), then pure BIGINT
-    // aggregation — partial-agg merge order cannot move the hash.
-    "x4_lm_nll" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // LM frozen: unigramNll broadcasts two slices of the model plan
-      // (real words + OOV row), each re-running the reference-corpus
-      // census (r16; opt guide §1.2)
-      val lm = TextAnalysis.unigramLm(docs.filter(col("lang") === "en"), "text")
-        .transform(Pins.freeze)
-      TextAnalysis.unigramNll(docs, "doc_id", "text", lm).orderBy("doc_id")
-    }),
-
-    // Multinomial Naive Bayes (ops.NaiveBayes) — train on even docs
-    // (label = lang), emit the full per-doc × per-class log-likelihood
-    // matrix for a fixed held-out slice. Every cell is BIGINT micros
-    // (ln per distinct class-word, floored, then integer sums), so the
-    // oracle replays train + score end-to-end and hash-matches
-    // cell-for-cell — the classifier itself is certified, not just its
-    // argmax.
-    "x4_nb_scores" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // model frozen: score() broadcasts three slices of the model
-      // plan (classes ×2, real words), each re-running the whole train
-      // pipeline over the training corpus (r16; opt guide §1.2)
-      val model = graft.ops.NaiveBayes.train(
-        docs.filter(col("doc_id") % 2 === 0), "lang", "text")
-        .transform(Pins.freeze)
-      graft.ops.NaiveBayes.score(
-          docs.filter(col("doc_id") % 2 === 1 && col("doc_id") < 400),
-          "doc_id", "text", model)
-        .orderBy("doc_id", "label")
-    }),
-
-    // NB argmax + confusion census over ALL held-out docs: predicted
-    // class per doc (integer-exact comparison, ties to lowest label),
-    // crossed with true lang. sum_ll_micro pins the winning scores
-    // through the census, so a wrong-but-same-count argmax cannot
-    // slip through.
-    "x4_nb_confusion" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // model and scored frozen: score() broadcasts three model-plan
-      // slices (each re-ran train end-to-end), and classify()'s argmax
-      // self-join evaluated the corpus-scoring pipeline twice (r16)
-      val model = graft.ops.NaiveBayes.train(
-        docs.filter(col("doc_id") % 2 === 0), "lang", "text")
-        .transform(Pins.freeze)
-      val scored = graft.ops.NaiveBayes.score(
-        docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", model)
-        .transform(Pins.freeze)
-      graft.ops.NaiveBayes.classify(scored, "doc_id")
-        .join(docs.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .groupBy(col("lang").as("true_lang"), col("pred_label"))
-        .agg(count(lit(1)).as("n"), sum(col("best_ll_micro")).as("sum_ll_micro"))
-        .orderBy("true_lang", "pred_label")
-    }),
-
-    // X4v apply, GPT-2 shape — encode over pretokens with merges
-    // trained over the pretoken vocabulary.
-    "x4_bpe_encode_pretoken" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).filter(col("doc_id") < 200)
-      val m = TextAnalysis.trainBpeMergesPretokenized(d, "text", 5)
-        .map(t => (t._2, t._3))
-      TextAnalysis.bpeEncodeCounts(d, "doc_id", "text", m, pretoken = true)
-        .orderBy("doc_id")
-    }),
-
-    // Distributed ntile/percent_rank/cume_dist — the SCALE form of
-    // window_ntile_deciles' documented quantile-bucket path: global rank
-    // from the weight-1 two-phase prefix sum (one range exchange), ANSI
-    // NTILE reproduced in integer arithmetic from (rank, n) — the
-    // single-reducer global Window never exists.
-    "window_ntile_distributed" -> ((s, dir) => {
-      graft.ops.Packing.ntileOrdered(
-          Tables.customer(s, dir).select(col("c_custkey"), col("c_acctbal")),
-          Seq(col("c_acctbal").desc, col("c_custkey").asc), 10)
-        .select(col("c_custkey"), col("rank"), col("bucket"),
-          col("pct_rank"), col("cume_dist"))
-        .orderBy("c_custkey")
-    }),
-
-    // Data quality — per-type z-score outlier census on event values,
-    // verdicts from the cross-multiplied integer form on cents (no
-    // double mean/variance: merge order and engine cannot flip a flag).
-    "dq_outliers_zscore" -> ((s, dir) => {
-      graft.ops.DataQuality.outliersZScore(
-          Tables.events(s, dir), "event_type", col("value"), z = 2)
-        .orderBy("event_type")
-    }),
-
-    // X45 robust twin — MAD outlier census: |v − median| > k·MAD on
-    // integer cents, so every median is an integer or exact .5 and the
-    // verdict arithmetic is IEEE-exact in both engines.
-    "dq_outliers_mad" -> ((s, dir) => {
-      graft.ops.DataQuality.outliersMad(
-          Tables.events(s, dir), "event_type", col("value"), k = 2)
-        .orderBy("event_type")
-    }),
-
-    // Categorical diversity (Eval.categoricalDiversity) — per-user
-    // Shannon entropy + Gini impurity of the event-type mix: Gini an
-    // exact integer rational, entropy quantized per (group, category)
-    // term BEFORE the integer sum (partial-agg-order-proof), both
-    // replayed by the oracle at every user.
-    // Per-document CHARACTER entropy — the gibberish/boilerplate signal
-    // (natural prose sits in a narrow band; base64 blobs score high,
-    // "aaaa…" scores ~0): pure composition of the existing diversity
-    // op over exploded characters, exact floored-term integers
-    // end-to-end. Rows per doc bounded by the alphabet (~100), so the
-    // census grain is corpus-linear.
-    "x4_char_entropy" -> ((s, dir) => {
-      graft.ops.Eval.categoricalDiversity(
-          Tables.documents(s, dir).select(col("doc_id"),
-            explode(split(col("text"), "")).as("ch")),
-          "doc_id", "ch")
-        .orderBy("doc_id")
-    }),
-
-    "agg_entropy_gini" -> ((s, dir) => {
-      graft.ops.Eval.categoricalDiversity(Tables.events(s, dir),
-          "user_id", "event_type")
-        .orderBy("user_id")
-    }),
-
-    // Winsorization (DataQuality.winsorize) — clamp event cents into
-    // the exact [5,95] percentile-disc band: thresholds from a VALUE-
-    // grain prefix sum (one hash agg + range exchange over distinct
-    // values — the row-level percentile sort never exists), pure
-    // integer 100·cum ≥ p·n comparisons, one-row broadcast clamp. The
-    // per-type census pins threshold values, clip counts on both
-    // sides, and the exact winsorized sum.
-    "dq_winsorize" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).select(col("event_type"),
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)").as("cents"))
-      graft.ops.DataQuality.winsorize(ev, "cents", 5, 95)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("clip_dir") === -1L, 1L).otherwise(0L)).as("n_lo"),
-          sum(when(col("clip_dir") === 1L, 1L).otherwise(0L)).as("n_hi"),
-          sum(col("cents_w")).as("sum_w_cents"),
-          min(col("lo")).as("lo_cents"), min(col("hi")).as("hi_cents"))
-        .orderBy("event_type")
-    }),
-
-    // X4 — BM25 top terms: tf·idf's retrieval-grade sibling (saturating
-    // tf, doc-length normalization); same integer-until-the-formula +
-    // rank-over-rounded-score determinism contract.
-    "x4_bm25_top_terms" -> ((s, dir) => {
-      TextAnalysis.bm25TopTerms(
-          Tables.documents(s, dir).filter(col("doc_id") < 50), "doc_id", "text", 3)
-        .orderBy("doc_id", "rk")
-    }),
-
-    // X4 — BM25 RETRIEVAL: top-5 corpus docs per query, queries derived
-    // deterministically as each query-doc's top-3 tf terms (ties by
-    // term). The scale shape the index exists for: the query-term table
-    // broadcasts, the corpus shuffles only on term, and per-(query,doc)
-    // scores sum DECIMAL-quantized contributions so partial-agg order
-    // can't move the hash. Oracle replays tf/df/avgdl and the exact
-    // same quantize-then-sum.
-    "x4_bm25_retrieve" -> ((s, dir) => {
-      import org.apache.spark.sql.expressions.Window
-      val corpus = Tables.documents(s, dir).filter(col("doc_id") < 300)
-      val qwords = corpus.filter(col("doc_id") % 60 === 0)
-        .select(col("doc_id").as("qid"),
-          explode(TextAnalysis.tokens(lower(col("text")))).as("term"))
-        .filter(length(col("term")) >= 4)
-        .groupBy("qid", "term").agg(count(lit(1)).as("qtf"))
-      val qw = Window.partitionBy(col("qid"))
-        .orderBy(col("qtf").desc, col("term").asc)
-      val qterms = qwords.withColumn("qrk", row_number().over(qw))
-        .filter(col("qrk") <= 3).select("qid", "term")
-      TextAnalysis.bm25Retrieve(corpus, "doc_id", "text", qterms, 5)
-        .orderBy("qid", "rk")
-    }),
-
-    // ML — quality-classifier training as full-batch gradient descent
-    // in EXACT fixed point (Regress.logisticGdFixedPoint: algebraic
-    // fast-sigmoid link in micros, DECIMAL gradient sums, truncating
-    // division — every iteration replays bit-for-bit in the oracle's
-    // unrolled CTE chain). One hash aggregate per iteration, O(dim)
-    // driver rows: the shape that trains on 100 TB. Features: bias,
-    // order price in 10k$ units, order year offset; label = 'F' status.
-    "ml_logreg_gd" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      graft.ops.Regress.logisticGdFixedPoint(o,
-        Seq(lit(1L),
-          call_function("div", (col("o_totalprice") * 100).cast("long"),
-            lit(1000000L)),
-          (year(col("o_orderdate")) - 1995).cast("long")),
-        when(col("o_orderstatus") === "F", 1L).otherwise(0L),
-        iters = 3)
-    }),
-
-    // X4 — the retrieval index UNDER BM25, built as data: per-term
-    // df/cf plus top-8 impact-ordered postings ("doc:tf doc:tf …", tf
-    // desc then doc id). The per-term rollup runs through the bounded
-    // top-k Aggregator (O(k) buffer, map-side partials), so a stopword
-    // term never collects its full posting list anywhere — the oracle's
-    // window-form replay certifies the aggregator's ordering and
-    // tie-breaks cell-for-cell.
-    "x4_inverted_index" -> ((s, dir) => {
-      TextAnalysis.invertedIndex(Tables.documents(s, dir), "doc_id", "text",
-          minDf = 5, maxPostings = 8)
-        .orderBy("term")
-    }),
-
-    // X4 — per-language top terms through the STRING bounded top-k
-    // aggregator (count desc, term asc — O(k) buffer, map-side
-    // partials, so one giant language can't collect its vocabulary
-    // anywhere); the oracle's QUALIFY-window replay certifies ordering
-    // and the lexical tie-break.
-    "x4_top_terms_per_lang" -> ((s, dir) => {
-      val tf = Tables.documents(s, dir)
-        .select(col("lang"),
-          explode(filter(TextAnalysis.tokens(lower(col("text"))),
-            t => t =!= lit(""))).as("term"))
-        .groupBy("lang", "term").agg(count(lit(1)).as("c"))
-      tf.groupBy("lang")
-        .agg(graft.ops.TopK.topKByCount(5)(col("c"), col("term")).as("_t"))
-        .select(col("lang"), posexplode(col("_t")).as(Seq("_i", "e")))
-        .select(col("lang"), (col("_i") + 1).cast("long").as("rk"),
-          col("e._2").as("term"), col("e._1").as("n"))
-        .orderBy("lang", "rk")
-    }),
-
-    // X4 — bigram LM NLL (Laplace smoothing): the unigram CCNet signal
-    // upgraded to conditional probabilities, so word ORDER moves the
-    // score. Model trained on even doc_ids, scored on the held-out odd
-    // half; the oracle replays the pair/prefix censuses, V, the
-    // three-way Laplace backoff CASE, and the shared-shape ln micros —
-    // integer sums, so partial-agg order cannot move the hash.
-    "x4_bigram_nll" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      TextAnalysis.bigramNll(docs.filter(col("doc_id") % 2 === 1),
-          "doc_id", "text", docs.filter(col("doc_id") % 2 === 0))
-        .orderBy("doc_id")
-    }),
-
-    // X4 — Unicode normalization through the codegen'd kernel: the
-    // same visible text arrives composed and decomposed from the web,
-    // and every hash-keyed op (dedup, shingles, BPE vocab) silently
-    // splits on it unless normalized first. The fixture text gets a
-    // decomposed+compatibility prefix planted by formula; the oracle
-    // does NOT call a normalizer — it constructs the EXPECTED NFC and
-    // NFKC strings from the Unicode standard's mappings directly, so
-    // Spark-side kernel agreement is certified against independent
-    // truth, not a second library.
-    "x4_unicode_normalize" -> ((s, dir) => {
-      val raw = concat(lit("café Å ①⑵ ﬁn "),
-        substring(col("text"), 1, 40))
-      Tables.documents(s, dir).select(col("doc_id"), raw.as("t"))
-        .select(col("doc_id"),
-          length(col("t")).cast("long").as("len_raw"),
-          length(graft.expr.UnicodeNormalize(col("t"), "NFC")).cast("long")
-            .as("len_nfc"),
-          md5(graft.expr.UnicodeNormalize(col("t"), "NFC")).as("nfc_md5"),
-          length(graft.expr.UnicodeNormalize(col("t"), "NFKC")).cast("long")
-            .as("len_nfkc"),
-          md5(graft.expr.UnicodeNormalize(col("t"), "NFKC")).as("nfkc_md5"))
-        .orderBy("doc_id")
-    }),
-
-    // X4 — URL parsing to the domain-quota grain (per-domain doc and
-    // host counts, the keys crawl curation caps on). URLs are planted
-    // by formula; Spark REALLY parses them (native parse_url +
-    // regexp_extract registered-domain heuristic) while the oracle
-    // computes host/domain straight from the formula — a parser bug
-    // anywhere shows as a count shift.
-    // X4 — URL canonicalization: the normalize-before-dedup step of a
-    // crawl pipeline (case, default ports, fragments, utm_* tracking
-    // params, query-param order). Four fixture URL shapes per doc; the
-    // oracle constructs the EXPECTED canonical string in closed form —
-    // an independent derivation, not a replay of the algorithm.
-    "x4_url_canonicalize" -> ((s, dir) => {
-      val k = (col("doc_id") % 20).cast("string")
-      val url = when(col("doc_id") % 4 === 0,
-          concat(lit("HTTP://WWW.Site"), k, lit(".COM:80/Path"),
-            (col("doc_id") % 7).cast("string"), lit("?utm_source=x&b=2&a="),
-            (col("doc_id") % 5).cast("string"), lit("#frag")))
-        .when(col("doc_id") % 4 === 1,
-          concat(lit("https://Example"), k, lit(".Org:443")))
-        .when(col("doc_id") % 4 === 2,
-          concat(lit("http://host"), k, lit(".net/a/b?z=1&y="),
-            (col("doc_id") % 3).cast("string"), lit("&utm_campaign=c")))
-        .otherwise(concat(lit("HTTPS://CDN"), k, lit(".io:8443/x?a=1#s")))
-      Tables.documents(s, dir)
-        .select(col("doc_id"),
-          TextAnalysis.canonicalizeUrl(url).as("canon_url"))
-        .orderBy("doc_id")
-    }),
-
-    // X4 — mojibake repair (UTF-8-as-Latin-1, the ftfy fix): every doc
-    // is damaged for real (é → "Ã©" via a bytes round trip) and must
-    // repair EXACTLY back to the planted original, while the clean
-    // original passes through untouched — both certified by md5
-    // against the oracle's independently-built original.
-    "x4_fix_mojibake" -> ((s, dir) => {
-      import s.implicits._
-      val planted = Tables.documents(s, dir)
-        .select(col("doc_id"), col("text")).as[(Long, String)]
-        .map { case (id, text) =>
-          val original = text.replace("e", "é")
-          val moji = new String(original.getBytes("UTF-8"), "ISO-8859-1")
-          (id, original, moji)
-        }.toDF("doc_id", "_orig", "_moji")
-      planted.select(col("doc_id"),
-          md5(TextAnalysis.repairMojibake(col("_moji"))).as("repaired_md5"),
-          (TextAnalysis.repairMojibake(col("_moji")) === col("_orig"))
-            .as("repair_roundtrips"),
-          (TextAnalysis.repairMojibake(col("_orig")) === col("_orig"))
-            .as("clean_passthrough"))
-        .orderBy("doc_id")
-    }),
-
-    "x4_url_domains" -> ((s, dir) => {
-      val urls = Tables.documents(s, dir).select(col("doc_id"),
-        concat(lit("https://w"), (col("doc_id") % 37).cast("string"),
-          lit(".example"), (col("doc_id") % 3).cast("string"),
-          lit(".com/p/"), col("doc_id").cast("string"),
-          lit("?ref="), col("source")).as("url"))
-      urls.select(col("doc_id"), TextAnalysis.urlHost(col("url")).as("host"))
-        .withColumn("domain", TextAnalysis.registeredDomain(col("host")))
-        .groupBy("domain")
-        .agg(count(lit(1)).as("n_docs"), countDistinct(col("host")).as("n_hosts"))
-        .orderBy("domain")
-    }),
-
-    // X4u — PSL-backed registered domains (the two-label heuristic's
-    // documented refinement): planted hosts cover every branch of the
-    // publicsuffix.org algorithm — plain second-level (example.com),
-    // ccTLD second-level (bbc.co.uk — the quota grain the heuristic
-    // gets wrong), a private-section suffix (github.io: each user IS a
-    // registered domain), the canonical wildcard (*.ck → x.foo.ck is
-    // registrable at foo.ck) and its exception (!www.ck → www.ck is a
-    // registered domain), a 3-label exception (city.kawasaki.jp), and
-    // a host that IS a public suffix (co.uk → no registered domain).
-    // Oracle replays the same rule table + matching algebra in SQL.
-    "x4_url_domains_psl" -> ((s, dir) => {
-      val hosts = Tables.documents(s, dir).select(col("doc_id"),
-        when(col("doc_id") % 7 === 0,
-          concat(lit("shop"), (col("doc_id") % 5).cast("string"), lit(".example.com")))
-        .when(col("doc_id") % 7 === 1,
-          concat(lit("news"), (col("doc_id") % 5).cast("string"), lit(".bbc.co.uk")))
-        .when(col("doc_id") % 7 === 2,
-          concat(lit("u"), (col("doc_id") % 5).cast("string"), lit(".github.io")))
-        .when(col("doc_id") % 7 === 3, lit("www.ck"))
-        .when(col("doc_id") % 7 === 4,
-          concat(lit("x"), (col("doc_id") % 5).cast("string"), lit(".foo.ck")))
-        .when(col("doc_id") % 7 === 5, lit("portal.city.kawasaki.jp"))
-        .otherwise(lit("co.uk")).as("host"))
-      graft.ops.PublicSuffix.withRegisteredDomain(hosts, "host", "domain")
-        .withColumn("domain", coalesce(col("domain"), lit("(none)")))
-        .groupBy("domain")
-        .agg(count(lit(1)).as("n_docs"), countDistinct(col("host")).as("n_hosts"))
-        .orderBy("domain")
-    }),
-
-    // X2 — per-label centroid sums in exact fixed point (1e-6 floor →
-    // long): associative integer sums are partition-order- and engine-
-    // independent; this is the IVF centroid training step done honestly.
-    "x2_label_centroids" -> ((s, dir) => {
-      graft.ops.Similarity.labelCentroidSums(
-          Tables.embeddings(s, dir), "label", "embedding")
-        .orderBy("label", "pos")
-    }),
-
-    // X2 scale path — PROJECTED ANN: shortlist in JL-projected 8-d
-    // (outDim multiplies per pair instead of 64), exact re-rank of the
-    // 4k shortlist in full dimension. Verdict-gated like the LSH path:
-    // the fixture's RANDOM vectors are the adversarial case for an 8-d
-    // projection (near-equal distances, little order preserved —
-    // measured 9–24% recall across SFs/factors; clustered real data
-    // concentrates), so the floor pins "the projected shortlist finds
-    // true neighbors at all" plus the exact-sims and rank-shape
-    // contracts, which are recall-independent.
-    "x2_ann_projected" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      val q = annRoster(e)
-      val ann = Similarity.projectedTopK(q, e, "vec_id", "embedding", 5,
-        outDim = 8, shortlistFactor = 4)
-      Similarity.annVerdict(q, e, "vec_id", "embedding", 5, ann,
-          minOverlapPct = 5)
-        .orderBy("qid")
-    }),
-
-    // X2 — sparse random projection (Achlioptas JL): 64-d embeddings
-    // to 8 components via the deterministic {+1,0,−1} formula matrix;
-    // narrow per-row folds, no shuffle anywhere. The oracle replays
-    // the identical fold, certifying the sign formula and the
-    // sequential summation order.
-    "x2_random_projection" -> ((s, dir) => {
-      graft.ops.Similarity.sparseRandomProjection(
-          Tables.embeddings(s, dir), "vec_id", "embedding", outDim = 8)
-        .orderBy("vec_id", "pos")
-    }),
-
-    // X1/X2 — SemDeDup semantic deduplication: coarse-cluster against
-    // deterministic centroids (every 50th vector), then drop any
-    // vector whose cluster holds a smaller-id vector with cosine ≥
-    // 0.35 (threshold probed: the fixture's random vectors peak at
-    // ~0.51, with dozens of pairs above 0.35 at every SF — no planted
-    // near-identical pairs exist, so a "realistic" 0.9+ threshold
-    // would gate nothing). The oracle replays assignment (argmax via
-    // ROW_NUMBER on the identical IEEE double), the within-cluster
-    // pair scan, and the drop rule — so a drifted assignment,
-    // threshold, or tie-break flips corpus-grain rows.
-    "x1_semdedup" -> ((s, dir) => {
-      val e = Tables.embeddings(s, dir)
-      graft.ops.Similarity.semDedup(e, "vec_id", "embedding",
-          e.filter(col("vec_id") % 50 === 0), "vec_id", "embedding", 0.35)
-        .orderBy("vec_id")
-    }),
-
-    // Sketches — approx_count_distinct (HLL++) and approx_percentile,
-    // hash-gated through per-type verdict rows: the sketch VALUES are
-    // impl-defined, but their error CONTRACTS are engine-independent
-    // facts next to the in-query exact values. exact_users is real data
-    // the oracle recomputes; the booleans pin HLL relative error ≤ 15%
-    // (3σ of the default 5% rsd; measured ≤ 6.7% across SFs) and the GK
-    // median's rank within [0.48, 0.52] (accuracy 1000 ⇒ rank error
-    // ≤ 1e-3; measured ≤ 0.5025). A sketch regression — bad merge, bad
-    // accuracy plumbing — flips a hash-gated row.
-    "sketch_approx_events" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val agg = ev.groupBy(col("event_type"))
-        .agg(approx_count_distinct(col("user_id")).as("_a"),
-          countDistinct(col("user_id")).as("exact_users"),
-          expr("approx_percentile(value, 0.5, 1000)").as("_am"),
-          count(lit(1)).as("_n"))
-      ev.select(col("event_type"), col("value"))
-        .join(broadcast(agg), Seq("event_type"))
-        .groupBy(col("event_type"))
-        .agg(max(col("_a")).as("_a"), max(col("exact_users")).as("exact_users"),
-          max(col("_n")).as("_n"),
-          sum(when(col("value") <= col("_am"), 1L).otherwise(0L)).as("_below"))
-        .select(col("event_type"), col("exact_users"),
-          (abs(col("_a") - col("exact_users")) * 100 <= col("exact_users") * 15)
-            .as("hll_err_le_15pct"),
-          (col("_below") * 100 >= col("_n") * 48 &&
-            col("_below") * 100 <= col("_n") * 52).as("median_rank_ok"))
-        .orderBy("event_type")
-    }),
-
-    // X1 — seeded stratified sample by language, hash-gated through
-    // per-stratum verdict rows: WHICH rows a rand(seed) draw keeps is
-    // engine-defined, but the per-stratum totals are exact data the
-    // oracle recomputes, and the kept counts must sit within 5σ of the
-    // binomial target (measured ≤ 2.4σ across SFs) with the same draw
-    // reproducing the same set on an immediate rerun (same session and
-    // plan — the cross-plan instability is exactly why
-    // x1_stratified_sample_hash exists as the production form).
-    "x1_stratified_sample" -> ((s, dir) => {
-      val fr = Map("en" -> 0.5, "de" -> 0.25, "fr" -> 0.25, "es" -> 0.25)
-      val docs = Tables.documents(s, dir)
-      val s1 = graft.ops.Sampling.stratified(docs, "lang", fr, seed = 42L)
-        .select(col("doc_id"), col("lang"))
-      val s2 = graft.ops.Sampling.stratified(docs, "lang", fr, seed = 42L)
-        .select(col("doc_id"), col("lang"))
-      val det = s1.exceptAll(s2).union(s2.exceptAll(s1))
-        .agg(count(lit(1)).as("_diff"))
-      val fCol = element_at(typedLit(fr), col("lang"))
-      docs.filter(col("lang").isin(fr.keys.toSeq: _*))
-        .groupBy(col("lang")).agg(count(lit(1)).as("n_total"))
-        .join(s1.groupBy(col("lang")).agg(count(lit(1)).as("_kept")), Seq("lang"), "left")
-        .withColumn("_k", coalesce(col("_kept"), lit(0L)))
-        .crossJoin(broadcast(det))
-        .select(col("lang"), col("n_total"),
-          (abs(col("_k") - col("n_total") * fCol) <=
-            sqrt(col("n_total") * fCol * (lit(1.0) - fCol)) * 5 + 1).as("frac_ok"),
-          (col("_diff") === 0L).as("rerun_deterministic"))
-        .orderBy("lang")
-    }),
-
-    // X1 — hash-keyed stratified sample: the draw comes from the row's
-    // own id, not a per-partition RNG, so the kept set is invariant to
-    // repartitioning/retries AND engine-portable — this variant hash-
-    // matches DuckDB running the same arithmetic (full oracle, unlike
-    // the rand-seeded form above).
-    "x1_stratified_sample_hash" -> ((s, dir) => {
-      graft.ops.Sampling.stratifiedByHash(Tables.documents(s, dir), "lang", "doc_id",
-          Map("en" -> 0.5, "de" -> 0.25, "fr" -> 0.25, "es" -> 0.25), seed = 42L)
-        .select(col("doc_id"), col("lang"))
-        .orderBy("doc_id")
-    }),
-
-    // X1 — weight-biased fixed-size sample (priority sampling): longer
-    // documents proportionally likelier; the draw comes from the row's
-    // own id so the sample is retry-/partitioning-invariant and the
-    // DuckDB oracle reproduces it exactly (no libm in the priority).
-    "x1_weighted_sample" -> ((s, dir) => {
-      graft.ops.Sampling.weightedPriority(Tables.documents(s, dir), "doc_id",
-          col("n_chars").cast("double"), k = 100, seed = 7L)
-        .select(col("doc_id"), col("lang"), col("n_chars"),
-          round(col("_priority"), 9).as("priority"))
-        .orderBy("priority", "doc_id")
-    }),
-
-    // X1 — deterministic train/val/test split: labels from the row's
-    // own key hash vs cumulative integer thresholds — appends can
-    // never flip an existing row's split (randomSplit can't promise
-    // that). Gate checks the (split, lang) census plus an id-sum
-    // membership checksum.
-    "x1_train_split" -> ((s, dir) => {
-      graft.ops.Sampling.hashSplit(Tables.documents(s, dir), "doc_id",
-          Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1), seed = 5L)
-        .groupBy(col("split"), col("lang"))
-        .agg(count(lit(1)).as("n"), sum(col("doc_id")).cast("long").as("id_sum"))
-        .orderBy("split", "lang")
-    }),
-
-    // X1 — deterministic corpus shuffle (reproducible training ORDER):
-    // distributed orderBy on the row's own key draw — same order on any
-    // cluster/partitioning/engine. The gate takes the first 200 rows of
-    // the shuffled order WITH their sort keys: equality of that set
-    // proves the order prefix, not just membership.
-    "x1_corpus_shuffle" -> ((s, dir) => {
-      val d = Tables.documents(s, dir).select(col("doc_id"), col("lang"))
-      graft.ops.Sampling.deterministicShuffle(d, "doc_id", seed = 13L)
-        .limit(200)
-        .select(col("doc_id"), col("lang"),
-          graft.ops.Sampling.keyDraw(col("doc_id"), seed = 13L).as("sort_key"))
-    }),
-
-    // X1 — exactly-k-per-group inspection sample: 10 docs per lang,
-    // drawn by the rows' own key hash (deterministic, engine-portable,
-    // keyed window ⇒ cost scales with group size).
-    "x1_per_group_sample" -> ((s, dir) => {
-      graft.ops.Sampling.perGroupSample(Tables.documents(s, dir),
-          "lang", "doc_id", k = 10, seed = 11L)
-        .select(col("lang"), col("doc_id"))
-        .orderBy("lang", "doc_id")
-    }),
-
-    // Fellegi-Sunter record linkage (ops.Linkage) — clean customers vs
-    // a formula-built dirty twin (typo'd / suffixed / replaced names by
-    // custkey % 4, shifted balances by custkey % 300, segment wiped at
-    // % 7): nation-blocked candidates (never all-pairs; 1000-row block
-    // cap idle at these SFs — sf1+ would need a finer key), three
-    // integer-micro field comparators (exact/levenshtein≤2/far name,
-    // segment equality, ±100-cent balance band), exact BIGINT score
-    // sum, two-threshold decision. Per-pair gate keeps the plausible
-    // set (score ≥ possible) — noise pairs whose names collide at
-    // lev ≤ 2 ('…123' vs '…124') land here too, the realistic
-    // weak-name-evidence case, all replayed by the oracle.
-    "link_blocked_pairs" -> ((s, dir) => {
-      linkageScored(s, dir).filter(col("score_micro") >= 1000000L)
-        .select(col("l_id"), col("r_id"), col("name_w"), col("seg_w"),
-          col("bal_w"), col("score_micro"), col("decision"))
-        .orderBy("l_id", "r_id")
-    }),
-
-    // Sorted-neighborhood candidates (Linkage.sortedNeighborhood) —
-    // the multi-pass-SNM complement to blocking: global rank by
-    // (balance cents, custkey) through the weight-1 prefix sum (no
-    // row_number window — that's a single reducer at scale), then the
-    // band self-join that materializes each ≤w-apart pair exactly
-    // once. The oracle replays with an actual window row_number and
-    // a rank-theta join; equality certifies the distributed rank AND
-    // the exactly-once pairing.
-    "link_sorted_neighborhood" -> ((s, dir) => {
-      val c = Tables.customer(s, dir).filter(col("c_custkey") < 500)
-        .select(col("c_custkey").as("id"),
-          expr("CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents"))
-      graft.ops.Linkage.sortedNeighborhood(c,
-          Seq(col("cents").asc, col("id").asc), "id", w = 3)
-        .orderBy("rank_a", "rank_b")
-    }),
-
-    // Decision census over the FULL candidate set (noise negatives
-    // included) with summed scores — the volume view of the same
-    // linkage run.
-    "link_decision_census" -> ((s, dir) => {
-      linkageScored(s, dir)
-        .groupBy(col("decision"))
-        .agg(count(lit(1)).as("n"), sum(col("score_micro")).as("sum_score_micro"))
-        .orderBy("decision")
-    }),
-
-    // X4 — Levenshtein fuzzy matching within blocking buckets (record-
-    // linkage on short fields; blocking keys bound the pair scan the way
-    // LSH bands do for long text).
-    "x4_fuzzy_match" -> ((s, dir) => {
-      // full table at driver scales; 1/16 id-hash sample past 50k parts
-      // (sf1.0) where the ORACLE's per-brand levenshtein self-join is
-      // quadratic — the engine's blocked scan is bounded either way
-      graft.ops.Dedup.editDistancePairs(
-          scaleSubset(Tables.part(s, dir), col("p_partkey"), 50000L),
-          "p_partkey", "p_name", Seq("p_brand"), maxDist = 2)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // X4 — SymSpell-path fuzzy matching (deletion-neighborhood hash
-    // candidates instead of the per-block value self-join); same oracle
-    // as x4_fuzzy_match — both paths must produce the identical pair set.
-    "x4_fuzzy_match_deletes" -> ((s, dir) => {
-      graft.ops.Dedup.editDistancePairsDeletes(
-          scaleSubset(Tables.part(s, dir), col("p_partkey"), 50000L),
-          "p_partkey", "p_name", Seq("p_brand"), maxDist = 2)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Time-based RANGE window frame: 7-day trailing revenue per customer.
-    // The frame is value-based (epoch-day ± 6), not row-based — same-day
-    // peers are all in-frame, so the result is order-independent and the
-    // decimal frame sum is exact.
-    "window_range_rolling" -> ((s, dir) => {
-      val epochDay = datediff(col("o_orderdate").cast("date"),
-        lit("1970-01-01").cast("date"))
-      val w = Window.partitionBy(col("o_custkey")).orderBy(epochDay)
-        .rangeBetween(-6, 0)
-      Tables.orders(s, dir)
-        .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"),
-          sum(dec(col("o_totalprice"))).over(w).cast("double").as("rev_7d"),
-          count(lit(1)).over(w).as("n_7d"))
-        .orderBy("o_custkey", "o_orderkey")
-    }),
-
-    // Distribution ranking: ntile deciles + percent_rank/cume_dist over
-    // account balance. ntile is tie-broken by key for a total order;
-    // percent_rank/cume_dist rank over the raw value (rank-based, so
-    // ties are deterministic). NB: a global ORDER BY window is a single-
-    // reducer construct — at 100 TB the scalable form is quantile
-    // bucketing (approx_percentile cutpoints or Packing's two-phase
-    // prefix sum); this query exists for the operator surface.
-    "window_ntile_deciles" -> ((s, dir) => {
-      val wOrd = Window.orderBy(col("c_acctbal").asc, col("c_custkey").asc)
-      val wRank = Window.orderBy(col("c_acctbal").asc)
-      Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_acctbal"),
-          ntile(10).over(wOrd).cast("long").as("decile"),
-          round(percent_rank().over(wRank), 9).as("pct_rank"),
-          round(cume_dist().over(wRank), 9).as("cume"))
-        .orderBy("c_custkey")
-    }),
-
-    // Data-quality audit: unique key, NOT NULL, value range in ONE agg
-    // pass + FK orphan anti-join — long-form (check_name, n) report.
-    "dq_audit_orders" -> ((s, dir) => {
-      graft.ops.DataQuality.audit(Tables.orders(s, dir),
-          key = "o_orderkey",
-          notNull = Seq("o_custkey", "o_orderdate"),
-          nonNegative = Seq("o_totalprice"),
-          fk = Some(("o_custkey", Tables.customer(s, dir), "c_custkey")))
-        .orderBy("check_name")
-    }),
-
-    // Time series — gap-filled daily resample per user (bounded key set
-    // keeps the gate output small; the operator itself is unbounded).
-    "ts_daily_gapfill" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).filter(col("user_id") < 50)
-      graft.ops.TimeSeries.resampleDailyCounts(ev, "user_id", "ts")
-        .orderBy("user_id", "day")
-    }),
-
-    // Time series — forward fill (LOCF): nulls are synthesized
-    // deterministically (value of 'click' events masked), then each
-    // gap repairs to the latest preceding observation per user.
-    "ts_forward_fill" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).filter(col("user_id") < 50)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          when(col("event_type") === "click", lit(null).cast("double"))
-            .otherwise(col("value")).as("value"))
-      graft.ops.TimeSeries.forwardFill(ev, "user_id", "ts", "value", "event_id")
-        .select(col("event_id"), col("user_id"), col("value"),
-          round(col("value_filled"), 6).as("value_filled"))
-        .orderBy("event_id")
-    }),
-
-    // Time series — linear interpolation: the same masked gaps as the
-    // LOCF query, repaired by time-proportional blending between the
-    // neighboring observations instead of carry-forward (edge gaps
-    // stay NULL). Pure IEEE arithmetic on epoch-micros, so the oracle
-    // comparison is exact before the presentation rounding.
-    "ts_interpolate" -> ((s, dir) => {
-      val ev = Tables.events(s, dir).filter(col("user_id") < 50)
-        .select(col("event_id"), col("user_id"), col("ts"),
-          when(col("event_type") === "click", lit(null).cast("double"))
-            .otherwise(col("value")).as("value"))
-      graft.ops.TimeSeries.interpolateLinear(ev, "user_id", "ts", "value", "event_id")
-        .select(col("event_id"), col("user_id"), col("value"),
-          round(col("value_interp"), 6).as("value_interp"))
-        .orderBy("event_id")
-    }),
-
-    // Time series — exact-integer EWMA over per-user inter-arrival gaps
-    // with lull flagging (cadence anomaly screen): the leaky integrator
-    // e = (gap + 7e)/8 in truncating BIGINT micros, seeded with the
-    // first gap, flag when a gap exceeds 4x the smoothed state BEFORE
-    // the update. One hash agg + per-key sorted fold, no windows; the
-    // oracle replays the recurrence as a recursive CTE (depth = the
-    // deepest user's event count, ~90 at every SF).
-    "ts_ewma_gaps" -> ((s, dir) => {
-      graft.ops.TimeSeries.ewmaGaps(
-          Tables.events(s, dir).filter(col("user_id") < 40),
-          "user_id", "ts", "event_id", kDenom = 8, burstFactor = 4)
-        .orderBy("user_id", "event_id")
-    }),
-
-    // Holt linear-trend smoothing (the EWMA family + a trend state) on
-    // per-user value series in BIGINT micros. The trend state goes
-    // negative on decaying series, so the division sign convention is
-    // part of the contract: both engines TRUNCATE toward zero (Spark
-    // div == DuckDB //, measured on negatives). The oracle is a
-    // recursive-CTE replay of both recurrences, so the hash certifies
-    // every level/trend/forecast cell across ~90 chained steps per key.
-    // Forecast backtest — the eval family meeting time series: per-key
-    // MAE and worst error of Holt's ONE-STEP-AHEAD forecasts (each
-    // prediction was made before observing its row, so the residuals
-    // are honest out-of-sample errors, not fit residuals). Exact
-    // integers end to end: abs diffs of micros, trunc-div mean.
-    "ts_forecast_backtest" -> ((s, dir) => {
-      val fc = graft.ops.TimeSeries.holtTrend(
-        Tables.events(s, dir).filter(col("user_id") < 40),
-        "user_id", "ts", "event_id",
-        expr("CAST(floor(value * 1000000 + 0.5) AS BIGINT)"),
-        kLevel = 4, kTrend = 8)
-      fc.groupBy("user_id").agg(
-          count(lit(1)).as("n_forecasts"),
-          expr("sum(abs(value_micro - forecast_micro)) div count(1)")
-            .as("mae_micro"),
-          max(abs(col("value_micro") - col("forecast_micro")))
-            .as("worst_err_micro"))
-        .orderBy("user_id")
-    }),
-
-    // The corpus DATA CARD — the one-row summary an LLM data team
-    // publishes with a release: volume, language/source breadth, token
-    // mass, quality rate, exact-dup rate, mean length — every number
-    // exact and oracle-replayable, most from ONE aggregation pass.
-    "pipeline_data_card" -> ((s, dir) => {
-      val d = Tables.documents(s, dir)
-      val nt = TextAnalysis.tokenCount(col("text"))
-      val stops = TextAnalysis.wordOccurrences(lower(col("text")),
-        TextAnalysis.englishStopwords)
-      d.select(col("lang"), col("source"), col("text"), nt.as("_nt"),
-          length(col("text")).cast("long").as("_nc"),
-          TextAnalysis.qualityGate(nt, length(col("text")).cast("long"),
-            stops).as("_q"))
-        .agg(count(lit(1)).as("n_docs"),
-          countDistinct(col("lang")).as("n_langs"),
-          countDistinct(col("source")).as("n_sources"),
-          sum(col("_nt")).as("total_tokens"),
-          sum(col("_nc")).as("total_chars"),
-          sum(when(col("_q"), 1L).otherwise(0L)).as("n_quality"),
-          (count(lit(1)) - countDistinct(col("text"))).as("n_exact_dups"))
-        .withColumn("quality_rate_micro",
-          expr("(n_quality * 1000000) div n_docs"))
-        .withColumn("mean_tokens_micro",
-          expr("(total_tokens * 1000000) div n_docs"))
-    }),
-
-    "ts_holt_trend" -> ((s, dir) => {
-      graft.ops.TimeSeries.holtTrend(
-          Tables.events(s, dir).filter(col("user_id") < 40),
-          "user_id", "ts", "event_id",
-          expr("CAST(floor(value * 1000000 + 0.5) AS BIGINT)"),
-          kLevel = 4, kTrend = 8)
-        .orderBy("user_id", "event_id")
-    }),
-
-    // Seasonal decomposition (TimeSeries.seasonalDecompose) — per-type
-    // daily revenue split into trend + day-of-week seasonal + residual,
-    // all exact trunc-micros (centered 7-day MA keeps its ×7 scaling
-    // until one DIV; detrended values are pure integers; phase is
-    // day_num % 7, immune to dayofweek-numbering differences). The
-    // daily series is calendar-bounded per key, so the per-key range
-    // window is safe at any corpus scale; edge days pin NULL
-    // trend/residual. The oracle replays the whole pipeline through
-    // window frames.
-    "ts_seasonal_decompose" -> ((s, dir) => {
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"),
-          datediff(to_date(col("ts")), lit("1970-01-01").cast("date"))
-            .cast("long").as("day_num"))
-        .agg(sum(expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-          .as("v_cents"))
-      graft.ops.TimeSeries.seasonalDecompose(daily, "event_type",
-          "day_num", "v_cents")
-        .orderBy("event_type", "day_num")
-    }),
-
-    // Business-day SLA census: order→ship lag in BUSINESS days by
-    // closed-form integer weekday arithmetic (no calendar table, no
-    // engine dow() numbering surface — weekday-ness is (d+3) mod 7 ≤ 4
-    // on epoch days, prefix-counted via a 7-entry LUT), rolled up per
-    // order month.
-    "ts_business_day_lag" -> ((s, dir) => {
-      val j = Tables.lineitem(s, dir)
-        .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
-        .select(year(col("o_orderdate")).cast("long").as("y"),
-          month(col("o_orderdate")).cast("long").as("m"),
-          graft.ops.TimeSeries.businessDaysBetween(
-            expr("datediff(to_date(o_orderdate), DATE'1970-01-01')"),
-            expr("datediff(to_date(l_shipdate), DATE'1970-01-01')")).as("bd"))
-      j.groupBy("y", "m")
-        .agg(count(lit(1)).as("n"), sum(col("bd")).as("sum_bdays"),
-          min(col("bd")).as("min_bdays"), max(col("bd")).as("max_bdays"))
-        .orderBy("y", "m")
-    }),
-
-    // Weighted percentile-disc per language: the doc length at which
-    // half (and 90%) of the TOKEN MASS sits — the curation statistic
-    // when rows carry unequal weight. Exact integer rule 100·cumW ≥
-    // p·W over the value-grain cumulative weight; the window runs on
-    // the COLLAPSED (lang, n_chars) frame, never row grain.
-    "agg_weighted_median" -> ((s, dir) => {
-      graft.ops.DataQuality.weightedPercentiles(
-          Tables.documents(s, dir), "lang", col("n_chars"),
-          TextAnalysis.tokenCount(col("text")), Seq(50, 90))
-        .orderBy("lang")
-    }),
-
-    // Trailing 7-day variance NUMERATOR per priority — rolling-σ
-    // anomaly primitive with zero doubles: n·Σx²−(Σx)² as exact
-    // BIGINTs over a key-partitioned RANGE frame at daily grain
-    // (calendar-bounded — the seasonal-decompose safety argument).
-    "window_rolling_variance" -> ((s, dir) => {
-      // WHOLE-DOLLAR grain (floored — Spark's decimal→long cast
-      // truncates but DuckDB's ROUNDS, so the floor is explicit on
-      // both sides): cents daily sums overflowed the BIGINT x² at
-      // sf0.1; dollars keep the exact numerator in range to ~sf30,
-      // past which rollingMoments aborts loudly by contract
-      val daily = Tables.orders(s, dir)
-        .groupBy(col("o_orderpriority"),
-          expr("CAST(datediff(to_date(o_orderdate), DATE'1970-01-01') AS BIGINT)")
-            .as("day_num"))
-        .agg(sum(expr(
-          "CAST(FLOOR(CAST(o_totalprice AS DECIMAL(18,2))) AS BIGINT)"))
-          .as("v_dollars"))
-      graft.ops.TimeSeries.rollingMoments(daily, "o_orderpriority",
-          "day_num", "v_dollars", windowDays = 7)
-        .orderBy("o_orderpriority", "day_num")
-    }),
-
-    // Two-sided CUSUM changepoint detection over per-priority WEEKLY
-    // revenue (345 weeks per key — calendar-bounded series). Exact
-    // integer recurrences s± = max(0, s±' ± (x − target) − kappa) in
-    // cents, strict-> alarm, alarming side resets (changePOINTS,
-    // plural); per-key target/slack/threshold are derived from the
-    // series' own trunc-mean and joined in as columns. The oracle
-    // replays the fold as a recursive CTE — a missed reset, an
-    // off-by-one week, or an inclusive-vs-strict alarm flips the hash.
-    "ts_cusum_changepoints" -> ((s, dir) => {
-      val weekly = Tables.orders(s, dir)
-        .groupBy(col("o_orderpriority"),
-          expr("datediff(to_date(o_orderdate), DATE'1970-01-01') div 7")
-            .cast("long").as("week_num"))
-        .agg(sum(expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-          .as("rev_cents"))
-      val stats = weekly.groupBy("o_orderpriority")
-        .agg(expr("sum(rev_cents) div count(1)").as("mu"))
-      graft.ops.TimeSeries.cusum(weekly.join(stats, "o_orderpriority"),
-          "o_orderpriority", "week_num", col("rev_cents"),
-          col("mu"), expr("mu div 20"), expr("mu div 2"))
-        .orderBy("o_orderpriority", "week_num")
-    }),
-
-    // Time series — sliding-window agg in batch mode (2h window, 1h
-    // slide): each row replicates into 2 windows map-side, then a plain
-    // hash aggregate; the exact expression Structured Streaming plans.
-    "window_sliding_batch" -> ((s, dir) => {
-      graft.ops.TimeSeries.withSlidingWindow(
-          Tables.events(s, dir), "ts", "2 hours", "1 hour")
-        .groupBy(col("window_start"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          sum(dec(col("value"))).cast("double").as("sum_v"))
-        .orderBy("window_start", "event_type")
-    }),
-
-    // Streaming — tumbling 1h window agg via AvailableNow drain.
-    "stream_tumbling_agg" -> ((s, dir) =>
-      graft.streaming.Streams.tumblingHourlyAgg(s, dir)),
-
-    // Streaming — 2h/1h hopping windows: every event in exactly two
-    // overlapping windows (oracle replicates each event to its two
-    // covering window starts).
-    "stream_hopping_agg" -> ((s, dir) =>
-      graft.streaming.Streams.hoppingTwoHourAgg(s, dir)),
-
-    // Streaming — 30-min-gap session windows per user.
-    "stream_sessionize" -> ((s, dir) =>
-      graft.streaming.Streams.sessionizeByGap(s, dir)),
-
-    // Streaming — arbitrary per-key state via mapGroupsWithState.
-    "stream_user_state" -> ((s, dir) =>
-      graft.streaming.Streams.statefulUserState(s, dir)),
-
-    // Streaming — exact dedup within watermark, then counts per type.
-    "stream_dedup_counts" -> ((s, dir) =>
-      graft.streaming.Streams.dedupCounts(s, dir)),
-
-    // Streaming — stream-stream interval join (two watermarks, join
-    // state bounded by the time-range condition).
-    "stream_join_clickview" -> ((s, dir) =>
-      graft.streaming.Streams.clickViewJoin(s, dir)),
-
-    // Streaming — stream-stream LEFT OUTER interval join: unmatched
-    // clicks emit null view_ids only on state expiry (watermark-
-    // driven); output restricted to clicks the final watermark fully
-    // decided, so the batch oracle's cut is identical.
-    "stream_join_left_outer" -> ((s, dir) =>
-      graft.streaming.Streams.clickViewLeftJoin(s, dir)),
-
-    // Streaming — stream-stream FULL OUTER interval join: expired
-    // unmatched rows from BOTH sides emit null-extended; two-threshold
-    // watermark cut (views expire an hour later than clicks) applied
-    // identically in the batch oracle.
-    "stream_join_full_outer" -> ((s, dir) =>
-      graft.streaming.Streams.clickViewFullJoin(s, dir)),
-
-    // Streaming — stream-STATIC dimension-enrichment join (stateless;
-    // static side broadcast per micro-batch).
-    "stream_static_enrich" -> ((s, dir) =>
-      graft.streaming.Streams.staticEnrichAgg(s, dir)),
-
-    // Streaming — flatMapGroupsWithState sessionizer with EVENT-TIME
-    // TIMEOUT (watermark closes idle sessions). Whether a user's FINAL
-    // session has been closed by the watermark at drain end depends on
-    // micro-batch boundaries, so the gate keeps only deterministically
-    // closed sessions: those not containing the user's last event
-    // (every such session emits exactly once, by event or by timeout,
-    // with identical content either way).
-    "stream_session_timeout" -> ((s, dir) => {
-      val out = graft.streaming.Streams.sessionizeWithTimeout(s, dir)
-      val lastTs = Tables.events(s, dir).groupBy("user_id")
-        .agg(max(unix_micros(col("ts"))).as("_max_us"))
-      // user-cardinality frame — no broadcast hint (AQE decides by size)
-      out.join(lastTs, "user_id")
-        .filter(col("session_end_us") - lit(1800000000L) =!= col("_max_us"))
-        .select("user_id", "session_start_us", "session_end_us", "n_events")
-        .orderBy("user_id", "session_start_us")
-    }),
-
-    // Streaming — engine-NATIVE session_window aggregation (append +
-    // watermark): the zero-custom-code sessionizer beside the
-    // flatMapGroupsWithState timeout form. Gate keeps sessions BOTH
-    // cuts agree are closed: not the user's final session, and ending
-    // clear of the terminal 40-minute watermark band (10-min delay +
-    // 30-min gap) where emission depends on micro-batch boundaries.
-    "stream_session_window" -> ((s, dir) => {
-      val out = graft.streaming.Streams.sessionWindowStream(s, dir)
-      val ev = Tables.events(s, dir)
-      val lastTs = ev.groupBy("user_id")
-        .agg(max(unix_micros(col("ts"))).as("_max_us"))
-      val globalCut = ev.agg((max(unix_micros(col("ts"))) - 2400000000L).as("_cut"))
-      out.join(lastTs, "user_id").crossJoin(broadcast(globalCut))
-        .filter(col("session_end_us") - lit(1800000000L) =!= col("_max_us") &&
-          col("session_end_us") <= col("_cut"))
-        .select("user_id", "session_start_us", "session_end_us", "n_events")
-        .orderBy("user_id", "session_start_us")
-    }),
-
-    // Streaming — transformWithState (Spark 4 arbitrary-state API):
-    // per-(user, event type) running counts in a per-key MapState on
-    // RocksDB; final counts equal the batch GROUP BY.
-    "stream_tws_type_counts" -> ((s, dir) =>
-      graft.streaming.Streams.typeCountsTws(s, dir)),
-
-    // W5 — SCD2 type-2 history: per-user event_type version intervals
-    // (valid_from/valid_to/is_current). Pre-deduped to one row per
-    // (user, ts) so the history is deterministic.
-    "w5_scd2_history" -> ((s, dir) => {
-      val ev = Dedup.firstPerKey(
-        Tables.events(s, dir)
-          .filter(col("user_id") < 40)
-          .select(col("user_id"), col("ts"), col("event_type"), col("event_id")),
-        Seq("user_id", "ts"), Seq("event_id"))
-      Merge.scd2History(ev.drop("event_id"), "user_id", "event_type", "ts")
-        .orderBy("user_id", "valid_from")
-    }),
-
-    // Time travel over the SCD2 history: every user's state AS OF a
-    // mid-corpus instant, half-open [valid_from, valid_to) semantics —
-    // at most one row per key by interval tiling, no dedup needed; a
-    // pure filter (the lakehouse form prunes on valid_from zone maps).
-    // Users first seen after the instant are absent. The oracle
-    // replays the history build AND the same interval predicate.
-    "w5_scd2_asof" -> ((s, dir) => {
-      val ev = Dedup.firstPerKey(
-        Tables.events(s, dir)
-          .filter(col("user_id") < 40)
-          .select(col("user_id"), col("ts"), col("event_type"), col("event_id")),
-        Seq("user_id", "ts"), Seq("event_id"))
-      Merge.scd2AsOf(
-          Merge.scd2History(ev.drop("event_id"), "user_id", "event_type", "ts"),
-          lit("2024-01-15 12:00:00").cast("timestamp"))
-        .orderBy("user_id")
-    }),
-
-    // Point-in-time dimension join — every event enriched with the
-    // SCD2 state its user was in AT that event's own timestamp (the
-    // effective-dated join every fact load runs). Equi-join on
-    // user_id with the interval predicate as residual condition: no
-    // inequality-join blowup, per-fact work bounded by that user's
-    // version count. Exactly one version matches per event by
-    // interval tiling.
-    "w5_scd2_pit_join" -> ((s, dir) => {
-      val ev0 = Tables.events(s, dir).filter(col("user_id") < 40)
-        .select(col("user_id"), col("ts"), col("event_type"), col("event_id"))
-      val hist = Merge.scd2History(
-          Dedup.firstPerKey(ev0, Seq("user_id", "ts"), Seq("event_id"))
-            .drop("event_id"),
-          "user_id", "event_type", "ts")
-        .withColumnRenamed("event_type", "state")
-      Merge.pitJoin(ev0.select(col("event_id"), col("user_id"), col("ts")),
-          hist, "user_id", "ts")
-        .select("event_id", "user_id", "ts", "state", "valid_from", "valid_to")
-        .orderBy("event_id")
-    }),
-
-    // Skew — salted join must equal the plain join (the oracle runs the
-    // plain form): lineitem fact salted, orders dim exploded ×8.
-    // X15 — census-driven salted join. autoSaltedJoin sizes the salt
-    // from the Misra-Gries heavy-hitter census so the largest salted
-    // partition fits the per-task row budget; on THIS fixture (TPC-H
-    // orders: ≤ 7 lines each, no pathological key) the census finds no
-    // hot key and the op degrades to exactly a plain join — zero dim
-    // inflation, zero extra shuffle. The blanket fixed-factor form this
-    // replaced exploded the whole dim ×8 unconditionally, which is what
-    // spilled at the ×50 probe (BENCH_NOTES round-8). The salted path
-    // under REAL skew is exercised by skew_salted_auto below.
-    "skew_salted_join" -> ((s, dir) => {
-      val fact = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_extendedprice"))
-      val dim = Tables.orders(s, dir)
-        .select(col("o_orderkey").as("l_orderkey"), col("o_orderstatus"))
-      graft.ops.Skew.autoSaltedJoin(fact, dim, "l_orderkey")
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_lines"),
-          sum(dec(col("l_extendedprice"))).cast("double").as("sum_price"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // X15 — the ENGAGED branch of autoSaltedJoin: ~30% of lineitem is
-    // remapped onto one existing orderkey (the planted "unknown member"
-    // pathology), the census detects it, and ONLY that key takes the
-    // salted path (factor = ceil(hot/target)) while the other 70% joins
-    // plain against the uninflated dim. Oracle is the unsalted SQL —
-    // inner equi-joins are partition-agnostic, so salting must be
-    // invisible in the output.
-    "skew_salted_auto" -> ((s, dir) => {
-      val dim = Tables.orders(s, dir)
-        .select(col("o_orderkey").as("k"), col("o_orderstatus"))
-      val hotKey = dim.agg(min(col("k"))).first().getLong(0) // O(1) driver row
-      val fact = Tables.lineitem(s, dir)
-        .select(when(col("l_orderkey") % 10 < 3, lit(hotKey))
-          .otherwise(col("l_orderkey")).as("k"), col("l_extendedprice"))
-      graft.ops.Skew.autoSaltedJoin(fact, dim, "k", targetRowsPerTask = 2000L)
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_lines"),
-          sum(dec(col("l_extendedprice"))).cast("double").as("sum_price"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // S10 variant — ORC round-trip: columnar sink/source with the schema
-    // riding in the file (no infer+coerce hop needed).
-    "orc_roundtrip_load" -> ((s, dir) =>
-      eventsRoundTrip(s, dir, "orc", Tables.writeOrc,
-        p => Tables.readOrc(s, p), coerce = false)),
-
-    // S10 variant — JSON-lines round-trip through schema inference +
-    // coercion (same read-infer-then-coerce split as the CSV hop).
-    "json_roundtrip_load" -> ((s, dir) =>
-      eventsRoundTrip(s, dir, "jsonl", Tables.writeJsonl,
-        p => Tables.readJsonl(s, p), coerce = true)),
-
-    // XML round-trip (S10x): same write→infer→coerce→aggregate contract
-    // as the CSV/JSONL boundaries, through Spark 4's BUILT-IN XML
-    // datasource (no external spark-xml package). Equality with the
-    // direct-aggregation oracle proves no value is lost or re-typed
-    // through XML serialization. XML is the EXPENSIVE interchange (StAX
-    // row-at-a-time writer + parse-and-infer reader, ~5× CSV here), so
-    // the gate rides a deterministic 10% slice — scale-proportional,
-    // same fidelity contract; full-table round-trips stay with CSV/JSONL.
-    "xml_roundtrip_load" -> ((s, dir) =>
-      eventsRoundTrip(s, dir, "xml", Tables.writeXml,
-        p => Tables.readXml(s, p), coerce = true,
-        slice = Some(col("event_id") % 10 === 0))),
-
-    // Unpivot / melt — wide→long (the inverse of pivot; pandas melt):
-    // per-row measure columns become (measure, val) pairs. Narrow
-    // map-side transform, no shuffle.
-    "unpivot_lineitem_measures" -> ((s, dir) => {
-      Tables.lineitem(s, dir)
-        .filter(col("l_orderkey") < 100)
-        .select(col("l_orderkey"), col("l_linenumber").cast("long").as("l_linenumber"),
-          col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax"))
-        .unpivot(
-          Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax")),
-          "measure", "val")
-        .orderBy("l_orderkey", "l_linenumber", "measure")
-    }),
-
-    // Skew detection — EXACT heavy hitters via Misra-Gries sketch +
-    // broadcast verify pass (bounded O(counters) state; provably no
-    // true heavy hitter missed). The detection step that decides which
-    // keys need salting before a 100 TB shuffle.
-    "skew_heavy_hitters" -> ((s, dir) => {
-      graft.ops.Skew.heavyHitters(Tables.orders(s, dir), "o_custkey",
-          perMille = 1, counters = 2048)
-        .orderBy("o_custkey")
-    }),
-
-    // Count-Min sketch (ops/Sketch): ONE capped hash agg builds the
-    // 4×1024-cell summary, then every live event_type plus three absent
-    // probes is point-estimated. The oracle recomputes exact counts;
-    // est_ge_true is the provable one-sided CMS guarantee, and
-    // est_eq_true is measured-then-pinned for THIS key set (5 live keys
-    // spread over 1024 columns × 4 independent hash rows — verified
-    // collision-free at all three SFs before pinning; the spec owns the
-    // forced-collision behavior).
-    // Spark's native approximate-percentile sketch (percentile_approx,
-    // the KLL-family summary — THE quantile path at 100 TB, where the
-    // exact form needs a value-grain prefix-sum pass) verdict-gated
-    // like HLL: estimates must be REAL data elements whose exact rank
-    // (recomputed) sits within the sketch's documented 1/accuracy rank
-    // error of the target. The estimates themselves are merge-order-
-    // dependent, so only the guarantees gate — never raw values.
-    "sketch_approx_percentile" -> ((s, dir) => {
-      val v = Tables.orders(s, dir).select(
-        expr("CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
-          .as("cents"))
-      val ps = Seq(1, 5, 25, 50, 75, 95, 99)
-      val est = v.agg(
-        percentile_approx(col("cents"),
-          array(ps.map(p => lit(p / 100.0)): _*), lit(10000)).as("ests"),
-        count(lit(1)).as("n"))
-      val e = est.select(col("n"),
-          posexplode(col("ests")).as(Seq("i", "est")))
-        .withColumn("p", element_at(array(ps.map(lit): _*), col("i") + 1))
-      v.crossJoin(broadcast(e))
-        .groupBy(col("p"), col("n"), col("est"))
-        .agg(sum(when(col("cents") <= col("est"), 1L).otherwise(0L))
-            .as("_rank"),
-          sum(when(col("cents") === col("est"), 1L).otherwise(0L))
-            .as("_hits"))
-        .select(col("p"), col("n"),
-          (col("_hits") > 0L).as("est_is_member"),
-          // the rank contract holds for SOME rank inside the estimate's
-          // tie span [count(<est)+1, count(<=est)] — gate on interval
-          // overlap with target ± eps, not the single upper-rank point
-          // (a heavily tied value overshoots count(<=est) by the whole
-          // tie width even when the sketch met its guarantee)
-          (((col("_rank") - col("_hits") + 1L) * 10000L <=
-              col("p") * col("n") * 100L + col("n") + 10000L) &&
-            (col("_rank") * 10000L >=
-              col("p") * col("n") * 100L - col("n") - 10000L))
-            .as("rank_within_eps"))
-        .orderBy("p")
-    }),
-
-    // Misra–Gries heavy hitters — the DETERMINISTIC frequent-items
-    // sketch (k=32 counters, n/33 error). Key domain is a planted
-    // skew: 30% of events collapse onto 7 hot keys, the rest spread
-    // over the user tail (offset past the hot range) — so true heavy
-    // hitters exist AND eviction churn is real. The verdict emits one
-    // row per TRUE heavy key (exact counts, oracle-replayed) and pins
-    // the two MG guarantees measured: every heavy key survived the
-    // sketch, and its estimate sits in [c − n/33, c]. The surviving
-    // sub-threshold counter SET is partition-layout-dependent by
-    // design, so only the guarantees gate — never raw counters.
-    "sketch_misra_gries" -> ((s, dir) => {
-      val keyed = Tables.events(s, dir).select(
-        when(pmod(col("user_id"), lit(10)) < 3, pmod(col("user_id"), lit(7)))
-          .otherwise(col("user_id") + 1000000L).as("k"))
-      val sk = graft.ops.Sketch.misraGries(keyed, col("k"), 32)
-      val exact = keyed.groupBy(col("k")).agg(count(lit(1)).as("n_true"))
-      val tot = keyed.agg(count(lit(1)).as("n"))
-      exact.crossJoin(broadcast(tot))
-        .filter(col("n_true") * 33 > col("n"))
-        .join(sk, col("k") === col("key"), "left")
-        .select(col("k"), col("n_true"),
-          col("est").isNotNull.as("present_in_sketch"),
-          (col("est").isNotNull && col("est") <= col("n_true") &&
-            (col("n_true") - col("est")) * 33 <= col("n")).as("est_in_bound"))
-        .orderBy("k")
-    }),
-
-    "sketch_countmin" -> ((s, dir) => {
-      import s.implicits._
-      val ev = Tables.events(s, dir)
-      val sk = graft.ops.Sketch.countMin(ev, "event_type", depth = 4, width = 1024)
-      val probes = ev.select(col("event_type").as("key")).distinct()
-        .unionByName(Seq("ghost_a", "ghost_b", "ghost_c").toDF("key"))
-      val truth = ev.groupBy(col("event_type").as("key")).agg(count(lit(1)).as("_n"))
-      graft.ops.Sketch.cmsEstimate(sk, probes, "key", depth = 4, width = 1024)
-        .join(truth, Seq("key"), "left")
-        .select(col("key"), coalesce(col("_n"), lit(0L)).as("n_true"),
-          (col("est") >= coalesce(col("_n"), lit(0L))).as("est_ge_true"),
-          (col("est") === coalesce(col("_n"), lit(0L))).as("est_eq_true"))
-        .orderBy("key")
-    }),
-
-    // Planner-stats composition: equi-join cardinality estimated from
-    // two Count-Min sketches ALONE (|A ⋈ B| = Σ_k f_A·f_B as the min
-    // cell-wise inner product) — |lineitem ⋈ lineitem('R')| on
-    // l_partkey without touching either table at estimate time.
-    // Verdict rows: exact_join_size is oracle-recomputed; the
-    // one-sided (est ≥ exact, collisions only add) and within-50%
-    // bounds are pinned. The width is SIZED FROM THE KEY CARDINALITY
-    // (r14, the production answer: relative excess ≈ distinct-keys/w,
-    // so w = nextPow2(4·P̂) from a cheap HLL pre-pass keeps the excess
-    // ≤ ~25% at EVERY scale — the fixed 65536 floor measured ~30% at
-    // sf0.1's 20k keys and 3× over at sf1.0's 200k; in production the
-    // planner's column stats supply P̂ for free).
-    "sketch_cm_join_size" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val a = li.select(col("l_partkey"))
-      val b = li.filter(col("l_returnflag") === "R").select(col("l_partkey"))
-      val keys = a.agg(approx_count_distinct(col("l_partkey")))
-        .first().getLong(0)
-      val d = 5
-      // width math stays in Long end-to-end (r15): Integer.highestOneBit
-      // on a .toInt of 4·keys−1 overflows past ~2^29 keys and *2 wraps
-      // to 0/negative at 2^30 — exactly the under-width regime the
-      // sizing exists to prevent. Clamp at 2^27 cells (5×2^27 Long
-      // counters ≈ 5 GiB, the sane per-sketch ceiling) before toInt.
-      val w = math.min(1L << 27, math.max(65536L,
-        java.lang.Long.highestOneBit(math.max(1L, 4L * keys - 1L)) * 2L))
-        .toInt
-      val est = graft.ops.Sketch.cmsJoinSizeEstimate(
-        graft.ops.Sketch.countMin(a, "l_partkey", d, w),
-        graft.ops.Sketch.countMin(b, "l_partkey", d, w), d)
-      val exact = a.groupBy("l_partkey").agg(count(lit(1)).as("_na"))
-        .join(b.groupBy("l_partkey").agg(count(lit(1)).as("_nb")),
-          Seq("l_partkey"))
-        .agg(coalesce(sum(col("_na") * col("_nb")), lit(0L))
-          .as("exact_join_size"))
-      exact.crossJoin(est)
-        .select(col("exact_join_size"),
-          (col("join_size_est") >= col("exact_join_size")).as("est_ge_exact"),
-          (col("join_size_est") * 100 <= col("exact_join_size") * 150)
-            .as("est_within_50pct"))
-    }),
-
-    // AMS tug-of-war F2 sketch: per-event-type second moment of the
-    // user_id frequency vector — self-join size / skew mass — from a
-    // 5×256 signed-counter sketch. Verdict rows: f2_exact is real data
-    // the oracle recomputes (Σ count²); est_in_30pct pins the median-
-    // of-rows estimator's accuracy on this corpus; merge_exact pins
-    // SIGNED linearity — the sketch of the full stream equals the
-    // cell-wise SUM of two half-stream sketches exactly (the property
-    // Count-Min's min-estimate lacks), certified by a full-outer
-    // null-safe cell compare riding the same result row.
-    "sketch_ams_f2" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_type"), col("user_id"), col("event_id"))
-      val sk = graft.ops.Sketch.amsSketch(ev, "user_id", depth = 5,
-        width = 256, groupCols = Seq("event_type"))
-      val est = graft.ops.Sketch.amsF2Estimate(sk, depth = 5,
-        groupCols = Seq("event_type"))
-      val exact = ev.groupBy("event_type", "user_id")
-        .agg(count(lit(1)).as("_n"))
-        .groupBy("event_type").agg(sum(col("_n") * col("_n")).as("f2_exact"))
-      val half = (p: Int) => graft.ops.Sketch.amsSketch(
-        ev.filter(pmod(col("event_id"), lit(2)) === p), "user_id",
-        depth = 5, width = 256, groupCols = Seq("event_type"))
-      val merged = half(0).unionByName(half(1))
-        .groupBy("event_type", "r", "c").agg(sum("cell").as("mcell"))
-      val mergeOk = sk.withColumnRenamed("cell", "fcell")
-        .join(merged, Seq("event_type", "r", "c"), "full")
-        .groupBy("event_type")
-        .agg(expr("every(coalesce(fcell, 0L) = coalesce(mcell, 0L))")
-          .as("merge_exact"))
-      exact.join(est, Seq("event_type")).join(mergeOk, Seq("event_type"))
-        .select(col("event_type"), col("f2_exact"),
-          (abs(col("f2_est") - col("f2_exact")) * 100 <=
-            col("f2_exact") * 30).as("est_in_30pct"),
-          col("merge_exact"))
-        .orderBy("event_type")
-    }),
-
-    // Count-Min built INCREMENTALLY from the event STREAM, then
-    // certified two ways: per-key estimates against the oracle's exact
-    // counts (same verdict rows as sketch_countmin), and
-    // stream_matches_batch — a full-outer cell-for-cell comparison of
-    // the streamed sketch against the batch-built one riding the same
-    // result (null-safe equality; any cell drift flips every row's
-    // pinned TRUE). Linearity is what makes sketches incremental; this
-    // gate proves the engine's streaming path preserves it.
-    // Streamed AMS F2 — the signed-linearity twin of stream_countmin:
-    // the sketch built incrementally across micro-batches must be
-    // cell-identical to the batch build (full-outer null-safe cell
-    // compare riding the result row), and the F2 estimate from the
-    // STREAMED sketch must meet the batch gate's 30% bound against the
-    // oracle-recomputed exact F2 over user_id.
-    "stream_ams_f2" -> ((s, dir) => {
-      val sk = graft.streaming.Streams.amsStream(s, dir, depth = 5, width = 256)
-      val ev = Tables.events(s, dir)
-      val batchSk = graft.ops.Sketch.amsSketch(ev, "user_id",
-        depth = 5, width = 256)
-      val agreement = sk
-        .join(batchSk.withColumnRenamed("cell", "cell_b"), Seq("r", "c"), "full")
-        .agg(sum(when(coalesce(col("cell"), lit(0L)) <=>
-            coalesce(col("cell_b"), lit(0L)), lit(0L)).otherwise(lit(1L)))
-          .as("_mm"))
-      val est = graft.ops.Sketch.amsF2Estimate(sk, depth = 5)
-      val exact = ev.groupBy("user_id").agg(count(lit(1)).as("_n"))
-        .agg(sum(col("_n") * col("_n")).as("f2_exact"))
-      exact.crossJoin(est).crossJoin(broadcast(agreement))
-        .select(col("f2_exact"),
-          (abs(col("f2_est") - col("f2_exact")) * 100 <=
-            col("f2_exact") * 30).as("est_in_30pct"),
-          (col("_mm") === 0L).as("stream_matches_batch"))
-    }),
-
-    // STREAMING near-dup admission: new docs (doc_id % 5 == 0) arrive
-    // as a file-source stream, are LSH-banded per row (stateless), and
-    // join a precomputed static bucket index of the historical corpus
-    // (doc_id % 5 != 0) with exact-Jaccard verification — the dedup
-    // gate a live ingestion pipeline runs. Verdict: truth = exact
-    // all-pairs new×hist string-shingle Jaccard (recomputed by the
-    // oracle); emitted_all_true pins zero false admissions-blocks,
-    // recall_floor_met pins ≥70% of true collisions caught (the
-    // documented LSH trade at the b=8/r=4 S-curve).
-    "stream_minhash_neardup" -> ((s, dir) => {
-      val emitted = graft.streaming.Streams.streamMinhashNearDup(s, dir)
-        .select(col("new_id"), col("hist_id"), lit(1).as("_e"))
-      val d = Tables.documents(s, dir).filter(col("doc_id") < 400)
-      val sh = d.select(col("doc_id"),
-        Dedup.wordShingles(lower(col("text")), 3).as("_s"))
-        // frozen: the truth table's exploded self-join plus the size
-        // joins evaluated the shingle kernel several times (r16)
-        .transform(Pins.freeze)
-      val sz = sh.select(col("doc_id"), size(col("_s")).as("_n"))
-      val ex = sh.select(col("doc_id"), explode(col("_s")).as("_sh"))
-      val truth = ex.as("a").join(ex.as("b"),
-          col("a._sh") === col("b._sh") &&
-          col("a.doc_id") % 5 === 0 && col("b.doc_id") % 5 =!= 0)
-        .groupBy(col("a.doc_id").as("new_id"), col("b.doc_id").as("hist_id"))
-        .agg(count(lit(1)).as("_inter"))
-        .join(sz.select(col("doc_id").as("new_id"), col("_n").as("_na")),
-          Seq("new_id"))
-        .join(sz.select(col("doc_id").as("hist_id"), col("_n").as("_nb")),
-          Seq("hist_id"))
-        .filter(col("_inter").cast("double") /
-          (col("_na") + col("_nb") - col("_inter")).cast("double") >= 0.3)
-        .select(col("new_id"), col("hist_id"), lit(1).as("_t"))
-      val stats = truth.join(emitted, Seq("new_id", "hist_id"), "full_outer")
-        .agg(count(col("_t")).as("n_true_pairs"),
-          sum(when(col("_t").isNotNull && col("_e").isNotNull, 1L)
-            .otherwise(0L)).as("_hit"),
-          sum(when(col("_e").isNotNull && col("_t").isNull, 1L)
-            .otherwise(0L)).as("_fp"))
-      d.agg(sum(when(col("doc_id") % 5 === 0, 1L).otherwise(0L)).as("n_new"),
-          sum(when(col("doc_id") % 5 =!= 0, 1L).otherwise(0L)).as("n_hist"))
-        .crossJoin(stats)
-        .select(col("n_new"), col("n_hist"), col("n_true_pairs"),
-          (coalesce(col("_fp"), lit(0L)) === 0L).as("emitted_all_true"),
-          (coalesce(col("_hit"), lit(0L)) * 10 >= col("n_true_pairs") * 7)
-            .as("recall_floor_met"))
-    }),
-
-    // X110b — INCREMENTAL streaming admission: the index GROWS inside
-    // foreachBatch, so a doc admitted in batch b blocks its near-dup in
-    // batch b+1. Candidate channel is the lossless prefix filter (an
-    // LSH miss would cascade through every later verdict), so the whole
-    // verdict sequence is exact-Jaccard-replayable: the oracle unrolls
-    // the four batch generations as chained CTEs. All-integer output.
-    "stream_minhash_incr" -> ((s, dir) => {
-      graft.streaming.Streams.streamMinhashIncr(s, dir,
-          shingleK = 3, thresholdPct = 50, maxId = 400L, nBatches = 4)
-        .orderBy("doc_id")
-    }),
-
-    // STREAMING IVF INGEST — the persisted vector index fed from a
-    // stream: batch 0 trains + builds, later logical batches append
-    // through the shared hash-agg argmax, the staleness census runs
-    // after every batch (same-distribution arrivals must never fire),
-    // and the final lists must equal the one-shot batch build's
-    // assignment both ways. Per-batch counts replay closed-form from
-    // vec_id div span; the equality and census verdicts ride booleans.
-    // The span is SCALE-AWARE (r14): max(200, N/10) pins the batch-0
-    // train fraction at ~10% of the corpus at every sf — the fixed 200
-    // left sf1.0's batch 0 training on 1% and the fit census fired by
-    // design, not defect. Driver scales are unchanged (N/10 ≤ 200
-    // there); probes that certify flat per-batch marginals at high
-    // batch counts pass their own span.
-    "stream_ivf_ingest" -> ((s, dir) => {
-      val n = Tables.embeddings(s, dir).count()
-      graft.streaming.Streams.streamIvfIngest(s, dir,
-          span = math.max(200L, n / 10L), k = 16)
-        .orderBy("batch_id")
-    }),
-
-    // The SELF-HEALING variant: the final logical batch is poisoned
-    // into the degenerate zero-vector regime, the post-append census
-    // FIRES inside foreachBatch, the ingest retrains right there
-    // (zero-norm quarantine + stats reset) and re-censuses clean —
-    // detect → retrain → verify running unattended in the stream. The
-    // equality pin compares against the scorable corpus under the
-    // RETRAINED centroids. Runs singleTrigger (whole landing dir in one
-    // AvailableNow trigger): foreachBatch regroups by logical batch so
-    // the output is IDENTICAL to the per-file drain (StreamingSpec pins
-    // the row-level equality) minus ~10 per-trigger streaming floors;
-    // stream_ivf_ingest stays multi-trigger to pin trigger boundaries.
-    "stream_ivf_heal" -> ((s, dir) => {
-      val n = Tables.embeddings(s, dir).count()
-      graft.streaming.Streams.streamIvfIngestSelfHealing(s, dir,
-          span = math.max(200L, n / 10L), k = 16, singleTrigger = true)
-        .orderBy("batch_id")
-    }),
-
-    "stream_countmin" -> ((s, dir) => {
-      import s.implicits._
-      val sk = graft.streaming.Streams.countMinStream(s, dir, depth = 4, width = 1024)
-      val ev = Tables.events(s, dir)
-      val batchSk = graft.ops.Sketch.countMin(ev, "event_type", depth = 4, width = 1024)
-      val agreement = sk
-        .join(batchSk.withColumnRenamed("cnt", "cnt_b"), Seq("r", "c"), "full")
-        .agg(sum(when(col("cnt") <=> col("cnt_b"), lit(0L)).otherwise(lit(1L)))
-          .as("_mm"))
-      val probes = ev.select(col("event_type").as("key")).distinct()
-        .unionByName(Seq("ghost_a", "ghost_b", "ghost_c").toDF("key"))
-      val truth = ev.groupBy(col("event_type").as("key")).agg(count(lit(1)).as("_n"))
-      graft.ops.Sketch.cmsEstimate(sk, probes, "key", depth = 4, width = 1024)
-        .join(truth, Seq("key"), "left")
-        .crossJoin(broadcast(agreement))
-        .select(col("key"), coalesce(col("_n"), lit(0L)).as("n_true"),
-          (col("est") === coalesce(col("_n"), lit(0L))).as("est_eq_true"),
-          (col("_mm") === 0L).as("stream_matches_batch"))
-        .orderBy("key")
-    }),
-
-    // Spark's native HLL++ sketch (approx_count_distinct — THE way to
-    // count distincts at 100 TB, where exact count-distinct shuffles
-    // every key) verdict-gated against the exact count: the oracle
-    // recomputes n_exact, and est_within_10pct (default rsd 5%) is
-    // measured at all three SFs before pinning. The exact distinct here
-    // is the verdict harness, not the recommended plan.
-    "sketch_hll_distinct" -> ((s, dir) => {
-      Tables.events(s, dir).groupBy("event_type")
-        .agg(countDistinct(col("user_id")).as("n_exact"),
-          approx_count_distinct(col("user_id")).as("_est"))
-        .select(col("event_type"), col("n_exact"),
-          (abs(col("_est") - col("n_exact")) * 10 <= col("n_exact"))
-            .as("est_within_10pct"))
-        .orderBy("event_type")
-    }),
-
-    // KMV distinct sketch (Sketch.kmv) — per-quarter distinct-part
-    // census through the k-minimum-values sketch: exact BIGINT truth
-    // beside pinned estimator-quality booleans. Set sizes cross the
-    // k=256 boundary across SFs (119 parts/qtr at sf0.001 → ~14k at
-    // sf0.1), so the exact-when-small branch AND the (k-1)/u_k order-
-    // statistic estimator are both load-bearing: at small SF the sketch
-    // IS the distinct set (est must equal truth exactly — pinned), at
-    // large SF the 20% bound (~3σ at k=256) must hold. One O(k)-buffer
-    // hash agg; the distinct domain never shuffles.
-    "sketch_kmv_distinct" -> ((s, dir) => {
-      val k = 256
-      val li = Tables.lineitem(s, dir).select(
-        concat(year(col("l_shipdate")), lit("-Q"), quarter(col("l_shipdate")))
-          .as("qtr"),
-        col("l_partkey"))
-      val sk = graft.ops.Sketch.kmv(li, "qtr", col("l_partkey"), k)
-        .withColumn("_est", graft.ops.Sketch.kmvEstimate(col("kh"), k))
-      val exact = li.groupBy("qtr")
-        .agg(countDistinct(col("l_partkey")).as("n_exact"))
-      exact.join(sk, Seq("qtr"))
-        .select(col("qtr"), col("n_exact"),
-          when(size(col("kh")) < k, col("_est") === col("n_exact").cast("double"))
-            .otherwise(abs(col("_est") - col("n_exact")) * 5 <= col("n_exact"))
-            .as("est_ok"),
-          (size(col("kh")) === least(lit(k), col("n_exact").cast("int")))
-            .as("sketch_size_sound"))
-        .orderBy("qtr")
-    }),
-
-    // KMV set algebra (Sketch.kmvSetOps) — the operation neither CMS
-    // nor HLL supports: Jaccard / intersection / union estimates
-    // between per-year Q1 vs Q3 part sets computed from the two O(k)
-    // sketches ALONE (merge-dedup-trim is exactly the union's sketch).
-    // Exact truth columns (n_a/n_b/n_inter/n_union/j_exact_micro) ride
-    // beside the estimator verdicts so the oracle recomputes the whole
-    // set-overlap census independently; ~65%-of-universe quarterly sets
-    // put true J near 0.5 — the regime where a broken estimator can't
-    // hide at either end of [0,1].
-    "sketch_kmv_jaccard" -> ((s, dir) => {
-      val k = 256
-      val base = Tables.lineitem(s, dir)
-        .filter(quarter(col("l_shipdate")).isin(1, 3))
-        .select(year(col("l_shipdate")).cast("long").as("yr"),
-          quarter(col("l_shipdate")).as("q"), col("l_partkey"))
-      def side(q: Int, as: String) = graft.ops.Sketch.kmv(
-        base.filter(col("q") === q), "yr", col("l_partkey"), k)
-        .withColumnRenamed("kh", as)
-      val est = graft.ops.Sketch.kmvSetOps(
-        side(1, "kh_a").join(side(3, "kh_b"), Seq("yr")), "kh_a", "kh_b", k)
-      val exact = base
-        .groupBy(col("yr"), col("l_partkey"))
-        .agg(max(when(col("q") === 1, 1L).otherwise(0L)).as("ina"),
-          max(when(col("q") === 3, 1L).otherwise(0L)).as("inb"))
-        .groupBy(col("yr"))
-        .agg(sum(col("ina")).as("n_a"), sum(col("inb")).as("n_b"),
-          sum(col("ina") * col("inb")).as("n_inter"),
-          count(lit(1)).as("n_union"))
-      exact.join(est, Seq("yr"))
-        .withColumn("j_exact_micro",
-          expr("CAST((1000000 * n_inter) DIV n_union AS BIGINT)"))
-        .select(col("yr"), col("n_a"), col("n_b"), col("n_inter"),
-          col("n_union"), col("j_exact_micro"),
-          (abs(col("j_est") - col("n_inter").cast("double") /
-            col("n_union").cast("double")) <= lit(0.12)).as("j_est_ok"),
-          (abs(col("inter_est") - col("n_inter")) * 4 <=
-            col("n_inter").cast("double")).as("inter_est_ok"),
-          (size(col("_comb")) === least(lit(k), col("n_union").cast("int")))
-            .as("union_sketch_sound"))
-        .orderBy("yr")
-    }),
-
-    // Storage layout — bucketed co-located join: both sides written
-    // bucketed+sorted on the join key, so the sort-merge join (and the
-    // downstream agg on the same key) run with NO shuffle exchange — the
-    // layout that turns the nightly 100 TB fact-fact join into a local
-    // merge. Plan asserted exchange-free in StorageLayoutSpec; this
-    // entry gates the RESULT against the plain-join oracle.
-    "storage_bucketed_join" -> ((s, dir) => {
-      // in-memory catalog + on-disk warehouse can disagree across
-      // sessions: drop the table AND its leftover location first
-      Seq("graft_bkt_lineitem", "graft_bkt_orders").foreach { t =>
-        s.sql(s"DROP TABLE IF EXISTS $t")
-        LocalFs.deleteTree(java.nio.file.Paths.get(
-          s.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t))
-      }
-      val l = Tables.lineitem(s, dir).select(col("l_orderkey"), col("l_extendedprice"))
-      val o = Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderstatus"))
-      l.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-        .mode("overwrite").saveAsTable("graft_bkt_lineitem")
-      o.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-        .mode("overwrite").saveAsTable("graft_bkt_orders")
-      s.table("graft_bkt_lineitem")
-        .join(s.table("graft_bkt_orders"), col("l_orderkey") === col("o_orderkey"))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_lines"),
-          sum(dec(col("l_extendedprice"))).cast("double").as("sum_price"))
-        .orderBy("o_orderstatus")
-    }),
-
-    // W6 — CDC apply: fold an I/U/D change log (derived deterministically
-    // from orders) into the customer base; newest change per key wins,
-    // winning D deletes. The delete path the plain LWW upsert lacks.
-    "w6_cdc_apply" -> ((s, dir) => {
-      val base = Tables.customer(s, dir)
-        .select(col("c_custkey"), col("c_name"), col("c_acctbal"))
-      val changes = Tables.orders(s, dir)
-        .select(col("o_custkey").as("c_custkey"),
-          concat(lit("cust_"), col("o_custkey").cast("string")).as("c_name"),
-          col("o_totalprice").as("c_acctbal"),
-          when(col("o_custkey") % 10 === 0, lit("D")).otherwise(lit("U")).as("op"),
-          col("o_orderkey").as("seq"))
-      Merge.applyCdc(base, changes, Seq("c_custkey"), Seq("seq"))
-        .orderBy("c_custkey")
-    }),
-
-    // W7 — snapshot diff (reconciliation audit): two deterministic
-    // mutations of the events table (drops on each side, a value
-    // rewrite on one) classified added/removed/changed/unchanged by a
-    // null-safe full-outer compare; the gate checks the class census.
-    "w7_snapshot_diff" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_id"), col("event_type"), col("value"), col("user_id"))
-      val prev = ev.filter(col("event_id") % 10 < 9)
-      val next = ev.filter(col("event_id") % 10 > 0)
-        .withColumn("value",
-          when(col("event_id") % 3 === 0, col("value") * 2).otherwise(col("value")))
-      Merge.snapshotDiff(prev, next, Seq("event_id"))
-        .groupBy(col("change")).agg(count(lit(1)).as("n"))
-        .orderBy("change")
-    }),
-
-    // X1e exact — all-pairs cosine near-dup over a bounded subset: the
-    // oracle-able exact form next to the bucketed (recall<1) scale path.
-    "x1_embedding_neardup_exact" -> ((s, dir) => {
-      Similarity.exactNearDupPairs(
-          Tables.embeddings(s, dir).filter(col("vec_id") < 400),
-          "vec_id", "embedding", minCosine = 0.25)
-        .orderBy("id_a", "id_b")
-    }),
-
-    // Iterative graph computation — distributed PageRank in exact
-    // BIGINT micros over a formula-planted doc graph: every doc links
-    // to (id·31+7) mod N and (id·17+3) mod N, the oracle regenerates
-    // the identical edge list, so the hash certifies FIVE full rounds
-    // of the iterated join-aggregate (the Pregel shape — edge table
-    // degree-joined once and persisted, only node-cardinality rank
-    // frames move per round). See ops/Graph.scala for the contract.
-    "graph_pagerank" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val cnt = docs.agg(count(lit(1)).as("n_nodes"))
-      val edges = docs.crossJoin(broadcast(cnt)).select(
-        col("doc_id").as("src"),
-        explode(array(expr("(doc_id * 31 + 7) % n_nodes"),
-          expr("(doc_id * 17 + 3) % n_nodes"))).as("dst"))
-      graft.ops.Graph.pagerank(edges, "src", "dst", docs, "doc_id", iters = 5)
-        .orderBy("node")
-    }),
-
-    // Exact triangle census (degree-oriented "forward" algorithm) over
-    // a planted graph: ring + 2-chord makes every {i, i+1, i+2} a
-    // triangle by construction, and a multiplicative hash chord adds
-    // irregular cross-links. The oracle regenerates the identical edge
-    // list and counts canonical a<b<c corner triples, so the hash
-    // certifies canonicalization (self-loops, both directions, dup
-    // edges), the orientation's total order, the wedge join, and the
-    // closing semi-join in one number per node.
-    "graph_triangles" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val cnt = docs.agg(count(lit(1)).as("n_nodes"))
-      val edges = docs.crossJoin(broadcast(cnt)).select(
-        col("doc_id").as("src"),
-        explode(array(
-          expr("(doc_id + 1) % n_nodes"),
-          expr("(doc_id + 2) % n_nodes"),
-          expr("(doc_id * 31 + 7) % n_nodes"))).as("dst"))
-      graft.ops.Graph.triangleCounts(edges, "src", "dst", docs, "doc_id")
-        .orderBy("node")
-    }),
-
-    // Local clustering coefficient — triangles over wedges as exact
-    // trunc-micros on the same planted graph (spam rings score high,
-    // hubs low); degree<2 nodes are 0 by documented convention.
-    "graph_clustering_coeff" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val cnt = docs.agg(count(lit(1)).as("n_nodes"))
-      val edges = docs.crossJoin(broadcast(cnt)).select(
-        col("doc_id").as("src"),
-        explode(array(
-          expr("(doc_id + 1) % n_nodes"),
-          expr("(doc_id + 2) % n_nodes"),
-          expr("(doc_id * 31 + 7) % n_nodes"))).as("dst"))
-      graft.ops.Graph.clusteringCoeff(edges, "src", "dst", docs, "doc_id")
-        .orderBy("node")
-    }),
-
-    // Common-neighbors + Adamic–Adar link prediction over the planted
-    // graph: per-neighbor contributions quantized to micros BEFORE the
-    // sum (integer totals — partial-agg-order-proof), hub cap inactive
-    // here (max degree 6) but part of the op contract. The oracle
-    // replays the full wedge census with the identical ln shape;
-    // already_linked distinguishes triangle closure from genuine
-    // candidates.
-    "graph_adamic_adar" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val cnt = docs.agg(count(lit(1)).as("n_nodes"))
-      val edges = docs.crossJoin(broadcast(cnt)).select(
-        col("doc_id").as("src"),
-        explode(array(
-          expr("(doc_id + 1) % n_nodes"),
-          expr("(doc_id + 2) % n_nodes"),
-          expr("(doc_id * 31 + 7) % n_nodes"))).as("dst"))
-      graft.ops.Graph.adamicAdar(edges, "src", "dst", minCommon = 2)
-        .orderBy("v", "w")
-    }),
-
-    // Bounded-round k-core peeling (k=5, 3 rounds). The planted graph
-    // differs from the triangle gate's deliberately: the ×31 chord is
-    // a BIJECTION (gcd(31, N)=1 ⇒ degree exactly 6 everywhere — k-core
-    // peeling is vacuous, measured before this formula was chosen), so
-    // the ring carries a ×2 chord instead, whose in-degree is 0 or 2 —
-    // at every SF the peel cascades through all three rounds (2 / 5 /
-    // 6 nodes at sf0.01) and leaves real survivors. The oracle replays
-    // every round as chained CTEs — a node peeled one round early or
-    // late anywhere flips the hash, including the orphaned-node case
-    // (a node whose last edge vanished peels NEXT round, not never).
-    "graph_kcore" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val cnt = docs.agg(count(lit(1)).as("n_nodes"))
-      val edges = docs.crossJoin(broadcast(cnt)).select(
-        col("doc_id").as("src"),
-        explode(array(
-          expr("(doc_id + 1) % n_nodes"),
-          expr("(doc_id + 2) % n_nodes"),
-          expr("(doc_id * 2 + 1) % n_nodes"))).as("dst"))
-      graft.ops.Graph.kCorePeel(edges, "src", "dst", docs, "doc_id",
-          k = 5, rounds = 3)
-        .orderBy("node")
-    }),
-
-    // Bounded-round multi-source BFS — hop distance from the seed set
-    // {doc_id % 97 == 0} over the SPARSE planted graph (only the ×31
-    // functional chord: undirected mean degree 2, so distances spread
-    // across the full round budget and the -1 unreached branch is
-    // exercised at every SF, unlike the dense triangle fixture whose
-    // expander diameter collapses BFS to 2 hops). The oracle replays
-    // the expansion as a recursive CTE with min(dist) — a node reached
-    // one round early/late, a missed seed, or a leak past the round
-    // budget each flip the hash.
-    "graph_bfs" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val cnt = docs.agg(count(lit(1)).as("n_nodes"))
-      val edges = docs.crossJoin(broadcast(cnt)).select(
-        col("doc_id").as("src"), expr("(doc_id * 31 + 7) % n_nodes").as("dst"))
-      val seeds = docs.filter(col("doc_id") % 97 === 0)
-      graft.ops.Graph.bfsLayers(edges, "src", "dst", docs, "doc_id",
-          seeds, "doc_id", maxRounds = 4)
-        .orderBy("node")
-    }),
-
-    // Temporal reachability — earliest arrival along TIME-RESPECTING
-    // paths (each hop's contact time ≥ arrival at its source): the
-    // contagion/influence question plain reachability answers wrongly
-    // when a downstream contact happened before the upstream one.
-    // Contact times by formula ((a·13) % 1000, same both directions);
-    // seeds doc_id % 97 == 0 exposed at t=0; 6 rounds, chained
-    // union-min CTE replay.
-    "graph_temporal_reach" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val cnt = docs.agg(count(lit(1)).as("n_nodes"))
-      val base = docs.crossJoin(broadcast(cnt)).select(
-        col("doc_id").as("a"), expr("(doc_id * 31 + 7) % n_nodes").as("b"))
-        .withColumn("t", expr("(a * 13) % 1000"))
-      val edges = base.select(col("a").as("src"), col("b").as("dst"), col("t"))
-        .unionByName(base.select(col("b").as("src"), col("a").as("dst"), col("t")))
-      graft.ops.Graph.temporalReachability(edges, "src", "dst", "t",
-          docs, "doc_id",
-          docs.filter(col("doc_id") % 97 === 0).withColumn("t0", lit(0L)),
-          "doc_id", "t0", rounds = 6)
-        .orderBy("node")
-    }),
-
-    // Bounded-round multi-source WEIGHTED shortest paths (synchronous
-    // Bellman–Ford, reached-only state — no NULL algebra) over the
-    // sparse chord graph with per-edge weights 1 + (a+b) % 7; seeds
-    // doc_id % 97 == 0, 6 rounds. The oracle replays every round as a
-    // chained union-min CTE — a relaxation applied a round early or
-    // late anywhere flips the hash.
-    "graph_shortest_paths" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val cnt = docs.agg(count(lit(1)).as("n_nodes"))
-      val base = docs.crossJoin(broadcast(cnt)).select(
-        col("doc_id").as("a"), expr("(doc_id * 31 + 7) % n_nodes").as("b"))
-        .withColumn("w", expr("1 + (a + b) % 7"))
-      val edges = base.select(col("a").as("src"), col("b").as("dst"), col("w"))
-        .unionByName(base.select(col("b").as("src"), col("a").as("dst"), col("w")))
-      graft.ops.Graph.shortestPaths(edges, "src", "dst", "w", docs, "doc_id",
-          docs.filter(col("doc_id") % 97 === 0), "doc_id", rounds = 6)
-        .orderBy("node")
-    }),
-
-    // Synchronous label propagation (3 rounds, deterministic smallest-
-    // label tie-break) over the same sparse chord graph — majority
-    // dynamics, not reachability: communities stay finer than the
-    // connected components. The oracle replays all three rounds as
-    // chained argmax CTEs; one wrong vote, tie, or isolated-node
-    // carry-over anywhere flips the hash.
-    "graph_label_prop" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir).select(col("doc_id"))
-      val cnt = docs.agg(count(lit(1)).as("n_nodes"))
-      val edges = docs.crossJoin(broadcast(cnt)).select(
-        col("doc_id").as("src"), expr("(doc_id * 31 + 7) % n_nodes").as("dst"))
-      graft.ops.Graph.labelPropagation(edges, "src", "dst", docs, "doc_id",
-          rounds = 3)
-        .orderBy("node")
-    }),
-
-    // X4 composed — CCNet-style perplexity bucketing: per-language
-    // head/middle/tail terciles of the per-token LM score (the bucket
-    // CCNet keeps/drops/inspects by). Mean NLL per token is an integer
-    // floor-div of micros (exact both engines); the tercile comes from
-    // the GROUPED distributed ntile (Packing.ntileGrouped — groupwise
-    // prefix rank + integer ANSI-NTILE arithmetic, never a per-lang
-    // single-reducer window). Census output at (lang, bucket) grain.
-    "x4_ccnet_buckets" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // LM frozen — see x4_lm_quality (two broadcast slices per score)
-      val lm = TextAnalysis.unigramLm(docs.filter(col("lang") === "en"), "text")
-        .transform(Pins.freeze)
-      val scored = TextAnalysis.unigramNll(docs, "doc_id", "text", lm)
-        .join(docs.select("doc_id", "lang"), "doc_id")
-        .withColumn("mpt", expr("nll_micro div n_tokens"))
-      graft.ops.Packing.ntileGrouped(scored, "lang",
-          Seq(col("mpt").asc, col("doc_id").asc), 3)
-        .groupBy("lang", "bucket")
-        .agg(count(lit(1)).as("n_docs"), sum("n_tokens").as("tok_total"),
-          min("mpt").as("mpt_min"), max("mpt").as("mpt_max"))
-        .orderBy("lang", "bucket")
-    }),
-
-    // X4 composed — DSIR-style importance weights (Xie et al.):
-    // log-likelihood ratio of each doc under a TARGET LM (trained on
-    // the English slice) vs a BACKGROUND LM (trained on the full
-    // corpus), in exact micros: w = nll_bg − nll_tgt, positive iff the
-    // doc looks more target-like than corpus-average. Two broadcast LM
-    // joins, one corpus scan each, pure BIGINT — the selection signal
-    // for importance resampling. `kept` = top-target-like flag (w > 0).
-    "x4_dsir_weights" -> ((s, dir) => {
-      val docs = Tables.documents(s, dir)
-      // both LMs frozen — two broadcast slices per unigramNll call (r16)
-      val tgt = TextAnalysis.unigramLm(docs.filter(col("lang") === "en"), "text")
-        .transform(Pins.freeze)
-      val bg = TextAnalysis.unigramLm(docs, "text")
-        .transform(Pins.freeze)
-      val nt = TextAnalysis.unigramNll(docs, "doc_id", "text", tgt)
-        .select(col("doc_id"), col("nll_micro").as("nll_tgt"))
-      val nb = TextAnalysis.unigramNll(docs, "doc_id", "text", bg)
-        .select(col("doc_id"), col("n_tokens"), col("nll_micro").as("nll_bg"))
-      nb.join(nt, "doc_id")
-        .select(col("doc_id"), col("n_tokens"),
-          (col("nll_bg") - col("nll_tgt")).as("w_micro"),
-          (col("nll_bg") - col("nll_tgt") > 0L).as("kept"))
-        .orderBy("doc_id")
-    }),
-
-    // Incremental materialized-view maintenance — the contract that
-    // makes 100 TB rollups appendable: state(base) ⊎ state(delta) ==
-    // state(base ∪ delta) for the reaggregable components. The corpus
-    // splits on o_orderkey parity (every group has rows in BOTH halves,
-    // so the merge is real, not a disjoint union); each half builds its
-    // partial state independently and Reagg.mergeToCoarser folds them
-    // at the same grain. The oracle recomputes from the FULL table in
-    // one pass — hash equality IS the maintenance-identity proof.
-    "mv_incremental_merge" -> ((s, dir) => {
-      val o = Tables.orders(s, dir)
-      val keys = Seq("o_orderpriority")
-      val bucket = year(col("o_orderdate")).cast("long")
-      val st = Reagg.partials(o.filter(col("o_orderkey") % 2 === 0), keys,
-          bucket, col("o_totalprice"))
-        .unionByName(Reagg.partials(o.filter(col("o_orderkey") % 2 === 1),
-          keys, bucket, col("o_totalprice")))
-      Reagg.mergeToCoarser(st, keys, col("bucket"))
-        .select(col("bucket"), col("o_orderpriority"), col("n"),
-          col("total").cast("double").as("total"), col("mn"), col("mx"),
-          round(col("total").cast("double") / col("n"), 6).as("avg_v"))
-        .orderBy("bucket", "o_orderpriority")
-    })
-  )
-
-  /** DuckDB twin of the 5-round BPE trainer over any (word, cnt)
-    * vocabulary CTE. Symbol sequences ride as double-space-joined
-    * strings with single-space ends (' a  b  c '): each symbol owns its
-    * flanking delimiters, so a plain replace() of ' a  b ' → ' ab ' IS
-    * the leftmost-greedy non-overlapping merge — self-overlap runs
-    * ('aaa' under (a,a) → [aa, a]) included, which a single-space join
-    * gets wrong because adjacent matches would share one space. Each
-    * round: adjacent-pair census from the split sequence, argmax by
-    * (n desc, pair asc), apply via replace. */
-  private def bpeMergesOracle(vocabSql: String): String = {
-    val rounds = (1 to 5).map { r =>
-      val apply = if (r == 1) "" else
-        s"""v$r AS (SELECT replace(s,
-           |    ' ' || (SELECT a FROM m${r - 1}) || '  ' || (SELECT b FROM m${r - 1}) || ' ',
-           |    ' ' || (SELECT a FROM m${r - 1}) || (SELECT b FROM m${r - 1}) || ' ') AS s, cnt FROM v${r - 1}),
-           |""".stripMargin
-      apply +
-        s"""c$r AS (SELECT l[i] AS a, l[i+1] AS b, sum(cnt) AS n
-           |  FROM (SELECT string_split(trim(s), '  ') AS l, cnt FROM v$r),
-           |       unnest(range(1, len(l))) t(i) GROUP BY a, b),
-           |m$r AS (SELECT a, b, n FROM c$r ORDER BY n DESC, a, b LIMIT 1)""".stripMargin
-    }.mkString(",\n")
-    val out = (1 to 5).map(r =>
-        s"SELECT CAST($r AS INTEGER) AS merge_rank, a, b, CAST(n AS BIGINT) AS n FROM m$r")
-      .mkString("\n  UNION ALL ")
-    s"""WITH w AS ($vocabSql),
-       |v1 AS (SELECT ' ' || array_to_string(string_split(word, ''), '  ') || ' ' AS s, cnt FROM w),
-       |$rounds
-       |SELECT * FROM (
-       |  $out)
-       |ORDER BY merge_rank""".stripMargin
-  }
-
-  /** SQL twin of train-then-ENCODE: the 5-round merge chain of
-    * [[bpeMergesOracle]] carrying each word's identity through the
-    * replace() applications, a final apply of merge 5 (the trainer's
-    * loop applies each chosen merge, so the encoder's state includes
-    * it), then per-doc occurrence-weighted symbol counts.
-    * `occSql` emits one (doc_id, word) row per token occurrence.
-    * The merge/vocab CTEs are MATERIALIZED: inlined, DuckDB re-derives
-    * the whole merge chain per joined row and the query never finishes
-    * (0.09 s materialized vs >2 min inlined at sf0.001). */
-  private def bpeEncodeOracle(occSql: String): String = {
-    val rounds = (1 to 5).map { r =>
-      val apply = if (r == 1) "" else
-        s"""v$r AS MATERIALIZED (SELECT word, replace(s,
-           |    ' ' || (SELECT a FROM m${r - 1}) || '  ' || (SELECT b FROM m${r - 1}) || ' ',
-           |    ' ' || (SELECT a FROM m${r - 1}) || (SELECT b FROM m${r - 1}) || ' ') AS s, cnt FROM v${r - 1}),
-           |""".stripMargin
-      apply +
-        s"""c$r AS (SELECT l[i] AS a, l[i+1] AS b, sum(cnt) AS n
-           |  FROM (SELECT string_split(trim(s), '  ') AS l, cnt FROM v$r),
-           |       unnest(range(1, len(l))) t(i) GROUP BY a, b),
-           |m$r AS MATERIALIZED (SELECT a, b, n FROM c$r ORDER BY n DESC, a, b LIMIT 1)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH occ AS MATERIALIZED ($occSql),
-       |w AS (SELECT word, count(*) AS cnt FROM occ WHERE word <> '' GROUP BY word),
-       |v1 AS MATERIALIZED (SELECT word, ' ' || array_to_string(string_split(word, ''), '  ') || ' ' AS s, cnt FROM w),
-       |$rounds,
-       |vf AS MATERIALIZED (SELECT word, replace(s,
-       |    ' ' || (SELECT a FROM m5) || '  ' || (SELECT b FROM m5) || ' ',
-       |    ' ' || (SELECT a FROM m5) || (SELECT b FROM m5) || ' ') AS s FROM v5),
-       |enc AS (SELECT word, len(string_split(trim(s), '  ')) AS ns FROM vf),
-       |dw AS (SELECT doc_id, word, count(*) AS c FROM occ
-       |       WHERE word <> '' GROUP BY doc_id, word)
-       |SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_words,
-       |  CAST(sum(c * ns) AS BIGINT) AS n_bpe_tokens
-       |FROM dw JOIN enc USING (word)
-       |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-  }
-
-  /** For each key in `queries`, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops → driver
-    * records a weaker rows-only check. */
-  def oracleSql: Map[String, String] = Map(
-
-    "q1_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        | CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS sum_disc_price,
-        | count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-12-01'
-        |GROUP BY l_returnflag, l_linestatus ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "q3_top_revenue_orders" ->
-      """SELECT o_orderkey, o_orderdate,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |WHERE c_mktsegment = 'BUILDING'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |  AND l_shipdate > TIMESTAMP '1997-01-01'
-        |GROUP BY o_orderkey, o_orderdate
-        |ORDER BY revenue DESC, o_orderkey ASC LIMIT 10""".stripMargin,
-
-    "join_semi_highqty" ->
-      """SELECT o_orderkey, o_totalprice FROM orders o
-        |WHERE EXISTS (SELECT 1 FROM lineitem l
-        |              WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "join_anti_no_lines" ->
-      """SELECT o_orderkey, o_orderstatus FROM orders o
-        |WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "window_topk_orders" ->
-      """SELECT o_custkey, o_orderkey, rk FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |         CAST(ROW_NUMBER() OVER (PARTITION BY o_custkey
-        |              ORDER BY o_totalprice DESC, o_orderkey ASC) AS BIGINT) AS rk
-        |  FROM orders) t
-        |WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin,
-
-    "agg_rollup_region" ->
-      """SELECT r_name, n_name, count(*) AS n_cust,
-        | CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
-        |FROM customer
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY ROLLUP(r_name, n_name)
-        |ORDER BY r_name ASC NULLS FIRST, n_name ASC NULLS FIRST""".stripMargin,
-
-    "agg_distinct_segments" ->
-      """SELECT c_mktsegment, count(*) AS n_cust,
-        | count(DISTINCT c_nationkey) AS n_nations,
-        | CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS sum_bal
-        |FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "set_except_customers" ->
-      """SELECT o_custkey AS custkey FROM orders WHERE year(o_orderdate) = 1995
-        |EXCEPT
-        |SELECT o_custkey AS custkey FROM orders WHERE year(o_orderdate) >= 2000
-        |ORDER BY custkey""".stripMargin,
-
-    "set_bag_ops_customers" ->
-      """WITH a AS (SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1997),
-        |b AS (SELECT o_custkey FROM orders WHERE year(o_orderdate) = 1998),
-        |e AS (SELECT * FROM a EXCEPT ALL SELECT * FROM b),
-        |i AS (SELECT * FROM a INTERSECT ALL SELECT * FROM b)
-        |SELECT 'except' AS op, o_custkey, count(*) AS n FROM e GROUP BY 1, 2
-        |UNION ALL
-        |SELECT 'intersect' AS op, o_custkey, count(*) AS n FROM i GROUP BY 1, 2
-        |ORDER BY op, o_custkey""".stripMargin,
-
-    "p2_flatten_json" ->
-      """SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "p3_rename_bulk" ->
-      """SELECT c_custkey AS customer_id, c_name AS full_name,
-        | c_acctbal AS account_balance, c_mktsegment AS market_segment, c_nationkey
-        |FROM customer ORDER BY customer_id""".stripMargin,
-
-    "p4_consolidate_json" ->
-      """SELECT event_id,
-        | CAST(json_merge_patch('{}', to_json(struct_pack(
-        |   et := CASE WHEN event_type = 'view' THEN NULL ELSE event_type END,
-        |   k := CAST(json_extract_string(props, '$.k') AS BIGINT)))) AS VARCHAR) AS custom_fields
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "p5_float_scrub" ->
-      """SELECT l_orderkey, l_linenumber,
-        | CASE WHEN l_quantity = CAST(CAST(l_quantity AS BIGINT) AS DOUBLE)
-        |      THEN CAST(CAST(l_quantity AS BIGINT) AS VARCHAR)
-        |      ELSE CAST(l_quantity AS VARCHAR) END AS qty_str
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "p6_coerce_long" ->
-      """SELECT event_id,
-        | TRY_CAST(TRY_CAST(CASE WHEN event_type = 'error' THEN 'N/A'
-        |   ELSE json_extract_string(props, '$.k') END AS DOUBLE) AS BIGINT) AS k_long
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "p7_string_sentinel" ->
-      """SELECT event_id,
-        | CASE WHEN event_type = 'view' OR event_type IS NULL
-        |        OR event_type IN ('nan', 'NaN') THEN ' '
-        |      ELSE event_type END AS etype
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "p9_ts_parse" ->
-      """SELECT event_id, ts_str,
-        | COALESCE(TRY_STRPTIME(ts_str, '%m-%d-%Y %H:%M:%S'),
-        |          TRY_CAST(ts_str AS TIMESTAMP)) AS ts_parsed
-        |FROM (SELECT event_id,
-        |        CASE WHEN event_id % 10 = 0 THEN 'not-a-date'
-        |             ELSE strftime(ts, '%m-%d-%Y %H:%M:%S') END AS ts_str
-        |      FROM events) t
-        |ORDER BY event_id""".stripMargin,
-
-    "w4_lww_latest" ->
-      """SELECT user_id, event_type, event_id, value FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id, event_type
-        |         ORDER BY ts DESC, event_id DESC) AS rn FROM events) t
-        |WHERE rn = 1 ORDER BY user_id, event_type""".stripMargin,
-
-    "s8_merge_upsert" ->
-      """SELECT user_id, event_id, value FROM (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY user_id
-        |         ORDER BY ts DESC, event_id DESC) AS rn FROM events) t
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-    "x1_dedup_exact" ->
-      """SELECT sha256(text) AS content_hash, min(doc_id) AS keep_id,
-        | count(*) AS n_dupes
-        |FROM documents GROUP BY sha256(text) ORDER BY content_hash""".stripMargin,
-
-    "x1_dedup_incremental" ->
-      """WITH seen AS (
-        |  SELECT DISTINCT sha256(text) AS h FROM documents WHERE doc_id < 250),
-        |batch AS (
-        |  SELECT sha256(text) AS content_hash, min(doc_id) AS keep_id,
-        |         count(*) AS n_dupes
-        |  FROM documents WHERE doc_id >= 250 GROUP BY 1)
-        |SELECT content_hash, keep_id, n_dupes FROM batch
-        |WHERE content_hash NOT IN (SELECT h FROM seen)
-        |ORDER BY content_hash""".stripMargin,
-
-    "x1_dedup_first_per_key" ->
-      """SELECT lang, source, doc_id FROM (
-        |  SELECT lang, source, doc_id,
-        |         ROW_NUMBER() OVER (PARTITION BY lang, source ORDER BY doc_id) AS rn
-        |  FROM documents) t
-        |WHERE rn = 1 ORDER BY lang, source""".stripMargin,
-
-    "w7_snapshot_diff" ->
-      """WITH ev AS (SELECT event_id, event_type, value, user_id FROM events),
-        |prev AS (SELECT * FROM ev WHERE event_id % 10 < 9),
-        |next AS (SELECT event_id, event_type,
-        |           CASE WHEN event_id % 3 = 0 THEN value * 2 ELSE value END AS value,
-        |           user_id
-        |         FROM ev WHERE event_id % 10 > 0)
-        |SELECT change, count(*) AS n FROM (
-        |  SELECT CASE WHEN p.event_id IS NULL THEN 'added'
-        |              WHEN x.event_id IS NULL THEN 'removed'
-        |              WHEN p.event_type IS NOT DISTINCT FROM x.event_type
-        |               AND p.value IS NOT DISTINCT FROM x.value
-        |               AND p.user_id IS NOT DISTINCT FROM x.user_id THEN 'unchanged'
-        |              ELSE 'changed' END AS change
-        |  FROM prev p FULL OUTER JOIN next x ON p.event_id = x.event_id) t
-        |GROUP BY change ORDER BY change""".stripMargin,
-
-    "sql_notin_3vl" ->
-      """SELECT
-        | (SELECT count(*) FROM customer
-        |  WHERE c_custkey NOT IN (SELECT nullif(o_custkey, 7) FROM orders))
-        |   AS cnt_null_poisoned,
-        | (SELECT count(*) FROM customer
-        |  WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_custkey <> 7))
-        |   AS cnt_clean""".stripMargin,
-
-    "nested_lines_hof" ->
-      """SELECT l_orderkey, CAST(count(*) AS INT) AS n_lines,
-        | CAST(sum(CASE WHEN l_quantity > 30 THEN 1 ELSE 0 END) AS INT) AS n_heavy,
-        | CAST(sum(CASE WHEN l_quantity > 30
-        |          THEN CAST(round(l_extendedprice * 100) AS BIGINT)
-        |          ELSE 0 END) AS BIGINT) AS heavy_cents
-        |FROM lineitem WHERE l_orderkey % 100 = 0
-        |GROUP BY l_orderkey ORDER BY l_orderkey""".stripMargin,
-
-    "x6_variant_typed" ->
-      """SELECT k % 10 AS k_mod, count(*) AS n, CAST(sum(k) AS BIGINT) AS sum_k
-        |FROM (SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
-        |      FROM events) t
-        |WHERE k % 7 = 0
-        |GROUP BY k % 10 ORDER BY k_mod""".stripMargin,
-
-    "x1_train_split" ->
-      """SELECT CASE WHEN d < 800000 THEN 'train'
-        |            WHEN d < 900000 THEN 'val' ELSE 'test' END AS split,
-        | lang, count(*) AS n, CAST(sum(doc_id) AS BIGINT) AS id_sum
-        |FROM (SELECT doc_id, lang,
-        |        ((doc_id % 1000003 + 5) * 2654435761) % 2147483647 % 1000000 AS d
-        |      FROM documents) t
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "x1_corpus_shuffle" ->
-      """SELECT doc_id, lang,
-        | ((doc_id % 1000003 + 13) * 2654435761) % 2147483647 % 1000000 AS sort_key
-        |FROM documents
-        |ORDER BY sort_key, doc_id LIMIT 200""".stripMargin,
-
-    "x1_per_group_sample" ->
-      """SELECT lang, doc_id FROM (
-        |  SELECT lang, doc_id,
-        |    ROW_NUMBER() OVER (PARTITION BY lang
-        |      ORDER BY ((doc_id % 1000003 + 11) * 2654435761) % 2147483647 % 1000000,
-        |               doc_id) AS rn
-        |  FROM documents) t
-        |WHERE rn <= 10 ORDER BY lang, doc_id""".stripMargin,
-
-    "map_hof_type_mix" ->
-      """WITH c AS (
-        |  SELECT user_id, event_type, count(*) AS n
-        |  FROM events WHERE user_id < 100 GROUP BY 1, 2),
-        |t AS (SELECT user_id, CAST(sum(n) AS BIGINT) AS total_n FROM c GROUP BY 1)
-        |SELECT c.user_id, t.total_n, c.event_type, c.n,
-        |  round(CAST(c.n AS DOUBLE) * 100 / CAST(t.total_n AS DOUBLE), 6) AS share_pct
-        |FROM c JOIN t ON c.user_id = t.user_id
-        |WHERE c.n >= 5
-        |ORDER BY c.user_id, c.event_type""".stripMargin,
-
-    "x6_json_filter_agg" ->
-      """SELECT event_type, count(*) AS n,
-        | CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
-        |FROM events
-        |WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) >= 50
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "q5_local_volume" ->
-      """SELECT n_name,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |  AND o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1998-01-01'
-        |GROUP BY n_name ORDER BY revenue DESC, n_name ASC""".stripMargin,
-
-    "x2_topk_cosine" ->
-      """WITH v AS (
-        |  SELECT vec_id, embedding,
-        |    list_sum(list_transform(generate_series(1, len(embedding)),
-        |      i -> embedding[i] * embedding[i])) AS nrm
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT q.vec_id AS qid, c.vec_id AS cid,
-        |    list_sum(list_transform(generate_series(1, len(q.embedding)),
-        |      i -> q.embedding[i] * c.embedding[i]))
-        |      / (sqrt(q.nrm) * sqrt(c.nrm)) AS sim
-        |  FROM v q, v c
-        |  WHERE q.vec_id % 100 = 0 AND q.vec_id != c.vec_id
-        |    AND ((q.vec_id % 1000003 + 7) * 2654435761)
-        |        % 2147483647 % 1000000
-        |      < 30000000000 // GREATEST(
-        |          (SELECT count(*) FROM embeddings), 30000)),
-        |r AS (
-        |  SELECT qid, cid, sim,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, cid ASC) AS rk
-        |  FROM p)
-        |SELECT qid, cid, round(sim, 6) AS sim, rk FROM r
-        |WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
-
-    "x2_knn_classify" ->
-      """WITH v AS (
-        |  SELECT vec_id, embedding, label,
-        |    list_sum(list_transform(generate_series(1, len(embedding)),
-        |      i -> embedding[i] * embedding[i])) AS nrm
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT q.vec_id AS qid, c.vec_id AS cid, c.label AS lbl,
-        |    list_sum(list_transform(generate_series(1, len(q.embedding)),
-        |      i -> q.embedding[i] * c.embedding[i]))
-        |      / (sqrt(q.nrm) * sqrt(c.nrm)) AS sim
-        |  FROM v q, v c
-        |  WHERE q.vec_id % 29 = 0 AND c.vec_id % 29 != 0),
-        |r AS (
-        |  SELECT qid, lbl,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, cid ASC) AS rk
-        |  FROM p),
-        |votes AS (
-        |  SELECT qid, lbl, count(*) AS n FROM r WHERE rk <= 5 GROUP BY 1, 2),
-        |w AS (
-        |  SELECT qid, lbl, n,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY n DESC, lbl ASC) AS rn
-        |  FROM votes)
-        |SELECT w.qid, CAST(e.label AS BIGINT) AS true_label,
-        |  CAST(w.lbl AS BIGINT) AS pred_label, w.n AS n_votes,
-        |  (w.lbl = e.label) AS is_correct
-        |FROM w JOIN embeddings e ON e.vec_id = w.qid
-        |WHERE w.rn = 1 ORDER BY qid""".stripMargin,
-
-    "x2_quantize_int8" ->
-      """WITH e AS (SELECT vec_id, unnest(embedding) AS v FROM embeddings),
-        |sc AS (SELECT vec_id,
-        |         CAST(max(abs(CAST(v AS DOUBLE))) AS DOUBLE) / 127.0 AS scale
-        |       FROM e GROUP BY vec_id),
-        |q AS (SELECT e.vec_id, sc.scale, CAST(v AS DOUBLE) AS vd,
-        |        CASE WHEN sc.scale = 0 THEN 0
-        |             ELSE greatest(-127, least(127,
-        |               CAST(floor(CAST(v AS DOUBLE) / sc.scale + 0.5) AS BIGINT))) END AS qv
-        |      FROM e JOIN sc ON e.vec_id = sc.vec_id)
-        |SELECT vec_id, round(max(scale), 9) AS scale,
-        |  CAST(sum(qv) AS BIGINT) AS q_sum, min(qv) AS q_min, max(qv) AS q_max,
-        |  round(max(abs(qv * scale - vd)), 9) AS max_err
-        |FROM q GROUP BY vec_id ORDER BY vec_id""".stripMargin,
-
-    "join_right_outer" ->
-      """SELECT o_orderkey, count(l_orderkey) AS n_big_lines,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS big_value
-        |FROM (SELECT l_orderkey, l_extendedprice FROM lineitem WHERE l_quantity > 45) l
-        |RIGHT JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin,
-
-    "x3_containment" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(lower(text), '\s+') AS w
-        |  FROM documents),
-        |p AS (
-        |  SELECT doc_id, w,
-        |    list_slice(w, 1, greatest(3, (len(w) * 3) // 5)) AS pw
-        |  FROM t),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 3 THEN
-        |      list_distinct(list_transform(generate_series(1, len(w) - 2),
-        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
-        |    ELSE [array_to_string(w, ' ')] END AS sf,
-        |    CASE WHEN len(pw) >= 3 THEN
-        |      list_distinct(list_transform(generate_series(1, len(pw) - 2),
-        |        i -> pw[i] || ' ' || pw[i+1] || ' ' || pw[i+2]))
-        |    ELSE [array_to_string(pw, ' ')] END AS sp
-        |  FROM p),
-        |adj AS (
-        |  SELECT 'adjacent' AS kind, a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CASE WHEN least(len(a.sf), len(b.sf)) <= 0 THEN 0
-        |      ELSE (len(list_intersect(a.sf, b.sf)) * 1000000)
-        |        // least(len(a.sf), len(b.sf)) END AS c
-        |  FROM sh a JOIN sh b ON a.doc_id + 1 = b.doc_id),
-        |pre AS (
-        |  SELECT 'self_prefix' AS kind, doc_id AS id_a, doc_id AS id_b,
-        |    CASE WHEN least(len(sp), len(sf)) <= 0 THEN 0
-        |      ELSE (len(list_intersect(sp, sf)) * 1000000)
-        |        // least(len(sp), len(sf)) END AS c
-        |  FROM sh)
-        |SELECT kind, id_a, id_b, CAST(c AS BIGINT) AS containment_micro
-        |FROM (SELECT * FROM adj UNION ALL SELECT * FROM pre)
-        |ORDER BY kind, id_a""".stripMargin,
-
-    // replay of the pair populations and EXACT mean Jaccard (trunc-
-    // micros, per-pair div then mean div, matching the Spark side);
-    // the two estimator verdicts ride booleans (minhash draws are not
-    // SQL-replayable — same convention as the other minhash gates)
-    "x3_bbit_minhash" ->
-      """WITH base AS (
-        |  SELECT doc_id, lower(text) AS t FROM documents WHERE doc_id < 300),
-        |all_docs AS (
-        |  SELECT doc_id, t FROM base
-        |  UNION ALL
-        |  SELECT doc_id + 100000, t || ' trailing twin marker token' FROM base),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 3 THEN
-        |      list_distinct(list_transform(generate_series(1, len(w) - 2),
-        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
-        |    ELSE [array_to_string(w, ' ')] END AS s
-        |  FROM (SELECT doc_id, string_split_regex(t, '\s+') AS w
-        |        FROM all_docs) q),
-        |pairs AS (
-        |  SELECT doc_id AS id_a, doc_id + 100000 AS id_b, 'near' AS kind
-        |  FROM base
-        |  UNION ALL
-        |  SELECT doc_id, doc_id + 150, 'far' FROM base WHERE doc_id < 150),
-        |j AS (
-        |  SELECT p.kind,
-        |    (CAST(len(list_intersect(a.s, b.s)) AS BIGINT) * 1000000) //
-        |      (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS jx
-        |  FROM pairs p JOIN sh a ON a.doc_id = p.id_a
-        |    JOIN sh b ON b.doc_id = p.id_b)
-        |SELECT kind, count(*) AS n_pairs,
-        |  CAST(sum(jx) // count(*) AS BIGINT) AS mean_exact_micro,
-        |  TRUE AS full_close, TRUE AS bbit_close
-        |FROM j GROUP BY kind ORDER BY kind""".stripMargin,
-
-    "x3_ngram_jaccard" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 3 THEN
-        |      list_distinct(list_transform(generate_series(1, len(w) - 2),
-        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
-        |    ELSE [array_to_string(w, ' ')] END AS s
-        |  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w
-        |        FROM documents) t)
-        |SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |  CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-        |    / CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) AS jaccard
-        |FROM sh a JOIN sh b ON a.doc_id + 1 = b.doc_id
-        |ORDER BY id_a""".stripMargin,
-
-    // Decontamination replay: same shingle idiom, posting join, window
-    // for the deterministic worst-offender tie-break.
-    "x4_decontaminate" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 3 THEN
-        |      list_distinct(list_transform(generate_series(1, len(w) - 2),
-        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
-        |    ELSE [array_to_string(w, ' ')] END AS s
-        |  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w
-        |        FROM documents) t),
-        |ts AS (SELECT doc_id AS train_id, unnest(s) AS g FROM sh
-        |       WHERE doc_id % 50 <> 0 AND doc_id < 600),
-        |bs AS (SELECT doc_id AS bench_id, unnest(s) AS g FROM sh
-        |       WHERE doc_id % 50 = 0),
-        |pair AS (SELECT train_id, bench_id, count(*) AS nsh
-        |         FROM ts JOIN bs USING (g) GROUP BY 1, 2),
-        |agg AS (SELECT train_id, CAST(count(*) AS BIGINT) AS n_bench_docs,
-        |          CAST(sum(nsh) AS BIGINT) AS n_collisions,
-        |          CAST(max(nsh) AS BIGINT) AS max_shared_ngrams
-        |        FROM pair GROUP BY 1),
-        |worst AS (SELECT train_id, bench_id AS worst_bench_id FROM (
-        |            SELECT train_id, bench_id,
-        |              row_number() OVER (PARTITION BY train_id
-        |                ORDER BY nsh DESC, bench_id ASC) AS rk
-        |            FROM pair) WHERE rk = 1)
-        |SELECT a.train_id, a.n_bench_docs, a.n_collisions,
-        |  a.max_shared_ngrams, w.worst_bench_id
-        |FROM agg a JOIN worst w USING (train_id)
-        |ORDER BY train_id""".stripMargin,
-
-    "x3_prefix_filter_join" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 5 THEN
-        |      list_distinct(list_transform(generate_series(1, len(w) - 4),
-        |        i -> array_to_string(w[i:i+4], ' ')))
-        |    ELSE [array_to_string(w, ' ')] END AS s
-        |  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w
-        |        FROM documents) t),
-        |tok AS (SELECT doc_id, unnest(s) AS tk FROM sh),
-        |sz AS (SELECT doc_id, len(s) AS n FROM sh),
-        |cand AS (SELECT a.doc_id AS ia, b.doc_id AS ib, count(*) AS inter
-        |         FROM tok a JOIN tok b ON a.tk = b.tk AND a.doc_id < b.doc_id
-        |         GROUP BY 1, 2),
-        |j AS (SELECT ia AS id_a, ib AS id_b, CAST(inter AS BIGINT) AS n_inter,
-        |        CAST(sa.n + sb.n - inter AS BIGINT) AS n_union
-        |      FROM cand
-        |      JOIN sz sa ON sa.doc_id = ia
-        |      JOIN sz sb ON sb.doc_id = ib)
-        |SELECT id_a, id_b, n_inter, n_union,
-        |  CAST((n_inter * 1000000) // n_union AS BIGINT) AS jaccard_micros
-        |FROM j WHERE n_inter * 100 >= n_union * 50
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "x3_cluster_survivors" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 3 THEN
-        |      list_distinct(list_transform(generate_series(1, len(w) - 2),
-        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
-        |    ELSE [array_to_string(w, ' ')] END AS s
-        |  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w
-        |        FROM documents) t),
-        |dropped AS (
-        |  SELECT b.doc_id AS id
-        |  FROM sh a JOIN sh b ON a.doc_id + 1 = b.doc_id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-        |      / CAST(len(list_distinct(list_concat(a.s, b.s))) AS DOUBLE) >= 0.01)
-        |SELECT doc_id FROM documents
-        |WHERE doc_id NOT IN (SELECT id FROM dropped)
-        |ORDER BY doc_id""".stripMargin,
-
-    "x4_text_stats" ->
-      """SELECT lang, count(*) AS n_docs,
-        | CAST(sum(len(string_split_regex(text, '\s+'))) AS BIGINT) AS sum_tokens,
-        | CAST(sum(length(text)) AS BIGINT) AS sum_chars,
-        | CAST(sum(list_sum(list_transform(string_split_regex(text, '\s+'),
-        |   t -> greatest(1, CAST(ceil(length(t) / 4.0) AS BIGINT))))) AS BIGINT) AS sum_subwords
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "x4_novelty_score" ->
-      """WITH w AS (
-        |  SELECT DISTINCT doc_id,
-        |    unnest(string_split_regex(lower(text), '\s+')) AS w
-        |  FROM documents),
-        |df AS (SELECT w, count(*) AS dfreq FROM w GROUP BY 1)
-        |SELECT doc_id, count(*) AS n_distinct_words,
-        |  CAST(count(*) FILTER (WHERE dfreq = 1) AS BIGINT) AS n_hapax,
-        |  CAST((count(*) FILTER (WHERE dfreq = 1) * 1000000) // count(*)
-        |    AS BIGINT) AS novelty_micro
-        |FROM w JOIN df USING (w)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "x4_readability" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_words,
-        |    CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+')))
-        |      AS BIGINT) AS n_sentences,
-        |    CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-        |      AS BIGINT) AS n_syllables
-        |  FROM documents)
-        |SELECT doc_id, n_words, n_sentences, n_syllables,
-        |  206835000
-        |    - (203 * n_words * 1000000) // (200 * n_sentences)
-        |    - (423 * n_syllables * 1000000) // (5 * greatest(1, n_words))
-        |    AS flesch_micro
-        |FROM t ORDER BY doc_id""".stripMargin,
-
-    "x4_chunk_tokens" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split_regex(text, '\s+') AS toks FROM documents),
-        |w AS (
-        |  SELECT doc_id, toks, len(toks) AS n,
-        |    unnest(generate_series(0, greatest((len(toks) - 1) // 48, 0))) AS chunk_id
-        |  FROM t)
-        |SELECT doc_id, CAST(chunk_id AS BIGINT) AS chunk_id,
-        |  CAST(len(list_slice(toks, chunk_id * 48 + 1, chunk_id * 48 + 64)) AS BIGINT) AS n_tokens,
-        |  array_to_string(list_slice(toks, chunk_id * 48 + 1, chunk_id * 48 + 64), ' ') AS chunk_text
-        |FROM w WHERE chunk_id * 48 < n
-        |ORDER BY doc_id, chunk_id""".stripMargin,
-
-    // Gopher battery replay: same tokenizations, trunc-div ppm, the
-    // paper's thresholds inlined.
-    "x4_gopher_rules" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    string_split_regex(lower(text), '\s+') AS w,
-        |    string_split(text, chr(10)) AS ln, text
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id,
-        |    CAST(len(w) AS BIGINT) AS n_words,
-        |    CAST(list_sum(list_transform(w, x -> len(x))) * 1000000
-        |      // len(w) AS BIGINT) AS mean_word_len_micro,
-        |    CAST((len(ln) - len(list_distinct(ln))) * 1000000 // len(ln)
-        |      AS BIGINT) AS dup_line_ppm,
-        |    CAST(len(list_filter(ln, l ->
-        |        substring(trim(l), 1, 1) IN ('-', '*', '•'))) * 1000000
-        |      // len(ln) AS BIGINT) AS bullet_line_ppm,
-        |    CAST(len(list_filter(ln, l ->
-        |        trim(l) LIKE '%...' OR trim(l) LIKE '%…')) * 1000000
-        |      // len(ln) AS BIGINT) AS ellipsis_line_ppm,
-        |    CAST((len(text) - len(regexp_replace(text, '[#…]', '', 'g')))
-        |      * 1000000 // len(w) AS BIGINT) AS symbol_word_ppm,
-        |    CAST(len(list_filter(w, x -> regexp_matches(x, '[a-z]')))
-        |      * 1000000 // len(w) AS BIGINT) AS alpha_word_ppm,
-        |    CAST(len(list_filter(
-        |        ['the','be','to','of','and','that','have','with'],
-        |        sw -> list_contains(w, sw))) AS BIGINT) AS n_stop_hits
-        |  FROM t)
-        |SELECT doc_id, n_words, mean_word_len_micro, dup_line_ppm,
-        |  bullet_line_ppm, ellipsis_line_ppm, symbol_word_ppm,
-        |  alpha_word_ppm, n_stop_hits,
-        |  (n_words >= 50 AND n_words <= 100000
-        |    AND mean_word_len_micro >= 3000000
-        |    AND mean_word_len_micro <= 10000000
-        |    AND symbol_word_ppm < 100000 AND bullet_line_ppm < 900000
-        |    AND ellipsis_line_ppm < 300000 AND alpha_word_ppm >= 800000
-        |    AND n_stop_hits >= 2 AND dup_line_ppm < 300000) AS gopher_pass
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "x4_quality_score" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(length(text) - length(regexp_replace(text, '[.,!?;:]', '', 'g')) AS BIGINT) AS n_punct,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                 'that','for','on','with','as','at','by','from'))) AS BIGINT) AS n_stopwords
-        |  FROM documents)
-        |SELECT doc_id, n_tokens, n_chars, n_punct, n_stopwords,
-        |  (n_tokens BETWEEN 5 AND 100000
-        |   AND (n_chars / greatest(n_tokens, 1)) BETWEEN 1 AND 15
-        |   AND n_stopwords * 50 >= n_tokens) AS is_quality
-        |FROM t ORDER BY doc_id""".stripMargin,
-
-    "x4_eval_auc" ->
-      """WITH t0 AS (
-        |  SELECT CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                 'that','for','on','with','as','at','by','from'))) AS BIGINT) AS s
-        |  FROM documents),
-        |t AS (SELECT s, CASE WHEN n_tokens BETWEEN 5 AND 100000
-        |        AND (n_chars / greatest(n_tokens, 1)) BETWEEN 1 AND 15
-        |        AND s * 50 >= n_tokens THEN 1 ELSE 0 END AS y FROM t0),
-        |g AS (SELECT s, count(*) AS n, sum(y) AS p FROM t GROUP BY s),
-        |r AS (SELECT s, n, p,
-        |        coalesce(sum(n) OVER (ORDER BY s ASC
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS c
-        |      FROM g),
-        |a AS (SELECT sum(p) AS n_pos, sum(n - p) AS n_neg,
-        |             sum(p * (2*c + n + 1)) AS r2p FROM r)
-        |SELECT CAST(n_pos AS BIGINT) AS n_pos, CAST(n_neg AS BIGINT) AS n_neg,
-        |  CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-        |    CAST(((r2p - n_pos*(n_pos+1)) * 1000000) // (2*n_pos*n_neg) AS BIGINT)
-        |  END AS auc_micros
-        |FROM a""".stripMargin,
-
-    "x4_eval_pr_curve" ->
-      """WITH t0 AS (
-        |  SELECT CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                 'that','for','on','with','as','at','by','from'))) AS BIGINT) AS s
-        |  FROM documents),
-        |t AS (SELECT s, CASE WHEN n_tokens BETWEEN 5 AND 100000
-        |        AND (n_chars / greatest(n_tokens, 1)) BETWEEN 1 AND 15
-        |        AND s * 50 >= n_tokens THEN 1 ELSE 0 END AS y FROM t0),
-        |g AS (SELECT s, count(*) AS n, sum(y) AS p FROM t GROUP BY s),
-        |r AS (SELECT s,
-        |        sum(p) OVER (ORDER BY s DESC
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS tp,
-        |        sum(n - p) OVER (ORDER BY s DESC
-        |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS fp,
-        |        sum(p) OVER () AS totp
-        |      FROM g)
-        |SELECT CAST(s AS BIGINT) AS score, CAST(tp AS BIGINT) AS tp,
-        |  CAST(fp AS BIGINT) AS fp, CAST(totp - tp AS BIGINT) AS fn,
-        |  CAST((tp * 1000000) // (tp + fp) AS BIGINT) AS prec_micros,
-        |  CASE WHEN totp > 0 THEN CAST((tp * 1000000) // totp AS BIGINT) END AS rec_micros
-        |FROM r ORDER BY score""".stripMargin,
-
-    "x4_eval_calibration" ->
-      """WITH t0 AS (
-        |  SELECT CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                 'that','for','on','with','as','at','by','from'))) AS BIGINT) AS s
-        |  FROM documents),
-        |t AS (SELECT s, CASE WHEN n_tokens BETWEEN 5 AND 100000
-        |        AND (n_chars / greatest(n_tokens, 1)) BETWEEN 1 AND 15
-        |        AND s * 50 >= n_tokens THEN 1 ELSE 0 END AS y FROM t0),
-        |b AS (SELECT least(greatest(s // 2, 0), 11) AS bin, y, s FROM t)
-        |SELECT CAST(bin AS BIGINT) AS bin, count(*) AS n,
-        |  CAST(sum(y) AS BIGINT) AS n_pos, CAST(sum(s) AS BIGINT) AS sum_score,
-        |  CAST((sum(y) * 1000000) // count(*) AS BIGINT) AS pos_rate_micros,
-        |  CAST(sum(s) // count(*) AS BIGINT) AS mean_score_floor
-        |FROM b GROUP BY bin ORDER BY bin""".stripMargin,
-
-    "ml_pearson_r2" ->
-      """WITH li AS (
-        |  SELECT CAST(floor(l_quantity) AS BIGINT) AS q,
-        |    CAST(floor(CAST(l_extendedprice AS DECIMAL(18,2))) AS BIGINT) AS p,
-        |    CAST(CAST(l_discount AS DECIMAL(18,2)) * 100 AS BIGINT) AS d
-        |  FROM lineitem),
-        |li2 AS (SELECT q, p, d, 3 * q + d AS pl FROM li),
-        |s AS (
-        |  SELECT 'qty_price' AS pair, count(*) AS n,
-        |    sum(CAST(q AS HUGEINT)) AS sx, sum(CAST(p AS HUGEINT)) AS sy,
-        |    sum(CAST(q AS HUGEINT) * q) AS sxx,
-        |    sum(CAST(p AS HUGEINT) * p) AS syy,
-        |    sum(CAST(q AS HUGEINT) * p) AS sxy
-        |  FROM li
-        |  UNION ALL
-        |  SELECT 'qty_disc', count(*), sum(CAST(q AS HUGEINT)),
-        |    sum(CAST(d AS HUGEINT)), sum(CAST(q AS HUGEINT) * q),
-        |    sum(CAST(d AS HUGEINT) * d), sum(CAST(q AS HUGEINT) * d)
-        |  FROM li
-        |  UNION ALL
-        |  SELECT 'price_disc', count(*), sum(CAST(p AS HUGEINT)),
-        |    sum(CAST(d AS HUGEINT)), sum(CAST(p AS HUGEINT) * p),
-        |    sum(CAST(d AS HUGEINT) * d), sum(CAST(p AS HUGEINT) * d)
-        |  FROM li
-        |  UNION ALL
-        |  SELECT 'planted_linear', count(*), sum(CAST(q AS HUGEINT)),
-        |    sum(CAST(pl AS HUGEINT)), sum(CAST(q AS HUGEINT) * q),
-        |    sum(CAST(pl AS HUGEINT) * pl), sum(CAST(q AS HUGEINT) * pl)
-        |  FROM li2),
-        |f AS (
-        |  SELECT pair, n,
-        |    CAST(n AS HUGEINT) * sxy - sx * sy AS num,
-        |    CAST(n AS HUGEINT) * sxx - sx * sx AS d1,
-        |    CAST(n AS HUGEINT) * syy - sy * sy AS d2
-        |  FROM s)
-        |SELECT pair, CAST(n AS BIGINT) AS n,
-        |  CAST(CASE WHEN num > 0 THEN 1 WHEN num < 0 THEN -1 ELSE 0 END
-        |    AS BIGINT) AS r_sign,
-        |  CAST(CASE WHEN d1 > 0 AND d2 > 0
-        |    THEN ((num * num // greatest(d1, d2)) * 1000000) // least(d1, d2)
-        |    ELSE 0 END AS BIGINT) AS r2_micro
-        |FROM f ORDER BY pair""".stripMargin,
-
-    // HUGEINT replay of the exact cross-multiplied z² inequality —
-    // `significant` is recomputed from the same integer counts, not
-    // pinned.
-    "ab_test_proportions" ->
-      """WITH base AS (
-        |  SELECT 'planted_bias' AS experiment, event_type,
-        |    (user_id % 2 = 0) AS a, (user_id % 4 = 0) AS s FROM events
-        |  UNION ALL
-        |  SELECT 'value_neutral', event_type,
-        |    (user_id % 2 = 0), (value > 50.0) FROM events),
-        |agg AS (
-        |  SELECT experiment, event_type,
-        |    count(*) FILTER (WHERE a) AS n_a,
-        |    count(*) FILTER (WHERE a AND s) AS x_a,
-        |    count(*) FILTER (WHERE NOT a) AS n_b,
-        |    count(*) FILTER (WHERE NOT a AND s) AS x_b
-        |  FROM base GROUP BY 1, 2),
-        |f AS (
-        |  SELECT *,
-        |    CAST(x_a AS HUGEINT) * n_b - CAST(x_b AS HUGEINT) * n_a AS diff,
-        |    CAST(n_a AS HUGEINT) + n_b AS n,
-        |    CAST(x_a AS HUGEINT) + x_b AS x
-        |  FROM agg)
-        |SELECT experiment, event_type, n_a, x_a, n_b, x_b,
-        |  (x_a * 1000000) // greatest(n_a, 1) AS p_a_micro,
-        |  (x_b * 1000000) // greatest(n_b, 1) AS p_b_micro,
-        |  (n_a > 0 AND n_b > 0 AND
-        |   1000000 * diff * diff * n >
-        |     3841459 * CAST(n_a AS HUGEINT) * n_b * x * (n - x)) AS significant
-        |FROM f ORDER BY experiment, event_type""".stripMargin,
-
-    "layout_hilbert_values" ->
-      """WITH RECURSIVE it AS (
-        |  SELECT event_id,
-        |    CAST(user_id % 256 AS BIGINT) AS hx,
-        |    CAST(CAST(floor(value) AS BIGINT) % 256 AS BIGINT) AS hy,
-        |    CAST(user_id % 256 AS BIGINT) AS x,
-        |    CAST(CAST(floor(value) AS BIGINT) % 256 AS BIGINT) AS y,
-        |    CAST(0 AS BIGINT) AS d, CAST(128 AS BIGINT) AS s
-        |  FROM events
-        |  UNION ALL
-        |  SELECT event_id, hx, hy,
-        |    CASE WHEN (y & s) = 0 THEN
-        |      CASE WHEN (x & s) != 0 THEN s - 1 - y ELSE y END
-        |    ELSE x END AS x,
-        |    CASE WHEN (y & s) = 0 THEN
-        |      CASE WHEN (x & s) != 0 THEN s - 1 - x ELSE x END
-        |    ELSE y END AS y,
-        |    d + s * s * xor(3 * (CASE WHEN (x & s) != 0 THEN 1 ELSE 0 END),
-        |                    (CASE WHEN (y & s) != 0 THEN 1 ELSE 0 END)) AS d,
-        |    s // 2 AS s
-        |  FROM it WHERE s > 0)
-        |SELECT event_id, hx, hy, d AS h FROM it WHERE s = 0
-        |ORDER BY event_id""".stripMargin,
-
-    "x4_eval_chi2_terms" ->
-      """WITH t0 AS (
-        |  SELECT CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                 'that','for','on','with','as','at','by','from'))) AS BIGINT) AS st,
-        |    list_distinct(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> length(w) >= 4)) AS ts
-        |  FROM documents),
-        |docs AS (SELECT CASE WHEN n_tokens BETWEEN 5 AND 100000
-        |           AND (n_chars / greatest(n_tokens, 1)) BETWEEN 1 AND 15
-        |           AND st * 50 >= n_tokens THEN 1 ELSE 0 END AS y, ts FROM t0),
-        |tot AS (SELECT count(*) AS n, sum(y) AS np FROM docs),
-        |pt AS (SELECT tk AS term, count(*) AS term_df, sum(y) AS term_pos
-        |       FROM (SELECT y, unnest(ts) AS tk FROM docs)
-        |       GROUP BY 1 HAVING count(*) >= 20),
-        |f AS (SELECT term, term_df, term_pos,
-        |        CAST(term_pos AS HUGEINT) AS a,
-        |        CAST(term_df - term_pos AS HUGEINT) AS b,
-        |        CAST(np - term_pos AS HUGEINT) AS c,
-        |        CAST((n - np) - (term_df - term_pos) AS HUGEINT) AS d,
-        |        CAST(n AS HUGEINT) AS n
-        |      FROM pt, tot)
-        |SELECT term, CAST(term_df AS BIGINT) AS term_df,
-        |  CAST(term_pos AS BIGINT) AS term_pos,
-        |  CASE WHEN (a+b)*(c+d)*(a+c)*(b+d) = 0 THEN NULL
-        |    ELSE CAST((n*(a*d - b*c)*(a*d - b*c)*1000000)
-        |              // ((a+b)*(c+d)*(a+c)*(b+d)) AS BIGINT)
-        |  END AS chi2_micros
-        |FROM f ORDER BY term""".stripMargin,
-
-    "x4_filter_attrition" ->
-      """WITH t AS (
-        |  SELECT CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS nt,
-        |    CAST(length(text) AS BIGINT) AS nc,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                 'that','for','on','with','as','at','by','from'))) AS BIGINT) AS st,
-        |    len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('the','and','of','to','is','in','that','it'))) AS s_en,
-        |    len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('der','die','das','und','ist','nicht','ein','zu'))) AS s_de,
-        |    len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('le','la','et','les','des','est','un','une'))) AS s_fr,
-        |    len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('el','los','las','es','un','una','que','y'))) AS s_es
-        |  FROM documents),
-        |ff AS (
-        |  SELECT CASE
-        |    WHEN NOT (nt >= 5) THEN 0
-        |    WHEN NOT (nt <= 100000) THEN 1
-        |    WHEN NOT ((nc / greatest(nt, 1)) BETWEEN 1 AND 15) THEN 2
-        |    WHEN NOT (st * 50 >= nt) THEN 3
-        |    WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 4
-        |    ELSE -1 END AS ff
-        |  FROM t),
-        |cnt AS (SELECT ff, count(*) AS n FROM ff GROUP BY 1),
-        |stages AS (SELECT * FROM (VALUES (0, 'min_tokens'), (1, 'max_tokens'),
-        |  (2, 'chars_per_token'), (3, 'stopword_ratio'), (4, 'lang_known'))
-        |  AS v(stage, rule)),
-        |j AS (SELECT stage, rule, coalesce(n, 0) AS n_killed
-        |      FROM stages LEFT JOIN cnt ON stage = ff),
-        |tot AS (SELECT count(*) AS t FROM t)
-        |SELECT CAST(stage AS BIGINT) AS stage, rule,
-        |  CAST(t - coalesce(sum(n_killed) OVER (ORDER BY stage
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS n_in,
-        |  CAST(n_killed AS BIGINT) AS n_killed,
-        |  CAST(t - coalesce(sum(n_killed) OVER (ORDER BY stage
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) - n_killed
-        |    AS BIGINT) AS n_out
-        |FROM j, tot ORDER BY stage""".stripMargin,
-
-    "x4_pmi_bigrams" ->
-      """WITH w AS (
-        |  SELECT string_split_regex(lower(text), '\s+') AS ws FROM documents),
-        |uw AS (SELECT tk FROM (SELECT unnest(ws) AS tk FROM w) WHERE length(tk) >= 1),
-        |uni AS (SELECT tk AS wd, count(*) AS c FROM uw GROUP BY 1),
-        |tt AS (SELECT count(*) AS t FROM uw),
-        |bg0 AS (
-        |  SELECT unnest(list_transform(generate_series(1, len(ws) - 1),
-        |    i -> {'w1': ws[i], 'w2': ws[i+1]})) AS b
-        |  FROM w WHERE len(ws) >= 2),
-        |bg AS (SELECT b.w1 AS w1, b.w2 AS w2 FROM bg0
-        |       WHERE length(b.w1) >= 1 AND length(b.w2) >= 1),
-        |bt AS (SELECT count(*) AS bt FROM bg),
-        |big AS (SELECT w1, w2, count(*) AS c_xy FROM bg GROUP BY 1, 2
-        |        HAVING count(*) >= 10)
-        |SELECT w1, w2, CAST(c_xy AS BIGINT) AS c_xy,
-        |  CAST(u1.c AS BIGINT) AS c_x, CAST(u2.c AS BIGINT) AS c_y,
-        |  CAST((CAST(c_xy AS HUGEINT) * t * t * 1000000)
-        |       // (CAST(bt AS HUGEINT) * u1.c * u2.c) AS BIGINT) AS pmi_ratio_micros
-        |FROM big
-        |JOIN uni u1 ON u1.wd = big.w1
-        |JOIN uni u2 ON u2.wd = big.w2, tt, bt
-        |ORDER BY w1, w2""".stripMargin,
-
-    // Same half-rank construction (2·below + ties + 1) via an ordered
-    // cumulative sum; the final double chain shares the Spark shape
-    // term for term.
-    "ml_spearman_rank" ->
-      """WITH u AS (
-        |  SELECT user_id, count(*) AS x,
-        |    sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) AS y
-        |  FROM events GROUP BY 1),
-        |gx AS (SELECT x AS v, count(*) AS cnt FROM u GROUP BY 1),
-        |rx AS (SELECT v, 2 * (sum(cnt) OVER (ORDER BY v) - cnt) + cnt + 1 AS ra
-        |       FROM gx),
-        |gy AS (SELECT y AS v, count(*) AS cnt FROM u GROUP BY 1),
-        |ry AS (SELECT v, 2 * (sum(cnt) OVER (ORDER BY v) - cnt) + cnt + 1 AS rb
-        |       FROM gy),
-        |j AS (SELECT ra, rb FROM u
-        |      JOIN rx ON u.x = rx.v JOIN ry ON u.y = ry.v),
-        |s AS (SELECT count(*) AS n, sum(ra) AS sa, sum(rb) AS sb,
-        |      sum(ra * rb) AS sab, sum(ra * ra) AS saa, sum(rb * rb) AS sbb
-        |      FROM j)
-        |SELECT CAST(n AS BIGINT) AS n, CAST(sa AS BIGINT) AS sum_rank2_x,
-        |  CAST(sb AS BIGINT) AS sum_rank2_y,
-        |  CAST(n * sab - sa * sb AS BIGINT) AS num,
-        |  CAST(n * saa - sa * sa AS BIGINT) AS d1,
-        |  CAST(n * sbb - sb * sb AS BIGINT) AS d2,
-        |  CASE WHEN n * saa - sa * sa > 0 AND n * sbb - sb * sb > 0 THEN
-        |    CAST(floor(1000000.0 * CAST(n * sab - sa * sb AS DOUBLE) /
-        |      sqrt(CAST(n * saa - sa * sa AS DOUBLE) *
-        |           CAST(n * sbb - sb * sb AS DOUBLE))) AS BIGINT)
-        |  END AS r_micro
-        |FROM s""".stripMargin,
-
-    // HUGEINT sums keep every Cramer term exact (ceiling 1.7e38, same
-    // envelope as Spark's decimal(38,0) internals); `//` truncates like
-    // the Spark side's div.
-    "ml_ols_fit" ->
-      """WITH b AS (
-        |  SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS y,
-        |    CAST(l_quantity AS BIGINT) AS x1,
-        |    CAST(round(l_discount * 100) AS BIGINT) AS x2
-        |  FROM lineitem),
-        |s AS (SELECT count(*) AS n, sum(x1) AS s1, sum(x2) AS s2,
-        |        sum(x1*x1) AS s11, sum(x2*x2) AS s22, sum(x1*x2) AS s12,
-        |        sum(y) AS sy, sum(x1*y) AS s1y, sum(x2*y) AS s2y
-        |      FROM b),
-        |d AS (SELECT n,
-        |        n*(s11*s22 - s12*s12) - s1*(s1*s22 - s12*s2) + s2*(s1*s12 - s11*s2) AS det,
-        |        sy*(s11*s22 - s12*s12) - s1*(s1y*s22 - s12*s2y) + s2*(s1y*s12 - s11*s2y) AS b0n,
-        |        n*(s1y*s22 - s12*s2y) - sy*(s1*s22 - s12*s2) + s2*(s1*s2y - s1y*s2) AS b1n,
-        |        n*(s11*s2y - s1y*s12) - s1*(s1*s2y - s1y*s2) + sy*(s1*s12 - s11*s2) AS b2n
-        |      FROM s)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  CASE WHEN det != 0 THEN CAST((b0n * 1000000) // det AS BIGINT) END AS b0_micros,
-        |  CASE WHEN det != 0 THEN CAST((b1n * 1000000) // det AS BIGINT) END AS b1_micros,
-        |  CASE WHEN det != 0 THEN CAST((b2n * 1000000) // det AS BIGINT) END AS b2_micros
-        |FROM d""".stripMargin,
-
-    "ml_ols_simple" ->
-      """WITH b AS (
-        |  SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS y,
-        |    CAST(l_quantity AS BIGINT) AS x
-        |  FROM lineitem),
-        |s AS (SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |        sum(x*x) AS sxx, sum(x*y) AS sxy FROM b),
-        |d AS (SELECT n, n*sxx - sx*sx AS den, n*sxy - sx*sy AS num, sx, sy FROM s)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |  CASE WHEN den != 0 THEN
-        |    CAST(((sy*den - num*sx) * 1000000) // (n*den) AS BIGINT) END AS b0_micros,
-        |  CASE WHEN den != 0 THEN CAST((num * 1000000) // den AS BIGINT) END AS b1_micros
-        |FROM d""".stripMargin,
-
-    "ml_ols_residuals" ->
-      """WITH b AS (
-        |  SELECT l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS y,
-        |    CAST(l_quantity AS BIGINT) AS x
-        |  FROM lineitem),
-        |s AS (SELECT l_returnflag, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |        sum(x*x) AS sxx, sum(x*y) AS sxy FROM b GROUP BY 1),
-        |d AS (SELECT l_returnflag, n, n*sxx - sx*sx AS den, n*sxy - sx*sy AS num,
-        |        sx, sy FROM s),
-        |coef AS (
-        |  SELECT l_returnflag,
-        |    CAST(((sy*den - num*sx) * 1000000) // (n*den) AS BIGINT) AS b0,
-        |    CAST((num * 1000000) // den AS BIGINT) AS b1
-        |  FROM d WHERE den != 0),
-        |r AS (
-        |  SELECT b.l_returnflag, b.y AS y_cents, b.x AS x_qty,
-        |    b.y * 1000000 - (c.b0 + c.b1 * b.x) AS resid_micro
-        |  FROM b JOIN coef c ON c.l_returnflag = b.l_returnflag),
-        |k AS (
-        |  SELECT l_returnflag, y_cents, x_qty, resid_micro,
-        |    ROW_NUMBER() OVER (PARTITION BY l_returnflag
-        |      ORDER BY abs(resid_micro) DESC, resid_micro ASC,
-        |        y_cents ASC, x_qty ASC) AS rk
-        |  FROM r)
-        |SELECT l_returnflag, rk, y_cents, x_qty,
-        |  CAST(resid_micro AS BIGINT) AS resid_micro
-        |FROM k WHERE rk <= 3 ORDER BY l_returnflag, rk""".stripMargin,
-
-    "join_amplification_census" ->
-      """WITH a AS (
-        |  SELECT l_partkey, count(*) AS n_left FROM lineitem GROUP BY 1),
-        |b AS (
-        |  SELECT l_partkey, count(*) AS n_right FROM lineitem
-        |  WHERE l_returnflag = 'R' GROUP BY 1)
-        |SELECT a.l_partkey, a.n_left, b.n_right,
-        |  CAST(a.n_left * b.n_right AS BIGINT) AS contrib
-        |FROM a JOIN b ON a.l_partkey = b.l_partkey
-        |ORDER BY contrib DESC, a.l_partkey ASC LIMIT 10""".stripMargin,
-
-    "ml_ols_by_group" ->
-      """WITH b AS (
-        |  SELECT l_returnflag, CAST(round(l_extendedprice * 100) AS BIGINT) AS y,
-        |    CAST(l_quantity AS BIGINT) AS x
-        |  FROM lineitem),
-        |s AS (SELECT l_returnflag, count(*) AS n, sum(x) AS sx, sum(y) AS sy,
-        |        sum(x*x) AS sxx, sum(x*y) AS sxy FROM b GROUP BY 1),
-        |d AS (SELECT l_returnflag, n, n*sxx - sx*sx AS den, n*sxy - sx*sy AS num,
-        |        sx, sy FROM s)
-        |SELECT l_returnflag, CAST(n AS BIGINT) AS n,
-        |  CASE WHEN den != 0 THEN
-        |    CAST(((sy*den - num*sx) * 1000000) // (n*den) AS BIGINT) END AS b0_micros,
-        |  CASE WHEN den != 0 THEN CAST((num * 1000000) // den AS BIGINT) END AS b1_micros
-        |FROM d ORDER BY l_returnflag""".stripMargin,
-
-    "ts_ohlc_hourly" ->
-      """WITH r AS (
-        |  SELECT user_id, date_trunc('hour', ts) AS bucket, value,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id, date_trunc('hour', ts)
-        |      ORDER BY ts ASC, event_id ASC) AS rno,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id, date_trunc('hour', ts)
-        |      ORDER BY ts DESC, event_id DESC) AS rnc
-        |  FROM events),
-        |oc AS (SELECT user_id, bucket,
-        |         max(CASE WHEN rno = 1 THEN value END) AS open,
-        |         max(value) AS high, min(value) AS low,
-        |         max(CASE WHEN rnc = 1 THEN value END) AS close,
-        |         count(*) AS n
-        |       FROM r GROUP BY 1, 2)
-        |SELECT user_id, CAST(bucket AS TIMESTAMP) AS bucket, open, high, low,
-        |  close, CAST(n AS BIGINT) AS n
-        |FROM oc ORDER BY user_id, bucket""".stripMargin,
-
-    "dq_benford_totals" ->
-      """WITH v AS (
-        |  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders
-        |  WHERE CAST(round(o_totalprice * 100) AS BIGINT) > 0),
-        |cnt AS (SELECT CAST(substr(CAST(c AS VARCHAR), 1, 1) AS INT) AS digit,
-        |          count(*) AS n_d FROM v GROUP BY 1),
-        |exp AS (SELECT * FROM (VALUES (1, 301030), (2, 176091), (3, 124939),
-        |          (4, 96910), (5, 79181), (6, 66947), (7, 57992), (8, 51153),
-        |          (9, 45757)) AS t(digit, exp_ppm)),
-        |tot AS (SELECT sum(n_d) AS n FROM cnt)
-        |SELECT CAST(exp.digit AS BIGINT) AS digit,
-        |  CAST(coalesce(n_d, 0) AS BIGINT) AS n_d,
-        |  CAST((coalesce(n_d, 0) * 1000000) // n AS BIGINT) AS obs_ppm,
-        |  CAST(exp_ppm AS BIGINT) AS exp_ppm,
-        |  CAST((coalesce(n_d, 0) * 1000000) // n - exp_ppm AS BIGINT) AS dev_ppm
-        |FROM exp LEFT JOIN cnt ON exp.digit = cnt.digit, tot
-        |ORDER BY digit""".stripMargin,
-
-    "dq_checksum_diff" ->
-      """WITH src AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |    CAST(round(o_totalprice * 100) AS BIGINT) AS t FROM orders),
-        |dst AS (
-        |  SELECT o_orderkey AS k, o_custkey AS c,
-        |    CAST(round((CASE WHEN o_orderkey = 7 THEN o_totalprice + 0.01
-        |                     ELSE o_totalprice END) * 100) AS BIGINT) AS t
-        |  FROM orders),
-        |fs AS (SELECT (( (k % 1000000007) * 1000003 % 1000000007
-        |             + (c % 1000000007) * 31000110 % 1000000007
-        |             + (t % 1000000007) * 961003427 % 1000000007
-        |             ) % 1000000007) AS fp FROM src),
-        |fd AS (SELECT (( (k % 1000000007) * 1000003 % 1000000007
-        |             + (c % 1000000007) * 31000110 % 1000000007
-        |             + (t % 1000000007) * 961003427 % 1000000007
-        |             ) % 1000000007) AS fp FROM dst),
-        |cs AS (SELECT CAST(fp % 16 AS BIGINT) AS bucket, count(*) AS n,
-        |         CAST(sum(CAST(fp AS HUGEINT)) % 1000000007 AS BIGINT) AS s1,
-        |         CAST(sum(CAST(fp AS HUGEINT) * fp) % 1000000007 AS BIGINT) AS s2
-        |       FROM fs GROUP BY 1),
-        |cd AS (SELECT CAST(fp % 16 AS BIGINT) AS bucket, count(*) AS n,
-        |         CAST(sum(CAST(fp AS HUGEINT)) % 1000000007 AS BIGINT) AS s1,
-        |         CAST(sum(CAST(fp AS HUGEINT) * fp) % 1000000007 AS BIGINT) AS s2
-        |       FROM fd GROUP BY 1)
-        |SELECT coalesce(cs.bucket, cd.bucket) AS bucket,
-        |  coalesce(cs.n, 0) AS n_src, coalesce(cd.n, 0) AS n_dst,
-        |  (coalesce(cs.n, -1) = coalesce(cd.n, -2)
-        |   AND coalesce(cs.s1, -1) = coalesce(cd.s1, -2)
-        |   AND coalesce(cs.s2, -1) = coalesce(cd.s2, -2)) AS bucket_matches
-        |FROM cs FULL OUTER JOIN cd ON cs.bucket = cd.bucket
-        |ORDER BY bucket""".stripMargin,
-
-    // multipliers: m0=1000003, m_{i+1}=(m_i*31+17) mod 1e9+7 — the same
-    // chain checksumBuckets derives; fp reduces every term mod p before
-    // summing, exactly as the Spark side does
-    "dq_checksum_orders" ->
-      """WITH f AS (
-        |  SELECT (( (o_orderkey % 1000000007) * 1000003 % 1000000007
-        |          + (o_custkey % 1000000007) * 31000110 % 1000000007
-        |          + (CAST(round(o_totalprice * 100) AS BIGINT) % 1000000007)
-        |            * 961003427 % 1000000007
-        |          ) % 1000000007) AS fp
-        |  FROM orders)
-        |SELECT CAST(fp % 16 AS BIGINT) AS bucket, count(*) AS n,
-        |  CAST(sum(CAST(fp AS HUGEINT)) % 1000000007 AS BIGINT) AS s1,
-        |  CAST(sum(CAST(fp AS HUGEINT) * fp) % 1000000007 AS BIGINT) AS s2
-        |FROM f GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "x4_langid" ->
-      """WITH s AS (
-        |  SELECT doc_id, lang,
-        |    len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('the','and','of','to','is','in','that','it'))) AS s_en,
-        |    len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('der','die','das','und','ist','nicht','ein','zu'))) AS s_de,
-        |    len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('le','la','et','les','des','est','un','une'))) AS s_fr,
-        |    len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('el','los','las','es','un','una','que','y'))) AS s_es
-        |  FROM documents)
-        |SELECT doc_id, lang,
-        |  CASE WHEN greatest(s_en, s_de, s_fr, s_es) = 0 THEN 'unknown'
-        |       WHEN s_en = greatest(s_en, s_de, s_fr, s_es) THEN 'en'
-        |       WHEN s_de = greatest(s_en, s_de, s_fr, s_es) THEN 'de'
-        |       WHEN s_fr = greatest(s_en, s_de, s_fr, s_es) THEN 'fr'
-        |       ELSE 'es' END AS lang_pred
-        |FROM s ORDER BY doc_id""".stripMargin,
-
-    "x4_fingerprint" ->
-      """SELECT doc_id,
-        | substring(sha256(regexp_replace(regexp_replace(lower(trim(text)),
-        |   '[.,!?;:]', '', 'g'), '\s+', ' ', 'g')), 1, 16) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "x5_resize" ->
-      """SELECT doc_id,
-        | CAST(ceil(octet_length(encode(text)) / 4.0) AS BIGINT) AS resized_bytes
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // feat_dim is derived from Multimodal.stubFeatureDim (not a hardcoded
-    // mirror of the stub's width) — a stub dimension change flows into the
-    // oracle automatically; the feature VALUES are unit-tested in
-    // MultimodalSpec.
-    "x5_features_stub" ->
-      s"""SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        | 'text/plain' AS fmt, CAST(${ops.Multimodal.stubFeatureDim} AS BIGINT) AS feat_dim
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // Real-decoder twins: every statistic recomputed from the payload-
-    // generating formula, so the byte parser's full round trip is what
-    // the hash certifies.
-    "x5_image_phash" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, t.k,
-        |    60 + ((d.doc_id // 4 * 31 + t.k * 7) % 136)
-        |      + (CASE WHEN t.k = d.doc_id % 4 THEN 40 ELSE 0 END)
-        |      - (CASE WHEN t.k = 4 + d.doc_id % 4 THEN 40 ELSE 0 END) AS p
-        |  FROM documents d, generate_series(0, 63) AS t(k)
-        |  WHERE d.doc_id < 500),
-        |m AS (SELECT doc_id, sum(p) // 64 AS mean FROM px GROUP BY 1)
-        |SELECT px.doc_id,
-        |  CAST(coalesce(sum(CASE WHEN p > mean AND k < 32
-        |    THEN (1::BIGINT << k) ELSE 0 END), 0) AS BIGINT) AS hash_lo,
-        |  CAST(coalesce(sum(CASE WHEN p > mean AND k >= 32
-        |    THEN (1::BIGINT << (k - 32)) ELSE 0 END), 0) AS BIGINT) AS hash_hi,
-        |  CAST(count(*) FILTER (WHERE p > mean) AS BIGINT) AS n_ones
-        |FROM px JOIN m USING (doc_id)
-        |GROUP BY px.doc_id ORDER BY doc_id""".stripMargin,
-
-    "x5_phash_neardup" ->
-      """WITH px AS (
-        |  SELECT d.doc_id, t.k,
-        |    60 + ((d.doc_id // 4 * 31 + t.k * 7) % 136)
-        |      + (CASE WHEN t.k = d.doc_id % 4 THEN 40 ELSE 0 END)
-        |      - (CASE WHEN t.k = 4 + d.doc_id % 4 THEN 40 ELSE 0 END) AS p
-        |  FROM documents d, generate_series(0, 63) AS t(k)
-        |  WHERE d.doc_id < 500),
-        |m AS (SELECT doc_id, sum(p) // 64 AS mean FROM px GROUP BY 1),
-        |bits AS (
-        |  SELECT px.doc_id,
-        |    CAST(coalesce(sum(CASE WHEN p > mean AND k < 32
-        |      THEN (1::BIGINT << k) ELSE 0 END), 0) AS BIGINT) AS lo,
-        |    CAST(coalesce(sum(CASE WHEN p > mean AND k >= 32
-        |      THEN (1::BIGINT << (k - 32)) ELSE 0 END), 0) AS BIGINT) AS hi
-        |  FROM px JOIN m USING (doc_id) GROUP BY px.doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-        |    CAST(bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi))
-        |      AS BIGINT) AS hamming
-        |  FROM bits a JOIN bits b
-        |    ON a.doc_id < b.doc_id AND a.hi = b.hi
-        |   AND a.lo // 65536 = b.lo // 65536)
-        |SELECT id_a, id_b, hamming FROM pairs
-        |WHERE hamming <= 6 ORDER BY id_a, id_b""".stripMargin,
-
-    // The neardup pair derivation + recursive-CTE connected components
-    // (UNION-deduped reachability, min(root) per node) + size census.
-    "x5_phash_clusters" ->
-      """WITH RECURSIVE px AS (
-        |  SELECT d.doc_id, t.k,
-        |    60 + ((d.doc_id // 4 * 31 + t.k * 7) % 136)
-        |      + (CASE WHEN t.k = d.doc_id % 4 THEN 40 ELSE 0 END)
-        |      - (CASE WHEN t.k = 4 + d.doc_id % 4 THEN 40 ELSE 0 END) AS p
-        |  FROM documents d, generate_series(0, 63) AS t(k)
-        |  WHERE d.doc_id < 500),
-        |m AS (SELECT doc_id, sum(p) // 64 AS mean FROM px GROUP BY 1),
-        |bits AS (
-        |  SELECT px.doc_id,
-        |    CAST(coalesce(sum(CASE WHEN p > mean AND k < 32
-        |      THEN (1::BIGINT << k) ELSE 0 END), 0) AS BIGINT) AS lo,
-        |    CAST(coalesce(sum(CASE WHEN p > mean AND k >= 32
-        |      THEN (1::BIGINT << (k - 32)) ELSE 0 END), 0) AS BIGINT) AS hi
-        |  FROM px JOIN m USING (doc_id) GROUP BY px.doc_id),
-        |pairs AS (
-        |  SELECT a.doc_id AS ia, b.doc_id AS ib
-        |  FROM bits a JOIN bits b
-        |    ON a.doc_id < b.doc_id AND a.hi = b.hi
-        |   AND a.lo // 65536 = b.lo // 65536
-        |  WHERE bit_count(xor(a.lo, b.lo)) + bit_count(xor(a.hi, b.hi)) <= 6),
-        |ue AS (SELECT ia AS u, ib AS v FROM pairs
-        |       UNION SELECT ib, ia FROM pairs),
-        |reach AS (
-        |  SELECT u AS id, u AS root FROM ue
-        |  UNION
-        |  SELECT ue.v AS id, r.root FROM reach r JOIN ue ON ue.u = r.id),
-        |cc AS (SELECT id, min(root) AS cluster FROM reach GROUP BY id),
-        |sz AS (SELECT cluster, count(*) AS cluster_size FROM cc GROUP BY 1)
-        |SELECT cc.id, cc.cluster, sz.cluster_size
-        |FROM cc JOIN sz USING (cluster) ORDER BY id""".stripMargin,
-
-    "x5_audio_energy" ->
-      """WITH d AS (
-        |  SELECT doc_id, 1000 + (doc_id % 5) * 100 AS n FROM documents
-        |  WHERE doc_id < 300),
-        |s AS (
-        |  SELECT doc_id, t.i // 100 AS frame_id,
-        |    ((doc_id * 7 + t.i * 17) % 2001 - 1000) *
-        |      (CASE WHEN (t.i // 100) % 3 = 0 THEN 1 ELSE 50 END) // 50 AS v
-        |  FROM d, generate_series(0, 1399) AS t(i) WHERE t.i < n)
-        |SELECT doc_id, CAST(frame_id AS BIGINT) AS frame_id,
-        |  count(*) AS n_samples,
-        |  CAST(sum(v * v) // count(*) AS BIGINT) AS energy_ms,
-        |  (sum(v * v) // count(*) < 10000) AS is_silence
-        |FROM s GROUP BY doc_id, frame_id
-        |ORDER BY doc_id, frame_id""".stripMargin,
-
-    "x5_decode_pgm" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |    CAST(4 + doc_id % 13 AS INTEGER) AS width,
-        |    CAST(3 + doc_id % 7 AS INTEGER) AS height,
-        |    list_transform(generate_series(0,
-        |        (4 + doc_id % 13) * (3 + doc_id % 7) - 1),
-        |      i -> (doc_id * 31 + i * 7) % 256) AS px
-        |  FROM documents WHERE doc_id < 500)
-        |SELECT doc_id, width, height, CAST(255 AS INTEGER) AS maxval,
-        |  CAST(len(px) AS BIGINT) AS n_pixels,
-        |  CAST(list_sum(px) AS BIGINT) AS px_sum,
-        |  CAST(list_min(px) AS INTEGER) AS px_min,
-        |  CAST(list_max(px) AS INTEGER) AS px_max
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    "x5_decode_wav" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |    CAST(8000 * (1 + doc_id % 3) AS INTEGER) AS sample_rate,
-        |    list_transform(generate_series(0, 49 + doc_id % 100),
-        |      i -> abs((doc_id * 13 + i * 5) % 65536 - 32768)) AS sa
-        |  FROM documents WHERE doc_id < 500)
-        |SELECT doc_id, sample_rate,
-        |  CAST(len(sa) AS BIGINT) AS n_samples,
-        |  CAST(len(sa) * 1000000 // sample_rate AS BIGINT) AS duration_micros,
-        |  CAST(list_sum(sa) AS BIGINT) AS sum_abs,
-        |  CAST(list_max(sa) AS INTEGER) AS peak
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    "x5_resize_pgm" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |    4 + doc_id % 13 AS w0, 3 + doc_id % 7 AS h0,
-        |    1 + (4 + doc_id % 13) // 2 AS w1, 1 + (3 + doc_id % 7) // 2 AS h1
-        |  FROM documents WHERE doc_id < 500),
-        |p AS (
-        |  SELECT doc_id, w1, h1,
-        |    list_transform(generate_series(0, w1 * h1 - 1),
-        |      i -> (doc_id * 31 +
-        |            (((i // w1) * h0 // h1) * w0 + ((i % w1) * w0 // w1)) * 7)
-        |           % 256) AS px
-        |  FROM g)
-        |SELECT doc_id, CAST(w1 AS INTEGER) AS width, CAST(h1 AS INTEGER) AS height,
-        |  CAST(255 AS INTEGER) AS maxval,
-        |  CAST(len(px) AS BIGINT) AS n_pixels,
-        |  CAST(list_sum(px) AS BIGINT) AS px_sum,
-        |  CAST(list_min(px) AS INTEGER) AS px_min,
-        |  CAST(list_max(px) AS INTEGER) AS px_max
-        |FROM p ORDER BY doc_id""".stripMargin,
-
-    "x5_decode_gif" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |    CAST(10 + doc_id % 20 AS INTEGER) AS width,
-        |    CAST(8 + doc_id % 9 AS INTEGER) AS height,
-        |    list_transform(generate_series(0,
-        |        (10 + doc_id % 20) * (8 + doc_id % 9) - 1),
-        |      i -> (i // 7 + doc_id) % 16) AS px
-        |  FROM documents WHERE doc_id < 500)
-        |SELECT doc_id, width, height, CAST(16 AS INTEGER) AS n_colors,
-        |  CAST(len(px) AS BIGINT) AS n_pixels,
-        |  CAST(list_sum(px) AS BIGINT) AS idx_sum,
-        |  CAST(list_min(px) AS INTEGER) AS idx_min,
-        |  CAST(list_max(px) AS INTEGER) AS idx_max,
-        |  TRUE AS lzw_saves_bytes
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    "x5_decode_png" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |    CAST(24 + doc_id % 21 AS INTEGER) AS width,
-        |    CAST(16 + doc_id % 9 AS INTEGER) AS height,
-        |    list_transform(generate_series(0,
-        |        (24 + doc_id % 21) * (16 + doc_id % 9) - 1),
-        |      i -> (i // 7 + doc_id) % 256) AS px
-        |  FROM documents WHERE doc_id < 500)
-        |SELECT doc_id, width, height, CAST(8 AS INTEGER) AS bit_depth,
-        |  CAST(len(px) AS BIGINT) AS n_pixels,
-        |  CAST(list_sum(px) AS BIGINT) AS px_sum,
-        |  CAST(list_min(px) AS INTEGER) AS px_min,
-        |  CAST(list_max(px) AS INTEGER) AS px_max,
-        |  TRUE AS deflate_saves_bytes
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    // Block-grain replay of the bit-exact JPEG round trip: one row per
-    // 8×8 block, pixel stats scale by 64. dct_saves_bytes pinned TRUE.
-    "x5_decode_jpeg" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    8 * (2 + doc_id % 3) AS w, 8 * (1 + doc_id % 4) AS h
-        |  FROM documents WHERE doc_id < 400),
-        |v AS (
-        |  SELECT d.doc_id, d.w, d.h,
-        |    (d.doc_id * 31 + gx.bx * 7 + gy.by * 13) % 256 AS val
-        |  FROM d
-        |  JOIN generate_series(0, 3) gx(bx) ON gx.bx < d.w // 8
-        |  JOIN generate_series(0, 3) gy(by) ON gy.by < d.h // 8)
-        |SELECT doc_id, CAST(min(w) AS INTEGER) AS width,
-        |  CAST(min(h) AS INTEGER) AS height,
-        |  CAST(min(w) * min(h) AS BIGINT) AS n_pixels,
-        |  CAST(64 * sum(val) AS BIGINT) AS px_sum,
-        |  CAST(min(val) AS INTEGER) AS px_min,
-        |  CAST(max(val) AS INTEGER) AS px_max,
-        |  TRUE AS dct_saves_bytes
-        |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // averageHash replayed from the 16×16 twin raster formula (sample
-    // (x,y) → block (x/4, y/4) at these dims), then clusters = exact-
-    // hash groups (min id, group size) — identical to the connected
-    // components of the equality-pair graph the Spark side builds.
-    "x5_phash_jpeg" ->
-      """WITH ids AS (SELECT doc_id AS id FROM documents WHERE doc_id < 200),
-        |tw AS (
-        |  SELECT 2 * id + t.s AS doc_id, id
-        |  FROM ids, (VALUES (0), (1)) t(s)),
-        |samp AS (
-        |  SELECT tw.doc_id, g.k,
-        |    (tw.id * 37 + ((g.k % 8) // 4) * 101 + ((g.k // 8) // 4) * 53)
-        |      % 256 AS v
-        |  FROM tw, generate_series(0, 63) g(k)),
-        |m AS (SELECT doc_id, sum(v) // 64 AS mean FROM samp GROUP BY 1),
-        |hb AS (
-        |  SELECT s.doc_id,
-        |    CAST(sum(CASE WHEN s.v > m.mean AND s.k < 32
-        |      THEN (CAST(1 AS BIGINT) << s.k) ELSE 0 END) AS BIGINT)
-        |      AS hash_lo,
-        |    CAST(sum(CASE WHEN s.v > m.mean AND s.k >= 32
-        |      THEN (CAST(1 AS BIGINT) << (s.k - 32)) ELSE 0 END) AS BIGINT)
-        |      AS hash_hi
-        |  FROM samp s JOIN m USING (doc_id) GROUP BY 1)
-        |SELECT doc_id AS id,
-        |  CAST(min(doc_id) OVER (PARTITION BY hash_lo, hash_hi) AS BIGINT)
-        |    AS cluster,
-        |  CAST(count(*) OVER (PARTITION BY hash_lo, hash_hi) AS BIGINT)
-        |    AS cluster_size
-        |FROM hb ORDER BY id""".stripMargin,
-
-    // Sample-grain replay of the exact spectral anchors.
-    "x5_audio_spectral" ->
-      """WITH d AS (
-        |  SELECT doc_id, 64 + (doc_id % 5) * 16 AS n
-        |  FROM documents WHERE doc_id < 400),
-        |s AS (
-        |  SELECT doc_id, n, i.i,
-        |    (doc_id * 13 + i.i * 5) % 4001 - 2000 AS v
-        |  FROM d, generate_series(0, 127) i(i) WHERE i.i < n)
-        |SELECT doc_id, CAST(min(n) AS BIGINT) AS n_samples,
-        |  CAST(sum(v) AS BIGINT) AS dc_bin,
-        |  CAST(sum(CASE WHEN i % 2 = 0 THEN v ELSE -v END) AS BIGINT)
-        |    AS nyquist_bin,
-        |  CAST(sum(v * v) AS BIGINT) AS power
-        |FROM s GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // The x5_decode_wav replay at stride 2 over half the rate.
-    "x5_wav_resample" ->
-      """WITH g AS (
-        |  SELECT doc_id,
-        |    CAST(8000 * (1 + doc_id % 3) // 2 AS INTEGER) AS sample_rate,
-        |    list_transform(generate_series(0, (49 + doc_id % 100) // 2),
-        |      j -> abs((doc_id * 13 + j * 10) % 65536 - 32768)) AS sa
-        |  FROM documents WHERE doc_id < 400)
-        |SELECT doc_id, sample_rate,
-        |  CAST(len(sa) AS BIGINT) AS n_samples,
-        |  CAST(len(sa) * 1000000 // sample_rate AS BIGINT) AS duration_micros,
-        |  CAST(list_sum(sa) AS BIGINT) AS sum_abs,
-        |  CAST(list_max(sa) AS INTEGER) AS peak
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    // Header-grain replay of the MPEG census: every field and byte
-    // offset from the id formulas and the 48 kHz slot arithmetic
-    // (Layer I frame = kbps bytes, Layers II/III = 3·kbps bytes).
-    "x5_mpeg_frames" ->
-      """WITH d AS (
-        |  SELECT doc_id, 1 + doc_id % 3 AS layer, 1 + doc_id % 4 AS nf,
-        |    [48000, 44100, 32000][CAST(doc_id // 3 % 3 AS INTEGER) + 1]
-        |      AS fs
-        |  FROM documents WHERE doc_id < 300),
-        |k AS (
-        |  SELECT doc_id, layer, nf, fs,
-        |    CASE WHEN layer = 1
-        |      THEN [32,64,96,128,160,192,224,256][CAST(doc_id % 8 AS INTEGER) + 1]
-        |    WHEN layer = 2
-        |      THEN [48,56,64,80,96,112,128,160][CAST(doc_id % 8 AS INTEGER) + 1]
-        |    ELSE [40,48,56,64,80,96,112,128][CAST(doc_id % 8 AS INTEGER) + 1]
-        |    END AS kbps
-        |  FROM d),
-        |u AS (
-        |  SELECT doc_id, layer, nf, fs, kbps,
-        |    (CASE WHEN layer = 1 THEN 12000 ELSE 144000 END * kbps) // fs
-        |      AS base,
-        |    (CASE WHEN layer = 1 THEN 12000 ELSE 144000 END * kbps) % fs
-        |      AS m
-        |  FROM k),
-        |f AS (
-        |  SELECT doc_id, layer, fs, kbps, base, m, t.j
-        |  FROM u, generate_series(0, 3) t(j) WHERE t.j < nf)
-        |SELECT doc_id, CAST(j AS INTEGER) AS frame_id,
-        |  CAST(layer AS INTEGER) AS layer,
-        |  CAST(kbps AS INTEGER) AS bitrate_kbps,
-        |  CAST(fs AS INTEGER) AS sample_rate,
-        |  CAST(CASE WHEN layer = 1 THEN 384 ELSE 1152 END AS INTEGER)
-        |    AS n_samples,
-        |  CAST((CASE WHEN layer = 1 THEN 4 ELSE 1 END) *
-        |    (base + ((j + 1) * m) // fs - (j * m) // fs) AS INTEGER)
-        |    AS frame_bytes,
-        |  CAST((CASE WHEN layer = 1 THEN 4 ELSE 1 END) *
-        |    (j * base + (j * m) // fs) AS BIGINT) AS byte_off
-        |FROM f ORDER BY doc_id, frame_id""".stripMargin,
-
-    // Census replay of the Layer III fixture; the digital-stage
-    // bit-exactness and synthesis-stage tone verdicts ride booleans.
-    "x5_decode_mp3" ->
-      """SELECT doc_id,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS n_frames,
-        |  CAST([160,192,224,256][CAST(doc_id % 4 AS INTEGER) + 1]
-        |    AS INTEGER) AS bitrate_kbps,
-        |  CAST(48000 AS INTEGER) AS sample_rate,
-        |  CAST(1152 * (2 + doc_id % 3) AS BIGINT) AS n_samples,
-        |  TRUE AS spectrum_exact, TRUE AS tones_ok
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // Reservoir-stream replay: dense packing makes every tail frame's
-    // main_data_begin nonzero, so the reservoir census is a closed form
-    // of the frame count; decode verdicts ride booleans as in the flat
-    // gate.
-    "x5_decode_mp3_reservoir" ->
-      """SELECT doc_id,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS n_frames,
-        |  CAST(1 + doc_id % 3 AS INTEGER) AS n_reservoir_frames,
-        |  CAST([160,192,224,256][CAST(doc_id % 4 AS INTEGER) + 1]
-        |    AS INTEGER) AS bitrate_kbps,
-        |  CAST(48000 AS INTEGER) AS sample_rate,
-        |  CAST(1152 * (2 + doc_id % 3) AS BIGINT) AS n_samples,
-        |  TRUE AS spectrum_exact, TRUE AS tones_ok
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // Joint-stereo replay: MS on even docs, reservoir transport on
-    // id%3==0 (then every tail back-pointer is nonzero → nFrames−1 = 1
-    // at id%3=0); decode verdicts ride booleans as in the mono gates.
-    "x5_decode_mp3_stereo" ->
-      """SELECT doc_id,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS n_frames,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN 2 + doc_id % 3 ELSE 0 END
-        |    AS INTEGER) AS n_ms_frames,
-        |  CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS INTEGER)
-        |    AS n_reservoir_frames,
-        |  CAST([192,224,256,320][CAST(doc_id % 4 AS INTEGER) + 1]
-        |    AS INTEGER) AS bitrate_kbps,
-        |  CAST(1152 * (2 + doc_id % 3) AS BIGINT) AS n_samples,
-        |  TRUE AS spectrum_exact, TRUE AS tones_ok
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // Cross-codec fingerprint replay: all three verdicts ride booleans.
-    "x5_audio_crosscodec" ->
-      """SELECT doc_id, CAST(2 AS INTEGER) AS n_frames,
-        |  TRUE AS flac_matches_source, TRUE AS mp2_matches_flac,
-        |  TRUE AS flac_compressed
-        |FROM documents WHERE doc_id < 100 ORDER BY doc_id""".stripMargin,
-
-    // FLAC census replay: frame count includes the partial tail block
-    // (ceil division); the lossless/mode/compression verdicts ride
-    // booleans (decode throws on any CRC/MD5/boundary violation).
-    "x5_flac_roundtrip" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 2 END AS INTEGER)
-        |    AS n_channels,
-        |  CAST((1024 * (2 + doc_id % 3) + (doc_id % 5) * 100 + 1023)
-        |    // 1024 AS INTEGER) AS n_frames,
-        |  CAST(1024 * (2 + doc_id % 3) + (doc_id % 5) * 100 AS BIGINT)
-        |    AS n_samples,
-        |  TRUE AS lossless, TRUE AS modes_ok, TRUE AS compressed_smaller
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    "x5_flac_foreign" ->
-      """SELECT d.doc_id, CAST(3 AS BIGINT) AS n_frames,
-        |  TRUE AS lossless, TRUE AS used_wasted_bits,
-        |  TRUE AS used_partition_orders, TRUE AS used_rice_escape,
-        |  (SELECT CAST(sum((t.i*2654435761 + d.doc_id) % 4001 - 2000)
-        |     AS BIGINT)
-        |   FROM (SELECT unnest(generate_series(0, 1023)) AS i) t)
-        |    AS neg_shift_sum,
-        |  TRUE AS neg_shift_lossless
-        |FROM documents d WHERE d.doc_id < 150 ORDER BY d.doc_id""".stripMargin,
-
-    // Depth census replay (r15 widens to the full RFC ladder incl.
-    // 32-bit): the hi-res depths (24/20/32) must pick RICE2 for their
-    // wide residuals, the small depths must stay on 4-bit rice — both
-    // facts fall out of the exact-cost planner, and losslessness rides
-    // the MD5/CRC checks inside decode.
-    "x5_flac_depth" ->
-      """SELECT doc_id,
-        |  CAST(CASE CAST(doc_id % 5 AS INTEGER)
-        |    WHEN 0 THEN 24 WHEN 1 THEN 8 WHEN 2 THEN 12 WHEN 3 THEN 20
-        |    ELSE 32 END AS INTEGER) AS bits_per_sample,
-        |  CAST(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 2 END AS INTEGER)
-        |    AS n_channels,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS n_frames,
-        |  CAST(1024 * (2 + doc_id % 3) AS BIGINT) AS n_samples,
-        |  TRUE AS lossless,
-        |  (doc_id % 5 IN (0, 3, 4)) AS used_rice2
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // Multichannel census replay: channel count and depth fall out of
-    // the id scheme; assignment code nch−1 and losslessness ride the
-    // booleans (decode throws on CRC/MD5 violations).
-    "x5_flac_multichannel" ->
-      """SELECT doc_id,
-        |  CAST(3 + doc_id % 6 AS INTEGER) AS n_channels,
-        |  CAST(CASE WHEN doc_id % 4 = 0 THEN 24 ELSE 16 END AS INTEGER)
-        |    AS bits_per_sample,
-        |  CAST(2 AS INTEGER) AS n_frames,
-        |  TRUE AS lossless, TRUE AS mode_ok
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // Metadata census replay: tag counts/values, per-frame seekpoint
-    // count, padding bytes — all closed-form; seekpoint exactness and
-    // losslessness ride the booleans.
-    "x5_flac_metadata" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 2 = 1 THEN 3 ELSE 2 END AS INTEGER)
-        |    AS n_tags,
-        |  'title-' || doc_id AS title,
-        |  'artist-' || (doc_id % 7) AS artist,
-        |  TRUE AS vendor_ok,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS n_seekpoints,
-        |  TRUE AS seek_ok,
-        |  CAST((doc_id % 4) * 16 AS INTEGER) AS padding_bytes,
-        |  TRUE AS lossless
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // Variable-blocksize census replay: the alternating 1024/512
-    // schedule gives 3 frames for n=2048 (1024+512+512-tail) and
-    // n=2560 (1024+512+1024), 4 for n=3072 (1024+512+1024+512);
-    // min/max block pins that strategy 1 actually produced min != max.
-    "x5_flac_varblock" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 3 = 2 THEN 4 ELSE 3 END AS INTEGER)
-        |    AS n_frames,
-        |  CAST(512 AS INTEGER) AS min_block,
-        |  CAST(1024 AS INTEGER) AS max_block,
-        |  CAST(2048 + (doc_id % 3) * 512 AS BIGINT) AS n_samples,
-        |  TRUE AS lossless
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // Mixed-corpus reservoir census: families 1/3/4 (mod 5) pack
-    // densely → nFrames−1 reservoir frames; family 4 is
-    // intensity-patched stereo → counted by the census, refused by the
-    // decoder (decodable = false).
-    "x5_mp3_reservoir_mix" ->
-      """SELECT doc_id,
-        |  CAST(2 + doc_id % 4 AS INTEGER) AS n_frames,
-        |  CAST(CASE WHEN doc_id % 5 IN (1,3,4) THEN 1 + doc_id % 4
-        |    ELSE 0 END AS INTEGER) AS n_reservoir_frames,
-        |  CAST(CASE WHEN doc_id % 5 IN (1,3,4)
-        |    THEN 1000000 * (1 + doc_id % 4) // (2 + doc_id % 4)
-        |    ELSE 0 END AS BIGINT) AS reservoir_ppm,
-        |  CAST(CASE WHEN doc_id % 5 = 4 THEN 2 + doc_id % 4 ELSE 0 END
-        |    AS INTEGER) AS n_intensity_frames,
-        |  TRUE AS decodable
-        |FROM documents WHERE doc_id < 200 ORDER BY doc_id""".stripMargin,
-
-    // Short-block / window-switching fixtures: block types cycle
-    // [long, short, start, short, stop, short] per granule, so granule
-    // g is short iff (doc_id + g) % 6 in {1, 3, 5}; spectra and PCM
-    // verdicts ride booleans.
-    "x5_decode_mp3_short" ->
-      """WITH g AS (SELECT d.doc_id, s.g FROM documents d,
-        |    (SELECT unnest(range(12)) AS g) s
-        |  WHERE d.doc_id < 150 AND s.g < 2 * (2 + d.doc_id % 3))
-        |SELECT doc_id,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS n_frames,
-        |  CAST(SUM(CASE WHEN (doc_id + g) % 6 IN (1,3,5) THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_short_granules,
-        |  CAST(SUM(CASE WHEN (doc_id + g) % 6 <> 0 THEN 1 ELSE 0 END)
-        |    AS BIGINT) AS n_switched_granules,
-        |  TRUE AS spectrum_exact, TRUE AS decode_clean
-        |FROM g GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // Mixed-block fixtures: every granule is mixed; verdicts ride
-    // booleans.
-    "x5_decode_mp3_mixed" ->
-      """SELECT doc_id,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS n_frames,
-        |  CAST(2 * (2 + doc_id % 3) AS BIGINT) AS n_mixed_granules,
-        |  TRUE AS spectrum_exact, TRUE AS decode_clean
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // scfsi fixtures: the 4-bit pattern replays closed-form; spectrum
-    // and PCM verdicts ride booleans.
-    "x5_decode_mp3_scfsi" ->
-      """SELECT doc_id,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS n_frames,
-        |  CAST(1 + doc_id % 15 AS INTEGER) AS scfsi_pattern,
-        |  TRUE AS spectrum_exact, TRUE AS decode_clean
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // Intensity-stereo fixtures: every frame is joint-stereo with the
-    // intensity bit set; exact position reconstruction rides booleans.
-    "x5_decode_mp3_intensity" ->
-      """SELECT doc_id,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS n_frames,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS n_intensity_frames,
-        |  (doc_id % 2 = 0) AS also_ms,
-        |  TRUE AS spectrum_exact, TRUE AS decode_clean
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // Tagged-crawl intake replay: tag versions, text-frame counts and
-    // values, binary-frame skips, V1/Xing verdicts, audio frame/sample
-    // counts — all closed-form from the id scheme.
-    "x5_mp3_id3_intake" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 4 = 0 THEN 2
-        |            WHEN doc_id % 4 = 1 THEN 3 ELSE 4 END AS INTEGER)
-        |    AS v2_major,
-        |  (doc_id % 5 = 0) AS v2_unsync,
-        |  (doc_id % 7 = 0 AND doc_id % 4 >= 1) AS v2_ext,
-        |  CAST(CASE WHEN doc_id % 2 = 1 THEN 3 ELSE 2 END AS INTEGER)
-        |    AS n_text_frames,
-        |  'title-' || doc_id AS title,
-        |  'artist-' || (doc_id % 7) AS artist,
-        |  CAST(CASE WHEN doc_id % 5 = 2 THEN 1 ELSE 0 END AS INTEGER)
-        |    AS n_skipped_frames,
-        |  TRUE AS v1_ok,
-        |  (doc_id % 3 <> 1) AS has_xing,
-        |  TRUE AS xing_ok,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS n_audio_frames,
-        |  CAST(1152 * (2 + doc_id % 3) AS BIGINT) AS n_samples,
-        |  TRUE AS decode_clean
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // JPEG tagged-crawl intake replay: JFIF presence/densities, TIFF
-    // endianness, the EXIF field set, unknown-tag/-segment/comment
-    // counts — all closed-form from the id scheme; decode_clean pins
-    // strip == bare bytes + raster equality.
-    "x5_jpeg_exif_intake" ->
-      """SELECT doc_id,
-        |  (doc_id % 3 <> 1) AS has_jfif,
-        |  CAST(CASE WHEN doc_id % 3 <> 1 THEN 72 + doc_id % 5
-        |            ELSE 0 END AS INTEGER) AS x_density,
-        |  CAST(CASE WHEN doc_id % 3 <> 1 THEN 72 + doc_id % 7
-        |            ELSE 0 END AS INTEGER) AS y_density,
-        |  (doc_id % 2 = 0) AS big_endian,
-        |  CAST(1 + doc_id % 8 AS INTEGER) AS orientation,
-        |  'cam-' || (doc_id % 5) AS make,
-        |  'm-' || (doc_id % 3) AS model,
-        |  CASE WHEN doc_id % 4 <> 2 THEN '2013:05:' ||
-        |    lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0') || ' 10:00:00'
-        |    ELSE '' END AS date_time,
-        |  CAST(100 * (1 + doc_id % 4) AS INTEGER) AS iso,
-        |  CAST(60 + doc_id % 200 AS BIGINT) AS exposure_den,
-        |  CAST(CASE WHEN doc_id % 4 = 3 THEN 1 ELSE 0 END AS INTEGER)
-        |    AS n_unknown_tags,
-        |  CAST(CASE WHEN doc_id % 5 = 2 THEN 1 ELSE 0 END AS INTEGER)
-        |    AS n_unknown_apps,
-        |  CAST(doc_id % 2 AS INTEGER) AS n_comments,
-        |  CAST(16 AS BIGINT) AS pixel_x, CAST(8 AS BIGINT) AS pixel_y,
-        |  TRUE AS decode_clean
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // Thumbnail/interop replay: index by id%3, dims by parity,
-    // byte-exactness and the unknown-tag census closed-form.
-    "x5_jpeg_thumbnail_intake" ->
-      """SELECT doc_id,
-        |  (doc_id % 2 = 0) AS big_endian,
-        |  CASE CAST(doc_id % 3 AS INTEGER)
-        |    WHEN 0 THEN 'R98' WHEN 1 THEN 'THM' ELSE 'R03' END
-        |    AS interop_index,
-        |  CAST(CASE WHEN doc_id % 2 = 0 THEN 8 ELSE 16 END AS INTEGER)
-        |    AS thumb_w,
-        |  CAST(8 AS INTEGER) AS thumb_h,
-        |  TRUE AS thumb_exact,
-        |  CAST(CASE WHEN doc_id % 4 = 3 THEN 1 ELSE 0 END AS INTEGER)
-        |    AS n_unknown_tags
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // GPS intake replay: refs by parity, position reduced to signed
-    // deci-arcseconds with integer arithmetic — all closed-form.
-    "x5_jpeg_gps_intake" ->
-      """SELECT doc_id,
-        |  (doc_id % 2 = 0) AS big_endian,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'N' ELSE 'S' END AS lat_ref,
-        |  CASE WHEN doc_id % 3 = 0 THEN 'E' ELSE 'W' END AS lon_ref,
-        |  CAST((CASE WHEN doc_id % 2 = 0 THEN 1 ELSE -1 END) *
-        |    ((10 + doc_id % 80) * 36000 + (doc_id % 60) * 600 +
-        |     (doc_id % 600)) AS BIGINT) AS lat_deciarcsec,
-        |  CAST((CASE WHEN doc_id % 3 = 0 THEN 1 ELSE -1 END) *
-        |    ((20 + doc_id % 160) * 36000 + ((doc_id * 7) % 60) * 600 +
-        |     ((doc_id * 13) % 600)) AS BIGINT) AS lon_deciarcsec,
-        |  CAST(CASE WHEN doc_id % 4 = 3 THEN 1 ELSE 0 END AS INTEGER)
-        |    AS n_unknown_tags,
-        |  TRUE AS gps_ok
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // Orientation-normalization replay: orientation cycles 1-8 by id;
-    // values 5-8 (id%8 >= 4) swap the stored dims; the normalized dims
-    // are always the upright 16x8 and equality is pinned as a boolean.
-    "x5_exif_orient_normalize" ->
-      """SELECT doc_id,
-        |  (doc_id % 2 = 0) AS big_endian,
-        |  CAST(1 + doc_id % 8 AS INTEGER) AS orientation,
-        |  CAST(CASE WHEN doc_id % 8 >= 4 THEN 8 ELSE 16 END AS INTEGER)
-        |    AS stored_w,
-        |  CAST(CASE WHEN doc_id % 8 >= 4 THEN 16 ELSE 8 END AS INTEGER)
-        |    AS stored_h,
-        |  CAST(16 AS INTEGER) AS norm_w, CAST(8 AS INTEGER) AS norm_h,
-        |  TRUE AS normalized_equal
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // XMP intake replay: serialization form by parity, creators from
-    // the (id+j)%7 scheme, extra-prop census on id%4==3, EXIF rider on
-    // id%3==0 — all closed-form.
-    "x5_jpeg_xmp_intake" ->
-      """SELECT doc_id,
-        |  (doc_id % 2 = 1) AS attr_form,
-        |  'xmp-title-' || doc_id AS title,
-        |  CAST(1 + doc_id % 3 AS INTEGER) AS n_creators,
-        |  'author-' || (doc_id % 7) AS first_creator,
-        |  '2013-05-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')
-        |    || 'T10:00:00Z' AS create_date,
-        |  CAST(CASE WHEN doc_id % 4 = 3 THEN 2 ELSE 0 END AS INTEGER)
-        |    AS n_other_props,
-        |  (doc_id % 3 = 0) AS has_exif,
-        |  CAST(0 AS INTEGER) AS n_unknown_apps,
-        |  TRUE AS decode_clean
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // Cross-format luma replay: the palette formulas and the ×2¹⁶
-    // fixed-point luma (non-negative >>16 = integer division) are
-    // recomputed per pixel in SQL.
-    "x5_color_luma_crossformat" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(16 + 8 * ((doc_id // 3) % 2) AS INTEGER) AS w, 8 AS h
-        |  FROM documents WHERE doc_id < 150),
-        |px AS (
-        |  SELECT d.doc_id, d.w, d.h,
-        |    (19595 * ((((t.i*3 + d.doc_id) % 16) * 17 + d.doc_id) % 256) +
-        |     38470 * ((((t.i*3 + d.doc_id) % 16) * 29 + 3*d.doc_id) % 256) +
-        |      7471 * ((((t.i*3 + d.doc_id) % 16) * 5 + 7*d.doc_id) % 256) +
-        |     32768) // 65536 AS lum
-        |  FROM d, LATERAL (SELECT unnest(generate_series(0, d.w*d.h - 1))
-        |    AS i) t)
-        |SELECT doc_id, CAST(min(w) AS INTEGER) AS width,
-        |  CAST(min(h) AS INTEGER) AS height,
-        |  (doc_id % 2 = 1) AS gif_interlaced,
-        |  TRUE AS rgb_equal, TRUE AS luma_equal,
-        |  CAST(sum(lum) AS BIGINT) AS luma_sum
-        |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // Depth-matrix replay (r15): cell (color type, depth) from
-    // doc_id % 15, per-pixel channel samples from the planted
-    // (i·(3+2c) + 7c + depth) % lim formula, scaled to 8 bits with the
-    // SAME documented integer arithmetic the decoder uses — exact
-    // ×255/(2^d−1) below 8 bits, (v·255+32767)//65535 at 16 — and the
-    // palette cells through the closed-form 5i/3i/i+7 PLTE channels.
-    // Gray cells also recompute the NATIVE-depth sample sum.
-    "x5_png_depth_matrix" ->
-      """WITH d AS (
-        |  SELECT doc_id, CAST(doc_id % 15 AS INTEGER) AS m,
-        |    CAST(13 + 8 * ((doc_id // 15) % 2) AS INTEGER) AS w, 7 AS h
-        |  FROM documents WHERE doc_id < 150),
-        |c AS (
-        |  SELECT doc_id, m, w, h,
-        |    CASE WHEN m <= 4 THEN 0 WHEN m <= 6 THEN 2
-        |      WHEN m <= 10 THEN 3 WHEN m <= 12 THEN 4 ELSE 6 END AS ct,
-        |    CASE m WHEN 0 THEN 1 WHEN 1 THEN 2 WHEN 2 THEN 4
-        |      WHEN 3 THEN 8 WHEN 4 THEN 16 WHEN 5 THEN 8 WHEN 6 THEN 16
-        |      WHEN 7 THEN 1 WHEN 8 THEN 2 WHEN 9 THEN 4 WHEN 10 THEN 8
-        |      WHEN 11 THEN 8 WHEN 12 THEN 16 WHEN 13 THEN 8
-        |      ELSE 16 END AS dep
-        |  FROM d),
-        |e AS (
-        |  SELECT *,
-        |    CASE WHEN ct = 3 THEN LEAST(CASE dep WHEN 1 THEN 2
-        |        WHEN 2 THEN 4 WHEN 4 THEN 16 ELSE 256 END, 16)
-        |      ELSE CASE dep WHEN 1 THEN 2 WHEN 2 THEN 4 WHEN 4 THEN 16
-        |        WHEN 8 THEN 256 ELSE 65536 END END AS lim
-        |  FROM c),
-        |px AS (
-        |  SELECT e.doc_id, e.ct, e.dep, e.w, e.h, e.lim,
-        |    (t.i*3 + e.dep) % e.lim AS s0,
-        |    (t.i*5 + 7 + e.dep) % e.lim AS s1,
-        |    (t.i*7 + 14 + e.dep) % e.lim AS s2,
-        |    (t.i*9 + 21 + e.dep) % e.lim AS s3
-        |  FROM e, LATERAL (SELECT unnest(generate_series(0, e.w*e.h - 1))
-        |    AS i) t),
-        |sc AS (
-        |  SELECT doc_id, ct, dep, w, h,
-        |    CASE WHEN ct = 3 THEN 5*s0 ELSE CASE dep WHEN 8 THEN s0
-        |      WHEN 16 THEN (s0*255 + 32767)//65535
-        |      ELSE s0*255//(lim-1) END END AS r,
-        |    CASE WHEN ct = 3 THEN 3*s0
-        |      WHEN ct IN (0, 4) THEN CASE dep WHEN 8 THEN s0
-        |        WHEN 16 THEN (s0*255 + 32767)//65535
-        |        ELSE s0*255//(lim-1) END
-        |      ELSE CASE dep WHEN 8 THEN s1
-        |        WHEN 16 THEN (s1*255 + 32767)//65535
-        |        ELSE s1*255//(lim-1) END END AS g,
-        |    CASE WHEN ct = 3 THEN s0 + 7
-        |      WHEN ct IN (0, 4) THEN CASE dep WHEN 8 THEN s0
-        |        WHEN 16 THEN (s0*255 + 32767)//65535
-        |        ELSE s0*255//(lim-1) END
-        |      ELSE CASE dep WHEN 8 THEN s2
-        |        WHEN 16 THEN (s2*255 + 32767)//65535
-        |        ELSE s2*255//(lim-1) END END AS b,
-        |    CASE WHEN ct = 4 THEN CASE dep WHEN 8 THEN s1
-        |        ELSE (s1*255 + 32767)//65535 END
-        |      WHEN ct = 6 THEN CASE dep WHEN 8 THEN s3
-        |        ELSE (s3*255 + 32767)//65535 END
-        |      ELSE 255 END AS a,
-        |    CASE WHEN ct = 0 THEN s0 ELSE NULL END AS nat
-        |  FROM px)
-        |SELECT doc_id, CAST(min(ct) AS INTEGER) AS color_type,
-        |  CAST(min(dep) AS INTEGER) AS bit_depth,
-        |  (doc_id % 2 = 1) AS interlaced,
-        |  CAST(min(w) AS INTEGER) AS width,
-        |  CAST(min(h) AS INTEGER) AS height,
-        |  CAST(sum(r) AS BIGINT) AS r_sum, CAST(sum(g) AS BIGINT) AS g_sum,
-        |  CAST(sum(b) AS BIGINT) AS b_sum, CAST(sum(a) AS BIGINT) AS a_sum,
-        |  CAST(coalesce(sum(nat), -1) AS BIGINT) AS gray_native_sum
-        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // Standalone-TIFF replay (r15): photometric/endianness/dims/strip
-    // count from the id scheme, every channel sum recomputed from the
-    // planted per-pixel formulas (incl. the palette channel closed
-    // forms and the WhiteIsZero round trip), the EXIF-walk census of
-    // structure tags closed-form (9 baseline tags, +ColorMap on
-    // palette docs), Make and the sniff tag literal.
-    "x5_tiff_intake" ->
-      """WITH d AS (
-        |  SELECT doc_id, CAST(doc_id % 3 AS INTEGER) AS m,
-        |    CAST(12 + 4 * ((doc_id // 3) % 3) AS INTEGER) AS w, 9 AS h,
-        |    CAST(1 + doc_id % 4 AS INTEGER) AS rps
-        |  FROM documents WHERE doc_id < 150),
-        |px AS (
-        |  SELECT d.doc_id, d.m, d.w, d.h, d.rps,
-        |    CASE d.m WHEN 0 THEN (t.i*7 + d.doc_id) % 256
-        |      WHEN 1 THEN (t.i*37 + d.doc_id) % 256
-        |      ELSE (5*((t.i*3 + d.doc_id) % 256) + d.doc_id) % 256
-        |      END AS r,
-        |    CASE d.m WHEN 0 THEN (t.i*7 + d.doc_id) % 256
-        |      WHEN 1 THEN (t.i*91 + 5 + d.doc_id) % 256
-        |      ELSE (3*((t.i*3 + d.doc_id) % 256) + 2*d.doc_id) % 256
-        |      END AS g,
-        |    CASE d.m WHEN 0 THEN (t.i*7 + d.doc_id) % 256
-        |      WHEN 1 THEN (t.i*53 + 2*d.doc_id) % 256
-        |      ELSE (((t.i*3 + d.doc_id) % 256) + 7*d.doc_id) % 256
-        |      END AS b
-        |  FROM d, LATERAL (SELECT unnest(generate_series(0, d.w*d.h - 1))
-        |    AS i) t)
-        |SELECT doc_id,
-        |  CAST(CASE m WHEN 0 THEN 0 WHEN 1 THEN 2 ELSE 3 END AS INTEGER)
-        |    AS photometric,
-        |  (doc_id % 2 = 1) AS big_endian,
-        |  CAST(min(w) AS INTEGER) AS width,
-        |  CAST(min(h) AS INTEGER) AS height,
-        |  CAST((9 + min(rps) - 1) // min(rps) AS INTEGER) AS n_strips,
-        |  CAST(CASE m WHEN 1 THEN 3 ELSE 1 END AS INTEGER)
-        |    AS samples_per_pixel,
-        |  CAST(sum(r) AS BIGINT) AS r_sum, CAST(sum(g) AS BIGINT) AS g_sum,
-        |  CAST(sum(b) AS BIGINT) AS b_sum,
-        |  'scanner-' || (doc_id % 5) AS make,
-        |  CAST(CASE m WHEN 2 THEN 10 ELSE 9 END AS INTEGER)
-        |    AS n_unknown_tags,
-        |  'image/tiff' AS sniffed
-        |FROM px GROUP BY doc_id, m ORDER BY doc_id""".stripMargin,
-
-    // Color-PNG replay: every channel sum recomputed from the planted
-    // per-pixel formulas over a lateral generate_series — the decode
-    // path (filters at bpp, PLTE lookup, alpha) is value-gated.
-    "x5_png_color_decode" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(16 + 8 * ((doc_id // 3) % 2) AS INTEGER) AS w,
-        |    8 AS h, CAST(doc_id % 3 AS INTEGER) AS m
-        |  FROM documents WHERE doc_id < 150),
-        |px AS (
-        |  SELECT d.doc_id, d.w, d.h, d.m,
-        |    CASE WHEN d.m = 1
-        |      THEN (((t.i*3 + d.doc_id) % 16) * 17 + d.doc_id) % 256
-        |      ELSE (t.i*37 + d.doc_id) % 256 END AS r,
-        |    CASE WHEN d.m = 1
-        |      THEN (((t.i*3 + d.doc_id) % 16) * 29 + 3*d.doc_id) % 256
-        |      ELSE (t.i*91 + 5 + d.doc_id) % 256 END AS g,
-        |    CASE WHEN d.m = 1
-        |      THEN (((t.i*3 + d.doc_id) % 16) * 5 + 7*d.doc_id) % 256
-        |      ELSE (t.i*53 + 2*d.doc_id) % 256 END AS b,
-        |    CASE WHEN d.m = 2 THEN (t.i*7 + 3 + d.doc_id) % 256
-        |      WHEN d.m = 1 AND (t.i*3 + d.doc_id) % 16 < 10
-        |      THEN (((t.i*3 + d.doc_id) % 16) * 16 + d.doc_id % 16) % 256
-        |      ELSE 255 END AS a
-        |  FROM d, LATERAL (SELECT unnest(generate_series(0, d.w*d.h - 1))
-        |    AS i) t)
-        |SELECT doc_id,
-        |  CAST(CASE m WHEN 0 THEN 2 WHEN 1 THEN 3 ELSE 6 END AS INTEGER)
-        |    AS color_type,
-        |  (doc_id % 2 = 1) AS interlaced,
-        |  CAST(min(w) AS INTEGER) AS width, CAST(min(h) AS INTEGER) AS height,
-        |  CAST(sum(r) AS BIGINT) AS r_sum, CAST(sum(g) AS BIGINT) AS g_sum,
-        |  CAST(sum(b) AS BIGINT) AS b_sum, CAST(sum(a) AS BIGINT) AS a_sum
-        |FROM px GROUP BY doc_id, m ORDER BY doc_id""".stripMargin,
-
-    // ExtendedXMP replay: planted title length and the booleans are
-    // closed-form (multi_chunk holds by construction: full > 2 chunks).
-    "x5_jpeg_xmp_extended" ->
-      """SELECT doc_id,
-        |  CAST(20000 + (doc_id % 5) * 4000 AS INTEGER) AS title_len,
-        |  TRUE AS title_exact,
-        |  'author-' || (doc_id % 7) AS first_creator,
-        |  '2019-06-' || lpad(CAST(doc_id % 28 + 1 AS VARCHAR), 2, '0')
-        |    AS create_date,
-        |  TRUE AS multi_chunk, TRUE AS guid_ok, TRUE AS strip_clean
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // Heterogeneous image-metadata replay: type/tag-system by doc_id
-    // mod 4, tag strings closed-form, dims from the shared size knob.
-    "x5_image_metadata_corpus" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 4 AS INTEGER)
-        |    WHEN 0 THEN 'image/jpeg' WHEN 1 THEN 'image/jpeg'
-        |    WHEN 2 THEN 'image/png' ELSE 'image/gif' END AS media_type,
-        |  CASE CAST(doc_id % 4 AS INTEGER)
-        |    WHEN 0 THEN 'exif' WHEN 1 THEN 'xmp'
-        |    WHEN 2 THEN 'text' ELSE 'comment' END AS tag_system,
-        |  'title-' || doc_id AS title,
-        |  'author-' || (doc_id % 7) AS author,
-        |  CAST(16 + 8 * ((doc_id // 4) % 3) AS INTEGER) AS width,
-        |  CAST(8 + 4 * ((doc_id // 4) % 3) AS INTEGER) AS height
-        |FROM documents WHERE doc_id < 201 ORDER BY doc_id""".stripMargin,
-
-    // Heterogeneous metadata replay: type by parity, tag strings and
-    // durations closed-form from the id scheme (MP3 even docs: 1152
-    // samples x frames; FLAC odd docs: 1024 x frames).
-    "x5_audio_metadata_corpus" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 3 AS INTEGER)
-        |    WHEN 0 THEN 'audio/mpeg' WHEN 1 THEN 'audio/flac'
-        |    ELSE 'audio/wav' END AS media_type,
-        |  'title-' || doc_id AS title,
-        |  'artist-' || (doc_id % 7) AS artist,
-        |  CAST((2 + (doc_id // 3) % 3) *
-        |    CASE CAST(doc_id % 3 AS INTEGER)
-        |      WHEN 0 THEN 1152 WHEN 1 THEN 1024 ELSE 1000 END AS BIGINT)
-        |    AS n_samples,
-        |  CAST(CASE WHEN doc_id % 3 = 2 THEN 44100 ELSE 48000 END
-        |    AS INTEGER) AS sample_rate
-        |FROM documents WHERE doc_id < 201 ORDER BY doc_id""".stripMargin,
-
-    // Intensity-on-short census replay: every frame is joint-stereo
-    // with the intensity bit; per-window bounds/positions are verified
-    // in-query against the planted construction (spectrum_exact).
-    "x5_decode_mp3_intensity_short" ->
-      """SELECT doc_id,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS n_frames,
-        |  CAST(2 + doc_id % 3 AS INTEGER) AS n_intensity_frames,
-        |  (doc_id % 2 = 0) AS also_ms,
-        |  TRUE AS spectrum_exact, TRUE AS decode_clean
-        |FROM documents WHERE doc_id < 150 ORDER BY doc_id""".stripMargin,
-
-    // Census replay of the Layer I/II round trip; reconstruction
-    // quality rides the verdict boolean (measured 35-42 dB on the
-    // tonal fixtures, pinned at >= 25 dB in-query).
-    "x5_decode_mp2" ->
-      """SELECT doc_id,
-        |  CAST(CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 2 END AS INTEGER)
-        |    AS layer,
-        |  CAST((2 + doc_id % 3) *
-        |    (CASE WHEN doc_id % 5 = 0 THEN 3 ELSE 1 END) AS INTEGER)
-        |    AS n_frames,
-        |  CAST(CASE WHEN doc_id % 5 = 0
-        |    THEN [128,192,256,384][CAST(doc_id % 4 AS INTEGER) + 1]
-        |    ELSE [96,128,160,192][CAST(doc_id % 4 AS INTEGER) + 1]
-        |    END AS INTEGER) AS bitrate_kbps,
-        |  CAST(48000 AS INTEGER) AS sample_rate,
-        |  CAST(1152 * (2 + doc_id % 3) AS BIGINT) AS n_samples,
-        |  TRUE AS snr_ok
-        |FROM documents WHERE doc_id < 200 ORDER BY doc_id""".stripMargin,
-
-    // Frame-grain replay of the animation fixture: geometry and delay
-    // from the frame-index formula, pixel census from generate_series.
-    "x5_gif_frames" ->
-      """WITH d AS (
-        |  SELECT doc_id, 2 + doc_id % 4 AS nf
-        |  FROM documents WHERE doc_id < 300),
-        |f AS (
-        |  SELECT doc_id, t.j FROM d, generate_series(0, 4) t(j)
-        |  WHERE t.j < nf),
-        |geo AS (
-        |  SELECT doc_id, j,
-        |    CASE WHEN j = 0 THEN 0 ELSE (j % 3) * 4 END AS x_off,
-        |    CASE WHEN j = 0 THEN 0 ELSE (j % 2) * 4 END AS y_off,
-        |    CASE WHEN j = 0 THEN 24 ELSE 8 + 4 * (j % 2) END AS w,
-        |    CASE WHEN j = 0 THEN 16 ELSE 8 END AS h,
-        |    10 + 5 * j AS delay
-        |  FROM f),
-        |px AS (
-        |  SELECT doc_id, j, x_off, y_off, w, h, delay,
-        |    (doc_id + j * 7 + i.i) % 16 AS v
-        |  FROM geo, generate_series(0, 383) i(i) WHERE i.i < w * h)
-        |SELECT doc_id, CAST(j AS INTEGER) AS frame_id,
-        |  CAST(min(x_off) AS INTEGER) AS x_off,
-        |  CAST(min(y_off) AS INTEGER) AS y_off,
-        |  CAST(min(w) AS INTEGER) AS width,
-        |  CAST(min(h) AS INTEGER) AS height,
-        |  CAST(min(delay) AS INTEGER) AS delay_cs,
-        |  CAST(min(w) * min(h) AS BIGINT) AS n_pixels,
-        |  CAST(sum(v) AS BIGINT) AS idx_sum,
-        |  CAST(min(v) AS INTEGER) AS idx_min,
-        |  CAST(max(v) AS INTEGER) AS idx_max
-        |FROM px GROUP BY doc_id, j ORDER BY doc_id, frame_id""".stripMargin,
-
-    // Block-grain replay of the MJPEG fixture: per-frame geometry and
-    // timing from the id formulas, pixel census from the 8×8-block
-    // values (bit-exact decode, same argument as the JPEG gates).
-    "x5_avi_frames" ->
-      """WITH d AS (
-        |  SELECT doc_id, 2 + doc_id % 3 AS nf,
-        |    8 * (2 + doc_id % 2) AS w, 16 AS h,
-        |    33333 + (doc_id % 5) * 1000 AS mpf
-        |  FROM documents WHERE doc_id < 300),
-        |f AS (
-        |  SELECT doc_id, w, h, mpf, t.j FROM d, generate_series(0, 4) t(j)
-        |  WHERE t.j < nf),
-        |b AS (
-        |  SELECT f.doc_id, f.j, f.w, f.h, f.mpf,
-        |    (f.doc_id * 31 + f.j * 17 + gx.x * 13 + gy.y * 7) % 256 AS v
-        |  FROM f, generate_series(0, 2) gx(x), generate_series(0, 1) gy(y)
-        |  WHERE gx.x < f.w // 8)
-        |SELECT doc_id, CAST(j AS INTEGER) AS frame_id,
-        |  CAST(min(w) AS INTEGER) AS width,
-        |  CAST(min(h) AS INTEGER) AS height,
-        |  CAST(min(mpf) AS BIGINT) AS frame_micros,
-        |  CAST(min(w) * min(h) AS BIGINT) AS n_pixels,
-        |  CAST(sum(v * 64) AS BIGINT) AS px_sum,
-        |  CAST(min(v) AS INTEGER) AS px_min,
-        |  CAST(max(v) AS INTEGER) AS px_max
-        |FROM b GROUP BY doc_id, j ORDER BY doc_id, frame_id""".stripMargin,
-
-    // Same block-grain replay as the baseline JPEG gate, over the
-    // progressive fixture's formula.
-    "x5_decode_jpeg_progressive" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    8 * (2 + doc_id % 3) AS w, 8 * (1 + doc_id % 4) AS h
-        |  FROM documents WHERE doc_id < 400),
-        |v AS (
-        |  SELECT d.doc_id, d.w, d.h,
-        |    (d.doc_id * 47 + gx.bx * 11 + gy.by * 23) % 256 AS val
-        |  FROM d
-        |  JOIN generate_series(0, 3) gx(bx) ON gx.bx < d.w // 8
-        |  JOIN generate_series(0, 3) gy(by) ON gy.by < d.h // 8)
-        |SELECT doc_id, CAST(min(w) AS INTEGER) AS width,
-        |  CAST(min(h) AS INTEGER) AS height,
-        |  CAST(min(w) * min(h) AS BIGINT) AS n_pixels,
-        |  CAST(64 * sum(val) AS BIGINT) AS px_sum,
-        |  CAST(min(val) AS INTEGER) AS px_min,
-        |  CAST(max(val) AS INTEGER) AS px_max,
-        |  TRUE AS dct_saves_bytes
-        |FROM v GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // MCU-grain replay of the color pipeline: forward fixed-point
-    // YCbCr (gray-balanced rows), then the inverse with clamps; both
-    // use the truncating-// + 2²⁴ offset = arithmetic-shift floor.
-    "x5_decode_jpeg_color" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    16 * (1 + doc_id % 2) AS w, 16 * (1 + doc_id % 3) AS h
-        |  FROM documents WHERE doc_id < 300),
-        |m AS (
-        |  SELECT d.doc_id, d.w, d.h,
-        |    (d.doc_id * 19 + gx.mx * 7 + gy.my * 3) % 256 AS r,
-        |    (d.doc_id * 29 + gx.mx * 13 + gy.my * 5) % 256 AS g,
-        |    (d.doc_id * 41 + gx.mx * 3 + gy.my * 11) % 256 AS b
-        |  FROM d
-        |  JOIN generate_series(0, 1) gx(mx) ON gx.mx < d.w // 16
-        |  JOIN generate_series(0, 2) gy(my) ON gy.my < d.h // 16),
-        |yc AS (
-        |  SELECT doc_id, w, h,
-        |    (19595 * r + 38470 * g + 7471 * b + 32768) // 65536 AS y,
-        |    (-11059 * r - 21709 * g + 32768 * b + 32768 + 16777216)
-        |      // 65536 - 256 AS cbd,
-        |    (32768 * r - 27439 * g - 5329 * b + 32768 + 16777216)
-        |      // 65536 - 256 AS crd
-        |  FROM m),
-        |px AS (
-        |  SELECT doc_id, w, h,
-        |    least(255, greatest(0, y +
-        |      (91881 * crd + 32768 + 16777216) // 65536 - 256)) AS rr,
-        |    least(255, greatest(0, y -
-        |      ((22554 * cbd + 46802 * crd + 32768 + 16777216) // 65536
-        |        - 256))) AS gg,
-        |    least(255, greatest(0, y +
-        |      (116130 * cbd + 32768 + 16777216) // 65536 - 256)) AS bb
-        |  FROM yc)
-        |SELECT doc_id, CAST(min(w) AS INTEGER) AS width,
-        |  CAST(min(h) AS INTEGER) AS height,
-        |  CAST(min(w) * min(h) AS BIGINT) AS n_pixels,
-        |  CAST(256 * sum(rr) AS BIGINT) AS r_sum,
-        |  CAST(256 * sum(gg) AS BIGINT) AS g_sum,
-        |  CAST(256 * sum(bb) AS BIGINT) AS b_sum,
-        |  TRUE AS dct_saves_bytes
-        |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // Four-format twin of the x5_phash_jpeg replay: same hash formula,
-    // 4 twins per source raster, clusters = exact-hash groups.
-    "x5_phash_formats" ->
-      """WITH ids AS (SELECT doc_id AS id FROM documents WHERE doc_id < 100),
-        |tw AS (
-        |  SELECT 4 * id + t.s AS doc_id, id
-        |  FROM ids, (VALUES (0), (1), (2), (3)) t(s)),
-        |samp AS (
-        |  SELECT tw.doc_id, g.k,
-        |    (tw.id * 59 + ((g.k % 8) // 4) * 67 + ((g.k // 8) // 4) * 29)
-        |      % 256 AS v
-        |  FROM tw, generate_series(0, 63) g(k)),
-        |m AS (SELECT doc_id, sum(v) // 64 AS mean FROM samp GROUP BY 1),
-        |hb AS (
-        |  SELECT s.doc_id,
-        |    CAST(sum(CASE WHEN s.v > m.mean AND s.k < 32
-        |      THEN (CAST(1 AS BIGINT) << s.k) ELSE 0 END) AS BIGINT)
-        |      AS hash_lo,
-        |    CAST(sum(CASE WHEN s.v > m.mean AND s.k >= 32
-        |      THEN (CAST(1 AS BIGINT) << (s.k - 32)) ELSE 0 END) AS BIGINT)
-        |      AS hash_hi
-        |  FROM samp s JOIN m USING (doc_id) GROUP BY 1)
-        |SELECT doc_id AS id,
-        |  CAST(min(doc_id) OVER (PARTITION BY hash_lo, hash_hi) AS BIGINT)
-        |    AS cluster,
-        |  CAST(count(*) OVER (PARTITION BY hash_lo, hash_hi) AS BIGINT)
-        |    AS cluster_size
-        |FROM hb ORDER BY id""".stripMargin,
-
-    // Structural replay: the DCT-pHash arithmetic is not SQL-
-    // expressible, but the expected CLUSTERING is fully determined by
-    // the fixture's id scheme — every (quality-4, quality-24) twin
-    // pair, and nothing else, must form one cluster of 2, and every
-    // twin's decoded rasters must genuinely differ (the lossy-copy
-    // scenario). Any hash-bit drift, band-recall miss, or cross-image
-    // collision deviates from this truth and reds the gate.
-    "x5_phash_requant" ->
-      """SELECT 2 * doc_id + t.s AS id,
-        |  CAST(2 * doc_id AS BIGINT) AS cluster,
-        |  CAST(2 AS BIGINT) AS cluster_size,
-        |  TRUE AS rasters_differ
-        |FROM documents, (VALUES (0), (1)) t(s)
-        |WHERE doc_id < 150 ORDER BY id""".stripMargin,
-
-    // Structural replays (same argument as x5_phash_requant): the
-    // expected clustering is fully determined by the fixture id
-    // scheme; any hash drift, band-recall miss, or cross collision
-    // deviates and reds the gate.
-    "x5_phash_lossy_formats" ->
-      """SELECT 4 * doc_id + t.s AS id,
-        |  CAST(4 * doc_id AS BIGINT) AS cluster,
-        |  CAST(4 AS BIGINT) AS cluster_size,
-        |  TRUE AS jpeg_differs
-        |FROM documents, (VALUES (0), (1), (2), (3)) t(s)
-        |WHERE doc_id < 100 ORDER BY id""".stripMargin,
-
-    "x5_video_neardup" ->
-      """SELECT 2 * doc_id + t.s AS id,
-        |  CAST(2 * doc_id AS BIGINT) AS cluster,
-        |  CAST(2 AS BIGINT) AS cluster_size
-        |FROM documents, (VALUES (0), (1)) t(s)
-        |WHERE doc_id < 120 ORDER BY id""".stripMargin,
-
-    "x5_audio_neardup" ->
-      """SELECT 2 * doc_id + t.s AS id,
-        |  CAST(2 * doc_id AS BIGINT) AS cluster,
-        |  CAST(2 AS BIGINT) AS cluster_size
-        |FROM documents, (VALUES (0), (1)) t(s)
-        |WHERE doc_id < 100 ORDER BY id""".stripMargin,
-
-    // Unified intake-census replay: type tag and unit count straight
-    // from the id scheme (gzip units = original byte length, WAV =
-    // sample count, AVI = frames × pixels, MPEG = frames × 1152).
-    "x5_media_sniff" ->
-      """SELECT doc_id,
-        |  ['image/png','image/gif','image/jpeg','image/x-pgm',
-        |   'application/gzip','audio/wav','video/avi','audio/mpeg',
-        |   'application/zip','unknown'][CAST(doc_id % 10 AS INTEGER) + 1]
-        |    AS media_type,
-        |  CAST(CASE CAST(doc_id % 10 AS INTEGER)
-        |    WHEN 4 THEN 100 + doc_id % 50
-        |    WHEN 5 THEN 50 + doc_id % 100
-        |    WHEN 6 THEN 512
-        |    WHEN 7 THEN 2304
-        |    WHEN 8 THEN 100 + doc_id % 40 + doc_id % 20
-        |    WHEN 9 THEN 0
-        |    ELSE 256 END AS BIGINT) AS n_units
-        |FROM documents WHERE doc_id < 360 ORDER BY doc_id""".stripMargin,
-
-    // Member-grain replay: names/methods/sizes from the id formulas,
-    // content digests from independently-rebuilt member text.
-    "x5_zip_entries" ->
-      """WITH d AS (
-        |  SELECT doc_id, 1 + doc_id % 3 AS nm
-        |  FROM documents WHERE doc_id < 250),
-        |e AS (
-        |  SELECT doc_id, t.j FROM d, generate_series(0, 2) t(j)
-        |  WHERE t.j < nm),
-        |c AS (
-        |  SELECT doc_id, j, 40 + (doc_id + j * 11) % 60 AS len FROM e),
-        |s AS (
-        |  SELECT c.doc_id, c.j, c.len,
-        |    string_agg(chr(CAST(97 + (c.doc_id + c.j * 5 + i.i * 7) % 26
-        |      AS INTEGER)), '' ORDER BY i.i) AS content
-        |  FROM c, generate_series(0, 99) i(i) WHERE i.i < c.len
-        |  GROUP BY c.doc_id, c.j, c.len)
-        |SELECT doc_id, CAST(j AS INTEGER) AS entry_id,
-        |  'm' || j || '_' || doc_id || '.txt' AS name,
-        |  CAST(CASE WHEN (doc_id + j) % 2 = 0 THEN 0 ELSE 8 END
-        |    AS INTEGER) AS method,
-        |  CAST(len AS BIGINT) AS n_uncompressed,
-        |  md5(content) AS content_md5,
-        |  TRUE AS crc_ok
-        |FROM s ORDER BY doc_id, entry_id""".stripMargin,
-
-    "x5_targz_entries" ->
-      """WITH d AS (
-        |  SELECT doc_id, 1 + doc_id % 3 AS nm
-        |  FROM documents WHERE doc_id < 250),
-        |e AS (
-        |  SELECT doc_id, t.j FROM d, generate_series(0, 2) t(j)
-        |  WHERE t.j < nm),
-        |c AS (
-        |  SELECT doc_id, j, 30 + (doc_id + j * 13) % 50 AS len FROM e),
-        |s AS (
-        |  SELECT c.doc_id, c.j, c.len,
-        |    string_agg(chr(CAST(97 + (c.doc_id + c.j * 3 + i.i * 5) % 26
-        |      AS INTEGER)), '' ORDER BY i.i) AS content
-        |  FROM c, generate_series(0, 99) i(i) WHERE i.i < c.len
-        |  GROUP BY c.doc_id, c.j, c.len)
-        |SELECT doc_id, CAST(j AS INTEGER) AS entry_id,
-        |  'd' || doc_id || '/f' || j || '.txt' AS name,
-        |  CAST(len AS BIGINT) AS n_bytes,
-        |  md5(content) AS content_md5
-        |FROM s ORDER BY doc_id, entry_id""".stripMargin,
-
-    "x5_gunzip_roundtrip" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        |  md5(text) AS content_md5, TRUE AS compresses_or_short
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "x5_frame_sample" ->
-      """WITH d AS (
-        |  SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n,
-        |    CAST(ceil(octet_length(encode(text)) / 64.0) AS BIGINT) AS nf
-        |  FROM documents),
-        |k AS (
-        |  SELECT doc_id, n,
-        |    unnest(range(0, greatest(nf - 1, 0) + 1, 3)) AS i
-        |  FROM d)
-        |SELECT doc_id, max(n) AS n_bytes,
-        |  count(*) AS n_sampled,
-        |  CAST(sum(least(64, greatest(n - i * 64, 0))) AS BIGINT) AS sampled_bytes,
-        |  CAST(least(64, max(n)) AS BIGINT) AS first_frame_bytes
-        |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "x5_binary_meta" ->
-      """SELECT doc_id, CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-        | 'text/plain' AS fmt, lang
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "window_running_total" ->
-      """SELECT o_custkey, o_orderkey,
-        | CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS run_total,
-        | CAST(LAG(CAST(o_totalprice AS DECIMAL(18,2)), 1) OVER w AS DOUBLE) AS prev_price
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate ASC, o_orderkey ASC
-        |             ROWS UNBOUNDED PRECEDING)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "agg_cube_orders" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders GROUP BY CUBE(o_orderstatus, o_orderpriority)
-        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-
-    "q17_small_quantity" ->
-      """WITH pp AS (
-        |  SELECT l_partkey AS pk,
-        |    CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS sum_qs,
-        |    count(*) AS cnt
-        |  FROM lineitem GROUP BY l_partkey)
-        |SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total_price,
-        |  count(*) AS n_lines
-        |FROM lineitem JOIN pp ON l_partkey = pk
-        |WHERE CAST(round(l_quantity * 100) AS BIGINT) * 2 * cnt < sum_qs""".stripMargin,
-
-    "q6_forecast_revenue" ->
-      """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * CAST(l_discount AS DECIMAL(18,2))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24""".stripMargin,
-
-    "q8_market_share" ->
-      """SELECT CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS o_year,
-        | round(
-        |   CAST(sum(CASE WHEN n2.n_name = 'NATION_5'
-        |     THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
-        |     ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) /
-        |   CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE),
-        |   9) AS mkt_share
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n1 ON c_nationkey = n1.n_nationkey
-        |JOIN region ON n1.n_regionkey = r_regionkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation n2 ON s_nationkey = n2.n_nationkey
-        |WHERE r_name = 'ASIA' AND p_type = 'PROMO'
-        |  AND o_orderdate >= TIMESTAMP '1995-01-01'
-        |  AND o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY 1 ORDER BY o_year""".stripMargin,
-
-    "q9_product_profit" ->
-      """SELECT n_name AS nation,
-        | CAST(EXTRACT(YEAR FROM o_orderdate) AS BIGINT) AS o_year,
-        | round(
-        |   CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE)
-        |   - 0.05 * CAST(sum(CAST(p_retailprice AS DECIMAL(18,2)) * CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE),
-        |   4) AS profit
-        |FROM lineitem
-        |JOIN part ON l_partkey = p_partkey
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN nation ON s_nationkey = n_nationkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |WHERE p_name LIKE '%red%'
-        |GROUP BY 1, 2 ORDER BY nation, o_year DESC""".stripMargin,
-
-    "q10_returned_customers" ->
-      """SELECT c_custkey, c_name, c_acctbal, n_name,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation ON c_nationkey = n_nationkey
-        |WHERE l_returnflag = 'R'
-        |  AND o_orderdate >= TIMESTAMP '1996-07-01'
-        |  AND o_orderdate < TIMESTAMP '1996-10-01'
-        |GROUP BY c_custkey, c_name, c_acctbal, n_name
-        |ORDER BY revenue DESC, c_custkey ASC LIMIT 20""".stripMargin,
-
-    "q13_order_distribution" ->
-      """SELECT c_count, count(*) AS custdist FROM (
-        |  SELECT c_custkey, count(o_orderkey) AS c_count
-        |  FROM customer LEFT JOIN orders
-        |    ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-        |  GROUP BY c_custkey)
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-
-    "q14_promo_revenue" ->
-      """SELECT round(100.0 *
-        |  CAST(sum(CASE WHEN p_type = 'PROMO'
-        |    THEN CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))
-        |    ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) /
-        |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE),
-        |  9) AS promo_revenue
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE l_shipdate >= TIMESTAMP '1996-03-01'
-        |  AND l_shipdate < TIMESTAMP '1996-04-01'""".stripMargin,
-
-    "q15_top_supplier" ->
-      """WITH revenue AS (
-        |  SELECT l_suppkey AS supplier_no,
-        |    sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS total_rev
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY l_suppkey)
-        |SELECT s_suppkey, s_name, CAST(total_rev AS DOUBLE) AS total_revenue
-        |FROM supplier JOIN revenue ON s_suppkey = supplier_no
-        |WHERE total_rev = (SELECT max(total_rev) FROM revenue)
-        |ORDER BY s_suppkey""".stripMargin,
-
-    "sql_q2_min_cost_supplier" ->
-      """WITH offers AS (
-        |  SELECT l_partkey AS p_partkey, p_name, l_extendedprice,
-        |         s_acctbal, s_name, n_name
-        |  FROM lineitem
-        |  JOIN part ON l_partkey = p_partkey
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  JOIN region ON n_regionkey = r_regionkey
-        |  WHERE r_name = 'ASIA' AND p_size <= 15 AND p_type = 'PROMO')
-        |SELECT DISTINCT o.s_acctbal, o.s_name, o.n_name, o.p_partkey, o.p_name
-        |FROM offers o
-        |JOIN (SELECT p_partkey, min(l_extendedprice) AS min_cost
-        |      FROM offers GROUP BY p_partkey) m
-        |  ON o.p_partkey = m.p_partkey AND o.l_extendedprice = m.min_cost
-        |ORDER BY o.s_acctbal DESC, o.n_name, o.s_name, o.p_partkey
-        |LIMIT 100""".stripMargin,
-
-    "sql_q11_important_parts" ->
-      """WITH by_part AS (
-        |  SELECT l_partkey AS p_partkey,
-        |         sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS value_dec
-        |  FROM lineitem
-        |  JOIN supplier ON l_suppkey = s_suppkey
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE n_name = 'NATION_3'
-        |  GROUP BY l_partkey)
-        |SELECT p_partkey, CAST(value_dec AS DOUBLE) AS part_value
-        |FROM by_part
-        |WHERE value_dec * 4 > (SELECT max(value_dec) FROM by_part)
-        |ORDER BY part_value DESC, p_partkey""".stripMargin,
-
-    "sql_q12_late_priority" ->
-      """SELECT l_linestatus,
-        | CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |          THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        | CAST(sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
-        |          THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-        |  AND l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND l_shipdate > o_orderdate + INTERVAL 60 DAY
-        |GROUP BY l_linestatus ORDER BY l_linestatus""".stripMargin,
-
-    "x1_stratified_sample_hash" ->
-      """SELECT doc_id, lang FROM documents
-        |WHERE ((doc_id % 1000003 + 42) * 2654435761) % 2147483647 % 1000000 <
-        |  CASE lang WHEN 'en' THEN 500000 WHEN 'de' THEN 250000
-        |            WHEN 'fr' THEN 250000 WHEN 'es' THEN 250000 ELSE 0 END
-        |ORDER BY doc_id""".stripMargin,
-
-    "x1_weighted_sample" ->
-      """SELECT doc_id, lang, n_chars, round(pr, 9) AS priority FROM (
-        |  SELECT doc_id, lang, n_chars,
-        |    (CAST(((doc_id % 1000003 + 7) * 2654435761) % 2147483647 % 1000000 + 1
-        |          AS DOUBLE) / 1000000.0) / CAST(n_chars AS DOUBLE) AS pr
-        |  FROM documents ORDER BY pr, doc_id LIMIT 100) t
-        |ORDER BY priority, doc_id""".stripMargin,
-
-    // Dirty-twin construction + blocking + scoring replayed verbatim;
-    // DuckDB levenshtein is the same unit-cost edit distance as
-    // Spark's.
-    "link_blocked_pairs" ->
-      """WITH l AS (
-        |  SELECT c_custkey AS l_id, c_name AS l_name, c_nationkey AS bn,
-        |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS l_cents,
-        |    c_mktsegment AS l_seg
-        |  FROM customer WHERE c_custkey < 2000),
-        |r AS (
-        |  SELECT c_custkey AS r_id,
-        |    CASE WHEN c_custkey % 4 = 0 THEN 'Custmer' || substr(c_name, 9)
-        |         WHEN c_custkey % 4 = 2 THEN c_name || ' J'
-        |         WHEN c_custkey % 4 = 3 THEN 'Client-' || CAST(c_custkey AS VARCHAR)
-        |         ELSE c_name END AS r_name,
-        |    c_nationkey AS bn,
-        |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |      + c_custkey % 300 - 150 AS r_cents,
-        |    CASE WHEN c_custkey % 7 = 0 THEN 'UNKNOWN'
-        |         ELSE c_mktsegment END AS r_seg
-        |  FROM customer WHERE c_custkey < 2000),
-        |sc AS (
-        |  SELECT l_id, r_id,
-        |    CASE WHEN l_name = r_name THEN 4000000
-        |         WHEN levenshtein(l_name, r_name) <= 2 THEN 2500000
-        |         ELSE -1000000 END AS name_w,
-        |    CASE WHEN l_seg = r_seg THEN 500000 ELSE -500000 END AS seg_w,
-        |    CASE WHEN abs(l_cents - r_cents) <= 100 THEN 1500000
-        |         ELSE -1500000 END AS bal_w
-        |  FROM l JOIN r USING (bn))
-        |SELECT l_id, r_id, CAST(name_w AS BIGINT) AS name_w,
-        |  CAST(seg_w AS BIGINT) AS seg_w, CAST(bal_w AS BIGINT) AS bal_w,
-        |  CAST(name_w + seg_w + bal_w AS BIGINT) AS score_micro,
-        |  CASE WHEN name_w + seg_w + bal_w >= 4000000 THEN 'link'
-        |       WHEN name_w + seg_w + bal_w >= 1000000 THEN 'possible'
-        |       ELSE 'nonlink' END AS decision
-        |FROM sc WHERE name_w + seg_w + bal_w >= 1000000
-        |ORDER BY l_id, r_id""".stripMargin,
-
-    "link_sorted_neighborhood" ->
-      """WITH c AS (
-        |  SELECT c_custkey AS id,
-        |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |  FROM customer WHERE c_custkey < 500),
-        |r AS (SELECT id, row_number() OVER (ORDER BY cents, id) AS rk FROM c)
-        |SELECT a.id AS id_a, b.id AS id_b, CAST(a.rk AS BIGINT) AS rank_a,
-        |  CAST(b.rk AS BIGINT) AS rank_b
-        |FROM r a JOIN r b ON b.rk > a.rk AND b.rk - a.rk <= 3
-        |ORDER BY rank_a, rank_b""".stripMargin,
-
-    "link_decision_census" ->
-      """WITH l AS (
-        |  SELECT c_custkey AS l_id, c_name AS l_name, c_nationkey AS bn,
-        |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) AS l_cents,
-        |    c_mktsegment AS l_seg
-        |  FROM customer WHERE c_custkey < 2000),
-        |r AS (
-        |  SELECT c_custkey AS r_id,
-        |    CASE WHEN c_custkey % 4 = 0 THEN 'Custmer' || substr(c_name, 9)
-        |         WHEN c_custkey % 4 = 2 THEN c_name || ' J'
-        |         WHEN c_custkey % 4 = 3 THEN 'Client-' || CAST(c_custkey AS VARCHAR)
-        |         ELSE c_name END AS r_name,
-        |    c_nationkey AS bn,
-        |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT)
-        |      + c_custkey % 300 - 150 AS r_cents,
-        |    CASE WHEN c_custkey % 7 = 0 THEN 'UNKNOWN'
-        |         ELSE c_mktsegment END AS r_seg
-        |  FROM customer WHERE c_custkey < 2000),
-        |sc AS (
-        |  SELECT
-        |    CASE WHEN l_name = r_name THEN 4000000
-        |         WHEN levenshtein(l_name, r_name) <= 2 THEN 2500000
-        |         ELSE -1000000 END
-        |    + CASE WHEN l_seg = r_seg THEN 500000 ELSE -500000 END
-        |    + CASE WHEN abs(l_cents - r_cents) <= 100 THEN 1500000
-        |           ELSE -1500000 END AS score
-        |  FROM l JOIN r USING (bn))
-        |SELECT CASE WHEN score >= 4000000 THEN 'link'
-        |            WHEN score >= 1000000 THEN 'possible'
-        |            ELSE 'nonlink' END AS decision,
-        |  count(*) AS n, CAST(sum(score) AS BIGINT) AS sum_score_micro
-        |FROM sc GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Scale-adaptive subset mirrors the engine's scaleSubset exactly:
-    // full table at ≤50k parts, the 1/16 multiplicative-hash sample
-    // above (the oracle self-join is pair-quadratic per brand block).
-    "x4_fuzzy_match" ->
-      """WITH pp AS (
-        |  SELECT p_partkey, p_name, p_brand FROM part
-        |  WHERE (SELECT count(*) FROM part) <= 50000
-        |     OR (p_partkey % 1000003 + 7) * 2654435761
-        |        % 2147483647 % 1000000 < 62500)
-        |SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-        | CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
-        |FROM pp a JOIN pp b
-        |  ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-        |WHERE levenshtein(a.p_name, b.p_name) <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "x4_fuzzy_match_deletes" ->
-      """WITH pp AS (
-        |  SELECT p_partkey, p_name, p_brand FROM part
-        |  WHERE (SELECT count(*) FROM part) <= 50000
-        |     OR (p_partkey % 1000003 + 7) * 2654435761
-        |        % 2147483647 % 1000000 < 62500)
-        |SELECT a.p_partkey AS id_a, b.p_partkey AS id_b,
-        | CAST(levenshtein(a.p_name, b.p_name) AS BIGINT) AS dist
-        |FROM pp a JOIN pp b
-        |  ON a.p_brand = b.p_brand AND a.p_partkey < b.p_partkey
-        |WHERE levenshtein(a.p_name, b.p_name) <= 2
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "window_range_rolling" ->
-      """SELECT o_custkey, o_orderkey, o_orderdate,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER w AS DOUBLE) AS rev_7d,
-        | count(*) OVER w AS n_7d
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey
-        |             ORDER BY datediff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-        |             RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "window_ntile_deciles" ->
-      """SELECT c_custkey, c_acctbal,
-        | CAST(ntile(10) OVER (ORDER BY c_acctbal ASC, c_custkey ASC) AS BIGINT) AS decile,
-        | round(percent_rank() OVER (ORDER BY c_acctbal ASC), 9) AS pct_rank,
-        | round(cume_dist() OVER (ORDER BY c_acctbal ASC), 9) AS cume
-        |FROM customer ORDER BY c_custkey""".stripMargin,
-
-    "asof_click_attribution" ->
-      """WITH p AS (SELECT event_id AS purchase_id, user_id, ts FROM events
-        |           WHERE event_type = 'purchase'),
-        |     c AS (SELECT event_id, user_id, ts FROM events
-        |           WHERE event_type = 'click'),
-        |     j AS (SELECT p.purchase_id, p.user_id, c.event_id AS click_id,
-        |             ROW_NUMBER() OVER (PARTITION BY p.purchase_id
-        |               ORDER BY c.ts DESC, c.event_id DESC) AS rn
-        |           FROM p JOIN c ON p.user_id = c.user_id AND c.ts <= p.ts)
-        |SELECT purchase_id, user_id, click_id FROM j WHERE rn = 1
-        |ORDER BY purchase_id""".stripMargin,
-
-    "range_events_after_signup" ->
-      """WITH s AS (SELECT event_id AS signup_id, user_id, ts FROM events
-        |           WHERE event_type = 'signup')
-        |SELECT s.signup_id, count(*) AS n_following
-        |FROM s JOIN events e ON s.user_id = e.user_id
-        |  AND e.ts >= s.ts AND e.ts <= s.ts + INTERVAL 7 DAY
-        |  AND e.event_id != s.signup_id
-        |GROUP BY s.signup_id ORDER BY s.signup_id""".stripMargin,
-
-    "set_intersect_customers" ->
-      """SELECT o_custkey AS custkey FROM orders WHERE year(o_orderdate) = 1995
-        |INTERSECT
-        |SELECT o_custkey AS custkey FROM orders WHERE year(o_orderdate) = 1996
-        |ORDER BY custkey""".stripMargin,
-
-    "x4_top_words" ->
-      """WITH words AS (
-        |  SELECT lang, unnest(string_split_regex(lower(text), '\s+')) AS w
-        |  FROM documents),
-        |counts AS (
-        |  SELECT lang, w, count(*) AS n FROM words
-        |  WHERE length(w) > 3 GROUP BY lang, w),
-        |ranked AS (
-        |  SELECT lang, w, n,
-        |    ROW_NUMBER() OVER (PARTITION BY lang ORDER BY n DESC, w ASC) AS rk
-        |  FROM counts)
-        |SELECT lang, w, n, rk FROM ranked WHERE rk <= 5 ORDER BY lang, rk""".stripMargin,
-
-    "x4_len_histogram" ->
-      """SELECT CAST(floor(n_chars / 100) * 100 AS BIGINT) AS bucket,
-        | count(*) AS n_docs,
-        | CAST(min(n_chars) AS BIGINT) AS min_chars,
-        | CAST(max(n_chars) AS BIGINT) AS max_chars
-        |FROM documents GROUP BY 1 ORDER BY bucket""".stripMargin,
-
-    "stream_tumbling_agg" ->
-      """SELECT date_trunc('hour', ts) AS window_start, event_type,
-        | count(*) AS n,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "stream_static_enrich" ->
-      """SELECT c_mktsegment, event_type, count(*) AS n,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
-        |FROM events JOIN customer ON user_id = c_custkey
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // Hopping windows, relationally: a 2h-long window sliding by 1h
-    // (epoch-aligned, like Spark's) covers an event iff the window
-    // start is date_trunc('hour', ts) or one hour before it — so each
-    // event replicates to k ∈ {0, 1} and the rest is a plain GROUP BY.
-    "stream_hopping_agg" ->
-      """SELECT date_trunc('hour', ts) - k * INTERVAL 1 HOUR AS window_start,
-        | event_type, count(*) AS n,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
-        |FROM events CROSS JOIN (VALUES (0), (1)) AS hops(k)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "stream_sessionize" ->
-      """WITH o AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR ts - LAG(ts) OVER w >= INTERVAL 30 MINUTE
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-        |    ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM o)
-        |SELECT user_id, min(ts) AS session_start,
-        |  max(ts) + INTERVAL 30 MINUTE AS session_end,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
-
-    "stream_tws_type_counts" ->
-      """SELECT user_id, event_type, count(*) AS n
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "stream_session_window" ->
-      """WITH o AS (
-        |  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR ts - LAG(ts) OVER w >= INTERVAL 30 MINUTE
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM o),
-        |g AS (
-        |  SELECT user_id, min(ts_us) AS session_start_us,
-        |    max(ts_us) + 1800000000 AS session_end_us,
-        |    count(*) AS n_events, max(ts_us) AS last_us
-        |  FROM s GROUP BY user_id, sid),
-        |m AS (SELECT user_id, max(epoch_us(CAST(ts AS TIMESTAMP))) AS max_us
-        |      FROM events GROUP BY user_id),
-        |gm AS (SELECT max(epoch_us(CAST(ts AS TIMESTAMP))) - 2400000000 AS cut
-        |       FROM events)
-        |SELECT g.user_id, g.session_start_us, g.session_end_us, g.n_events
-        |FROM g JOIN m ON g.user_id = m.user_id, gm
-        |WHERE g.last_us <> m.max_us AND g.session_end_us <= gm.cut
-        |ORDER BY g.user_id, g.session_start_us""".stripMargin,
-
-    "stream_session_timeout" ->
-      """WITH o AS (
-        |  SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS ts_us,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR ts - LAG(ts) OVER w >= INTERVAL 30 MINUTE
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts_us, event_id
-        |    ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM o),
-        |g AS (
-        |  SELECT user_id, min(ts_us) AS session_start_us,
-        |    max(ts_us) + 1800000000 AS session_end_us,
-        |    count(*) AS n_events, max(ts_us) AS last_us
-        |  FROM s GROUP BY user_id, sid),
-        |m AS (SELECT user_id, max(epoch_us(CAST(ts AS TIMESTAMP))) AS max_us
-        |      FROM events GROUP BY user_id)
-        |SELECT g.user_id, g.session_start_us, g.session_end_us, g.n_events
-        |FROM g JOIN m ON g.user_id = m.user_id
-        |WHERE g.last_us <> m.max_us
-        |ORDER BY g.user_id, g.session_start_us""".stripMargin,
-
-    // Window-rank replay of the bounded top-k; ties break on the
-    // string-rendered value both sides.
-    "profile_mcv" ->
-      """WITH src AS (
-        |  SELECT nullif(event_type, 'error') AS etype, user_id FROM events),
-        |g1 AS (
-        |  SELECT etype AS v, count(*) AS cnt FROM src
-        |  WHERE etype IS NOT NULL GROUP BY 1),
-        |m1 AS (
-        |  SELECT 'etype' AS col_name,
-        |    CAST(row_number() OVER (ORDER BY cnt DESC, v) AS BIGINT) AS rank,
-        |    CAST(v AS VARCHAR) AS value_str, CAST(cnt AS BIGINT) AS cnt
-        |  FROM g1 QUALIFY rank <= 4),
-        |g2 AS (SELECT user_id AS v, count(*) AS cnt FROM src GROUP BY 1),
-        |m2 AS (
-        |  SELECT 'user_id' AS col_name,
-        |    CAST(row_number() OVER (ORDER BY cnt DESC, CAST(v AS VARCHAR))
-        |         AS BIGINT) AS rank,
-        |    CAST(v AS VARCHAR) AS value_str, CAST(cnt AS BIGINT) AS cnt
-        |  FROM g2 QUALIFY rank <= 4)
-        |SELECT * FROM m1 UNION ALL SELECT * FROM m2
-        |ORDER BY col_name, rank""".stripMargin,
-
-    "profile_events" ->
-      """SELECT 'event_id' AS col_name, count(*) AS n_rows,
-        |  CAST(count(*) - count(event_id) AS BIGINT) AS n_null,
-        |  CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct,
-        |  CAST(min(event_id) AS VARCHAR) AS min_str,
-        |  CAST(max(event_id) AS VARCHAR) AS max_str FROM events
-        |UNION ALL
-        |SELECT 'event_type', count(*),
-        |  CAST(count(*) - count(event_type) AS BIGINT),
-        |  CAST(count(DISTINCT event_type) AS BIGINT),
-        |  CAST(min(event_type) AS VARCHAR), CAST(max(event_type) AS VARCHAR) FROM events
-        |UNION ALL
-        |SELECT 'value', count(*),
-        |  CAST(count(*) - count(value) AS BIGINT),
-        |  CAST(count(DISTINCT value) AS BIGINT),
-        |  CAST(min(value) AS VARCHAR), CAST(max(value) AS VARCHAR) FROM events
-        |UNION ALL
-        |SELECT 'ts', count(*),
-        |  CAST(count(*) - count(ts) AS BIGINT),
-        |  CAST(count(DISTINCT ts) AS BIGINT),
-        |  CAST(min(ts) AS VARCHAR), CAST(max(ts) AS VARCHAR) FROM events
-        |ORDER BY col_name""".stripMargin,
-
-    "sql_q4_priority" ->
-      """SELECT o_orderpriority, count(*) AS order_count
-        |FROM orders
-        |WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o_orderdate < TIMESTAMP '1996-07-01'
-        |  AND EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_quantity > 30)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "csv_roundtrip_load" ->
-      """SELECT event_type, count(*) AS n,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v,
-        | CAST(min(event_id) AS BIGINT) AS min_id,
-        | CAST(max(event_id) AS BIGINT) AS max_id
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "schema_evolution_merge" ->
-      """SELECT CASE WHEN event_id % 2 = 0 THEN '_pre_schema_' ELSE event_type END
-        |         AS event_type,
-        | count(*) AS n,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "q7_volume_shipping" ->
-      """SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-        | CAST(year(l_shipdate) AS BIGINT) AS l_year,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue
-        |FROM lineitem
-        |JOIN supplier ON l_suppkey = s_suppkey
-        |JOIN orders ON l_orderkey = o_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |JOIN nation n1 ON s_nationkey = n1.n_nationkey
-        |JOIN nation n2 ON c_nationkey = n2.n_nationkey
-        |WHERE l_shipdate BETWEEN TIMESTAMP '1995-01-01' AND TIMESTAMP '1996-12-31'
-        |  AND n1.n_name != n2.n_name
-        |  AND (n1.n_nationkey < 3 OR n2.n_nationkey < 3)
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-
-    "pivot_event_counts" ->
-      """SELECT user_id % 10 AS user_bucket,
-        | count(CASE WHEN event_type = 'click' THEN 1 END) AS click,
-        | count(CASE WHEN event_type = 'error' THEN 1 END) AS error,
-        | count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchase,
-        | count(CASE WHEN event_type = 'signup' THEN 1 END) AS signup,
-        | count(CASE WHEN event_type = 'view' THEN 1 END) AS view
-        |FROM events GROUP BY 1 ORDER BY user_bucket""".stripMargin,
-
-    "array_event_types" ->
-      """SELECT user_id,
-        | array_to_string(list_sort(list(DISTINCT event_type)), ',') AS types,
-        | count(DISTINCT event_type) AS n_types
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "posexplode_tokens" ->
-      """SELECT doc_id, CAST(u['pos'] AS BIGINT) AS pos, u['tok'] AS tok FROM (
-        |  SELECT doc_id,
-        |    unnest(list_transform(generate_series(1, len(w)),
-        |      i -> {'pos': i - 1, 'tok': w[i]})) AS u
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS w
-        |        FROM documents WHERE doc_id < 20) t) t2
-        |ORDER BY doc_id, pos""".stripMargin,
-
-    "agg_median_price" ->
-      """SELECT o_orderstatus,
-        | round(quantile_cont(o_totalprice, 0.5), 2) AS median_price,
-        | count(*) AS n
-        |FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "mix_temperature_weights" ->
-      """WITH c AS (SELECT source, count(*) AS n FROM documents GROUP BY 1),
-        |s AS (SELECT source, n, pow(CAST(n AS DOUBLE), 1.0/2.0) AS sc FROM c)
-        |SELECT source, n, round(sc / (SELECT sum(sc) FROM s), 9) AS weight
-        |FROM s ORDER BY source""".stripMargin,
-
-    "pack_shards" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents)
-        |SELECT doc_id, n_tokens,
-        |  CAST(sum(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_w,
-        |  CAST(floor((sum(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-        |    - n_tokens) / 5000.0) AS BIGINT) AS shard
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    "mix_interleave" ->
-      """WITH r AS (
-        |  SELECT doc_id, source,
-        |    row_number() OVER (PARTITION BY source ORDER BY doc_id) AS grp_rank
-        |  FROM documents),
-        |m AS (
-        |  SELECT doc_id, source, grp_rank,
-        |    CAST(grp_rank * (CASE CAST(substring(source, 4) AS INT) % 3
-        |           WHEN 0 THEN 1000000 WHEN 1 THEN 500000 ELSE 250000 END)
-        |      AS BIGINT) AS mix_pos_micro
-        |  FROM r)
-        |SELECT doc_id, source, grp_rank, mix_pos_micro
-        |FROM m ORDER BY mix_pos_micro, source, grp_rank LIMIT 100""".stripMargin,
-
-    "pack_budget_select" ->
-      """WITH t AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tokens,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                 'that','for','on','with','as','at','by','from'))) AS BIGINT) AS stop_cnt
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, n_tokens, stop_cnt,
-        |    (stop_cnt * 1000) // greatest(n_tokens, 1) AS score
-        |  FROM t),
-        |c AS (
-        |  SELECT doc_id, n_tokens, score,
-        |    CAST(sum(n_tokens) OVER (ORDER BY score DESC, doc_id
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_w
-        |  FROM s)
-        |SELECT doc_id, n_tokens, score, cum_w
-        |FROM c WHERE cum_w <= 10000
-        |ORDER BY doc_id""".stripMargin,
-
-    "x4_model_score" ->
-      """WITH w AS (
-        |  SELECT unnest(string_split_regex(lower(text), '\s+')) AS term
-        |  FROM documents),
-        |f AS (
-        |  SELECT term, count(*) AS cnt FROM w WHERE len(term) >= 4
-        |  GROUP BY term),
-        |m AS (
-        |  SELECT term,
-        |    CAST((1000 - row_number() OVER (ORDER BY cnt DESC, term)) * 1000
-        |      AS BIGINT) AS weight_micro
-        |  FROM f
-        |  QUALIFY row_number() OVER (ORDER BY cnt DESC, term) <= 40),
-        |t AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS term
-        |  FROM documents),
-        |h AS (
-        |  SELECT t.doc_id, count(*) AS n_hits, sum(m.weight_micro) AS s
-        |  FROM t JOIN m USING (term) GROUP BY t.doc_id)
-        |SELECT d.doc_id, CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-        |  CAST(coalesce(h.s, 0) AS BIGINT) AS score_micro
-        |FROM documents d LEFT JOIN h ON d.doc_id = h.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-
-    "pack_sequences" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |c AS (
-        |  SELECT doc_id, n_tokens,
-        |    CAST(sum(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-        |      AS BIGINT) AS cum
-        |  FROM d),
-        |e AS (
-        |  SELECT doc_id, n_tokens, cum - n_tokens AS start, cum,
-        |    unnest(range((cum - n_tokens) // 256, (cum - 1) // 256 + 1)) AS seq_id
-        |  FROM c WHERE n_tokens > 0)
-        |SELECT doc_id, n_tokens, seq_id,
-        |  greatest(seq_id * 256 - start, 0) AS tok_start,
-        |  least((seq_id + 1) * 256 - start, n_tokens)
-        |    - greatest(seq_id * 256 - start, 0) AS tok_len,
-        |  greatest(start - seq_id * 256, 0) AS seq_off
-        |FROM e ORDER BY doc_id, seq_id""".stripMargin,
-
-    "x3_decontaminate_join" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 5 THEN
-        |      list_distinct(list_transform(generate_series(1, len(w) - 4),
-        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4]))
-        |    ELSE [array_to_string(w, ' ')] END AS s
-        |  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w
-        |        FROM documents) t),
-        |cs AS (SELECT doc_id, unnest(s) AS h FROM sh),
-        |ps AS (SELECT DISTINCT unnest(s) AS h FROM sh WHERE doc_id % 2 = 0)
-        |SELECT c.doc_id, count(*) AS n_overlap
-        |FROM cs c JOIN ps USING (h)
-        |GROUP BY c.doc_id ORDER BY c.doc_id""".stripMargin,
-
-    "x3_decontaminate" ->
-      """WITH sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 5 THEN
-        |      list_distinct(list_transform(generate_series(1, len(w) - 4),
-        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4]))
-        |    ELSE [array_to_string(w, ' ')] END AS s
-        |  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w
-        |        FROM documents) t),
-        |cs AS (SELECT doc_id, unnest(s) AS h FROM sh),
-        |ps AS (SELECT DISTINCT unnest(s) AS h FROM sh WHERE doc_id % 20 = 0)
-        |SELECT c.doc_id, count(*) AS n_overlap
-        |FROM cs c JOIN ps USING (h)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "x3_span_dedup" ->
-      """WITH b AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, pos, array_to_string(w[pos+1:pos+5], ' ') AS span
-        |  FROM (SELECT doc_id, w, unnest(range(0, len(w) - 4)) AS pos
-        |        FROM b WHERE len(w) >= 5)),
-        |dk AS (SELECT span FROM s GROUP BY span HAVING count(DISTINCT doc_id) >= 2),
-        |agg AS (
-        |  SELECT doc_id, count(DISTINCT pos) AS n_dup_spans,
-        |         count(DISTINCT t) AS dup_tokens
-        |  FROM (SELECT dp.doc_id, dp.pos, unnest(range(dp.pos, dp.pos + 5)) AS t
-        |        FROM (SELECT s.doc_id, s.pos FROM s JOIN dk USING (span)) dp)
-        |  GROUP BY doc_id)
-        |SELECT b.doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
-        |  CAST(CASE WHEN len(w) >= 5 THEN len(w) - 4 ELSE 0 END AS BIGINT) AS n_spans,
-        |  coalesce(a.n_dup_spans, 0) AS n_dup_spans,
-        |  coalesce(a.dup_tokens, 0) AS dup_tokens
-        |FROM b LEFT JOIN agg a USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    "x3_span_scrub" ->
-      """WITH b AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS w
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, pos, array_to_string(w[pos+1:pos+5], ' ') AS span
-        |  FROM (SELECT doc_id, w, unnest(range(0, len(w) - 4)) AS pos
-        |        FROM b WHERE len(w) >= 5)),
-        |own AS (
-        |  SELECT span, min(doc_id) AS owner FROM s
-        |  GROUP BY span HAVING count(DISTINCT doc_id) >= 2),
-        |rm AS (
-        |  SELECT doc_id, t FROM (
-        |    SELECT dp.doc_id, unnest(range(dp.pos, dp.pos + 5)) AS t
-        |    FROM (SELECT s.doc_id, s.pos FROM s JOIN own USING (span)
-        |          WHERE s.doc_id <> own.owner) dp)
-        |  GROUP BY doc_id, t),
-        |tok AS (
-        |  SELECT doc_id, t, w[t + 1] AS tok
-        |  FROM (SELECT doc_id, w, unnest(range(0, len(w))) AS t FROM b)),
-        |kept AS (
-        |  SELECT tok.doc_id, count(*) AS nkept,
-        |         string_agg(tok.tok, ' ' ORDER BY tok.t) AS clean_text
-        |  FROM tok
-        |  WHERE NOT EXISTS (SELECT 1 FROM rm
-        |                    WHERE rm.doc_id = tok.doc_id AND rm.t = tok.t)
-        |  GROUP BY tok.doc_id)
-        |SELECT b.doc_id, CAST(len(w) AS BIGINT) AS n_tokens,
-        |  CAST(len(w) - coalesce(kept.nkept, 0) AS BIGINT) AS n_removed,
-        |  md5(coalesce(kept.clean_text, '')) AS clean_md5
-        |FROM b LEFT JOIN kept USING (doc_id)
-        |ORDER BY b.doc_id""".stripMargin,
-
-    "x3_boilerplate_scrub" ->
-      """WITH lined AS MATERIALIZED (
-        |  SELECT doc_id, source,
-        |    concat_ws(chr(10),
-        |      'hdr ' || source,
-        |      substr(text, 1, 60),
-        |      CASE WHEN doc_id % 3 = 0 THEN 'promo ' || source END,
-        |      substr(text, 61, 60),
-        |      'foot ' || CAST(doc_id % 7 AS VARCHAR)) AS text
-        |  FROM documents),
-        |l AS MATERIALIZED (
-        |  SELECT doc_id, source, pos, ls[pos + 1] AS line
-        |  FROM (SELECT doc_id, source, ls, unnest(range(0, len(ls))) AS pos
-        |        FROM (SELECT doc_id, source,
-        |                string_split(text, chr(10)) AS ls FROM lined))),
-        |boiler AS (
-        |  SELECT source, line FROM l GROUP BY source, line
-        |  HAVING count(DISTINCT doc_id) >= 5),
-        |kept AS (
-        |  SELECT l.doc_id, count(*) AS nkept,
-        |         string_agg(l.line, chr(10) ORDER BY l.pos) AS clean_text
-        |  FROM l
-        |  WHERE NOT EXISTS (SELECT 1 FROM boiler b
-        |                    WHERE b.source = l.source AND b.line = l.line)
-        |  GROUP BY l.doc_id)
-        |SELECT lined.doc_id, lined.source,
-        |  CAST(len(string_split(lined.text, chr(10))) AS BIGINT) AS n_lines,
-        |  CAST(len(string_split(lined.text, chr(10)))
-        |       - coalesce(kept.nkept, 0) AS BIGINT) AS n_removed,
-        |  md5(coalesce(kept.clean_text, '')) AS clean_md5
-        |FROM lined LEFT JOIN kept USING (doc_id)
-        |ORDER BY lined.doc_id""".stripMargin,
-
-    "x4_repetition_stats" ->
-      """WITH toks AS (
-        |  SELECT doc_id,
-        |    unnest(string_split_regex(lower(text), '\s+')) AS w,
-        |    unnest(generate_series(1, len(string_split_regex(lower(text), '\s+')))) AS pos
-        |  FROM documents WHERE doc_id < 200),
-        |ws AS (
-        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-        |    CAST(max(c) AS BIGINT) AS top_word_n
-        |  FROM (SELECT doc_id, w, count(*) AS c FROM toks GROUP BY 1, 2)
-        |  GROUP BY 1),
-        |bg AS (
-        |  SELECT doc_id, w || ' ' || lead(w) OVER (PARTITION BY doc_id ORDER BY pos) AS bg
-        |  FROM toks),
-        |bs AS (
-        |  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_bigrams,
-        |    CAST(sum(c) - count(*) AS BIGINT) AS dup_bigram_n
-        |  FROM (SELECT doc_id, bg, count(*) AS c FROM bg WHERE bg IS NOT NULL GROUP BY 1, 2)
-        |  GROUP BY 1)
-        |SELECT ws.doc_id, n_tokens, top_word_n, n_bigrams, dup_bigram_n
-        |FROM ws JOIN bs USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    "x4_pii_redact" ->
-      """SELECT doc_id,
-        | regexp_replace(
-        |   regexp_replace(
-        |     regexp_replace(
-        |       substr(text, 1, 40) || ' reach bob.smith+x@mail.example.org or +1 (415) 555-0199 pin 123456 end',
-        |       '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '<EMAIL>', 'g'),
-        |     '\+?[0-9][0-9() -]{7,}[0-9]', '<PHONE>', 'g'),
-        |   '[0-9]{6,}', '<ID>', 'g') AS clean_text
-        |FROM documents WHERE doc_id < 100 ORDER BY doc_id""".stripMargin,
-
-    "agg_equidepth_hist" ->
-      """WITH t AS (
-        |  SELECT o_orderkey, CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders),
-        |b AS (
-        |  SELECT cents,
-        |    CAST(ntile(10) OVER (ORDER BY cents, o_orderkey) AS BIGINT) AS bucket
-        |  FROM t)
-        |SELECT bucket, count(*) AS n, min(cents) AS lo, max(cents) AS hi
-        |FROM b GROUP BY bucket ORDER BY bucket""".stripMargin,
-
-    "agg_mode_priority" ->
-      """WITH c AS (
-        |  SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
-        |  FROM orders GROUP BY 1, 2),
-        |r AS (
-        |  SELECT o_orderstatus, o_orderpriority, cnt,
-        |    row_number() OVER (PARTITION BY o_orderstatus
-        |      ORDER BY cnt DESC, o_orderpriority) AS rk
-        |  FROM c)
-        |SELECT o_orderstatus, o_orderpriority AS mode_priority, cnt AS mode_n
-        |FROM r WHERE rk = 1 ORDER BY o_orderstatus""".stripMargin,
-
-    "x6_json_salvage" ->
-      """WITH r AS (
-        |  SELECT doc_id,
-        |    CASE WHEN doc_id % 7 = 0
-        |      THEN '{"id": ' || doc_id || ', "lang": "' || lang
-        |      ELSE '{"id": ' || doc_id || ', "lang": "' || lang || '"}' END AS raw
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CASE WHEN json_valid(raw)
-        |    THEN CAST(json_extract(raw, '$.id') AS BIGINT) END AS parsed_id,
-        |  CASE WHEN json_valid(raw)
-        |    THEN json_extract_string(raw, '$.lang') END AS parsed_lang,
-        |  NOT json_valid(raw) AS is_corrupt
-        |FROM r ORDER BY doc_id""".stripMargin,
-
-    "x4_pretokenize" ->
-      """SELECT doc_id,
-        |  CAST(len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]+')) AS BIGINT) AS n_pretokens,
-        |  CAST(len(regexp_extract_all(lower(text), '[a-z]+')) AS BIGINT) AS n_alpha,
-        |  CAST(len(regexp_extract_all(lower(text), '[0-9]+')) AS BIGINT) AS n_num,
-        |  CAST(len(regexp_extract_all(lower(text), '[^a-z0-9 ]+')) AS BIGINT) AS n_other
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "x4_bpe_pair_census" ->
-      """WITH w AS (
-        |  SELECT word, count(*) AS cnt FROM (
-        |    SELECT unnest(string_split_regex(lower(text), '\s+')) AS word
-        |    FROM documents)
-        |  WHERE word <> '' GROUP BY word),
-        |p AS (
-        |  SELECT substr(word, i, 1) AS a, substr(word, i + 1, 1) AS b, cnt
-        |  FROM w, unnest(range(1, len(word))) t(i)
-        |  WHERE len(word) >= 2)
-        |SELECT a, b, CAST(sum(cnt) AS BIGINT) AS n
-        |FROM p GROUP BY a, b ORDER BY n DESC, a, b LIMIT 20""".stripMargin,
-
-    // Full 5-round BPE twin over the whitespace-word vocabulary; see
-    // bpeMergesOracle for the double-space replace() encoding.
-    "x4_bpe_merges" -> bpeMergesOracle(
-      """SELECT word, count(*) AS cnt FROM (
-        |    SELECT unnest(string_split_regex(lower(text), '\s+')) AS word
-        |    FROM documents WHERE doc_id < 200)
-        |  WHERE word <> '' GROUP BY word""".stripMargin),
-
-    // The loop-chaining adversarial twin: same 5-round replay over the
-    // CONSTRUCTED vocabulary whose argmax order forces merges of merged
-    // symbols (rounds 3 and 4 consume rounds 1 and 2's outputs).
-    "x4_bpe_merges_chained" -> bpeMergesOracle(
-      """SELECT word, count(*) AS cnt FROM (
-        |    SELECT CASE WHEN doc_id < 100 THEN 'xy'
-        |                WHEN doc_id < 160 THEN 'xyz'
-        |                WHEN doc_id < 190 THEN 'aaaa'
-        |                ELSE 'pq' END AS word
-        |    FROM documents WHERE doc_id < 210)
-        |  GROUP BY word""".stripMargin),
-
-    // Same 5-round twin over the PRETOKEN vocabulary (the GPT-2 shape).
-    "x4_bpe_merges_pretoken" -> bpeMergesOracle(
-      """SELECT word, count(*) AS cnt FROM (
-        |    SELECT unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]+')) AS word
-        |    FROM documents WHERE doc_id < 200)
-        |  WHERE word <> '' GROUP BY word""".stripMargin),
-
-    // Train-then-encode twins: merges re-derived in SQL, applied to
-    // every distinct word, joined back to doc grain.
-    "x4_bpe_encode" -> bpeEncodeOracle(
-      """SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS word
-        |    FROM documents WHERE doc_id < 200""".stripMargin),
-
-    "x4_bpe_encode_pretoken" -> bpeEncodeOracle(
-      """SELECT doc_id, unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]+')) AS word
-        |    FROM documents WHERE doc_id < 200""".stripMargin),
-
-    // Unigram-LM NLL twin: same add-one-smoothed ln in fixed-point
-    // micros (floor(x*1e6 + 0.5) — identical expression shape so the
-    // one double op is IEEE-identical), BIGINT sums thereafter.
-    "x4_lm_nll" ->
-      """WITH rw AS MATERIALIZED (
-        |  SELECT unnest(string_split_regex(lower(text), '\s+')) AS word
-        |  FROM documents WHERE lang = 'en'),
-        |c AS MATERIALIZED (
-        |  SELECT word, count(*) AS c FROM rw WHERE word <> '' GROUP BY word),
-        |t AS MATERIALIZED (SELECT sum(c) AS n, count(*) AS v FROM c),
-        |lm AS MATERIALIZED (
-        |  SELECT word,
-        |    CAST(floor(ln((c + 1.0) / CAST(n + v AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS lp
-        |  FROM c, t),
-        |oov AS MATERIALIZED (
-        |  SELECT CAST(floor(ln((0 + 1.0) / CAST(n + v AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS lp
-        |  FROM t),
-        |dw AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS word
-        |  FROM documents)
-        |SELECT doc_id, count(*) AS n_tokens,
-        |  CAST(-sum(coalesce(lm.lp, (SELECT lp FROM oov))) AS BIGINT) AS nll_micro
-        |FROM dw LEFT JOIN lm USING (word)
-        |WHERE dw.word <> ''
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // NB train + score replayed end-to-end: per-class counts → global
-    // V → smoothed lp micros → per-doc per-class integer sums. The ln
-    // expression shapes mirror the Spark side exactly.
-    "x4_nb_scores" ->
-      """WITH w AS MATERIALIZED (
-        |  SELECT lang, unnest(string_split_regex(lower(text), '\s+')) AS word
-        |  FROM documents WHERE doc_id % 2 = 0),
-        |c AS MATERIALIZED (
-        |  SELECT lang, word, count(*) AS c FROM w WHERE word <> ''
-        |  GROUP BY 1, 2),
-        |n AS MATERIALIZED (SELECT lang, sum(c) AS n FROM c GROUP BY 1),
-        |v AS MATERIALIZED (SELECT count(DISTINCT word) AS v FROM c),
-        |lm AS MATERIALIZED (
-        |  SELECT c.lang, c.word,
-        |    CAST(floor(ln((c.c + 1.0) / CAST(n.n + v.v AS DOUBLE)) * 1000000
-        |      + 0.5) AS BIGINT) AS lp
-        |  FROM c JOIN n USING (lang), v),
-        |oov AS MATERIALIZED (
-        |  SELECT n.lang,
-        |    CAST(floor(ln((0 + 1.0) / CAST(n.n + v.v AS DOUBLE)) * 1000000
-        |      + 0.5) AS BIGINT) AS lp
-        |  FROM n, v),
-        |d AS (SELECT lang, count(*) AS d FROM documents WHERE doc_id % 2 = 0
-        |  GROUP BY 1),
-        |pri AS MATERIALIZED (
-        |  SELECT lang, CAST(floor(ln(CAST(d.d AS DOUBLE) / dt.dt) * 1000000
-        |    + 0.5) AS BIGINT) AS prior
-        |  FROM d, (SELECT sum(d) AS dt FROM d) dt),
-        |dw AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS word
-        |  FROM documents WHERE doc_id % 2 = 1 AND doc_id < 400)
-        |SELECT dw.doc_id, pri.lang AS label, count(*) AS n_tokens,
-        |  CAST(pri.prior + sum(coalesce(lm.lp, oov.lp)) AS BIGINT) AS ll_micro
-        |FROM dw
-        |JOIN pri ON TRUE
-        |JOIN oov ON oov.lang = pri.lang
-        |LEFT JOIN lm ON lm.word = dw.word AND lm.lang = pri.lang
-        |WHERE dw.word <> ''
-        |GROUP BY dw.doc_id, pri.lang, pri.prior
-        |ORDER BY doc_id, label""".stripMargin,
-
-    "x4_nb_confusion" ->
-      """WITH w AS MATERIALIZED (
-        |  SELECT lang, unnest(string_split_regex(lower(text), '\s+')) AS word
-        |  FROM documents WHERE doc_id % 2 = 0),
-        |c AS MATERIALIZED (
-        |  SELECT lang, word, count(*) AS c FROM w WHERE word <> ''
-        |  GROUP BY 1, 2),
-        |n AS MATERIALIZED (SELECT lang, sum(c) AS n FROM c GROUP BY 1),
-        |v AS MATERIALIZED (SELECT count(DISTINCT word) AS v FROM c),
-        |lm AS MATERIALIZED (
-        |  SELECT c.lang, c.word,
-        |    CAST(floor(ln((c.c + 1.0) / CAST(n.n + v.v AS DOUBLE)) * 1000000
-        |      + 0.5) AS BIGINT) AS lp
-        |  FROM c JOIN n USING (lang), v),
-        |oov AS MATERIALIZED (
-        |  SELECT n.lang,
-        |    CAST(floor(ln((0 + 1.0) / CAST(n.n + v.v AS DOUBLE)) * 1000000
-        |      + 0.5) AS BIGINT) AS lp
-        |  FROM n, v),
-        |d AS (SELECT lang, count(*) AS d FROM documents WHERE doc_id % 2 = 0
-        |  GROUP BY 1),
-        |pri AS MATERIALIZED (
-        |  SELECT lang, CAST(floor(ln(CAST(d.d AS DOUBLE) / dt.dt) * 1000000
-        |    + 0.5) AS BIGINT) AS prior
-        |  FROM d, (SELECT sum(d) AS dt FROM d) dt),
-        |dw AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS word
-        |  FROM documents WHERE doc_id % 2 = 1),
-        |sc AS MATERIALIZED (
-        |  SELECT dw.doc_id, pri.lang AS label,
-        |    pri.prior + sum(coalesce(lm.lp, oov.lp)) AS ll
-        |  FROM dw
-        |  JOIN pri ON TRUE
-        |  JOIN oov ON oov.lang = pri.lang
-        |  LEFT JOIN lm ON lm.word = dw.word AND lm.lang = pri.lang
-        |  WHERE dw.word <> ''
-        |  GROUP BY dw.doc_id, pri.lang, pri.prior),
-        |best AS (SELECT doc_id, max(ll) AS b FROM sc GROUP BY 1),
-        |pred AS (
-        |  SELECT sc.doc_id, min(sc.label) AS pred_label, max(sc.ll) AS best_ll
-        |  FROM sc JOIN best ON sc.doc_id = best.doc_id AND sc.ll = best.b
-        |  GROUP BY 1)
-        |SELECT doc.lang AS true_lang, pred.pred_label, count(*) AS n,
-        |  CAST(sum(pred.best_ll) AS BIGINT) AS sum_ll_micro
-        |FROM pred JOIN documents doc USING (doc_id)
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    // Pair census over the pretoken vocabulary — the census the real
-    // tokenizer pipeline trains on.
-    "x4_bpe_pretoken_census" ->
-      """WITH w AS (
-        |  SELECT word, count(*) AS cnt FROM (
-        |    SELECT unnest(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9 ]+')) AS word
-        |    FROM documents)
-        |  WHERE word <> '' GROUP BY word),
-        |p AS (
-        |  SELECT substr(word, i, 1) AS a, substr(word, i + 1, 1) AS b, cnt
-        |  FROM w, unnest(range(1, len(word))) t(i)
-        |  WHERE len(word) >= 2)
-        |SELECT a, b, CAST(sum(cnt) AS BIGINT) AS n
-        |FROM p GROUP BY a, b ORDER BY n DESC, a, b LIMIT 20""".stripMargin,
-
-    // The quantized ANN equals exact brute force whenever the int8
-    // proxy margin holds (it does at every SF — verified bit-equal), so
-    // it inherits the exact top-k twin verbatim.
-    "x2_ann_quantized" ->
-      """WITH v AS (
-        |  SELECT vec_id, embedding,
-        |    list_sum(list_transform(generate_series(1, len(embedding)),
-        |      i -> embedding[i] * embedding[i])) AS nrm
-        |  FROM embeddings),
-        |p AS (
-        |  SELECT q.vec_id AS qid, c.vec_id AS cid,
-        |    list_sum(list_transform(generate_series(1, len(q.embedding)),
-        |      i -> q.embedding[i] * c.embedding[i]))
-        |      / (sqrt(q.nrm) * sqrt(c.nrm)) AS sim
-        |  FROM v q, v c
-        |  WHERE q.vec_id % 100 = 0 AND q.vec_id != c.vec_id
-        |    AND ((q.vec_id % 1000003 + 7) * 2654435761)
-        |        % 2147483647 % 1000000
-        |      < 30000000000 // GREATEST(
-        |          (SELECT count(*) FROM embeddings), 30000)),
-        |r AS (
-        |  SELECT qid, cid, sim,
-        |    ROW_NUMBER() OVER (PARTITION BY qid ORDER BY sim DESC, cid ASC) AS rk
-        |  FROM p)
-        |SELECT qid, cid, round(sim, 6) AS sim, rk FROM r
-        |WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
-
-    // ANN verdict gates: the oracle pins the fixed expectation — every
-    // correctness property true for every query id. The Spark side
-    // computes each verdict honestly (in-query exact top-k comparison,
-    // independent sim recompute), so an index regression flips a
-    // hash-gated boolean. See Similarity.annVerdict.
-    "x2_ann_lsh" ->
-      """SELECT vec_id AS qid, true AS returned_le_k, true AS rk_dense,
-        |  true AS sims_exact, true AS recall_floor_met
-        |FROM embeddings WHERE vec_id % 100 = 0
-        |  AND ((vec_id % 1000003 + 7) * 2654435761)
-        |      % 2147483647 % 1000000
-        |    < 30000000000 // GREATEST(
-        |        (SELECT count(*) FROM embeddings), 30000)
-        |ORDER BY qid""".stripMargin,
-
-    "x2_ann_lsh_clustered" ->
-      """SELECT vec_id AS qid, true AS returned_le_k, true AS rk_dense,
-        |  true AS sims_exact, true AS recall_floor_met
-        |FROM embeddings WHERE vec_id % 100 = 0
-        |  AND ((vec_id % 1000003 + 7) * 2654435761)
-        |      % 2147483647 % 1000000
-        |    < 30000000000 // GREATEST(
-        |        (SELECT count(*) FROM embeddings), 30000)
-        |ORDER BY qid""".stripMargin,
-
-    "x2_ann_ivf_clustered" ->
-      """SELECT vec_id AS qid, true AS returned_le_k, true AS rk_dense,
-        |  true AS sims_exact, true AS recall_floor_met
-        |FROM embeddings WHERE vec_id % 100 = 0
-        |  AND ((vec_id % 1000003 + 7) * 2654435761)
-        |      % 2147483647 % 1000000
-        |    < 30000000000 // GREATEST(
-        |        (SELECT count(*) FROM embeddings), 30000)
-        |ORDER BY qid""".stripMargin,
-
-    "x2_ann_projected_clustered" ->
-      """SELECT vec_id AS qid, true AS returned_le_k, true AS rk_dense,
-        |  true AS sims_exact, true AS recall_floor_met
-        |FROM embeddings WHERE vec_id % 100 = 0
-        |  AND ((vec_id % 1000003 + 7) * 2654435761)
-        |      % 2147483647 % 1000000
-        |    < 30000000000 // GREATEST(
-        |        (SELECT count(*) FROM embeddings), 30000)
-        |ORDER BY qid""".stripMargin,
-
-    "x2_ann_ivf_persisted" ->
-      """SELECT vec_id AS qid, true AS returned_le_k, true AS rk_dense,
-        |  true AS sims_exact, true AS recall_floor_met
-        |FROM embeddings WHERE vec_id % 100 = 0
-        |  AND ((vec_id % 1000003 + 7) * 2654435761)
-        |      % 2147483647 % 1000000
-        |    < 30000000000 // GREATEST(
-        |        (SELECT count(*) FROM embeddings), 30000)
-        |ORDER BY qid""".stripMargin,
-
-    "x2_ann_ivf_append" ->
-      """SELECT vec_id AS qid, true AS returned_le_k, true AS rk_dense,
-        |  true AS sims_exact, true AS recall_floor_met,
-        |  true AS append_equals_rebuild, true AS census_counts_match,
-        |  true AS no_retrain_needed
-        |FROM embeddings WHERE vec_id % 100 = 0
-        |  AND ((vec_id % 1000003 + 7) * 2654435761)
-        |      % 2147483647 % 1000000
-        |    < 30000000000 // GREATEST(
-        |        (SELECT count(*) FROM embeddings), 30000)
-        |ORDER BY qid""".stripMargin,
-
-    "x2_ann_ivf_retrain" ->
-      """SELECT vec_id AS qid, true AS returned_le_k, true AS rk_dense,
-        |  true AS sims_exact, true AS recall_floor_met,
-        |  true AS census_fired, true AS census_cleared,
-        |  true AS retrain_equals_fresh_build, true AS quarantine_matches
-        |FROM embeddings WHERE vec_id % 100 = 0 AND vec_id % 3 <> 0
-        |  AND ((vec_id % 1000003 + 7) * 2654435761)
-        |      % 2147483647 % 1000000
-        |    < 30000000000 // GREATEST(
-        |        (SELECT count(*) FROM embeddings), 30000)
-        |ORDER BY qid""".stripMargin,
-
-    "x2_ann_pq" ->
-      """SELECT vec_id AS qid, true AS returned_le_k, true AS rk_dense,
-        |  true AS sims_exact, true AS recall_floor_met
-        |FROM embeddings WHERE vec_id % 100 = 0
-        |  AND ((vec_id % 1000003 + 7) * 2654435761)
-        |      % 2147483647 % 1000000
-        |    < 30000000000 // GREATEST(
-        |        (SELECT count(*) FROM embeddings), 30000)
-        |ORDER BY qid""".stripMargin,
-
-    "x2_ann_ivfpq" ->
-      """SELECT vec_id AS qid, true AS returned_le_k, true AS rk_dense,
-        |  true AS sims_exact, true AS recall_floor_met
-        |FROM embeddings WHERE vec_id % 100 = 0
-        |  AND ((vec_id % 1000003 + 7) * 2654435761)
-        |      % 2147483647 % 1000000
-        |    < 30000000000 // GREATEST(
-        |        (SELECT count(*) FROM embeddings), 30000)
-        |ORDER BY qid""".stripMargin,
-
-    "x2_ann_ivfpq_clustered" ->
-      """SELECT vec_id AS qid, true AS returned_le_k, true AS rk_dense,
-        |  true AS sims_exact, true AS recall_floor_met
-        |FROM embeddings WHERE vec_id % 100 = 0
-        |  AND ((vec_id % 1000003 + 7) * 2654435761)
-        |      % 2147483647 % 1000000
-        |    < 30000000000 // GREATEST(
-        |        (SELECT count(*) FROM embeddings), 30000)
-        |ORDER BY qid""".stripMargin,
-
-    "x2_ann_ivf" ->
-      """SELECT vec_id AS qid, true AS returned_le_k, true AS rk_dense,
-        |  true AS sims_exact, true AS recall_floor_met
-        |FROM embeddings WHERE vec_id % 100 = 0
-        |  AND ((vec_id % 1000003 + 7) * 2654435761)
-        |      % 2147483647 % 1000000
-        |    < 30000000000 // GREATEST(
-        |        (SELECT count(*) FROM embeddings), 30000)
-        |ORDER BY qid""".stripMargin,
-
-    "x2_ann_ivf_kmeans" ->
-      """SELECT vec_id AS qid, true AS returned_le_k, true AS rk_dense,
-        |  true AS sims_exact, true AS recall_floor_met
-        |FROM embeddings WHERE vec_id % 100 = 0
-        |  AND ((vec_id % 1000003 + 7) * 2654435761)
-        |      % 2147483647 % 1000000
-        |    < 30000000000 // GREATEST(
-        |        (SELECT count(*) FROM embeddings), 30000)
-        |ORDER BY qid""".stripMargin,
-
-    "window_ntile_distributed" ->
-      """SELECT c_custkey,
-        |  CAST(row_number() OVER w AS BIGINT) AS rank,
-        |  CAST(ntile(10) OVER w AS BIGINT) AS bucket,
-        |  round(percent_rank() OVER w, 9) AS pct_rank,
-        |  round(cume_dist() OVER w, 9) AS cume_dist
-        |FROM customer
-        |WINDOW w AS (ORDER BY c_acctbal DESC, c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    // Per-term quantize-then-sum replay; Gini as the same exact
-    // integer rational.
-    "x4_char_entropy" ->
-      """WITH ch AS (
-        |  SELECT doc_id, unnest(string_split_regex(text, '')) AS c
-        |  FROM documents),
-        |c AS (SELECT doc_id, c AS cat, count(*) AS c FROM ch GROUP BY 1, 2),
-        |t AS (
-        |  SELECT doc_id, sum(c) AS n, count(*) AS n_cats, sum(c * c) AS ss
-        |  FROM c GROUP BY 1),
-        |j AS (
-        |  SELECT c.doc_id,
-        |    CAST(floor(-1000000.0 * (CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE))
-        |      * ln(CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE))) AS BIGINT) AS term,
-        |    t.n, t.n_cats, t.ss
-        |  FROM c JOIN t USING (doc_id))
-        |SELECT doc_id, CAST(min(n) AS BIGINT) AS n,
-        |  CAST(min(n_cats) AS BIGINT) AS n_cats,
-        |  CAST(sum(term) AS BIGINT) AS entropy_micro,
-        |  CAST(((min(n) * min(n) - min(ss)) * 1000000) // (min(n) * min(n))
-        |       AS BIGINT) AS gini_micro
-        |FROM j GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "agg_entropy_gini" ->
-      """WITH c AS (
-        |  SELECT user_id, event_type, count(*) AS c FROM events GROUP BY 1, 2),
-        |t AS (
-        |  SELECT user_id, sum(c) AS n, count(*) AS n_cats, sum(c * c) AS ss
-        |  FROM c GROUP BY 1),
-        |j AS (
-        |  SELECT c.user_id,
-        |    CAST(floor(-1000000.0 * (CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE))
-        |      * ln(CAST(c.c AS DOUBLE) / CAST(t.n AS DOUBLE))) AS BIGINT) AS term,
-        |    t.n, t.n_cats, t.ss
-        |  FROM c JOIN t USING (user_id))
-        |SELECT user_id, CAST(min(n) AS BIGINT) AS n,
-        |  CAST(min(n_cats) AS BIGINT) AS n_cats,
-        |  CAST(sum(term) AS BIGINT) AS entropy_micro,
-        |  CAST(((min(n) * min(n) - min(ss)) * 1000000) // (min(n) * min(n))
-        |       AS BIGINT) AS gini_micro
-        |FROM j GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    // percentile-disc thresholds replayed as the same integer
-    // 100*cum >= p*n rule over the ordered value grain.
-    "dq_winsorize" ->
-      """WITH v AS (
-        |  SELECT event_type,
-        |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
-        |  FROM events),
-        |n AS (SELECT count(*) AS n FROM v),
-        |g AS (SELECT c, count(*) AS cnt FROM v GROUP BY 1),
-        |r AS (SELECT c, sum(cnt) OVER (ORDER BY c) AS cum FROM g),
-        |thr AS (
-        |  SELECT
-        |    (SELECT min(c) FROM r, n WHERE cum * 100 >= n * 5) AS lo,
-        |    (SELECT min(c) FROM r, n WHERE cum * 100 >= n * 95) AS hi)
-        |SELECT event_type, count(*) AS n,
-        |  CAST(sum(CASE WHEN c < lo THEN 1 ELSE 0 END) AS BIGINT) AS n_lo,
-        |  CAST(sum(CASE WHEN c > hi THEN 1 ELSE 0 END) AS BIGINT) AS n_hi,
-        |  CAST(sum(CASE WHEN c < lo THEN lo WHEN c > hi THEN hi ELSE c END)
-        |       AS BIGINT) AS sum_w_cents,
-        |  min(lo) AS lo_cents, min(hi) AS hi_cents
-        |FROM v, thr GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "dq_outliers_zscore" ->
-      """WITH b AS (
-        |  SELECT event_type, CAST(round(value * 100) AS HUGEINT) AS vc
-        |  FROM events),
-        |st AS (
-        |  SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-        |    sum(vc) AS s, sum(vc * vc) AS ss
-        |  FROM b GROUP BY event_type),
-        |f AS (
-        |  SELECT b.event_type, vc,
-        |    (vc * n - s) * (vc * n - s) > 4 * (n * ss - s * s) AS isout
-        |  FROM b JOIN st USING (event_type))
-        |SELECT event_type, count(*) AS n,
-        |  CAST(sum(CASE WHEN isout THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers,
-        |  CAST(coalesce(sum(CASE WHEN isout THEN vc END), 0) AS BIGINT) AS outlier_cents
-        |FROM f GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "dq_outliers_mad" ->
-      """WITH b AS (
-        |  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS vc
-        |  FROM events),
-        |md AS (SELECT event_type, median(vc) AS med FROM b GROUP BY event_type),
-        |d AS (
-        |  SELECT b.event_type, med, abs(CAST(vc AS DOUBLE) - med) AS dd
-        |  FROM b JOIN md USING (event_type)),
-        |m2 AS (SELECT event_type, median(dd) AS mad FROM d GROUP BY event_type)
-        |SELECT d.event_type, count(*) AS n,
-        |  CAST(max(med) AS DOUBLE) AS median_cents,
-        |  CAST(max(mad) AS DOUBLE) AS mad_cents,
-        |  CAST(sum(CASE WHEN dd > 2 * mad THEN 1 ELSE 0 END) AS BIGINT) AS n_outliers
-        |FROM d JOIN m2 USING (event_type)
-        |GROUP BY d.event_type ORDER BY event_type""".stripMargin,
-
-    // Full replay of the retrieval pipeline: corpus tf/df/avgdl, the
-    // query-term derivation, DECIMAL-quantized contribution sums, and
-    // the (score desc, doc asc) ranking.
-    "x4_bm25_retrieve" ->
-      """WITH corpus AS (SELECT doc_id, text FROM documents WHERE doc_id < 300),
-        |words AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS term
-        |  FROM corpus),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM words
-        |       WHERE len(term) >= 4 GROUP BY doc_id, term),
-        |dl AS (SELECT doc_id, sum(tf) AS dl FROM tf GROUP BY doc_id),
-        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        |nd AS (SELECT count(*) AS n_docs FROM corpus),
-        |ad AS (SELECT CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        |qt AS (
-        |  SELECT qid, term FROM (
-        |    SELECT qid, term,
-        |      row_number() OVER (PARTITION BY qid
-        |        ORDER BY qtf DESC, term ASC) AS qrk
-        |    FROM (SELECT doc_id AS qid, term, count(*) AS qtf
-        |          FROM words WHERE doc_id % 60 = 0 AND len(term) >= 4
-        |          GROUP BY doc_id, term))
-        |  WHERE qrk <= 3),
-        |contrib AS (
-        |  SELECT qt.qid, tf.doc_id,
-        |    CAST(round(ln(CAST(n_docs AS DOUBLE) / df.df) * (tf.tf * 2.2) /
-        |      (tf.tf + 1.2 * (0.25 + 0.75 * CAST(dl.dl AS DOUBLE) / avgdl)),
-        |      12) AS DECIMAL(28,12)) AS c
-        |  FROM tf JOIN qt ON tf.term = qt.term
-        |    JOIN dl ON tf.doc_id = dl.doc_id
-        |    JOIN df ON tf.term = df.term
-        |    CROSS JOIN nd CROSS JOIN ad),
-        |scored AS (SELECT qid, doc_id, round(CAST(sum(c) AS DOUBLE), 6) AS score
-        |           FROM contrib GROUP BY qid, doc_id),
-        |ranked AS (SELECT qid, doc_id, score,
-        |    row_number() OVER (PARTITION BY qid
-        |      ORDER BY score DESC, doc_id ASC) AS rk
-        |  FROM scored)
-        |SELECT qid, doc_id, score, CAST(rk AS BIGINT) AS rk
-        |FROM ranked WHERE rk <= 5 ORDER BY qid, rk""".stripMargin,
-
-    // Bit-exact unrolled replay of the 3 fixed-point GD iterations:
-    // integer fast-sigmoid, HUGEINT gradient sums, // division (the
-    // truncation twin of Spark DIV, pinned by sql_intdiv_semantics).
-    "ml_logreg_gd" ->
-      """WITH base AS (
-        |  SELECT CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END AS y,
-        |    CAST(1 AS BIGINT) AS x0,
-        |    CAST(o_totalprice * 100 AS BIGINT) // 1000000 AS x1,
-        |    CAST(year(o_orderdate) - 1995 AS BIGINT) AS x2
-        |  FROM orders),
-        |nn AS (SELECT count(*) AS n FROM base),
-        |ga AS (SELECT sum((y*1000000 - 500000) * x0) AS g0,
-        |              sum((y*1000000 - 500000) * x1) AS g1,
-        |              sum((y*1000000 - 500000) * x2) AS g2 FROM base),
-        |wa AS (SELECT CAST(g0 // (n*2) AS BIGINT) AS w0,
-        |              CAST(g1 // (n*2) AS BIGINT) AS w1,
-        |              CAST(g2 // (n*2) AS BIGINT) AS w2 FROM ga, nn),
-        |rb AS (SELECT y, x0, x1, x2,
-        |    y*1000000 - (500000 + (z*500000) // (1000000 + abs(z))) AS r
-        |  FROM (SELECT y, x0, x1, x2, w0*x0 + w1*x1 + w2*x2 AS z
-        |        FROM base, wa)),
-        |gb AS (SELECT sum(r*x0) AS g0, sum(r*x1) AS g1, sum(r*x2) AS g2 FROM rb),
-        |wb AS (SELECT wa.w0 + CAST(gb.g0 // (n*2) AS BIGINT) AS w0,
-        |              wa.w1 + CAST(gb.g1 // (n*2) AS BIGINT) AS w1,
-        |              wa.w2 + CAST(gb.g2 // (n*2) AS BIGINT) AS w2
-        |       FROM gb, wa, nn),
-        |rc AS (SELECT y, x0, x1, x2,
-        |    y*1000000 - (500000 + (z*500000) // (1000000 + abs(z))) AS r
-        |  FROM (SELECT y, x0, x1, x2, w0*x0 + w1*x1 + w2*x2 AS z
-        |        FROM base, wb)),
-        |gc AS (SELECT sum(r*x0) AS g0, sum(r*x1) AS g1, sum(r*x2) AS g2 FROM rc),
-        |wc AS (SELECT wb.w0 + CAST(gc.g0 // (n*2) AS BIGINT) AS w0,
-        |              wb.w1 + CAST(gc.g1 // (n*2) AS BIGINT) AS w1,
-        |              wb.w2 + CAST(gc.g2 // (n*2) AS BIGINT) AS w2
-        |       FROM gc, wb, nn)
-        |SELECT n AS n_rows, w0 AS w0_micro, w1 AS w1_micro, w2 AS w2_micro
-        |FROM wc, nn""".stripMargin,
-
-    "x4_bm25_top_terms" ->
-      """WITH words AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS term
-        |  FROM documents WHERE doc_id < 50),
-        |tf AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM words
-        |  WHERE length(term) >= 4 GROUP BY doc_id, term),
-        |dl AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        |n AS (SELECT count(*) AS n_docs FROM documents WHERE doc_id < 50),
-        |a AS (SELECT CAST(sum(dl) AS DOUBLE) / count(*) AS avgdl FROM dl),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term AS term, tf, df, dl,
-        |    round(ln(CAST(n_docs AS DOUBLE) / df) * (tf * (1.2 + 1.0)) /
-        |      (tf + 1.2 * (1.0 - 0.75 + 0.75 * CAST(dl AS DOUBLE) / avgdl)), 6) AS bm25
-        |  FROM tf JOIN dl USING (doc_id) JOIN df ON tf.term = df.term
-        |  CROSS JOIN n CROSS JOIN a),
-        |ranked AS (
-        |  SELECT doc_id, term, tf, df, dl, bm25,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
-        |      ORDER BY bm25 DESC, term ASC) AS BIGINT) AS rk
-        |  FROM scored)
-        |SELECT doc_id, term, tf, df, dl, bm25, rk FROM ranked
-        |WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin,
-
-    // Window-form replay of the bounded-top-k aggregator path: same
-    // impact order (tf desc, doc id asc), same pruning cut.
-    "x4_inverted_index" ->
-      """WITH tok AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS term
-        |  FROM documents),
-        |tf AS MATERIALIZED (
-        |  SELECT term, doc_id, count(*) AS tf FROM tok
-        |  WHERE term <> '' GROUP BY 1, 2),
-        |top AS (
-        |  SELECT term, doc_id, tf FROM tf
-        |  QUALIFY row_number() OVER (PARTITION BY term
-        |                             ORDER BY tf DESC, doc_id) <= 8),
-        |post AS (
-        |  SELECT term, string_agg(doc_id || ':' || tf, ' '
-        |                          ORDER BY tf DESC, doc_id) AS postings
-        |  FROM top GROUP BY term),
-        |stats AS (
-        |  SELECT term, count(*) AS df, CAST(sum(tf) AS BIGINT) AS cf
-        |  FROM tf GROUP BY term)
-        |SELECT s.term, CAST(s.df AS BIGINT) AS df, s.cf, p.postings
-        |FROM stats s JOIN post p USING (term)
-        |WHERE s.df >= 5 ORDER BY s.term""".stripMargin,
-
-    // QUALIFY-window replay of the string bounded-top-k path: same
-    // (count desc, term asc) order, same lexical tie-break.
-    "x4_top_terms_per_lang" ->
-      """WITH tok AS (
-        |  SELECT lang, unnest(string_split_regex(lower(text), '\s+')) AS term
-        |  FROM documents),
-        |tf AS (
-        |  SELECT lang, term, count(*) AS c FROM tok
-        |  WHERE term <> '' GROUP BY 1, 2),
-        |r AS (
-        |  SELECT lang, term, c,
-        |    row_number() OVER (PARTITION BY lang
-        |                       ORDER BY c DESC, term ASC) AS rk
-        |  FROM tf)
-        |SELECT lang, CAST(rk AS BIGINT) AS rk, term, CAST(c AS BIGINT) AS n
-        |FROM r WHERE rk <= 5 ORDER BY lang, rk""".stripMargin,
-
-    "x4_bigram_nll" ->
-      """WITH sc AS MATERIALIZED (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(lower(text), '\s+'),
-        |                x -> x <> '') AS w
-        |  FROM documents),
-        |st AS MATERIALIZED (
-        |  SELECT doc_id, w[pos + 1] AS w1, w[pos + 2] AS w2
-        |  FROM (SELECT doc_id, w, unnest(range(0, len(w) - 1)) AS pos
-        |        FROM sc WHERE len(w) >= 2)),
-        |pc AS MATERIALIZED (
-        |  SELECT w1, w2, count(*) AS cxy FROM st
-        |  WHERE doc_id % 2 = 0 GROUP BY 1, 2),
-        |px AS MATERIALIZED (
-        |  SELECT w1, count(*) AS cx FROM st
-        |  WHERE doc_id % 2 = 0 GROUP BY 1),
-        |vv AS (SELECT count(DISTINCT u.uw) AS v FROM (
-        |  SELECT unnest(w) AS uw FROM sc WHERE doc_id % 2 = 0) u),
-        |scored AS (
-        |  SELECT s.doc_id,
-        |    CASE
-        |      WHEN pc.cxy IS NOT NULL THEN
-        |        CAST(floor(ln((pc.cxy + 1.0) / CAST(px.cx + v AS DOUBLE))
-        |             * 1000000 + 0.5) AS BIGINT)
-        |      WHEN px.cx IS NOT NULL THEN
-        |        CAST(floor(ln(1.0 / CAST(px.cx + v AS DOUBLE))
-        |             * 1000000 + 0.5) AS BIGINT)
-        |      ELSE CAST(floor(ln(1.0 / CAST(v AS DOUBLE))
-        |             * 1000000 + 0.5) AS BIGINT)
-        |    END AS lp
-        |  FROM st s
-        |  LEFT JOIN pc ON s.w1 = pc.w1 AND s.w2 = pc.w2
-        |  LEFT JOIN px ON s.w1 = px.w1
-        |  CROSS JOIN vv
-        |  WHERE s.doc_id % 2 = 1),
-        |agg AS (
-        |  SELECT doc_id, count(*) AS n_bigrams, -sum(lp) AS nll_micro
-        |  FROM scored GROUP BY 1)
-        |SELECT d.doc_id,
-        |  CAST(coalesce(a.n_bigrams, 0) AS BIGINT) AS n_bigrams,
-        |  CAST(coalesce(a.nll_micro, 0) AS BIGINT) AS nll_micro
-        |FROM documents d LEFT JOIN agg a USING (doc_id)
-        |WHERE d.doc_id % 2 = 1 ORDER BY d.doc_id""".stripMargin,
-
-    // Full-pipeline replay: the boilerplate CTEs (same as
-    // x3_boilerplate_scrub) feed quality, global dedup, and the
-    // per-source census — one SQL chain per pipeline stage.
-    "pipeline_curation_census" ->
-      """WITH src AS (
-        |  SELECT doc_id, source,
-        |    CASE WHEN doc_id % 25 = 0 THEN
-        |      'alpha beta gamma delta epsilon zeta eta theta iota ' ||
-        |      'kappa lambda mu nu xi omicron pi rho sigma tau upsilon phi chi'
-        |    ELSE text END AS body
-        |  FROM documents),
-        |lined AS MATERIALIZED (
-        |  SELECT doc_id, source,
-        |    concat_ws(chr(10),
-        |      'hdr ' || source,
-        |      substr(body, 1, 60),
-        |      CASE WHEN doc_id % 3 = 0 THEN 'promo ' || source END,
-        |      substr(body, 61, 60),
-        |      'foot ' || CAST(doc_id % 7 AS VARCHAR)) AS text
-        |  FROM src),
-        |l AS MATERIALIZED (
-        |  SELECT doc_id, source, pos, ls[pos + 1] AS line
-        |  FROM (SELECT doc_id, source, ls, unnest(range(0, len(ls))) AS pos
-        |        FROM (SELECT doc_id, source,
-        |                string_split(text, chr(10)) AS ls FROM lined))),
-        |boiler AS (
-        |  SELECT source, line FROM l GROUP BY source, line
-        |  HAVING count(DISTINCT doc_id) >= 5),
-        |kept AS (
-        |  SELECT l.doc_id, string_agg(l.line, chr(10) ORDER BY l.pos) AS clean_text
-        |  FROM l
-        |  WHERE NOT EXISTS (SELECT 1 FROM boiler b
-        |                    WHERE b.source = l.source AND b.line = l.line)
-        |  GROUP BY l.doc_id),
-        |tk AS MATERIALIZED (
-        |  SELECT lined.doc_id, lined.source,
-        |    coalesce(kept.clean_text, '') AS clean_text,
-        |    CAST(len(list_filter(string_split_regex(
-        |        coalesce(kept.clean_text, ''), '\s+'), x -> x <> ''))
-        |      AS BIGINT) AS n_tok
-        |  FROM lined LEFT JOIN kept USING (doc_id)),
-        |q AS MATERIALIZED (SELECT * FROM tk WHERE n_tok >= 20),
-        |u AS (SELECT clean_text, min(doc_id) AS doc_id FROM q GROUP BY 1),
-        |uq AS (SELECT q.source, q.n_tok FROM q JOIN u ON q.doc_id = u.doc_id),
-        |r AS (SELECT source, count(*) AS n_raw FROM lined GROUP BY 1),
-        |qq AS (SELECT source, count(*) AS n_quality FROM q GROUP BY 1),
-        |uu AS (SELECT source, count(*) AS n_unique,
-        |         sum(n_tok) AS tokens_unique FROM uq GROUP BY 1)
-        |SELECT r.source, CAST(n_raw AS BIGINT) AS n_raw,
-        |  CAST(coalesce(n_quality, 0) AS BIGINT) AS n_quality,
-        |  CAST(coalesce(n_unique, 0) AS BIGINT) AS n_unique,
-        |  CAST(coalesce(tokens_unique, 0) AS BIGINT) AS tokens_unique
-        |FROM r LEFT JOIN qq USING (source) LEFT JOIN uu USING (source)
-        |ORDER BY source""".stripMargin,
-
-    // Expected strings constructed from the Unicode standard's own
-    // mappings (U+0065 U+0301 → U+00E9, U+2460 → '1', U+FB01 → 'fi',
-    // …) — no normalizer runs on the oracle side.
-    "x4_unicode_normalize" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    'cafe' || chr(769) || ' A' || chr(778) || ' ' || chr(9312) ||
-        |      chr(9333) || ' ' || chr(64257) || 'n ' || substr(text, 1, 40) AS raw,
-        |    'caf' || chr(233) || ' ' || chr(197) || ' ' || chr(9312) ||
-        |      chr(9333) || ' ' || chr(64257) || 'n ' || substr(text, 1, 40) AS nfc,
-        |    'caf' || chr(233) || ' ' || chr(197) ||
-        |      ' 1(2) fin ' || substr(text, 1, 40) AS nfkc
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(length(raw) AS BIGINT) AS len_raw,
-        |  CAST(length(nfc) AS BIGINT) AS len_nfc,
-        |  md5(nfc) AS nfc_md5,
-        |  CAST(length(nfkc) AS BIGINT) AS len_nfkc,
-        |  md5(nfkc) AS nfkc_md5
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // The oracle computes host/domain straight from the URL-planting
-    // formula — Spark's parse_url must agree or counts shift.
-    // Closed-form expected canonical URLs — derived independently of
-    // the canonicalizer (lowercased scheme+host, default port dropped,
-    // 8443 kept, path defaulted to /, utm_* gone, params sorted).
-    "x4_url_canonicalize" ->
-      """SELECT doc_id,
-        |  CASE CAST(doc_id % 4 AS INTEGER)
-        |    WHEN 0 THEN 'http://www.site' || (doc_id % 20) ||
-        |      '.com/Path' || (doc_id % 7) || '?a=' || (doc_id % 5) || '&b=2'
-        |    WHEN 1 THEN 'https://example' || (doc_id % 20) || '.org/'
-        |    WHEN 2 THEN 'http://host' || (doc_id % 20) ||
-        |      '.net/a/b?y=' || (doc_id % 3) || '&z=1'
-        |    ELSE 'https://cdn' || (doc_id % 20) || '.io:8443/x?a=1'
-        |  END AS canon_url
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // The oracle builds the SAME planted original (replace e → é) and
-    // hashes it; booleans pinned after measuring.
-    "x4_fix_mojibake" ->
-      """SELECT doc_id, md5(replace(text, 'e', 'é')) AS repaired_md5,
-        |  TRUE AS repair_roundtrips, TRUE AS clean_passthrough
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "x4_url_domains" ->
-      """WITH u AS (
-        |  SELECT doc_id,
-        |    'w' || CAST(doc_id % 37 AS VARCHAR) || '.example' ||
-        |      CAST(doc_id % 3 AS VARCHAR) || '.com' AS host,
-        |    'example' || CAST(doc_id % 3 AS VARCHAR) || '.com' AS domain
-        |  FROM documents)
-        |SELECT domain, count(*) AS n_docs,
-        |  CAST(count(DISTINCT host) AS BIGINT) AS n_hosts
-        |FROM u GROUP BY domain ORDER BY domain""".stripMargin,
-
-    // Generic PSL matching replayed in SQL: candidates are trailing-
-    // label strings (exact + wildcard form), exception rules prevail
-    // via the +64 score band, else most labels, default suffix = last
-    // label. Rule VALUES list the builtin-subset rules reachable by
-    // the planted hosts (absent rules can never match, so equality is
-    // unaffected).
-    "x4_url_domains_psl" ->
-      """WITH docs AS (
-        |  SELECT doc_id,
-        |    CASE CAST(doc_id % 7 AS INT)
-        |      WHEN 0 THEN 'shop' || CAST(doc_id % 5 AS VARCHAR) || '.example.com'
-        |      WHEN 1 THEN 'news' || CAST(doc_id % 5 AS VARCHAR) || '.bbc.co.uk'
-        |      WHEN 2 THEN 'u' || CAST(doc_id % 5 AS VARCHAR) || '.github.io'
-        |      WHEN 3 THEN 'www.ck'
-        |      WHEN 4 THEN 'x' || CAST(doc_id % 5 AS VARCHAR) || '.foo.ck'
-        |      WHEN 5 THEN 'portal.city.kawasaki.jp'
-        |      ELSE 'co.uk' END AS host
-        |  FROM documents),
-        |lab AS (
-        |  SELECT host, string_split(host, '.') AS labs,
-        |    len(string_split(host, '.')) AS n
-        |  FROM (SELECT DISTINCT host FROM docs)),
-        |rules(key, typ, eff) AS (VALUES
-        |  ('com','n',1), ('uk','n',1), ('co.uk','n',2), ('io','n',1),
-        |  ('github.io','n',2), ('ck','n',1), ('*.ck','w',2),
-        |  ('www.ck','e',1), ('jp','n',1), ('*.kawasaki.jp','w',3),
-        |  ('city.kawasaki.jp','e',2)),
-        |cand AS (
-        |  SELECT l.host, l.n, t.k,
-        |    array_to_string(l.labs[l.n - t.k + 1 : l.n], '.') AS exact_form,
-        |    CASE WHEN t.k >= 2 THEN '*.' ||
-        |      array_to_string(l.labs[l.n - t.k + 2 : l.n], '.') END AS wild_form
-        |  FROM lab l CROSS JOIN (SELECT unnest([1, 2, 3, 4]) AS k) t
-        |  WHERE t.k <= l.n),
-        |m AS (
-        |  SELECT c.host,
-        |    max(CASE WHEN r.typ = 'e' THEN r.eff + 64 ELSE r.eff END) AS score
-        |  FROM cand c JOIN rules r
-        |    ON (r.typ IN ('n','e') AND r.key = c.exact_form)
-        |    OR (r.typ = 'w' AND r.key = c.wild_form)
-        |  GROUP BY c.host),
-        |res AS (
-        |  SELECT l.host,
-        |    CASE WHEN l.n > coalesce(m.score % 64, 1)
-        |      THEN array_to_string(
-        |        l.labs[l.n - coalesce(m.score % 64, 1) : l.n], '.')
-        |      ELSE '(none)' END AS domain
-        |  FROM lab l LEFT JOIN m ON l.host = m.host)
-        |SELECT domain, count(*) AS n_docs,
-        |  CAST(count(DISTINCT d.host) AS BIGINT) AS n_hosts
-        |FROM docs d JOIN res ON d.host = res.host
-        |GROUP BY domain ORDER BY domain""".stripMargin,
-
-    "x4_tfidf_top_terms" ->
-      """WITH words AS (
-        |  SELECT doc_id, unnest(string_split_regex(lower(text), '\s+')) AS term
-        |  FROM documents WHERE doc_id < 50),
-        |tf AS (
-        |  SELECT doc_id, term, count(*) AS tf FROM words
-        |  WHERE length(term) >= 4 GROUP BY doc_id, term),
-        |df AS (SELECT term, count(*) AS df FROM tf GROUP BY term),
-        |n AS (SELECT count(*) AS n_docs FROM documents WHERE doc_id < 50),
-        |scored AS (
-        |  SELECT doc_id, tf.term AS term, tf, df,
-        |    round(tf * ln(CAST(n_docs AS DOUBLE) / df), 6) AS tfidf
-        |  FROM tf JOIN df ON tf.term = df.term CROSS JOIN n),
-        |ranked AS (
-        |  SELECT doc_id, term, tf, df, tfidf,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY doc_id
-        |      ORDER BY tfidf DESC, term ASC) AS BIGINT) AS rk
-        |  FROM scored)
-        |SELECT doc_id, term, tf, df, tfidf, rk FROM ranked
-        |WHERE rk <= 3 ORDER BY doc_id, rk""".stripMargin,
-
-    "x2_label_centroids" ->
-      """SELECT label, CAST(i - 1 AS BIGINT) AS pos,
-        | CAST(sum(CAST(floor(CAST(val AS DOUBLE) * 1e6) AS BIGINT)) AS BIGINT) AS sum_fp,
-        | count(*) AS n
-        |FROM (SELECT label, unnest(embedding) AS val,
-        |             unnest(generate_series(1, len(embedding))) AS i
-        |      FROM embeddings) u
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "x2_ann_projected" ->
-      """SELECT vec_id AS qid, true AS returned_le_k, true AS rk_dense,
-        |  true AS sims_exact, true AS recall_floor_met
-        |FROM embeddings WHERE vec_id % 100 = 0
-        |  AND ((vec_id % 1000003 + 7) * 2654435761)
-        |      % 2147483647 % 1000000
-        |    < 30000000000 // GREATEST(
-        |        (SELECT count(*) FROM embeddings), 30000)
-        |ORDER BY qid""".stripMargin,
-
-    "x2_random_projection" ->
-      """WITH p AS (SELECT unnest(generate_series(0, 7)) AS pos),
-        |c AS (
-        |  SELECT e.vec_id, p.pos,
-        |    list_sum(list_transform(generate_series(1, len(e.embedding)),
-        |      i -> CAST(e.embedding[i] AS DOUBLE) *
-        |        (CASE ((i - 1) * 7 + p.pos * 13) % 6
-        |           WHEN 0 THEN 1.0 WHEN 1 THEN -1.0 ELSE 0.0 END))) AS comp
-        |  FROM embeddings e, p)
-        |SELECT vec_id, CAST(pos AS BIGINT) AS pos,
-        |  round(coalesce(comp, 0.0), 6) AS comp
-        |FROM c ORDER BY vec_id, pos""".stripMargin,
-
-    "x1_semdedup" ->
-      """WITH v AS (
-        |  SELECT vec_id, embedding,
-        |    list_sum(list_transform(generate_series(1, len(embedding)),
-        |      i -> embedding[i] * embedding[i])) AS nrm
-        |  FROM embeddings),
-        |c AS (SELECT vec_id AS cid, embedding AS ce, nrm AS cn
-        |      FROM v WHERE vec_id % 50 = 0),
-        |sim AS (
-        |  SELECT v.vec_id, c.cid,
-        |    list_sum(list_transform(generate_series(1, len(v.embedding)),
-        |      i -> v.embedding[i] * c.ce[i])) / (sqrt(v.nrm) * sqrt(c.cn)) AS s
-        |  FROM v, c),
-        |asg AS (
-        |  SELECT vec_id, cid AS cluster_id FROM (
-        |    SELECT vec_id, cid,
-        |      ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY s DESC, cid ASC) AS rk
-        |    FROM sim) WHERE rk = 1),
-        |dr AS (
-        |  SELECT DISTINCT b.vec_id AS dropped
-        |  FROM asg a JOIN asg b ON a.cluster_id = b.cluster_id AND a.vec_id < b.vec_id
-        |  JOIN v va ON va.vec_id = a.vec_id
-        |  JOIN v vb ON vb.vec_id = b.vec_id
-        |  WHERE list_sum(list_transform(generate_series(1, len(va.embedding)),
-        |          i -> va.embedding[i] * vb.embedding[i]))
-        |        / (sqrt(va.nrm) * sqrt(vb.nrm)) >= 0.35)
-        |SELECT a.vec_id, a.cluster_id, (d.dropped IS NULL) AS is_kept
-        |FROM asg a LEFT JOIN dr d ON a.vec_id = d.dropped
-        |ORDER BY a.vec_id""".stripMargin,
-
-    "dq_audit_orders" ->
-      """SELECT 'row_count' AS check_name, count(*) AS n FROM orders
-        |UNION ALL SELECT 'dup_o_orderkey', count(*) - count(DISTINCT o_orderkey) FROM orders
-        |UNION ALL SELECT 'null_o_custkey', count(*) FILTER (WHERE o_custkey IS NULL) FROM orders
-        |UNION ALL SELECT 'null_o_orderdate', count(*) FILTER (WHERE o_orderdate IS NULL) FROM orders
-        |UNION ALL SELECT 'neg_o_totalprice', count(*) FILTER (WHERE o_totalprice < 0) FROM orders
-        |UNION ALL SELECT 'orphan_o_custkey', count(*) FROM orders o
-        |  WHERE NOT EXISTS (SELECT 1 FROM customer c WHERE c.c_custkey = o.o_custkey)
-        |ORDER BY check_name""".stripMargin,
-
-    "stream_dedup_counts" ->
-      """SELECT event_type, count(DISTINCT event_id) AS n
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "ts_daily_gapfill" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS d FROM events WHERE user_id < 50),
-        |span AS (SELECT user_id, min(d) AS d0, max(d) AS d1 FROM ev GROUP BY user_id),
-        |days AS (SELECT user_id, CAST(unnest(generate_series(d0, d1, INTERVAL 1 DAY)) AS DATE) AS day
-        |         FROM span),
-        |counts AS (SELECT user_id, d AS day, count(*) AS n FROM ev GROUP BY 1, 2)
-        |SELECT d.user_id, d.day, COALESCE(c.n, 0) AS n
-        |FROM days d LEFT JOIN counts c ON d.user_id = c.user_id AND d.day = c.day
-        |ORDER BY 1, 2""".stripMargin,
-
-    "ts_forward_fill" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id, ts,
-        |    CASE WHEN event_type = 'click' THEN NULL ELSE value END AS value
-        |  FROM events WHERE user_id < 50)
-        |SELECT event_id, user_id, value,
-        |  round(last_value(value IGNORE NULLS) OVER (
-        |    PARTITION BY user_id ORDER BY ts, event_id
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6) AS value_filled
-        |FROM ev ORDER BY event_id""".stripMargin,
-
-    "ts_interpolate" ->
-      """WITH ev AS (
-        |  SELECT event_id, user_id, ts,
-        |    CASE WHEN event_type = 'click' THEN NULL ELSE value END AS value
-        |  FROM events WHERE user_id < 50),
-        |f AS (
-        |  SELECT event_id, user_id, value, epoch_us(ts) AS t,
-        |    last_value(value IGNORE NULLS) OVER w_back AS pv,
-        |    last_value(CASE WHEN value IS NOT NULL THEN epoch_us(ts) END IGNORE NULLS)
-        |      OVER w_back AS pt,
-        |    first_value(value IGNORE NULLS) OVER w_fwd AS nv,
-        |    first_value(CASE WHEN value IS NOT NULL THEN epoch_us(ts) END IGNORE NULLS)
-        |      OVER w_fwd AS nt
-        |  FROM ev
-        |  WINDOW
-        |    w_back AS (PARTITION BY user_id ORDER BY ts, event_id
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |    w_fwd AS (PARTITION BY user_id ORDER BY ts, event_id
-        |              ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT event_id, user_id, value,
-        |  round(CASE WHEN value IS NOT NULL THEN value
-        |             WHEN pt = nt THEN pv
-        |             ELSE pv + (nv - pv) * (CAST(t - pt AS DOUBLE) / CAST(nt - pt AS DOUBLE))
-        |        END, 6) AS value_interp
-        |FROM f ORDER BY event_id""".stripMargin,
-
-    "ts_ewma_gaps" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS t,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events WHERE user_id < 40),
-        |r AS (
-        |  SELECT b.user_id, b.event_id, b.t, b.rn,
-        |    b.t - a.t AS gap_micros, b.t - a.t AS ewma_micros,
-        |    FALSE AS is_lull
-        |  FROM e a JOIN e b ON a.user_id = b.user_id AND a.rn = 1 AND b.rn = 2
-        |  UNION ALL
-        |  SELECT n.user_id, n.event_id, n.t, n.rn,
-        |    n.t - r.t,
-        |    (n.t - r.t + 7 * r.ewma_micros) // 8,
-        |    n.t - r.t > 4 * r.ewma_micros
-        |  FROM r JOIN e n ON n.user_id = r.user_id AND n.rn = r.rn + 1)
-        |SELECT user_id, event_id,
-        |  CAST(gap_micros AS BIGINT) AS gap_micros,
-        |  CAST(ewma_micros AS BIGINT) AS ewma_micros, is_lull
-        |FROM r ORDER BY user_id, event_id""".stripMargin,
-
-    // Window-frame replay of the centered MA + per-phase seasonal
-    // means; `//` and `div` share trunc-toward-zero (negative detrended
-    // sums exercise it).
-    "ts_seasonal_decompose" ->
-      """WITH daily AS (
-        |  SELECT event_type,
-        |    CAST(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT)
-        |      AS day_num,
-        |    CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
-        |         AS BIGINT) AS v_cents
-        |  FROM events GROUP BY 1, 2),
-        |w AS (
-        |  SELECT *,
-        |    sum(v_cents) OVER (PARTITION BY event_type ORDER BY day_num
-        |      RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS t7,
-        |    count(v_cents) OVER (PARTITION BY event_type ORDER BY day_num
-        |      RANGE BETWEEN 3 PRECEDING AND 3 FOLLOWING) AS n7
-        |  FROM daily),
-        |tr AS (
-        |  SELECT *,
-        |    CASE WHEN n7 = 7 THEN (1000000 * t7) // 7 END AS trend_micro,
-        |    CASE WHEN n7 = 7 THEN 7 * v_cents - t7 END AS det7,
-        |    day_num % 7 AS phase
-        |  FROM w),
-        |se AS (
-        |  SELECT event_type, phase,
-        |    CAST((1000000 * sum(det7)) // (7 * count(det7)) AS BIGINT)
-        |      AS seasonal_micro
-        |  FROM tr WHERE det7 IS NOT NULL GROUP BY 1, 2)
-        |SELECT tr.event_type, tr.day_num, tr.v_cents,
-        |  CAST(tr.trend_micro AS BIGINT) AS trend_micro, se.seasonal_micro,
-        |  CAST(1000000 * tr.v_cents - tr.trend_micro - se.seasonal_micro
-        |       AS BIGINT) AS resid_micro
-        |FROM tr LEFT JOIN se ON tr.event_type = se.event_type
-        |  AND tr.phase = se.phase
-        |ORDER BY 1, 2""".stripMargin,
-
-    // Recursive replay of BOTH Holt recurrences; DuckDB's `//`
-    // truncates toward zero on every sign (measured: -7 // 2 = -3),
-    // exactly like Spark's `div` — the negative-trend cells certify it.
-    "ts_forecast_backtest" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT user_id, event_id,
-        |    CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS x,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events WHERE user_id < 40),
-        |r AS (
-        |  SELECT user_id, event_id, x, rn,
-        |    x AS l, CAST(0 AS BIGINT) AS b, CAST(NULL AS BIGINT) AS f
-        |  FROM e WHERE rn = 1
-        |  UNION ALL
-        |  SELECT n.user_id, n.event_id, n.x, n.rn,
-        |    (n.x + 3 * (r.l + r.b)) // 4,
-        |    (((n.x + 3 * (r.l + r.b)) // 4 - r.l) + 7 * r.b) // 8,
-        |    r.l + r.b
-        |  FROM r JOIN e n ON n.user_id = r.user_id AND n.rn = r.rn + 1)
-        |SELECT user_id, count(*) AS n_forecasts,
-        |  CAST(sum(abs(x - f)) // count(*) AS BIGINT) AS mae_micro,
-        |  CAST(max(abs(x - f)) AS BIGINT) AS worst_err_micro
-        |FROM r WHERE rn >= 2
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "pipeline_data_card" ->
-      """WITH t AS (
-        |  SELECT lang, source, text,
-        |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS nt,
-        |    CAST(length(text) AS BIGINT) AS nc,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                 'that','for','on','with','as','at','by','from')))
-        |      AS BIGINT) AS s
-        |  FROM documents),
-        |q AS (
-        |  SELECT *, CASE WHEN nt BETWEEN 5 AND 100000
-        |    AND (nc / greatest(nt, 1)) BETWEEN 1 AND 15
-        |    AND s * 50 >= nt THEN 1 ELSE 0 END AS isq FROM t)
-        |SELECT count(*) AS n_docs,
-        |  count(DISTINCT lang) AS n_langs,
-        |  count(DISTINCT source) AS n_sources,
-        |  CAST(sum(nt) AS BIGINT) AS total_tokens,
-        |  CAST(sum(nc) AS BIGINT) AS total_chars,
-        |  CAST(sum(isq) AS BIGINT) AS n_quality,
-        |  CAST(count(*) - count(DISTINCT text) AS BIGINT) AS n_exact_dups,
-        |  CAST((sum(isq) * 1000000) // count(*) AS BIGINT)
-        |    AS quality_rate_micro,
-        |  CAST((sum(nt) * 1000000) // count(*) AS BIGINT)
-        |    AS mean_tokens_micro
-        |FROM q""".stripMargin,
-
-    "ts_holt_trend" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT user_id, event_id,
-        |    CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS x,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-        |  FROM events WHERE user_id < 40),
-        |r AS (
-        |  SELECT user_id, event_id, x, rn,
-        |    x AS l, CAST(0 AS BIGINT) AS b, CAST(NULL AS BIGINT) AS f
-        |  FROM e WHERE rn = 1
-        |  UNION ALL
-        |  SELECT n.user_id, n.event_id, n.x, n.rn,
-        |    (n.x + 3 * (r.l + r.b)) // 4,
-        |    (((n.x + 3 * (r.l + r.b)) // 4 - r.l) + 7 * r.b) // 8,
-        |    r.l + r.b
-        |  FROM r JOIN e n ON n.user_id = r.user_id AND n.rn = r.rn + 1)
-        |SELECT user_id, event_id, x AS value_micro,
-        |  CAST(f AS BIGINT) AS forecast_micro,
-        |  CAST(l AS BIGINT) AS level_micro,
-        |  CAST(b AS BIGINT) AS trend_micro
-        |FROM r WHERE rn >= 2 ORDER BY user_id, event_id""".stripMargin,
-
-    "ts_business_day_lag" ->
-      """WITH j AS (
-        |  SELECT year(o_orderdate) AS y, month(o_orderdate) AS m,
-        |    date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) AS a,
-        |    date_diff('day', DATE '1970-01-01', CAST(l_shipdate AS DATE)) AS b
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |f AS (
-        |  SELECT y, m,
-        |    (5 * (b // 7) + [0,1,2,2,2,3,4][(b % 7) + 1])
-        |      - (5 * (a // 7) + [0,1,2,2,2,3,4][(a % 7) + 1]) AS bd
-        |  FROM j)
-        |SELECT CAST(y AS BIGINT) AS y, CAST(m AS BIGINT) AS m,
-        |  count(*) AS n, CAST(sum(bd) AS BIGINT) AS sum_bdays,
-        |  CAST(min(bd) AS BIGINT) AS min_bdays,
-        |  CAST(max(bd) AS BIGINT) AS max_bdays
-        |FROM f GROUP BY y, m ORDER BY y, m""".stripMargin,
-
-    "agg_weighted_median" ->
-      """WITH g AS (
-        |  SELECT lang, n_chars AS v,
-        |    sum(CAST(len(string_split_regex(text, '\s+')) AS BIGINT)) AS gw
-        |  FROM documents GROUP BY 1, 2),
-        |c AS (
-        |  SELECT lang, v, gw,
-        |    sum(gw) OVER (PARTITION BY lang ORDER BY v
-        |      ROWS UNBOUNDED PRECEDING) AS cumw
-        |  FROM g),
-        |t AS (SELECT lang, sum(gw) AS tw FROM g GROUP BY 1)
-        |SELECT c.lang, CAST(min(t.tw) AS BIGINT) AS total_weight,
-        |  min(CASE WHEN cumw * 100 >= tw * 50 THEN v END) AS p50_value,
-        |  min(CASE WHEN cumw * 100 >= tw * 90 THEN v END) AS p90_value
-        |FROM c JOIN t ON c.lang = t.lang
-        |GROUP BY c.lang ORDER BY c.lang""".stripMargin,
-
-    "window_rolling_variance" ->
-      """WITH daily AS (
-        |  SELECT o_orderpriority,
-        |    CAST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-        |      AS BIGINT) AS day_num,
-        |    sum(CAST(FLOOR(CAST(o_totalprice AS DECIMAL(18,2))) AS BIGINT))
-        |      AS v_dollars
-        |  FROM orders GROUP BY 1, 2),
-        |w AS (
-        |  SELECT o_orderpriority, day_num, v_dollars,
-        |    count(v_dollars) OVER fr AS n_w,
-        |    sum(v_dollars) OVER fr AS sum_w,
-        |    sum(v_dollars * v_dollars) OVER fr AS ss
-        |  FROM daily
-        |  WINDOW fr AS (PARTITION BY o_orderpriority ORDER BY day_num
-        |    RANGE BETWEEN 6 PRECEDING AND CURRENT ROW))
-        |SELECT o_orderpriority, day_num,
-        |  CAST(v_dollars AS BIGINT) AS v_dollars,
-        |  CAST(n_w AS BIGINT) AS n_w, CAST(sum_w AS BIGINT) AS sum_w,
-        |  CAST(n_w * ss - sum_w * sum_w AS BIGINT) AS var_num
-        |FROM w ORDER BY o_orderpriority, day_num""".stripMargin,
-
-    // Recursive-CTE replay of the CUSUM fold: emitted s± are
-    // post-update PRE-reset; the carried state applies the reset.
-    "ts_cusum_changepoints" ->
-      """WITH RECURSIVE wk AS (
-        |  SELECT o_orderpriority AS k,
-        |    CAST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE)) // 7
-        |      AS BIGINT) AS week_num,
-        |    sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) AS x
-        |  FROM orders GROUP BY 1, 2),
-        |st AS (SELECT k, sum(x) // count(*) AS mu FROM wk GROUP BY 1),
-        |e AS (
-        |  SELECT wk.k, week_num, x, mu, mu // 20 AS kp, mu // 2 AS h,
-        |    row_number() OVER (PARTITION BY wk.k ORDER BY week_num) AS rn
-        |  FROM wk JOIN st USING (k)),
-        |r AS (
-        |  SELECT k, week_num, x, mu, kp, h, rn,
-        |    greatest(0, x - mu - kp) AS sp, greatest(0, mu - kp - x) AS sn
-        |  FROM e WHERE rn = 1
-        |  UNION ALL
-        |  SELECT n.k, n.week_num, n.x, n.mu, n.kp, n.h, n.rn,
-        |    greatest(0, (CASE WHEN r.sp > r.h THEN 0 ELSE r.sp END)
-        |      + n.x - n.mu - n.kp),
-        |    greatest(0, (CASE WHEN r.sn > r.h THEN 0 ELSE r.sn END)
-        |      + n.mu - n.kp - n.x)
-        |  FROM r JOIN e n ON n.k = r.k AND n.rn = r.rn + 1)
-        |SELECT k AS o_orderpriority, week_num, CAST(x AS BIGINT) AS x,
-        |  CAST(sp AS BIGINT) AS s_pos, CAST(sn AS BIGINT) AS s_neg,
-        |  sp > h AS alarm_up, sn > h AS alarm_down
-        |FROM r ORDER BY o_orderpriority, week_num""".stripMargin,
-
-    "window_sliding_batch" ->
-      """SELECT ws AS window_start, event_type, count(*) AS n,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
-        |FROM (SELECT unnest([date_trunc('hour', ts),
-        |                    date_trunc('hour', ts) - INTERVAL 1 HOUR]) AS ws,
-        |             event_type, value
-        |      FROM events) t
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "agg_grouping_sets" ->
-      """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM orders
-        |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
-        |ORDER BY o_orderstatus ASC NULLS FIRST, o_orderpriority ASC NULLS FIRST""".stripMargin,
-
-    "agg_filtered_counts" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS y, count(*) AS n,
-        | count(*) FILTER (WHERE o_orderstatus = 'F') AS n_finished,
-        | count(*) FILTER (WHERE o_orderpriority LIKE '1%') AS n_urgent,
-        | CAST(sum(CAST(o_totalprice AS DECIMAL(18,2)))
-        |   FILTER (WHERE o_orderstatus = 'O') AS DOUBLE) AS open_price
-        |FROM orders GROUP BY 1 ORDER BY y""".stripMargin,
-
-    "join_full_outer_activity" ->
-      """WITH a AS (SELECT user_id, count(*) AS n_early FROM events
-        |           WHERE ts < TIMESTAMP '2024-01-15' GROUP BY user_id),
-        |     b AS (SELECT user_id, count(*) AS n_late FROM events
-        |           WHERE ts >= TIMESTAMP '2024-01-15' GROUP BY user_id)
-        |SELECT COALESCE(a.user_id, b.user_id) AS user_id,
-        |  COALESCE(n_early, 0) AS n_early, COALESCE(n_late, 0) AS n_late
-        |FROM a FULL OUTER JOIN b ON a.user_id = b.user_id
-        |ORDER BY user_id""".stripMargin,
-
-    "window_value_functions" ->
-      """SELECT o_custkey, o_orderkey,
-        | CAST(ntile(4) OVER w AS BIGINT) AS quartile,
-        | round(percent_rank() OVER w, 6) AS pct_rank,
-        | round(cume_dist() OVER w, 6) AS cdist,
-        | first_value(o_orderkey) OVER w AS biggest_order,
-        | last_value(o_orderkey) OVER (PARTITION BY o_custkey
-        |   ORDER BY o_totalprice DESC, o_orderkey ASC
-        |   ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING) AS smallest_order
-        |FROM orders
-        |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey ASC)
-        |ORDER BY o_custkey, o_orderkey""".stripMargin,
-
-    "q18_large_orders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey,
-        |    CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS total_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 300)
-        |SELECT c_custkey, c_name, o_orderkey, o_totalprice, total_qty
-        |FROM orders JOIN big ON o_orderkey = l_orderkey
-        |JOIN customer ON o_custkey = c_custkey
-        |ORDER BY total_qty DESC, o_orderkey ASC""".stripMargin,
-
-    "q19_disjunctive_filter" ->
-      """SELECT
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2)) * (CAST(1 AS DECIMAL(18,2)) - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE) AS revenue,
-        | count(*) AS n_lines
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15 AND l_quantity BETWEEN 1 AND 11)
-        |   OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 20)
-        |   OR (p_brand = 'Brand#3' AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 30)""".stripMargin,
-
-    "sql_correlated_scalar" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders o
-        |WHERE CAST(o_totalprice AS DECIMAL(18,2)) *
-        |      (SELECT count(*) FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        |    > 2 * (SELECT CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DECIMAL(38,2))
-        |           FROM orders o3 WHERE o3.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "sql_q21_sole_blame" ->
-      """SELECT s_name, count(*) AS numwait
-        |FROM supplier, lineitem l1, orders
-        |WHERE s_suppkey = l1.l_suppkey
-        |  AND o_orderkey = l1.l_orderkey
-        |  AND o_orderstatus = 'F'
-        |  AND l1.l_returnflag = 'R'
-        |  AND EXISTS (SELECT 1 FROM lineitem l2
-        |              WHERE l2.l_orderkey = l1.l_orderkey
-        |                AND l2.l_suppkey <> l1.l_suppkey)
-        |  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-        |                  WHERE l3.l_orderkey = l1.l_orderkey
-        |                    AND l3.l_suppkey <> l1.l_suppkey
-        |                    AND l3.l_returnflag = 'R')
-        |GROUP BY s_name
-        |ORDER BY numwait DESC, s_name
-        |LIMIT 20""".stripMargin,
-
-    "sql_q22_idle_balance" ->
-      """SELECT c_mktsegment AS segment, count(*) AS numcust,
-        |  CAST(sum(CAST(c_acctbal AS DECIMAL(18,2))) AS DOUBLE) AS totacctbal
-        |FROM customer
-        |WHERE CAST(c_acctbal AS DECIMAL(18,2)) >
-        |      (SELECT CAST(avg(CAST(c_acctbal AS DECIMAL(18,2))) AS DECIMAL(18,6))
-        |       FROM customer WHERE c_acctbal > 0)
-        |  AND NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey
-        |                  AND o_orderdate >= TIMESTAMP '2000-01-01')
-        |GROUP BY c_mktsegment
-        |ORDER BY segment""".stripMargin,
-
-    "sql_q16_supplier_cnt" ->
-      """SELECT p_brand, p_size, count(DISTINCT l_suppkey) AS supplier_cnt
-        |FROM lineitem JOIN part ON p_partkey = l_partkey
-        |WHERE p_brand <> 'Brand#13'
-        |  AND p_size IN (1, 4, 9, 14, 19, 23, 36, 45)
-        |  AND l_suppkey NOT IN
-        |      (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-        |GROUP BY p_brand, p_size
-        |ORDER BY supplier_cnt DESC, p_brand, p_size""".stripMargin,
-
-    "sql_q20_volume_suppliers" ->
-      """SELECT s_name, CAST(round(s_acctbal * 100) AS BIGINT) AS acctbal_cents
-        |FROM supplier
-        |WHERE s_suppkey IN (
-        |    SELECT l_suppkey FROM lineitem
-        |    WHERE l_partkey IN
-        |        (SELECT p_partkey FROM part WHERE p_name LIKE 'red%')
-        |      AND l_shipdate >= TIMESTAMP '1996-01-01'
-        |      AND l_shipdate < TIMESTAMP '1998-01-01'
-        |    GROUP BY l_suppkey
-        |    HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 50)
-        |  AND s_nationkey IN (
-        |    SELECT n_nationkey FROM nation
-        |    WHERE n_regionkey IN
-        |        (SELECT r_regionkey FROM region WHERE r_name = 'ASIA'))
-        |ORDER BY s_name""".stripMargin,
-
-    "sql_intdiv_semantics" ->
-      """SELECT l_orderkey, l_linenumber,
-        |  CAST(l_quantity AS BIGINT) - 25 AS x,
-        |  (CAST(l_quantity AS BIGINT) - 25) // 7 AS x_div,
-        |  (CAST(l_quantity AS BIGINT) - 25) % 7 AS x_mod,
-        |  ((CAST(l_quantity AS BIGINT) - 25) % 7 + 7) % 7 AS x_pmod
-        |FROM lineitem WHERE l_orderkey <= 200
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    // Direct aggregation of the SOURCE table — hash equality proves
-    // the fixed-width round trip lost nothing.
-    "fixedwidth_roundtrip_load" ->
-      """SELECT event_type, count(*) AS n,
-        |  CAST(sum(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT))
-        |       AS BIGINT) AS cents,
-        |  CAST(count(DISTINCT user_id) AS BIGINT) AS users
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Window-form replay (DuckDB also speaks LATERAL, but the window
-    // form is the independent phrasing — agreement certifies the
-    // decorrelation, not a shared code path).
-    "sql_lateral_topn_orders" ->
-      """SELECT c_custkey, o_orderkey, o_totalprice FROM (
-        |  SELECT o_custkey AS c_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |                       ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        |  FROM orders WHERE o_custkey <= 200)
-        |WHERE rk <= 2
-        |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin,
-
-    "sql_recursive_tree" ->
-      """WITH RECURSIVE chain AS (
-        |  SELECT c_custkey AS k, c_custkey AS root, 0 AS depth
-        |  FROM customer WHERE c_custkey <= 9
-        |  UNION ALL
-        |  SELECT c.c_custkey, chain.root, chain.depth + 1
-        |  FROM customer c JOIN chain ON c.c_custkey // 10 = chain.k
-        |  WHERE c.c_custkey >= 10
-        |)
-        |SELECT depth, count(*) AS n, CAST(sum(k) AS BIGINT) AS sum_k,
-        |  CAST(sum(root) AS BIGINT) AS sum_root
-        |FROM chain GROUP BY depth ORDER BY depth""".stripMargin,
-
-    "sql_listagg_nations" ->
-      """SELECT r_name, string_agg(n_name, ',' ORDER BY n_name) AS nations
-        |FROM nation JOIN region ON n_regionkey = r_regionkey
-        |GROUP BY r_name ORDER BY r_name""".stripMargin,
-
-    "sql_lateral_topn" ->
-      """SELECT n_name, c.c_custkey,
-        |  CAST(round(c.c_acctbal * 100) AS BIGINT) AS acctbal_cents
-        |FROM nation, LATERAL (
-        |  SELECT c_custkey, c_acctbal
-        |  FROM customer
-        |  WHERE c_nationkey = n_nationkey
-        |  ORDER BY c_acctbal DESC, c_custkey
-        |  LIMIT 2) c
-        |ORDER BY n_name, c_acctbal DESC, c_custkey""".stripMargin,
-
-    "asof_forward_conversion" ->
-      """WITH s AS (
-        |  SELECT event_id AS signup_id, user_id, ts AS signup_ts
-        |  FROM events WHERE event_type = 'signup'),
-        |p AS (
-        |  SELECT user_id, ts AS p_ts, event_id AS p_id
-        |  FROM events WHERE event_type = 'purchase'),
-        |t AS (
-        |  SELECT s.signup_id, s.user_id, s.signup_ts,
-        |    min(p.p_ts) AS next_purchase_ts
-        |  FROM s JOIN p ON s.user_id = p.user_id AND p.p_ts >= s.signup_ts
-        |  GROUP BY 1, 2, 3)
-        |SELECT t.signup_id, t.user_id, t.signup_ts, t.next_purchase_ts,
-        |  min(p.p_id) AS next_purchase_id
-        |FROM t JOIN p ON t.user_id = p.user_id AND p.p_ts = t.next_purchase_ts
-        |GROUP BY 1, 2, 3, 4
-        |ORDER BY t.signup_id""".stripMargin,
-
-    "batch_session_window" ->
-      """WITH o AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR ts - LAG(ts) OVER w >= INTERVAL 30 MINUTE
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-        |    ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM o)
-        |SELECT user_id, min(ts) AS session_start,
-        |  max(ts) + INTERVAL 30 MINUTE AS session_end,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
-
-    "batch_sessionize" ->
-      """WITH o AS (
-        |  SELECT user_id, ts, value,
-        |    CASE WHEN LAG(ts) OVER w IS NULL
-        |           OR ts - LAG(ts) OVER w >= INTERVAL 30 MINUTE
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM events
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT *, SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts
-        |    ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM o)
-        |SELECT user_id, min(ts) AS session_start,
-        |  max(ts) + INTERVAL 30 MINUTE AS session_end,
-        |  count(*) AS n_events,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, session_start""".stripMargin,
-
-    "pipeline_corpus_to_shards" ->
-      """WITH t AS (
-        |  SELECT doc_id, text,
-        |    CAST(len(string_split_regex(text, '\s+')) AS BIGINT) AS n_tokens,
-        |    CAST(length(text) AS BIGINT) AS n_chars,
-        |    CAST(len(list_filter(string_split_regex(lower(text), '\s+'),
-        |      w -> w IN ('the','a','an','and','or','of','to','in','is','it',
-        |                 'that','for','on','with','as','at','by','from'))) AS BIGINT) AS n_stopwords
-        |  FROM documents),
-        |g AS (
-        |  SELECT * FROM t
-        |  WHERE n_tokens BETWEEN 5 AND 100000
-        |    AND (n_chars / greatest(n_tokens, 1)) BETWEEN 1 AND 15
-        |    AND n_stopwords * 50 >= n_tokens),
-        |k AS (SELECT min(doc_id) AS doc_id FROM g GROUP BY sha256(text)),
-        |w AS (SELECT g.doc_id, g.n_tokens FROM g JOIN k ON g.doc_id = k.doc_id),
-        |sh AS (
-        |  SELECT doc_id, n_tokens,
-        |    CAST(floor((sum(n_tokens) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING)
-        |      - n_tokens) / 2000.0) AS BIGINT) AS shard
-        |  FROM w)
-        |SELECT shard, count(*) AS n_docs,
-        |  CAST(sum(n_tokens) AS BIGINT) AS total_tokens
-        |FROM sh GROUP BY shard ORDER BY shard""".stripMargin,
-
-    "agg_share_of_total" ->
-      """WITH r AS (
-        |  SELECT o_orderpriority,
-        |    sum(CAST(o_totalprice AS DECIMAL(18,2))) AS rev
-        |  FROM orders GROUP BY 1),
-        |t AS (SELECT CAST(sum(rev) AS DOUBLE) AS tot FROM r)
-        |SELECT o_orderpriority, CAST(rev AS DOUBLE) AS revenue,
-        |  round(CAST(rev AS DOUBLE) / tot, 6) AS share
-        |FROM r, t ORDER BY o_orderpriority""".stripMargin,
-
-    "window_topk_typed" ->
-      """WITH r AS (
-        |  SELECT o_custkey, o_orderkey, o_totalprice,
-        |    row_number() OVER (PARTITION BY o_custkey
-        |      ORDER BY o_totalprice DESC, o_orderkey) AS rk
-        |  FROM orders)
-        |SELECT o_custkey, rk, o_orderkey, o_totalprice AS price
-        |FROM r WHERE rk <= 3 ORDER BY o_custkey, rk""".stripMargin,
-
-    "x3_decontaminate_embed" ->
-      """WITH ev AS (SELECT embedding FROM embeddings WHERE vec_id % 40 = 0),
-        |co AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 40 <> 0),
-        |p AS (
-        |  SELECT co.vec_id,
-        |    max(list_sum(list_transform(list_zip(co.embedding, ev.embedding),
-        |          x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-        |      / (sqrt(list_sum(list_transform(co.embedding, v -> CAST(v AS DOUBLE) * v)))
-        |       * sqrt(list_sum(list_transform(ev.embedding, v -> CAST(v AS DOUBLE) * v))))) AS mc
-        |  FROM co, ev GROUP BY 1)
-        |SELECT vec_id, round(mc, 5) AS max_cos
-        |FROM p WHERE mc >= 0.35 ORDER BY vec_id""".stripMargin,
-
-    "join_bloom_semi" ->
-      """SELECT l_orderkey, l_linenumber, l_suppkey
-        |FROM lineitem
-        |WHERE l_suppkey IN
-        |  (SELECT s_suppkey FROM supplier WHERE s_acctbal < 1000)
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "agg_stats_moments" ->
-      """WITH m AS (
-        |  SELECT event_type, count(*) AS n,
-        |    sum(CAST(value AS DECIMAL(18,2))) AS sy,
-        |    sum(CAST(value AS DECIMAL(18,2)) * CAST(value AS DECIMAL(18,2))) AS syy,
-        |    sum(epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000) AS sx,
-        |    sum((epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000)
-        |      * (epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000)) AS sxx,
-        |    sum(CAST(value AS DECIMAL(18,2))
-        |      * (epoch_us(CAST(ts AS TIMESTAMP)) // 86400000000)) AS sxy
-        |  FROM events GROUP BY 1)
-        |SELECT event_type, n,
-        |  round(CAST(sy AS DOUBLE) / CAST(n AS DOUBLE), 6) AS mean_v,
-        |  round(sqrt((CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1))), 6) AS sd_v,
-        |  round((CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE))
-        |    / sqrt((CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |      * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |        - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))), 6) AS corr_day
-        |FROM m ORDER BY event_type""".stripMargin,
-
-    "dq_drift_lang" ->
-      """WITH b AS (SELECT lang, count(*) AS n_base FROM documents GROUP BY 1),
-        |c AS (SELECT lang, count(*) AS n_cur FROM documents
-        |      WHERE n_chars >= 300 GROUP BY 1),
-        |t AS (SELECT (SELECT CAST(sum(n_base) AS DOUBLE) FROM b) AS tb,
-        |             (SELECT CAST(sum(n_cur) AS DOUBLE) FROM c) AS tc)
-        |SELECT COALESCE(b.lang, c.lang) AS lang,
-        |  COALESCE(n_base, 0) AS n_base, COALESCE(n_cur, 0) AS n_cur,
-        |  round((COALESCE(n_base, 0) / tb - COALESCE(n_cur, 0) / tc)
-        |    * ln((COALESCE(n_base, 0) / tb + 1e-6)
-        |        / (COALESCE(n_cur, 0) / tc + 1e-6)), 6) AS psi
-        |FROM b FULL OUTER JOIN c ON b.lang = c.lang, t
-        |ORDER BY lang""".stripMargin,
-
-    // identical seeded Laplace draw: portable multiplicative hash →
-    // u in (0,1) → inverse CDF at sensitivity 1 / epsilon 0.5
-    "dq_dp_counts" ->
-      """WITH c AS (
-        |  SELECT lang,
-        |    ascii(substring(lang, 1, 1)) * 100 +
-        |      ascii(substring(lang, 2, 1)) AS gk,
-        |    count(*) AS n_true
-        |  FROM documents GROUP BY 1, 2),
-        |n AS (
-        |  SELECT lang, n_true,
-        |    (CAST(((gk % 1000003 + 42) * 2654435761) % 2147483647 % 1000000
-        |       AS DOUBLE) + 0.5) / 1000000.0 AS u
-        |  FROM c)
-        |SELECT lang, n_true,
-        |  round(n_true + (-sign(u - 0.5) * ln(1.0 - 2.0 * abs(u - 0.5))
-        |    / 0.5), 6) AS n_noised
-        |FROM n ORDER BY lang""".stripMargin,
-
-    "interval_overlap_clicks" ->
-      """SELECT l.event_id AS click_id, r.event_id AS view_id
-        |FROM events l JOIN events r ON l.user_id = r.user_id
-        |WHERE l.event_type = 'click' AND r.event_type = 'view'
-        |  AND l.ts <= r.ts + INTERVAL 30 MINUTE
-        |  AND r.ts <= l.ts + INTERVAL 30 MINUTE
-        |ORDER BY click_id, view_id""".stripMargin,
-
-    "events_funnel_windowed" ->
-      """WITH v AS (
-        |  SELECT user_id, min(ts) AS tv FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |c AS (
-        |  SELECT e.user_id, min(e.ts) AS tc FROM events e
-        |  JOIN v ON v.user_id = e.user_id
-        |  WHERE e.event_type = 'click' AND e.ts > v.tv
-        |    AND e.ts <= v.tv + INTERVAL 1 DAY GROUP BY 1),
-        |p AS (
-        |  SELECT e.user_id, min(e.ts) AS tp FROM events e
-        |  JOIN c ON c.user_id = e.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts > c.tc
-        |    AND e.ts <= c.tc + INTERVAL 1 DAY GROUP BY 1)
-        |SELECT stage, n FROM (
-        |  SELECT 'step1_view' AS stage, (SELECT count(*) FROM v) AS n
-        |  UNION ALL
-        |  SELECT 'step2_click', (SELECT count(*) FROM c)
-        |  UNION ALL
-        |  SELECT 'step3_purchase', (SELECT count(*) FROM p))
-        |ORDER BY stage""".stripMargin,
-
-    // same relational replay as the fold twin — the two Spark forms and
-    // this SQL must agree three ways
-    "events_funnel_relational" ->
-      """WITH v AS (
-        |  SELECT user_id, min(ts) AS tv FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |c AS (
-        |  SELECT e.user_id, min(e.ts) AS tc FROM events e
-        |  JOIN v ON v.user_id = e.user_id
-        |  WHERE e.event_type = 'click' AND e.ts > v.tv
-        |    AND e.ts <= v.tv + INTERVAL 1 DAY GROUP BY 1),
-        |p AS (
-        |  SELECT e.user_id, min(e.ts) AS tp FROM events e
-        |  JOIN c ON c.user_id = e.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts > c.tc
-        |    AND e.ts <= c.tc + INTERVAL 1 DAY GROUP BY 1)
-        |SELECT stage, n FROM (
-        |  SELECT 'step1_view' AS stage, (SELECT count(*) FROM v) AS n
-        |  UNION ALL
-        |  SELECT 'step2_click', (SELECT count(*) FROM c)
-        |  UNION ALL
-        |  SELECT 'step3_purchase', (SELECT count(*) FROM p))
-        |ORDER BY stage""".stripMargin,
-
-    "events_survival_hazard" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |    max(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)))
-        |      - min(date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)))
-        |      AS span
-        |  FROM events WHERE event_type = 'purchase' GROUP BY 1),
-        |sp AS (SELECT span, count(*) AS n_churned FROM u GROUP BY 1),
-        |r AS (
-        |  SELECT span, n_churned,
-        |    sum(n_churned) OVER (ORDER BY span DESC
-        |      ROWS UNBOUNDED PRECEDING) AS n_at_risk
-        |  FROM sp)
-        |SELECT CAST(span AS BIGINT) AS span,
-        |  CAST(n_at_risk AS BIGINT) AS n_at_risk, n_churned,
-        |  CAST((n_churned * 1000000) // n_at_risk AS BIGINT) AS hazard_micro
-        |FROM r ORDER BY span""".stripMargin,
-
-    "events_funnel_stages" ->
-      """WITH v AS (
-        |  SELECT user_id, min(ts) AS t_view FROM events
-        |  WHERE event_type = 'view' GROUP BY 1),
-        |c AS (
-        |  SELECT e.user_id, min(e.ts) AS t_click FROM events e
-        |  JOIN v ON e.user_id = v.user_id AND e.ts > v.t_view
-        |  WHERE e.event_type = 'click' GROUP BY 1),
-        |p AS (
-        |  SELECT e.user_id, min(e.ts) AS t_purchase FROM events e
-        |  JOIN c ON e.user_id = c.user_id AND e.ts > c.t_click
-        |  WHERE e.event_type = 'purchase' GROUP BY 1)
-        |SELECT 'step1_view' AS stage, count(*) AS n FROM v
-        |UNION ALL SELECT 'step2_click', count(*) FROM c
-        |UNION ALL SELECT 'step3_purchase', count(*) FROM p
-        |ORDER BY stage""".stripMargin,
-
-    // Independent algorithm: undirected reachability closure (recursive
-    // CTE, UNION-deduped) then min(root) per node — the component
-    // minimum reached by a different route than pointer jumping.
-    "graph_connected_components" ->
-      """WITH RECURSIVE nodes AS (
-        |  SELECT c_custkey AS k FROM customer WHERE c_custkey < 3000),
-        |e AS (
-        |  SELECT src, dst FROM (
-        |    SELECT k AS src, k + 1 AS dst FROM nodes WHERE k % 10 <> 9
-        |    UNION ALL
-        |    SELECT k AS src, k + 100 AS dst FROM nodes WHERE k % 97 = 0) t
-        |  WHERE dst IN (SELECT k FROM nodes)),
-        |ue AS (SELECT src, dst FROM e UNION SELECT dst, src FROM e),
-        |reach AS (
-        |  SELECT src AS id, src AS root FROM ue
-        |  UNION
-        |  SELECT ue.dst AS id, r.root FROM reach r JOIN ue ON ue.src = r.id),
-        |cc AS (SELECT id, min(root) AS cluster FROM reach GROUP BY id),
-        |sz AS (SELECT cluster, count(*) AS cluster_size FROM cc GROUP BY 1)
-        |SELECT cc.id, cc.cluster, sz.cluster_size
-        |FROM cc JOIN sz USING (cluster) ORDER BY id""".stripMargin,
-
-    // Ordered string_agg replays the fold; motif counts replay as the
-    // same literal replace-length arithmetic.
-    "events_seq_patterns" ->
-      """WITH sq AS (
-        |  SELECT user_id,
-        |    string_agg(substr(event_type, 1, 1), '' ORDER BY ts, event_id) AS seq
-        |  FROM events GROUP BY user_id)
-        |SELECT user_id, CAST(length(seq) AS BIGINT) AS seq_len,
-        |  CAST((length(seq) - length(replace(seq, 'cp', ''))) // 2 AS BIGINT)
-        |    AS n_cp_adjacent,
-        |  CAST((length(seq) - length(replace(seq, 'vv', ''))) // 2 AS BIGINT)
-        |    AS n_vv_runs,
-        |  regexp_matches(seq, 's.*c.*p') AS has_s_c_p,
-        |  CAST(strpos(seq, 'p') AS BIGINT) AS first_p_pos
-        |FROM sq ORDER BY user_id""".stripMargin,
-
-    // Same lead window (user-keyed, (ts, event_id) total order); the
-    // conditional probability replays as the identical BIGINT
-    // trunc-div over the row total.
-    "events_markov_transitions" ->
-      """WITH pairs AS (
-        |  SELECT event_type AS from_state,
-        |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |      AS to_state
-        |  FROM events),
-        |c AS (
-        |  SELECT from_state, to_state, count(*) AS n FROM pairs
-        |  WHERE to_state IS NOT NULL GROUP BY 1, 2),
-        |t AS (SELECT from_state, sum(n) AS row_total FROM c GROUP BY 1)
-        |SELECT c.from_state, c.to_state, c.n,
-        |  CAST((c.n * 1000000) // t.row_total AS BIGINT) AS p_micro
-        |FROM c JOIN t USING (from_state)
-        |ORDER BY from_state, to_state""".stripMargin,
-
-    "events_cohort_retention" ->
-      """WITH f AS (
-        |  SELECT user_id,
-        |    CAST(date_trunc('week', min(CAST(ts AS TIMESTAMP))) AS TIMESTAMP) AS cohort_week
-        |  FROM events GROUP BY 1),
-        |a AS (
-        |  SELECT DISTINCT user_id,
-        |    CAST(date_trunc('week', CAST(ts AS TIMESTAMP)) AS TIMESTAMP) AS wk
-        |  FROM events)
-        |SELECT f.cohort_week,
-        |  CAST((epoch(a.wk) - epoch(f.cohort_week)) / 604800 AS BIGINT) AS week_offset,
-        |  count(*) AS n_users
-        |FROM a JOIN f ON a.user_id = f.user_id
-        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "agg_quartiles_price" ->
-      """SELECT o_orderpriority,
-        |  round(quantile_cont(o_totalprice, 0.25), 3) AS q1,
-        |  round(quantile_cont(o_totalprice, 0.75), 3) AS q3,
-        |  round(quantile_cont(o_totalprice, 0.75)
-        |        - quantile_cont(o_totalprice, 0.25), 3) AS iqr
-        |FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-
-    "array_hof_norms" ->
-      """SELECT vec_id, CAST(len(embedding) AS BIGINT) AS dim,
-        |  round(sqrt(list_sum(list_transform(embedding,
-        |    v -> CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))), 5) AS l2_norm,
-        |  round(list_sum(list_transform(embedding,
-        |    v -> CAST(v AS DOUBLE))), 5) AS sum_v
-        |FROM embeddings ORDER BY vec_id""".stripMargin,
-
-    "mix_epoch_replicate" ->
-      """WITH d AS (
-        |  SELECT doc_id, source, CAST(substr(source, 4) AS INT) % 3 AS m
-        |  FROM documents),
-        |f AS (
-        |  SELECT doc_id, source,
-        |    CASE m WHEN 0 THEN 230 WHEN 1 THEN 40 ELSE 150 END AS fb FROM d),
-        |c AS (
-        |  SELECT doc_id, source,
-        |    CAST(fb // 100 AS BIGINT)
-        |      + CASE WHEN doc_id % 100 < fb % 100 THEN 1 ELSE 0 END AS n
-        |  FROM f)
-        |SELECT doc_id, source, CAST(unnest(range(n)) AS BIGINT) AS copy_idx
-        |FROM c WHERE n > 0
-        |ORDER BY doc_id, copy_idx""".stripMargin,
-
-    "layout_zorder_values" ->
-      """WITH c0 AS (
-        |  SELECT l_orderkey, l_linenumber,
-        |    CAST(l_partkey AS BIGINT) & 4294967295 AS x,
-        |    CAST(l_suppkey AS BIGINT) & 4294967295 AS y
-        |  FROM lineitem),
-        |c1 AS (SELECT l_orderkey, l_linenumber,
-        |  (x | (x << 16)) & 281470681808895 AS x, (y | (y << 16)) & 281470681808895 AS y FROM c0),
-        |c2 AS (SELECT l_orderkey, l_linenumber,
-        |  (x | (x << 8)) & 71777214294589695 AS x, (y | (y << 8)) & 71777214294589695 AS y FROM c1),
-        |c3 AS (SELECT l_orderkey, l_linenumber,
-        |  (x | (x << 4)) & 1085102592571150095 AS x, (y | (y << 4)) & 1085102592571150095 AS y FROM c2),
-        |c4 AS (SELECT l_orderkey, l_linenumber,
-        |  (x | (x << 2)) & 3689348814741910323 AS x, (y | (y << 2)) & 3689348814741910323 AS y FROM c3),
-        |c5 AS (SELECT l_orderkey, l_linenumber,
-        |  (x | (x << 1)) & 6148914691236517205 AS x, (y | (y << 1)) & 6148914691236517205 AS y FROM c4)
-        |SELECT l_orderkey, l_linenumber, x | (y << 1) AS zval
-        |FROM c5 ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "agg_basket_lift" ->
-      """WITH li AS MATERIALIZED (
-        |  SELECT DISTINCT l_orderkey AS bk, p_brand AS it
-        |  FROM lineitem JOIN part ON l_partkey = p_partkey),
-        |sz AS (SELECT bk FROM li GROUP BY bk HAVING count(*) <= 1000),
-        |s AS MATERIALIZED (SELECT li.bk, li.it FROM li JOIN sz USING (bk)),
-        |nb AS (SELECT count(DISTINCT bk) AS n FROM s),
-        |ic AS (SELECT it, count(*) AS c FROM s GROUP BY 1),
-        |p AS (
-        |  SELECT s1.it AS a, s2.it AS b, count(*) AS pair_n
-        |  FROM s s1 JOIN s s2 ON s1.bk = s2.bk AND s1.it < s2.it
-        |  GROUP BY 1, 2 HAVING count(*) >= 5)
-        |SELECT p.a, p.b, CAST(pair_n AS BIGINT) AS pair_n,
-        |  CAST((pair_n * n * 1000000) // (ca.c * cb.c) AS BIGINT) AS lift_micro
-        |FROM p
-        |JOIN ic ca ON ca.it = p.a
-        |JOIN ic cb ON cb.it = p.b
-        |CROSS JOIN nb
-        |ORDER BY a, b""".stripMargin,
-
-    "events_rolling_wau" ->
-      """WITH daily AS (
-        |  SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events),
-        |ex AS (
-        |  SELECT CAST(unnest(generate_series(CAST(d AS TIMESTAMP),
-        |      CAST(d AS TIMESTAMP) + INTERVAL 6 DAY, INTERVAL 1 DAY))
-        |    AS DATE) AS window_end, user_id
-        |  FROM daily)
-        |SELECT window_end, CAST(count(DISTINCT user_id) AS BIGINT) AS n_active
-        |FROM ex GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "agg_abc_customers" ->
-      """WITH per AS (
-        |  SELECT o_custkey,
-        |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-        |         AS BIGINT) AS v
-        |  FROM orders GROUP BY 1),
-        |t AS (SELECT sum(v) AS tt FROM per),
-        |r AS (
-        |  SELECT o_custkey, v,
-        |    sum(v) OVER (ORDER BY v DESC, o_custkey
-        |                 ROWS UNBOUNDED PRECEDING) AS cum
-        |  FROM per)
-        |SELECT o_custkey, v AS value, CAST(cum AS BIGINT) AS cum_value,
-        |  CASE WHEN cum * 100 <= tt * 80 THEN 'A'
-        |       WHEN cum * 100 <= tt * 95 THEN 'B'
-        |       ELSE 'C' END AS abc_class
-        |FROM r, t ORDER BY o_custkey""".stripMargin,
-
-    "agg_rfm_segments" ->
-      """WITH base AS (
-        |  SELECT o_custkey, max(CAST(o_orderdate AS TIMESTAMP)) AS last_date,
-        |    count(*) AS frequency,
-        |    CAST(sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT))
-        |         AS BIGINT) AS monetary_cents
-        |  FROM orders GROUP BY 1),
-        |s AS (
-        |  SELECT o_custkey,
-        |    ntile(5) OVER (ORDER BY last_date DESC, o_custkey) AS r,
-        |    ntile(5) OVER (ORDER BY frequency DESC, o_custkey) AS f,
-        |    ntile(5) OVER (ORDER BY monetary_cents DESC, o_custkey) AS m
-        |  FROM base)
-        |SELECT base.o_custkey, base.last_date, base.frequency,
-        |  base.monetary_cents,
-        |  CAST(s.r AS BIGINT) AS r_score, CAST(s.f AS BIGINT) AS f_score,
-        |  CAST(s.m AS BIGINT) AS m_score,
-        |  CAST(s.r * 100 + s.f * 10 + s.m AS BIGINT) AS rfm_code
-        |FROM base JOIN s USING (o_custkey) ORDER BY o_custkey""".stripMargin,
-
-    "agg_reaggregate_monthly" ->
-      """SELECT CAST(date_trunc('month', CAST(ts AS TIMESTAMP)) AS TIMESTAMP) AS month_start,
-        |  event_type, count(value) AS n,
-        |  CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total,
-        |  min(value) AS mn, max(value) AS mx,
-        |  round(CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) / count(value), 6) AS avg_v
-        |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-
-    "cross_join_region_pairs" ->
-      """SELECT a.r_name AS r1, b.r_name AS r2
-        |FROM region a CROSS JOIN region b
-        |WHERE a.r_regionkey < b.r_regionkey
-        |ORDER BY r1, r2""".stripMargin,
-
-    "join_hint_shuffle_hash" ->
-      """SELECT o_orderstatus, count(*) AS n_lines,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "stream_user_state" ->
-      """SELECT user_id, last_event_id, n_events FROM (
-        |  SELECT user_id, event_id AS last_event_id,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY ts DESC, event_id DESC) AS rn,
-        |    COUNT(*) OVER (PARTITION BY user_id) AS n_events
-        |  FROM events) t
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-    // Batch form of the stream-stream interval join: same pairs.
-    "stream_join_clickview" ->
-      """SELECT c.event_id AS click_id, v.event_id AS view_id, c.user_id
-        |FROM events c JOIN events v
-        |  ON c.user_id = v.user_id
-        | AND v.ts >= c.ts - INTERVAL 1 HOUR AND v.ts <= c.ts
-        |WHERE c.event_type = 'click' AND v.event_type = 'view'
-        |  AND c.user_id < 200
-        |ORDER BY click_id, view_id""".stripMargin,
-
-    "stream_join_left_outer" ->
-      """WITH ev AS (SELECT * FROM events WHERE user_id < 200),
-        |clicks AS (SELECT event_id AS click_id, user_id, ts AS click_ts
-        |           FROM ev WHERE event_type = 'click'),
-        |views AS (SELECT event_id AS view_id, user_id AS vu, ts AS view_ts
-        |          FROM ev WHERE event_type = 'view'),
-        |cut AS (SELECT least(
-        |    (SELECT max(epoch_us(ts)) FROM ev WHERE event_type = 'click'),
-        |    (SELECT max(epoch_us(ts)) FROM ev WHERE event_type = 'view'))
-        |    - 3660000000 AS t)
-        |SELECT c.click_id, c.user_id, v.view_id
-        |FROM clicks c LEFT JOIN views v
-        |  ON c.user_id = v.vu
-        | AND v.view_ts >= c.click_ts - INTERVAL 1 HOUR
-        | AND v.view_ts <= c.click_ts
-        |WHERE epoch_us(c.click_ts) < (SELECT t FROM cut)
-        |ORDER BY click_id, view_id""".stripMargin,
-
-    "stream_join_full_outer" ->
-      """WITH ev AS (SELECT * FROM events WHERE user_id < 200),
-        |clicks AS (SELECT event_id AS click_id, user_id, ts AS click_ts
-        |           FROM ev WHERE event_type = 'click'),
-        |views AS (SELECT event_id AS view_id, user_id AS vu, ts AS view_ts
-        |          FROM ev WHERE event_type = 'view'),
-        |wm AS (SELECT least(
-        |    (SELECT max(epoch_us(ts)) FROM ev WHERE event_type = 'click'),
-        |    (SELECT max(epoch_us(ts)) FROM ev WHERE event_type = 'view'))
-        |    - 3600000000 AS t)
-        |SELECT c.click_id, coalesce(c.user_id, v.vu) AS user_id, v.view_id
-        |FROM clicks c FULL OUTER JOIN views v
-        |  ON c.user_id = v.vu
-        | AND v.view_ts >= c.click_ts - INTERVAL 1 HOUR
-        | AND v.view_ts <= c.click_ts
-        |WHERE (c.click_ts IS NULL
-        |       OR epoch_us(c.click_ts) < (SELECT t FROM wm) - 60000000)
-        |  AND (v.view_ts IS NULL
-        |       OR epoch_us(v.view_ts) < (SELECT t FROM wm) - 3660000000)
-        |ORDER BY click_id, view_id""".stripMargin,
-
-    "w5_scd2_history" ->
-      """WITH e AS (
-        |  SELECT user_id, ts, event_type,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id, ts ORDER BY event_id) AS rn
-        |  FROM events WHERE user_id < 40),
-        |d AS (SELECT user_id, ts, event_type FROM e WHERE rn = 1),
-        |c AS (
-        |  SELECT user_id, ts, event_type,
-        |    LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts) AS prev,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts) AS rn2
-        |  FROM d),
-        |cp AS (
-        |  SELECT user_id, event_type, ts AS valid_from
-        |  FROM c WHERE rn2 = 1 OR prev <> event_type)
-        |SELECT user_id, event_type, valid_from,
-        |  LEAD(valid_from) OVER w AS valid_to,
-        |  (LEAD(valid_from) OVER w IS NULL) AS is_current
-        |FROM cp
-        |WINDOW w AS (PARTITION BY user_id ORDER BY valid_from)
-        |ORDER BY user_id, valid_from""".stripMargin,
-
-    "w5_scd2_asof" ->
-      """WITH e AS (
-        |  SELECT user_id, ts, event_type,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id, ts ORDER BY event_id) AS rn
-        |  FROM events WHERE user_id < 40),
-        |d AS (SELECT user_id, ts, event_type FROM e WHERE rn = 1),
-        |c AS (
-        |  SELECT user_id, ts, event_type,
-        |    LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts) AS prev,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts) AS rn2
-        |  FROM d),
-        |cp AS (
-        |  SELECT user_id, event_type, ts AS valid_from
-        |  FROM c WHERE rn2 = 1 OR prev <> event_type),
-        |h AS (
-        |  SELECT user_id, event_type, valid_from,
-        |    LEAD(valid_from) OVER w AS valid_to,
-        |    (LEAD(valid_from) OVER w IS NULL) AS is_current
-        |  FROM cp
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY valid_from))
-        |SELECT user_id, event_type, valid_from, valid_to, is_current
-        |FROM h
-        |WHERE valid_from <= TIMESTAMP '2024-01-15 12:00:00'
-        |  AND (valid_to IS NULL OR valid_to > TIMESTAMP '2024-01-15 12:00:00')
-        |ORDER BY user_id""".stripMargin,
-
-    "w5_scd2_pit_join" ->
-      """WITH e AS (
-        |  SELECT user_id, ts, event_type, event_id,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id, ts ORDER BY event_id) AS rn
-        |  FROM events WHERE user_id < 40),
-        |d AS (SELECT user_id, ts, event_type FROM e WHERE rn = 1),
-        |c AS (
-        |  SELECT user_id, ts, event_type,
-        |    LAG(event_type) OVER (PARTITION BY user_id ORDER BY ts) AS prev,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts) AS rn2
-        |  FROM d),
-        |cp AS (
-        |  SELECT user_id, event_type AS state, ts AS valid_from
-        |  FROM c WHERE rn2 = 1 OR prev <> event_type),
-        |h AS (
-        |  SELECT user_id, state, valid_from,
-        |    LEAD(valid_from) OVER w AS valid_to
-        |  FROM cp
-        |  WINDOW w AS (PARTITION BY user_id ORDER BY valid_from)),
-        |f AS (SELECT event_id, user_id, ts FROM events WHERE user_id < 40)
-        |SELECT f.event_id, f.user_id, f.ts, h.state, h.valid_from, h.valid_to
-        |FROM f LEFT JOIN h
-        |  ON h.user_id = f.user_id AND h.valid_from <= f.ts
-        | AND (h.valid_to IS NULL OR h.valid_to > f.ts)
-        |ORDER BY event_id""".stripMargin,
-
-    // The salted join's oracle is the PLAIN join — equality proves the
-    // salting is semantics-preserving.
-    "skew_salted_join" ->
-      """SELECT o_orderstatus, count(*) AS n_lines,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // same remap as the Spark side; salting must be output-invisible
-    "skew_salted_auto" ->
-      """SELECT o_orderstatus, count(*) AS n_lines,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM (SELECT CASE WHEN l_orderkey % 10 < 3
-        |        THEN (SELECT min(o_orderkey) FROM orders)
-        |        ELSE l_orderkey END AS k, l_extendedprice
-        |      FROM lineitem) f
-        |JOIN orders ON f.k = o_orderkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    // Round-trip oracles read the ORIGINAL parquet — equality proves the
-    // ORC / JSONL hop is lossless.
-    "orc_roundtrip_load" ->
-      """SELECT event_type, count(*) AS n,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v,
-        | CAST(min(event_id) AS BIGINT) AS min_id,
-        | CAST(max(event_id) AS BIGINT) AS max_id
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "json_roundtrip_load" ->
-      """SELECT event_type, count(*) AS n,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v,
-        | CAST(min(event_id) AS BIGINT) AS min_id,
-        | CAST(max(event_id) AS BIGINT) AS max_id
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "xml_roundtrip_load" ->
-      """SELECT event_type, count(*) AS n,
-        | CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v,
-        | CAST(min(event_id) AS BIGINT) AS min_id,
-        | CAST(max(event_id) AS BIGINT) AS max_id
-        |FROM events WHERE event_id % 10 = 0
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // UNION ALL form (portable across engines; DuckDB UNPIVOT would
-    // also work).
-    "unpivot_lineitem_measures" ->
-      """WITH base AS (
-        |  SELECT l_orderkey, CAST(l_linenumber AS BIGINT) AS l_linenumber,
-        |    l_quantity, l_extendedprice, l_discount, l_tax
-        |  FROM lineitem WHERE l_orderkey < 100)
-        |SELECT l_orderkey, l_linenumber, measure, val FROM (
-        |  SELECT l_orderkey, l_linenumber, 'l_quantity' AS measure, l_quantity AS val FROM base
-        |  UNION ALL
-        |  SELECT l_orderkey, l_linenumber, 'l_extendedprice', l_extendedprice FROM base
-        |  UNION ALL
-        |  SELECT l_orderkey, l_linenumber, 'l_discount', l_discount FROM base
-        |  UNION ALL
-        |  SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM base)
-        |ORDER BY l_orderkey, l_linenumber, measure""".stripMargin,
-
-    // The sketch+verify pipeline is EXACT by construction, so the oracle
-    // is the plain HAVING form.
-    "skew_heavy_hitters" ->
-      """SELECT o_custkey, count(*) AS n_rows
-        |FROM orders
-        |GROUP BY o_custkey
-        |HAVING count(*) * 1000 > (SELECT count(*) FROM orders) * 1
-        |ORDER BY o_custkey""".stripMargin,
-
-    // Probe list + exact row count; both quantile-sketch guarantees
-    // measured then pinned.
-    "sketch_approx_percentile" ->
-      """WITH ps(p) AS (VALUES (1), (5), (25), (50), (75), (95), (99)),
-        |n AS (SELECT count(*) AS n FROM orders)
-        |SELECT CAST(p AS INTEGER) AS p, n.n AS n,
-        |  TRUE AS est_is_member, TRUE AS rank_within_eps
-        |FROM ps, n ORDER BY p""".stripMargin,
-
-    // Exact heavy-key replay over the planted-skew derivation; the two
-    // MG guarantees measured then pinned.
-    "sketch_misra_gries" ->
-      """WITH kx AS (
-        |  SELECT CASE WHEN user_id % 10 < 3 THEN user_id % 7
-        |              ELSE user_id + 1000000 END AS k
-        |  FROM events),
-        |c AS (SELECT k, count(*) AS n_true FROM kx GROUP BY 1),
-        |t AS (SELECT count(*) AS n FROM kx)
-        |SELECT k, CAST(n_true AS BIGINT) AS n_true,
-        |  TRUE AS present_in_sketch, TRUE AS est_in_bound
-        |FROM c, t WHERE n_true * 33 > n ORDER BY k""".stripMargin,
-
-    // Verdict-row gate (sketch estimates are not SQL-expressible): the
-    // oracle recomputes every exact count; est_ge_true is the provable
-    // one-sided CMS guarantee, est_eq_true measured-then-pinned for
-    // this collision-free key set (see the query comment).
-    "sketch_countmin" ->
-      """WITH t AS (
-        |  SELECT event_type AS key, count(*) AS n_true
-        |  FROM events GROUP BY 1),
-        |p AS (
-        |  SELECT key, n_true FROM t
-        |  UNION ALL SELECT 'ghost_a', 0
-        |  UNION ALL SELECT 'ghost_b', 0
-        |  UNION ALL SELECT 'ghost_c', 0)
-        |SELECT key, CAST(n_true AS BIGINT) AS n_true,
-        |  TRUE AS est_ge_true, TRUE AS est_eq_true
-        |FROM p ORDER BY key""".stripMargin,
-
-    "sketch_cm_join_size" ->
-      """WITH a AS (
-        |  SELECT l_partkey AS k, count(*) AS n FROM lineitem GROUP BY 1),
-        |b AS (
-        |  SELECT l_partkey AS k, count(*) AS n FROM lineitem
-        |  WHERE l_returnflag = 'R' GROUP BY 1)
-        |SELECT CAST(coalesce(sum(a.n * b.n), 0) AS BIGINT) AS exact_join_size,
-        |  TRUE AS est_ge_exact, TRUE AS est_within_50pct
-        |FROM a JOIN b USING (k)""".stripMargin,
-
-    "sketch_ams_f2" ->
-      """WITH c AS (
-        |  SELECT event_type, user_id, count(*) AS n
-        |  FROM events GROUP BY 1, 2)
-        |SELECT event_type, CAST(sum(n * n) AS BIGINT) AS f2_exact,
-        |  TRUE AS est_in_30pct, TRUE AS merge_exact
-        |FROM c GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // Pure metadata replay: the same two file assignments, min/max
-    // stats at file grain, and the identical prune inequality.
-    "storage_zonemap_pruning" ->
-      """WITH o AS (
-        |  SELECT o_orderkey,
-        |    CAST(date_diff('day', DATE '1970-01-01', CAST(o_orderdate AS DATE))
-        |      AS BIGINT) AS day
-        |  FROM orders),
-        |b AS (
-        |  SELECT CAST(date_diff('day', DATE '1970-01-01', DATE '1998-01-01')
-        |           AS BIGINT) AS lo,
-        |         CAST(date_diff('day', DATE '1970-01-01', DATE '1998-06-30')
-        |           AS BIGINT) AS hi),
-        |s AS (
-        |  SELECT 'insertion' AS layout, o_orderkey // 100 AS file_id,
-        |    min(day) AS f_min, max(day) AS f_max, count(*) AS n_rows,
-        |    count(*) FILTER (WHERE day IS NULL) AS n_nulls
-        |  FROM o GROUP BY 2
-        |  UNION ALL
-        |  SELECT 'date_clustered', day // 30,
-        |    min(day), max(day), count(*),
-        |    count(*) FILTER (WHERE day IS NULL)
-        |  FROM o GROUP BY 2)
-        |SELECT layout, file_id, f_min, f_max, n_rows, n_nulls,
-        |  (n_nulls = n_rows OR f_max < lo OR f_min > hi) AS pruned
-        |FROM s, b ORDER BY layout, file_id""".stripMargin,
-
-    "x1_negative_sample" ->
-      """WITH pos AS (
-        |  SELECT DISTINCT o_custkey AS k, l_partkey AS i
-        |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-        |n AS (SELECT count(*) AS ic FROM part),
-        |ks AS (SELECT DISTINCT k FROM pos),
-        |cand AS (
-        |  SELECT ks.k, t.j,
-        |    ((ks.k % 4194304) * (ks.k % 4194304) * 7919
-        |      + t.j * t.j * 104729 + (ks.k % 4194304) * t.j * 31 + t.j)
-        |      % n.ic + 1 AS i
-        |  FROM ks, n, generate_series(0, 11) AS t(j)),
-        |fresh AS (
-        |  SELECT c.k, c.i, min(c.j) AS j FROM cand c
-        |  LEFT JOIN pos p ON p.k = c.k AND p.i = c.i
-        |  WHERE p.k IS NULL GROUP BY 1, 2),
-        |r AS (
-        |  SELECT k, i,
-        |    ROW_NUMBER() OVER (PARTITION BY k ORDER BY j, i) AS draw_rank
-        |  FROM fresh)
-        |SELECT k AS o_custkey, CAST(i AS BIGINT) AS l_partkey,
-        |  CAST(draw_rank AS BIGINT) AS draw_rank
-        |FROM r WHERE draw_rank <= 3 ORDER BY o_custkey, draw_rank""".stripMargin,
-
-    // Expected change counts recomputed from the mutation formula —
-    // the diff is certified without the oracle running any comparison.
-    "w7_column_diff" ->
-      """WITH n AS (SELECT count(*) AS nc FROM customer)
-        |SELECT 'c_acctbal' AS column_name,
-        |  (SELECT count(*) FROM customer WHERE c_custkey % 3 = 0)
-        |    AS n_changed, nc AS n_compared FROM n
-        |UNION ALL
-        |SELECT 'c_mktsegment',
-        |  (SELECT count(*) FROM customer WHERE c_custkey % 7 = 0), nc FROM n
-        |UNION ALL
-        |SELECT 'c_name',
-        |  (SELECT count(*) FROM customer WHERE c_custkey % 4 = 1), nc FROM n
-        |UNION ALL
-        |SELECT 'c_nationkey', 0, nc FROM n
-        |ORDER BY column_name""".stripMargin,
-
-    "dq_k_anonymity" ->
-      """WITH b AS (
-        |  SELECT c_nationkey,
-        |    CAST(CAST(c_acctbal AS DECIMAL(18,2)) * 100 AS BIGINT) // 200000
-        |      AS bal_bucket,
-        |    c_mktsegment
-        |  FROM customer),
-        |fine AS (
-        |  SELECT c_nationkey, bal_bucket, c_mktsegment, count(*) AS n
-        |  FROM b GROUP BY 1, 2, 3),
-        |g AS (
-        |  SELECT c_nationkey, bal_bucket, sum(n) AS sz, count(*) AS nsens
-        |  FROM fine GROUP BY 1, 2)
-        |SELECT CAST(sum(sz) AS BIGINT) AS n_rows,
-        |  count(*) AS n_groups,
-        |  CAST(min(sz) AS BIGINT) AS min_group_size,
-        |  CAST(count(*) FILTER (WHERE sz < 5) AS BIGINT) AS n_small_groups,
-        |  CAST(coalesce(sum(sz) FILTER (WHERE sz < 5), 0) AS BIGINT)
-        |    AS rows_at_risk,
-        |  CAST(count(*) FILTER (WHERE nsens < 3) AS BIGINT)
-        |    AS n_low_diversity_groups,
-        |  CAST(coalesce(sum(sz) FILTER (WHERE nsens < 3), 0) AS BIGINT)
-        |    AS rows_in_low_diversity
-        |FROM g""".stripMargin,
-
-    "w6_cdc_compact" ->
-      """WITH c AS (
-        |  SELECT user_id,
-        |    CASE WHEN event_type = 'signup' THEN 'I'
-        |         WHEN event_type = 'error' THEN 'D'
-        |         ELSE 'U' END AS op,
-        |    ts, event_id, event_type AS payload
-        |  FROM events),
-        |r AS (
-        |  SELECT user_id, op, payload,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |      AS rn_a,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts DESC,
-        |      event_id DESC) AS rn_d,
-        |    count(*) OVER (PARTITION BY user_id) AS n
-        |  FROM c),
-        |fl AS (
-        |  SELECT a.user_id, a.op AS first_op, d.op AS last_op,
-        |    d.payload AS payload, a.n
-        |  FROM (SELECT * FROM r WHERE rn_a = 1) a
-        |  JOIN (SELECT * FROM r WHERE rn_d = 1) d ON a.user_id = d.user_id),
-        |net AS (
-        |  SELECT user_id,
-        |    CASE WHEN first_op = 'I' AND last_op = 'D' THEN NULL
-        |         WHEN first_op = 'I' THEN 'I'
-        |         WHEN last_op = 'D' THEN 'D'
-        |         ELSE 'U' END AS net_op,
-        |    payload, CAST(n AS BIGINT) AS n_events
-        |  FROM fl)
-        |SELECT user_id, net_op, payload, n_events
-        |FROM net WHERE net_op IS NOT NULL ORDER BY user_id""".stripMargin,
-
-    "dq_sequence_gaps" ->
-      """WITH ks AS (
-        |  SELECT DISTINCT o_orderkey AS k FROM orders
-        |  WHERE o_orderkey % 97 >= 3),
-        |l AS (SELECT k, lead(k) OVER (ORDER BY k) AS nxt FROM ks)
-        |SELECT k + 1 AS gap_start, nxt - 1 AS gap_end,
-        |  nxt - 1 - k AS gap_len
-        |FROM l WHERE nxt > k + 1 ORDER BY gap_start""".stripMargin,
-
-    "events_attribution_ushape" ->
-      """WITH c AS (
-        |  SELECT user_id, event_id,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id ORDER BY ts, event_id)
-        |      AS position,
-        |    count(*) OVER (PARTITION BY user_id) AS n_touches
-        |  FROM events WHERE event_type = 'click')
-        |SELECT user_id, event_id, position,
-        |  CAST(n_touches AS BIGINT) AS n_touches,
-        |  CAST(CASE WHEN n_touches = 1 THEN 1000000
-        |    WHEN n_touches = 2 THEN 500000
-        |    WHEN position = 1 OR position = n_touches THEN 400000
-        |    ELSE 200000 // (n_touches - 2) END AS BIGINT) AS credit_micro
-        |FROM c ORDER BY user_id, position""".stripMargin,
-
-    "dq_fd_census" ->
-      """WITH f AS (
-        |  SELECT 'orderkey_to_custkey' AS fd, o_orderkey AS l,
-        |    CAST(o_custkey AS VARCHAR) AS r FROM orders
-        |  UNION ALL
-        |  SELECT 'custkey_to_priority', o_custkey, o_orderpriority FROM orders
-        |  UNION ALL
-        |  SELECT 'nation_to_segment', c_nationkey, c_mktsegment FROM customer),
-        |g AS (SELECT fd, l, count(DISTINCT r) AS images FROM f GROUP BY 1, 2)
-        |SELECT fd, count(*) AS n_keys,
-        |  CAST(count(*) FILTER (WHERE images > 1) AS BIGINT)
-        |    AS n_violating_keys,
-        |  CAST(max(images) AS BIGINT) AS max_images,
-        |  (count(*) FILTER (WHERE images > 1) = 0) AS fd_holds
-        |FROM g GROUP BY fd ORDER BY fd""".stripMargin,
-
-    "storage_encoding_advisor" ->
-      """WITH r1 AS (
-        |  SELECT l_orderkey // 1000 AS file_id, l_returnflag AS v,
-        |    CASE WHEN lag(l_returnflag) OVER
-        |        (PARTITION BY l_orderkey // 1000
-        |         ORDER BY l_orderkey, l_linenumber, l_returnflag)
-        |      IS DISTINCT FROM l_returnflag THEN 1 ELSE 0 END AS chg
-        |  FROM lineitem),
-        |a1 AS (SELECT file_id, count(*) AS n, count(DISTINCT v) AS nd,
-        |  sum(chg) AS runs FROM r1 GROUP BY 1),
-        |r2 AS (
-        |  SELECT l_orderkey // 1000 AS file_id, l_suppkey AS v,
-        |    CASE WHEN lag(l_suppkey) OVER
-        |        (PARTITION BY l_orderkey // 1000
-        |         ORDER BY l_orderkey, l_linenumber, l_suppkey)
-        |      IS DISTINCT FROM l_suppkey THEN 1 ELSE 0 END AS chg
-        |  FROM lineitem),
-        |a2 AS (SELECT file_id, count(*) AS n, count(DISTINCT v) AS nd,
-        |  sum(chg) AS runs FROM r2 GROUP BY 1),
-        |u AS (
-        |  SELECT 'l_returnflag' AS column_name, file_id, n, nd, runs,
-        |    1 AS b FROM a1
-        |  UNION ALL
-        |  SELECT 'l_suppkey', file_id, n, nd, runs, 8 FROM a2),
-        |f AS (
-        |  SELECT column_name, file_id, n, nd, runs,
-        |    n * b AS est_plain,
-        |    nd * b + (n * (CASE WHEN nd <= 1 THEN 1
-        |      ELSE length(bin(nd - 1)) END) + 7) // 8 AS est_dict,
-        |    runs * (b + 4) AS est_rle
-        |  FROM u)
-        |SELECT column_name, file_id, n AS n_values, nd AS n_distinct,
-        |  CAST(runs AS BIGINT) AS n_runs,
-        |  CAST(est_plain AS BIGINT) AS est_plain,
-        |  CAST(est_dict AS BIGINT) AS est_dict,
-        |  CAST(est_rle AS BIGINT) AS est_rle,
-        |  CASE WHEN est_rle < est_dict AND est_rle < est_plain THEN 'rle'
-        |       WHEN est_dict < est_plain THEN 'dict'
-        |       ELSE 'plain' END AS best_encoding
-        |FROM f ORDER BY column_name, file_id""".stripMargin,
-
-    // Band-predicate inequality join (DuckDB IEJoin) over the same
-    // planted plane — an independent route to the identical pair set.
-    // Scale-adaptive subset mirrors the engine's scaleSubset exactly
-    // (the band IEJoin is what cannot complete at sf1.0).
-    "geo_radius_join" ->
-      """WITH p AS (
-        |  SELECT c_custkey AS id,
-        |    (c_custkey * c_custkey * 7919 + c_custkey * 104729) % 1000000 AS x,
-        |    (c_custkey * c_custkey * 104729 + c_custkey * 7919) % 1000000 AS y
-        |  FROM customer
-        |  WHERE (SELECT count(*) FROM customer) <= 50000
-        |     OR (c_custkey % 1000003 + 7) * 2654435761
-        |        % 2147483647 % 1000000 < 62500)
-        |SELECT a.id AS id_a, b.id AS id_b,
-        |  CAST((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-        |    AS BIGINT) AS dist2
-        |FROM p a JOIN p b
-        |  ON a.id < b.id
-        | AND b.x BETWEEN a.x - 20000 AND a.x + 20000
-        | AND b.y BETWEEN a.y - 20000 AND a.y + 20000
-        |WHERE (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-        |  <= 400000000
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    "geo_cell_census" ->
-      """SELECT ((c_custkey * c_custkey * 7919 + c_custkey * 104729) % 1000000)
-        |    // 100000 AS cell_x,
-        |  ((c_custkey * c_custkey * 104729 + c_custkey * 7919) % 1000000)
-        |    // 100000 AS cell_y,
-        |  count(*) AS n_points
-        |FROM customer GROUP BY 1, 2 ORDER BY cell_x, cell_y""".stripMargin,
-
-    "sketch_hll_distinct" ->
-      """SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
-        |  TRUE AS est_within_10pct
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // Estimator-quality booleans pinned TRUE; the exact census is the
-    // oracle's own recomputation.
-    "sketch_kmv_distinct" ->
-      """SELECT CAST(year(l_shipdate) AS VARCHAR) || '-Q' ||
-        |    CAST(quarter(l_shipdate) AS VARCHAR) AS qtr,
-        |  CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_exact,
-        |  TRUE AS est_ok, TRUE AS sketch_size_sound
-        |FROM lineitem GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    "sketch_kmv_jaccard" ->
-      """WITH b AS (
-        |  SELECT CAST(year(l_shipdate) AS BIGINT) AS yr,
-        |    quarter(l_shipdate) AS q, l_partkey
-        |  FROM lineitem WHERE quarter(l_shipdate) IN (1, 3)),
-        |m AS (
-        |  SELECT yr, l_partkey,
-        |    max(CASE WHEN q = 1 THEN 1 ELSE 0 END) AS ina,
-        |    max(CASE WHEN q = 3 THEN 1 ELSE 0 END) AS inb
-        |  FROM b GROUP BY 1, 2)
-        |SELECT yr, CAST(sum(ina) AS BIGINT) AS n_a,
-        |  CAST(sum(inb) AS BIGINT) AS n_b,
-        |  CAST(sum(ina * inb) AS BIGINT) AS n_inter,
-        |  CAST(count(*) AS BIGINT) AS n_union,
-        |  CAST((1000000 * sum(ina * inb)) // count(*) AS BIGINT) AS j_exact_micro,
-        |  TRUE AS j_est_ok, TRUE AS inter_est_ok, TRUE AS union_sketch_sound
-        |FROM m GROUP BY yr ORDER BY yr""".stripMargin,
-
-    "stream_ams_f2" ->
-      """WITH c AS (
-        |  SELECT user_id, count(*) AS n FROM events GROUP BY 1)
-        |SELECT CAST(sum(n * n) AS BIGINT) AS f2_exact,
-        |  TRUE AS est_in_30pct, TRUE AS stream_matches_batch
-        |FROM c""".stripMargin,
-
-    "stream_countmin" ->
-      """WITH t AS (
-        |  SELECT event_type AS key, count(*) AS n_true
-        |  FROM events GROUP BY 1),
-        |p AS (
-        |  SELECT key, n_true FROM t
-        |  UNION ALL SELECT 'ghost_a', 0
-        |  UNION ALL SELECT 'ghost_b', 0
-        |  UNION ALL SELECT 'ghost_c', 0)
-        |SELECT key, CAST(n_true AS BIGINT) AS n_true,
-        |  TRUE AS est_eq_true, TRUE AS stream_matches_batch
-        |FROM p ORDER BY key""".stripMargin,
-
-    // Same semantics as the plain join — the bucketing is pure layout.
-    "storage_bucketed_join" ->
-      """SELECT o_orderstatus, count(*) AS n_lines,
-        | CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin,
-
-    "w6_cdc_apply" ->
-      """WITH ch AS (
-        |  SELECT o_custkey AS c_custkey,
-        |    'cust_' || CAST(o_custkey AS VARCHAR) AS c_name,
-        |    o_totalprice AS c_acctbal,
-        |    CASE WHEN o_custkey % 10 = 0 THEN 'D' ELSE 'U' END AS op,
-        |    ROW_NUMBER() OVER (PARTITION BY o_custkey ORDER BY o_orderkey DESC) AS rn
-        |  FROM orders),
-        |latest AS (SELECT c_custkey, c_name, c_acctbal, op FROM ch WHERE rn = 1)
-        |SELECT c_custkey, c_name, c_acctbal FROM customer
-        |WHERE c_custkey NOT IN (SELECT c_custkey FROM latest)
-        |UNION ALL
-        |SELECT c_custkey, c_name, c_acctbal FROM latest WHERE op <> 'D'
-        |ORDER BY c_custkey""".stripMargin,
-
-    "x1_embedding_neardup_exact" ->
-      """WITH v AS (
-        |  SELECT vec_id, embedding,
-        |    list_sum(list_transform(generate_series(1, len(embedding)),
-        |      i -> embedding[i] * embedding[i])) AS nrm
-        |  FROM embeddings WHERE vec_id < 400),
-        |p AS (
-        |  SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-        |    list_sum(list_transform(generate_series(1, len(a.embedding)),
-        |      i -> a.embedding[i] * b.embedding[i]))
-        |      / (sqrt(a.nrm) * sqrt(b.nrm)) AS sim
-        |  FROM v a JOIN v b ON a.vec_id < b.vec_id)
-        |SELECT id_a, id_b, round(sim, 6) AS cos
-        |FROM p WHERE sim >= 0.25
-        |ORDER BY id_a, id_b""".stripMargin,
-
-    // Verdict-row twins for the former rows-only exemptions: the oracle
-    // recomputes the REAL data columns (doc/vec/stratum/user counts, true-
-    // pair counts via the same exact all-pairs SQL) and pins every verdict
-    // boolean TRUE — so an index/sketch/sampler regression flips a
-    // hash-gated row instead of hiding behind a rows-only pass.
-    "x3_minhash_neardup" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 400),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 3 THEN
-        |      list_distinct(list_transform(generate_series(1, len(w) - 2),
-        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
-        |    ELSE [array_to_string(w, ' ')] END AS s
-        |  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM d) t),
-        |tp AS (
-        |  SELECT count(*) AS n_true_pairs
-        |  FROM sh a JOIN sh b ON a.doc_id < b.doc_id
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-        |      / (CAST(len(a.s) AS DOUBLE) + CAST(len(b.s) AS DOUBLE)
-        |         - CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)) >= 0.3)
-        |SELECT (SELECT count(*) FROM d) AS n_docs,
-        |  CAST(n_true_pairs AS BIGINT) AS n_true_pairs,
-        |  TRUE AS emitted_all_true, TRUE AS recall_floor_met
-        |FROM tp""".stripMargin,
-
-    "x3_simhash_neardup" ->
-      """SELECT count(*) AS n_docs, TRUE AS pairs_wellformed,
-        |  TRUE AS hamming_verified, TRUE AS pair_floor_met
-        |FROM documents""".stripMargin,
-
-    // The x3_minhash truth replay restricted to new×hist pairs (the
-    // streaming admission split), booleans pinned after measuring.
-    "stream_minhash_neardup" ->
-      """WITH d AS (SELECT doc_id, text FROM documents WHERE doc_id < 400),
-        |sh AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 3 THEN
-        |      list_distinct(list_transform(generate_series(1, len(w) - 2),
-        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
-        |    ELSE [array_to_string(w, ' ')] END AS s
-        |  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w FROM d) t),
-        |tp AS (
-        |  SELECT count(*) AS n_true_pairs
-        |  FROM sh a JOIN sh b ON a.doc_id % 5 = 0 AND b.doc_id % 5 <> 0
-        |  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-        |      / (CAST(len(a.s) AS DOUBLE) + CAST(len(b.s) AS DOUBLE)
-        |         - CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)) >= 0.3)
-        |SELECT
-        |  (SELECT count(*) FROM d WHERE doc_id % 5 = 0) AS n_new,
-        |  (SELECT count(*) FROM d WHERE doc_id % 5 <> 0) AS n_hist,
-        |  CAST(n_true_pairs AS BIGINT) AS n_true_pairs,
-        |  TRUE AS emitted_all_true, TRUE AS recall_floor_met
-        |FROM tp""".stripMargin,
-
-    // Exact replay of batch-granular greedy admission: the four index
-    // generations unroll as chained CTEs (idx_{b+1} = idx_b + batch b's
-    // admitted docs), blockers at integer-Jaccard ≥ 50%.
-    // Streaming IVF ingest replay: per-logical-batch counts are pure
-    // arithmetic over vec_id div span; census/equality verdicts ride
-    // booleans (the op computes them against its own index).
-    "stream_ivf_ingest" ->
-      """WITH sp AS (
-        |  SELECT greatest(200, count(*) // 10) AS span FROM embeddings),
-        |b AS (
-        |  SELECT vec_id // (SELECT span FROM sp) AS batch_id,
-        |    count(*) AS n_vectors
-        |  FROM embeddings GROUP BY 1),
-        |c AS (
-        |  SELECT batch_id, n_vectors,
-        |    sum(n_vectors) OVER (ORDER BY batch_id) AS run_total,
-        |    first_value(n_vectors) OVER (ORDER BY batch_id) AS n0
-        |  FROM b)
-        |SELECT CAST(batch_id AS BIGINT) AS batch_id,
-        |  CAST(n_vectors AS BIGINT) AS n_vectors,
-        |  CAST(run_total AS BIGINT) AS n_total,
-        |  CAST(run_total - n0 AS BIGINT) AS n_appended,
-        |  TRUE AS no_retrain, FALSE AS census_fired, FALSE AS retrained,
-        |  FALSE AS post_retrain_clear, TRUE AS matches_batch_build
-        |FROM c ORDER BY batch_id""".stripMargin,
-
-    // Self-healing replay: the poisoned LAST batch fires, retrains, and
-    // leaves the index holding only the scorable corpus (n_total drops
-    // by the poisoned batch's count, n_appended resets to 0).
-    "stream_ivf_heal" ->
-      """WITH sp AS (
-        |  SELECT greatest(200, count(*) // 10) AS span FROM embeddings),
-        |b AS (
-        |  SELECT vec_id // (SELECT span FROM sp) AS batch_id,
-        |    count(*) AS n_vectors
-        |  FROM embeddings GROUP BY 1),
-        |mx AS (SELECT max(batch_id) AS mb FROM b),
-        |c AS (
-        |  SELECT batch_id, n_vectors,
-        |    sum(n_vectors) OVER (ORDER BY batch_id) AS run_total,
-        |    first_value(n_vectors) OVER (ORDER BY batch_id) AS n0
-        |  FROM b)
-        |SELECT CAST(c.batch_id AS BIGINT) AS batch_id,
-        |  CAST(c.n_vectors AS BIGINT) AS n_vectors,
-        |  CAST(CASE WHEN c.batch_id = mx.mb THEN c.run_total - c.n_vectors
-        |    ELSE c.run_total END AS BIGINT) AS n_total,
-        |  CAST(CASE WHEN c.batch_id = mx.mb THEN 0
-        |    ELSE c.run_total - c.n0 END AS BIGINT) AS n_appended,
-        |  TRUE AS no_retrain,
-        |  (c.batch_id = mx.mb) AS census_fired,
-        |  (c.batch_id = mx.mb) AS retrained,
-        |  (c.batch_id = mx.mb) AS post_retrain_clear,
-        |  TRUE AS matches_batch_build
-        |FROM c, mx ORDER BY batch_id""".stripMargin,
-
-    "stream_minhash_incr" ->
-      """WITH d AS (
-        |  SELECT doc_id,
-        |    CASE WHEN len(w) >= 3 THEN
-        |      list_distinct(list_transform(generate_series(1, len(w) - 2),
-        |        i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))
-        |    ELSE [array_to_string(w, ' ')] END AS s
-        |  FROM (SELECT doc_id, string_split_regex(lower(text), '\s+') AS w
-        |        FROM documents WHERE doc_id < 400) t),
-        |hist AS (SELECT doc_id, s FROM d WHERE doc_id % 5 = 3),
-        |strm AS (SELECT doc_id, s, doc_id // 100 AS b FROM d WHERE doc_id % 5 <> 3),
-        |blk0 AS (SELECT x.doc_id, y.doc_id AS blocker FROM strm x JOIN hist y
-        |  ON x.b = 0 AND len(list_intersect(x.s, y.s)) * 100
-        |     >= (len(x.s) + len(y.s) - len(list_intersect(x.s, y.s))) * 50),
-        |idx1 AS (SELECT doc_id, s FROM hist UNION ALL
-        |  SELECT doc_id, s FROM strm WHERE b = 0
-        |    AND doc_id NOT IN (SELECT doc_id FROM blk0)),
-        |blk1 AS (SELECT x.doc_id, y.doc_id AS blocker FROM strm x JOIN idx1 y
-        |  ON x.b = 1 AND len(list_intersect(x.s, y.s)) * 100
-        |     >= (len(x.s) + len(y.s) - len(list_intersect(x.s, y.s))) * 50),
-        |idx2 AS (SELECT doc_id, s FROM idx1 UNION ALL
-        |  SELECT doc_id, s FROM strm WHERE b = 1
-        |    AND doc_id NOT IN (SELECT doc_id FROM blk1)),
-        |blk2 AS (SELECT x.doc_id, y.doc_id AS blocker FROM strm x JOIN idx2 y
-        |  ON x.b = 2 AND len(list_intersect(x.s, y.s)) * 100
-        |     >= (len(x.s) + len(y.s) - len(list_intersect(x.s, y.s))) * 50),
-        |idx3 AS (SELECT doc_id, s FROM idx2 UNION ALL
-        |  SELECT doc_id, s FROM strm WHERE b = 2
-        |    AND doc_id NOT IN (SELECT doc_id FROM blk2)),
-        |blk3 AS (SELECT x.doc_id, y.doc_id AS blocker FROM strm x JOIN idx3 y
-        |  ON x.b = 3 AND len(list_intersect(x.s, y.s)) * 100
-        |     >= (len(x.s) + len(y.s) - len(list_intersect(x.s, y.s))) * 50),
-        |blk AS (SELECT * FROM blk0 UNION ALL SELECT * FROM blk1
-        |  UNION ALL SELECT * FROM blk2 UNION ALL SELECT * FROM blk3),
-        |agg AS (SELECT doc_id, count(*) AS n_blockers, min(blocker) AS first_blocker
-        |  FROM blk GROUP BY doc_id)
-        |SELECT s.doc_id, CAST(s.b AS BIGINT) AS batch_id,
-        |  (a.doc_id IS NULL) AS admitted,
-        |  CAST(coalesce(a.n_blockers, 0) AS BIGINT) AS n_blockers,
-        |  a.first_blocker
-        |FROM strm s LEFT JOIN agg a USING (doc_id)
-        |ORDER BY s.doc_id""".stripMargin,
-
-    "x1_embedding_neardup" ->
-      """WITH v AS (
-        |  SELECT vec_id, embedding,
-        |    list_sum(list_transform(generate_series(1, len(embedding)),
-        |      i -> embedding[i] * embedding[i])) AS nrm
-        |  FROM embeddings WHERE vec_id < 1000),
-        |tp AS (
-        |  SELECT count(*) AS n_true_pairs
-        |  FROM v a JOIN v b ON a.vec_id < b.vec_id
-        |  WHERE list_sum(list_transform(generate_series(1, len(a.embedding)),
-        |      i -> a.embedding[i] * b.embedding[i]))
-        |      / (sqrt(a.nrm) * sqrt(b.nrm)) >= 0.3)
-        |SELECT (SELECT count(*) FROM v) AS n_vecs,
-        |  CAST(n_true_pairs AS BIGINT) AS n_true_pairs,
-        |  TRUE AS emitted_all_true, TRUE AS recall_floor_met
-        |FROM tp""".stripMargin,
-
-    "sketch_approx_events" ->
-      """SELECT event_type, count(DISTINCT user_id) AS exact_users,
-        |  TRUE AS hll_err_le_15pct, TRUE AS median_rank_ok
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "x1_stratified_sample" ->
-      """SELECT lang, count(*) AS n_total,
-        |  TRUE AS frac_ok, TRUE AS rerun_deterministic
-        |FROM documents WHERE lang IN ('de', 'en', 'es', 'fr')
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "graph_pagerank" -> pagerankOracle(5),
-
-    "x4_textrank_terms" -> textrankOracle(5),
-
-    "graph_triangles" ->
-      """WITH nn AS (SELECT count(*) AS n_nodes FROM documents),
-        |raw AS (
-        |  SELECT doc_id AS s, (doc_id + 1) % n_nodes AS d FROM documents, nn
-        |  UNION ALL
-        |  SELECT doc_id, (doc_id + 2) % n_nodes FROM documents, nn
-        |  UNION ALL
-        |  SELECT doc_id, (doc_id * 31 + 7) % n_nodes FROM documents, nn),
-        |e AS MATERIALIZED (
-        |  SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b
-        |  FROM raw WHERE s <> d),
-        |tri AS MATERIALIZED (
-        |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        |  FROM e e1
-        |  JOIN e e2 ON e1.b = e2.a
-        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |corners AS (
-        |  SELECT x AS node FROM tri
-        |  UNION ALL SELECT y FROM tri
-        |  UNION ALL SELECT z FROM tri),
-        |c AS (SELECT node, count(*) AS t FROM corners GROUP BY node)
-        |SELECT d.doc_id AS node, CAST(coalesce(c.t, 0) AS BIGINT) AS n_triangles
-        |FROM documents d LEFT JOIN c ON c.node = d.doc_id
-        |ORDER BY node""".stripMargin,
-
-    "graph_clustering_coeff" ->
-      """WITH nn AS (SELECT count(*) AS n_nodes FROM documents),
-        |raw AS (
-        |  SELECT doc_id AS s, (doc_id + 1) % n_nodes AS d FROM documents, nn
-        |  UNION ALL
-        |  SELECT doc_id, (doc_id + 2) % n_nodes FROM documents, nn
-        |  UNION ALL
-        |  SELECT doc_id, (doc_id * 31 + 7) % n_nodes FROM documents, nn),
-        |e AS MATERIALIZED (
-        |  SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b
-        |  FROM raw WHERE s <> d),
-        |tri AS MATERIALIZED (
-        |  SELECT e1.a AS x, e1.b AS y, e2.b AS z
-        |  FROM e e1
-        |  JOIN e e2 ON e1.b = e2.a
-        |  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b),
-        |corners AS (
-        |  SELECT x AS node FROM tri
-        |  UNION ALL SELECT y FROM tri
-        |  UNION ALL SELECT z FROM tri),
-        |c AS (SELECT node, count(*) AS t FROM corners GROUP BY node),
-        |dg AS (
-        |  SELECT node, count(*) AS deg FROM (
-        |    SELECT a AS node FROM e UNION ALL SELECT b FROM e)
-        |  GROUP BY node)
-        |SELECT d.doc_id AS node,
-        |  CAST(coalesce(dg.deg, 0) AS BIGINT) AS deg,
-        |  CAST(coalesce(c.t, 0) AS BIGINT) AS n_triangles,
-        |  CAST(CASE WHEN coalesce(dg.deg, 0) >= 2
-        |    THEN (2 * coalesce(c.t, 0) * 1000000) // (dg.deg * (dg.deg - 1))
-        |    ELSE 0 END AS BIGINT) AS lcc_micro
-        |FROM documents d
-        |LEFT JOIN c ON c.node = d.doc_id
-        |LEFT JOIN dg ON dg.node = d.doc_id
-        |ORDER BY node""".stripMargin,
-
-    "graph_adamic_adar" ->
-      """WITH nn AS (SELECT count(*) AS n_nodes FROM documents),
-        |raw AS (
-        |  SELECT doc_id AS s, (doc_id + 1) % n_nodes AS d FROM documents, nn
-        |  UNION ALL
-        |  SELECT doc_id, (doc_id + 2) % n_nodes FROM documents, nn
-        |  UNION ALL
-        |  SELECT doc_id, (doc_id * 31 + 7) % n_nodes FROM documents, nn),
-        |e AS MATERIALIZED (
-        |  SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b
-        |  FROM raw WHERE s <> d),
-        |dg AS (
-        |  SELECT u, count(*) AS deg FROM (
-        |    SELECT a AS u FROM e UNION ALL SELECT b FROM e) GROUP BY 1),
-        |nb AS MATERIALIZED (
-        |  SELECT n.u, n.x,
-        |    CAST(floor(1000000.0 / ln(CAST(dg.deg AS DOUBLE)) + 0.5)
-        |         AS BIGINT) AS aa1
-        |  FROM (SELECT a AS u, b AS x FROM e
-        |        UNION ALL SELECT b, a FROM e) n
-        |  JOIN dg ON dg.u = n.u WHERE dg.deg BETWEEN 2 AND 1000),
-        |p AS (
-        |  SELECT n1.x AS v, n2.x AS w, count(*) AS common_n,
-        |         sum(n1.aa1) AS aa_micro
-        |  FROM nb n1 JOIN nb n2 ON n1.u = n2.u AND n1.x < n2.x
-        |  GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT p.v, p.w, CAST(common_n AS BIGINT) AS common_n,
-        |  CAST(aa_micro AS BIGINT) AS aa_micro,
-        |  (e2.a IS NOT NULL) AS already_linked
-        |FROM p LEFT JOIN e e2 ON e2.a = p.v AND e2.b = p.w
-        |ORDER BY v, w""".stripMargin,
-
-    "graph_kcore" ->
-      """WITH nn AS (SELECT count(*) AS n_nodes FROM documents),
-        |raw AS (
-        |  SELECT doc_id AS s, (doc_id + 1) % n_nodes AS d FROM documents, nn
-        |  UNION ALL
-        |  SELECT doc_id, (doc_id + 2) % n_nodes FROM documents, nn
-        |  UNION ALL
-        |  SELECT doc_id, (doc_id * 2 + 1) % n_nodes FROM documents, nn),
-        |e0 AS MATERIALIZED (
-        |  SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b
-        |  FROM raw WHERE s <> d),
-        |d1 AS (SELECT node, count(*) AS deg FROM (
-        |    SELECT a AS node FROM e0 UNION ALL SELECT b FROM e0) GROUP BY 1),
-        |w1 AS MATERIALIZED (
-        |  SELECT doc_id AS node FROM documents
-        |  EXCEPT SELECT node FROM d1 WHERE deg >= 5),
-        |e1 AS MATERIALIZED (
-        |  SELECT a, b FROM e0
-        |  WHERE a NOT IN (SELECT node FROM w1)
-        |    AND b NOT IN (SELECT node FROM w1)),
-        |d2 AS (SELECT node, count(*) AS deg FROM (
-        |    SELECT a AS node FROM e1 UNION ALL SELECT b FROM e1) GROUP BY 1),
-        |w2 AS MATERIALIZED (
-        |  SELECT doc_id AS node FROM documents
-        |  EXCEPT SELECT node FROM w1
-        |  EXCEPT SELECT node FROM d2 WHERE deg >= 5),
-        |e2 AS MATERIALIZED (
-        |  SELECT a, b FROM e1
-        |  WHERE a NOT IN (SELECT node FROM w2)
-        |    AND b NOT IN (SELECT node FROM w2)),
-        |d3 AS (SELECT node, count(*) AS deg FROM (
-        |    SELECT a AS node FROM e2 UNION ALL SELECT b FROM e2) GROUP BY 1),
-        |w3 AS MATERIALIZED (
-        |  SELECT doc_id AS node FROM documents
-        |  EXCEPT SELECT node FROM w1
-        |  EXCEPT SELECT node FROM w2
-        |  EXCEPT SELECT node FROM d3 WHERE deg >= 5),
-        |e3 AS MATERIALIZED (
-        |  SELECT a, b FROM e2
-        |  WHERE a NOT IN (SELECT node FROM w3)
-        |    AND b NOT IN (SELECT node FROM w3)),
-        |d4 AS (SELECT node, count(*) AS deg FROM (
-        |    SELECT a AS node FROM e3 UNION ALL SELECT b FROM e3) GROUP BY 1)
-        |SELECT d.doc_id AS node,
-        |  CAST(CASE
-        |    WHEN d.doc_id IN (SELECT node FROM w1) THEN 1
-        |    WHEN d.doc_id IN (SELECT node FROM w2) THEN 2
-        |    WHEN d.doc_id IN (SELECT node FROM w3) THEN 3
-        |    ELSE 0 END AS BIGINT) AS round_removed,
-        |  CAST(coalesce(d4.deg, 0) AS BIGINT) AS final_deg
-        |FROM documents d LEFT JOIN d4 ON d4.node = d.doc_id
-        |ORDER BY node""".stripMargin,
-
-    // Recursive-CTE BFS replay: frontier expansion as UNION-deduped
-    // (node, dist) reachability bounded by the round budget, then
-    // min(dist) per node; unreached nodes pin -1 via the left join.
-    "graph_bfs" ->
-      """WITH RECURSIVE nn AS (SELECT count(*) AS n_nodes FROM documents),
-        |raw AS (
-        |  SELECT doc_id AS s, (doc_id * 31 + 7) % n_nodes AS d
-        |  FROM documents, nn),
-        |e AS MATERIALIZED (
-        |  SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b
-        |  FROM raw WHERE s <> d),
-        |adj AS (SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
-        |r AS (
-        |  SELECT doc_id AS node, 0 AS dist FROM documents WHERE doc_id % 97 = 0
-        |  UNION
-        |  SELECT adj.v AS node, r.dist + 1 AS dist
-        |  FROM r JOIN adj ON adj.u = r.node WHERE r.dist < 4),
-        |m AS (SELECT node, min(dist) AS dist FROM r GROUP BY node)
-        |SELECT d.doc_id AS node, CAST(coalesce(m.dist, -1) AS BIGINT) AS dist
-        |FROM documents d LEFT JOIN m ON m.node = d.doc_id
-        |ORDER BY node""".stripMargin,
-
-    "graph_temporal_reach" ->
-      """WITH nn AS (SELECT count(*) AS n_nodes FROM documents),
-        |base AS (
-        |  SELECT doc_id AS a, (doc_id * 31 + 7) % n_nodes AS b,
-        |    (doc_id * 13) % 1000 AS t
-        |  FROM documents, nn),
-        |adj AS MATERIALIZED (
-        |  SELECT a AS u, b AS v, t FROM base
-        |  UNION ALL SELECT b, a, t FROM base),
-        |a0 AS (SELECT doc_id AS node, CAST(0 AS BIGINT) AS ar
-        |  FROM documents WHERE doc_id % 97 = 0),
-        |a1 AS MATERIALIZED (SELECT node, min(ar) AS ar FROM (
-        |  SELECT * FROM a0 UNION ALL
-        |  SELECT e.v, e.t FROM adj e JOIN a0 p ON p.node = e.u AND e.t >= p.ar)
-        |  GROUP BY node),
-        |a2 AS MATERIALIZED (SELECT node, min(ar) AS ar FROM (
-        |  SELECT * FROM a1 UNION ALL
-        |  SELECT e.v, e.t FROM adj e JOIN a1 p ON p.node = e.u AND e.t >= p.ar)
-        |  GROUP BY node),
-        |a3 AS MATERIALIZED (SELECT node, min(ar) AS ar FROM (
-        |  SELECT * FROM a2 UNION ALL
-        |  SELECT e.v, e.t FROM adj e JOIN a2 p ON p.node = e.u AND e.t >= p.ar)
-        |  GROUP BY node),
-        |a4 AS MATERIALIZED (SELECT node, min(ar) AS ar FROM (
-        |  SELECT * FROM a3 UNION ALL
-        |  SELECT e.v, e.t FROM adj e JOIN a3 p ON p.node = e.u AND e.t >= p.ar)
-        |  GROUP BY node),
-        |a5 AS MATERIALIZED (SELECT node, min(ar) AS ar FROM (
-        |  SELECT * FROM a4 UNION ALL
-        |  SELECT e.v, e.t FROM adj e JOIN a4 p ON p.node = e.u AND e.t >= p.ar)
-        |  GROUP BY node),
-        |a6 AS (SELECT node, min(ar) AS ar FROM (
-        |  SELECT * FROM a5 UNION ALL
-        |  SELECT e.v, e.t FROM adj e JOIN a5 p ON p.node = e.u AND e.t >= p.ar)
-        |  GROUP BY node)
-        |SELECT doc.doc_id AS node,
-        |  CAST(coalesce(a6.ar, -1) AS BIGINT) AS earliest_arrival
-        |FROM documents doc LEFT JOIN a6 ON a6.node = doc.doc_id
-        |ORDER BY node""".stripMargin,
-
-    "graph_shortest_paths" ->
-      """WITH nn AS (SELECT count(*) AS n_nodes FROM documents),
-        |base AS (
-        |  SELECT doc_id AS a, (doc_id * 31 + 7) % n_nodes AS b
-        |  FROM documents, nn),
-        |adj AS MATERIALIZED (
-        |  SELECT a AS u, b AS v, 1 + (a + b) % 7 AS w FROM base
-        |  UNION ALL
-        |  SELECT b, a, 1 + (a + b) % 7 FROM base),
-        |d0 AS (SELECT doc_id AS node, CAST(0 AS BIGINT) AS d
-        |  FROM documents WHERE doc_id % 97 = 0),
-        |d1 AS MATERIALIZED (SELECT node, min(d) AS d FROM (
-        |  SELECT * FROM d0 UNION ALL
-        |  SELECT e.v, p.d + e.w FROM adj e JOIN d0 p ON p.node = e.u)
-        |  GROUP BY node),
-        |d2 AS MATERIALIZED (SELECT node, min(d) AS d FROM (
-        |  SELECT * FROM d1 UNION ALL
-        |  SELECT e.v, p.d + e.w FROM adj e JOIN d1 p ON p.node = e.u)
-        |  GROUP BY node),
-        |d3 AS MATERIALIZED (SELECT node, min(d) AS d FROM (
-        |  SELECT * FROM d2 UNION ALL
-        |  SELECT e.v, p.d + e.w FROM adj e JOIN d2 p ON p.node = e.u)
-        |  GROUP BY node),
-        |d4 AS MATERIALIZED (SELECT node, min(d) AS d FROM (
-        |  SELECT * FROM d3 UNION ALL
-        |  SELECT e.v, p.d + e.w FROM adj e JOIN d3 p ON p.node = e.u)
-        |  GROUP BY node),
-        |d5 AS MATERIALIZED (SELECT node, min(d) AS d FROM (
-        |  SELECT * FROM d4 UNION ALL
-        |  SELECT e.v, p.d + e.w FROM adj e JOIN d4 p ON p.node = e.u)
-        |  GROUP BY node),
-        |d6 AS (SELECT node, min(d) AS d FROM (
-        |  SELECT * FROM d5 UNION ALL
-        |  SELECT e.v, p.d + e.w FROM adj e JOIN d5 p ON p.node = e.u)
-        |  GROUP BY node)
-        |SELECT doc.doc_id AS node, CAST(coalesce(d6.d, -1) AS BIGINT) AS dist
-        |FROM documents doc LEFT JOIN d6 ON d6.node = doc.doc_id
-        |ORDER BY node""".stripMargin,
-
-    "graph_label_prop" ->
-      """WITH nn AS (SELECT count(*) AS n_nodes FROM documents),
-        |raw AS (
-        |  SELECT doc_id AS s, (doc_id * 31 + 7) % n_nodes AS d
-        |  FROM documents, nn),
-        |e AS MATERIALIZED (
-        |  SELECT DISTINCT least(s, d) AS a, greatest(s, d) AS b
-        |  FROM raw WHERE s <> d),
-        |adj AS MATERIALIZED (
-        |  SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
-        |l0 AS (SELECT doc_id AS node, doc_id AS lbl FROM documents),
-        |c1 AS (SELECT adj.v AS node, l.lbl, count(*) AS n
-        |  FROM adj JOIN l0 l ON l.node = adj.u GROUP BY 1, 2),
-        |w1 AS (SELECT node, lbl,
-        |  ROW_NUMBER() OVER (PARTITION BY node ORDER BY n DESC, lbl ASC) AS rn
-        |  FROM c1),
-        |l1 AS MATERIALIZED (
-        |  SELECT l0.node, coalesce(w.lbl, l0.lbl) AS lbl FROM l0
-        |  LEFT JOIN (SELECT node, lbl FROM w1 WHERE rn = 1) w
-        |    ON w.node = l0.node),
-        |c2 AS (SELECT adj.v AS node, l.lbl, count(*) AS n
-        |  FROM adj JOIN l1 l ON l.node = adj.u GROUP BY 1, 2),
-        |w2 AS (SELECT node, lbl,
-        |  ROW_NUMBER() OVER (PARTITION BY node ORDER BY n DESC, lbl ASC) AS rn
-        |  FROM c2),
-        |l2 AS MATERIALIZED (
-        |  SELECT l1.node, coalesce(w.lbl, l1.lbl) AS lbl FROM l1
-        |  LEFT JOIN (SELECT node, lbl FROM w2 WHERE rn = 1) w
-        |    ON w.node = l1.node),
-        |c3 AS (SELECT adj.v AS node, l.lbl, count(*) AS n
-        |  FROM adj JOIN l2 l ON l.node = adj.u GROUP BY 1, 2),
-        |w3 AS (SELECT node, lbl,
-        |  ROW_NUMBER() OVER (PARTITION BY node ORDER BY n DESC, lbl ASC) AS rn
-        |  FROM c3),
-        |l3 AS (
-        |  SELECT l2.node, coalesce(w.lbl, l2.lbl) AS lbl FROM l2
-        |  LEFT JOIN (SELECT node, lbl FROM w3 WHERE rn = 1) w
-        |    ON w.node = l2.node)
-        |SELECT node, lbl AS label FROM l3 ORDER BY node""".stripMargin,
-
-    // Per-lang NLL terciles: the lm/nll CTEs are the x4_lm_nll twin
-    // (lmCtes — identical ln expression shape, so the one double op is
-    // IEEE-identical); mean-per-token is BIGINT floor-div; NTILE(3) is
-    // ANSI in both engines given the total (mpt, doc_id) order.
-    "x4_ccnet_buckets" ->
-      s"""WITH ${lmCtes("", " WHERE lang = 'en'")},
-         |dw AS (
-         |  SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS word
-         |  FROM documents),
-         |nll AS MATERIALIZED (
-         |  SELECT doc_id, count(*) AS n_tokens,
-         |    CAST(-sum(coalesce(lm.lp, (SELECT lp FROM oov))) AS BIGINT) AS nll_micro
-         |  FROM dw LEFT JOIN lm USING (word)
-         |  WHERE dw.word <> '' GROUP BY doc_id),
-         |sc AS (
-         |  SELECT d.lang, nll.doc_id, nll.n_tokens, nll.nll_micro // nll.n_tokens AS mpt
-         |  FROM nll JOIN documents d USING (doc_id)),
-         |bk AS (
-         |  SELECT lang, n_tokens, mpt,
-         |    NTILE(3) OVER (PARTITION BY lang ORDER BY mpt, doc_id) AS bucket
-         |  FROM sc)
-         |SELECT lang, CAST(bucket AS BIGINT) AS bucket, count(*) AS n_docs,
-         |  CAST(sum(n_tokens) AS BIGINT) AS tok_total,
-         |  min(mpt) AS mpt_min, max(mpt) AS mpt_max
-         |FROM bk GROUP BY lang, bucket ORDER BY lang, bucket""".stripMargin,
-
-    // Two independent LM pipelines (t_ = target/en, b_ = background/
-    // full corpus) over one shared token stream; w = nll_bg − nll_tgt
-    // in pure BIGINT.
-    "x4_dsir_weights" ->
-      s"""WITH ${lmCtes("t_", " WHERE lang = 'en'")},
-         |${lmCtes("b_", "")},
-         |dw AS MATERIALIZED (
-         |  SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS word
-         |  FROM documents),
-         |dwf AS (SELECT doc_id, word FROM dw WHERE word <> ''),
-         |nt AS (
-         |  SELECT doc_id,
-         |    CAST(-sum(coalesce(t_lm.lp, (SELECT lp FROM t_oov))) AS BIGINT) AS nll_tgt
-         |  FROM dwf LEFT JOIN t_lm USING (word) GROUP BY doc_id),
-         |nb AS (
-         |  SELECT doc_id, count(*) AS n_tokens,
-         |    CAST(-sum(coalesce(b_lm.lp, (SELECT lp FROM b_oov))) AS BIGINT) AS nll_bg
-         |  FROM dwf LEFT JOIN b_lm USING (word) GROUP BY doc_id)
-         |SELECT doc_id, n_tokens, nll_bg - nll_tgt AS w_micro,
-         |  (nll_bg - nll_tgt) > 0 AS kept
-         |FROM nb JOIN nt USING (doc_id) ORDER BY doc_id""".stripMargin,
-
-    // Full-table recompute in one pass — hash equality against the
-    // Spark side's base⊎delta partial-state merge IS the incremental-
-    // maintenance identity proof.
-    "mv_incremental_merge" ->
-      """SELECT CAST(year(o_orderdate) AS BIGINT) AS bucket, o_orderpriority,
-        |  count(o_totalprice) AS n,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
-        |  min(o_totalprice) AS mn, max(o_totalprice) AS mx,
-        |  round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-        |    / count(o_totalprice), 6) AS avg_v
-        |FROM orders GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
-  )
-
-  /** DuckDB twin of [[graft.ops.Graph.pagerank]] over the planted doc
-    * graph: `iters` chained MATERIALIZED rank CTEs, each one LEFT JOIN
-    * of the node universe against the per-dst contribution sum —
-    * BIGINT micros with `//` floor-div (identical to Spark's `div` on
-    * non-negative operands). */
-  private def pagerankOracle(iters: Int): String = {
-    val rounds = (1 to iters).map { r =>
-      s"""r$r AS MATERIALIZED (
-         |  SELECT alln.node, CAST(150000 + coalesce(m.s, 0) AS BIGINT) AS r
-         |  FROM alln LEFT JOIN (
-         |    SELECT ed.dst AS node, sum((85 * p.r) // (100 * ed.deg)) AS s
-         |    FROM ed JOIN r${r - 1} p ON ed.src = p.node GROUP BY ed.dst) m
-         |  USING (node))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH nn AS (SELECT count(*) AS n_nodes FROM documents),
-       |e AS MATERIALIZED (
-       |  SELECT doc_id AS src, (doc_id * 31 + 7) % n_nodes AS dst
-       |  FROM documents, nn
-       |  UNION ALL
-       |  SELECT doc_id, (doc_id * 17 + 3) % n_nodes FROM documents, nn),
-       |ed AS MATERIALIZED (
-       |  SELECT e.src, e.dst, d.deg
-       |  FROM e JOIN (SELECT src, count(*) AS deg FROM e GROUP BY src) d
-       |  USING (src)),
-       |alln AS MATERIALIZED (SELECT doc_id AS node FROM documents),
-       |r0 AS (SELECT doc_id AS node, CAST(1000000 AS BIGINT) AS r FROM documents),
-       |$rounds
-       |SELECT node, r AS rank_micro FROM r$iters ORDER BY node""".stripMargin
-  }
-
-  /** TextRank oracle: the [[pagerankOracle]] round body verbatim over
-    * the word co-occurrence graph (STRING node keys — the rounds SQL
-    * is type-agnostic). Tokenize → len≥4 filter → df≥5 vocab →
-    * within-doc re-rank → adjacency pairs both directions. */
-  private def textrankOracle(iters: Int): String = {
-    val rounds = (1 to iters).map { r =>
-      s"""r$r AS MATERIALIZED (
-         |  SELECT alln.node, CAST(150000 + coalesce(m.s, 0) AS BIGINT) AS r
-         |  FROM alln LEFT JOIN (
-         |    SELECT ed.dst AS node, sum((85 * p.r) // (100 * ed.deg)) AS s
-         |    FROM ed JOIN r${r - 1} p ON ed.src = p.node GROUP BY ed.dst) m
-         |  USING (node))""".stripMargin
-    }.mkString(",\n")
-    s"""WITH xs AS (
-       |  SELECT doc_id, string_split_regex(lower(text), '\\s+') AS xs
-       |  FROM documents WHERE lang = 'en'),
-       |ix AS (
-       |  SELECT doc_id, xs, unnest(generate_series(1, len(xs))) AS i
-       |  FROM xs),
-       |tok AS MATERIALIZED (
-       |  SELECT doc_id, xs[i] AS w, i AS pos FROM ix
-       |  WHERE length(xs[i]) >= 4),
-       |df AS (SELECT w, count(DISTINCT doc_id) AS dfreq FROM tok GROUP BY 1),
-       |voc AS MATERIALIZED (SELECT w FROM df WHERE dfreq >= 5),
-       |sq AS MATERIALIZED (
-       |  SELECT t.doc_id, t.w,
-       |    ROW_NUMBER() OVER (PARTITION BY t.doc_id ORDER BY t.pos) AS rn
-       |  FROM tok t JOIN voc USING (w)),
-       |pr AS (
-       |  SELECT a.w AS src, b.w AS dst FROM sq a
-       |  JOIN sq b ON b.doc_id = a.doc_id AND b.rn = a.rn + 1),
-       |e AS MATERIALIZED (
-       |  SELECT src, dst FROM pr UNION ALL SELECT dst, src FROM pr),
-       |ed AS MATERIALIZED (
-       |  SELECT e.src, e.dst, d.deg
-       |  FROM e JOIN (SELECT src, count(*) AS deg FROM e GROUP BY src) d
-       |  USING (src)),
-       |alln AS MATERIALIZED (SELECT w AS node FROM voc),
-       |r0 AS (SELECT w AS node, CAST(1000000 AS BIGINT) AS r FROM voc),
-       |$rounds
-       |SELECT node, r AS rank_micro FROM r$iters ORDER BY node""".stripMargin
-  }
-
-  /** The x4_lm_nll twin's LM-training CTE chain, name-prefixed so two
-    * models (target/background) can coexist in one query. The ln
-    * expression shape must stay EXACTLY the Spark side's
-    * ([[graft.ops.TextAnalysis.unigramLm]]) — the single double op is
-    * then IEEE-identical across engines. */
-  private def lmCtes(p: String, whereSql: String): String =
-    s"""${p}rw AS MATERIALIZED (
-       |  SELECT unnest(string_split_regex(lower(text), '\\s+')) AS word
-       |  FROM documents$whereSql),
-       |${p}c AS MATERIALIZED (
-       |  SELECT word, count(*) AS c FROM ${p}rw WHERE word <> '' GROUP BY word),
-       |${p}t AS MATERIALIZED (SELECT sum(c) AS n, count(*) AS v FROM ${p}c),
-       |${p}lm AS MATERIALIZED (
-       |  SELECT word,
-       |    CAST(floor(ln((c + 1.0) / CAST(n + v AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS lp
-       |  FROM ${p}c, ${p}t),
-       |${p}oov AS MATERIALIZED (
-       |  SELECT CAST(floor(ln((0 + 1.0) / CAST(n + v AS DOUBLE)) * 1000000 + 0.5) AS BIGINT) AS lp
-       |  FROM ${p}t)""".stripMargin
 }

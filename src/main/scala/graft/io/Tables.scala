@@ -28,8 +28,8 @@ object Tables {
     * IDENTITY, so nothing here tunes FOR local mode.
     *
     * Deliberately NOT applied inside the table loaders: a same-session
-    * alternating A/B (SpreadAb, 3 pairs/query; now `Probe ab` on
-    * [[ScanSpreadKey]]; BENCH_NOTES.md "Retired dev mains") measured the
+    * alternating A/B (SpreadAb, 3 pairs/query, through a since-removed
+    * conf switch; BENCH_NOTES.md "Retired dev mains") measured the
     * blanket form a large net LOSS — only queries whose per-row map
     * work is genuinely expensive win (codec kernels 0.68×, shingle
     * hashing 0.69×), while ordinary scan→agg/join queries pay the
@@ -40,17 +40,12 @@ object Tables {
   def spreadScan(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
     val cores = spark.sparkContext.defaultParallelism
     if (cores <= 1) return df
-    if (!spark.conf.getOption(ScanSpreadKey).forall(_.toBoolean)) return df
     val size =
       try java.nio.file.Files.size(java.nio.file.Paths.get(path))
       catch { case _: Exception => Long.MaxValue }
     val oneSplit = size <= spark.sessionState.conf.filesMaxPartitionBytes
     if (oneSplit) df.repartition(cores) else df
   }
-
-  /** Kill switch for [[spreadScan]] (A/B instrument + production escape
-    * hatch): `spark.graft.scan.spread=false` disables the widening. */
-  val ScanSpreadKey = "spark.graft.scan.spread"
 
   /** [[spreadScan]] for a loaded fixture table, by name. */
   def spreadTable(spark: SparkSession, sfDir: String, name: String,

@@ -195,14 +195,15 @@ object Dedup {
       estPrefilter: Double = 0.0): DataFrame = {
     // Shingle HASH sets (array<bigint>) via the codegen'd kernel — the
     // shingle string never materializes (graft.expr.WordShingleHashes;
-    // ~30× over the interpreted HOF form). Persisted because they feed
+    // ~30× over the interpreted HOF form). Frozen because they feed
     // the signature path AND both sides of the verify join (3 plan
-    // branches — Spark has no cross-branch CSE). Disk-backed, size ∝
-    // corpus tokens; the standard "write shingles once" LSH shape.
+    // branches — Spark has no cross-branch CSE); the caller's
+    // Pins.scoped block frees it. Size ∝ corpus tokens; the standard
+    // "write shingles once" LSH shape.
     val shingled = df.select(col(id).as("_id"),
         graft.expr.WordShingleHashes(col(text), shingleK, distinct = true).as("_sh"))
       .withColumn("_nsh", size(col("_sh")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Pins.freeze)
     // Signature via explode + one hash-agg with b·r min() slots rather
     // than array-aggregate lambdas: higher-order functions are
     // CodegenFallback (interpreted per element), while min() aggregates
@@ -236,7 +237,7 @@ object Dedup {
     // verify, so output is a deterministic function of the corpus —
     // never of its density. estPrefilter > 0 pins the cutoff; < 0
     // opts into AUTO: one cheap action over the BOUNDED bucket table
-    // (≤ maxBucket ids per row) plus a count of the already-persisted
+    // (≤ maxBucket ids per row) plus a count of the already-frozen
     // shingle table measures candidate density, and only a dense
     // regime (> DensePairsPerDoc) turns the prune on, at minJaccard −
     // 3σ, σ = sqrt(J(1−J)/n) — a true pair at the threshold clears
@@ -252,8 +253,7 @@ object Dedup {
     val cutoff: Double =
       if (estPrefilter >= 0.0) estPrefilter
       else {
-        val bk = buckets.persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val bk = Pins.freeze(buckets)
         val cand = (bk.agg(sum(size(col("_ids")).cast("long") *
             (size(col("_ids")) - 1)).as("c"))
           .first() match {
@@ -941,11 +941,11 @@ object Dedup {
     // tokenize + hash + majority-vote in one compiled pass, so the
     // fingerprint stage is NARROW — no explode, no per-token shuffle, no
     // wide aggregate. (The previous explode + 64 sum()-slot form shuffled
-    // one row per corpus token.) fp is persisted because both sides of
-    // the candidate self-join read it (no cross-branch CSE). Footprint:
-    // 2 longs per doc.
+    // one row per corpus token.) fp is frozen because both sides of
+    // the candidate self-join read it (no cross-branch CSE); the
+    // caller's Pins.scoped block frees it. Footprint: 2 longs per doc.
     val fp = df.select(col(id).as("_id"), graft.expr.SimHash64(col(text)).as("_fp"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .transform(Pins.freeze)
     val blocks = fp.select(col("_id"), col("_fp"),
       explode(transform(sequence(lit(0), lit(3)), b =>
         struct(b.as("block_id"), call_function("shiftright", col("_fp"), b * lit(16)).bitwiseAND(lit(0xFFFFL)).as("block_val")))).as("_b"))

@@ -113,4 +113,27 @@ class PinsSpec extends AnyFunSuite with SparkTestBase {
       assert(files() > f1, "streamMinhashIncr wrote no checkpoint files")
     } finally spark.conf.set(Pins.ReliableCheckpointKey, "false")
   }
+
+  test("near-dup functions leave no cached or frozen frame after their scope") {
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val docs = Seq(
+      1L -> "the quick brown fox jumps over the lazy dog by the river",
+      2L -> "a completely different sentence about parquet and spark",
+      3L -> "the quick brown fox jumps over the lazy dog by the river",
+      4L -> "the quick brown fox jumps over the lazy cat by the river"
+    ).toDF("doc_id", "text")
+    val found = Pins.scoped {
+      Seq(Dedup.minHashNearDups(docs, "doc_id", "text"),
+        Dedup.minHashNearDups(docs, "doc_id", "text", estPrefilter = -1),
+        Dedup.simHashNearDups(docs, "doc_id", "text"))
+        .map(_.select("id_a", "id_b").as[(Long, Long)].collect().toSet)
+    }
+    assert(found.forall(_.contains((1L, 3L))), found)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"near-dup left RDDs ${left.mkString(",")} pinned")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "near-dup left a CacheManager entry")
+  }
 }

@@ -24,21 +24,22 @@ class QueriesSmokeSpec extends AnyFunSuite with SparkTestBase {
     assert(stale.isEmpty, s"oracle SQL without query: $stale")
   }
 
-  // A Scala Map literal DEDUPS duplicate keys silently (last wins) —
-  // two queries registered under one name means one of them, and its
-  // oracle, never runs anywhere (found live: two sql_lateral_topn
-  // entries shadowed each other for a round). The Map can't show this
-  // after the fact, so scan the source registration sites.
-  test("no duplicate registration names in the source (Map keys dedup silently)") {
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")))
-    def dups(re: scala.util.matching.Regex): Seq[String] =
-      re.findAllMatchIn(src).map(_.group(1)).toSeq
-        .groupBy(identity).collect { case (k, v) if v.size > 1 => k }.toSeq
-    val qDups = dups("\"(\\w+)\" -> \\(\\(s, dir".r)
-    assert(qDups.isEmpty, s"duplicate query registrations: $qDups")
-    val oDups = dups("\"(\\w+)\" ->\\s*\n?\\s*\"\"\"".r)
-    assert(oDups.isEmpty, s"duplicate oracle registrations: $oDups")
+  // Two gates registered under one name would leave one of them, and
+  // its oracle, unrun anywhere (found live: two sql_lateral_topn entries
+  // shadowed each other for a round, back when the registry was a Map
+  // literal, which keeps the last duplicate key silently).
+  test("the registry refuses a duplicate gate name and names it") {
+    val g = SparkEntry.gates.head
+    val e = intercept[IllegalArgumentException] {
+      gates.Gate.index(Seq(g, SparkEntry.gates(1), g.copy(oracle = "SELECT 1")))
+    }
+    assert(e.getMessage.contains(s"duplicate gate names: ${g.name}"), e.getMessage)
+  }
+
+  test("the registry holds 359 distinct gates") {
+    assert(SparkEntry.gates.size == 359)
+    assert(SparkEntry.gates.map(_.name).distinct.size == 359)
+    assert(SparkEntry.queries.size == 359 && SparkEntry.oracleSql.size == 359)
   }
 
   /** Ids of the checkpointed RDDs still pinned in the block store. */
