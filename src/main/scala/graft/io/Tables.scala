@@ -16,6 +16,13 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     spark.read.parquet(s"$sfDir/$name.parquet")
 
+  /** [[load]] of only the `columns` declared (a DDL string such as
+    * `"vec_id long, embedding array<float>"`): the read runs no
+    * schema-inference job, which `load` runs on every call. */
+  def loadColumns(spark: SparkSession, sfDir: String, name: String,
+      columns: String): DataFrame =
+    spark.read.schema(columns).parquet(s"$sfDir/$name.parquet")
+
   /** Scale-adaptive scan widening (optimization guide §2.5, "input
     * skew: one huge unsplittable file"): the fixture tables are
     * single-file, single-ROW-GROUP parquet, so Spark's split planning

@@ -168,12 +168,6 @@ object Dedup {
     transform(sequence(lit(0), lit(bands - 1)), b =>
       struct(b.as("band_id"), xxhash64(b, concat_ws(",", slice(signature, b * lit(rows) + lit(1), lit(rows)))).as("band_hash")))
 
-  /** X3 — full MinHash/LSH near-dup pipeline: returns candidate pairs
-    * (id_a < id_b) with their exact shingle-Jaccard, filtered to
-    * `minJaccard`. Scale shape: shuffle 1 groups by band bucket; buckets
-    * are capped (`maxBucket`) to bound skew blowup (a degenerate bucket —
-    * e.g. empty docs — would otherwise produce |bucket|² pairs); shuffle 2
-    * dedups pairs; the verify join re-reads shingles by id. */
   /** Candidate-density threshold (banding pairs per doc) above which
     * AUTO mode turns the signature-estimate prefilter on. Sparse
     * corpora (the common case: few true near-dups, banding candidates
@@ -183,6 +177,12 @@ object Dedup {
     * verify join behind the n-longs-per-doc signature estimate. */
   val DensePairsPerDoc = 8.0
 
+  /** X3 — full MinHash/LSH near-dup pipeline: returns candidate pairs
+    * (id_a < id_b) with their exact shingle-Jaccard, filtered to
+    * `minJaccard`. Scale shape: shuffle 1 groups by band bucket; buckets
+    * are capped (`maxBucket`) to bound skew blowup (a degenerate bucket —
+    * e.g. empty docs — would otherwise produce |bucket|² pairs); shuffle 2
+    * dedups pairs; the verify join re-reads shingles by id. */
   def minHashNearDups(
       df: DataFrame,
       id: String,

@@ -15,10 +15,11 @@ import org.apache.spark.sql.functions._
   * gives the same at-least-once safety as the reference's single
   * transaction (SURVEY §2.4 W4, §7.4.2).
   *
-  * Scale notes: one shuffle on the merge key; partial aggregation
-  * (`max_by` form) combines map-side, so the shuffle carries one row per
-  * key per map partition — this is the 100 TB-safe shape. No driver-side
-  * state.
+  * Scale notes: one shuffle on the merge key. In the `max_by` form
+  * ([[Merge.upsertLwwAgg]]) the partial aggregate combines map-side, so
+  * the shuffle carries one row per key per map partition. Its struct
+  * buffer makes Spark plan a `SortAggregate`, not a hash aggregate: the
+  * rows are sorted on both sides of the shuffle. No driver-side state.
   */
 object Merge {
 
@@ -45,8 +46,11 @@ object Merge {
   }
 
   /** W4 alternate — `max_by(struct(*), ordering)` form. Same semantics for
-    * a total ordering; preferred at scale because hash aggregation with
-    * map-side combine avoids the full sort a window needs. */
+    * a total ordering. The partial aggregate combines map-side, so the
+    * shuffle carries one row per key per map partition, where the
+    * window form shuffles every row. It does not avoid a sort: the
+    * struct buffer makes Spark plan a `SortAggregate`, which sorts on
+    * both sides of the shuffle. */
   def upsertLwwAgg(
       existing: DataFrame,
       incoming: DataFrame,

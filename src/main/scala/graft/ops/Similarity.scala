@@ -1,7 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+import org.apache.spark.sql.expressions.{Aggregator, Window}
 import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (EXT X2 — SURVEY §2.5):
@@ -143,8 +148,11 @@ object Similarity {
     *   - update = fixed-point component sums ([[labelCentroidSums]]'s
     *     contract: integer addition is associative, so means don't
     *     depend on partition order).
-    * Per round the corpus is touched twice (assign, sum); driver state
-    * is O(k·dim) — the centroid table itself — never O(rows). Empty
+    * Per round the corpus is read once, in one narrow job: each task
+    * assigns its rows and folds their sums ([[foldCentroidSums]]), and
+    * the driver merges the partials — after the sample, one job per
+    * round. Driver state is O(k·dim) — the centroid table itself —
+    * never O(rows). Empty
     * clusters keep their previous centroid. Returns (cent_id, cent_vec,
     * cent_n) ready for [[ivfTopKWith]]. */
   def trainKMeans(corpus: DataFrame, id: String, vec: String,
@@ -197,15 +205,14 @@ object Similarity {
       val best = nearestCentroid(heldCentroids(centsDf)) { (cv, cn) =>
         cosineWithNorms(dot(col("_v"), cv), col("_n"), cn) }
       val assigned = base.withColumn("_n", normSq(col("_v")))
-        .select(col("_v"), best.getField("cent_id").as("cid"))
-      val sums = labelCentroidSums(assigned, "cid", "_v", scale)
-        .collect()
-        .groupBy(_.getLong(0))
+        .select(best.getField("cent_id").as("cid"), col("_v"))
+      val sums = foldCentroidSums(assigned, "cid", "_v", scale)
+        .groupBy(_._1)
         .map { case (cid, rows) =>
           val dim = rows.length
           val v = new Array[Float](dim)
-          rows.foreach { r =>
-            v(r.getLong(1).toInt) = (r.getLong(2).toDouble / (r.getLong(3) * scale)).toFloat
+          rows.foreach { case (_, pos, sumFp, n) =>
+            v(pos.toInt) = (sumFp.toDouble / (n * scale)).toFloat
           }
           cid -> v.toSeq
         }
@@ -509,28 +516,58 @@ object Similarity {
   }
 
   /** Write an assignment into `lists/` and its per-list stats into
-    * `stats/` (tagged `phase`), returning the stat rows. The assignment
-    * is consumed twice (lists write + stats agg); the eager pin
-    * evaluates the argmax ONCE and both consumers read
-    * executor-resident blocks, freed before return. The stat rows come
-    * back in one collect, and the stats table is written from that
-    * local relation. */
+    * `stats/` (tagged `phase`), returning the stat rows (cent_id, n,
+    * sum_sim_micro) of the non-empty lists, ascending by cent_id. The
+    * lists write is the only job that reads the assignment: the stat
+    * rows are observed on it ([[ListStats]] through `Dataset.observe`),
+    * and the stats table is written from them as a local relation. */
   private def writeAssigned(assignment: DataFrame, path: String,
-      mode: String, phase: String): Array[org.apache.spark.sql.Row] = {
+      mode: String, phase: String): Array[Row] = {
     val spark = assignment.sparkSession
-    val assigned = Pins.freeze(assignment)
-    assigned
+    val obs = org.apache.spark.sql.Observation()
+    assignment
+      .observe(obs, udaf(ListStats, ListStats.inputEncoder)(
+        col("cent_id"), col("_sim_micro")).as("lists"))
       .select(col("cid"), col("_v"), col("_n"), col("cent_id"))
       .write.mode(mode).partitionBy("cent_id")
       .parquet(s"$path/lists")
-    val rows = assigned.groupBy(col("cent_id"))
-      .agg(count(lit(1)).as("n"), sum(col("_sim_micro")).as("sum_sim_micro"))
-      .collect()
+    val rows: Array[Row] = obs.get("lists").asInstanceOf[scala.collection.Seq[Row]]
+      .map(r => new GenericRowWithSchema(
+        Array[Any](r.getLong(0), r.getLong(1), r.getLong(2)), batchStatsSchema))
+      .toArray
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), batchStatsSchema)
       .withColumn("phase", lit(phase))
       .coalesce(1).write.mode(mode).parquet(s"$path/stats")
-    Pins.free(assigned)
     rows
+  }
+
+  /** Exact per-list (n, Σ _sim_micro) of an assignment's (cent_id,
+    * _sim_micro) rows: each task folds its rows into a map by cent_id
+    * in place, and the partial maps merge on the driver — O(lists)
+    * state, never O(rows). The output is (cent_id, n, sum_sim_micro)
+    * ascending by cent_id: the rows a `groupBy(cent_id)` with
+    * `count` and `sum` gives (SimilaritySpec pins the equality). */
+  private object ListStats
+      extends Aggregator[(Long, Long), mutable.LongMap[Array[Long]], Seq[(Long, Long, Long)]] {
+    type Buf = mutable.LongMap[Array[Long]]
+    val inputEncoder: Encoder[(Long, Long)] =
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong)
+    def zero: Buf = mutable.LongMap.empty
+    private def add(b: Buf, list: Long, n: Long, sim: Long): Buf = {
+      val s = b.getOrElseUpdate(list, Array(0L, 0L))
+      s(0) += n; s(1) += sim
+      b
+    }
+    def reduce(b: Buf, row: (Long, Long)): Buf = add(b, row._1, 1L, row._2)
+    def merge(x: Buf, y: Buf): Buf = {
+      y.foreachEntry((list, s) => add(x, list, s(0), s(1)))
+      x
+    }
+    def finish(b: Buf): Seq[(Long, Long, Long)] =
+      b.toSeq.sortBy(_._1).map { case (list, s) => (list, s(0), s(1)) }
+    def bufferEncoder: Encoder[Buf] = Encoders.javaSerialization[Buf]
+    def outputEncoder: Encoder[Seq[(Long, Long, Long)]] =
+      ExpressionEncoder[Seq[(Long, Long, Long)]]()
   }
 
   /** INCREMENTAL index maintenance — the path that makes the persisted
@@ -1047,6 +1084,63 @@ object Similarity {
       .groupBy(col(label), col("pos").cast("long").as("pos"))
       .agg(sum(floor(col("val") * lit(scale.toDouble)).cast("long")).as("sum_fp"),
         count(lit(1)).as("n"))
+
+  /** [[labelCentroidSums]] in one narrow job, for a non-null long
+    * label: each task folds its rows into per-label component sums and
+    * counts in place ([[CentroidSums]]: the same `floor(v · scale)` per
+    * component, summed as longs), and the driver merges the partials —
+    * O(labels · dim) state, no shuffle. Integer addition is
+    * associative, so the (label, pos, sum_fp, n) rows equal
+    * labelCentroidSums' on the same input (SimilaritySpec pins it),
+    * here ascending by (label, pos). [[trainKMeans]]' update step. */
+  private[graft] def foldCentroidSums(df: DataFrame, label: String, vec: String,
+      scale: Long = 1000000L): Seq[(Long, Long, Long, Long)] =
+    df.select(col(label).cast("long"), col(vec)).queryExecution.toRdd
+      .aggregate(new CentroidSums(scale.toDouble))(_ add _, _ merge _)
+      .rows
+
+  /** Per-label fixed-point component sums and element counts, each
+    * grown to the label's longest vector. A null label or vector adds
+    * nothing; a null component is counted but not summed, as `sum`
+    * and `count(1)` over posexplode's rows treat it. */
+  private final class CentroidSums(scale: Double) extends Serializable {
+    private val byLabel = mutable.LongMap.empty[(Array[Long], Array[Long])]
+
+    private def slot(label: Long, dim: Int): (Array[Long], Array[Long]) = {
+      val (s, n) = byLabel.getOrElse(label, (Array.emptyLongArray, Array.emptyLongArray))
+      val out = if (s.length >= dim) (s, n)
+        else (java.util.Arrays.copyOf(s, dim), java.util.Arrays.copyOf(n, dim))
+      byLabel.update(label, out)
+      out
+    }
+
+    def add(r: InternalRow): CentroidSums = {
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        val v = r.getArray(1)
+        val (s, n) = slot(r.getLong(0), v.numElements())
+        var i = 0
+        while (i < v.numElements()) {
+          n(i) += 1
+          if (!v.isNullAt(i)) s(i) += math.floor(v.getFloat(i).toDouble * scale).toLong
+          i += 1
+        }
+      }
+      this
+    }
+
+    def merge(o: CentroidSums): CentroidSums = {
+      o.byLabel.foreachEntry { case (label, (os, on)) =>
+        val (s, n) = slot(label, os.length)
+        var i = 0
+        while (i < os.length) { s(i) += os(i); n(i) += on(i); i += 1 }
+      }
+      this
+    }
+
+    def rows: Seq[(Long, Long, Long, Long)] =
+      byLabel.toSeq.sortBy(_._1).flatMap { case (label, (s, n)) =>
+        s.indices.map(i => (label, i.toLong, s(i), n(i))) }
+  }
 
   /** Quantized ANN top-k: candidates are scored on the int8
     * representation (exact LONG dot products via the codegen'd

@@ -37,11 +37,13 @@ case class RestAuthConfig(baseUrl: String, username: String,
   * into a DDoS target — one POST per executor JVM is the ceiling, and
   * a 401 on a cached token invalidates + retries once (token expiry
   * mid-job). Built on `java.net.http.HttpClient` (JDK) and Jackson
-  * (already on Spark's runtime classpath) — no new dependencies. */
+  * (already on Spark's runtime classpath) — no new dependencies. Every
+  * instance in a JVM sends through one `HttpClient`
+  * ([[HttpRestClient.http]]), so one selector thread and one connection
+  * pool serve every partition's reader and the planning probe. */
 class HttpRestClient(cfg: RestAuthConfig) extends Serializable {
 
-  @transient private lazy val http: HttpClient = HttpClient.newBuilder()
-    .connectTimeout(Duration.ofSeconds(10)).build()
+  import HttpRestClient.http
   @transient private lazy val om = new ObjectMapper()
 
   private def jsonStr(s: String): String =
@@ -130,6 +132,12 @@ class HttpRestClient(cfg: RestAuthConfig) extends Serializable {
 }
 
 object HttpRestClient {
+  /** The JVM's one client, shared by every partition's reader: each
+    * `HttpClient` starts its own selector thread and keeps its own
+    * connection pool. */
+  private lazy val http: HttpClient = HttpClient.newBuilder()
+    .connectTimeout(Duration.ofSeconds(10)).build()
+
   /** Per-JVM token cache keyed by (baseUrl, username) — bounds auth
     * traffic to one POST per executor JVM regardless of task count. */
   private val tokenCache = new ConcurrentHashMap[String, String]()

@@ -1,7 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.InSet
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 
@@ -119,18 +123,23 @@ object Streams {
     call_function("div", col(id), lit(span))
 
   /** Pin a trigger's rows once ([[graft.ops.Pins.freeze]]) and return them
-    * with their logical-batch ids in ascending order. The ids are
-    * observed on the pin's own job (`collect_set` through
-    * `Dataset.observe`), so regrouping a trigger costs no job of its
-    * own. The caller frees the pin. */
-  private def pinTrigger(batch: DataFrame, id: String,
-      span: Long): (DataFrame, Seq[Long]) = {
+    * with `seen`, an aggregate into an array of longs (the trigger's
+    * logical batches, or its ids), observed on the pin's own job through
+    * `Dataset.observe`: regrouping a trigger costs no job of its own.
+    * The caller frees the pin. */
+  private def pinTrigger(batch: DataFrame, seen: Column): (DataFrame, Seq[Long]) = {
     val obs = org.apache.spark.sql.Observation()
-    val pinned = graft.ops.Pins.freeze(
-      batch.observe(obs, collect_set(logicalBatch(id, span)).as("bs")))
-    (pinned, obs.get("bs").asInstanceOf[scala.collection.Seq[Long]]
-      .toSeq.sorted)
+    val pinned = graft.ops.Pins.freeze(batch.observe(obs, seen.as("seen")))
+    (pinned, obs.get("seen").asInstanceOf[scala.collection.Seq[Long]].toSeq)
   }
+
+  /** `c IN ids` with the ids bound as data: the generated code reads one
+    * hash set, so a new id list compiles nothing (`isin` inlines up to
+    * 10 values into the generated source). A semi join against a local
+    * relation would also keep the ids out of the code, but its
+    * broadcast is one more job per consumer. */
+  private def inIds(c: Column, ids: Seq[Long]): Column =
+    ColumnBridge.toColumn(InSet(ColumnBridge.toExpr(c), ids.toSet[Any]))
 
   /** Stage logical stream batches as ONE Spark job (opt guide §2.4):
     * `withB` carries a `_b` batch column; hash-repartitioning by `_b`
@@ -140,32 +149,31 @@ object Streams {
     * could straddle triggers). Each part file is then moved into
     * `landing` as `batchNNNN.parquet` with strictly increasing mtimes.
     * Replaces the previous per-batch filter+coalesce(1)+write loop,
-    * which re-scanned the source once PER BATCH. */
+    * which re-scanned the source once PER BATCH. Only batches 0, 1, …
+    * are staged (a negative or null `_b` never is), and an empty one
+    * gets no file: its trigger would be a no-op. Returns the batch count,
+    * the highest staged batch + 1 (0 when none is). */
   private def stageBatchFiles(withB: org.apache.spark.sql.DataFrame,
-      nBatches: Int, root: java.nio.file.Path,
-      landing: java.nio.file.Path): Unit = {
+      root: java.nio.file.Path, landing: java.nio.file.Path): Int = {
     import java.nio.file._
     val stage = root.resolve("stage_all")
-    withB.repartition(nBatches, col("_b"))
+    withB.repartition(col("_b"))
       .write.mode("overwrite").partitionBy("_b").parquet(stage.toString)
-    (0 until nBatches).foreach { b =>
-      val dir = stage.resolve(s"_b=$b")
-      // an EMPTY logical batch gets no partition dir: skip it — the old
-      // per-batch loop staged a 0-row file whose trigger was a no-op
-      // (no rows → no logical batch → no verdict/index work), so no
-      // file at all is behaviorally identical
-      if (Files.exists(dir)) {
-        val part = listDir(dir).find(
-          _.getFileName.toString.endsWith(".parquet")).getOrElse(
-          throw new IllegalStateException(
-            s"stageBatchFiles: no parquet file staged for batch $b"))
-        val tgt = landing.resolve(f"batch$b%04d.parquet")
-        Files.move(part, tgt, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(tgt,
-          attribute.FileTime.fromMillis(1000000000000L + b * 60000L)): Unit
-      }
+    val batches = listDir(stage).map(_.getFileName.toString)
+      .filter(_.startsWith("_b=")).flatMap(_.stripPrefix("_b=").toLongOption)
+      .filter(_ >= 0L).sorted
+    batches.foreach { b =>
+      val part = listDir(stage.resolve(s"_b=$b")).find(
+        _.getFileName.toString.endsWith(".parquet")).getOrElse(
+        throw new IllegalStateException(
+          s"stageBatchFiles: no parquet file staged for batch $b"))
+      val tgt = landing.resolve(f"batch$b%04d.parquet")
+      Files.move(part, tgt, StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(tgt,
+        attribute.FileTime.fromMillis(1000000000000L + b * 60000L)): Unit
     }
     LocalFs.deleteTree(stage)
+    batches.lastOption.fold(0)(_.toInt + 1)
   }
 
   private def stageLandingDir(sfDir: String): String =
@@ -894,14 +902,22 @@ object Streams {
     * Micro-batch determinism: arrivals are staged as one file per
     * logical batch (`doc_id div span`), drained with
     * `maxFilesPerTrigger=1` in mtime order. Inside `foreachBatch` the
-    * trigger's shingled rows are pinned ONCE (its logical-batch ids
-    * observed on the pin's own job, as in [[streamIvfIngest]]), then
-    * STILL regrouped by logical batch — narrow slices of the pin —
-    * and processed in ascending order with an index append between
-    * groups, so the verdict sequence is identical even if the source
-    * coalesces files into one trigger. Admission is batch-granular:
-    * docs in the same logical batch never block each other (the index
-    * only grows between batches) — the contract the oracle replays.
+    * trigger's shingled rows are pinned ONCE (their doc ids observed on
+    * the pin's own job), then STILL regrouped by logical batch — narrow
+    * slices of the pin — and processed in ascending order with an
+    * index append between groups, so the verdict sequence is identical
+    * even if the source coalesces files into one trigger. Admission is
+    * batch-granular: docs in the same logical batch never block each
+    * other (the index only grows between batches) — the contract the
+    * oracle replays.
+    *
+    * Spark jobs: before the drain, the seed's two index writes and the
+    * staging write (its shuffle under AQE adds one); per trigger, the
+    * pin; per logical batch, ONE verdict action (the blockers of the
+    * batch's docs, folded per task and merged on the driver, after the
+    * two index tables' broadcasts) and the two index appends. A doc
+    * without a blocker gets its verdict on the driver, from the pin's
+    * observed ids, and so do `batch_id` and `admitted`.
     *
     * Returns one row per streamed doc:
     * (doc_id, batch_id, admitted, n_blockers, first_blocker).
@@ -933,15 +949,19 @@ object Streams {
         WordShingleHashes(col("text"), shingleK, distinct = true).as("sh"))
       .withColumn("n", size(col("sh")))
     // prefix postings under the hash total order: smallest
-    // n − ceil(t·n) + 1 hashes of each set
-    def postings(df: DataFrame): DataFrame = df
+    // n − ceil(t·n) + 1 hashes of each set, as (`carry`…, h) rows; the
+    // index holds (doc_id, n, h)
+    def postings(df: DataFrame,
+        carry: Seq[Column] = Seq(col("doc_id"), col("n"))): DataFrame = df
       .withColumn("_p",
         col("n") - call_function("div", col("n") * thresholdPct + 99, lit(100)) + 1)
-      .select(col("doc_id"), col("n"),
-        explode(slice(array_sort(col("sh")), lit(1), col("_p"))).as("h"))
+      .select(carry :+
+        explode(slice(array_sort(col("sh")), lit(1), col("_p"))).as("h"): _*)
 
     // ---- seed: the pre-existing historical corpus, indexed in batch ----
-    val docs = graft.io.Tables.documents(ss, sfDir)
+    // (the columns read are declared: no schema-inference job)
+    val docs = graft.io.Tables.loadColumns(ss, sfDir, "documents",
+      "doc_id long, text string")
     val hist = shingled(docs
       .filter(col("doc_id") < maxId && col("doc_id") % 5 === 3))
     hist.write.mode("overwrite").parquet(docsDir(0))
@@ -962,49 +982,47 @@ object Streams {
     // one staging job for all logical batches (see [[stageBatchFiles]];
     // the previous loop re-scanned the documents table once per batch)
     stageBatchFiles(strm.withColumn("_b", logicalBatch("doc_id", span)),
-      nBatches, root, landing)
+      root, landing)
 
     // ---- the drain: per logical batch, verdicts then index append ----
     // verdict rows buffer driver-side (≤ span rows per batch) and are
     // returned as ONE local frame after the drain — replaces a per-batch
-    // results-parquet append job plus the final read-back job; the rows
-    // are identical, and the in-batch consumer (admitted ids) reads the
-    // same collected rows instead of re-joining the verdict frame
-    val verdictRows = new scala.collection.mutable.ArrayBuffer[
-      org.apache.spark.sql.Row]()
-    // `inc` is one logical batch's shingled rows: a narrow slice of the
-    // trigger's pin
-    def processLogicalBatch(inc: DataFrame, b: Long): Unit = {
-      val cand = postings(inc)
-        .select(col("doc_id").as("new_id"), col("n").as("_na"), col("h"))
+    // results-parquet append job plus the final read-back job
+    val verdictRows = mutable.ArrayBuffer[Row]()
+    // `inc` is one logical batch's shingled rows, a narrow slice of the
+    // trigger's pin; `ids` are its doc ids, observed on that pin
+    def processLogicalBatch(inc: DataFrame, b: Long, ids: Seq[Long]): Unit = {
+      // the blockers of the batch's docs, in ONE action: the batch's
+      // postings carry their own shingle set and size (no re-join to
+      // `inc`); each task folds its verified pairs into new_id → its
+      // distinct blockers, so a pair found through several shared
+      // prefix hashes collapses there (no `distinct`), and the driver
+      // merges the per-task maps (no shuffle)
+      val blockers = postings(inc,
+          Seq(col("doc_id").as("new_id"), col("n").as("_na"), col("sh").as("_sa")))
         .join(idxPost(gen).select(col("h"), col("doc_id").as("hist_id"),
           col("n").as("_nb")), Seq("h"))
         // size-ratio prune: J ≥ t ⟹ 100·min(|a|,|b|) ≥ t·max(|a|,|b|)
         .filter(least(col("_na"), col("_nb")) * 100 >=
           greatest(col("_na"), col("_nb")) * thresholdPct)
-        .select(col("new_id"), col("hist_id")).distinct()
-      val blockers = cand
-        .join(inc.select(col("doc_id").as("new_id"), col("sh").as("_sa"),
-          col("n").as("_na")), Seq("new_id"))
-        .join(idxDocs(gen).select(col("doc_id").as("hist_id"), col("sh").as("_sb"),
-          col("n").as("_nb")), Seq("hist_id"))
+        .join(idxDocs(gen).select(col("doc_id").as("hist_id"), col("sh").as("_sb")),
+          Seq("hist_id"))
         .withColumn("_i", size(array_intersect(col("_sa"), col("_sb"))))
         .filter(col("_i") * 100 >= (col("_na") + col("_nb") - col("_i")) * thresholdPct)
-        .groupBy(col("new_id"))
-        .agg(count(lit(1)).as("n_blockers"), min(col("hist_id")).as("first_blocker"))
-      val verdicts = inc.select(col("doc_id"))
-        .join(blockers.withColumnRenamed("new_id", "doc_id"), Seq("doc_id"), "left")
-        .select(col("doc_id"), lit(b).as("batch_id"),
-          col("n_blockers").isNull.as("admitted"),
-          coalesce(col("n_blockers"), lit(0L)).as("n_blockers"),
-          col("first_blocker"))
-        .collect()
-      verdictRows ++= verdicts
-      val admittedIds = verdicts.filter(_.getAs[Boolean]("admitted"))
-        .map(_.getAs[Long]("doc_id"))
-      val admitted =
-        if (admittedIds.isEmpty) inc.filter(lit(false))
-        else inc.filter(col("doc_id").isin(admittedIds: _*))
+        .select(col("new_id"), col("hist_id"))
+        .queryExecution.toRdd
+        .aggregate(mutable.LongMap.empty[mutable.Set[Long]])(
+          (m, r) => { m.getOrElseUpdate(r.getLong(0), mutable.Set.empty) += r.getLong(1); m },
+          (x, y) => { y.foreachEntry((id, hs) => x.getOrElseUpdate(id, mutable.Set.empty) ++= hs); x })
+        .map { case (id, hs) => id -> ((hs.size.toLong, hs.min)) }
+      // a doc with no blocker is admitted: its verdict needs no Spark
+      verdictRows ++= ids.map { id =>
+        blockers.get(id) match {
+          case Some((n, first)) => Row(id, b, false, n, first)
+          case None => Row(id, b, true, 0L, null)
+        }
+      }
+      val admitted = inc.filter(inIds(col("doc_id"), ids.filterNot(blockers.contains)))
       admitted.write.mode("append").parquet(docsDir(gen))
       postings(admitted).write.mode("append").parquet(postDir(gen))
       // compaction: fold the accumulated appends into one generation —
@@ -1031,10 +1049,11 @@ object Streams {
         // pin the trigger's shingled rows once, then regroup by LOGICAL
         // batch: verdicts stay deterministic even if the source packs
         // several staged files into one trigger
-        val (pinned, bs) = pinTrigger(shingled(batch), "doc_id", span)
-        bs.foreach { b =>
+        val (pinned, ids) = pinTrigger(shingled(batch), collect_list(col("doc_id")))
+        // Long `/` truncates toward zero, as Spark's `div` does
+        ids.groupBy(_ / span).toSeq.sortBy(_._1).foreach { case (b, ids) =>
           processLogicalBatch(
-            pinned.filter(logicalBatch("doc_id", span) === b), b)
+            pinned.filter(logicalBatch("doc_id", span) === b), b, ids.sorted)
         }
         // free the pin's blocks now (unpersist is a no-op on checkpoints)
         graft.ops.Pins.free(pinned)
@@ -1054,8 +1073,8 @@ object Streams {
 
   /** [[streamIvfIngest]] with the FULL maintain loop closed inside the
     * stream: `degenLastBatch` poisons the final logical batch into the
-    * zero-vector regime (the upstream-model-bug signature) before
-    * staging, and when EITHER detection signal fires inside
+    * zero-vector regime (the upstream-model-bug signature) as it
+    * arrives, and when EITHER detection signal fires inside
     * foreachBatch — the cumulative census or the per-batch
     * admission-fit guard (r14: batch fit under half the build fit; a
     * single poisoned batch dilutes out of the cumulative averages as
@@ -1124,32 +1143,16 @@ object Streams {
     val runId = java.util.UUID.randomUUID().toString.replace("-", "")
     val root = Paths.get(scratchRoot, s"graft_ivfing_$runId")
     val idxDir = root.resolve("index").toString
-    val e = graft.io.Tables.embeddings(ss, sfDir)
-      .select(col("vec_id"), col("embedding"))
+    val e = graft.io.Tables.loadColumns(ss, sfDir, "embeddings",
+      "vec_id long, embedding array<float>")
     val landing = root.resolve("landing")
     Files.createDirectories(landing)
-    val nBatches =
-      (e.agg(max(col("vec_id"))).head().getLong(0) / span).toInt + 1
     // ONE staging pass (opt guide §2.4 — the previous per-batch loop ran
     // nBatches separate filter+write jobs, each a full scan of the
-    // embeddings table): compute the logical batch as a column, apply
-    // the degenerate-batch poison with a when(), hash-repartition by _b
-    // (each batch entirely in one task → exactly ONE file per partition
-    // dir, the invariant the one-file-per-trigger drain needs) and
-    // partitionBy-write once; then move each part file into the landing
-    // dir with the same strictly-increasing mtimes as before. Staged
-    // file CONTENT per batch is identical (same rows, same schema).
-    stageBatchFiles(
-      { val withB = e.withColumn("_b", logicalBatch("vec_id", span))
-        val staged =
-          if (degenLastBatch)
-            withB.select(col("vec_id"),
-              when(col("_b") === (nBatches - 1).toLong,
-                transform(col("embedding"), _ => lit(0.0f)))
-                .otherwise(col("embedding")).as("embedding"), col("_b"))
-          else withB.select(col("vec_id"), col("embedding"), col("_b"))
-        staged },
-      nBatches, root, landing)
+    // embeddings table), which also yields the batch count: the
+    // highest logical batch + 1, i.e. max(vec_id) div span + 1
+    val nBatches = stageBatchFiles(
+      e.withColumn("_b", logicalBatch("vec_id", span)), root, landing)
     // the live index's centroid table, held driver-side across batches
     // as a local frame: k rows the build itself produced, or a retrain
     // rewrote (read back once, with the schema the build wrote). Every
@@ -1180,7 +1183,12 @@ object Streams {
       // jobs of the streaming relation where one suffices — each
       // logical slice here is a narrow filter over the already-local
       // pinned RDD.
-      val vecs = batch
+      // `degenLastBatch` poisons the final batch as it arrives
+      val vecs =
+        if (degenLastBatch && b == nBatches - 1L)
+          batch.select(col("vec_id"),
+            transform(col("embedding"), _ => lit(0.0f)).as("embedding"))
+        else batch
       // the census is maintained INCREMENTALLY (r13): batch 0 seeds the
       // running tables from the build stats; every append folds its own
       // per-list stats in — O(touched lists + 1) per batch instead of a
@@ -1290,8 +1298,9 @@ object Streams {
         // pin the TRIGGER's rows once, then slice logical batches with
         // narrow filters over the local RDD
         ss.sparkContext.setJobDescription("ivf-ingest: checkpoint trigger")
-        val (pinned, bs) = pinTrigger(batch, "vec_id", span)
-        bs.foreach { b =>
+        val (pinned, bs) = pinTrigger(batch,
+          collect_set(logicalBatch("vec_id", span)))
+        bs.sorted.foreach { b =>
           processLogicalBatch(
             pinned.filter(logicalBatch("vec_id", span) === b), b)
         }

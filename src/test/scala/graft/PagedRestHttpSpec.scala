@@ -136,6 +136,19 @@ class PagedRestHttpSpec extends AnyFunSuite with SparkTestBase with BeforeAndAft
     assert(calls.filter(_._2 == 250).map(_._1).sorted == Seq(0, 250, 500, 750))
   }
 
+  test("a live read over 4 partitions starts at most one HttpClient " +
+      "selector thread (one client per JVM, not one per reader)") {
+    reset()
+    def selectors(): Set[String] = Thread.getAllStackTraces.keySet.asScala
+      .map(_.getName).filter(_.matches("HttpClient-\\d+-SelectorManager")).toSet
+    val before = selectors()
+    val df = liveRead.option("pageSize", 250).load()
+    assert(df.rdd.getNumPartitions >= 4)
+    assert(df.count() == TotalUsers)
+    val started = selectors() -- before
+    assert(started.size <= 1, s"the read started selector threads $started")
+  }
+
   test("page-filter pushdown: pruned pages are never requested") {
     reset()
     val df = liveRead.option("pages", 10).option("pageSize", 100).load()

@@ -109,6 +109,34 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(recall >= 0.3, s"trained-IVF recall $recall")
   }
 
+  /** 300 vectors of dimension 8 around four centres, in 3 partitions. */
+  private lazy val blobs: org.apache.spark.sql.DataFrame = {
+    val rnd = new scala.util.Random(5)
+    (0L until 300L).map { i =>
+      val c = (i % 4).toInt
+      (i, Array.tabulate(8)(d => (if (d % 4 == c) 1f else 0f) + rnd.nextFloat() * 0.2f))
+    }.toDF("vec_id", "embedding").repartition(3)
+  }
+
+  test("k-means update: the one-job fold's sums equal labelCentroidSums " +
+      "on the same assignment (ragged vectors and null components too)") {
+    def tuples(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq.sorted
+    val e = blobs
+    val cents = Similarity.trainKMeans(e, "vec_id", "embedding", k = 8, iters = 1)
+    val assigned = Similarity.assignToCentroids(e, "vec_id", "embedding", cents)
+      .repartition(3)
+    val folded = Similarity.foldCentroidSums(assigned, "cent_id", "_v")
+    assert(folded.nonEmpty)
+    assert(folded == tuples(Similarity.labelCentroidSums(assigned, "cent_id", "_v")))
+    val odd = Seq[(Long, Seq[java.lang.Float])](
+        (1L, Seq(1.5f, null, -2.25f)), (1L, Seq(0.1f, 3.0f)), (2L, Seq(-0.5f)),
+        (2L, Seq.empty), (1L, Seq(7.0e-7f)))
+      .toDF("label", "vec").select(col("label"), col("vec").cast("array<float>").as("vec"))
+    assert(Similarity.foldCentroidSums(odd, "label", "vec") ==
+      tuples(Similarity.labelCentroidSums(odd, "label", "vec")))
+  }
+
   test("quantizedTopK: high recall vs exact float brute force; int kernel == HOF form") {
     import spark.implicits._
     val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -350,6 +378,95 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     assert(spark.read.parquet(s"$p/stats").agg(sum(col("n")))
       .head().getLong(0) == n + 1)
     rmTree(p)
+  }
+
+  private val statsSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "cent_id long, n long, sum_sim_micro long")
+
+  /** The two-pass index write the one-job write replaced: the
+    * assignment pinned, the lists written from the pin, then the stat
+    * rows from a groupBy + collect over it. */
+  private def pinnedWriteAssigned(assignment: org.apache.spark.sql.DataFrame,
+      path: String, mode: String, phase: String): Array[org.apache.spark.sql.Row] = {
+    val assigned = graft.ops.Pins.freeze(assignment)
+    assigned.select(col("cid"), col("_v"), col("_n"), col("cent_id"))
+      .write.mode(mode).partitionBy("cent_id").parquet(s"$path/lists")
+    val rows = assigned.groupBy(col("cent_id"))
+      .agg(count(lit(1)).as("n"), sum(col("_sim_micro")).as("sum_sim_micro"))
+      .collect()
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), statsSchema)
+      .withColumn("phase", lit(phase))
+      .coalesce(1).write.mode(mode).parquet(s"$path/stats")
+    graft.ops.Pins.free(assigned)
+    rows
+  }
+
+  private def statTuples(rows: Seq[org.apache.spark.sql.Row]): Seq[(Long, Long, Long)] =
+    rows.map(r => (r.getAs[Long]("cent_id"), r.getAs[Long]("n"),
+      r.getAs[Long]("sum_sim_micro"))).sorted
+
+  test("IVF one-job write: the stat rows observed on the lists write " +
+      "equal the groupBy over the assignment, as multisets") {
+    val e = blobs
+    val cents = Similarity.trainKMeans(e, "vec_id", "embedding", k = 16, iters = 2)
+    val p = java.nio.file.Files.createTempDirectory("ivfrows").toString
+    val rows = Similarity.writeIvfIndex(e, "vec_id", "embedding", cents, p)
+    val grouped = Similarity.assignToCentroids(e, "vec_id", "embedding", cents)
+      .groupBy(col("cent_id"))
+      .agg(count(lit(1)).as("n"), sum(col("_sim_micro")).as("sum_sim_micro"))
+      .collect()
+    assert(rows.nonEmpty && statTuples(rows.toSeq) == statTuples(grouped.toSeq))
+    rmTree(p)
+  }
+
+  test("IVF one-job write: build → append → retrain leave lists/, " +
+      "stats/, centroids/ and the census sidecar equal to the pinned " +
+      "two-pass write's") {
+    import java.nio.file.{Files, Paths}
+    val e = blobs
+    val a = e.filter(col("vec_id") % 3 =!= 0)
+    val b = e.filter(col("vec_id") % 3 === 0)
+    val cents = Similarity.trainKMeans(a, "vec_id", "embedding", k = 8, iters = 2)
+    val k = cents.collect().length.toLong
+    def tmp(tag: String) = Files.createTempDirectory(tag).toString
+    def sameIndex(p: String, r: String): Unit = {
+      Seq("lists", "stats", "centroids").foreach { t =>
+        assert(Similarity.multisetEq(spark.read.parquet(s"$p/$t"),
+          spark.read.parquet(s"$r/$t")), s"$t/ differs")
+      }
+      Seq("summary.json", "list_counts.bin").foreach { f =>
+        assert(Files.readAllBytes(Paths.get(p, "census", f)).toSeq ==
+          Files.readAllBytes(Paths.get(r, "census", f)).toSeq, s"census/$f differs")
+      }
+    }
+    // the product path, driven as the streaming loop drives it
+    val p = tmp("ivfone")
+    Similarity.initIvfCensusRunningRows(p, k,
+      Similarity.writeIvfIndex(a, "vec_id", "embedding", cents, p))
+    Similarity.updateIvfCensusRunningRows(spark, p,
+      Similarity.appendToIvfIndexRows(b, "vec_id", "embedding", p, cents))
+    // the replaced path, its sidecar recomputed from its stats/
+    val r = tmp("ivftwo")
+    cents.coalesce(1).write.parquet(s"$r/centroids")
+    pinnedWriteAssigned(Similarity.assignToCentroids(a, "vec_id", "embedding", cents),
+      r, "overwrite", "build")
+    pinnedWriteAssigned(Similarity.assignToCentroids(b, "vec_id", "embedding", cents),
+      r, "append", "append")
+    Similarity.initIvfCensusRunning(spark, r)
+    sameIndex(p, r)
+    // retrain: a fresh build over the index's own scorable lists
+    Similarity.initIvfCensusRunningRows(p, k,
+      Similarity.retrainIvfIndex(spark, p, k = 8, iters = 2))
+    val held = spark.read.parquet(s"$r/lists").select(col("cid"), col("_v"))
+      .filter(Similarity.normSq(col("_v")) > 0.0)
+    val rc = Similarity.trainKMeans(held, "cid", "_v", k = 8, iters = 2)
+    val r2 = tmp("ivftwo2")
+    rc.coalesce(1).write.parquet(s"$r2/centroids")
+    pinnedWriteAssigned(Similarity.assignToCentroids(held, "cid", "_v", rc),
+      r2, "overwrite", "build")
+    Similarity.initIvfCensusRunning(spark, r2)
+    sameIndex(p, r2)
+    Seq(p, r, r2).foreach(rmTree)
   }
 
   test("IVF census sidecar seeded from the build's own rows is " +

@@ -248,6 +248,54 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  /** Spark jobs started while `body` runs: counted by a listener, and
+    * read after the listener bus has drained. */
+  private def jobsOf[T](body: => T): (Int, T) = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet(): Unit
+    }
+    org.apache.spark.graft.ListenerDrain.drain(sc)
+    sc.addSparkListener(l)
+    try {
+      val out = body
+      org.apache.spark.graft.ListenerDrain.drain(sc)
+      (n.get, out)
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("job budget: one streamIvfIngest and one streamMinhashIncr call " +
+      "over 2+2 logical batches run at most 15 and 16 Spark jobs (28 and 27 " +
+      "before each step of their loops became one action)") {
+    val dir = Files.createTempDirectory("graft_jobs").toString
+    val rnd = new scala.util.Random(11)
+    (0L until 400L).map { i =>
+      val c = (i % 4).toInt
+      (i, Array.tabulate(16)(d => (if (d % 4 == c) 1f else 0f) + rnd.nextFloat() * 0.1f))
+    }.toDF("vec_id", "embedding").coalesce(1).write.parquet(s"$dir/embeddings.parquet")
+    Seq(
+      3L -> "hist corpus sentinel text lives here",
+      0L -> "alpha beta gamma delta epsilon zeta",
+      5L -> "hist corpus sentinel text lives here",
+      10L -> "twin pair same batch survives intact",
+      20L -> "twin pair same batch survives intact",
+      100L -> "alpha beta gamma delta epsilon zeta",
+      110L -> "twin pair same batch survives intact",
+      120L -> "completely unrelated singleton content"
+    ).toDF("doc_id", "text").coalesce(1).write.parquet(s"$dir/documents.parquet")
+    val (ivfJobs, ivf) = jobsOf(graft.streaming.Streams
+      .streamIvfIngest(spark, dir, span = 200L, k = 16).collect())
+    val (mhJobs, mh) = jobsOf(graft.streaming.Streams
+      .streamMinhashIncr(spark, dir, thresholdPct = 50, maxId = 200L,
+        nBatches = 2, compactEvery = 2).collect())
+    assert(ivf.length == 2 && ivf.forall(_.getAs[Boolean]("matches_batch_build")))
+    assert(mh.length == 7 && mh.count(!_.getAs[Boolean]("admitted")) == 3)
+    assert(ivfJobs <= 15, s"streamIvfIngest ran $ivfJobs jobs")
+    assert(mhJobs <= 16, s"streamMinhashIncr ran $mhJobs jobs")
+  }
+
   test("incremental admission refuses a maxId that does not divide into " +
       "whole batches (trailing docs would silently get no verdict)") {
     val e = intercept[IllegalArgumentException](
